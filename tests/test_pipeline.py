@@ -2,12 +2,17 @@
 row): kill after k buckets, resume, outputs identical to an uninterrupted
 run — the graft's hardened version of `yatsm line --resume`."""
 
+import json
 import os
+import shutil
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
+from yatsm_spark.checkpoint import CheckpointManager
 from yatsm_spark.pipeline import PipelineConfig, PipelineMetrics, run_pipeline
-from yatsm_spark.sources.storage import ParquetStorage
+from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage
 from yatsm_spark.synth import generate_transcripts
 
 
@@ -48,19 +53,32 @@ def test_kill_and_resume_is_bit_identical(spark, tx, tmp_path_factory):
         assert b.exceptAll(a).count() == 0, t
 
 
+def _bucket(spark, workdir, name, b):
+    return spark.read.parquet(os.path.join(workdir, name, f"bucket={b}"))
+
+
 def test_manifests_record_lineage_and_metrics(spark, tx, tmp_path_factory):
+    """Every count a bucket manifest records (observed on the writes) equals
+    a read-back count of that bucket's files."""
     w = str(tmp_path_factory.mktemp("mani"))
-    cfg = PipelineConfig(workdir=w, n_buckets=2, compress=False, segments=False)
+    cfg = PipelineConfig(workdir=w, n_buckets=4, compress=True, segments=True)
     run_pipeline(spark, tx, cfg, resume=False)
-    from yatsm_spark.checkpoint import CheckpointManager
 
     ms = CheckpointManager(w).manifests("bucket")
-    assert len(ms) == 2
+    assert len(ms) == 4
     for m in ms:
         assert m["complete"] is True
         assert ":" in m["input_fingerprint"]
         assert m["wall_ms"] > 0
         assert m["rollup_1m"] > 0
+        b = m["bucket"]
+        real = lambda t: _bucket(spark, w, t, b).where(~F.col("gap_filled")).count()
+        assert m["rows_out"] == m["rollup_1m"] == _bucket(spark, w, "tier_1m", b).count()
+        assert m["rollup_1m_sparse"] == real("tier_1m")
+        assert m["rollup_1h"] == real("tier_1h")
+        assert m["rollup_1d"] == real("tier_1d")
+        assert m["segments"] == _bucket(spark, w, "segments", b).count()
+        assert m["chunks_1m"] == _bucket(spark, w, "chunks_1m", b).count()
 
 
 def test_changed_input_invalidates_bucket(spark, tx, tmp_path_factory):
@@ -89,6 +107,77 @@ def test_unchanged_input_resume_skips_everything(spark, tx, tmp_path_factory):
     run_pipeline(spark, tx, cfg, resume=False)
     m = run_pipeline(spark, tx, cfg, resume=True)
     assert len(m.buckets) == 0
+
+
+def _window_start_encodings(workdir):
+    """{(physical type, encodings)} of tier_1m.window_start over all files
+    and row groups."""
+    root = os.path.join(workdir, "tier_1m")
+    out = set()
+    for d, _, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            md = pq.ParquetFile(os.path.join(d, f)).metadata
+            col = md.schema.names.index("window_start")
+            for g in range(md.num_row_groups):
+                c = md.row_group(g).column(col)
+                out.add((c.physical_type, c.encodings))
+    return out
+
+
+def test_old_format_buckets_are_rewritten_on_resume(spark, tx, tmp_path_factory):
+    """Tiers store window_start as delta-encoded INT64. A resume over buckets
+    whose manifests predate the format version rewrites them (here one is
+    also put back in Spark's default INT96 layout), and the values stay the
+    same."""
+    w = str(tmp_path_factory.mktemp("format"))
+    cfg = PipelineConfig(workdir=w, n_buckets=2, compress=False, segments=False)
+    ts_conf = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
+    run_pipeline(spark, tx, cfg, resume=False)
+    # the writer's session conf is restored after every write
+    assert spark.conf.get("spark.sql.parquet.outputTimestampType", None) == ts_conf
+    assert _window_start_encodings(w) == {("INT64", ("DELTA_BINARY_PACKED",))}
+    before = _table(spark, w, "tier_1m").cache()
+    before.count()
+
+    # Old-format workdir: manifests without the format version and a bucket
+    # in Spark's default layout (INT96 timestamps, v1 pages).
+    old = os.path.join(w, "tier_1m", "bucket=0")
+    _bucket(spark, w, "tier_1m", 0).write.mode("overwrite").parquet(old + ".int96")
+    shutil.rmtree(old)
+    os.rename(old + ".int96", old)
+    assert {t for t, _ in _window_start_encodings(w)} == {"INT64", "INT96"}
+    mdir = os.path.join(w, "_manifests")
+    for f in os.listdir(mdir):
+        if f.startswith("bucket_"):
+            path = os.path.join(mdir, f)
+            with open(path) as fh:
+                m = json.load(fh)
+            m["input_fingerprint"] = m["input_fingerprint"].replace(
+                f":tfv{TIER_FORMAT_VERSION}", "")
+            with open(path, "w") as fh:
+                json.dump(m, fh)
+
+    m = run_pipeline(spark, tx, cfg, resume=True)
+    assert len(m.buckets) == 2
+    assert _window_start_encodings(w) == {("INT64", ("DELTA_BINARY_PACKED",))}
+    after = _table(spark, w, "tier_1m")
+    assert before.exceptAll(after).count() == 0 and after.exceptAll(before).count() == 0
+    before.unpersist()
+
+
+def test_window_start_skips_dictionary_when_slots_repeat(spark, tmp_path):
+    """Many convs sharing few slots: the dictionary would pass the writer's
+    size check on the first page; window_start is still delta-encoded and
+    reads back unchanged."""
+    df = spark.range(20_000).select(
+        F.format_string("c%03d", F.col("id") % 100).alias("conv_id"),
+        F.timestamp_seconds(1_735_689_600 + F.expr("id div 100") * 60).alias("window_start"))
+    ParquetStorage(str(tmp_path)).write_bucket(df, "tier_1m", 0)
+    assert _window_start_encodings(str(tmp_path)) == {("INT64", ("DELTA_BINARY_PACKED",))}
+    back = _bucket(spark, str(tmp_path), "tier_1m", 0)
+    assert df.exceptAll(back).count() == 0 and back.exceptAll(df).count() == 0
 
 
 def test_adaptive_salting_pipeline_tiers_identical(spark, tx, tmp_path_factory):

@@ -76,6 +76,39 @@ def grouped_stage_partitions(spark) -> int:
     return max(conf_sp, 4 * spark.sparkContext.defaultParallelism)
 
 
+def host_memory_mb() -> int | None:
+    """Memory this process may use: the smaller of the cgroup limit (v2 or
+    v1; an unset limit reads as "max" or a huge number) and the physical
+    memory. None where neither can be read."""
+    limits = []
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                v = f.read().strip()
+        except OSError:
+            continue
+        if v.isdigit():
+            limits.append(int(v) >> 20)
+    try:
+        limits.append(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20)
+    except (AttributeError, OSError, ValueError):
+        pass
+    return min(limits, default=None)
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else half of host memory: in local
+    mode the driver JVM is the executor, and the other half stays with the
+    Python workers and the page cache. A fixed heap larger than the host
+    gets the JVM OOM-killed."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    mb = host_memory_mb()
+    return f"{max(1024, mb // 2)}m" if mb else "4g"
+
+
 def get_spark(
     app_name: str = "yatsm-spark",
     master: str | None = None,
@@ -104,16 +137,16 @@ def get_spark(
     if repo not in prev.split(os.pathsep):
         os.environ["PYTHONPATH"] = repo + (os.pathsep + prev if prev else "")
     confs.setdefault("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
-    # Local single-JVM mode: driver IS the executor — size the heap for the
-    # thread count (must be set before the JVM starts; no-op afterwards).
-    confs.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+    # Local single-JVM mode: driver IS the executor — size the heap from the
+    # host (must be set before the JVM starts; no-op afterwards).
+    confs.setdefault("spark.driver.memory", default_driver_memory())
     confs.setdefault("spark.driver.maxResultSize", "8g")
     if shuffle_partitions is None:
         # Local mode: 4x cores — big shuffles want more, smaller slices
         # spill less, and AQE coalesces the small ones back down for free.
         # Cluster mode: leave to submit conf / AQE.
         n = master.split("[")[-1].rstrip("]") if "[" in master else "200"
-        cores = 32 if n == "*" else int(n) if n.isdigit() else 50
+        cores = (os.cpu_count() or 1) if n == "*" else int(n) if n.isdigit() else 50
         shuffle_partitions = 4 * cores
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_confs:

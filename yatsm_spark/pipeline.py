@@ -28,15 +28,16 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from yatsm_spark.checkpoint import CheckpointManager
+from yatsm_spark.conf import shuffle_partitions_for_bytes
 from yatsm_spark.ingest import with_measures
 from yatsm_spark.operators import rollup as R
 from yatsm_spark.operators.cascade import cascade
 from yatsm_spark.operators.changescore import change_scores, CONV_PARAMS
-from yatsm_spark.operators.codec import encode_chunks
-from yatsm_spark.sources.storage import ParquetStorage, with_bucket
+from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION, encode_chunks
+from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage, with_bucket
 
 
 @dataclass
@@ -63,16 +64,30 @@ class PipelineMetrics:
     wall_s: float = 0.0
 
 
-def _input_fingerprint(df: DataFrame) -> str:
-    """Cheap order-insensitive input fingerprint per bucket: count + sums of
-    stable hashes — the graft's analogue of the cache image-ID check
-    (yatsm/cache.py::update_cache_file [H])."""
-    row = df.agg(
+def _input_fingerprint(df: DataFrame, n_buckets: int) -> tuple[str, dict[int, str], int]:
+    """Cheap order-insensitive input fingerprints: count + bit_xor of stable
+    hashes — the graft's analogue of the cache image-ID check
+    (yatsm/cache.py::update_cache_file [H]).
+
+    One rollup(bucket) pass over the raw transcripts gives every bucket's
+    fingerprint and, in its grand-total row, the whole input's.
+    Returns (input fingerprint, {bucket: fingerprint}, turn count)."""
+    rows = with_bucket(df, n_buckets).rollup("bucket").agg(
         F.count(F.lit(1)).alias("n"),
         F.expr("bit_xor(xxhash64(conv_id, turn_idx))").alias("h1"),
         F.expr("bit_xor(xxhash64(conv_id, turn_idx, ts))").alias("h2"),
-    ).collect()[0]
-    return f"{row['n']}:{row['h1']}:{row['h2']}"
+    ).collect()
+    fps = {r["bucket"]: f"{r['n']}:{r['h1']}:{r['h2']}" for r in rows}
+    n = next(r["n"] for r in rows if r["bucket"] is None)
+    return fps.pop(None), fps, n
+
+
+def _counted(df: DataFrame, observed: list, **counts) -> DataFrame:
+    """``df`` with named row counts that the action writing it fills in; the
+    Observation holding them is appended to ``observed``."""
+    obs = Observation()
+    observed.append(obs)
+    return df.observe(obs, *(c.alias(k) for k, c in counts.items()))
 
 
 def run_pipeline(
@@ -103,38 +118,37 @@ def run_pipeline(
     # fingerprints would be computed from stale staged files, match the old
     # manifests, and silently skip every bucket (round-1 ADVICE, medium).
     staging = "staging_measures"
-    stage_fp = _input_fingerprint(transcripts)
+    stage_fp, bucket_fps, n_turns = _input_fingerprint(transcripts, cfg.n_buckets)
     if not (resume and store.exists(staging) and ckpt.is_done("staging", -1, stage_fp)):
         measures = with_bucket(with_measures(transcripts), cfg.n_buckets)
         t = time.time()
         store.write(measures, staging, partition_by=("bucket",))
-        n = spark.read.parquet(store.path(staging)).count()
-        ckpt.commit("staging", -1, stage_fp, n, (time.time() - t) * 1000)
-    metrics.staged_turns = spark.read.parquet(store.path(staging)).count()
+        ckpt.commit("staging", -1, stage_fp, n_turns, (time.time() - t) * 1000)
+    metrics.staged_turns = n_turns
+    staged = store.read(spark, staging)
 
+    count = F.count(F.lit(1))
+    sparse_count = F.count_if(~F.col("gap_filled"))
     try:
         # --- per-bucket stage graph ---------------------------------------------
         for b in range(cfg.n_buckets):
             bdir = os.path.join(store.path(staging), f"bucket={b}")
-            if not os.path.exists(bdir):
+            if b not in bucket_fps:
                 ckpt.commit(f"bucket", b, "empty", 0, 0.0)
                 continue
-            bm = spark.read.parquet(bdir)
+            bm = staged.where(F.col("bucket") == b).drop("bucket")
             # Data-sized shuffle width per bucket (conf.shuffle_partitions_for_bytes):
             # a fixed width spills at 10x data and over-fragments at 0.1x.
-            from yatsm_spark.conf import shuffle_partitions_for_bytes
             b_bytes = sum(os.path.getsize(os.path.join(bdir, f))
                           for f in os.listdir(bdir) if f.endswith(".parquet"))
             spark.conf.set(
                 "spark.sql.shuffle.partitions",
                 str(shuffle_partitions_for_bytes(
                     b_bytes, spark.sparkContext.defaultParallelism)))
-            fp = _input_fingerprint(bm)
+            # Format bumps -> fingerprint mismatch -> the bucket is rewritten on
+            # resume instead of leaving mixed-format tables behind.
+            fp = f"{bucket_fps[b]}:tfv{TIER_FORMAT_VERSION}"
             if cfg.compress:
-                # Format bump -> fingerprint mismatch -> bucket re-encodes on
-                # resume instead of leaving mixed-version chunk tables behind
-                # (legacy streams still decode; this keeps tables homogeneous).
-                from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION
                 fp = f"{fp}:cfv{CHUNK_FORMAT_VERSION}"
             if resume and ckpt.is_done("bucket", b, fp):
                 continue
@@ -143,39 +157,41 @@ def run_pipeline(
             # dense (gap-filled) tiers are generated post-shuffle on the write
             # path, and the kernels densify per conv in numpy. At bench skew
             # the dense tier is ~8x the sparse one — none of it is exchanged.
+            # Row counts are observed on the writes themselves: the sparse
+            # count of a tier is its non-gap rows.
             rollup_1m = {
                 "always": lambda df: R.rollup_from_turns_salted(df, "1m"),
                 "adaptive": lambda df: R.rollup_from_turns_adaptive(df, "1m"),
             }.get(cfg.salting, lambda df: R.rollup_from_turns(df, "1m"))
             sparse = rollup_1m(bm).cache()
-            rows = {"rollup_1m_sparse": sparse.count()}
-            store.write_bucket(R.gapfill(sparse, "1m"), "tier_1m", b)
-            rows["rollup_1m"] = spark.read.parquet(
-                os.path.join(store.path("tier_1m"), f"bucket={b}")).count()
+            cached, observed = [sparse], []
+            store.write_bucket(_counted(R.gapfill(sparse, "1m"), observed,
+                                        rollup_1m_sparse=sparse_count, rollup_1m=count),
+                               "tier_1m", b)
 
             prev = sparse
             for tier_from, tier_to in (("1m", "1h"), ("1h", "1d")):
                 if tier_to not in cfg.tiers:
                     continue
                 nxt = cascade(prev, tier_from, tier_to).cache()
-                rows[f"rollup_{tier_to}"] = nxt.count()
-                store.write_bucket(R.gapfill(nxt, tier_to), f"tier_{tier_to}", b)
+                cached.append(nxt)
+                store.write_bucket(_counted(R.gapfill(nxt, tier_to), observed,
+                                            **{f"rollup_{tier_to}": sparse_count}),
+                                   f"tier_{tier_to}", b)
                 prev = nxt
 
             if cfg.segments:
                 segs = change_scores(sparse, "turn_count", CONV_PARAMS, densify=True,
                                      phenology=cfg.phenology)
-                store.write_bucket(segs, "segments", b)
-                rows["segments"] = spark.read.parquet(
-                    os.path.join(store.path("segments"), f"bucket={b}")).count()
+                store.write_bucket(_counted(segs, observed, segments=count), "segments", b)
 
             if cfg.compress:
                 chunks = encode_chunks(sparse, "1m", cfg.chunk_points, densify=True)
-                store.write_bucket(chunks, "chunks_1m", b)
-                rows["chunks_1m"] = spark.read.parquet(
-                    os.path.join(store.path("chunks_1m"), f"bucket={b}")).count()
+                store.write_bucket(_counted(chunks, observed, chunks_1m=count), "chunks_1m", b)
 
-            sparse.unpersist()
+            for df in cached:
+                df.unpersist()
+            rows = {k: v for o in observed for k, v in o.get.items()}
             m = ckpt.commit("bucket", b, fp, rows.get("rollup_1m", 0),
                             (time.time() - t) * 1000, **rows)
             metrics.buckets.append(m)

@@ -16,6 +16,19 @@ Storage protocol. Bucketed layout co-locates every per-conv operation
 (rollup groups, kernel groups, chunk groups) so downstream stages shuffle
 within buckets only; at 10^12 turns the bucket count B is the unit of
 checkpoint/resume (SURVEY.md §4 partitioning row).
+
+On-disk format (``TIER_FORMAT_VERSION``): every table is written with
+timestamps as INT64 ``TIMESTAMP_MICROS`` and with Parquet v2 data pages.
+Spark's default timestamp type is INT96, which the Parquet format
+deprecates and which costs 12 bytes per slot. On the dense 1m grid it also
+defeats the dictionary and snappy: ``window_start`` alone was about half
+of all bytes a pipeline run wrote. INT64 alone changes nothing; v2 pages
+let the writer use DELTA_BINARY_PACKED, which stores a regular grid of
+timestamps in a few bits per row. ``window_start`` skips the dictionary:
+on inputs whose first page repeats many slots the dictionary passes the
+writer's size check and then keeps the column near its INT96 size. Other
+timestamp and int64 columns go to DELTA_BINARY_PACKED where the dictionary
+falls back. Values are unchanged; only their encoding is.
 """
 
 from __future__ import annotations
@@ -23,9 +36,19 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, functions as F
 
 DEFAULT_BUCKETS = 16
+
+#: Version of the on-disk format ParquetStorage writes. The pipeline folds
+#: it into each bucket's fingerprint, so a resume rewrites buckets written
+#: in an older format instead of mixing formats in one table.
+#: 1: Spark defaults (INT96 timestamps, v1 pages). 2: INT64 + v2 pages.
+TIER_FORMAT_VERSION = 2
+
+#: The parquet writer reads the timestamp type from the session conf only;
+#: a write option for it is ignored.
+_TS_TYPE_CONF = "spark.sql.parquet.outputTimestampType"
 
 
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -43,11 +66,30 @@ class ParquetStorage:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
+    @staticmethod
+    def _write_parquet(df: DataFrame, writer: DataFrameWriter, path: str) -> None:
+        """Write in the TIER_FORMAT_VERSION format. The timestamp type is a
+        session conf, so set it for this write and restore the caller's
+        value (or its absence) afterwards."""
+        conf = df.sparkSession.conf
+        prev = conf.get(_TS_TYPE_CONF, None)
+        conf.set(_TS_TYPE_CONF, "TIMESTAMP_MICROS")
+        try:
+            (writer.option("parquet.writer.version", "v2")
+                   .option("parquet.enable.dictionary#window_start", "false")
+                   .parquet(path))
+        finally:
+            if prev is None:
+                conf.unset(_TS_TYPE_CONF)
+            else:
+                conf.set(_TS_TYPE_CONF, prev)
+
     def write(self, df: DataFrame, table: str, mode: str = "overwrite",
               partition_by: tuple[str, ...] = ("bucket",)) -> None:
         if "bucket" in partition_by and "bucket" not in df.columns:
             df = with_bucket(df, self.n_buckets)
-        (df.write.mode(mode).partitionBy(*partition_by).parquet(self.path(table)))
+        self._write_parquet(df, df.write.mode(mode).partitionBy(*partition_by),
+                            self.path(table))
 
     def write_bucket(self, df: DataFrame, table: str, bucket: int) -> None:
         """Atomic per-bucket write: tmp dir + rename (the graft's analogue
@@ -56,7 +98,7 @@ class ParquetStorage:
         tmp = final + ".inprogress"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(tmp)
+        self._write_parquet(df, df.write.mode("overwrite"), tmp)
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
