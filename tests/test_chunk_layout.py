@@ -1,0 +1,94 @@
+"""Chunk value layout (operators/codec.py): gap slots cost one presence bit
+and carry nothing else, decode rebuilds them exactly, and the encoder
+refuses a gap slot that carries a value."""
+
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from yatsm_spark.operators import codec as C
+from yatsm_spark.operators.rollup import MEASURES, gapfill
+
+BASE = pd.Timestamp("2025-01-01")
+
+
+@pytest.fixture(scope="module")
+def sparse(spark):
+    """conv 'a': two bursts 10,000 minutes apart, a gap longer than a chunk;
+    conv 'b': three slots, one with null stats, one at the int64 limit."""
+    rows = []
+    for conv, minutes in (("a", [0, 1, 2, 10_000, 10_001]), ("b", [5, 6, 9])):
+        for i, minute in enumerate(minutes):
+            vals = {m: i + 1 for m in MEASURES}
+            if (conv, i) == ("b", 1):
+                vals.update(token_len_sum=None, token_len_min=None,
+                            token_len_max=None, token_len_sumsq=None)
+            if (conv, i) == ("b", 2):
+                vals["token_len_sumsq"] = 2**63 - 1
+            rows.append((conv, (BASE + pd.Timedelta(minutes=minute)).to_pydatetime(),
+                         *(vals[m] for m in MEASURES), False))
+    df = spark.createDataFrame(rows, C.ROLLUP_SCHEMA).cache()
+    df.count()
+    return df
+
+
+def test_chunk_with_zero_real_slots_round_trips(spark, sparse):
+    filled = gapfill(sparse, "1m")
+    dense = C.encode_chunks(filled, "1m").cache()
+    # the scale path (sparse input, densified in the kernel) writes the same rows
+    densified = C.encode_chunks(sparse, "1m", densify=True)
+    assert dense.exceptAll(densified).count() == 0
+    assert densified.exceptAll(dense).count() == 0
+
+    rows = dense.filter("conv_id = 'a'").orderBy("chunk_start").collect()
+    assert [r.n_points for r in rows] == [4096, 4096, 10_002 - 2 * 4096]
+    gap, cols = C.decode_values(bytes(rows[1].val_codec), 4096)
+    assert gap.all()
+    assert all((cols[m][0] == 0).all() for m in MEASURES)
+    assert all(cols[m][1].all() for m in C.STAT_COLS)
+    assert not any(cols[m][1].any() for m in C.COUNT_COLS)
+    # one presence bit per slot, then per measure an empty stream:
+    # has_nulls byte + min + width
+    assert len(rows[1].val_codec) == 4096 // 8 + len(MEASURES) * 10
+
+    back = C.decode_chunks(dense)
+    assert back.exceptAll(filled).count() == 0 and filled.exceptAll(back).count() == 0
+    dense.unpersist()
+
+
+def _columns(n, gap):
+    cols = {m: (np.ones(n, dtype=np.int64), np.zeros(n, dtype=bool)) for m in MEASURES}
+    for m in MEASURES:
+        cols[m][0][gap] = 0
+    for m in C.STAT_COLS:
+        cols[m][1][gap] = True
+    return cols
+
+
+def test_encoder_rejects_values_on_gap_slots():
+    epochs = np.arange(4, dtype=np.int64) * 60
+    gap = np.array([False, True, True, False])
+    assert len(C.chunk_rows("c", "1m", epochs, gap, _columns(4, gap), 4096)) == 1
+
+    cols = _columns(4, gap)
+    cols["token_len_max"][1][2] = False  # one non-null stat on a gap row
+    with pytest.raises(ValueError, match=r"\['token_len_max'\]"):
+        C.chunk_rows("c", "1m", epochs, gap, cols, 4096)
+
+    cols = _columns(4, gap)
+    cols["turn_count"][0][1] = 3
+    with pytest.raises(ValueError, match=r"\['turn_count'\]"):
+        C.chunk_rows("c", "1m", epochs, gap, cols, 4096)
+
+
+def test_encode_chunks_rejects_stat_on_gap_row(spark, sparse):
+    filled = gapfill(sparse, "1m")
+    first_gap = F.lit(BASE + pd.Timedelta(minutes=3)).cast("timestamp")
+    bad = filled.withColumn(
+        "token_len_max",
+        F.when((F.col("conv_id") == "a") & (F.col("window_start") == first_gap), F.lit(7))
+        .otherwise(F.col("token_len_max")))
+    assert bad.filter("gap_filled AND token_len_max IS NOT NULL").count() == 1
+    with pytest.raises(Exception, match="gap_filled slots carry values"):
+        C.encode_chunks(bad, "1m").collect()

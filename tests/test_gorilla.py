@@ -1,22 +1,26 @@
-"""Gorilla / delta-of-delta codec round-trip fixtures (FIXTURES.md §2.3):
-decode(encode(x)) == x exactly, including NaN slots."""
+"""Block codec round-trip fixtures (FIXTURES.md §2.3): XOR floats,
+delta-of-delta timestamps and frame-of-reference ints — decode(encode(x))
+== x exactly, including NaN slots."""
 
 import numpy as np
 
-from yatsm_spark.kernel.gorilla import (
-    decode_floats,
-    decode_timestamps,
-    encode_floats,
-    encode_timestamps,
+from yatsm_spark.kernel.gorilla_vec import (
+    decode_floats_block,
+    decode_ints_block,
+    decode_timestamps_block,
+    encode_floats_block,
+    encode_ints_block,
+    encode_timestamps_block,
 )
 
 
 def test_ts_roundtrip_regular():
     ts = np.arange(0, 86400, 60, dtype=np.int64) + 1_700_000_000
-    enc = encode_timestamps(ts)
-    np.testing.assert_array_equal(decode_timestamps(enc), ts)
-    # regular 1m cadence: dod == 0 everywhere -> ~1 bit/point after header
-    assert len(enc) < 4 + 8 + 8 + len(ts) // 8 + 2
+    enc = encode_timestamps_block(ts)
+    np.testing.assert_array_equal(decode_timestamps_block(enc), ts)
+    # regular 1m cadence: dod == 0 everywhere -> one 2-bit class code per
+    # point after the 21-byte header, no payloads
+    assert len(enc) < 21 + len(ts) // 4 + 2
 
 
 def test_ts_roundtrip_irregular():
@@ -24,13 +28,13 @@ def test_ts_roundtrip_irregular():
     deltas = rng.randint(1, 10_000, 500).astype(np.int64)
     deltas[::50] = rng.randint(10**6, 10**12, 10)  # huge jumps -> escape bucket
     ts = 1_700_000_000 + np.cumsum(deltas)
-    np.testing.assert_array_equal(decode_timestamps(encode_timestamps(ts)), ts)
+    np.testing.assert_array_equal(decode_timestamps_block(encode_timestamps_block(ts)), ts)
 
 
 def test_ts_edges():
     for ts in ([], [5], [5, 5], [0, -10, 100], [2**62, -(2**62)]):
         a = np.array(ts, dtype=np.int64)
-        np.testing.assert_array_equal(decode_timestamps(encode_timestamps(a)), a)
+        np.testing.assert_array_equal(decode_timestamps_block(encode_timestamps_block(a)), a)
 
 
 def test_float_roundtrip_with_nans():
@@ -39,42 +43,34 @@ def test_float_roundtrip_with_nans():
     v[::7] = np.nan
     v[::13] = 0.0
     v[1::97] = np.inf
-    out = decode_floats(encode_floats(v))
+    out = decode_floats_block(encode_floats_block(v))
     np.testing.assert_array_equal(out.view(np.uint64), v.view(np.uint64))
 
 
 def test_float_roundtrip_constant_is_tiny():
     v = np.full(10_000, 42.5)
-    enc = encode_floats(v)
-    np.testing.assert_array_equal(decode_floats(enc), v)
-    assert len(enc) < 4 + 8 + 10_000 // 8 + 2  # 1 bit per repeated value
+    enc = encode_floats_block(v)
+    np.testing.assert_array_equal(decode_floats_block(enc), v)
+    assert len(enc) < 15 + 10_000 // 8 + 2  # 1 bit per repeated value
 
 
 def test_float_edges():
     for v in ([], [1.5], [1.5, 1.5], [np.nan, np.nan], [-0.0, 0.0]):
         a = np.array(v, dtype=np.float64)
-        out = decode_floats(encode_floats(a))
+        out = decode_floats_block(encode_floats_block(a))
         np.testing.assert_array_equal(out.view(np.uint64), a.view(np.uint64))
 
 
 def test_compression_ratio_on_rollup_like_data():
-    # Turn counts per minute: small integers stored as doubles -> high ratio.
+    # Turn counts per minute: small integers bit-packed at a shared width.
     rng = np.random.RandomState(1)
-    counts = rng.poisson(3, 5000).astype(np.float64)
+    counts = rng.poisson(3, 5000).astype(np.int64)
     ts = np.arange(5000, dtype=np.int64) * 60
     raw = 16 * len(ts)
-    comp = len(encode_timestamps(ts)) + len(encode_floats(counts))
-    assert comp < raw / 3
-
-
-# --- vectorized block codecs (kernel/gorilla_vec.py) -------------------------
-
-from yatsm_spark.kernel.gorilla_vec import (
-    decode_floats_block,
-    decode_timestamps_block,
-    encode_floats_block,
-    encode_timestamps_block,
-)
+    blob = encode_ints_block(counts)
+    np.testing.assert_array_equal(decode_ints_block(blob)[0], counts)
+    comp = len(encode_timestamps_block(ts)) + len(blob)
+    assert comp < raw / 8
 
 
 def test_block_float_roundtrip_cases():
@@ -110,20 +106,3 @@ def test_block_codec_compresses_rollup_series():
     ts = np.arange(5000, dtype=np.int64) * 60
     assert len(encode_timestamps_block(ts)) < 8 * 5000 / 20
     assert len(encode_floats_block(counts)) < 8 * 5000 / 3
-
-
-def test_operator_decode_dispatches_both_formats():
-    from yatsm_spark.operators import codec as C
-
-    v = np.array([1.0, 2.0, 2.0, np.nan])
-    ts = np.array([0, 60, 120, 240], dtype=np.int64)
-    # block format (operator default)
-    np.testing.assert_array_equal(
-        C.decode_floats(C.encode_floats(v)).view(np.uint64), v.view(np.uint64))
-    np.testing.assert_array_equal(C.decode_timestamps(C.encode_timestamps(ts)), ts)
-    # scalar per-point Gorilla format still decodes through the same entry
-    from yatsm_spark.kernel import gorilla as g
-
-    np.testing.assert_array_equal(
-        C.decode_floats(g.encode_floats(v)).view(np.uint64), v.view(np.uint64))
-    np.testing.assert_array_equal(C.decode_timestamps(g.encode_timestamps(ts)), ts)

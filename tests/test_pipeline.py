@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from yatsm_spark.checkpoint import CheckpointManager
+from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION, decode_chunks
 from yatsm_spark.pipeline import PipelineConfig, PipelineMetrics, run_pipeline
 from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage
 from yatsm_spark.synth import generate_transcripts
@@ -163,6 +164,42 @@ def test_old_format_buckets_are_rewritten_on_resume(spark, tx, tmp_path_factory)
     assert len(m.buckets) == 2
     assert _window_start_encodings(w) == {("INT64", ("DELTA_BINARY_PACKED",))}
     after = _table(spark, w, "tier_1m")
+    assert before.exceptAll(after).count() == 0 and after.exceptAll(before).count() == 0
+    before.unpersist()
+
+
+def test_old_chunk_format_buckets_are_rewritten_on_resume(spark, tx, tmp_path_factory):
+    """Chunks carry CHUNK_FORMAT_VERSION in the bucket fingerprint. A resume
+    over buckets whose manifests name an older chunk format rewrites them
+    (here one bucket's val_codec is also replaced by bytes no decoder of
+    the current layout accepts), and the decoded values stay the same."""
+    w = str(tmp_path_factory.mktemp("chunk_format"))
+    cfg = PipelineConfig(workdir=w, n_buckets=2, compress=True, segments=False)
+    run_pipeline(spark, tx, cfg, resume=False)
+    before = decode_chunks(_table(spark, w, "chunks_1m")).cache()
+    before.count()
+
+    old = os.path.join(w, "chunks_1m", "bucket=0")
+    (_bucket(spark, w, "chunks_1m", 0)
+     .withColumn("val_codec", F.lit(b"\x00\x00\x00\x05old-layout"))
+     .write.mode("overwrite").parquet(old + ".old"))
+    shutil.rmtree(old)
+    os.rename(old + ".old", old)
+    mdir = os.path.join(w, "_manifests")
+    for f in os.listdir(mdir):
+        if f.startswith("bucket_"):
+            path = os.path.join(mdir, f)
+            with open(path) as fh:
+                m = json.load(fh)
+            assert m["input_fingerprint"].endswith(f":cfv{CHUNK_FORMAT_VERSION}")
+            m["input_fingerprint"] = m["input_fingerprint"].replace(
+                f":cfv{CHUNK_FORMAT_VERSION}", f":cfv{CHUNK_FORMAT_VERSION - 1}")
+            with open(path, "w") as fh:
+                json.dump(m, fh)
+
+    m = run_pipeline(spark, tx, cfg, resume=True)
+    assert len(m.buckets) == 2
+    after = decode_chunks(_table(spark, w, "chunks_1m"))
     assert before.exceptAll(after).count() == 0 and after.exceptAll(before).count() == 0
     before.unpersist()
 

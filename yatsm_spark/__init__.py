@@ -8,8 +8,8 @@ transcripts ``(conv_id, turn_idx, role, text, tool, ts)``:
 - gap-filled 1m/1h/1d tumbling rollups (``operators.rollup``, ``operators.cascade``)
 - CCDC-style harmonic-fit change scores / segments (``kernel.ccdc`` via
   ``operators.changescore``)
-- Gorilla XOR + delta-of-delta compression (``kernel.gorilla`` via
-  ``operators.codec``)
+- compressed chunks: delta-of-delta timestamps and bit-packed int64
+  measures (``kernel.gorilla_vec`` via ``operators.codec``)
 - retention-tier eviction driven by cascade high-watermarks
   (``operators.retention``)
 - per-partition checkpoint / lineage / resume (``checkpoint``)

@@ -1,11 +1,10 @@
-"""Vectorized (numpy) XOR-float + delta-of-delta codecs.
+"""Vectorized (numpy) block codecs: XOR floats, delta-of-delta timestamps,
+frame-of-reference integers.
 
-The scalar codec in kernel/gorilla.py implements the exact per-point
-Gorilla bit layout (paper §4.1) — its '10'-reuse window is a sequential
-state machine, inherently loop-bound in pure Python. For the 10^12-point
-hot path the engine uses this BLOCK variant of the same two ideas
-(XOR-with-leading/trailing-window, delta-of-delta bucketing), restructured
-so encode AND decode are single-pass numpy:
+The per-point Gorilla layout (paper §4.1) chooses a window per value with a
+sequential '10'-reuse state machine, which is loop-bound in pure Python.
+These BLOCK variants of the same ideas are restructured so encode AND
+decode are single-pass numpy:
 
 float block layout (version byte 0xF2):
     [ver:8][n:32][first:64][lead:8][mbits:8]
@@ -22,18 +21,20 @@ timestamp block layout (version byte 0xF3):
     [codes: (n-2) * 2 bits]      0: dod=0, 1: 7-bit, 2: 12-bit, 3: 64-bit
     [payloads: variable]         zig-zag dod in the coded width
 
-nullable-int64 block layout (version byte 0xF4):
-    [ver:8][n:32][null flags: n bits, byte-padded]
-    [ts-block stream of the non-null values]
-Integer rollup measures (counts, sums, min/max of int64 token lengths)
-take this path so they round-trip EXACTLY over the full int64 range —
-the float path is exact only below 2^53 (round-1 ADVICE).
+nullable-int64 stream (one measure of a chunk's val_codec, see
+operators/codec.py; its length follows from n, so streams concatenate
+without framing):
+    [has_nulls:8]
+    [null flags: n bits, byte-padded]     only when has_nulls == 1
+    [min:64][width:8]                     frame of reference over the
+                                          k non-null values
+    [payloads: k * width bits, byte-padded]  v - min, modulo 2^64
+width is the bit length of max - min taken modulo 2^64 (0..64), so ANY
+int64 series round-trips bit-exactly — the float path is exact only below
+2^53 (round-1 ADVICE).
 
-Version bytes live in 0xF2..0xF4: the scalar per-point Gorilla stream
-(kernel/gorilla.py) starts with the high byte of its 32-bit point count,
-which encode asserts < 0xF0000000 points, so the first byte of a scalar
-stream can never collide with a block version byte and dispatch-on-first-
-byte (operators/codec.py) is sound (round-1 ADVICE).
+nullable-int64 block layout (version byte 0xF5):
+    [ver:8][n:32][nullable-int64 stream]
 
 Bit-exact round-trip (incl. NaN) is enforced by tests/test_gorilla.py +
 tests/test_codec_property.py for all codec families.
@@ -41,61 +42,28 @@ tests/test_codec_property.py for all codec families.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 
 FLOAT_BLOCK_VER = 0xF2
 TS_BLOCK_VER = 0xF3
-INT_BLOCK_VER = 0xF4
-#: Pre-round-2 block streams used version byte 0x02 for BOTH float and ts
-#: blocks (disambiguated by which decoder is called — the layouts are
-#: otherwise identical). Kept as an accepted legacy byte so chunk tables
-#: persisted by old code still decode on resume (round-2 ADVICE).
-LEGACY_BLOCK_VER = 0x02
+INT_BLOCK_VER = 0xF5
 
 _TS_WIDTHS = np.array([0, 7, 12, 64], dtype=np.int64)
-
-
-def _scatter_bits(values: np.ndarray, widths: np.ndarray, head: np.ndarray) -> bytes:
-    """Pack `head` (a 0/1 uint8 bit array) followed by variable-width
-    big-endian fields (values[i] in widths[i] bits) into bytes — no Python
-    loop: repeat/cumsum index tricks + np.packbits."""
-    widths = np.asarray(widths, dtype=np.int64)
-    if len(widths) == 0:
-        return np.packbits(head.astype(np.uint8)).tobytes()
-    total = int(widths.sum())
-    starts = np.concatenate([[0], np.cumsum(widths)[:-1]]).astype(np.int64)
-    k = np.arange(total, dtype=np.int64) - np.repeat(starts, widths)
-    v = np.repeat(values.astype(np.uint64), widths)
-    w = np.repeat(widths, widths)
-    bits = ((v >> (w - 1 - k).astype(np.uint64)) & np.uint64(1)).astype(np.uint8)
-    allbits = np.concatenate([head.astype(np.uint8), bits])
-    return np.packbits(allbits).tobytes()
-
-
-def _gather_bits(bits: np.ndarray, offsets: np.ndarray, widths: np.ndarray) -> np.ndarray:
-    """Read variable-width big-endian uints from a 0/1 bit array. All
-    widths must be > 0 (callers filter zero-width classes first)."""
-    widths = np.asarray(widths, dtype=np.int64)
-    if len(widths) == 0:
-        return np.array([], dtype=np.uint64)
-    starts = np.concatenate([[0], np.cumsum(widths)[:-1]]).astype(np.int64)
-    total = int(widths.sum())
-    k = np.arange(total, dtype=np.int64) - np.repeat(starts, widths)
-    pos = np.repeat(np.asarray(offsets, dtype=np.int64), widths) + k
-    w = np.repeat(widths, widths)
-    weighted = bits[pos].astype(np.uint64) << (w - 1 - k).astype(np.uint64)
-    return np.add.reduceat(weighted, starts).astype(np.uint64)
+_NO_HEAD = np.zeros(0, dtype=np.uint8)
+_U64 = 0xFFFF_FFFF_FFFF_FFFF
 
 
 def _pack_words(values: np.ndarray, widths, head: np.ndarray) -> bytes:
-    """Byte-identical drop-in for _scatter_bits built on 64-bit words:
+    """Pack `head` (a 0/1 uint8 bit array) followed by big-endian fields
+    (values[i] in widths[i] bits) into bytes, built on 64-bit words:
     each field touches at most TWO words (one np.where + one
     bitwise_or.reduceat per side), so temporaries are O(1) per VALUE
     instead of O(1) per BIT — ~width× less memory traffic, which is the
     whole cost of the float path (shared-window mbits is typically
     20–52). Fields are placed MSB-first at offsets
-    head_bits + cumsum(widths), exactly np.packbits' bit order, so the
-    emitted stream is bit-for-bit what _scatter_bits produces."""
+    head_bits + cumsum(widths), in np.packbits' bit order."""
     head = np.asarray(head, dtype=np.uint8)
     values = np.asarray(values, dtype=np.uint64)
     widths = np.broadcast_to(np.asarray(widths, dtype=np.int64), values.shape)
@@ -130,9 +98,9 @@ def _pack_words(values: np.ndarray, widths, head: np.ndarray) -> bytes:
 
 
 def _gather_words(buf: np.ndarray, offsets: np.ndarray, widths) -> np.ndarray:
-    """Word-based counterpart of _gather_bits reading straight from the
-    BYTE buffer (uint8 array) — no unpackbits of the payload region, no
-    per-bit temporaries. offsets are absolute bit positions (MSB-first
+    """Read big-endian uint fields straight from the BYTE buffer (uint8
+    array) — no unpackbits of the payload region, no per-bit
+    temporaries. offsets are absolute bit positions (MSB-first
     np.packbits order); widths scalar or per-field, all in 1..64."""
     offsets = np.asarray(offsets, dtype=np.int64)
     widths = np.broadcast_to(np.asarray(widths, dtype=np.int64), offsets.shape)
@@ -188,7 +156,7 @@ def encode_floats_block(vals: np.ndarray) -> bytes:
 
 
 def decode_floats_block(data: bytes) -> np.ndarray:
-    assert data[0] in (FLOAT_BLOCK_VER, LEGACY_BLOCK_VER)
+    assert data[0] == FLOAT_BLOCK_VER
     n = int.from_bytes(data[1:5], "big")
     out = np.empty(n, dtype=np.uint64)
     if n == 0:
@@ -213,31 +181,65 @@ def decode_floats_block(data: bytes) -> np.ndarray:
 # --- nullable int64 -----------------------------------------------------------
 
 
-def encode_ints_block(vals: np.ndarray, null_mask: np.ndarray | None = None) -> bytes:
-    """Exact int64 block codec: null-flag bitmap + delta-of-delta stream of
-    the non-null values (reuses the timestamp machinery — dod wraps modulo
-    2^64, so ANY int64 series round-trips bit-exactly, unlike the float
-    path which loses integers above 2^53)."""
+def encode_int_stream(vals: np.ndarray, null_mask: np.ndarray | None = None) -> bytes:
+    """Nullable-int64 stream: null flags (only if any), then the non-null
+    values as a frame-of-reference block bit-packed at one shared width."""
     vals = np.asarray(vals, dtype=np.int64)
-    n = len(vals)
-    if null_mask is None:
-        null_mask = np.zeros(n, dtype=bool)
-    header = bytes([INT_BLOCK_VER]) + int(n).to_bytes(4, "big")
-    flags = np.packbits(null_mask.astype(np.uint8)).tobytes()
-    return header + flags + encode_timestamps_block(vals[~null_mask])
+    out = bytearray()
+    if null_mask is not None and null_mask.any():
+        out.append(1)
+        out += np.packbits(null_mask).tobytes()
+        vals = vals[~null_mask]
+    else:
+        out.append(0)
+    if len(vals) == 0:
+        return bytes(out) + struct.pack(">qB", 0, 0)
+    lo = vals.min()
+    off = vals.astype(np.uint64) - np.uint64(int(lo) & _U64)  # wraps: exact
+    width = int(off.max()).bit_length()
+    out += struct.pack(">qB", int(lo), width)
+    if width:
+        out += _pack_words(off, width, _NO_HEAD)
+    return bytes(out)
+
+
+def decode_int_stream(buf: bytes, pos: int, n: int) -> tuple[np.ndarray, np.ndarray, int]:
+    """Stream of n slots at byte `pos` -> (values int64 with 0 at null
+    slots, null_mask bool, byte position after the stream)."""
+    null = np.zeros(n, dtype=bool)
+    has_nulls = buf[pos]
+    pos += 1
+    if has_nulls:
+        nb = (n + 7) // 8
+        null = np.unpackbits(np.frombuffer(buf, np.uint8, nb, pos), count=n).astype(bool)
+        pos += nb
+    lo, width = struct.unpack_from(">qB", buf, pos)
+    pos += 9
+    k = n - int(null.sum())
+    nb = (k * width + 7) // 8
+    off = np.zeros(k, dtype=np.uint64)
+    if width and k:
+        payload = np.frombuffer(buf, np.uint8, nb, pos)
+        off = _gather_words(payload, np.arange(k, dtype=np.int64) * width, width)
+    present = (off + np.uint64(lo & _U64)).view(np.int64)
+    if not has_nulls:
+        return present, null, pos + nb
+    out = np.zeros(n, dtype=np.int64)
+    out[~null] = present
+    return out, null, pos + nb
+
+
+def encode_ints_block(vals: np.ndarray, null_mask: np.ndarray | None = None) -> bytes:
+    """Self-describing nullable-int64 block: version byte, length, stream."""
+    return (bytes([INT_BLOCK_VER]) + len(vals).to_bytes(4, "big")
+            + encode_int_stream(vals, null_mask))
 
 
 def decode_ints_block(data: bytes) -> tuple[np.ndarray, np.ndarray]:
     """-> (values int64 with 0 at null slots, null_mask bool)."""
     assert data[0] == INT_BLOCK_VER
-    n = int.from_bytes(data[1:5], "big")
-    nflag_bytes = (n + 7) // 8
-    null_mask = np.unpackbits(
-        np.frombuffer(data[5 : 5 + nflag_bytes], dtype=np.uint8))[:n].astype(bool)
-    present = decode_timestamps_block(data[5 + nflag_bytes :])
-    out = np.zeros(n, dtype=np.int64)
-    out[~null_mask] = present
-    return out, null_mask
+    vals, null, _ = decode_int_stream(data, 5, int.from_bytes(data[1:5], "big"))
+    return vals, null
 
 
 # --- timestamps ---------------------------------------------------------------
@@ -278,7 +280,7 @@ def encode_timestamps_block(ts: np.ndarray) -> bytes:
 
 
 def decode_timestamps_block(data: bytes) -> np.ndarray:
-    assert data[0] in (TS_BLOCK_VER, LEGACY_BLOCK_VER)
+    assert data[0] == TS_BLOCK_VER
     n = int.from_bytes(data[1:5], "big")
     out = np.empty(n, dtype=np.int64)
     if n == 0:

@@ -2,7 +2,7 @@
 algorithm) for one integer-valued series: keep a sparse chain of
 archive points whose corridor ("doors") of half-width E covers every
 dropped point. The lossy-but-bounded companion to the exact Gorilla
-codec (kernel/gorilla*.py) in the retention family: old tiers can keep
+codec (kernel/gorilla_vec.py) in the retention family: old tiers can keep
 a guaranteed-error sketch of the shape at a fraction of the points.
 
 Error guarantee (the classical one, pinned exactly by tests): every

@@ -1,18 +1,27 @@
-"""Compressed chunk encode/decode — Arrow UDF wrappers over kernel.gorilla.
+"""Compressed chunk encode/decode — Arrow UDF wrappers over kernel.gorilla_vec.
 
 The reference stores raw .npz (no compression — SURVEY.md §4); the graft
-requires Gorilla XOR values + delta-of-delta timestamps (BASELINE.json
-north_star, VLDB'20 compressed-TS lineage in PAPERS.md). Chunk row schema
-per FIXTURES.md §2.3:
+requires Gorilla-style delta-of-delta timestamps and compressed values
+(BASELINE.json north_star, VLDB'20 compressed-TS lineage in PAPERS.md).
+Chunk row schema per FIXTURES.md §2.3:
 
     (conv_id, tier, chunk_start, n_points, ts_codec binary, val_codec binary)
 
-val_codec layout: for each measure in rollup.MEASURES order, a 4-byte
-big-endian length followed by that measure's self-describing stream:
-integer/boolean series use the nullable-int64 block codec (exact over the
-FULL int64 range — the float path is exact only below 2^53, round-1
-ADVICE), float series use the Gorilla XOR stream (nulls as NaN).
-gap_filled is packed as a 0/1 int series appended last.
+ts_codec is the delta-of-delta timestamp block of EVERY slot's epoch, gap
+slots included, so chunks of a sparse tier (densify=False) keep their own
+slot grid.
+
+val_codec layout (CHUNK_FORMAT_VERSION 4):
+    [presence: n_points bits, byte-padded]   1 = real slot (not gap_filled)
+    then, for each measure in rollup.MEASURES order, one nullable-int64
+    stream (kernel/gorilla_vec.py) over the REAL slots only.
+A gap slot carries no information — counts 0, stats null, gap_filled
+true — so it costs its presence bit and nothing else. The encoder checks
+that precondition (ValueError otherwise) and decode rebuilds the gap
+slots. Each stream's length follows from the real-slot count, so streams
+are concatenated without length prefixes. The int streams are exact over
+the FULL int64 range (the float path is exact only below 2^53, round-1
+ADVICE).
 
 Bounded chunks (default 4096 points ≈ 2.8 days of 1m) keep a mega-conv from
 producing one giant row; groups stream through applyInPandas per conv.
@@ -20,62 +29,21 @@ producing one giant row; groups stream through applyInPandas per conv.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from yatsm_spark.kernel import gorilla as g_scalar
 from yatsm_spark.kernel import gorilla_vec as g_vec
 from yatsm_spark.operators.rollup import MEASURES
 
-# Default: the vectorized block codecs (kernel/gorilla_vec.py) — the
-# "vectorized Arrow UDF" hot path. Streams are self-describing: block
-# streams start with a version byte in 0xF2..0xF4; the scalar per-point
-# Gorilla format starts with the high byte of a 32-bit count, which its
-# encoder asserts < 0xF0, so first-byte dispatch cannot misfire.
-
-
-def encode_floats(v):
-    return g_vec.encode_floats_block(v)
-
-
-def encode_timestamps(ts):
-    return g_vec.encode_timestamps_block(ts)
-
-
-def encode_ints(v, null_mask=None):
-    return g_vec.encode_ints_block(v, null_mask)
-
-
-def decode_floats(data: bytes):
-    if data and data[0] in (g_vec.FLOAT_BLOCK_VER, g_vec.LEGACY_BLOCK_VER):
-        return g_vec.decode_floats_block(data)
-    return g_scalar.decode_floats(data)
-
-
-def decode_timestamps(data: bytes):
-    if data and data[0] in (g_vec.TS_BLOCK_VER, g_vec.LEGACY_BLOCK_VER):
-        return g_vec.decode_timestamps_block(data)
-    return g_scalar.decode_timestamps(data)
-
-
-def decode_series(data: bytes):
-    """-> (values ndarray, null_mask ndarray) for any value stream."""
-    if data and data[0] == g_vec.INT_BLOCK_VER:
-        return g_vec.decode_ints_block(data)
-    v = decode_floats(data)
-    return v, np.isnan(v)
-
-_SERIES = MEASURES + ["gap_filled"]
+COUNT_COLS = [m for m in MEASURES if m.endswith("_count")]
+STAT_COLS = [m for m in MEASURES if not m.endswith("_count")]
 
 #: Bumped whenever the persisted chunk byte layout changes; folded into the
 #: pipeline's per-bucket checkpoint fingerprint so a resumed workdir written
-#: by a different format re-encodes instead of mixing stream versions
-#: (round-2 ADVICE — legacy 0x02 streams also still decode, see gorilla_vec).
-CHUNK_FORMAT_VERSION = 3
+#: by a different format re-encodes instead of mixing layouts.
+CHUNK_FORMAT_VERSION = 4
 
 CHUNK_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
@@ -85,6 +53,7 @@ CHUNK_SCHEMA = T.StructType([
     T.StructField("ts_codec", T.BinaryType(), False),
     T.StructField("val_codec", T.BinaryType(), False),
 ])
+_CHUNK_COLS = [f.name for f in CHUNK_SCHEMA.fields]
 
 ROLLUP_SCHEMA = T.StructType(
     [T.StructField("conv_id", T.StringType(), False),
@@ -93,17 +62,63 @@ ROLLUP_SCHEMA = T.StructType(
     + [T.StructField("gap_filled", T.BooleanType(), False)]
 )
 
+#: One conv's slots in epoch order: measure -> (int64 values, null mask).
+Columns = dict[str, tuple[np.ndarray, np.ndarray]]
 
-def _decode_values(buf: bytes, n: int) -> dict[str, tuple[np.ndarray, np.ndarray]]:
-    out = {}
-    pos = 0
-    for m in _SERIES:
-        (ln,) = struct.unpack_from(">I", buf, pos)
-        pos += 4
-        out[m] = decode_series(buf[pos : pos + ln])
-        pos += ln
-        assert len(out[m][0]) == n
-    return out
+
+def encode_values(gap: np.ndarray, cols: Columns) -> bytes:
+    """One chunk's val_codec (layout in the module docstring)."""
+    real = ~gap
+    parts = [np.packbits(real).tobytes()]
+    for m in MEASURES:
+        v, null = cols[m]
+        parts.append(g_vec.encode_int_stream(v[real], null[real]))
+    return b"".join(parts)
+
+
+def decode_values(buf: bytes, n: int) -> tuple[np.ndarray, Columns]:
+    """val_codec of n slots -> (gap_filled, measure -> (values with 0 at
+    null slots, null mask)), gap slots rebuilt as count 0 / stat null."""
+    nb = (n + 7) // 8
+    real = np.unpackbits(np.frombuffer(buf, np.uint8, nb), count=n).astype(bool)
+    k = int(real.sum())
+    pos = nb
+    cols = {}
+    for m in MEASURES:
+        v, null, pos = g_vec.decode_int_stream(buf, pos, k)
+        vals = np.zeros(n, dtype=np.int64)
+        vals[real] = v
+        nulls = np.full(n, m in STAT_COLS)
+        nulls[real] = null
+        cols[m] = (vals, nulls)
+    assert pos == len(buf)
+    return ~real, cols
+
+
+def chunk_rows(conv_id: str, tier: str, epochs: np.ndarray, gap: np.ndarray,
+               cols: Columns, chunk_points: int) -> pd.DataFrame:
+    """One conv's slots (epoch order) -> chunk rows of at most chunk_points
+    slots each. Raises ValueError if a gap slot carries a nonzero count or
+    a non-null stat: those values would not survive the round trip."""
+    gap = np.asarray(gap, dtype=bool)
+    bad = ([m for m in COUNT_COLS if (cols[m][0][gap] != 0).any()]
+           + [m for m in STAT_COLS if not cols[m][1][gap].all()])
+    if bad:
+        raise ValueError(f"{conv_id}: gap_filled slots carry values in {bad}")
+    rows = []
+    for lo in range(0, len(epochs), chunk_points):
+        sl = slice(lo, lo + chunk_points)
+        rows.append((conv_id, tier, pd.Timestamp(int(epochs[lo]), unit="s"),
+                     len(epochs[sl]), g_vec.encode_timestamps_block(epochs[sl]),
+                     encode_values(gap[sl], {m: (v[sl], nm[sl]) for m, (v, nm) in cols.items()})))
+    return pd.DataFrame(rows, columns=_CHUNK_COLS)
+
+
+def _decode_chunk(n_points, ts_codec, val_codec) -> tuple[np.ndarray, np.ndarray, Columns]:
+    """-> (epochs, gap_filled, columns) of one chunk row."""
+    epochs = g_vec.decode_timestamps_block(bytes(ts_codec))
+    gap, cols = decode_values(bytes(val_codec), int(n_points))
+    return epochs, gap, cols
 
 
 def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
@@ -112,14 +127,12 @@ def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
 
     densify=True accepts the SPARSE tier and reindexes each conv onto the
     dense slot grid in the kernel (counts 0, stats null, gap_filled true)
-    before encoding — gap slots then cost ~1 bit each in the codec instead
+    before encoding — gap slots then cost 1 bit each in the codec instead
     of a shuffled row each. Output chunks are identical to encoding the
     gap-filled tier (tested)."""
     from yatsm_spark.operators.rollup import TIERS
 
     step = TIERS[tier]
-    count_cols = [m for m in MEASURES if m.endswith("_count")]
-    stat_cols = [m for m in MEASURES if not m.endswith("_count")]
 
     # Null stat slots are split into (coalesced long, notnull flag) BEFORE
     # the Arrow boundary: Arrow->pandas turns a long column CONTAINING nulls
@@ -128,9 +141,9 @@ def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
     # int64 end to end; a non-integer measure now fails loudly at the cast
     # in Catalyst instead of being truncated silently.
     sel = [F.col("conv_id"), F.col("window_start"), F.col("gap_filled")]
-    for m in count_cols:
+    for m in COUNT_COLS:
         sel.append(F.coalesce(F.col(m), F.lit(0)).cast("long").alias(m))
-    for m in stat_cols:
+    for m in STAT_COLS:
         sel.append(F.coalesce(F.col(m), F.lit(0)).cast("long").alias(m))
         sel.append(F.col(m).isNotNull().alias(f"_nn_{m}"))
     # NO extra-wide repartition here (r6, measured): unlike the CCDC stage,
@@ -145,65 +158,31 @@ def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
     def enc(pdf: pd.DataFrame) -> pd.DataFrame:
         """Whole-conv numpy encode: every series is converted to
         (int64 values, null mask) ONCE per conv — int64-exact end to end,
-        no float round-trip — then the chunk loop slices numpy arrays.
+        no float round-trip — then chunk_rows slices numpy arrays.
         (Per-chunk pandas ops were ~2x the actual codec cost.)"""
-        n = len(pdf)
-        if n == 0:
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
+        if pdf.empty:
+            return pd.DataFrame(columns=_CHUNK_COLS)
         epochs = pdf["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
         order = np.argsort(epochs, kind="stable")
         epochs = epochs[order]
-        vals: dict[str, np.ndarray] = {}
-        nulls: dict[str, np.ndarray | None] = {}
-        for c in count_cols:
-            vals[c] = pdf[c].to_numpy(dtype=np.int64)[order]
-            nulls[c] = None
-        for c in stat_cols:
-            vals[c] = pdf[c].to_numpy(dtype=np.int64)[order]
-            nulls[c] = (~pdf[f"_nn_{c}"].to_numpy(dtype=bool))[order]
-        gap = pdf["gap_filled"].to_numpy(dtype=np.int64)[order]
+        gap = pdf["gap_filled"].to_numpy(dtype=bool)[order]
+        vals = {c: pdf[c].to_numpy(dtype=np.int64)[order] for c in MEASURES}
+        nulls = {c: (~pdf[f"_nn_{c}"].to_numpy(dtype=bool))[order] for c in STAT_COLS}
         if densify:
             from yatsm_spark.kernel.gapfill import gapfill_slots
 
-            grid_in = {c: vals[c] for c in count_cols}
             # stats travel as int64 + a notnull flag column: gap slots get
             # notnull=0 (int fill is 0), i.e. null — no float64 detour, so
             # values above 2^53 stay exact through densification too.
-            for c in stat_cols:
-                grid_in[c] = vals[c]
-                grid_in[f"_nn_{c}"] = (~nulls[c]).astype(np.int64)
+            grid_in = dict(vals, **{f"_nn_{c}": (~nulls[c]).astype(np.int64)
+                                    for c in STAT_COLS})
             dense = gapfill_slots(epochs, grid_in, step=step)
-            epochs = dense["slot_epoch"]
-            gap = dense["gap_filled"].astype(np.int64)
-            for c in count_cols:
-                vals[c] = dense[c]
-                nulls[c] = None
-            for c in stat_cols:
-                vals[c] = dense[c]
-                nulls[c] = dense[f"_nn_{c}"] == 0
-        conv_id = pdf["conv_id"].iloc[0]
-        rows = []
-        for lo in range(0, len(epochs), chunk_points):
-            hi = min(lo + chunk_points, len(epochs))
-            parts = []
-            for m in _SERIES:
-                if m == "gap_filled":
-                    stream = encode_ints(gap[lo:hi], None)
-                else:
-                    nm = nulls[m]
-                    stream = encode_ints(vals[m][lo:hi],
-                                         None if nm is None else nm[lo:hi])
-                parts.append(struct.pack(">I", len(stream)))
-                parts.append(stream)
-            rows.append({
-                "conv_id": conv_id,
-                "tier": tier,
-                "chunk_start": pd.Timestamp(int(epochs[lo]), unit="s"),
-                "n_points": hi - lo,
-                "ts_codec": encode_timestamps(epochs[lo:hi]),
-                "val_codec": b"".join(parts),
-            })
-        return pd.DataFrame(rows)
+            epochs, gap = dense["slot_epoch"], dense["gap_filled"]
+            vals = {c: dense[c] for c in MEASURES}
+            nulls = {c: dense[f"_nn_{c}"] == 0 for c in STAT_COLS}
+        no_nulls = np.zeros(len(epochs), dtype=bool)
+        cols = {c: (vals[c], nulls.get(c, no_nulls)) for c in MEASURES}
+        return chunk_rows(pdf["conv_id"].iloc[0], tier, epochs, gap, cols, chunk_points)
 
     return rollup.groupBy("conv_id").applyInPandas(enc, CHUNK_SCHEMA)
 
@@ -215,21 +194,14 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
     def dec(batches):
         for pdf in batches:
             frames = []
-            for _, r in pdf.iterrows():
-                n = int(r["n_points"])
-                ts = decode_timestamps(bytes(r["ts_codec"]))
-                vals = _decode_values(bytes(r["val_codec"]), n)
-                d = {"conv_id": r["conv_id"],
-                     "window_start": ts.astype("datetime64[s]").astype("datetime64[us]")}
-                for m in MEASURES:
-                    v, null = vals[m]
-                    # int streams carry 0 at null slots; float streams carry
-                    # NaN — zero them before the int cast either way.
-                    arr = pd.array(np.where(null, 0, v).astype(np.int64), dtype="Int64")
-                    arr[null] = None
-                    d[m] = arr
-                gv, _ = vals["gap_filled"]
-                d["gap_filled"] = gv > 0
+            for conv_id, *chunk in zip(pdf["conv_id"], pdf["n_points"],
+                                       pdf["ts_codec"], pdf["val_codec"]):
+                epochs, gap, cols = _decode_chunk(*chunk)
+                d = {"conv_id": conv_id,
+                     "window_start": epochs.astype("datetime64[s]").astype("datetime64[us]")}
+                for m, (v, null) in cols.items():
+                    d[m] = pd.arrays.IntegerArray(v, null)
+                d["gap_filled"] = gap
                 frames.append(pd.DataFrame(d))
             if frames:
                 yield pd.concat(frames, ignore_index=True)
@@ -255,46 +227,15 @@ def compact_chunks(chunks: DataFrame, chunk_points: int = 4096) -> DataFrame:
     evicted window, rollup.py TTL contract)."""
 
     def compact(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
+        if pdf.empty:
+            return pd.DataFrame(columns=_CHUNK_COLS)
         pdf = pdf.sort_values("chunk_start", kind="mergesort")
-        epochs_parts, val_parts, null_parts, gap_parts = [], [], [], []
-        for _, r in pdf.iterrows():
-            n = int(r["n_points"])
-            epochs_parts.append(decode_timestamps(bytes(r["ts_codec"])))
-            vals = _decode_values(bytes(r["val_codec"]), n)
-            val_parts.append(vals)
-        epochs = np.concatenate(epochs_parts)
-        conv_id = pdf["conv_id"].iloc[0]
-        tier = pdf["tier"].iloc[0]
-        merged = {
-            m: (np.concatenate([vp[m][0] for vp in val_parts]),
-                np.concatenate([vp[m][1] for vp in val_parts]))
-            for m in _SERIES
-        }
-
-        rows = []
-        for lo in range(0, len(epochs), chunk_points):
-            hi = min(lo + chunk_points, len(epochs))
-            parts = []
-            for m in _SERIES:
-                v, nm = merged[m]
-                body = np.where(nm, 0, v).astype(np.int64)[lo:hi]
-                if m == "gap_filled" or m.endswith("_count"):
-                    stream = encode_ints(body, None)
-                else:
-                    stream = encode_ints(body, nm[lo:hi])
-                parts.append(struct.pack(">I", len(stream)))
-                parts.append(stream)
-            rows.append({
-                "conv_id": conv_id,
-                "tier": tier,
-                "chunk_start": pd.Timestamp(int(epochs[lo]), unit="s"),
-                "n_points": hi - lo,
-                "ts_codec": encode_timestamps(epochs[lo:hi]),
-                "val_codec": b"".join(parts),
-            })
-        return pd.DataFrame(rows)
+        epochs, gaps, parts = zip(*(_decode_chunk(*c) for c in zip(
+            pdf["n_points"], pdf["ts_codec"], pdf["val_codec"])))
+        cols = {m: (np.concatenate([p[m][0] for p in parts]),
+                    np.concatenate([p[m][1] for p in parts])) for m in MEASURES}
+        return chunk_rows(pdf["conv_id"].iloc[0], pdf["tier"].iloc[0],
+                          np.concatenate(epochs), np.concatenate(gaps), cols, chunk_points)
 
     return chunks.groupBy("conv_id", "tier").applyInPandas(
         compact, CHUNK_SCHEMA)
