@@ -319,3 +319,16 @@ def test_realtime_view_exact_and_alignment(spark):
     assert view.count() == full.count()
     with pytest.raises(ValueError, match="aligned"):
         realtime_view(tier, m, "1m", wm + pd.Timedelta(seconds=7))
+
+
+def test_zipf_len_clips_before_int_cast():
+    """Lengths whose raw value overflows int64 clip to ``hi``, silently."""
+    import warnings
+
+    from yatsm_spark.synth import _zipf_len
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = _zipf_len(np.array([1e-12, 1e-4]), hi=50_000)
+    assert got.tolist() == [50_000, 50_000]
+    assert got.dtype == np.int64

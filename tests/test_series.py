@@ -1,0 +1,136 @@
+"""The per-series kernel boundary (operators/series.py::per_series): its
+contract, the plan shape of every operator routed through it, and a source
+guard that keeps grouped maps from being written out by hand again."""
+
+import pathlib
+import re
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from yatsm_spark.operators import (changepoint, changescore, codec, downsample,
+                                   kalman, matrixprofile, packing, tsfuncs)
+from yatsm_spark.operators.rollup import MEASURES
+from yatsm_spark.operators.series import per_series
+
+OPERATORS = pathlib.Path(__file__).resolve().parents[1] / "yatsm_spark" / "operators"
+
+
+@pytest.fixture(scope="module")
+def tier(spark):
+    rows = [{"conv_id": f"c{c}",
+             "window_start": pd.Timestamp(1_735_689_600 + 60 * i, unit="s"),
+             **{m: (i * 7 + c * 3) % 11 + 1 for m in MEASURES},
+             "gap_filled": False}
+            for c in range(3) for i in range(40)]
+    pdf = pd.DataFrame(rows).sample(frac=1.0, random_state=0)
+    return spark.createDataFrame(pdf, schema=codec.ROLLUP_SCHEMA)
+
+
+@pytest.fixture(scope="module")
+def chunks(spark):
+    ep = 1_735_689_600 + 60 * np.arange(40, dtype=np.int64)
+    cols = {m: (np.arange(40, dtype=np.int64), np.zeros(40, bool)) for m in MEASURES}
+    rows = codec.chunk_rows("c0", "1m", ep, np.zeros(40, bool), cols, 8)
+    return spark.createDataFrame(rows.sample(frac=1.0, random_state=0),
+                                 schema=codec.CHUNK_SCHEMA)
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    return spark.createDataFrame(pd.DataFrame({
+        "doc_id": np.arange(20, dtype=np.int64),
+        "source": ["a", "b"] * 10,
+        "text": [" ".join(["w"] * (i % 7 + 1)) for i in range(20)]}))
+
+
+OPS = {
+    "ewma": lambda t, ch, d: tsfuncs.ewma(t, "turn_count"),
+    "holt": lambda t, ch, d: tsfuncs.holt(t, "turn_count"),
+    "holt_winters": lambda t, ch, d: tsfuncs.holt_winters(t, "turn_count", period=4),
+    "holt_winters_backtest": lambda t, ch, d: tsfuncs.holt_winters_backtest(
+        t, "turn_count", period=4),
+    "theil_sen": lambda t, ch, d: tsfuncs.theil_sen(t),
+    "matrix_profile": lambda t, ch, d: matrixprofile.matrix_profile(t, m=4),
+    "left_matrix_profile": lambda t, ch, d: matrixprofile.left_matrix_profile(
+        t, m=4, w_hist=8),
+    "ab_join_profile": lambda t, ch, d: matrixprofile.ab_join_profile(t, "c0", m=4),
+    "lttb": lambda t, ch, d: downsample.lttb(t, n_out=5),
+    "swing_door": lambda t, ch, d: downsample.swing_door(t),
+    "burst_intervals": lambda t, ch, d: changepoint.burst_intervals(
+        t.select("conv_id", t.window_start.alias("ts"))),
+    "pelt_changepoints": lambda t, ch, d: changepoint.pelt_changepoints(t),
+    "kalman_smooth": lambda t, ch, d: kalman.kalman_smooth(t),
+    "change_scores": lambda t, ch, d: changescore.change_scores(t),
+    "change_scores_post": lambda t, ch, d: changescore.change_scores_post(t),
+    "change_scores_multi": lambda t, ch, d: changescore.change_scores_multi(
+        t, ["turn_count", "token_len_sum"]),
+    "encode_chunks": lambda t, ch, d: codec.encode_chunks(t, "1m", chunk_points=16),
+    "compact_chunks": lambda t, ch, d: codec.compact_chunks(ch, chunk_points=16),
+    "pack_documents": lambda t, ch, d: packing.pack_documents(d, 8, n_shards=2),
+}
+CCDC_OPS = {"change_scores", "change_scores_post", "change_scores_multi"}
+
+
+@pytest.mark.parametrize("op", sorted(OPS))
+def test_one_exchange_below_the_grouped_map(spark, tier, chunks, docs, op):
+    """Each routed operator shuffles exactly once; the CCDC stages' own
+    wide repartition satisfies the grouping, so no second exchange."""
+    plan = str(OPS[op](tier, chunks, docs)._jdf.queryExecution().executedPlan())
+    lines = plan.splitlines()
+    top = next(i for i, ln in enumerate(lines) if "FlatMapGroupsInPandas" in ln)
+    exchanges = [ln for ln in lines[top + 1:] if "Exchange " in ln]
+    assert len(exchanges) == 1, plan
+    if op in CCDC_OPS:
+        assert re.search(r"Exchange hashpartitioning\(conv_id#\d+, \d+\), "
+                         r"REPARTITION_BY_NUM", exchanges[0]), plan
+
+
+def test_kernel_sees_its_group_sorted_with_a_fresh_index(spark):
+    rng = np.random.default_rng(3)
+    pdf = pd.DataFrame({"k": rng.choice(["a", "b", "c"], 300),
+                        "t": rng.permutation(300).astype(np.int64)})
+    df = spark.createDataFrame(pdf).repartition(4)
+
+    def kernel(g):
+        return pd.DataFrame({
+            "k": [g["k"].iloc[0]], "n": [len(g)],
+            "sorted": [bool(g["t"].is_monotonic_increasing)],
+            "fresh_index": [g.index.equals(pd.RangeIndex(len(g)))]})
+
+    got = per_series(df, "k", "t", kernel,
+                     ["k", "n long", "sorted boolean", "fresh_index boolean"],
+                     name="probe").toPandas()
+    assert sorted(got["k"]) == ["a", "b", "c"]
+    assert got["n"].sum() == 300
+    assert got["sorted"].all() and got["fresh_index"].all()
+
+
+def test_none_from_the_kernel_yields_no_rows_of_the_declared_schema(spark):
+    df = spark.createDataFrame(pd.DataFrame({
+        "k": ["a", "a", "b"], "t": pd.date_range("2026-01-01", periods=3, freq="h")}))
+    out = per_series(df, "k", "t",
+                     lambda g: None if g["k"].iloc[0] == "a" else g.assign(x=1.5),
+                     ["k", "t", "x double"], name="probe")
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("k", "string"), ("t", "timestamp"), ("x", "double")]
+    assert [tuple(r) for r in out.collect()] == [
+        ("b", pd.Timestamp("2026-01-01 02:00").to_pydatetime(), 1.5)]
+    none = per_series(df, "k", "t", lambda g: None, ["k", "t", "x double"], name="probe")
+    assert none.count() == 0 and none.schema == out.schema
+
+
+def test_max_n_guard_names_the_operator(spark):
+    df = spark.createDataFrame(pd.DataFrame({"k": ["a"] * 3, "t": [3, 1, 2]}))
+    out = per_series(df, "k", "t", lambda g: g, ["k", "t"], max_n=2,
+                     name="probe_op")
+    with pytest.raises(Exception, match=r"probe_op: series of 3 rows exceeds max_n=2"):
+        out.collect()
+
+
+def test_grouped_maps_go_through_per_series():
+    """Only the helper itself and bpe (one row per group, nothing to sort)
+    call applyInPandas."""
+    hits = {p.name for p in OPERATORS.glob("*.py") if "applyInPandas(" in p.read_text()}
+    assert hits == {"series.py", "bpe.py"}

@@ -16,7 +16,8 @@ transcripts ``(conv_id, turn_idx, role, text, tool, ts)``:
 
 Everything relational is stock Spark DataFrame API (Catalyst optimizes);
 everything sequential/stateful lives in pure-numpy kernels under
-``yatsm_spark.kernel`` executed through Arrow-vectorized ``applyInPandas``.
+``yatsm_spark.kernel``, run per series through one Arrow-vectorized
+grouped-map boundary (``operators.series.per_series``).
 No RDDs, no per-row Python UDFs.
 """
 

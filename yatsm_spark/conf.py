@@ -61,11 +61,15 @@ def shuffle_partitions_for_bytes(n_bytes: int, cores: int,
 
 
 def grouped_stage_partitions(spark) -> int:
-    """Partition width for grouped-kernel stages (applyInPandas over
-    conv groups). Group sizes are zipf-skewed, and a grouped stage gets
-    NO AQE skew-splitting (a group is atomic), so balance comes from
-    the law of large numbers: more, smaller partitions -> more groups
-    per partition -> smaller relative spread of per-partition work.
+    """Partition width for the CCDC grouped-kernel stages, its only
+    users (operators/changescore.py repartitions to it before
+    per_series). The codec's encode stage keeps the session width: its
+    kernel is cheap and the boundary's per-partition fixed costs
+    dominate there (A/B in operators/codec.py). Group sizes are
+    zipf-skewed, and a grouped stage gets NO AQE skew-splitting (a group
+    is atomic), so balance comes from the law of large numbers: more,
+    smaller partitions -> more groups per partition -> smaller relative
+    spread of per-partition work.
     4x the scheduler's core count gives ~4 task waves for packing while
     keeping partitions far above Arrow-batch granularity; floored by
     the session shuffle width so a data-sized wider setting wins.

@@ -1,8 +1,9 @@
 """Offline optimal changepoint detection over a rollup tier: PELT
-(kernel/pelt.py) driven through applyInPandas. Complements the greedy
-online paths — kernel/ccdc.py's monitor (arrival-order break tests) and
-streaming/stream_rollup.py's online_monitor — with the globally optimal
-penalized segmentation of the full series.
+(kernel/pelt.py) run per series through operators/series.py::per_series.
+Complements the greedy online paths — kernel/ccdc.py's monitor
+(arrival-order break tests) and streaming/stream_rollup.py's
+online_monitor — with the globally optimal penalized segmentation of the
+full series.
 
 Meaningful on the DENSE tier (row positions = time). One shuffle on the
 series key; O(n^2)-worst-case kernel bounded by ``max_n`` — downsample
@@ -13,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from yatsm_spark.operators.series import per_series
 
 
 def burst_intervals(turns: DataFrame, s: float = 3.0,
@@ -29,21 +32,12 @@ def burst_intervals(turns: DataFrame, s: float = 3.0,
 
     from yatsm_spark.kernel.bursts import kleinberg_bursts
 
-    src = turns.select(by, ts_col)
-
     def fit(pdf):
-        n = len(pdf)
-        if n > max_n:
-            raise ValueError(
-                f"burst_intervals: conv of {n} turns exceeds "
-                f"max_n={max_n}")
         t_us = pdf[ts_col].to_numpy(dtype="datetime64[us]") \
             .astype(np.int64)
         bursts = kleinberg_bursts(t_us, s, gamma)
         if not bursts:
-            return pd.DataFrame(columns=[by, "burst_ord", "start_us",
-                                         "end_us", "burst_start",
-                                         "burst_end", "n_events"])
+            return None
         return pd.DataFrame({
             by: pdf.iloc[0, 0],
             "burst_ord": np.arange(1, len(bursts) + 1, dtype=np.int64),
@@ -56,10 +50,11 @@ def burst_intervals(turns: DataFrame, s: float = 3.0,
             "n_events": [b[2] for b in bursts],
         })
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, burst_ord long, "
-              "start_us long, end_us long, burst_start timestamp, "
-              "burst_end timestamp, n_events long")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(turns.select(by, ts_col), by, ts_col, fit,
+                      [by, "burst_ord long", "start_us long", "end_us long",
+                       "burst_start timestamp", "burst_end timestamp",
+                       "n_events long"],
+                      max_n=max_n, name="burst_intervals")
 
 
 def pelt_changepoints(tier: DataFrame, value_col: str = "turn_count",
@@ -77,21 +72,11 @@ def pelt_changepoints(tier: DataFrame, value_col: str = "turn_count",
 
     from yatsm_spark.kernel.pelt import pelt_core
 
-    src = tier.select(by, order_col, value_col)
-
     def fit(pdf):
-        pdf = (pdf.sort_values(order_col, kind="mergesort")
-                  .reset_index(drop=True))
-        n = len(pdf)
-        if n > max_n:
-            raise ValueError(
-                f"pelt_changepoints: series of {n} rows exceeds "
-                f"max_n={max_n}; downsample (lttb/m4/cascade) first")
         cps = pelt_core(pdf[value_col].to_numpy(dtype=np.int64),
                         penalty, min_size)
         if cps.size == 0:
-            return pd.DataFrame(columns=[by, "cp_ord", "idx",
-                                         order_col, "n_changepoints"])
+            return None
         return pd.DataFrame({
             by: pdf.iloc[0, 0],
             "cp_ord": np.arange(1, cps.size + 1, dtype=np.int64),
@@ -100,7 +85,7 @@ def pelt_changepoints(tier: DataFrame, value_col: str = "turn_count",
             "n_changepoints": np.int64(cps.size),
         })
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, cp_ord long, idx long, "
-              f"{order_col} {dict(src.dtypes)[order_col]}, "
-              "n_changepoints long")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(tier.select(by, order_col, value_col), by, order_col,
+                      fit, [by, "cp_ord long", "idx long", order_col,
+                            "n_changepoints long"],
+                      max_n=max_n, name="pelt_changepoints")

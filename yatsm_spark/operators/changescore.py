@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from yatsm_spark.kernel.ccdc import CCDCParams, ccdc_fit
+from yatsm_spark.operators.series import per_series
 
 SEGMENT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
@@ -97,6 +98,61 @@ def _day_to_ts(day: float) -> pd.Timestamp:
     return pd.Timestamp(round(day * 86400.0), unit="s")
 
 
+def _conv_series(filled: DataFrame, measures: list[str]) -> DataFrame:
+    """(conv_id, window_start, *measures), hash-partitioned on conv_id for
+    the per-conv fit."""
+    from yatsm_spark.conf import grouped_stage_partitions
+
+    # Column-prune BEFORE the group shuffle: the kernel needs these columns
+    # only, so never move the others through the exchange (at 10^12 scale
+    # the shuffle is the cost of this operator). Repartition wider than the
+    # session shuffle width (grouped_stage_partitions): zipf-sized conv
+    # groups in one task wave straggle, and AQE cannot split a group —
+    # the explicit hash partitioning satisfies the groupBy's required
+    # distribution, so no second exchange is added.
+    return (filled.select("conv_id", "window_start", *measures)
+            .repartition(grouped_stage_partitions(filled.sparkSession),
+                         "conv_id"))
+
+
+def _fit_input(pdf: pd.DataFrame, measures: list[str], densify: bool,
+               step_seconds: int) -> tuple[np.ndarray, np.ndarray]:
+    """One conv's time-sorted slots -> (t in days, Y[measure, slot]) over
+    the slots where every measure is present: count measures without nulls
+    travel as int64 (0-filled by densify), the rest as float (NaN-filled);
+    densify=True reindexes onto the dense slot grid first. NaN slots are
+    dropped because the CCDC kernel fits a garbage segment to NaN input."""
+    # datetime64 unit varies (ns via Arrow, us elsewhere) — normalize to
+    # epoch seconds explicitly; slots are whole minutes so this is exact.
+    epochs = pdf["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
+    cols = {}
+    for m in measures:
+        a = pdf[m].to_numpy(dtype=np.float64, na_value=np.nan)
+        cols[m] = a.astype(np.int64) if m.endswith("_count") and not np.isnan(a).any() else a
+    if densify:
+        from yatsm_spark.kernel.gapfill import gapfill_slots
+
+        dense = gapfill_slots(epochs, cols, step=step_seconds)
+        epochs = dense["slot_epoch"]
+        cols = {m: dense[m] for m in measures}
+    Y = np.vstack([np.asarray(cols[m], dtype=np.float64) for m in measures])
+    t = epochs / 86400.0
+    ok = ~np.isnan(Y).any(axis=0)
+    return t[ok], Y[:, ok]
+
+
+def _segment_row(conv_id: str, i: int, s) -> dict:
+    """The per-segment fields every segment schema shares."""
+    return {
+        "conv_id": conv_id,
+        "segment_id": i,
+        "start_ts": _day_to_ts(s.start_day),
+        "end_ts": _day_to_ts(s.end_day),
+        "break_ts": _day_to_ts(s.break_day) if s.break_day else None,
+        "n_obs": int(s.n_obs),
+    }
+
+
 def predict_at(segments: DataFrame, at, params: CCDCParams | None = None) -> DataFrame:
     """`yatsm map predict DATE` analogue (SURVEY.md §3.3): ŷ = X(d)·coef
     per segment, evaluated at timestamp `at`.
@@ -148,54 +204,19 @@ def change_scores(
     structured-array field append of the reference costs zero extra
     exchanges here.
     """
-    from yatsm_spark.conf import grouped_stage_partitions
-
-    p = params or CONV_PARAMS
-    p_dict = asdict(p)
+    p_dict = asdict(params or CONV_PARAMS)
     schema = PHENO_SEGMENT_SCHEMA if phenology else SEGMENT_SCHEMA
-    # Column-prune BEFORE the group shuffle: the kernel needs 3 columns, so
-    # never move the other 9 through the exchange (at 10^12 scale the
-    # shuffle is the cost of this operator). Repartition wider than the
-    # session shuffle width (grouped_stage_partitions): zipf-sized conv
-    # groups in one task wave straggle, and AQE cannot split a group —
-    # the explicit hash partitioning satisfies the groupBy's required
-    # distribution, so no second exchange is added.
-    filled = (filled.select("conv_id", "window_start", measure)
-              .repartition(grouped_stage_partitions(filled.sparkSession),
-                           "conv_id"))
 
-    def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start", kind="stable")
-        y = pdf[measure].to_numpy(dtype=np.float64, na_value=np.nan)
-        # datetime64 unit varies (ns via Arrow, us elsewhere) — normalize to
-        # epoch seconds explicitly; slots are whole minutes so this is exact.
-        epochs = pdf["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        if densify and len(epochs):
-            from yatsm_spark.kernel.gapfill import gapfill_slots
-
-            counts_like = measure.endswith("_count")
-            vals = y.astype(np.int64) if counts_like and not np.isnan(y).any() else y
-            dense = gapfill_slots(epochs, {"y": vals}, step=step_seconds)
-            epochs = dense["slot_epoch"]
-            y = dense["y"].astype(np.float64)
-        t = epochs / 86400.0
-        ok = ~np.isnan(y)
-        t, y = t[ok], y[ok]
-        kp = CCDCParams(**p_dict)
-        res = ccdc_fit(t, y, kp)
+    def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        t, Y = _fit_input(pdf, [measure], densify, step_seconds)
+        y = Y[0]
+        res = ccdc_fit(t, y, CCDCParams(**p_dict))
         rows = []
         for i, s in enumerate(res.segments):
-            row = {
-                "conv_id": pdf["conv_id"].iloc[0],
-                "segment_id": i,
-                "start_ts": _day_to_ts(s.start_day),
-                "end_ts": _day_to_ts(s.end_day),
-                "break_ts": _day_to_ts(s.break_day) if s.break_day else None,
-                "coef": list(map(float, s.coef[0])),
-                "rmse": float(s.rmse[0]),
-                "magnitude": float(s.magnitude[0]),
-                "n_obs": int(s.n_obs),
-            }
+            row = dict(_segment_row(pdf["conv_id"].iloc[0], i, s),
+                       coef=list(map(float, s.coef[0])),
+                       rmse=float(s.rmse[0]),
+                       magnitude=float(s.magnitude[0]))
             if phenology:
                 from yatsm_spark.kernel.phenology import diurnal_phenology
 
@@ -203,11 +224,10 @@ def change_scores(
                 row.update(diurnal_phenology(
                     np.round(t[seg] * 86400.0).astype(np.int64), y[seg]))
             rows.append(row)
-        if not rows:
-            return pd.DataFrame(columns=[f.name for f in schema.fields])
-        return pd.DataFrame(rows)
+        return pd.DataFrame(rows) if rows else None
 
-    return filled.groupBy("conv_id").applyInPandas(fit_conv, schema)
+    return per_series(_conv_series(filled, [measure]), "conv_id",
+                      "window_start", fit_conv, schema, name="change_scores")
 
 
 #: P1-P3 post-processing fields appended per (possibly merged) segment:
@@ -252,56 +272,30 @@ def change_scores_post(
         refit_segments,
     )
 
-    from yatsm_spark.conf import grouped_stage_partitions
+    p_dict = asdict(params or CONV_PARAMS)
 
-    p = params or CONV_PARAMS
-    p_dict = asdict(p)
-    filled = (filled.select("conv_id", "window_start", measure)
-              .repartition(grouped_stage_partitions(filled.sparkSession),
-                           "conv_id"))
-
-    def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start", kind="stable")
-        y = pdf[measure].to_numpy(dtype=np.float64, na_value=np.nan)
-        epochs = pdf["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        if densify and len(epochs):
-            from yatsm_spark.kernel.gapfill import gapfill_slots
-
-            counts_like = measure.endswith("_count")
-            vals = y.astype(np.int64) if counts_like and not np.isnan(y).any() else y
-            dense = gapfill_slots(epochs, {"y": vals}, step=step_seconds)
-            epochs = dense["slot_epoch"]
-            y = dense["y"].astype(np.float64)
-        t = epochs / 86400.0
-        ok = ~np.isnan(y)
-        t, y = t[ok], y[ok]
+    def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        t, Y = _fit_input(pdf, [measure], densify, step_seconds)
+        y = Y[0]
         kp = CCDCParams(**p_dict)
         segs = ccdc_fit(t, y, kp).segments
         if commission_crit is not None:
             segs = commission_test(t, y, segs, kp, crit=commission_crit)
         om = omission_scores(t, y, segs, kp)
         rf = refit_segments(t, y, segs, kp, estimator=refit_estimator)
-        rows = []
-        for i, s in enumerate(segs):
-            rows.append({
-                "conv_id": pdf["conv_id"].iloc[0],
-                "segment_id": i,
-                "start_ts": _day_to_ts(s.start_day),
-                "end_ts": _day_to_ts(s.end_day),
-                "break_ts": _day_to_ts(s.break_day) if s.break_day else None,
-                "coef": list(map(float, s.coef[0])),
-                "rmse": float(s.rmse[0]),
-                "magnitude": float(s.magnitude[0]),
-                "n_obs": int(s.n_obs),
-                "omission_score": float(om[i]),
-                "robust_coef": list(map(float, rf[i]["coef"][0])),
-                "robust_rmse": float(rf[i]["rmse"][0]),
-            })
-        if not rows:
-            return pd.DataFrame(columns=[f.name for f in POST_SEGMENT_SCHEMA.fields])
-        return pd.DataFrame(rows)
+        rows = [dict(_segment_row(pdf["conv_id"].iloc[0], i, s),
+                     coef=list(map(float, s.coef[0])),
+                     rmse=float(s.rmse[0]),
+                     magnitude=float(s.magnitude[0]),
+                     omission_score=float(om[i]),
+                     robust_coef=list(map(float, rf[i]["coef"][0])),
+                     robust_rmse=float(rf[i]["rmse"][0]))
+                for i, s in enumerate(segs)]
+        return pd.DataFrame(rows) if rows else None
 
-    return filled.groupBy("conv_id").applyInPandas(fit_conv, POST_SEGMENT_SCHEMA)
+    return per_series(_conv_series(filled, [measure]), "conv_id",
+                      "window_start", fit_conv, POST_SEGMENT_SCHEMA,
+                      name="change_scores_post")
 
 
 def change_scores_multi(
@@ -329,52 +323,21 @@ def change_scores_multi(
     """
     from dataclasses import replace as _dc_replace
 
-    from yatsm_spark.conf import grouped_stage_partitions
-
     p = params or CONV_PARAMS
     if test_indices is not None:
         p = _dc_replace(p, test_indices=tuple(test_indices))
     p_dict = asdict(p)
-    filled = (filled.select("conv_id", "window_start", *measures)
-              .repartition(grouped_stage_partitions(filled.sparkSession),
-                           "conv_id"))
 
-    def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_start", kind="stable")
-        epochs = pdf["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        cols = {}
-        for m in measures:
-            a = pdf[m].to_numpy(dtype=np.float64, na_value=np.nan)
-            if m.endswith("_count") and not np.isnan(a).any():
-                cols[m] = a.astype(np.int64)
-            else:
-                cols[m] = a
-        if densify and len(epochs):
-            from yatsm_spark.kernel.gapfill import gapfill_slots
-
-            dense = gapfill_slots(epochs, cols, step=step_seconds)
-            epochs = dense["slot_epoch"]
-            cols = {m: dense[m] for m in measures}
-        Y = np.vstack([np.asarray(cols[m], dtype=np.float64) for m in measures])
-        t = epochs / 86400.0
-        ok = ~np.isnan(Y).any(axis=0)
-        t, Y = t[ok], Y[:, ok]
+    def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        t, Y = _fit_input(pdf, measures, densify, step_seconds)
         res = ccdc_fit(t, Y, CCDCParams(**p_dict))
-        rows = []
-        for i, s in enumerate(res.segments):
-            rows.append({
-                "conv_id": pdf["conv_id"].iloc[0],
-                "segment_id": i,
-                "start_ts": _day_to_ts(s.start_day),
-                "end_ts": _day_to_ts(s.end_day),
-                "break_ts": _day_to_ts(s.break_day) if s.break_day else None,
-                "coefs": [list(map(float, s.coef[b])) for b in range(len(measures))],
-                "rmse": [float(x) for x in s.rmse],
-                "magnitude": [float(x) for x in s.magnitude],
-                "n_obs": int(s.n_obs),
-            })
-        if not rows:
-            return pd.DataFrame(columns=[f.name for f in MULTI_SEGMENT_SCHEMA.fields])
-        return pd.DataFrame(rows)
+        rows = [dict(_segment_row(pdf["conv_id"].iloc[0], i, s),
+                     coefs=[list(map(float, s.coef[b])) for b in range(len(measures))],
+                     rmse=[float(x) for x in s.rmse],
+                     magnitude=[float(x) for x in s.magnitude])
+                for i, s in enumerate(res.segments)]
+        return pd.DataFrame(rows) if rows else None
 
-    return filled.groupBy("conv_id").applyInPandas(fit_conv, MULTI_SEGMENT_SCHEMA)
+    return per_series(_conv_series(filled, measures), "conv_id",
+                      "window_start", fit_conv, MULTI_SEGMENT_SCHEMA,
+                      name="change_scores_multi")

@@ -24,7 +24,8 @@ the FULL int64 range (the float path is exact only below 2^53, round-1
 ADVICE).
 
 Bounded chunks (default 4096 points ≈ 2.8 days of 1m) keep a mega-conv from
-producing one giant row; groups stream through applyInPandas per conv.
+producing one giant row; each conv's slots reach the encoder in epoch order
+through operators/series.py::per_series.
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ from pyspark.sql import types as T
 
 from yatsm_spark.kernel import gorilla_vec as g_vec
 from yatsm_spark.operators.rollup import MEASURES
+from yatsm_spark.operators.series import per_series
 
 COUNT_COLS = [m for m in MEASURES if m.endswith("_count")]
 STAT_COLS = [m for m in MEASURES if not m.endswith("_count")]
@@ -160,14 +162,10 @@ def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
         (int64 values, null mask) ONCE per conv — int64-exact end to end,
         no float round-trip — then chunk_rows slices numpy arrays.
         (Per-chunk pandas ops were ~2x the actual codec cost.)"""
-        if pdf.empty:
-            return pd.DataFrame(columns=_CHUNK_COLS)
         epochs = pdf["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        order = np.argsort(epochs, kind="stable")
-        epochs = epochs[order]
-        gap = pdf["gap_filled"].to_numpy(dtype=bool)[order]
-        vals = {c: pdf[c].to_numpy(dtype=np.int64)[order] for c in MEASURES}
-        nulls = {c: (~pdf[f"_nn_{c}"].to_numpy(dtype=bool))[order] for c in STAT_COLS}
+        gap = pdf["gap_filled"].to_numpy(dtype=bool)
+        vals = {c: pdf[c].to_numpy(dtype=np.int64) for c in MEASURES}
+        nulls = {c: ~pdf[f"_nn_{c}"].to_numpy(dtype=bool) for c in STAT_COLS}
         if densify:
             from yatsm_spark.kernel.gapfill import gapfill_slots
 
@@ -184,7 +182,8 @@ def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
         cols = {c: (vals[c], nulls.get(c, no_nulls)) for c in MEASURES}
         return chunk_rows(pdf["conv_id"].iloc[0], tier, epochs, gap, cols, chunk_points)
 
-    return rollup.groupBy("conv_id").applyInPandas(enc, CHUNK_SCHEMA)
+    return per_series(rollup, "conv_id", "window_start", enc, CHUNK_SCHEMA,
+                      name="encode_chunks")
 
 
 def decode_chunks(chunks: DataFrame) -> DataFrame:
@@ -227,9 +226,6 @@ def compact_chunks(chunks: DataFrame, chunk_points: int = 4096) -> DataFrame:
     evicted window, rollup.py TTL contract)."""
 
     def compact(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return pd.DataFrame(columns=_CHUNK_COLS)
-        pdf = pdf.sort_values("chunk_start", kind="mergesort")
         epochs, gaps, parts = zip(*(_decode_chunk(*c) for c in zip(
             pdf["n_points"], pdf["ts_codec"], pdf["val_codec"])))
         cols = {m: (np.concatenate([p[m][0] for p in parts]),
@@ -237,5 +233,5 @@ def compact_chunks(chunks: DataFrame, chunk_points: int = 4096) -> DataFrame:
         return chunk_rows(pdf["conv_id"].iloc[0], pdf["tier"].iloc[0],
                           np.concatenate(epochs), np.concatenate(gaps), cols, chunk_points)
 
-    return chunks.groupBy("conv_id", "tier").applyInPandas(
-        compact, CHUNK_SCHEMA)
+    return per_series(chunks, ["conv_id", "tier"], "chunk_start", compact,
+                      CHUNK_SCHEMA, name="compact_chunks")

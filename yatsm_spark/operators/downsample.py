@@ -1,5 +1,6 @@
-"""LTTB downsampling over rollup tiers — one applyInPandas pass per
-conv, emitting the n_out visually-dominant slots of each series.
+"""LTTB downsampling over rollup tiers — one per-series kernel pass per
+conv (operators/series.py::per_series), emitting the n_out
+visually-dominant slots of each series.
 
 Scale shape: the only exchange is the per-conv grouping shuffle of the
 (already aggregated) tier — slots, not raw turns — and the output is
@@ -15,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yatsm_spark.kernel.downsample import lttb_frame
+from yatsm_spark.operators.series import per_series
 
 
 def lttb(tier: DataFrame, value_col: str = "turn_count", n_out: int = 64,
@@ -24,11 +26,8 @@ def lttb(tier: DataFrame, value_col: str = "turn_count", n_out: int = 64,
     Series shorter than n_out pass through whole."""
     if n_out < 3:
         raise ValueError("n_out must be >= 3")
-    src = tier.select(by, order_col, value_col)
 
     def fit(pdf):
-        pdf = (pdf.sort_values(order_col, kind="mergesort")
-                  .reset_index(drop=True))
         ts_ns = pdf[order_col].astype("datetime64[ns]").astype("int64")
         sel, pos = lttb_frame(ts_ns.to_numpy(), pdf[value_col].to_numpy(),
                               n_out)
@@ -36,10 +35,8 @@ def lttb(tier: DataFrame, value_col: str = "turn_count", n_out: int = 64,
         out["pos"] = pos
         return out
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, "
-              f"{order_col} {dict(src.dtypes)[order_col]}, "
-              f"{value_col} {dict(src.dtypes)[value_col]}, pos int")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(tier.select(by, order_col, value_col), by, order_col,
+                      fit, [by, order_col, value_col, "pos int"], name="lttb")
 
 
 def m4_downsample(tier: DataFrame, value_col: str = "turn_count",
@@ -91,30 +88,19 @@ def swing_door(tier: DataFrame, value_col: str = "turn_count",
     so the kept-point set is bit-identical at any parallelism. One
     shuffle on the series key; O(n) kernel per conv."""
     import numpy as np
-    import pandas as pd
 
     from yatsm_spark.kernel.swing import swing_compress
 
-    src = tier.select(by, order_col, value_col)
-
     def fit(pdf):
-        pdf = (pdf.sort_values(order_col, kind="mergesort")
-                  .reset_index(drop=True))
-        n = len(pdf)
-        if n > max_n:
-            raise ValueError(
-                f"swing_door: series of {n} rows exceeds max_n={max_n}")
         t_us = pdf[order_col].to_numpy(dtype="datetime64[us]") \
             .astype(np.int64)
         keep = swing_compress(t_us, pdf[value_col].to_numpy(np.int64), e)
         out = pdf.iloc[keep][[by, order_col, value_col]] \
             .reset_index(drop=True)
         out["pos"] = np.arange(len(keep), dtype=np.int64)
-        out["n_in"] = np.int64(n)
+        out["n_in"] = np.int64(len(pdf))
         return out
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, "
-              f"{order_col} {dict(src.dtypes)[order_col]}, "
-              f"{value_col} {dict(src.dtypes)[value_col]}, "
-              "pos long, n_in long")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(tier.select(by, order_col, value_col), by, order_col,
+                      fit, [by, order_col, value_col, "pos long", "n_in long"],
+                      max_n=max_n, name="swing_door")

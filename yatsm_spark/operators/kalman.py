@@ -5,10 +5,10 @@ eyeballing or fitting it" step (Harvey 1989; same role as YATSM's robust
 pre-screening of noisy observations, recast as state estimation).
 
 Kernel: yatsm_spark/kernel/kalman.py (pure numpy scalar recursions — no
-BLAS), driven through applyInPandas per series. One group shuffle; the
-recursion is inherently sequential per series, which is exactly the
-applyInPandas contract everywhere else in this engine (CCDC, Holt,
-matrix profile): parallel across series, sequential within.
+BLAS), run per series through operators/series.py::per_series. One
+group shuffle; the recursion is inherently sequential per series, which
+is exactly the per_series contract everywhere else in this engine (CCDC,
+Holt, matrix profile): parallel across series, sequential within.
 
 Oracle: a pure-numpy twin persisted as a golden parquet
 (tools/make_goldens.py::kalman_twin) — the driver row is a genuine
@@ -19,6 +19,8 @@ tx_segments and tx_lttb.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from yatsm_spark.operators.series import per_series
 
 
 def kalman_smooth(tier: DataFrame, value_col: str = "turn_count",
@@ -38,17 +40,7 @@ def kalman_smooth(tier: DataFrame, value_col: str = "turn_count",
 
     from yatsm_spark.kernel.kalman import kalman_local_level
 
-    src = tier.select(by, order_col, value_col)
-    dt = dict(src.dtypes)
-
     def fit(pdf):
-        pdf = (pdf.sort_values(order_col, kind="mergesort")
-                  .reset_index(drop=True))
-        n = len(pdf)
-        if n > max_n:
-            raise ValueError(
-                f"kalman_smooth: series of {n} rows exceeds max_n="
-                f"{max_n}; roll up to a coarser tier first")
         y = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
         level, var, smooth = kalman_local_level(y, q=q, r=r)
         return pd.DataFrame({
@@ -60,7 +52,7 @@ def kalman_smooth(tier: DataFrame, value_col: str = "turn_count",
             "kalman_smooth": smooth,
         })
 
-    schema = (f"{by} {dt[by]}, {order_col} {dt[order_col]}, "
-              f"{value_col} {dt[value_col]}, kalman_level double, "
-              "kalman_var double, kalman_smooth double")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(tier.select(by, order_col, value_col), by, order_col,
+                      fit, [by, order_col, value_col, "kalman_level double",
+                            "kalman_var double", "kalman_smooth double"],
+                      max_n=max_n, name="kalman_smooth")

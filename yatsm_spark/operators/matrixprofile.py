@@ -1,7 +1,7 @@
 """Matrix-profile operators: per-series motif/discord discovery over a
-rollup tier (kernel/matrixprofile.py driven through applyInPandas), and
-the relational extrema reduction that turns the long-form profile into
-one motif + discord row per series.
+rollup tier (kernel/matrixprofile.py run per series through
+operators/series.py::per_series), and the relational extrema reduction
+that turns the long-form profile into one motif + discord row per series.
 
 Meaningful on the DENSE tier (like acf / seasonal_decompose): window
 positions are ROW positions, so gaps must be materialized as slots
@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from yatsm_spark.operators.series import per_series
 
 
 def matrix_profile(tier: DataFrame, value_col: str = "turn_count",
@@ -31,20 +33,10 @@ def matrix_profile(tier: DataFrame, value_col: str = "turn_count",
 
     from yatsm_spark.kernel.matrixprofile import matrix_profile_core
 
-    src = tier.select(by, order_col, value_col)
-
     def fit(pdf):
-        pdf = pdf.sort_values(order_col, kind="mergesort") \
-                 .reset_index(drop=True)
-        n = len(pdf)
-        if n > max_n:
-            raise ValueError(
-                f"matrix_profile: series of {n} rows exceeds "
-                f"max_n={max_n}; downsample (lttb/m4/cascade) first")
-        L = n - m + 1
+        L = len(pdf) - m + 1
         if L <= 0:
-            return pd.DataFrame(columns=[by, "idx", order_col,
-                                         "mp", "mp_idx"])
+            return None
         mp, mpi = matrix_profile_core(
             pdf[value_col].to_numpy(dtype=np.int64), m, excl)
         out = pd.DataFrame({
@@ -60,10 +52,10 @@ def matrix_profile(tier: DataFrame, value_col: str = "turn_count",
                               for v in mp], dtype="Float64")
         return out
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, idx long, "
-              f"{order_col} {dict(src.dtypes)[order_col]}, "
-              "mp double, mp_idx long")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(tier.select(by, order_col, value_col), by, order_col,
+                      fit, [by, "idx long", order_col, "mp double",
+                            "mp_idx long"],
+                      max_n=max_n, name="matrix_profile")
 
 
 def left_matrix_profile(tier: DataFrame, value_col: str = "turn_count",
@@ -83,20 +75,10 @@ def left_matrix_profile(tier: DataFrame, value_col: str = "turn_count",
 
     from yatsm_spark.kernel.matrixprofile import left_profile
 
-    src = tier.select(by, order_col, value_col)
-
     def fit(pdf):
-        pdf = (pdf.sort_values(order_col, kind="mergesort")
-                  .reset_index(drop=True))
-        n = len(pdf)
-        if n > max_n:
-            raise ValueError(
-                f"left_matrix_profile: series of {n} rows exceeds "
-                f"max_n={max_n}; downsample first")
-        L = n - m + 1
+        L = len(pdf) - m + 1
         if L <= 0:
-            return pd.DataFrame(columns=[by, "idx", order_col,
-                                         "lp", "lp_idx"])
+            return None
         lp, lpi = left_profile(
             pdf[value_col].to_numpy(dtype=np.int64), m, w_hist, excl)
         return pd.DataFrame({
@@ -109,10 +91,10 @@ def left_matrix_profile(tier: DataFrame, value_col: str = "turn_count",
                                dtype="Int64"),
         })
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, idx long, "
-              f"{order_col} {dict(src.dtypes)[order_col]}, "
-              "lp double, lp_idx long")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(tier.select(by, order_col, value_col), by, order_col,
+                      fit, [by, "idx long", order_col, "lp double",
+                            "lp_idx long"],
+                      max_n=max_n, name="left_matrix_profile")
 
 
 def ab_join_profile(tier: DataFrame, query_conv: str, m: int = 12,
@@ -150,31 +132,23 @@ def ab_join_profile(tier: DataFrame, query_conv: str, m: int = 12,
     spark = tier.sparkSession
     bc = spark.sparkContext.broadcast(qarr)
 
-    src = tier.where(F.col(by) != query_conv) \
-              .select(by, order_col, value_col)
-
     def fit(pdf):
-        pdf = (pdf.sort_values(order_col, kind="mergesort")
-                  .reset_index(drop=True))
-        n = len(pdf)
-        if n > max_n:
-            raise ValueError(
-                f"ab_join_profile: series of {n} rows exceeds "
-                f"max_n={max_n}; downsample first")
-        cols = [by, "q_idx", "c_idx", order_col, "dist"]
         best = ab_best_match(bc.value,
                              pdf[value_col].to_numpy(np.int64), m) \
-            if n >= m else None
+            if len(pdf) >= m else None
         if best is None:
-            return pd.DataFrame(columns=cols)
+            return None
         dist, qi, yj = best
         return pd.DataFrame({
             by: [pdf.iloc[0, 0]], "q_idx": [qi], "c_idx": [yj],
             order_col: [pdf[order_col].iloc[yj]], "dist": [dist]})
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, q_idx long, c_idx long, "
-              f"{order_col} {dict(src.dtypes)[order_col]}, dist double")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(tier.where(F.col(by) != query_conv)
+                          .select(by, order_col, value_col),
+                      by, order_col, fit,
+                      [by, "q_idx long", "c_idx long", order_col,
+                       "dist double"],
+                      max_n=max_n, name="ab_join_profile")
 
 
 def mp_extrema(profile: DataFrame, by: str = "conv_id") -> DataFrame:

@@ -16,10 +16,10 @@ length documents. Two standard transforms bridge the gap:
   to bound the fold's domain: documents are packed within
   (source, shard) groups, shard = KnuthHash(doc_id) mod n_shards, so
   each fold is corpus_size / (sources x n_shards) long and the groups
-  run in parallel via applyInPandas (one Arrow batch per group,
-  per-group numpy loop). At 100 TB you raise n_shards, not the group
-  size; bins are named (source, shard, bin_idx) so no cross-group
-  coordination exists by construction.
+  run in parallel via operators/series.py::per_series (one Arrow batch
+  per group, per-group numpy loop). At 100 TB you raise n_shards, not
+  the group size; bins are named (source, shard, bin_idx) so no
+  cross-group coordination exists by construction.
 
 Exactness: both transforms are pure integer/string transforms — the
 DuckDB oracles (list slicing for chunks, a recursive-CTE fold for
@@ -34,9 +34,10 @@ from pyspark.sql import functions as F
 
 from yatsm_spark.operators.ranking import TOKEN_SPLIT
 from yatsm_spark.operators.sampling import _KNUTH, _MOD
+from yatsm_spark.operators.series import per_series
 
-_PACK_SCHEMA = ("doc_id long, source string, shard int, dl long, "
-                "bin_idx long, bin_offset long")
+_PACK_SCHEMA = ["doc_id long", "source string", "shard int", "dl long",
+                "bin_idx long", "bin_offset long"]
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int, stride: int | None = None,
@@ -111,8 +112,6 @@ def pack_documents(docs: DataFrame, budget_tokens: int, n_shards: int = 1,
                     .filter(F.col("dl") > 0))
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id", kind="mergesort",
-                              ignore_index=True)
         dls = pdf["dl"].to_numpy()
         bins, offs = [], []
         bin_idx, fill = 0, 0
@@ -128,4 +127,5 @@ def pack_documents(docs: DataFrame, budget_tokens: int, n_shards: int = 1,
         return pdf[["doc_id", "source", "shard", "dl", "bin_idx",
                     "bin_offset"]]
 
-    return base.groupBy("source", "shard").applyInPandas(_pack, _PACK_SCHEMA)
+    return per_series(base, ["source", "shard"], "doc_id", _pack, _PACK_SCHEMA,
+                      name="pack_documents")

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from yatsm_spark.operators.series import per_series
+
 
 def _snap6(col):
     # values here are non-negative; floor(x*1e6 + 0.5) is round-half-up
@@ -154,25 +156,19 @@ def ewma(df: DataFrame, value_col: str, alpha: float = 0.25,
     import numpy as np
 
     beta = 1.0 - alpha
-    src = df.select(by, order_col, value_col)
 
     def fit(pdf):
-        pdf = (pdf.sort_values(order_col, kind="mergesort")
-                  .reset_index(drop=True))
         x = pdf[value_col].to_numpy(dtype=np.float64)
         s = np.empty(len(x), dtype=np.float64)
         if len(x):
             s[0] = x[0]
             for i in range(1, len(x)):
                 s[i] = alpha * x[i] + beta * s[i - 1]
-        pdf = pdf.copy()
         pdf["ewma"] = s
         return pdf
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, "
-              f"{order_col} {dict(src.dtypes)[order_col]}, "
-              f"{value_col} {dict(src.dtypes)[value_col]}, ewma double")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(df.select(by, order_col, value_col), by, order_col, fit,
+                      [by, order_col, value_col, "ewma double"], name="ewma")
 
 
 def time_weighted_avg(df: DataFrame, value_col: str, by: str = "conv_id",
@@ -483,7 +479,6 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
     p = int(period)
     if p < 1:
         raise ValueError("period must be >= 1")
-    src = df.select(by, order_col, value_col)
 
     def snap6i(v):
         return int(math.floor(v * 1e6 + 0.5))
@@ -492,12 +487,7 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
         return math.floor(v * 1e6 + 0.5) / 1e6
 
     def fit(pdf):
-        pdf = (pdf.sort_values(order_col, kind="mergesort")
-                  .reset_index(drop=True))
         n = len(pdf)
-        if n > max_n:
-            raise ValueError(
-                f"holt_winters_backtest: {n} rows exceeds max_n={max_n}")
         key = pdf.iloc[0, 0]
         xi = pdf[value_col].to_numpy(dtype=np.int64)
         x = xi.astype(np.float64)
@@ -544,9 +534,10 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
              "smape": pd.array([smape], dtype="Float64"),
              "mase": pd.array([mase], dtype="Float64")})
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, n_eval long, mae double, "
-              "rmse double, smape double, mase double")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(df.select(by, order_col, value_col), by, order_col, fit,
+                      [by, "n_eval long", "mae double", "rmse double",
+                       "smape double", "mase double"],
+                      max_n=max_n, name="holt_winters_backtest")
 
 
 def theil_sen(tier: DataFrame, value_col: str = "turn_count",
@@ -581,15 +572,8 @@ def theil_sen(tier: DataFrame, value_col: str = "turn_count",
     import numpy as np
     import pandas as pd
 
-    src = tier.select(by, order_col, value_col)
-
     def fit(pdf):
-        pdf = pdf.sort_values(order_col, kind="mergesort")
         n = len(pdf)
-        if n > max_n:
-            raise ValueError(
-                f"theil_sen: series of {n} rows exceeds max_n={max_n}; "
-                "downsample (lttb/m4/cascade) before the O(n^2) fit")
         key = pdf.iloc[0, 0]
         if n < 2:
             # nullable Float64 -> Arrow null (a bare np.nan would emit
@@ -613,9 +597,10 @@ def theil_sen(tier: DataFrame, value_col: str = "turn_count",
         return pd.DataFrame({by: [key], "n_points": [n],
                              "slope": [sl], "intercept": [ic]})
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, n_points long, "
-              "slope double, intercept double")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(tier.select(by, order_col, value_col), by, order_col,
+                      fit, [by, "n_points long", "slope double",
+                            "intercept double"],
+                      max_n=max_n, name="theil_sen")
 
 
 def holt(df: DataFrame, value_col: str, alpha: float = 0.5,
@@ -639,11 +624,8 @@ def holt(df: DataFrame, value_col: str, alpha: float = 0.5,
 
     a, b1 = alpha, 1.0 - alpha
     b, b2 = beta, 1.0 - beta
-    src = df.select(by, order_col, value_col)
 
     def fit(pdf):
-        pdf = (pdf.sort_values(order_col, kind="mergesort")
-                  .reset_index(drop=True))
         x = pdf[value_col].to_numpy(dtype=np.float64)
         lv = np.empty(len(x), dtype=np.float64)
         tr = np.empty(len(x), dtype=np.float64)
@@ -653,16 +635,13 @@ def holt(df: DataFrame, value_col: str, alpha: float = 0.5,
             for i in range(1, len(x)):
                 lv[i] = a * x[i] + b1 * (lv[i - 1] + tr[i - 1])
                 tr[i] = b * (lv[i] - lv[i - 1]) + b2 * tr[i - 1]
-        pdf = pdf.copy()
         pdf["level"] = lv
         pdf["trend"] = tr
         return pdf
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, "
-              f"{order_col} {dict(src.dtypes)[order_col]}, "
-              f"{value_col} {dict(src.dtypes)[value_col]}, "
-              "level double, trend double")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(df.select(by, order_col, value_col), by, order_col, fit,
+                      [by, order_col, value_col, "level double",
+                       "trend double"], name="holt")
 
 
 def holt_winters(df: DataFrame, value_col: str, alpha: float = 0.5,
@@ -694,11 +673,8 @@ def holt_winters(df: DataFrame, value_col: str, alpha: float = 0.5,
     p = int(period)
     if p < 1:
         raise ValueError("period must be >= 1")
-    src = df.select(by, order_col, value_col)
 
     def fit(pdf):
-        pdf = (pdf.sort_values(order_col, kind="mergesort")
-                  .reset_index(drop=True))
         x = pdf[value_col].to_numpy(dtype=np.float64)
         n = len(x)
         lv = np.empty(n); tr = np.empty(n); se = np.empty(n)
@@ -709,12 +685,10 @@ def holt_winters(df: DataFrame, value_col: str, alpha: float = 0.5,
                 lv[i] = a * (x[i] - sp) + a1 * (lv[i - 1] + tr[i - 1])
                 tr[i] = b * (lv[i] - lv[i - 1]) + b1 * tr[i - 1]
                 se[i] = g * (x[i] - lv[i]) + g1 * sp
-        pdf = pdf.copy()
         pdf["level"] = lv; pdf["trend"] = tr; pdf["seasonal"] = se
         return pdf
 
-    schema = (f"{by} {dict(src.dtypes)[by]}, "
-              f"{order_col} {dict(src.dtypes)[order_col]}, "
-              f"{value_col} {dict(src.dtypes)[value_col]}, "
-              "level double, trend double, seasonal double")
-    return src.groupBy(by).applyInPandas(fit, schema)
+    return per_series(df.select(by, order_col, value_col), by, order_col, fit,
+                      [by, order_col, value_col, "level double",
+                       "trend double", "seasonal double"],
+                      name="holt_winters")

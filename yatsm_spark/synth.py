@@ -53,9 +53,11 @@ _BASE_TEXT = (
 
 
 def _zipf_len(u: np.ndarray, s: float = 1.2, lo: int = 2, hi: int = 50_000) -> np.ndarray:
-    """Inverse-CDF truncated Zipf-tail lengths: P(N >= n) ~ n^-(s-1)."""
-    n = np.ceil(lo * u ** (-1.0 / (s - 1.0))).astype(np.int64)
-    return np.clip(n, lo, hi)
+    """Inverse-CDF truncated Zipf-tail lengths: P(N >= n) ~ n^-(s-1).
+
+    Clipped in float before the int cast: for tiny u the raw length
+    overflows int64, and an overflowing cast is hardware-defined."""
+    return np.clip(np.ceil(lo * u ** (-1.0 / (s - 1.0))), lo, hi).astype(np.int64)
 
 
 def _gen_conv(conv_idx: int, seed: int, max_turns: int) -> pd.DataFrame:
