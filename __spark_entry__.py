@@ -15,14 +15,89 @@ order-dependent float (SURVEY.md §7.5.1).
 Transcript-based queries read the committed deterministic tables under
 data/transcripts_{sf}.parquet (synth.py, seed 42); oracle SQL reads the
 same files via read_parquet, so both sides see identical bytes.
+
+Registry: every module-level ``q_<name>(spark, sf_dir)`` function IS the
+query ``<name>`` — defining one registers it, and queries() lists no names
+of its own. Order: queries() leads with the queries a driver
+CORRECTNESS_r{N}.json file covered least recently (never-checked first,
+then by the highest N that lists them; ties in definition order), because
+the round driver verifies a fixed-size prefix (_driver_order). Tail: a
+query whose rows are returned globally sorted ends in
+``.transform(_ordered, *cols)``, the one materialize-then-sort step.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+
+from yatsm_spark.ingest import with_measures
+from yatsm_spark.operators.bloomjoin import bloom_join
+from yatsm_spark.operators.bpe import bpe_merges, bpe_token_counts
+from yatsm_spark.operators.cascade import cascade, merge_rollups, realtime_view
+from yatsm_spark.operators.changepoint import burst_intervals, pelt_changepoints
+from yatsm_spark.operators.changescore import (
+    change_scores, change_scores_multi, change_scores_post, predict_at)
+from yatsm_spark.operators.classify import (
+    classify_segments, crossval_report, segment_features, train_segment_classifier)
+from yatsm_spark.operators.codec import compact_chunks, decode_chunks, encode_chunks
+from yatsm_spark.operators.curate import (
+    curate_corpus, curate_training_set, datamix_report)
+from yatsm_spark.operators.decontam import decontaminate, decontaminate_fuzzy
+from yatsm_spark.operators.dedup import (
+    dedup_groups, dup_ngram_spans, exact_duplicates, minhash_candidates,
+    minhash_signatures, ngram_jaccard_pairs, paragraph_dedup, remove_dup_spans,
+    simhash16)
+from yatsm_spark.operators.downsample import lttb, m4_downsample, swing_door
+from yatsm_spark.operators.dsir import dsir_select, dsir_weights
+from yatsm_spark.operators.dtw import dtw_rerank
+from yatsm_spark.operators.joins import (
+    asof_join, asof_latest, broadcast_dim_join, changemap, interval_join,
+    pair_consecutive)
+from yatsm_spark.operators.kalman import kalman_smooth
+from yatsm_spark.operators.matrixprofile import (
+    ab_join_profile, left_matrix_profile, matrix_profile, mp_extrema)
+from yatsm_spark.operators.multimodal import (
+    as_media_table, audio_features, image_features, resize_images, sample_frames,
+    synth_jpeg_media, synth_png_media, synth_ppm_media, synth_video_media,
+    synth_wav_media)
+from yatsm_spark.operators.packing import chunk_documents, pack_documents
+from yatsm_spark.operators.pca import pca_project
+from yatsm_spark.operators.phenology import diurnal_stats
+from yatsm_spark.operators.pq import (
+    ivfpq_index, ivfpq_topk, pq_adc_topk, pq_encode, pq_train)
+from yatsm_spark.operators.ranking import bm25_topk, tfidf_topk
+from yatsm_spark.operators.retention import evict
+from yatsm_spark.operators.rollup import (
+    rollup_from_turns, rollup_from_turns_adaptive, rollup_from_turns_salted,
+    rollup_gapfilled, with_derived_stats)
+from yatsm_spark.operators.routing import route_range
+from yatsm_spark.operators.sampling import (
+    global_shuffle, sample_hash, sample_mixture, sample_stratified, weighted_sample)
+from yatsm_spark.operators.sessionize import (
+    cohort_retention, funnel, response_latency, session_stats, tool_transitions)
+from yatsm_spark.operators.similarity import (
+    cosine_topk, embedding_near_dups, hyperplane_buckets, ivf_assign, ivf_topk,
+    kmeans_codebook_table, lsh_candidate_pairs, semdedup, train_kmeans)
+from yatsm_spark.operators.sketches import (
+    cms_estimate, hdr_histogram, hdr_quantiles, hdr_quantiles_from_hist, heavy_hitters,
+    hll_distinct, hll_estimate, hll_registers)
+from yatsm_spark.operators.textstats import (
+    c4_clean, fingerprints, gopher_rules, lang_id, lm_unigram_score, quality_scores,
+    redact_pii, repetition_stats, token_counts)
+from yatsm_spark.operators.tsanalytics import (
+    acf, ccf, distribution_shift, ohlc, periodogram, sax_candidate_pairs, sax_paa,
+    sax_words, seasonal_decompose, state_durations, uptime_intervals)
+from yatsm_spark.operators.tsfuncs import (
+    alert_episodes, deriv, ewma, holt, holt_winters, holt_winters_backtest,
+    interp_linear, locf, pearson_corr, rate_per_sec, rolling_anomaly, theil_sen,
+    time_weighted_avg, topk_slots, total_increase)
+from yatsm_spark.operators.zorder import zorder_key
+from yatsm_spark.synth import transcripts_for_sf
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 TX_SF001 = os.path.join(REPO, "data", "transcripts_sf0.001.parquet")
@@ -58,10 +133,11 @@ ROLE_COUNTS_SQL = """
 """
 
 
-def _tx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from yatsm_spark.synth import transcripts_for_sf
-
-    return transcripts_for_sf(spark, sf_dir, data_root=os.path.join(REPO, "data"))
+def _tx(spark: SparkSession, sf_dir: str, convs: int | None = None) -> DataFrame:
+    """The transcript table for ``sf_dir``; with ``convs``, only the slice
+    of conversations numbered below it."""
+    tx = transcripts_for_sf(spark, sf_dir, data_root=os.path.join(REPO, "data"))
+    return tx if convs is None else tx.filter(F.col("conv_id") < f"conv{convs:08d}")
 
 
 def _tx_path(sf_dir: str) -> str:
@@ -73,19 +149,21 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Materialize a query's result once before its final global orderBy.
+def _ordered(df: DataFrame, *cols: str) -> DataFrame:
+    """A query's result, materialized once, then globally sorted by ``cols``.
 
+    Every query that ends in a global sort ends in ``.transform(_ordered,
+    *cols)``, so this is the one place a query result is materialized.
     A global sort range-partitions, and RangePartitioning draws its
     sample by EXECUTING the child plan — so every query that ends in
     .orderBy() was computing its whole pipeline TWICE (once for the
     sampling pass, once for the real exchange; measured 2x on tx_deriv /
-    tx_anomaly at sf0.1). A lazy localCheckpoint caches the child's
+    tx_anomaly at sf0.1). A lazy local checkpoint caches the child's
     partitions at first materialization (the sampling pass) and the sort
     exchange re-reads them — identical rows, one execution. The sort
     itself stays: ordered output is part of each query's contract.
     """
-    return df.localCheckpoint(eager=False)
+    return df.localCheckpoint(eager=False).orderBy(*cols)
 
 
 # ---------------------------------------------------------------------------
@@ -95,9 +173,6 @@ def _ckpt(df: DataFrame) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: gap-filled 1m rollup with derived stats on sf0.001
     transcripts (the engine's minimum E2E slice, SURVEY.md §7.2)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled, with_derived_stats
-
     tx = _tx(spark, "/root/testdata/sf0.001")
     return with_derived_stats(rollup_gapfilled(with_measures(tx), "1m"))
 
@@ -107,18 +182,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q_tx_rollup_1m(spark, sf_dir):
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-
     return rollup_from_turns(with_measures(_tx(spark, sf_dir)), "1m").drop("gap_filled")
 
 
 def q_tx_rollup_1m_salted(spark, sf_dir):
     """A6 salted two-phase rollup — must be BIT-IDENTICAL to the unsalted
     rollup (decomposable moments), so it shares tx_rollup_1m's oracle."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns_salted
-
     return rollup_from_turns_salted(with_measures(_tx(spark, sf_dir)), "1m").drop("gap_filled")
 
 
@@ -127,9 +196,6 @@ def q_tx_rollup_1m_adaptive(spark, sf_dir):
     values bit-identical to the unsalted rollup regardless of which keys
     the sample flags, so it shares tx_rollup_1m's oracle. Threshold tuned
     down so the sf0.01 table actually exercises the hot path."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns_adaptive
-
     return rollup_from_turns_adaptive(
         with_measures(_tx(spark, sf_dir)), "1m",
         hot_threshold=200, sample_fraction=0.05).drop("gap_filled")
@@ -141,10 +207,6 @@ def q_tx_reconcile_merge(spark, sf_dir):
     from the rest, the late turns are rolled up separately and merged.
     Oracle = plain rollup over ALL turns — merge(rollup(base),
     rollup(late)) must be bit-identical to rollup(base ∪ late)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.cascade import merge_rollups
-    from yatsm_spark.operators.rollup import rollup_from_turns
-
     tx = _tx(spark, sf_dir)
     base = tx.filter(F.col("turn_idx") % 7 != 0)
     late = tx.filter(F.col("turn_idx") % 7 == 0)
@@ -157,21 +219,14 @@ def q_tx_retention(spark, sf_dir):
     """Retention eviction (SURVEY.md §2.11): the RETAINED 1m rows after
     evicting slots older than 2 days (per-conv age) that sit at/below the
     finalized 1h watermark. Oracle recomputes the same predicate in SQL."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.retention import evict
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000050")
+    tx = _tx(spark, sf_dir, 50)
     filled = rollup_gapfilled(with_measures(tx), "1m")
     kept = evict(filled, "1m", "1h", ttl_seconds=2 * 86400)
     return kept.select("conv_id", "window_start", "turn_count", "gap_filled")
 
 
 def q_tx_gapfill_1m(spark, sf_dir):
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     out = rollup_gapfilled(with_measures(tx), "1m")
     return out.select("conv_id", "window_start", "turn_count", "token_len_sum",
                       "tool_call_count", "gap_filled")
@@ -184,11 +239,7 @@ def q_tx_periodogram(spark, sf_dir):
     (decimal partials); trig tables snapped to micro-units on the driver
     and shared verbatim with the oracle (tsanalytics.trig_micro_tables),
     so both engines evaluate one identical double expression."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsanalytics import periodogram
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     tier = rollup_gapfilled(with_measures(tx), "1m")
     return periodogram(tier, periods=(30, 60, 120, 240))
 
@@ -198,11 +249,7 @@ def q_tx_locf(spark, sf_dir):
     NULL-on-gap token_len_sum of the dense 1m tier (operators/tsfuncs.py
     — the TimescaleDB locf() surface). Pure window plan, integer types
     preserved, reusing the tier's conv partitioning."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsfuncs import locf
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     filled = rollup_gapfilled(with_measures(tx), "1m")
     return locf(filled, ["token_len_sum"]).select(
         "conv_id", "window_start", "turn_count", "token_len_sum", "gap_filled")
@@ -213,11 +260,7 @@ def q_tx_interp(spark, sf_dir):
     (TimescaleDB interpolate()). Real rows stay integer-valued; gap rows
     are prev + (next-prev)*frac from integer-exact operands, snapped to
     the 1e-6 grid identically in both engines."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsfuncs import interp_linear
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     filled = rollup_gapfilled(with_measures(tx), "1m")
     return interp_linear(filled, ["token_len_sum"]).select(
         "conv_id", "window_start", "turn_count", "token_len_sum", "gap_filled")
@@ -227,30 +270,20 @@ def q_tx_counter_increase(spark, sf_dir):
     """PromQL-style reset-aware increase() over a modular cumulative-turn
     counter (resets every 512 turns) replayed per conv on the sparse 1m
     tier. Integer math end to end."""
-    from pyspark.sql import Window
-
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import total_increase
-
     tier = rollup_from_turns(with_measures(_tx(spark, sf_dir)), "1m")
     w = (Window.partitionBy("conv_id").orderBy("window_start")
                .rowsBetween(Window.unboundedPreceding, 0))
     counter = tier.withColumn(
         "counter", F.pmod(F.sum("turn_count").over(w), F.lit(512)))
-    return total_increase(counter, "counter").transform(_ckpt).orderBy("conv_id")
+    return total_increase(counter, "counter").transform(_ordered, "conv_id")
 
 
 def q_tx_twa(spark, sf_dir):
     """Time-weighted average token_len_sum over the SPARSE 1m tier
     (TimescaleDB time_weight('locf')): each slot's value holds until the
     next real slot. decimal(38,0)-exact sums; one snapped division."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import time_weighted_avg
-
     tier = rollup_from_turns(with_measures(_tx(spark, sf_dir)), "1m")
-    return time_weighted_avg(tier, "token_len_sum").transform(_ckpt).orderBy("conv_id")
+    return time_weighted_avg(tier, "token_len_sum").transform(_ordered, "conv_id")
 
 
 def q_tx_lttb(spark, sf_dir):
@@ -261,13 +294,9 @@ def q_tx_lttb(spark, sf_dir):
     genuine differential over applyInPandas grouping/ordering/Arrow.
     Emitted values are the tier's original integers — floats only pick
     indices."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.downsample import lttb
-    from yatsm_spark.operators.rollup import rollup_from_turns
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     tier = rollup_from_turns(with_measures(tx), "1m")
-    return lttb(tier, "turn_count", 64).transform(_ckpt).orderBy("conv_id", "pos")
+    return lttb(tier, "turn_count", 64).transform(_ordered, "conv_id", "pos")
 
 
 def q_tx_m4(spark, sf_dir):
@@ -275,14 +304,10 @@ def q_tx_m4(spark, sf_dir):
     keep only the first/last/min/max points of the 1m series — the
     error-free line-chart reduction. Exact integer relation (ties break
     on earliest slot), pure window plan, <= 4 rows per bucket."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.downsample import m4_downsample
-    from yatsm_spark.operators.rollup import rollup_from_turns
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     tier = rollup_from_turns(with_measures(tx), "1m")
     return m4_downsample(tier, "turn_count", 3600) \
-        .transform(_ckpt).orderBy("conv_id", "window_start")
+        .transform(_ordered, "conv_id", "window_start")
 
 
 def q_tx_ewma(spark, sf_dir):
@@ -291,13 +316,9 @@ def q_tx_ewma(spark, sf_dir):
     the DuckDB oracle's recursive-CTE replay of the identical recurrence
     agrees to the LAST BIT — raw doubles, no snapping (same discipline
     as the tx_segments coefficient columns)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import ewma
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     tier = rollup_from_turns(with_measures(tx), "1h")
-    return ewma(tier, "turn_count", 0.25).transform(_ckpt).orderBy("conv_id", "window_start")
+    return ewma(tier, "turn_count", 0.25).transform(_ordered, "conv_id", "window_start")
 
 
 def q_tx_holt(spark, sf_dir):
@@ -307,13 +328,9 @@ def q_tx_holt(spark, sf_dir):
     recursive-CTE replay of the two-accumulator recurrence agrees with
     the raw double streams to the LAST BIT — no snapping (the tx_ewma
     discipline, extended to coupled accumulators)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import holt
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     tier = rollup_from_turns(with_measures(tx), "1h")
-    return holt(tier, "turn_count").transform(_ckpt).orderBy("conv_id", "window_start")
+    return holt(tier, "turn_count").transform(_ordered, "conv_id", "window_start")
 
 
 def q_tx_rate(spark, sf_dir):
@@ -321,18 +338,12 @@ def q_tx_rate(spark, sf_dir):
     counter divided by each conv's observed span. Integer numerator and
     denominator; the one division is 1e-6-snapped via the shared
     round-half-up floor formula."""
-    from pyspark.sql import Window
-
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import rate_per_sec
-
     tier = rollup_from_turns(with_measures(_tx(spark, sf_dir)), "1m")
     w = (Window.partitionBy("conv_id").orderBy("window_start")
                .rowsBetween(Window.unboundedPreceding, 0))
     counter = tier.withColumn(
         "counter", F.pmod(F.sum("turn_count").over(w), F.lit(512)))
-    return rate_per_sec(counter, "counter").transform(_ckpt).orderBy("conv_id")
+    return rate_per_sec(counter, "counter").transform(_ordered, "conv_id")
 
 
 def q_tx_deriv(spark, sf_dir):
@@ -341,12 +352,8 @@ def q_tx_deriv(spark, sf_dir):
     (order-independent — bit-identical at any parallelism), x shifted
     to seconds-since-first-slot, one snapped double division; the
     DuckDB oracle replays the identical tree over HUGEINT moments."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import deriv
-
     tier = rollup_from_turns(with_measures(_tx(spark, sf_dir)), "1m")
-    return deriv(tier, "token_len_sum").transform(_ckpt).orderBy("conv_id")
+    return deriv(tier, "token_len_sum").transform(_ordered, "conv_id")
 
 
 def q_tx_corr(spark, sf_dir):
@@ -354,13 +361,9 @@ def q_tx_corr(spark, sf_dir):
     token_len_sum on the 1h tier, from exact-decimal moments; the two
     variance terms are sqrt'd separately in double (their decimal
     product could overflow 38 digits), then one snapped division."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import pearson_corr
-
     tier = rollup_from_turns(with_measures(_tx(spark, sf_dir)), "1h")
     return pearson_corr(tier, "turn_count", "token_len_sum") \
-        .transform(_ckpt).orderBy("conv_id")
+        .transform(_ordered, "conv_id")
 
 
 def q_tx_anomaly(spark, sf_dir):
@@ -369,15 +372,11 @@ def q_tx_anomaly(spark, sf_dir):
     PURE integer arithmetic (cross-multiplied 3-sigma test) — zero
     float risk; the snapped zscore column evaluates the identical
     sqrt-of-exact-integers tree in both engines."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import rolling_anomaly
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     tier = rollup_from_turns(with_measures(tx), "1m") \
         .select("conv_id", "window_start", "turn_count")
     return rolling_anomaly(tier, "turn_count", k=30, sigma=3, min_n=8) \
-        .transform(_ckpt).orderBy("conv_id", "window_start")
+        .transform(_ordered, "conv_id", "window_start")
 
 
 def q_tx_alert_episodes(spark, sf_dir):
@@ -385,15 +384,11 @@ def q_tx_alert_episodes(spark, sf_dir):
     flagged runs): first/last slot, length, peak snapped zscore, value
     at the peak. Same rolling-anomaly base as tx_anomaly; the episode
     reduction is pure integer/snapped-value relational algebra."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import alert_episodes, rolling_anomaly
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     tier = rollup_from_turns(with_measures(tx), "1m") \
         .select("conv_id", "window_start", "turn_count")
     flags = rolling_anomaly(tier, "turn_count", k=30, sigma=3, min_n=8)
-    return alert_episodes(flags).transform(_ckpt).orderBy("conv_id", "episode_start")
+    return alert_episodes(flags).transform(_ordered, "conv_id", "episode_start")
 
 
 def q_tx_ohlc(spark, sf_dir):
@@ -401,21 +396,15 @@ def q_tx_ohlc(spark, sf_dir):
     (TimescaleDB candlestick_agg): open/close picked by min_by/max_by
     on the slot timestamp (unique per conv), high/low/count plain
     aggregates. Exact integer relation."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsanalytics import ohlc
-
     tier = rollup_from_turns(with_measures(_tx(spark, sf_dir)), "1m")
-    return ohlc(tier, "turn_count", 3600).transform(_ckpt).orderBy("conv_id", "bucket_start")
+    return ohlc(tier, "turn_count", 3600).transform(_ordered, "conv_id", "bucket_start")
 
 
 def q_tx_state_durations(spark, sf_dir):
     """State accounting (TimescaleDB state_agg): microseconds each conv
     spent in each role state (state holds until the next turn), plus
     event and run counts. Exact integer relation from unix_micros."""
-    from yatsm_spark.operators.tsanalytics import state_durations
-
-    return state_durations(_tx(spark, sf_dir)).transform(_ckpt).orderBy("conv_id", "state")
+    return state_durations(_tx(spark, sf_dir)).transform(_ordered, "conv_id", "state")
 
 
 def q_tx_uptime(spark, sf_dir):
@@ -424,22 +413,16 @@ def q_tx_uptime(spark, sf_dir):
     (gaps-and-islands with a RANGE-frame island id, deterministic under
     tied beats); per conv the interval count, live microseconds, and
     covered span."""
-    from yatsm_spark.operators.tsanalytics import uptime_intervals
-
-    return uptime_intervals(_tx(spark, sf_dir), 300).transform(_ckpt).orderBy("conv_id")
+    return uptime_intervals(_tx(spark, sf_dir), 300).transform(_ordered, "conv_id")
 
 
 def q_tx_acf(spark, sf_dir):
     """Autocorrelation (lags 1..5) of each conv's DENSE 1m turn_count
     series, from exact decimal moments with denominators cleared by
     n^2 — one snapped division per lag (see tsanalytics.acf)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsanalytics import acf
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     dense = rollup_gapfilled(with_measures(tx), "1m")
-    return acf(dense, "turn_count", 5).transform(_ckpt).orderBy("conv_id", "lag")
+    return acf(dense, "turn_count", 5).transform(_ordered, "conv_id", "lag")
 
 
 def q_tx_seasonal(spark, sf_dir):
@@ -447,14 +430,10 @@ def q_tx_seasonal(spark, sf_dir):
     phase-mean seasonal, residual) of each conv's DENSE 1h turn_count
     series, period 24. Every emitted float is ONE snapped division of
     exact integers (common denominator 48*C_p cleared)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsanalytics import seasonal_decompose
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     dense = rollup_gapfilled(with_measures(tx), "1h")
     return seasonal_decompose(dense, "turn_count", 24, 3600) \
-        .transform(_ckpt).orderBy("conv_id", "window_start")
+        .transform(_ordered, "conv_id", "window_start")
 
 
 def q_tx_ccf(spark, sf_dir):
@@ -462,14 +441,10 @@ def q_tx_ccf(spark, sf_dir):
     tool_call_count on each conv's DENSE 1h series — exact decimal
     moments, variance terms sqrt'd separately (tx_corr discipline),
     one snapped division per lag."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsanalytics import ccf
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     dense = rollup_gapfilled(with_measures(tx), "1h")
     return ccf(dense, "turn_count", "tool_call_count", 3) \
-        .transform(_ckpt).orderBy("conv_id", "lag")
+        .transform(_ordered, "conv_id", "lag")
 
 
 def q_tx_sax(spark, sf_dir):
@@ -477,13 +452,9 @@ def q_tx_sax(spark, sf_dir):
     DENSE 1m turn_count series: 16 PAA segments, alphabet 'abcd' at the
     Gaussian breakpoints. Long form (one row per segment); snapped PAA,
     deterministic letter binning over exact snapped inputs."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsanalytics import sax_paa
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     dense = rollup_gapfilled(with_measures(tx), "1m")
-    return sax_paa(dense, "turn_count", 16, 4).transform(_ckpt).orderBy("conv_id", "seg")
+    return sax_paa(dense, "turn_count", 16, 4).transform(_ordered, "conv_id", "seg")
 
 
 def q_tx_sax_neardups(spark, sf_dir):
@@ -493,17 +464,11 @@ def q_tx_sax_neardups(spark, sf_dir):
     locality bucket — identical words mean the series' coarse shapes
     match after z-normalization; zero-variance series (NULL word) never
     pair. Bucketed self-join, the lsh_pairs plan shape."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsanalytics import sax_words
-
-    from yatsm_spark.operators.tsanalytics import sax_candidate_pairs
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     dense = rollup_gapfilled(with_measures(tx), "1m")
     w = sax_words(dense, "turn_count", 16, 4)
     return sax_candidate_pairs(w, max_bucket=64) \
-        .transform(_ckpt).orderBy("conv_a", "conv_b")
+        .transform(_ordered, "conv_a", "conv_b")
 
 
 def q_tx_holtwinters(spark, sf_dir):
@@ -513,15 +478,11 @@ def q_tx_holtwinters(spark, sf_dir):
     oracle carries the seasonal state as a 24-slot ring list and
     replays the identical recurrence — raw doubles match to the LAST
     BIT (the tx_ewma/tx_holt discipline, third accumulator)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsfuncs import holt_winters
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     dense = rollup_gapfilled(with_measures(tx), "1h") \
         .select("conv_id", "window_start", "turn_count")
     return holt_winters(dense, "turn_count", period=24) \
-        .transform(_ckpt).orderBy("conv_id", "window_start")
+        .transform(_ordered, "conv_id", "window_start")
 
 
 def q_tx_dist_shift(spark, sf_dir):
@@ -531,14 +492,10 @@ def q_tx_dist_shift(spark, sf_dir):
     exactly, so the reduction is parallelism-invariant; no
     transcendentals anywhere (chi2 chosen over PSI/KL because ln is
     not correctly-rounded across engines)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsanalytics import distribution_shift
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     dense = rollup_gapfilled(with_measures(tx), "1m")
     return distribution_shift(dense, "turn_count", cap=64) \
-        .transform(_ckpt).orderBy("conv_id")
+        .transform(_ordered, "conv_id")
 
 
 def q_tx_hw_backtest(spark, sf_dir):
@@ -548,15 +505,11 @@ def q_tx_hw_backtest(spark, sf_dir):
     term is snapped to an INTEGER on the 1e-6 grid and summed exactly
     (Python ints vs HUGEINT), so each metric is one final snapped
     division of exact integers — no order-dependent float reduction."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsfuncs import holt_winters_backtest
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     dense = rollup_gapfilled(with_measures(tx), "1h") \
         .select("conv_id", "window_start", "turn_count")
     return holt_winters_backtest(dense, "turn_count", period=24) \
-        .transform(_ckpt).orderBy("conv_id")
+        .transform(_ordered, "conv_id")
 
 
 def q_events_funnel(spark, sf_dir):
@@ -565,11 +518,9 @@ def q_events_funnel(spark, sf_dir):
     chains within the horizon, plus the snapped conversion rate vs
     step 1. MIN-based semantics — order-independent, no windows, no
     UDFs."""
-    from yatsm_spark.operators.sessionize import funnel
-
     ev = _t(spark, sf_dir, "events")
     return funnel(ev, ["view", "click", "purchase"], horizon_s=86400) \
-        .transform(_ckpt).orderBy("step_ord")
+        .transform(_ordered, "step_ord")
 
 
 def q_events_cohorts(spark, sf_dir):
@@ -577,11 +528,9 @@ def q_events_cohorts(spark, sf_dir):
     bucketed by first-event week, per (cohort, week offset) the active
     count and snapped retention rate. MIN-based cohort assignment —
     order-independent, exact integers throughout."""
-    from yatsm_spark.operators.sessionize import cohort_retention
-
     ev = _t(spark, sf_dir, "events")
     return cohort_retention(ev, period_s=604800) \
-        .transform(_ckpt).orderBy("cohort_start", "period_offset")
+        .transform(_ordered, "cohort_start", "period_offset")
 
 
 def q_tx_realtime_view(spark, sf_dir):
@@ -590,17 +539,13 @@ def q_tx_realtime_view(spark, sf_dir):
     the raw tail at/after it. The oracle is the PLAIN full rollup — the
     strongest serve-path invariant: the split must reproduce the full
     tier bit-for-bit."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.cascade import realtime_view
-    from yatsm_spark.operators.rollup import rollup_from_turns
-
     wm = "2025-01-20 00:00:00"
     m = with_measures(_tx(spark, sf_dir))
     # the "stored" tier: built from history before the watermark, as a
     # materialized table would have been
     tier = rollup_from_turns(m.where(F.col("ts") < F.lit(wm)), "1m")
     return realtime_view(tier, m, "1m", wm) \
-        .transform(_ckpt).orderBy("conv_id", "window_start")
+        .transform(_ordered, "conv_id", "window_start")
 
 
 def q_tx_route(spark, sf_dir):
@@ -611,11 +556,6 @@ def q_tx_route(spark, sf_dir):
     the raw-turn aggregation over the same range: routed answers must be
     BIT-IDENTICAL because every tier moment is an exact decomposable
     long."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.cascade import cascade
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.routing import route_range
-
     wm = "2025-01-20 00:00:00"
     m = with_measures(_tx(spark, sf_dir))
     t1m = rollup_from_turns(m.where(F.col("ts") < F.lit(wm)), "1m")
@@ -623,7 +563,7 @@ def q_tx_route(spark, sf_dir):
              "1d": cascade(t1m, "1m", "1d")}
     return route_range(tiers, "2025-01-02 00:30:00", "2025-01-22 02:03:00",
                        fresh_measures=m, watermark=wm) \
-        .transform(_ckpt).orderBy("conv_id")
+        .transform(_ordered, "conv_id")
 
 
 def q_tx_route_chunks(spark, sf_dir):
@@ -634,12 +574,6 @@ def q_tx_route_chunks(spark, sf_dir):
     anti-join — the [cutoff, watermark) overlap window is double-covered
     and must not double-count). Oracle: the raw-turn aggregation — the
     routed+decoded answer must be BIT-IDENTICAL."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.cascade import cascade
-    from yatsm_spark.operators.codec import encode_chunks
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.routing import route_range
-
     wm, evict_cutoff = "2025-01-20 00:00:00", "2025-01-15 00:00:00"
     m = with_measures(_tx(spark, sf_dir))
     t1m = rollup_from_turns(m.where(F.col("ts") < F.lit(wm)), "1m")
@@ -649,7 +583,7 @@ def q_tx_route_chunks(spark, sf_dir):
              "1d": cascade(t1m, "1m", "1d")}
     return route_range(tiers, "2025-01-05 00:30:00", "2025-01-22 02:03:00",
                        fresh_measures=m, watermark=wm, chunks=chunks) \
-        .transform(_ckpt).orderBy("conv_id")
+        .transform(_ordered, "conv_id")
 
 
 def q_tx_compact(spark, sf_dir):
@@ -660,12 +594,6 @@ def q_tx_compact(spark, sf_dir):
     and the same straddling range query as tx_route_chunks is served
     through the COMPACTED table. Oracle: the raw-turn aggregation —
     routed + compacted + decoded must stay BIT-IDENTICAL."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.cascade import cascade
-    from yatsm_spark.operators.codec import compact_chunks, encode_chunks
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.routing import route_range
-
     wm, evict_cutoff = "2025-01-20 00:00:00", "2025-01-15 00:00:00"
     m = with_measures(_tx(spark, sf_dir))
     t1m = rollup_from_turns(m.where(F.col("ts") < F.lit(wm)), "1m")
@@ -677,7 +605,7 @@ def q_tx_compact(spark, sf_dir):
              "1d": cascade(t1m, "1m", "1d")}
     return route_range(tiers, "2025-01-05 00:30:00", "2025-01-22 02:03:00",
                        fresh_measures=m, watermark=wm, chunks=chunks) \
-        .transform(_ckpt).orderBy("conv_id")
+        .transform(_ordered, "conv_id")
 
 
 def q_tx_left_profile(spark, sf_dir):
@@ -686,15 +614,11 @@ def q_tx_left_profile(spark, sf_dir):
     detector; scores never change once emitted, so the streaming twin
     achieves full bit parity (pytest). Oracle: same-kernel twin
     (data/golden_lp_sf0.01.parquet)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.matrixprofile import left_matrix_profile
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     dense = rollup_gapfilled(with_measures(tx), "1h") \
         .select("conv_id", "window_start", "turn_count")
     return left_matrix_profile(dense, m=12, w_hist=48) \
-        .transform(_ckpt).orderBy("conv_id", "idx")
+        .transform(_ordered, "conv_id", "idx")
 
 
 def q_tx_ab_profile(spark, sf_dir):
@@ -704,15 +628,11 @@ def q_tx_ab_profile(spark, sf_dir):
     conv00000014's series. Query series broadcast once; integer
     moments/dot products, floats only elementwise. Oracle: same-kernel
     twin (data/golden_ab_sf0.01.parquet)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.matrixprofile import ab_join_profile
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     dense = rollup_gapfilled(with_measures(tx), "1h") \
         .select("conv_id", "window_start", "turn_count")
     return ab_join_profile(dense, "conv00000014", m=12) \
-        .transform(_ckpt).orderBy("conv_id")
+        .transform(_ordered, "conv_id")
 
 
 def q_tx_swing(spark, sf_dir):
@@ -721,15 +641,11 @@ def q_tx_swing(spark, sf_dir):
     dropped, with reconstruction within 2E (exact-integer-verified in
     pytest). All door decisions are integer cross-multiplications.
     Oracle: same-kernel twin (data/golden_swing_sf0.01.parquet)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.downsample import swing_door
-    from yatsm_spark.operators.rollup import rollup_from_turns
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     tier = rollup_from_turns(with_measures(tx), "1m") \
         .select("conv_id", "window_start", "turn_count")
     return swing_door(tier, "turn_count", e=2) \
-        .transform(_ckpt).orderBy("conv_id", "pos")
+        .transform(_ordered, "conv_id", "pos")
 
 
 def q_tx_topk_slots(spark, sf_dir):
@@ -737,14 +653,10 @@ def q_tx_topk_slots(spark, sf_dir):
     on ties) — rank-limit with a partial WindowGroupLimit below the
     exchange, so a hot conv ships k x maps rows, never its full
     series."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import topk_slots
-
     tier = rollup_from_turns(with_measures(_tx(spark, sf_dir)), "1m") \
         .select("conv_id", "window_start", "turn_count")
     return topk_slots(tier, "turn_count", k=5) \
-        .transform(_ckpt).orderBy("conv_id", "rank")
+        .transform(_ordered, "conv_id", "rank")
 
 
 def q_tx_bursts(spark, sf_dir):
@@ -752,11 +664,9 @@ def q_tx_bursts(spark, sf_dir):
     tier, no binning): intervals where the turn rate jumps to 3x the
     conv's own base rate. Oracle: numpy twin on the same sorted
     arrival times (data/golden_bursts_sf0.01.parquet)."""
-    from yatsm_spark.operators.changepoint import burst_intervals
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000300")
+    tx = _tx(spark, sf_dir, 300)
     return burst_intervals(tx, s=3.0, gamma=1.0) \
-        .transform(_ckpt).orderBy("conv_id", "burst_ord")
+        .transform(_ordered, "conv_id", "burst_ord")
 
 
 def q_tx_dtw_rerank(spark, sf_dir):
@@ -766,28 +676,19 @@ def q_tx_dtw_rerank(spark, sf_dir):
     in the distance. Oracle: a twin that recomputes the words with the
     proven-equal SQL and replays the SAME integer kernel
     (data/golden_dtw_sf0.01.parquet)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.dtw import dtw_rerank
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-    from yatsm_spark.operators.tsanalytics import sax_words
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     dense = rollup_gapfilled(with_measures(tx), "1h") \
         .select("conv_id", "window_start", "turn_count")
-    from yatsm_spark.operators.tsanalytics import sax_candidate_pairs
-
     w = sax_words(dense, "turn_count", 16, 4)
     pairs = sax_candidate_pairs(w, max_bucket=64) \
         .select("conv_a", "conv_b")
-    return dtw_rerank(dense, pairs).transform(_ckpt).orderBy("conv_a", "conv_b")
+    return dtw_rerank(dense, pairs).transform(_ordered, "conv_a", "conv_b")
 
 
 def q_tx_response_latency(spark, sf_dir):
     """Per-conv response-latency profile: user turn -> nearest following
     assistant turn, exact integer microseconds; median/p90 are SELECTION
     ranks in integer math (the cross-engine median discipline)."""
-    from yatsm_spark.operators.sessionize import response_latency
-
     return response_latency(_tx(spark, sf_dir))
 
 
@@ -795,8 +696,6 @@ def q_tx_tool_transitions(spark, sf_dir):
     """First-order Markov transition counts over tool-call sequences
     (LEAD per conv, non-tool turns skipped, terminal NULL included);
     p_next is one round-6 exact integer division per row."""
-    from yatsm_spark.operators.sessionize import tool_transitions
-
     return tool_transitions(_tx(spark, sf_dir))
 
 
@@ -807,11 +706,7 @@ def q_tx_kalman(spark, sf_dir):
     pure-numpy twin driven outside Spark (tools/make_goldens.py::
     kalman_twin, data/golden_kalman_sf0.01.parquet), so the row is a
     genuine differential over applyInPandas grouping/ordering/Arrow."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.kalman import kalman_smooth
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     dense = rollup_gapfilled(with_measures(tx), "1h") \
         .select("conv_id", "window_start", "turn_count")
     return kalman_smooth(dense, "turn_count")
@@ -824,15 +719,11 @@ def q_tx_pelt(spark, sf_dir):
     pure-numpy twin driven outside Spark (tools/make_goldens.py::
     pelt_twin, data/golden_pelt_sf0.01.parquet); optimality itself is
     pinned separately by a brute-force exhaustive-segmentation pytest."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.changepoint import pelt_changepoints
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     dense = rollup_gapfilled(with_measures(tx), "1h") \
         .select("conv_id", "window_start", "turn_count")
     return pelt_changepoints(dense, "turn_count") \
-        .transform(_ckpt).orderBy("conv_id", "cp_ord")
+        .transform(_ordered, "conv_id", "cp_ord")
 
 
 def q_tx_matrix_profile(spark, sf_dir):
@@ -842,14 +733,10 @@ def q_tx_matrix_profile(spark, sf_dir):
     (tools/make_goldens.py::matrix_profile_twin,
     data/golden_mp_sf0.01.parquet) — same kernel bits on the same dense
     series, so the row is a Spark-vs-numpy plumbing differential."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.matrixprofile import matrix_profile
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     dense = rollup_gapfilled(with_measures(tx), "1h") \
         .select("conv_id", "window_start", "turn_count")
-    return matrix_profile(dense, m=12).transform(_ckpt).orderBy("conv_id", "idx")
+    return matrix_profile(dense, m=12).transform(_ordered, "conv_id", "idx")
 
 
 def q_tx_mp_extrema(spark, sf_dir):
@@ -857,10 +744,8 @@ def q_tx_mp_extrema(spark, sf_dir):
     min_by/max_by with (mp, idx) tie-break keys, deterministic at any
     parallelism. Oracle: the identical reduction in SQL over the
     matrix-profile golden."""
-    from yatsm_spark.operators.matrixprofile import mp_extrema
-
     return mp_extrema(q_tx_matrix_profile(spark, sf_dir)) \
-        .transform(_ckpt).orderBy("conv_id")
+        .transform(_ordered, "conv_id")
 
 
 def q_tx_theilsen(spark, sf_dir):
@@ -868,14 +753,10 @@ def q_tx_theilsen(spark, sf_dir):
     pairwise slopes + lower-median intercept from the snapped slope —
     pure selection medians (no interpolation arithmetic), so both
     engines pick the identical correctly-rounded doubles."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns
-    from yatsm_spark.operators.tsfuncs import theil_sen
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     tier = rollup_from_turns(with_measures(tx), "1h") \
         .select("conv_id", "window_start", "turn_count")
-    return theil_sen(tier, "turn_count").transform(_ckpt).orderBy("conv_id")
+    return theil_sen(tier, "turn_count").transform(_ordered, "conv_id")
 
 
 def q_tx_hdr_cascade(spark, sf_dir):
@@ -886,42 +767,28 @@ def q_tx_hdr_cascade(spark, sf_dir):
     tier. The oracle builds the per-conv histogram DIRECTLY from raw
     turns — passing proves sketch mergeability exactly (the A7 cascade
     invariant, applied to sketches)."""
-    from yatsm_spark.operators.sketches import (hdr_histogram,
-                                                hdr_quantiles_from_hist)
-
     tx = _tx(spark, sf_dir).withColumn("tlen", F.length("text"))
     fine = hdr_histogram(tx, ["conv_id", "role"], "tlen")
     merged = fine.groupBy("conv_id", "bucket") \
                  .agg(F.sum("cnt").alias("cnt"))
     return hdr_quantiles_from_hist(merged, ["conv_id"]) \
-        .transform(_ckpt).orderBy("conv_id", "q_label")
+        .transform(_ordered, "conv_id", "q_label")
 
 
 def q_tx_cascade_1h(spark, sf_dir):
     """Cascade 1m->1h from partial aggregates; oracle computes 1h DIRECTLY
     from raw turns — passing means the cascade is exact (A7 invariant)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.cascade import cascade
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
     filled = rollup_gapfilled(with_measures(_tx(spark, sf_dir)), "1m")
     return cascade(filled, "1m", "1h").filter("turn_count > 0").drop("gap_filled")
 
 
 def q_tx_cascade_1d(spark, sf_dir):
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.cascade import cascade
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
     filled = rollup_gapfilled(with_measures(_tx(spark, sf_dir)), "1m")
     return (cascade(cascade(filled, "1m", "1h"), "1h", "1d")
             .filter("turn_count > 0").drop("gap_filled"))
 
 
 def q_tx_derived_stats_1h(spark, sf_dir):
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.rollup import rollup_from_turns, with_derived_stats
-
     r = with_derived_stats(rollup_from_turns(with_measures(_tx(spark, sf_dir)), "1h"))
     return r.select(
         "conv_id", "window_start", "turn_count",
@@ -934,7 +801,7 @@ def q_tx_derived_stats_1h(spark, sf_dir):
 def q_tx_conv_hash(spark, sf_dir):
     """Text-equality invariant (input_hint): per-conv sha256 chain over
     texts in stable (conv_id, turn_idx) order."""
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     return (
         tx.select("conv_id", F.struct("turn_idx", F.sha2("text", 256).alias("h")).alias("th"))
         .groupBy("conv_id")
@@ -944,8 +811,6 @@ def q_tx_conv_hash(spark, sf_dir):
 
 
 def q_tx_changemap(spark, sf_dir):
-    from yatsm_spark.operators.joins import changemap
-
     return changemap(_tx(spark, sf_dir), "conv_id", "ts") \
         .withColumnRenamed("first_change", "first_ts") \
         .withColumnRenamed("last_change", "last_ts") \
@@ -955,8 +820,6 @@ def q_tx_changemap(spark, sf_dir):
 def q_tx_asof(spark, sf_dir):
     """J3 as-of: last turn at/before a fixed instant per conv
     (deterministic pick: ts desc, then turn_idx desc on ties)."""
-    from yatsm_spark.operators.joins import asof_latest
-
     tx = _tx(spark, sf_dir).select("conv_id", "turn_idx", "role", "ts")
     return asof_latest(tx, "conv_id", "ts", "2025-01-16 00:00:00",
                        tie_break=["turn_idx"])
@@ -969,8 +832,6 @@ def q_tx_asof_tool(spark, sf_dir):
     the oracle is DuckDB's NATIVE ASOF JOIN — a genuinely independent
     implementation of the same semantics. Right side pre-aggregated to
     one row per (conv, ts) in both engines (the determinism contract)."""
-    from yatsm_spark.operators.joins import asof_join
-
     tx = _tx(spark, sf_dir)
     left = tx.filter(F.col("role") == "tool") \
              .select("conv_id", "turn_idx", "ts")
@@ -979,7 +840,7 @@ def q_tx_asof_tool(spark, sf_dir):
                .agg(F.max("turn_idx").alias("asst_turn")))
     return asof_join(left, right, "conv_id", "ts", "rts", ["asst_turn"],
                      direction="backward", tolerance_secs=600) \
-        .transform(_ckpt).orderBy("conv_id", "turn_idx")
+        .transform(_ordered, "conv_id", "turn_idx")
 
 
 def q_tx_asof_next(spark, sf_dir):
@@ -987,8 +848,6 @@ def q_tx_asof_next(spark, sf_dir):
     (exact-ts matches count, pandas/DuckDB convention). Same
     union-stream single-shuffle plan; DuckDB native ASOF (ts <= rts)
     oracle."""
-    from yatsm_spark.operators.joins import asof_join
-
     tx = _tx(spark, sf_dir)
     left = tx.filter(F.col("role") == "tool") \
              .select("conv_id", "turn_idx", "ts")
@@ -997,7 +856,7 @@ def q_tx_asof_next(spark, sf_dir):
                .agg(F.max("turn_idx").alias("next_user_turn")))
     return asof_join(left, right, "conv_id", "ts", "rts",
                      ["next_user_turn"], direction="forward") \
-        .transform(_ckpt).orderBy("conv_id", "turn_idx")
+        .transform(_ordered, "conv_id", "turn_idx")
 
 
 def q_tx_hll_cascade(spark, sf_dir):
@@ -1008,19 +867,15 @@ def q_tx_hll_cascade(spark, sf_dir):
     the per-conv registers DIRECTLY and must agree exactly (the A7
     invariant applied to HLL, the distinct-count dual of
     tx_hdr_cascade)."""
-    from yatsm_spark.operators.sketches import hll_estimate, hll_registers
-
     tx = _tx(spark, sf_dir)
     fine = hll_registers(tx, ["conv_id", "role"], "text")
     merged = fine.groupBy("conv_id", "bucket") \
                  .agg(F.max("register").alias("register"))
-    return hll_estimate(merged, ["conv_id"]).transform(_ckpt).orderBy("conv_id")
+    return hll_estimate(merged, ["conv_id"]).transform(_ordered, "conv_id")
 
 
 def q_tx_interval_join(spark, sf_dir):
     """J1 interval join: turns inside [first tool-call, +10min] per conv."""
-    from yatsm_spark.operators.joins import interval_join
-
     tx = _tx(spark, sf_dir)
     iv = (
         tx.filter(F.col("tool").isNotNull())
@@ -1045,11 +900,7 @@ def q_tx_segments(spark, sf_dir):
     `coef` is flattened to coef_0..coef_3 raw doubles: both sides run the
     same kernel bits on the same series, so values are BIT-identical — no
     rounding needed (and none wanted: rounding modes could differ)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.changescore import change_scores
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000300")
+    tx = _tx(spark, sf_dir, 300)
     filled = rollup_gapfilled(with_measures(tx), "1m")
     segs = change_scores(filled)
     return segs.select(
@@ -1069,20 +920,11 @@ def q_tx_classify(spark, sf_dir):
     segs is cached: training AND prediction both traverse the CCDC
     applyInPandas stage, which would otherwise execute twice per run
     (round-2 VERDICT wrong #3)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.changescore import change_scores
-    from yatsm_spark.operators.classify import (
-        classify_segments,
-        segment_features,
-        train_segment_classifier,
-    )
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     segs = change_scores(rollup_gapfilled(with_measures(tx), "1m")).cache()
     # labels: deterministic rule over raw conv activity, training half only
     labels = (
-        tx.filter(F.col("conv_id") < "conv00000100")
+        _tx(spark, sf_dir, 100)
         .groupBy("conv_id").agg(F.count(F.lit(1)).alias("n"))
         .select("conv_id",
                 F.when(F.col("n") >= 400, F.lit("active")).otherwise(F.lit("light"))
@@ -1101,11 +943,7 @@ def q_tx_segments_multi(spark, sf_dir):
     — a true Spark-vs-numpy differential over the multi-measure
     applyInPandas path. Per-band arrays flattened to scalar columns for
     the driver's value hash."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.changescore import change_scores_multi
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     filled = rollup_gapfilled(with_measures(tx), "1m")
     segs = change_scores_multi(filled, ["turn_count", "tool_call_count"])
     cols = [F.col("conv_id"), F.col("segment_id"),
@@ -1126,11 +964,7 @@ def q_tx_commission_omission(spark, sf_dir):
     Spark-free numpy twin (tools/make_goldens.py postprocess_twin,
     data/golden_postprocess_sf0.01.parquet) — same kernel bits on the same
     series, so every double is bit-identical and returned raw."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.changescore import change_scores_post
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     filled = rollup_gapfilled(with_measures(tx), "1m")
     post = change_scores_post(filled, commission_crit=3.0)
     return post.select(
@@ -1147,11 +981,7 @@ def q_tx_refit(spark, sf_dir):
     aligned 1:1 with the original change_scores segments — pins the
     merge-disabled code path against the same twin machinery
     (data/golden_refit_sf0.01.parquet)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.changescore import change_scores_post
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     filled = rollup_gapfilled(with_measures(tx), "1m")
     post = change_scores_post(filled, commission_crit=None)
     return post.select(
@@ -1174,11 +1004,7 @@ def q_tx_predict(spark, sf_dir):
     and folded JVM-side in array order. Oracle: the identical
     left-associated sum over the segments-twin golden with X(d) literals
     computed by the same kernel call; rounded 6dp on both sides."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.changescore import change_scores, predict_at
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000300")
+    tx = _tx(spark, sf_dir, 300)
     segs = change_scores(rollup_gapfilled(with_measures(tx), "1m"))
     pred = predict_at(segs, PREDICT_AT)
     return pred.select("conv_id", "segment_id",
@@ -1192,11 +1018,7 @@ def q_tx_segments_pheno(spark, sf_dir):
     NaN-able doubles (peak_rate on empty profiles, pheno_cor on
     zero-variance segments) are mapped NaN->NULL identically on both
     sides so the value hash never sees a NaN."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.changescore import change_scores
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     filled = rollup_gapfilled(with_measures(tx), "1m")
     segs = change_scores(filled, phenology=True)
 
@@ -1218,15 +1040,10 @@ def q_tx_crossval(spark, sf_dir):
     (data/golden_crossval_sf0.01.parquet) — the differential covers the
     Spark lineage (CCDC segments -> features -> bounded sorted sample);
     the fold scores are exact doubles on both sides."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.changescore import change_scores
-    from yatsm_spark.operators.classify import crossval_report, segment_features
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000200")
+    tx = _tx(spark, sf_dir, 200)
     segs = change_scores(rollup_gapfilled(with_measures(tx), "1m"))
     labels = (
-        tx.filter(F.col("conv_id") < "conv00000100")
+        _tx(spark, sf_dir, 100)
         .groupBy("conv_id").agg(F.count(F.lit(1)).alias("n"))
         .select("conv_id",
                 F.when(F.col("n") >= 400, F.lit("active")).otherwise(F.lit("light"))
@@ -1239,11 +1056,7 @@ def q_tx_crossval(spark, sf_dir):
 def q_tx_phenology(spark, sf_dir):
     """A3 relational form: per-conv long-term-mean diurnal profile stats
     over the gap-filled 1m tier (gap slots are real zero observations)."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.phenology import diurnal_stats
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000100")
+    tx = _tx(spark, sf_dir, 100)
     filled = rollup_gapfilled(with_measures(tx), "1m")
     return diurnal_stats(filled, "turn_count")
 
@@ -1252,11 +1065,7 @@ def q_tx_codec_roundtrip(spark, sf_dir):
     """Gorilla chunks decoded back to rollup rows; oracle recomputes the
     same gap-filled rollup in SQL — passing proves encode∘decode == id
     THROUGH the engine, not just in the kernel."""
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.codec import decode_chunks, encode_chunks
-    from yatsm_spark.operators.rollup import rollup_gapfilled
-
-    tx = _tx(spark, sf_dir).filter(F.col("conv_id") < "conv00000050")
+    tx = _tx(spark, sf_dir, 50)
     filled = rollup_gapfilled(with_measures(tx), "1m")
     back = decode_chunks(encode_chunks(filled, "1m"))
     return back.select("conv_id", "window_start", "turn_count", "token_len_sum",
@@ -1295,8 +1104,6 @@ def q_events_gapfill_1h(spark, sf_dir):
     slot = F.timestamp_seconds((F.unix_timestamp("ts") / 3600).cast("long") * 3600)
     r = ev.groupBy("user_id", slot.alias("window_start")).agg(
         F.count(F.lit(1)).alias("n_events"))
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id")
     grid = (
         r.withColumn("mn", F.min("window_start").over(w))
@@ -1331,8 +1138,6 @@ def q_tpch_q1(spark, sf_dir):
 
 
 def q_orders_changemap(spark, sf_dir):
-    from yatsm_spark.operators.joins import changemap
-
     return changemap(_t(spark, sf_dir, "orders"), "o_custkey", "o_orderdate") \
         .withColumnRenamed("first_change", "first_order") \
         .withColumnRenamed("last_change", "last_order") \
@@ -1340,8 +1145,6 @@ def q_orders_changemap(spark, sf_dir):
 
 
 def q_orders_asof(spark, sf_dir):
-    from yatsm_spark.operators.joins import asof_latest
-
     o = _t(spark, sf_dir, "orders")
     return asof_latest(o, "o_custkey", "o_orderdate", "1997-01-01",
                        tie_break=["o_orderkey"]).select(
@@ -1350,12 +1153,8 @@ def q_orders_asof(spark, sf_dir):
 
 def q_orders_pairing(spark, sf_dir):
     """J5: consecutive orders per customer via LEAD; gap in days."""
-    from yatsm_spark.operators.joins import pair_consecutive
-
     o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderdate")
     # LEAD frame must be deterministic under ties: order by (date, key)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
         o.withColumn("next_orderkey", F.lead("o_orderkey").over(w))
@@ -1366,8 +1165,6 @@ def q_orders_pairing(spark, sf_dir):
 
 def q_region_rollup(spark, sf_dir):
     """J2 broadcast dims: customer ⨝ nation ⨝ region, acctbal in cents."""
-    from yatsm_spark.operators.joins import broadcast_dim_join
-
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region")
@@ -1392,8 +1189,6 @@ def q_order_lineitem_interval(spark, sf_dir):
 
 def q_top_customers(spark, sf_dir):
     """O-class top-k per group: 3 richest customers per market segment."""
-    from pyspark.sql import Window
-
     c = _t(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey").asc())
@@ -1409,20 +1204,14 @@ def q_top_customers(spark, sf_dir):
 
 
 def q_dedup_exact(spark, sf_dir):
-    from yatsm_spark.operators.dedup import exact_duplicates
-
     return exact_duplicates(_t(spark, sf_dir, "documents"))
 
 
 def q_minhash_sigs(spark, sf_dir):
-    from yatsm_spark.operators.dedup import minhash_signatures
-
     return minhash_signatures(_t(spark, sf_dir, "documents"), n_hashes=4)
 
 
 def q_minhash_pairs(spark, sf_dir):
-    from yatsm_spark.operators.dedup import minhash_candidates
-
     return minhash_candidates(_t(spark, sf_dir, "documents"), n_hashes=4, bands=2)
 
 
@@ -1432,14 +1221,10 @@ def q_dup_ngram_spans(spark, sf_dir):
     [pos, pos+5) spans interval-merged into covered_tokens. Oracle: the
     identical positional-gram + HAVING + running-max interval merge in
     DuckDB; dup_ratio is a round-6 snapped exact integer division."""
-    from yatsm_spark.operators.dedup import dup_ngram_spans
-
     return dup_ngram_spans(_t(spark, sf_dir, "documents"), n=5, min_count=2)
 
 
 def q_ngram_jaccard(spark, sf_dir):
-    from yatsm_spark.operators.dedup import ngram_jaccard_pairs
-
     return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.2)
 
 
@@ -1448,8 +1233,6 @@ def q_text_repetition(spark, sf_dir):
     (pure array Catalyst) + most-frequent-word share (two hash-aggs on the
     doc key). Ratios are single IEEE divisions of small ints — exact and
     engine-portable, no rounding needed."""
-    from yatsm_spark.operators.textstats import repetition_stats
-
     return repetition_stats(_t(spark, sf_dir, "documents"))
 
 
@@ -1460,8 +1243,6 @@ def q_pii_redact(spark, sf_dir):
     identical augmented string, then the oracle compares match counts AND
     the redacted text BYTE-FOR-BYTE, pinning Java-regex vs RE2 dialect
     alignment of the shared patterns (explicit classes, no lookaround)."""
-    from yatsm_spark.operators.textstats import redact_pii
-
     d = F.col("doc_id")
     sid = d.cast("string")
     aug = F.concat(
@@ -1485,8 +1266,6 @@ def q_dedup_components(spark, sf_dir):
     where min-label propagation needs diameter rounds), then a corpus-wide
     keep/drop decision per doc (canonical = component min). Oracle: DuckDB
     recursive CTE computing min reachable id over the identical pair SQL."""
-    from yatsm_spark.operators.dedup import dedup_groups, ngram_jaccard_pairs
-
     docs = _t(spark, sf_dir, "documents")
     return dedup_groups(docs, ngram_jaccard_pairs(docs, threshold=0.2))
 
@@ -1497,8 +1276,6 @@ def q_tfidf_topk(spark, sf_dir):
     exactly the idf order restricted to the doc where tf-idf is strict —
     so membership never rides on cross-engine float ordering; the ln()-
     bearing score itself is snapped to the 1e-6 grid in both engines."""
-    from yatsm_spark.operators.ranking import tfidf_topk
-
     return tfidf_topk(_t(spark, sf_dir, "documents"), k=5)
 
 
@@ -1513,8 +1290,6 @@ def q_bm25_topk(spark, sf_dir):
     reduce order cannot perturb the total, top-k cut on the integer
     score key + doc_id tie-break. orderBy+limit = TakeOrdered, no full
     sort shuffle."""
-    from yatsm_spark.operators.ranking import bm25_topk
-
     return bm25_topk(_t(spark, sf_dir, "documents"), BM25_QUERY, k=25)
 
 
@@ -1522,8 +1297,6 @@ def q_sample_stratified(spark, sf_dir):
     """Deterministic per-source quota sample (10/stratum) by Knuth-hash
     order — no RNG state, bit-reproducible, extensible (rank<=m prefix is
     the m-sample). One shuffle on the stratum key."""
-    from yatsm_spark.operators.sampling import sample_stratified
-
     return sample_stratified(_t(spark, sf_dir, "documents"),
                              n_per_stratum=10).select(
         "doc_id", "source", "draw_rank")
@@ -1536,8 +1309,6 @@ def q_curate_training(spark, sf_dir):
     contaminated — thresholds chosen to FIRE on this corpus). Oracle:
     the three signal pipelines replayed as CTEs over the same Knuth
     split and joined."""
-    from yatsm_spark.operators.curate import curate_training_set
-
     return curate_training_set(_t(spark, sf_dir, "documents"),
                                bench_rate=0.05, dup_ratio_max=0.5,
                                min_avg_logprob=-3.45, fuzzy_threshold=0.5)
@@ -1548,8 +1319,6 @@ def q_lm_score(spark, sf_dir):
     LM avg log-prob per doc. ln() snapped to integer micro-units per
     occurrence before the per-doc sum (BM25 discipline), final mean is
     one round-6 snapped division — cross-engine value-exact."""
-    from yatsm_spark.operators.textstats import lm_unigram_score
-
     return lm_unigram_score(_t(spark, sf_dir, "documents"))
 
 
@@ -1562,8 +1331,6 @@ def q_gopher_rules(spark, sf_dir):
     vocabulary carries at most one Gopher stop word per doc — and a
     constant flag hides rule regressions; with 5/1 the corpus splits
     ~76/24 keep/drop)."""
-    from yatsm_spark.operators.textstats import gopher_rules
-
     return gopher_rules(_t(spark, sf_dir, "documents"), min_words=5,
                         min_stops=1)
 
@@ -1575,8 +1342,6 @@ def q_c4_clean(spark, sf_dir):
     single-line, so the query composes line-structured input
     deterministically in BOTH engines; the substr line makes the kept
     count (and the page keep flag) vary per doc."""
-    from yatsm_spark.operators.textstats import c4_clean
-
     d = _t(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(F.col("text"), F.lit(".\n"),
@@ -1596,8 +1361,6 @@ def q_para_dedup(spark, sf_dir):
     BOTH engines: [own text, shared boilerplate footer, own text again] —
     the footer survives only in doc 0, the self-repeat never survives,
     and exact-dup docs lose even their first paragraph."""
-    from yatsm_spark.operators.dedup import paragraph_dedup
-
     d = _t(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(F.col("text"), F.lit("\n\nSHARED BOILERPLATE FOOTER\n\n"),
@@ -1609,8 +1372,6 @@ def q_remove_dup_spans(spark, sf_dir):
     """ExactSubstr REMOVAL (Lee 2022): rewrite each doc with the word
     spans covered by corpus-duplicated 5-grams cut out — same interval
     semantics as dup_ngram_spans, clean_text compared byte-exactly."""
-    from yatsm_spark.operators.dedup import remove_dup_spans
-
     return remove_dup_spans(_t(spark, sf_dir, "documents"))
 
 
@@ -1619,8 +1380,6 @@ def q_weighted_sample(spark, sf_dir):
     (Efraimidis-Spirakis): inclusion probability proportional to n_chars,
     hash-derived uniforms (no RNG state), micro-snapped keys so the rank
     order is integer-exact cross-engine."""
-    from yatsm_spark.operators.sampling import weighted_sample
-
     return weighted_sample(_t(spark, sf_dir, "documents"), "n_chars",
                            k=100, seed=3)
 
@@ -1630,8 +1389,6 @@ def q_datamix_report(spark, sf_dir):
     exact-dup rate, LM score re-aggregated from exact integer micro-sums.
     Oracle is composed from the SAME oracle strings the individual signal
     rows are checked against."""
-    from yatsm_spark.operators.curate import datamix_report
-
     return datamix_report(_t(spark, sf_dir, "documents"))
 
 
@@ -1640,8 +1397,6 @@ def q_dsir_weights(spark, sf_dir):
     log-ratios (target = lang='en' slice vs the raw corpus), snapped to
     integer micro-units per occurrence so the per-doc weight is an exact
     long. Oracle replays the same md5-hex4 bucketing and smoothing."""
-    from yatsm_spark.operators.dsir import dsir_weights
-
     return dsir_weights(_t(spark, sf_dir, "documents"),
                         target=F.col("lang") == "en")
 
@@ -1650,8 +1405,6 @@ def q_dsir_select(spark, sf_dir):
     """DSIR resampling step: deterministic top-k=150 by (logw_micro DESC,
     doc_id) — integer-exact ranking, no one-reducer window (range
     partition + local rank + broadcast offsets)."""
-    from yatsm_spark.operators.dsir import dsir_select, dsir_weights
-
     w = dsir_weights(_t(spark, sf_dir, "documents"),
                      target=F.col("lang") == "en")
     return dsir_select(w, k=150)
@@ -1663,8 +1416,6 @@ def q_shuffle_export(spark, sf_dir):
     computed WITHOUT a single-reducer global window (range partition +
     local rank + broadcast offsets). Oracle: the one-window SQL spelling
     row_number() OVER (ORDER BY h, doc_id) - 1."""
-    from yatsm_spark.operators.sampling import global_shuffle
-
     return global_shuffle(_t(spark, sf_dir, "documents"), seed=7)
 
 
@@ -1674,9 +1425,6 @@ def q_decontaminate_fuzzy(spark, sf_dir):
     doc at threshold 0.5. Oracle: identical CTEs in DuckDB — integer
     intersections/sizes, round-6 snapped division, (jaccard DESC,
     bench_id ASC) rank."""
-    from yatsm_spark.operators.decontam import decontaminate_fuzzy
-    from yatsm_spark.operators.sampling import sample_hash
-
     docs = _t(spark, sf_dir, "documents")
     bench = sample_hash(docs, rate=0.05)
     train = sample_hash(docs, rate=0.05, complement=True)
@@ -1687,8 +1435,6 @@ def q_sample_hash(spark, sf_dir):
     """Shuffle-free deterministic Bernoulli-style sample: keep iff
     h(doc_id) mod 2^32 < rate * 2^32 — a narrow filter evaluated in the
     scan stage, the only sampler shape that is free at 100 TB."""
-    from yatsm_spark.operators.sampling import sample_hash
-
     return sample_hash(_t(spark, sf_dir, "documents"), rate=0.25).select(
         "doc_id", "lang", "source")
 
@@ -1698,9 +1444,6 @@ def q_decontaminate(spark, sf_dir):
     3-gram with a deterministic 5% holdout 'eval set' (Knuth-hash
     split). Bench n-gram set is eval-sized and broadcast; train side is
     one distinct-per-doc explode + hash-agg — all integers, exact."""
-    from yatsm_spark.operators.decontam import decontaminate
-    from yatsm_spark.operators.sampling import sample_hash
-
     docs = _t(spark, sf_dir, "documents")
     bench = sample_hash(docs, rate=0.05)
     train = sample_hash(docs, rate=0.05, complement=True)
@@ -1711,8 +1454,6 @@ def q_chunk_docs(spark, sf_dir):
     """Sliding-window chunking (32-token windows, stride 24): purely
     per-row sequence expand + explode — zero shuffle, runs at scan
     bandwidth at any scale."""
-    from yatsm_spark.operators.packing import chunk_documents
-
     return chunk_documents(_t(spark, sf_dir, "documents"),
                            chunk_tokens=32, stride=24)
 
@@ -1722,8 +1463,6 @@ def q_pack_docs(spark, sf_dir):
     (source, shard) groups, shard = KnuthHash(doc_id) mod 2. The fold is
     applyInPandas per group; the oracle replays the identical fold as a
     DuckDB recursive CTE."""
-    from yatsm_spark.operators.packing import pack_documents
-
     return pack_documents(_t(spark, sf_dir, "documents"),
                           budget_tokens=128, n_shards=2)
 
@@ -1733,11 +1472,6 @@ def q_pack_docs_bpe(spark, sf_dir):
     the trained merge-table BPE (bpe_token_counts), then the same next-fit
     fold packs into 256-token bins. Oracle chains the recursive-CTE BPE
     trainer into the recursive-CTE fold."""
-    from pyspark.sql import functions as F
-
-    from yatsm_spark.operators.bpe import bpe_token_counts
-    from yatsm_spark.operators.packing import pack_documents
-
     docs = _t(spark, sf_dir, "documents")
     lengths = bpe_token_counts(docs, n_merges=48).select(
         "doc_id", F.col("n_bpe_real").alias("dl"))
@@ -1750,8 +1484,6 @@ def q_curate_corpus(spark, sf_dir):
     split -> quality -> exact dedup -> near-dup components ->
     decontamination, flags cumulative per doc. Oracle replays the
     identical staged pipeline (recursive-CTE components included)."""
-    from yatsm_spark.operators.curate import curate_corpus
-
     return curate_corpus(_t(spark, sf_dir, "documents"), bench_rate=0.05)
 
 
@@ -1761,10 +1493,8 @@ def q_hll_distinct(spark, sf_dir):
     parallelism); the estimator's integer core sums 2^(61-register) in
     decimal(38,0) / HUGEINT so both engines feed the identical exact
     numerator into one fixed double expression; ln() is 1e-6-snapped."""
-    from yatsm_spark.operators.sketches import hll_distinct
-
     return hll_distinct(_t(spark, sf_dir, "documents"),
-                        ["source"], "text").transform(_ckpt).orderBy("source")
+                        ["source"], "text").transform(_ordered, "source")
 
 
 def q_hdr_quantiles(spark, sf_dir):
@@ -1772,8 +1502,6 @@ def q_hdr_quantiles(spark, sf_dir):
     (4 sub-buckets per octave, pure integer bit math — no log() at
     bucket boundaries). Ranks use rational arithmetic; the corpus
     shuffle carries only (source, bucket) partial counts."""
-    from yatsm_spark.operators.sketches import hdr_quantiles
-
     return hdr_quantiles(_t(spark, sf_dir, "documents"),
                          ["source"], "n_chars")
 
@@ -1785,12 +1513,10 @@ def q_cms_estimate(spark, sf_dir):
     parallelism); the estimate is the min over hash rows, one-sided
     (never under the true count). Both engines replay the identical
     md5 cell recipe, so every counter matches exactly."""
-    from yatsm_spark.operators.sketches import cms_estimate
-
     tx = _tx(spark, sf_dir)
     items = tx.select("role", "conv_id").distinct()
     return cms_estimate(tx, ["role"], "conv_id", items) \
-        .transform(_ckpt).orderBy("role", "conv_id")
+        .transform(_ordered, "role", "conv_id")
 
 
 def q_heavy_hitters(spark, sf_dir):
@@ -1800,10 +1526,8 @@ def q_heavy_hitters(spark, sf_dir):
     is lost, so the result equals plain GROUP BY ... HAVING — which is
     the oracle. At 100 TB the exchange carries only plausibly-heavy
     rows instead of the long tail."""
-    from yatsm_spark.operators.sketches import heavy_hitters
-
     return heavy_hitters(_tx(spark, sf_dir), ["role"], "conv_id", 600) \
-        .transform(_ckpt).orderBy("role", "conv_id")
+        .transform(_ordered, "role", "conv_id")
 
 
 def q_bloom_join(spark, sf_dir):
@@ -1814,8 +1538,6 @@ def q_bloom_join(spark, sf_dir):
     exchange. The Bloom filter's one-sided error (no false negatives)
     means the result equals the plain join — which is the oracle, same
     structure as the CMS-accelerated heavy_hitters."""
-    from yatsm_spark.operators.bloomjoin import bloom_join
-
     li = _t(spark, sf_dir, "lineitem")
     dim = (_t(spark, sf_dir, "orders")
            .filter(F.col("o_orderpriority") == "1-URGENT")
@@ -1824,18 +1546,14 @@ def q_bloom_join(spark, sf_dir):
     return (j.groupBy("o_orderkey")
              .agg(F.count(F.lit(1)).alias("n_lines"),
                   F.sum(F.col("l_quantity").cast("long")).alias("qty_sum"))
-             .transform(_ckpt).orderBy("o_orderkey"))
+             .transform(_ordered, "o_orderkey"))
 
 
 def q_simhash(spark, sf_dir):
-    from yatsm_spark.operators.dedup import simhash16
-
     return simhash16(_t(spark, sf_dir, "documents"))
 
 
 def q_token_counts(spark, sf_dir):
-    from yatsm_spark.operators.textstats import token_counts
-
     return token_counts(_t(spark, sf_dir, "documents"))
 
 
@@ -1843,8 +1561,6 @@ def q_bpe_merges(spark, sf_dir):
     """REAL merge-table BPE training on the corpus (operators/bpe.py).
     Oracle re-derives the identical ordered merge table in a DuckDB
     recursive CTE — independent implementation, exact string equality."""
-    from yatsm_spark.operators.bpe import bpe_merges
-
     return bpe_merges(_t(spark, sf_dir, "documents"), n_merges=48)
 
 
@@ -1852,52 +1568,36 @@ def q_bpe_token_counts(spark, sf_dir):
     """Train-on-corpus BPE then per-doc real token counts; oracle trains
     AND segments in one recursive CTE (final training state IS each
     word's tokenization — pinned to apply_bpe by tests/test_bpe.py)."""
-    from yatsm_spark.operators.bpe import bpe_token_counts
-
     return bpe_token_counts(_t(spark, sf_dir, "documents"), n_merges=48)
 
 
 def q_quality(spark, sf_dir):
-    from yatsm_spark.operators.textstats import quality_scores
-
     return quality_scores(_t(spark, sf_dir, "documents"))
 
 
 def q_langid(spark, sf_dir):
-    from yatsm_spark.operators.textstats import lang_id
-
     return lang_id(_t(spark, sf_dir, "documents"))
 
 
 def q_fingerprints(spark, sf_dir):
-    from yatsm_spark.operators.textstats import fingerprints
-
     return fingerprints(_t(spark, sf_dir, "documents"))
 
 
 def q_cosine_topk(spark, sf_dir):
-    from yatsm_spark.operators.similarity import cosine_topk
-
     return cosine_topk(_t(spark, sf_dir, "embeddings"), query_ids=list(range(10)), k=5)
 
 
 def q_lsh_buckets(spark, sf_dir):
-    from yatsm_spark.operators.similarity import hyperplane_buckets
-
     return hyperplane_buckets(_t(spark, sf_dir, "embeddings"), n_planes=8)
 
 
 def q_lsh_pairs(spark, sf_dir):
-    from yatsm_spark.operators.similarity import lsh_candidate_pairs
-
     return lsh_candidate_pairs(_t(spark, sf_dir, "embeddings"), n_planes=8)
 
 
 def q_ivf_assign(spark, sf_dir):
     """IVF coarse assignment: (vec_id, cluster) against the deterministic
     16-centroid codebook — the table the corpus would be bucketed by."""
-    from yatsm_spark.operators.similarity import ivf_assign
-
     return ivf_assign(_t(spark, sf_dir, "embeddings"), n_centroids=16)
 
 
@@ -1905,8 +1605,6 @@ def q_ivf_topk(spark, sf_dir):
     """IVF ANN top-k (nprobe=4 of 16 lists): the scale path next to the
     brute-force cosine_topk baseline — candidates are ~nprobe/n_centroids
     of the corpus, probes broadcast, corpus scan shuffle-free."""
-    from yatsm_spark.operators.similarity import ivf_topk
-
     return ivf_topk(_t(spark, sf_dir, "embeddings"), query_ids=list(range(10)),
                     k=5, n_centroids=16, nprobe=4)
 
@@ -1918,8 +1616,6 @@ def q_ivf_assign_b256(spark, sf_dir):
     matrix into a vectorized mapInPandas (sequential-fold arithmetic,
     bit-equal to the literal expressions), so plan size stays O(1) at a
     production 4096×768 codebook."""
-    from yatsm_spark.operators.similarity import ivf_assign
-
     return ivf_assign(_t(spark, sf_dir, "embeddings"), n_centroids=256,
                       method="broadcast")
 
@@ -1928,8 +1624,6 @@ def q_ivf_topk_b256(spark, sf_dir):
     """IVF ANN top-k over 256 lists (nprobe=32) via the broadcast-codebook
     assignment — the same probe/candidate relational shape as ivf_topk,
     fed by the scale-true assignment path."""
-    from yatsm_spark.operators.similarity import ivf_topk
-
     return ivf_topk(_t(spark, sf_dir, "embeddings"), query_ids=list(range(10)),
                     k=5, n_centroids=256, nprobe=32, method="broadcast")
 
@@ -1941,8 +1635,6 @@ def q_kmeans_codebook(spark, sf_dir):
     float op (sequential-fold cosine assignment, vec_id-ordered member
     sums) happens in a fixed order on both sides, so values are
     BIT-identical and returned raw."""
-    from yatsm_spark.operators.similarity import kmeans_codebook_table
-
     return kmeans_codebook_table(spark, _t(spark, sf_dir, "embeddings"),
                                  n_centroids=8, n_iters=3, seed=0, sample_mod=1)
 
@@ -1954,8 +1646,6 @@ def q_semdedup(spark, sf_dir):
     similar to its centroid. Oracle: the identical decision table in
     DuckDB SQL, assignment CTEs shared with `ivf_topk_kmeans` (golden
     codebook parquet), loser rule as a CASE over (cent_sim, id)."""
-    from yatsm_spark.operators.similarity import semdedup
-
     return semdedup(_t(spark, sf_dir, "embeddings"), n_centroids=8,
                     n_iters=3, seed=0, sample_mod=1, threshold=0.3)
 
@@ -1965,11 +1655,9 @@ def q_pq_codes(spark, sf_dir):
     bounded driver-side Lloyd's training, then zero-shuffle broadcast
     encode. Oracle: a Spark-free twin sharing kernel/pq_core.py verbatim
     (data/golden_pq_codes_sf0.01.parquet) — codes match exactly."""
-    from yatsm_spark.operators.pq import pq_encode, pq_train
-
     emb = _t(spark, sf_dir, "embeddings")
     books = pq_train(emb, m=8, ksub=16, n_iters=5)
-    return pq_encode(emb, books).transform(_ckpt).orderBy("vec_id")
+    return pq_encode(emb, books).transform(_ordered, "vec_id")
 
 
 def q_pq_adc_topk(spark, sf_dir):
@@ -1977,12 +1665,10 @@ def q_pq_adc_topk(spark, sf_dir):
     path): per-query LUTs broadcast once, the scan reads 8-int codes
     instead of 64-float vectors, one ranking exchange. Oracle: the
     pq_twin golden (grid-snapped adist, neighbor-id ties)."""
-    from yatsm_spark.operators.pq import pq_adc_topk, pq_train
-
     emb = _t(spark, sf_dir, "embeddings")
     books = pq_train(emb, m=8, ksub=16, n_iters=5)
     return pq_adc_topk(emb, books, query_ids=list(range(10)), k=5) \
-        .transform(_ckpt).orderBy("query_id", "rank")
+        .transform(_ordered, "query_id", "rank")
 
 
 #: domain-mixture recipe shared by q_sample_mixture and its generated
@@ -1997,10 +1683,8 @@ def q_sample_mixture(spark, sf_dir):
     membership by the same closed-form Knuth threshold as sample_hash —
     no shuffle, no RNG. Oracle recomputes the identical rates and hash
     membership (generated from the same MIX_WEIGHTS literal)."""
-    from yatsm_spark.operators.sampling import sample_mixture
-
     return sample_mixture(_t(spark, sf_dir, "documents"), MIX_WEIGHTS,
-                          MIX_TOTAL).transform(_ckpt).orderBy("doc_id")
+                          MIX_TOTAL).transform(_ordered, "doc_id")
 
 
 def q_ivfpq_topk(spark, sf_dir):
@@ -2010,12 +1694,10 @@ def q_ivfpq_topk(spark, sf_dir):
     touches ~nprobe/n_centroids of a codes table m/d the size of the
     raw corpus. Oracle: kernel-twin golden
     (data/golden_ivfpq_sf0.01.parquet)."""
-    from yatsm_spark.operators.pq import ivfpq_index, ivfpq_topk
-
     emb = _t(spark, sf_dir, "embeddings")
     coarse, books = ivfpq_index(emb, n_centroids=8, m=8, ksub=16, n_iters=5)
     return ivfpq_topk(emb, coarse, books, query_ids=list(range(10)),
-                      nprobe=2, k=5).transform(_ckpt).orderBy("query_id", "rank")
+                      nprobe=2, k=5).transform(_ordered, "query_id", "rank")
 
 
 def q_zorder_events(spark, sf_dir):
@@ -2025,11 +1707,9 @@ def q_zorder_events(spark, sf_dir):
     aggregate; the interleave is pure shiftleft/AND integer math, so the
     key is bit-identical in both engines at any parallelism. Timestamps
     ride exact integer microseconds (unix_micros == epoch_us)."""
-    from yatsm_spark.operators.zorder import zorder_key
-
     ev = _t(spark, sf_dir, "events")
     return zorder_key(ev, ["ts", "value"], bits=16) \
-        .select("event_id", "z").transform(_ckpt).orderBy("event_id")
+        .select("event_id", "z").transform(_ordered, "event_id")
 
 
 def q_pca_project(spark, sf_dir):
@@ -2040,10 +1720,8 @@ def q_pca_project(spark, sf_dir):
     a Spark-free numpy twin (tools/make_goldens.py pca_twin,
     data/golden_pca_sf0.01.parquet) — identical quantization, exact-int
     combine, eigh, and fold order, so scores match bit-for-bit."""
-    from yatsm_spark.operators.pca import pca_project
-
     return pca_project(_t(spark, sf_dir, "embeddings"), k=4) \
-        .transform(_ckpt).orderBy("vec_id")
+        .transform(_ordered, "vec_id")
 
 
 def q_ivf_topk_kmeans(spark, sf_dir):
@@ -2053,8 +1731,6 @@ def q_ivf_topk_kmeans(spark, sf_dir):
     bit-exact by the kmeans_codebook row + tests/test_goldens.py) and
     recomputes assignment/probes/top-k relationally — a full differential
     over the train-then-serve path."""
-    from yatsm_spark.operators.similarity import ivf_topk, train_kmeans
-
     emb = _t(spark, sf_dir, "embeddings")
     cb = [(cid, vec, nrm) for cid, vec, nrm, _n in
           train_kmeans(emb, n_centroids=8, n_iters=3, seed=0, sample_mod=1)]
@@ -2067,8 +1743,6 @@ def q_embedding_near_dups(spark, sf_dir):
     filter. Threshold 0.3 (not the 0.5 production default) because the
     synthetic embeddings' max pairwise cosine is ~0.48 — the query must
     exercise a non-empty emit path."""
-    from yatsm_spark.operators.similarity import embedding_near_dups
-
     return embedding_near_dups(_t(spark, sf_dir, "embeddings"), threshold=0.3)
 
 
@@ -2077,8 +1751,6 @@ def q_multimodal_resize(spark, sf_dir):
     oracle recomputes the resized means from the synth closed form over
     the identical integer source-index set. sha1 (not SQL-derivable) is
     dropped for the compare but pinned in tests/test_multimodal.py."""
-    from yatsm_spark.operators.multimodal import resize_images, synth_ppm_media
-
     media = synth_ppm_media(_t(spark, sf_dir, "documents"))
     return resize_images(media, 8, 8).drop("sha1")
 
@@ -2087,8 +1759,6 @@ def q_multimodal_frames(spark, sf_dir):
     """Frame sampling (every 2nd frame) over the synthetic raw-frame video
     container: real header parse + frame slicing in mapInPandas; per-frame
     channel means oracle-checked from the closed form."""
-    from yatsm_spark.operators.multimodal import sample_frames, synth_video_media
-
     media = synth_video_media(_t(spark, sf_dir, "documents"))
     return sample_frames(media, every_k=2).drop("sha1")
 
@@ -2097,16 +1767,12 @@ def q_multimodal_audio(spark, sf_dir):
     """Real RIFF/PCM WAV decode (header walk + frombuffer): sample rate,
     length, duration, mean, RMS per clip — all recomputable in SQL from
     the synth sample closed form."""
-    from yatsm_spark.operators.multimodal import audio_features, synth_wav_media
-
     media = synth_wav_media(_t(spark, sf_dir, "documents"))
     return audio_features(media).drop("sha1")
 
 
 def q_multimodal_meta(spark, sf_dir):
     """Binary payload plumbing: bytes + sha256 via the media table wrap."""
-    from yatsm_spark.operators.multimodal import as_media_table
-
     m = as_media_table(_t(spark, sf_dir, "documents"))
     return m.select("media_id", "n_bytes", F.sha2(F.col("payload"), 256).alias("payload_sha256"))
 
@@ -2118,8 +1784,6 @@ def q_multimodal_features(spark, sf_dir):
     closed-form, so the oracle recomputes the identical means in SQL — a
     genuine differential on the decode/reshape/channel-order logic. Means
     are exact (integer sums < 2^53 in float64), no rounding needed."""
-    from yatsm_spark.operators.multimodal import image_features, synth_ppm_media
-
     media = synth_ppm_media(_t(spark, sf_dir, "documents"))
     return image_features(media).select(
         "media_id", "width", "height", "mean_r", "mean_g", "mean_b")
@@ -2131,8 +1795,6 @@ def q_events_sessionize(spark, sf_dir):
     HashPartitioning(user_id) via the subset rule, no second exchange.
     Oracle: the identical lag/cumsum island construction in SQL; all
     outputs exact (timestamps, longs, µs-derived durations)."""
-    from yatsm_spark.operators.sessionize import session_stats
-
     return session_stats(_t(spark, sf_dir, "events"))
 
 
@@ -2144,8 +1806,6 @@ def q_multimodal_png(spark, sf_dir):
     width/height/per-channel means via mapInPandas. Pixels share the PPM
     closed form, so the oracle recomputes identical means in SQL: the
     compression and filtering must invert EXACTLY for this row to pass."""
-    from yatsm_spark.operators.multimodal import image_features, synth_png_media
-
     media = synth_png_media(_t(spark, sf_dir, "documents"))
     return image_features(media).select(
         "media_id", "width", "height", "mean_r", "mean_g", "mean_b")
@@ -2163,307 +1823,37 @@ def q_multimodal_jpeg(spark, sf_dir):
     Spark-free golden twin (tools/make_goldens.py::jpeg_twin, freshness-
     pinned by tests/test_goldens.py): a hash match proves the compressed
     bytes round-trip identically through the Spark mapInPandas path."""
-    from yatsm_spark.operators.multimodal import image_features, synth_jpeg_media
-
     media = synth_jpeg_media(_t(spark, sf_dir, "documents"))
     return image_features(media).select(
         "media_id", "width", "height", "mean_r", "mean_g", "mean_b")
 
 
-#: Driver-coverage rotation (VERDICT r4 task 2): the round driver verifies a
-#: fixed-size PREFIX of queries(), so the registry is re-ordered each round to
-#: lead with the queries least recently covered by a driver CORRECTNESS file.
-#: Order below = never-driver-checked first (as of r04), then last-checked-r3,
-#: then last-checked-r4; names NOT in this list (new this round) sort first.
-#: The full registry is value-verified every round regardless via
-#: tools/check_oracles.py -> CORRECTNESS_FULL_r{N}.json.
-_DRIVER_CHECK_ORDER = [
-    "tx_route",
-    "tx_segments_pheno",
-    "tx_predict",
-    "tx_commission_omission",
-    "tx_refit",
-    "events_sessionize",
-    "dedup_components",
-    "text_repetition",
-    "pii_redact",
-    "tfidf_topk",
-    "bm25_topk",
-    "sample_stratified",
-    "sample_hash",
-    "decontaminate",
-    "chunk_docs",
-    "pack_docs",
-    "curate_corpus",
-    "hll_distinct",
-    "hdr_quantiles",
-    "cms_estimate",
-    "heavy_hitters",
-    "bloom_join",
-    "ivf_assign_b256",
-    "ivf_topk_b256",
-    "kmeans_codebook",
-    "pca_project",
-    "zorder_events",
-    "pq_codes",
-    "pq_adc_topk",
-    "ivfpq_topk",
-    "sample_mixture",
-    "ivf_topk_kmeans",
-    "multimodal_png",
-    "multimodal_jpeg",
-    "tx_conv_hash",
-    "tx_changemap",
-    "tx_asof",
-    "tx_interval_join",
-    "tx_segments",
-    "tx_segments_multi",
-    "tx_phenology",
-    "tx_classify",
-    "tx_crossval",
-    "tx_codec_roundtrip",
-    "events_rollup_1m",
-    "events_cascade_1h",
-    "events_gapfill_1h",
-    "tpch_q1",
-    "orders_changemap",
-    "orders_asof",
-    "orders_pairing",
-    "region_rollup",
-    "order_lineitem_interval",
-    "top_customers",
-    "dedup_exact",
-    "minhash_sigs",
-    "minhash_pairs",
-    "ngram_jaccard",
-    "simhash",
-    "token_counts",
-    "quality",
-    "langid",
-    "fingerprints",
-    "cosine_topk",
-    "ivf_assign",
-    "ivf_topk",
-    "lsh_buckets",
-    "lsh_pairs",
-    "embedding_near_dups",
-    "multimodal_meta",
-    "multimodal_resize",
-    "multimodal_audio",
-    "multimodal_frames",
-    "multimodal_features",
-    "tx_rollup_1m",
-    "tx_rollup_1m_salted",
-    "tx_rollup_1m_adaptive",
-    "tx_reconcile_merge",
-    "tx_retention",
-    "tx_gapfill_1m",
-    "tx_locf",
-    "tx_interp",
-    "tx_counter_increase",
-    "tx_twa",
-    "tx_lttb",
-    "tx_m4",
-    "tx_ewma",
-    "tx_holt",
-    "tx_rate",
-    "tx_deriv",
-    "tx_corr",
-    "tx_anomaly",
-    "tx_alert_episodes",
-    "tx_ohlc",
-    "tx_state_durations",
-    "tx_uptime",
-    "tx_acf",
-    "tx_seasonal",
-    "tx_ccf",
-    "tx_sax",
-    "tx_sax_neardups",
-    "tx_holtwinters",
-    "tx_hw_backtest",
-    "tx_dist_shift",
-    "tx_theilsen",
-    "tx_pelt",
-    "tx_dtw_rerank",
-    "tx_bursts",
-    "tx_topk_slots",
-    "tx_swing",
-    "tx_ab_profile",
-    "tx_left_profile",
-    "events_funnel",
-    "tx_realtime_view",
-    "events_cohorts",
-    "tx_matrix_profile",
-    "tx_mp_extrema",
-    "tx_hdr_cascade",
-    "tx_hll_cascade",
-    "tx_asof_tool",
-    "tx_asof_next",
-    "tx_cascade_1h",
-    "tx_cascade_1d",
-    "tx_derived_stats_1h"
-]
+def _driver_order(names: list[str], root: str = REPO) -> list[str]:
+    """``names`` re-ordered to lead with the queries a driver correctness
+    run covered least recently.
 
-
-def _rotate_for_driver(reg):
-    rank = {n: i for i, n in enumerate(_DRIVER_CHECK_ORDER)}
-    return {n: reg[n] for n in sorted(reg, key=lambda n: rank.get(n, -1))}
+    The round driver verifies a fixed-size PREFIX of queries(), so each
+    name is keyed by the highest round N of the ``CORRECTNESS_r{N}.json``
+    files under ``root`` that lists it (0 if none does) and the sort is
+    stable: never-checked names first, then older before newer, ties in
+    the order given. The full registry is value-verified every round
+    regardless via tools/check_oracles.py -> CORRECTNESS_FULL_r{N}.json,
+    which this rule ignores."""
+    last: dict[str, int] = {}
+    for fname in os.listdir(root):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m:
+            with open(os.path.join(root, fname)) as f:
+                for name in json.load(f):
+                    last[name] = max(last.get(name, 0), int(m.group(1)))
+    return sorted(names, key=lambda n: last.get(n, 0))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _rotate_for_driver({
-        # graft core (transcripts)
-        "tx_rollup_1m": q_tx_rollup_1m,
-        "tx_rollup_1m_salted": q_tx_rollup_1m_salted,
-        "tx_rollup_1m_adaptive": q_tx_rollup_1m_adaptive,
-        "tx_reconcile_merge": q_tx_reconcile_merge,
-        "tx_retention": q_tx_retention,
-        "tx_gapfill_1m": q_tx_gapfill_1m,
-        "tx_periodogram": q_tx_periodogram,
-        "tx_locf": q_tx_locf,
-        "tx_interp": q_tx_interp,
-        "tx_counter_increase": q_tx_counter_increase,
-        "tx_twa": q_tx_twa,
-        "tx_lttb": q_tx_lttb,
-        "tx_kalman": q_tx_kalman,
-        "tx_response_latency": q_tx_response_latency,
-        "tx_tool_transitions": q_tx_tool_transitions,
-        "tx_m4": q_tx_m4,
-        "tx_ewma": q_tx_ewma,
-        "tx_holt": q_tx_holt,
-        "tx_rate": q_tx_rate,
-        "tx_deriv": q_tx_deriv,
-        "tx_corr": q_tx_corr,
-        "tx_anomaly": q_tx_anomaly,
-        "tx_alert_episodes": q_tx_alert_episodes,
-        "tx_ohlc": q_tx_ohlc,
-        "tx_state_durations": q_tx_state_durations,
-        "tx_uptime": q_tx_uptime,
-        "tx_acf": q_tx_acf,
-        "tx_seasonal": q_tx_seasonal,
-        "tx_ccf": q_tx_ccf,
-        "tx_sax": q_tx_sax,
-        "tx_sax_neardups": q_tx_sax_neardups,
-        "tx_holtwinters": q_tx_holtwinters,
-        "tx_hw_backtest": q_tx_hw_backtest,
-        "tx_dist_shift": q_tx_dist_shift,
-        "tx_theilsen": q_tx_theilsen,
-        "tx_pelt": q_tx_pelt,
-        "tx_dtw_rerank": q_tx_dtw_rerank,
-        "tx_bursts": q_tx_bursts,
-        "tx_topk_slots": q_tx_topk_slots,
-        "tx_swing": q_tx_swing,
-        "tx_ab_profile": q_tx_ab_profile,
-        "tx_left_profile": q_tx_left_profile,
-        "events_funnel": q_events_funnel,
-        "tx_realtime_view": q_tx_realtime_view,
-        "tx_route": q_tx_route,
-        "tx_route_chunks": q_tx_route_chunks,
-        "tx_compact": q_tx_compact,
-        "events_cohorts": q_events_cohorts,
-        "tx_matrix_profile": q_tx_matrix_profile,
-        "tx_mp_extrema": q_tx_mp_extrema,
-        "tx_hdr_cascade": q_tx_hdr_cascade,
-        "tx_hll_cascade": q_tx_hll_cascade,
-        "tx_asof_tool": q_tx_asof_tool,
-        "tx_asof_next": q_tx_asof_next,
-        "tx_cascade_1h": q_tx_cascade_1h,
-        "tx_cascade_1d": q_tx_cascade_1d,
-        "tx_derived_stats_1h": q_tx_derived_stats_1h,
-        "tx_conv_hash": q_tx_conv_hash,
-        "tx_changemap": q_tx_changemap,
-        "tx_asof": q_tx_asof,
-        "tx_interval_join": q_tx_interval_join,
-        "tx_segments": q_tx_segments,
-        "tx_segments_multi": q_tx_segments_multi,
-        "tx_segments_pheno": q_tx_segments_pheno,
-        "tx_predict": q_tx_predict,
-        "tx_commission_omission": q_tx_commission_omission,
-        "tx_refit": q_tx_refit,
-        "tx_phenology": q_tx_phenology,
-        "tx_classify": q_tx_classify,
-        "tx_crossval": q_tx_crossval,
-        "tx_codec_roundtrip": q_tx_codec_roundtrip,
-        # events stream proxy
-        "events_rollup_1m": q_events_rollup_1m,
-        "events_cascade_1h": q_events_cascade_1h,
-        "events_gapfill_1h": q_events_gapfill_1h,
-        "events_sessionize": q_events_sessionize,
-        # relational coverage
-        "tpch_q1": q_tpch_q1,
-        "orders_changemap": q_orders_changemap,
-        "orders_asof": q_orders_asof,
-        "orders_pairing": q_orders_pairing,
-        "region_rollup": q_region_rollup,
-        "order_lineitem_interval": q_order_lineitem_interval,
-        "top_customers": q_top_customers,
-        # training-data pipeline
-        "dedup_exact": q_dedup_exact,
-        "minhash_sigs": q_minhash_sigs,
-        "minhash_pairs": q_minhash_pairs,
-        "ngram_jaccard": q_ngram_jaccard,
-        "dup_ngram_spans": q_dup_ngram_spans,
-        "decontaminate_fuzzy": q_decontaminate_fuzzy,
-        "shuffle_export": q_shuffle_export,
-        "c4_clean": q_c4_clean,
-        "para_dedup": q_para_dedup,
-        "remove_dup_spans": q_remove_dup_spans,
-        "weighted_sample": q_weighted_sample,
-        "datamix_report": q_datamix_report,
-        "dsir_weights": q_dsir_weights,
-        "dsir_select": q_dsir_select,
-        "lm_score": q_lm_score,
-        "curate_training": q_curate_training,
-        "dedup_components": q_dedup_components,
-        "simhash": q_simhash,
-        "token_counts": q_token_counts,
-        "bpe_merges": q_bpe_merges,
-        "bpe_token_counts": q_bpe_token_counts,
-        "quality": q_quality,
-        "gopher_rules": q_gopher_rules,
-        "langid": q_langid,
-        "fingerprints": q_fingerprints,
-        "text_repetition": q_text_repetition,
-        "pii_redact": q_pii_redact,
-        "tfidf_topk": q_tfidf_topk,
-        "bm25_topk": q_bm25_topk,
-        "sample_stratified": q_sample_stratified,
-        "sample_hash": q_sample_hash,
-        "decontaminate": q_decontaminate,
-        "chunk_docs": q_chunk_docs,
-        "pack_docs": q_pack_docs,
-        "pack_docs_bpe": q_pack_docs_bpe,
-        "curate_corpus": q_curate_corpus,
-        "hll_distinct": q_hll_distinct,
-        "hdr_quantiles": q_hdr_quantiles,
-        "cms_estimate": q_cms_estimate,
-        "heavy_hitters": q_heavy_hitters,
-        "bloom_join": q_bloom_join,
-        "cosine_topk": q_cosine_topk,
-        "ivf_assign": q_ivf_assign,
-        "ivf_topk": q_ivf_topk,
-        "ivf_assign_b256": q_ivf_assign_b256,
-        "ivf_topk_b256": q_ivf_topk_b256,
-        "kmeans_codebook": q_kmeans_codebook,
-        "semdedup": q_semdedup,
-        "pca_project": q_pca_project,
-        "zorder_events": q_zorder_events,
-        "pq_codes": q_pq_codes,
-        "pq_adc_topk": q_pq_adc_topk,
-        "ivfpq_topk": q_ivfpq_topk,
-        "sample_mixture": q_sample_mixture,
-        "ivf_topk_kmeans": q_ivf_topk_kmeans,
-        "lsh_buckets": q_lsh_buckets,
-        "lsh_pairs": q_lsh_pairs,
-        "embedding_near_dups": q_embedding_near_dups,
-        "multimodal_meta": q_multimodal_meta,
-        "multimodal_resize": q_multimodal_resize,
-        "multimodal_audio": q_multimodal_audio,
-        "multimodal_frames": q_multimodal_frames,
-        "multimodal_features": q_multimodal_features,
-        "multimodal_png": q_multimodal_png,
-        "multimodal_jpeg": q_multimodal_jpeg,
-    })
+    """Every module-level ``q_<name>`` as ``{name: q_<name>}``, in driver
+    order (_driver_order over definition order)."""
+    defined = {k[2:]: fn for k, fn in globals().items() if k.startswith("q_")}
+    return {name: defined[name] for name in _driver_order(list(defined))}
 
 
 # ---------------------------------------------------------------------------

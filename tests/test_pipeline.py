@@ -233,3 +233,17 @@ def test_adaptive_salting_pipeline_tiers_identical(spark, tx, tmp_path_factory):
         a = _table(spark, w_none, tier)
         b = _table(spark, w_adpt, tier)
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, tier
+
+
+def test_empty_transcripts_raise_before_staging(spark, tx, tmp_path):
+    # rollup("bucket") returns no rows at all for an empty input, so the
+    # fingerprint pass has no grand-total row to read.
+    empty = spark.createDataFrame([], tx.schema)
+    with pytest.raises(ValueError, match="run_pipeline: transcripts is empty"):
+        run_pipeline(spark, empty, PipelineConfig(workdir=str(tmp_path), n_buckets=2))
+    assert not os.path.exists(os.path.join(str(tmp_path), "staging_measures"))
+
+
+def test_unknown_salting_is_rejected(tmp_path):
+    with pytest.raises(ValueError, match=r"one of \['adaptive', 'always', 'none'\], got 'adaptiv'"):
+        PipelineConfig(workdir=str(tmp_path), salting="adaptiv")

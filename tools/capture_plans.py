@@ -65,15 +65,15 @@ def main():
 
     import __spark_entry__ as e
 
-    # PLANS_NO_CKPT=1: bypass the lazy localCheckpoint inserted before each
-    # query's final orderBy (r6 `_ckpt`). The checkpoint truncates the
+    # PLANS_NO_CKPT=1: bypass the lazy localCheckpoint that `_ordered`
+    # inserts before each query's final orderBy. The checkpoint truncates the
     # visible plan to `Sort <- Scan ExistingRDD`, hiding the computation
     # body; bypassing it captures the body plan in the same shape as the
     # before-capture so operator-level plan diffs stay comparable. The
     # runtime shape (Sort over the checkpointed RDD) is documented by the
     # *_runtime.txt captures taken without this flag.
-    if os.environ.get("PLANS_NO_CKPT") and hasattr(e, "_ckpt"):
-        e._ckpt = lambda df: df
+    if os.environ.get("PLANS_NO_CKPT"):
+        e._ordered = lambda df, *cols: df.orderBy(*cols)
 
     qs = e.queries()
     for name in names:

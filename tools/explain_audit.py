@@ -30,12 +30,13 @@ def main():
     from yatsm_spark.operators.cascade import cascade
     from yatsm_spark.operators.rollup import gapfill, rollup_from_turns
 
-    # r6: every declared query inserts a lazy localCheckpoint before its
-    # final global orderBy (entry `_ckpt` — kills the RangePartitioner
-    # sampling re-execution). The checkpoint truncates explain() output to
-    # `Sort <- Scan ExistingRDD`, hiding the body this audit checks, so
-    # bypass it here; plans/r06/*_runtime.txt documents the runtime shape.
-    e._ckpt = lambda df: df
+    # Every declared query that ends in a global sort goes through entry
+    # `_ordered`, which inserts a lazy localCheckpoint before the orderBy
+    # (kills the RangePartitioner sampling re-execution). The checkpoint
+    # truncates explain() output to `Sort <- Scan ExistingRDD`, hiding the
+    # body this audit checks, so patch it to a plain orderBy here;
+    # plans/r06/*_runtime.txt documents the runtime shape.
+    e._ordered = lambda df, *cols: df.orderBy(*cols)
 
     spark = get_spark(master="local[8]")
     tx = spark.read.parquet(os.path.join(

@@ -40,6 +40,14 @@ from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION, encode_chunks
 from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage, with_bucket
 
 
+#: The 1m rollup each ``PipelineConfig.salting`` value runs.
+_ROLLUP_1M = {
+    "none": lambda df: R.rollup_from_turns(df, "1m"),
+    "always": lambda df: R.rollup_from_turns_salted(df, "1m"),
+    "adaptive": lambda df: R.rollup_from_turns_adaptive(df, "1m"),
+}
+
+
 @dataclass
 class PipelineConfig:
     workdir: str
@@ -55,6 +63,11 @@ class PipelineConfig:
     #: cold keys single-phase — see BENCH/SKEW.md). Values are
     #: bit-identical across all three (tested).
     salting: str = "none"
+
+    def __post_init__(self):
+        if self.salting not in _ROLLUP_1M:
+            raise ValueError(f"PipelineConfig.salting must be one of "
+                             f"{sorted(_ROLLUP_1M)}, got {self.salting!r}")
 
 
 @dataclass
@@ -77,6 +90,8 @@ def _input_fingerprint(df: DataFrame, n_buckets: int) -> tuple[str, dict[int, st
         F.expr("bit_xor(xxhash64(conv_id, turn_idx))").alias("h1"),
         F.expr("bit_xor(xxhash64(conv_id, turn_idx, ts))").alias("h2"),
     ).collect()
+    if not rows:  # rollup() emits no grand-total row for an empty input
+        raise ValueError("run_pipeline: transcripts is empty")
     fps = {r["bucket"]: f"{r['n']}:{r['h1']}:{r['h2']}" for r in rows}
     n = next(r["n"] for r in rows if r["bucket"] is None)
     return fps.pop(None), fps, n
@@ -159,11 +174,7 @@ def run_pipeline(
             # the dense tier is ~8x the sparse one — none of it is exchanged.
             # Row counts are observed on the writes themselves: the sparse
             # count of a tier is its non-gap rows.
-            rollup_1m = {
-                "always": lambda df: R.rollup_from_turns_salted(df, "1m"),
-                "adaptive": lambda df: R.rollup_from_turns_adaptive(df, "1m"),
-            }.get(cfg.salting, lambda df: R.rollup_from_turns(df, "1m"))
-            sparse = rollup_1m(bm).cache()
+            sparse = _ROLLUP_1M[cfg.salting](bm).cache()
             cached, observed = [sparse], []
             store.write_bucket(_counted(R.gapfill(sparse, "1m"), observed,
                                         rollup_1m_sparse=sparse_count, rollup_1m=count),
