@@ -1,14 +1,19 @@
 """Print an order-insensitive hash of every rollup tier built at
 SPARK_GRAFT_CPUS parallelism — used by tools/bench_scaling.py to prove
-bit-identical tiers across cluster sizes (SURVEY.md §7.5.1)."""
+bit-identical tiers across cluster sizes (SURVEY.md §7.5.1), and to show a
+refactor leaves every tier bit-identical (run it before and after).
+
+Env: SPARK_GRAFT_SF_DIR (default sf0.01; only the scale name, the last path
+component, is used: the transcripts are synthesized into data/),
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on)."""
 
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "sf0.01")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def main():

@@ -32,10 +32,9 @@ ENGINE_CONFS = {
     "spark.sql.files.maxPartitionBytes": "16m",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
     # ANSI overflow-checked arithmetic costs ~2.4x on the hot aggregation
-    # path (measured: full 1m rollup 94s -> 39s at sf0.1/local[32]). The
-    # engine's integral moments are overflow-safe by construction
-    # (token_len <= 32k => sumsq per conv-window << 2^63), so the checks
-    # buy nothing here.
+    # path (measured: full 1m rollup 94s -> 39s at sf0.1/local[32]). Off,
+    # a LONG sum wraps silently: the integral moments stay exact only under
+    # the overflow precondition stated at operators/rollup.py::MOMENTS.
     "spark.sql.ansi.enabled": "false",
     # Keep stdout clean (bench.py must emit exactly one JSON line).
     "spark.ui.showConsoleProgress": "false",

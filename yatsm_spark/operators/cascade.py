@@ -24,9 +24,18 @@ source's max complete coarse slot.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from yatsm_spark.operators.rollup import MEASURES, TIERS, _slot
+from yatsm_spark.operators.rollup import (
+    MEASURES,
+    TIERS,
+    _slot,
+    gapfill,
+    merge_aggs,
+    merged_gap_filled,
+    rollup_from_turns,
+)
 
 
 def cascade(fine: DataFrame, from_tier: str, to_tier: str) -> DataFrame:
@@ -42,20 +51,7 @@ def cascade(fine: DataFrame, from_tier: str, to_tier: str) -> DataFrame:
     return (
         fine
         .groupBy("conv_id", _slot(F.col("window_start"), sec).alias("window_start"))
-        .agg(
-            F.sum("turn_count").alias("turn_count"),
-            F.sum("token_len_sum").alias("token_len_sum"),
-            F.min("token_len_min").alias("token_len_min"),
-            F.max("token_len_max").alias("token_len_max"),
-            F.sum("token_len_sumsq").alias("token_len_sumsq"),
-            F.sum("tool_call_count").alias("tool_call_count"),
-            F.sum("role_user_count").alias("role_user_count"),
-            F.sum("role_assistant_count").alias("role_assistant_count"),
-            F.sum("role_other_count").alias("role_other_count"),
-            # a coarse slot is "real" if any child is real
-            (F.sum((~F.col("gap_filled")).cast("int")) == 0).alias("gap_filled"),
-        )
-        .select("conv_id", "window_start", *MEASURES, "gap_filled")
+        .agg(*merge_aggs(), merged_gap_filled())
     )
 
 
@@ -96,24 +92,9 @@ def merge_rollups(tier: DataFrame, delta: DataFrame,
     merged = (
         tier.select(*cols).unionByName(delta.select(*cols))
         .groupBy("conv_id", "window_start")
-        .agg(
-            F.sum("turn_count").alias("turn_count"),
-            F.sum("token_len_sum").alias("token_len_sum"),
-            F.min("token_len_min").alias("token_len_min"),
-            F.max("token_len_max").alias("token_len_max"),
-            F.sum("token_len_sumsq").alias("token_len_sumsq"),
-            F.sum("tool_call_count").alias("tool_call_count"),
-            F.sum("role_user_count").alias("role_user_count"),
-            F.sum("role_assistant_count").alias("role_assistant_count"),
-            F.sum("role_other_count").alias("role_other_count"),
-            *([(F.sum((~F.col("gap_filled")).cast("int")) == 0).alias("gap_filled")]
-              if has_gap else []),
-        )
-        .select(*cols)
+        .agg(*merge_aggs(), *([merged_gap_filled()] if has_gap else []))
     )
     if has_gap and tier_name is not None:
-        from yatsm_spark.operators.rollup import gapfill
-
         # gapfill preserves an existing gap_filled column on real rows and
         # only emits rows for holes between consecutive present slots, so
         # re-densifying after a span-extending merge is incremental.
@@ -158,15 +139,9 @@ def realtime_view(tier: DataFrame, fresh_measures: DataFrame,
 
     Raises when the watermark is not aligned to the tier's slot width —
     a misaligned split would double-count the boundary slot."""
-    from pyspark.sql import functions as F
-
-    from yatsm_spark.operators.rollup import TIERS, rollup_from_turns
-
     sec = TIERS[tier_name]
     wm = F.lit(watermark).cast("timestamp")
     # alignment check, driver-side (watermark is a scalar)
-    import pandas as pd
-
     if int(pd.Timestamp(watermark).value // 1_000) % (sec * 1_000_000):
         raise ValueError(
             f"realtime_view: watermark {watermark!r} is not aligned to "

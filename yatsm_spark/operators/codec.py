@@ -16,7 +16,9 @@ val_codec layout (CHUNK_FORMAT_VERSION 4):
     then, for each measure in rollup.MEASURES order, one nullable-int64
     stream (kernel/gorilla_vec.py) over the REAL slots only.
 A gap slot carries no information — counts 0, stats null, gap_filled
-true — so it costs its presence bit and nothing else. The encoder checks
+true — so it costs its presence bit and nothing else. Which measures are
+counts and which are stats comes from each moment's gap value in
+rollup.MOMENTS (COUNT_COLS / STAT_COLS below). The encoder checks
 that precondition (ValueError otherwise) and decode rebuilds the gap
 slots. Each stream's length follows from the real-slot count, so streams
 are concatenated without length prefixes. The int streams are exact over
@@ -36,11 +38,12 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from yatsm_spark.kernel import gorilla_vec as g_vec
-from yatsm_spark.operators.rollup import MEASURES
+from yatsm_spark.kernel.gapfill import gapfill_slots
+from yatsm_spark.operators.rollup import MEASURES, MOMENTS, TIERS
 from yatsm_spark.operators.series import per_series
 
-COUNT_COLS = [m for m in MEASURES if m.endswith("_count")]
-STAT_COLS = [m for m in MEASURES if not m.endswith("_count")]
+COUNT_COLS = [m.name for m in MOMENTS if m.gap == 0]
+STAT_COLS = [m.name for m in MOMENTS if m.gap is None]
 
 #: Bumped whenever the persisted chunk byte layout changes; folded into the
 #: pipeline's per-bucket checkpoint fingerprint so a resumed workdir written
@@ -132,8 +135,6 @@ def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
     before encoding — gap slots then cost 1 bit each in the codec instead
     of a shuffled row each. Output chunks are identical to encoding the
     gap-filled tier (tested)."""
-    from yatsm_spark.operators.rollup import TIERS
-
     step = TIERS[tier]
 
     # Null stat slots are split into (coalesced long, notnull flag) BEFORE
@@ -167,8 +168,6 @@ def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
         vals = {c: pdf[c].to_numpy(dtype=np.int64) for c in MEASURES}
         nulls = {c: ~pdf[f"_nn_{c}"].to_numpy(dtype=bool) for c in STAT_COLS}
         if densify:
-            from yatsm_spark.kernel.gapfill import gapfill_slots
-
             # stats travel as int64 + a notnull flag column: gap slots get
             # notnull=0 (int fill is 0), i.e. null — no float64 detour, so
             # values above 2^53 stay exact through densification too.

@@ -12,10 +12,13 @@ Parity anchors:
   (Chosen over applyInPandas reindex: stays entirely JVM-side.)
 
 Exactness-at-any-parallelism design (SURVEY.md §7.5.1): every stored moment
-is integral (LONG) — counts, sums, min/max, and the sum-of-squares moment
-(token_len <= 32k => square <= 2^30; a conv-day group stays far below int64
-range) — so aggregation order can never change a bit. Derived float stats
-(avg, stddev, rates) are computed at read time from the integral moments.
+is integral (LONG) — counts, sums, min/max, and the sum-of-squares moment —
+so aggregation order can never change a bit, as long as no sum overflows
+(the precondition is stated at MOMENTS). Derived float stats (avg, stddev,
+rates) are computed at read time from the integral moments.
+
+MOMENTS defines each measure once; every rollup, merge, gap row and routed
+aggregate in the engine derives its column list from it.
 
 Retention-tier layout: TIERS maps tier name -> slot seconds. The 1m tier is
 the graft's line cache (S5): materializing it IS the memoization.
@@ -23,24 +26,76 @@ the graft's line cache (S5): materializing it IS the memoization.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 TIERS = {"1m": 60, "1h": 3600, "1d": 86400}
 
-#: Additive (decomposable) measure columns — the cascade contract (A7).
-MEASURES = [
-    "turn_count",
-    "token_len_sum",
-    "token_len_min",
-    "token_len_max",
-    "token_len_sumsq",
-    "tool_call_count",
-    "role_user_count",
-    "role_assistant_count",
-    "role_other_count",
-]
 
-_SUM_COLS = [c for c in MEASURES if c not in ("token_len_min", "token_len_max")]
+class Moment(NamedTuple):
+    """One tier measure. Columns are built on call: F.col needs an active
+    SparkContext, so the table cannot hold Column objects at import."""
+    name: str
+    #: value of one turn, over ingest.with_measures columns
+    turn: Callable[[], Column]
+    #: decomposable merge of child values: F.sum, F.min or F.max
+    merge: Callable[[Column | str], Column]
+    #: value on a gap-filled slot: 0 for counts, None (null) for stats
+    gap: int | None
+    #: aggregate over raw turns, when it is not merge(turn)
+    agg: Callable[[], Column] | None = None
+
+
+def _token_len() -> Column:
+    return F.col("token_len")
+
+
+#: The cascade contract (A7): nine integral, decomposable moments.
+#:
+#: Overflow precondition: spark.sql.ansi.enabled is off (conf.py), so a LONG
+#: sum wraps silently. token_len = length(text) is unbounded, so the binding
+#: moment is token_len_sumsq: Σ token_len² over every aggregated group must
+#: stay below 2^63. The largest groups are a 1d slot, and a whole routed
+#: range per conv (operators/routing.py).
+MOMENTS = (
+    # count(1), not sum(1): the column is non-nullable, so tier_1m stores it
+    # as a REQUIRED parquet column, and the plan keeps its partial_count
+    Moment("turn_count", lambda: F.lit(1).cast("long"), F.sum, 0,
+           agg=lambda: F.count(F.lit(1))),
+    Moment("token_len_sum", _token_len, F.sum, None),
+    Moment("token_len_min", _token_len, F.min, None),
+    Moment("token_len_max", _token_len, F.max, None),
+    Moment("token_len_sumsq", lambda: _token_len() * _token_len(), F.sum, None),
+    Moment("tool_call_count", lambda: F.col("is_tool_call").cast("long"), F.sum, 0),
+    Moment("role_user_count", lambda: (F.col("role") == "user").cast("long"), F.sum, 0),
+    Moment("role_assistant_count",
+           lambda: (F.col("role") == "assistant").cast("long"), F.sum, 0),
+    Moment("role_other_count",
+           lambda: (~F.col("role").isin("user", "assistant")).cast("long"), F.sum, 0),
+)
+
+MEASURES = [m.name for m in MOMENTS]
+
+
+def turn_moments() -> list[Column]:
+    """Each moment's value for one turn (a select list over measures)."""
+    return [m.turn().alias(m.name) for m in MOMENTS]
+
+
+def turn_aggs() -> list[Column]:
+    """Raw turns -> moments (an agg list)."""
+    return [(m.agg() if m.agg else m.merge(m.turn())).alias(m.name) for m in MOMENTS]
+
+
+def merge_aggs() -> list[Column]:
+    """Moment rows -> their merged moments (an agg list)."""
+    return [m.merge(m.name).alias(m.name) for m in MOMENTS]
+
+
+def merged_gap_filled() -> Column:
+    """A merged slot is real if any child is real."""
+    return (F.sum((~F.col("gap_filled")).cast("int")) == 0).alias("gap_filled")
 
 
 def _slot(col, seconds: int):
@@ -61,17 +116,7 @@ def rollup_from_turns(measures: DataFrame, tier: str = "1m") -> DataFrame:
     return (
         measures
         .groupBy("conv_id", _slot(F.col("ts"), sec).alias("window_start"))
-        .agg(
-            F.count(F.lit(1)).alias("turn_count"),
-            F.sum("token_len").alias("token_len_sum"),
-            F.min("token_len").alias("token_len_min"),
-            F.max("token_len").alias("token_len_max"),
-            F.sum(F.col("token_len") * F.col("token_len")).alias("token_len_sumsq"),
-            F.sum("is_tool_call").cast("long").alias("tool_call_count"),
-            F.sum((F.col("role") == "user").cast("long")).alias("role_user_count"),
-            F.sum((F.col("role") == "assistant").cast("long")).alias("role_assistant_count"),
-            F.sum((~F.col("role").isin("user", "assistant")).cast("long")).alias("role_other_count"),
-        )
+        .agg(*turn_aggs())
         .withColumn("gap_filled", F.lit(False))
     )
 
@@ -94,33 +139,12 @@ def rollup_from_turns_salted(measures: DataFrame, tier: str = "1m",
         measures
         .groupBy("conv_id", _slot(F.col("ts"), sec).alias("window_start"),
                  salt.alias("_salt"))
-        .agg(
-            F.count(F.lit(1)).alias("turn_count"),
-            F.sum("token_len").alias("token_len_sum"),
-            F.min("token_len").alias("token_len_min"),
-            F.max("token_len").alias("token_len_max"),
-            F.sum(F.col("token_len") * F.col("token_len")).alias("token_len_sumsq"),
-            F.sum("is_tool_call").cast("long").alias("tool_call_count"),
-            F.sum((F.col("role") == "user").cast("long")).alias("role_user_count"),
-            F.sum((F.col("role") == "assistant").cast("long")).alias("role_assistant_count"),
-            F.sum((~F.col("role").isin("user", "assistant")).cast("long")).alias("role_other_count"),
-        )
+        .agg(*turn_aggs())
     )
     return (
         partial.groupBy("conv_id", "window_start")
-        .agg(
-            F.sum("turn_count").alias("turn_count"),
-            F.sum("token_len_sum").alias("token_len_sum"),
-            F.min("token_len_min").alias("token_len_min"),
-            F.max("token_len_max").alias("token_len_max"),
-            F.sum("token_len_sumsq").alias("token_len_sumsq"),
-            F.sum("tool_call_count").alias("tool_call_count"),
-            F.sum("role_user_count").alias("role_user_count"),
-            F.sum("role_assistant_count").alias("role_assistant_count"),
-            F.sum("role_other_count").alias("role_other_count"),
-        )
+        .agg(*merge_aggs())
         .withColumn("gap_filled", F.lit(False))
-        .select("conv_id", "window_start", *MEASURES, "gap_filled")
     )
 
 
@@ -188,17 +212,10 @@ def gapfill(rollup: DataFrame, tier: str = "1m") -> DataFrame:
     Span endpoints are real slots by construction, so hole-filling equals
     grid-filling over [min, max] exactly.
     """
-    from pyspark.sql import Window
-
     sec = TIERS[tier]
     w = Window.partitionBy("conv_id").orderBy("window_start")
     base = rollup.withColumn("_prev", F.lag("window_start").over(w))
     step = F.expr(f"INTERVAL {sec} SECONDS")
-    zero = [F.lit(0).cast("long").alias(c) for c in
-            ("turn_count", "tool_call_count", "role_user_count",
-             "role_assistant_count", "role_other_count")]
-    nulls = [F.lit(None).cast("long").alias(c) for c in
-             ("token_len_sum", "token_len_min", "token_len_max", "token_len_sumsq")]
     gaps = (
         base
         .where(F.col("_prev").isNotNull()
@@ -207,9 +224,9 @@ def gapfill(rollup: DataFrame, tier: str = "1m") -> DataFrame:
             "conv_id",
             F.explode(F.sequence(F.col("_prev") + step,
                                  F.col("window_start") - step, step)).alias("window_start"),
-            *zero, *nulls, F.lit(True).alias("gap_filled"),
+            *[F.lit(m.gap).cast("long").alias(m.name) for m in MOMENTS],
+            F.lit(True).alias("gap_filled"),
         )
-        .select("conv_id", "window_start", *MEASURES, "gap_filled")
     )
     return base.drop("_prev").select("conv_id", "window_start", *MEASURES, "gap_filled") \
         .unionByName(gaps)

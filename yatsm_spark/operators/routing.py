@@ -31,7 +31,8 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, functions as F
 
-from yatsm_spark.operators.rollup import MEASURES, TIERS
+from yatsm_spark.operators.codec import decode_chunks
+from yatsm_spark.operators.rollup import MEASURES, TIERS, merge_aggs, turn_moments
 
 
 def _epoch(ts) -> int:
@@ -109,24 +110,6 @@ def route_plan(qs, qe, tiers=("1m", "1h", "1d"), watermark=None):
     return slices, remainders
 
 
-def _per_turn_moments(measures: DataFrame) -> DataFrame:
-    """Shape raw per-turn measures (ingest.with_measures output) into the
-    tier moment schema so the union aggregates uniformly."""
-    tl = F.col("token_len")
-    return measures.select(
-        "conv_id",
-        F.lit(1).cast("long").alias("turn_count"),
-        tl.alias("token_len_sum"),
-        tl.alias("token_len_min"),
-        tl.alias("token_len_max"),
-        (tl * tl).alias("token_len_sumsq"),
-        F.col("is_tool_call").cast("long").alias("tool_call_count"),
-        (F.col("role") == "user").cast("long").alias("role_user_count"),
-        (F.col("role") == "assistant").cast("long").alias("role_assistant_count"),
-        (~F.col("role").isin("user", "assistant")).cast("long").alias("role_other_count"),
-    )
-
-
 def route_range(tiers: dict[str, DataFrame], qs, qe,
                 fresh_measures: DataFrame | None = None,
                 watermark=None,
@@ -182,8 +165,6 @@ def route_range(tiers: dict[str, DataFrame], qs, qe,
                & (F.col("window_start") < F.timestamp_seconds(F.lit(b))))
         live = t.where(rng)
         if chunks is not None and name == chunk_tier:
-            from yatsm_spark.operators.codec import decode_chunks
-
             span = chunk_points * TIERS[name]
             pruned = chunks.where(
                 (F.col("tier") == name)
@@ -199,19 +180,10 @@ def route_range(tiers: dict[str, DataFrame], qs, qe,
         raw = fresh_measures.where(
             (F.col("ts") >= F.timestamp_seconds(F.lit(a)))
             & (F.col("ts") < F.timestamp_seconds(F.lit(b))))
-        parts.append(_per_turn_moments(raw))
+        parts.append(raw.select("conv_id", *turn_moments()))
 
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
-    return (u.groupBy("conv_id")
-             .agg(F.sum("turn_count").alias("turn_count"),
-                  F.sum("token_len_sum").alias("token_len_sum"),
-                  F.min("token_len_min").alias("token_len_min"),
-                  F.max("token_len_max").alias("token_len_max"),
-                  F.sum("token_len_sumsq").alias("token_len_sumsq"),
-                  F.sum("tool_call_count").alias("tool_call_count"),
-                  F.sum("role_user_count").alias("role_user_count"),
-                  F.sum("role_assistant_count").alias("role_assistant_count"),
-                  F.sum("role_other_count").alias("role_other_count"))
+    return (u.groupBy("conv_id").agg(*merge_aggs())
              .where(F.col("turn_count") > 0))

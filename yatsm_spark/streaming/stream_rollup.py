@@ -4,10 +4,11 @@ SURVEY.md §2.11: the reference is batch-only (dates pre-sorted, late data
 unsupported); the graft's streaming path is the v2 addition:
 
 - ``stream_rollup_1m``: readStream -> watermarked tumbling 1m aggregation,
-  append mode. The aggregate list is EXACTLY the batch one (integral
-  moments), so a finalized streaming window equals the batch rollup row for
-  the same slot — tested in tests/test_streaming.py by diffing a
-  Trigger.AvailableNow run against the batch operator.
+  append mode. The aggregate list is the batch one (integral moments,
+  operators/rollup.py::MOMENTS), so a finalized streaming window equals
+  the batch rollup row for the same slot — tested in
+  tests/test_streaming.py by diffing a Trigger.AvailableNow run against
+  the batch operator.
 - ``online_monitor``: applyInPandasWithState per conv — the streaming
   analogue of the CCDC monitor loop (state = baseline moments + consecutive
   over-threshold counter). Emits break alerts online; exact batch parity is
@@ -36,15 +37,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-
-def stream_measures(stream: DataFrame) -> DataFrame:
-    """Same projection as ingest.with_measures, streaming-safe."""
-    return stream.select(
-        "conv_id", "turn_idx", "ts",
-        F.length("text").cast("long").alias("token_len"),
-        F.col("tool").isNotNull().cast("int").alias("is_tool_call"),
-        "role",
-    )
+from yatsm_spark.ingest import with_measures
+from yatsm_spark.operators.rollup import MEASURES, turn_aggs
 
 
 def stream_rollup_1m(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -60,24 +54,11 @@ def stream_rollup_1m(stream: DataFrame, watermark: str = "10 minutes") -> DataFr
     that arrives after the window was emitted is dropped
     (numRowsDroppedByWatermark) and the emitted point never changes —
     finalized tier points are immutable, exactly the batch tier contract."""
-    m = stream_measures(stream).withWatermark("ts", watermark)
+    m = with_measures(stream).withWatermark("ts", watermark)
     return (
         m.groupBy("conv_id", F.window("ts", "1 minute").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("turn_count"),
-            F.sum("token_len").alias("token_len_sum"),
-            F.min("token_len").alias("token_len_min"),
-            F.max("token_len").alias("token_len_max"),
-            F.sum(F.col("token_len") * F.col("token_len")).alias("token_len_sumsq"),
-            F.sum("is_tool_call").cast("long").alias("tool_call_count"),
-            F.sum((F.col("role") == "user").cast("long")).alias("role_user_count"),
-            F.sum((F.col("role") == "assistant").cast("long")).alias("role_assistant_count"),
-            F.sum((~F.col("role").isin("user", "assistant")).cast("long")).alias("role_other_count"),
-        )
-        .select(F.col("conv_id"), F.col("w.start").alias("window_start"),
-                "turn_count", "token_len_sum", "token_len_min", "token_len_max",
-                "token_len_sumsq", "tool_call_count", "role_user_count",
-                "role_assistant_count", "role_other_count")
+        .agg(*turn_aggs())
+        .select("conv_id", F.col("w.start").alias("window_start"), *MEASURES)
     )
 
 
