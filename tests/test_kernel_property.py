@@ -152,3 +152,73 @@ def test_ab_match_affine_invariance(q, y):
     else:
         assert other is not None
         assert other[0] == pytest.approx(base[0], abs=1e-6)
+
+
+# Resumability: each smoother kernel is f(values, ..., state) -> (out,
+# state); running a series through two calls with the state carried
+# across any cut gives the same bits as one call — the property the
+# streaming twins (streaming/stream_rollup.py) rely on for batch parity.
+
+def _bits(arrays):
+    return [np.ascontiguousarray(a, dtype=np.float64).tobytes() for a in arrays]
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.integers(0, 200), min_size=1, max_size=50),
+       st.sampled_from([0.25, 0.3, 0.9]))
+def test_ewma_resumes_bit_exact_at_every_cut(xs, alpha):
+    from yatsm_spark.kernel.smooth import ewma
+
+    x = np.array(xs, dtype=np.float64)
+    whole, _ = ewma(x, alpha)
+    for c in range(len(x) + 1):
+        head, state = ewma(x[:c], alpha)
+        tail, _ = ewma(x[c:], alpha, state)
+        assert _bits([np.concatenate([head, tail])]) == _bits([whole])
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.integers(0, 200), min_size=1, max_size=50),
+       st.integers(1, 7), st.sampled_from([(0.5, 0.25, 0.25), (0.3, 0.1, 0.7)]))
+def test_holt_winters_resumes_bit_exact_at_every_cut(xs, period, params):
+    from yatsm_spark.kernel.smooth import holt_winters
+
+    x = np.array(xs, dtype=np.float64)
+    whole, _ = holt_winters(x, *params, period)
+    for c in range(len(x) + 1):
+        head, state = holt_winters(x[:c], *params, period)
+        tail, _ = holt_winters(x[c:], *params, period, state)
+        assert _bits(map(np.concatenate, zip(head, tail))) == _bits(whole)
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.one_of(st.integers(0, 60), st.none()), min_size=1,
+                max_size=50).filter(lambda v: any(e is not None for e in v)))
+def test_kalman_filter_resumes_bit_exact_after_first_observation(ys):
+    """Cuts before the first observation are excluded: there the batch
+    filter's prior is the first observed value, a look-ahead a stream
+    cannot make."""
+    from yatsm_spark.kernel.kalman import kalman_filter
+
+    y = np.array([np.nan if v is None else v for v in ys], dtype=np.float64)
+    whole, _ = kalman_filter(y)
+    first = int(np.flatnonzero(~np.isnan(y))[0])
+    for c in range(first + 1, len(y) + 1):
+        head, state = kalman_filter(y[:c])
+        tail, _ = kalman_filter(y[c:], state=state)
+        assert _bits(map(np.concatenate, zip(head, tail))) == _bits(whole)
+
+
+@settings(max_examples=60, deadline=None)
+@given(series, st.integers(0, 10))
+def test_swing_doors_resume_to_the_batch_keep_set_at_every_cut(xs, e):
+    from yatsm_spark.kernel.swing import swing_doors
+
+    t = np.cumsum(np.arange(len(xs), dtype=np.int64) % 3 + 1) * 60_000_000
+    x = np.array(xs, dtype=np.int64)
+    want = swing_compress(t, x, e).tolist()
+    for c in range(len(xs) + 1):
+        head, state = swing_doors(t[:c], x[:c], e)
+        tail, _ = swing_doors(t[c:], x[c:], e, state)
+        # tail index -1 is the carried previous point, global c - 1
+        assert head + [c + i for i in tail] + [len(xs) - 1] == want

@@ -134,3 +134,12 @@ def test_grouped_maps_go_through_per_series():
     call applyInPandas."""
     hits = {p.name for p in OPERATORS.glob("*.py") if "applyInPandas(" in p.read_text()}
     assert hits == {"series.py", "bpe.py"}
+
+
+def test_stateful_maps_go_through_per_series_stateful():
+    """The streaming twins carry per-group state only through the helper,
+    which sorts each group's micro-batch as a whole."""
+    pkg = OPERATORS.parent
+    hits = {p.relative_to(pkg).as_posix() for p in pkg.rglob("*.py")
+            if "applyInPandasWithState(" in p.read_text()}
+    assert hits == {"operators/series.py"}

@@ -26,6 +26,46 @@ def _snap6(a: np.ndarray) -> np.ndarray:
     return np.floor(a * 1e6 + 0.5) / 1e6
 
 
+def kalman_filter(y: np.ndarray, q: float = 1.0, r: float = 4.0,
+                  p0: float = 1e6, state: tuple | None = None):
+    """Forward pass, resumable: ``(y, state) -> (out, state)``.
+
+    With ``state=None`` the filter starts from the first observed value
+    as its prior mean (a look-ahead: diffuse but deterministic, no
+    data-dependent branching afterwards) with variance p0, and takes no
+    predict step before row 0. A carried state (m, p) -- the UNSNAPPED
+    posterior after the previous call's last row -- predicts before every
+    row, so a series cut after its first observation and carried across
+    calls gives the same bits as one call. The state stays None while
+    nothing has been observed.
+
+    Returns ((m_pred, p_pred, m_filt, p_filt) float64 arrays, state).
+    """
+    y = np.asarray(y, dtype=np.float64)
+    if state is None:
+        obs = np.flatnonzero(~np.isnan(y))
+        if obs.size == 0:
+            nan = np.full(y.size, np.nan)
+            return (nan, nan.copy(), nan.copy(), nan.copy()), None
+        (m, p), predict = (float(y[obs[0]]), p0), False
+    else:
+        (m, p), predict = state, True
+    out = ([], [], [], [])
+    for v in y.tolist():
+        if predict:
+            p = p + q
+        predict = True
+        out[0].append(m)
+        out[1].append(p)
+        if v == v:                      # NaN = missing: predict only
+            k = p / (p + r)
+            m = m + k * (v - m)
+            p = (1.0 - k) * p
+        out[2].append(m)
+        out[3].append(p)
+    return tuple(np.array(c, dtype=np.float64) for c in out), (m, p)
+
+
 def kalman_local_level(y: np.ndarray, q: float = 1.0, r: float = 4.0,
                        p0: float = 1e6):
     """Filter + RTS-smooth one series.
@@ -38,35 +78,10 @@ def kalman_local_level(y: np.ndarray, q: float = 1.0, r: float = 4.0,
     the RTS-smoothed mean, all float64 arrays of len(y), micro-snapped.
     All-NaN input returns NaN arrays.
     """
-    y = np.asarray(y, dtype=np.float64)
-    n = y.size
-    if n == 0:
-        z = np.empty(0, dtype=np.float64)
-        return z, z.copy(), z.copy()
-    if np.all(np.isnan(y)):
-        z = np.full(n, np.nan)
-        return z, z.copy(), z.copy()
-
-    m_pred = np.empty(n)
-    p_pred = np.empty(n)
-    m_filt = np.empty(n)
-    p_filt = np.empty(n)
-
-    first = int(np.flatnonzero(~np.isnan(y))[0])
-    m, p = (y[first] if not np.isnan(y[first]) else 0.0), p0
-    # use the first observation as the prior mean: a diffuse but
-    # deterministic start (no data-dependent branching afterwards)
-    for t in range(n):
-        if t > 0:
-            p = p + q
-        m_pred[t] = m
-        p_pred[t] = p
-        if not np.isnan(y[t]):
-            k = p / (p + r)
-            m = m + k * (y[t] - m)
-            p = (1.0 - k) * p
-        m_filt[t] = m
-        p_filt[t] = p
+    (m_pred, p_pred, m_filt, p_filt), state = kalman_filter(y, q, r, p0)
+    n = m_filt.size
+    if state is None:                   # empty or all-NaN
+        return m_filt, p_filt, m_pred
 
     ms = np.empty(n)
     ms[n - 1] = m_filt[n - 1]

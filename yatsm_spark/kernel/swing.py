@@ -29,6 +29,52 @@ from __future__ import annotations
 import numpy as np
 
 
+def swing_doors(t_us: np.ndarray, x: np.ndarray, e: int,
+                state: tuple | None = None):
+    """The door scan, resumable: ``(points, state) -> (kept, state)``.
+
+    ``state`` is (a_t, a_x, p_t, p_x, up_n, up_d, lo_n, lo_d, has_doors):
+    the anchor, the previous point and the open door fractions, all
+    Python ints (den > 0). A point is confirmed as an archive point only
+    once the series continues past it, so every confirmed point is the
+    PREVIOUS one: ``kept`` holds indices into this call's points, where
+    -1 names the carried previous point (the last point of the prior
+    call). The series-final point is never confirmed here. Timestamps
+    must be strictly increasing, across calls too: ``swing_compress``
+    checks its input, the stream twin relies on its arrival-order
+    contract.
+    """
+    kept = []
+    st = state
+    for i, (t, v) in enumerate(zip(np.asarray(t_us).tolist(),
+                                   np.asarray(x).tolist())):
+        if st is None:
+            st = (t, v, t, v, 0, 0, 0, 0, False)
+            continue
+        a_t, a_x, p_t, p_x, up_n, up_d, lo_n, lo_d, hd = st
+        if p_t == a_t:
+            kept.append(i - 1)          # the series' first point
+        while True:
+            dt = t - a_t
+            hi = v + e - a_x            # upper-door numerator
+            lo = v - e - a_x            # lower-door numerator
+            if not hd:
+                up_n, up_d, lo_n, lo_d, hd = hi, dt, lo, dt, True
+                break
+            # tighten: up = min(up, hi/dt), lo = max(lo, lo/dt)
+            if hi * up_d < up_n * dt:
+                up_n, up_d = hi, dt
+            if lo * lo_d > lo_n * dt:
+                lo_n, lo_d = lo, dt
+            if lo_n * up_d > up_n * lo_d:   # doors crossed: lo > up
+                kept.append(i - 1)
+                a_t, a_x, hd = p_t, p_x, False
+                continue                # reopen over the CURRENT point
+            break
+        st = (a_t, a_x, t, v, up_n, up_d, lo_n, lo_d, hd)
+    return kept, st
+
+
 def swing_compress(t_us: np.ndarray, x: np.ndarray,
                    e: int) -> np.ndarray:
     """Indices (into the time-sorted series) of the archive points.
@@ -42,36 +88,8 @@ def swing_compress(t_us: np.ndarray, x: np.ndarray,
         raise ValueError("swing: t and x must have equal length")
     if np.any(t[1:] <= t[:-1]):
         raise ValueError("swing: timestamps must be strictly increasing")
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    if n <= 2:
-        return np.arange(n, dtype=np.int64)
-    keep = [0]
-    a = 0                          # anchor index
-    # doors as fractions (num, den), den > 0; None = not yet constrained
-    up_n = up_d = lo_n = lo_d = None
-    i = 1
-    while i < n:
-        dt = int(t[i] - t[a])
-        hi = int(x[i]) + e - int(x[a])      # upper-door numerator
-        lo = int(x[i]) - e - int(x[a])      # lower-door numerator
-        if up_n is None:
-            up_n, up_d, lo_n, lo_d = hi, dt, lo, dt
-            i += 1
-            continue
-        # tighten: up = min(up, hi/dt), lo = max(lo, lo/dt)
-        if hi * up_d < up_n * dt:
-            up_n, up_d = hi, dt
-        if lo * lo_d > lo_n * dt:
-            lo_n, lo_d = lo, dt
-        if lo_n * up_d > up_n * lo_d:       # doors crossed: lo > up
-            a = i - 1
-            keep.append(a)
-            up_n = up_d = lo_n = lo_d = None
-            # reopen over the CURRENT point from the new anchor
-            continue
-        i += 1
-    if keep[-1] != n - 1:
+    keep, _ = swing_doors(t, x, e)
+    if n:
         keep.append(n - 1)
     return np.asarray(keep, dtype=np.int64)
 

@@ -12,10 +12,12 @@ values are the tier's original integers (floats only pick indices).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from yatsm_spark.kernel.downsample import lttb_frame
+from yatsm_spark.kernel.swing import swing_compress
 from yatsm_spark.operators.series import per_series
 
 
@@ -52,8 +54,6 @@ def m4_downsample(tier: DataFrame, value_col: str = "turn_count",
     plan, one shuffle, SQL-oracle-able with no floats anywhere. Output
     is <= 4 rows per bucket regardless of series density.
     """
-    from pyspark.sql import Window
-
     b = F.floor(F.unix_timestamp(F.col(order_col)) / bucket_secs) \
         .cast("long").alias("bucket")
     src = tier.select(by, order_col, value_col, b)
@@ -87,10 +87,6 @@ def swing_door(tier: DataFrame, value_col: str = "turn_count",
     All door decisions are integer cross-multiplications — zero floats,
     so the kept-point set is bit-identical at any parallelism. One
     shuffle on the series key; O(n) kernel per conv."""
-    import numpy as np
-
-    from yatsm_spark.kernel.swing import swing_compress
-
     def fit(pdf):
         t_us = pdf[order_col].to_numpy(dtype="datetime64[us]") \
             .astype(np.int64)

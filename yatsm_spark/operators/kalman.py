@@ -18,8 +18,11 @@ tx_segments and tx_lttb.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 
+from yatsm_spark.kernel.kalman import kalman_local_level
 from yatsm_spark.operators.series import per_series
 
 
@@ -35,11 +38,6 @@ def kalman_smooth(tier: DataFrame, value_col: str = "turn_count",
     the kernel. Linear per series; ``max_n`` is a raising guard against
     runaway mega-series (the kernel is O(n) but driver-visible memory
     per group is bounded by it)."""
-    import numpy as np
-    import pandas as pd
-
-    from yatsm_spark.kernel.kalman import kalman_local_level
-
     def fit(pdf):
         y = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
         level, var, smooth = kalman_local_level(y, q=q, r=r)

@@ -6,21 +6,46 @@ runs in parallel across series and sequentially within each one. Spark owns
 the grouping shuffle and hands each whole group to the kernel as one pandas
 frame; this module owns what every such stage needs around the kernel: the
 in-group time order, the series-length guard and the output schema.
+
+The streaming twins (streaming/stream_rollup.py) cross the same boundary
+once per micro-batch through ``per_series_stateful``: the group's rows of
+that micro-batch, sorted the same way, plus the state the previous
+micro-batch left. The resumable kernels in kernel/ take and return that
+state, so batch and stream run one recurrence.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Callable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+Schema = T.StructType | Sequence[str]
+
+
+def _struct(df: DataFrame, schema: Schema) -> T.StructType:
+    if isinstance(schema, T.StructType):
+        return schema
+    dt = dict(df.dtypes)
+    return T.StructType.fromDDL(
+        ", ".join(f"{c} {dt[c]}" if c in dt else c for c in schema))
+
+
+def _sorted(pdf: pd.DataFrame, order: str) -> pd.DataFrame:
+    return pdf.sort_values(order, kind="mergesort", ignore_index=True)
+
+
+def _grouped(df: DataFrame, by: str | Sequence[str]):
+    return df.groupBy(*([by] if isinstance(by, str) else by))
 
 
 def per_series(df: DataFrame, by: str | Sequence[str], order: str,
                kernel: Callable[[pd.DataFrame], pd.DataFrame | None],
-               schema: T.StructType | Sequence[str], *,
-               max_n: int | None = None, name: str) -> DataFrame:
+               schema: Schema, *, max_n: int | None = None,
+               name: str) -> DataFrame:
     """Run ``kernel`` once per ``by`` group of ``df``.
 
     The kernel receives the group stably sorted on ``order`` with a
@@ -30,10 +55,7 @@ def per_series(df: DataFrame, by: str | Sequence[str], order: str,
     ``df.dtypes``) or a ``"name type"`` DDL fragment. A group longer
     than ``max_n`` raises ValueError naming ``name``.
     """
-    if not isinstance(schema, T.StructType):
-        dt = dict(df.dtypes)
-        schema = T.StructType.fromDDL(
-            ", ".join(f"{c} {dt[c]}" if c in dt else c for c in schema))
+    schema = _struct(df, schema)
     cols = schema.fieldNames()
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -41,8 +63,43 @@ def per_series(df: DataFrame, by: str | Sequence[str], order: str,
             raise ValueError(
                 f"{name}: series of {len(pdf)} rows exceeds max_n={max_n}; "
                 "downsample or roll up to a coarser tier first")
-        out = kernel(pdf.sort_values(order, kind="mergesort", ignore_index=True))
+        out = kernel(_sorted(pdf, order))
         return pd.DataFrame(columns=cols) if out is None else out
 
-    keys = [by] if isinstance(by, str) else list(by)
-    return df.groupBy(*keys).applyInPandas(run, schema)
+    return _grouped(df, by).applyInPandas(run, schema)
+
+
+def per_series_stateful(df: DataFrame, by: str | Sequence[str], order: str,
+                        step: Callable[[pd.DataFrame, tuple | None],
+                                       tuple[pd.DataFrame | None, tuple | None]],
+                        schema: Schema, state_schema: Schema, *,
+                        name: str) -> DataFrame:
+    """Run ``step`` once per ``by`` group of each micro-batch of the
+    streaming ``df``, carrying a per-group state between micro-batches.
+
+    Spark may hand a group's micro-batch over in several Arrow chunks
+    (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows each); the
+    step receives them concatenated and stably sorted on ``order`` with a
+    0..n-1 index, together with the stored state (a tuple of
+    ``state_schema``'s fields, or None for a new group). It returns
+    ``(out, state)``: a frame of ``schema``'s columns or None for no
+    rows, and the state to store, None removing it. Schemas resolve as in
+    ``per_series``. Append output mode, no timeout: a group's state lives
+    until its step removes it. ``name`` labels the stage in query plans
+    and the streaming UI.
+    """
+    def run(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        out, new = step(_sorted(pd.concat(pdfs, ignore_index=True), order),
+                        state.get if state.exists else None)
+        if new is None:
+            state.remove()
+        else:
+            state.update(tuple(new))
+        if out is not None and len(out):
+            yield out
+
+    run.__name__ = run.__qualname__ = name
+    return _grouped(df, by).applyInPandasWithState(
+        run, outputStructType=_struct(df, schema),
+        stateStructType=_struct(df, state_schema), outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout)

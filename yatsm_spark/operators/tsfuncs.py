@@ -21,9 +21,14 @@ every policy here is a deterministic function of the dense tier.
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from yatsm_spark.kernel import smooth
 from yatsm_spark.operators.series import per_series
 
 
@@ -151,20 +156,12 @@ def ewma(df: DataFrame, value_col: str, alpha: float = 0.25,
     in identical order and the accumulated stream agrees to the last
     bit (the DuckDB oracle replays the recurrence with a recursive CTE).
     The default 0.25 satisfies this; other alphas work but drift by
-    ulps between engines and would need grid-snapping.
+    ulps between engines and would need grid-snapping. The recurrence is
+    kernel/smooth.py::ewma, shared with ``stream_ewma``.
     """
-    import numpy as np
-
-    beta = 1.0 - alpha
-
     def fit(pdf):
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        s = np.empty(len(x), dtype=np.float64)
-        if len(x):
-            s[0] = x[0]
-            for i in range(1, len(x)):
-                s[i] = alpha * x[i] + beta * s[i - 1]
-        pdf["ewma"] = s
+        pdf["ewma"], _ = smooth.ewma(
+            pdf[value_col].to_numpy(dtype=np.float64), alpha)
         return pdf
 
     return per_series(df.select(by, order_col, value_col), by, order_col, fit,
@@ -448,8 +445,8 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
                           by: str = "conv_id",
                           order_col: str = "window_start",
                           max_n: int = 4096) -> DataFrame:
-    """One-step-ahead forecast backtest of ``holt_winters``: replay the
-    identical recurrence, forecast each slot i >= 1 as
+    """One-step-ahead forecast backtest of ``holt_winters``: run the
+    same kernel (kernel/smooth.py), forecast each slot i >= 1 as
     f_i = (l_{i-1} + b_{i-1}) + s_prev(i) BEFORE observing x_i, and
     report per-series accuracy:
 
@@ -468,14 +465,6 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
     is ONE final snapped division of exact integers. ``max_n`` (4096)
     also keeps n*1e12 inside double's exact-integer range for the rmse
     denominator."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    a, a1 = alpha, 1.0 - alpha
-    b, b1 = beta, 1.0 - beta
-    g, g1 = gamma, 1.0 - gamma
     p = int(period)
     if p < 1:
         raise ValueError("period must be >= 1")
@@ -491,15 +480,11 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
         key = pdf.iloc[0, 0]
         xi = pdf[value_col].to_numpy(dtype=np.int64)
         x = xi.astype(np.float64)
+        (lv, tr, se), _ = smooth.holt_winters(x, alpha, beta, gamma, p)
         sum_ae6 = sum_sq = sum_t6 = 0
         sum_naive = n_naive = 0
-        lv, tr = (x[0], 0.0) if n else (0.0, 0.0)
-        ring = [0.0] * p
-        if n:
-            ring = ring[1:] + [0.0]
         for i in range(1, n):
-            sp = ring[0]
-            f = (lv + tr) + sp
+            f = (lv[i - 1] + tr[i - 1]) + (se[i - p] if i >= p else 0.0)
             e = x[i] - f
             e6 = snap6i(e)
             sum_ae6 += abs(e6)
@@ -510,11 +495,6 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
             if i >= p:
                 sum_naive += int(abs(xi[i] - xi[i - p]))
                 n_naive += 1
-            nl = a * (x[i] - sp) + a1 * (lv + tr)
-            tr = b * (nl - lv) + b1 * tr
-            se = g * (x[i] - nl) + g1 * sp
-            lv = nl
-            ring = ring[1:] + [se]
         ne = max(n - 1, 0)
         mae = rmse = smape = mase = None
         if ne > 0:
@@ -567,11 +547,6 @@ def theil_sen(tier: DataFrame, value_col: str = "turn_count",
     key). Series longer than ``max_n`` raise — downsample first (lttb /
     m4 / cascade to a coarser tier); a silent cap would change the
     estimator."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-
     def fit(pdf):
         n = len(pdf)
         key = pdf.iloc[0, 0]
@@ -620,8 +595,6 @@ def holt(df: DataFrame, value_col: str, alpha: float = 0.5,
     double streams to the last bit — no snapping. One applyInPandas
     pass per series (the recurrence is inherently sequential).
     """
-    import numpy as np
-
     a, b1 = alpha, 1.0 - alpha
     b, b2 = beta, 1.0 - beta
 
@@ -664,28 +637,16 @@ def holt_winters(df: DataFrame, value_col: str, alpha: float = 0.5,
     identical recurrence (seasonal state carried as a p-slot ring list)
     matches the raw double streams to the LAST BIT — no snapping (the
     ewma/holt discipline, extended to a third accumulator). One
-    applyInPandas pass per series; O(period) state."""
-    import numpy as np
-
-    a, a1 = alpha, 1.0 - alpha
-    b, b1 = beta, 1.0 - beta
-    g, g1 = gamma, 1.0 - gamma
+    applyInPandas pass per series; O(period) state. The recurrence is
+    kernel/smooth.py::holt_winters, shared with ``stream_holtwinters``
+    and ``holt_winters_backtest``."""
     p = int(period)
     if p < 1:
         raise ValueError("period must be >= 1")
 
     def fit(pdf):
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        n = len(x)
-        lv = np.empty(n); tr = np.empty(n); se = np.empty(n)
-        if n:
-            lv[0] = x[0]; tr[0] = 0.0; se[0] = g * (x[0] - lv[0])
-            for i in range(1, n):
-                sp = se[i - p] if i >= p else 0.0
-                lv[i] = a * (x[i] - sp) + a1 * (lv[i - 1] + tr[i - 1])
-                tr[i] = b * (lv[i] - lv[i - 1]) + b1 * tr[i - 1]
-                se[i] = g * (x[i] - lv[i]) + g1 * sp
-        pdf["level"] = lv; pdf["trend"] = tr; pdf["seasonal"] = se
+        (pdf["level"], pdf["trend"], pdf["seasonal"]), _ = smooth.holt_winters(
+            pdf[value_col].to_numpy(dtype=np.float64), alpha, beta, gamma, p)
         return pdf
 
     return per_series(df.select(by, order_col, value_col), by, order_col, fit,

@@ -9,8 +9,8 @@ unsupported); the graft's streaming path is the v2 addition:
   the batch rollup row for the same slot — tested in
   tests/test_streaming.py by diffing a Trigger.AvailableNow run against
   the batch operator.
-- ``online_monitor``: applyInPandasWithState per conv — the streaming
-  analogue of the CCDC monitor loop (state = baseline moments + consecutive
+- ``online_monitor``: a stateful per-conv step — the streaming analogue of
+  the CCDC monitor loop (state = baseline moments + consecutive
   over-threshold counter). Emits break alerts online; exact batch parity is
   NOT claimed (the batch kernel refits retrospectively; the online monitor
   is a z-score approximation), matching the engine's batch-is-exact /
@@ -18,27 +18,41 @@ unsupported); the graft's streaming path is the v2 addition:
 - bit-exact streaming twins of the batch series toolkit, each with a
   pinned parity contract across micro-batch boundaries:
   ``stream_anomaly`` (= batch flags, ring of k values),
-  ``stream_ewma`` / ``stream_holtwinters`` (= batch doubles to the last
-  bit, O(1)/O(period) state), ``stream_alert_episodes`` (= batch
-  episodes minus the still-open tail), ``stream_swing`` (= batch
-  archive keep-set minus the stream-unobservable final point),
-  ``stream_left_profile`` (= batch rows exactly, NO withheld tail — a
-  left profile never changes once emitted), ``stream_sessionize``,
-  ``stream_hll_registers`` / ``stream_cms_counters`` (sketch merges ARE
-  streaming aggregates).
+  ``stream_ewma`` / ``stream_holtwinters`` / ``stream_kalman`` (= batch
+  doubles to the last bit), ``stream_alert_episodes`` (= batch episodes
+  minus the still-open tail), ``stream_swing`` (= batch archive keep-set
+  minus the stream-unobservable final point), ``stream_left_profile``
+  (= batch rows exactly, NO withheld tail — a left profile never changes
+  once emitted), ``stream_sessionize``, ``stream_hll_registers`` /
+  ``stream_cms_counters`` (sketch merges ARE streaming aggregates).
+
+The EWMA, Holt-Winters, Kalman-filter and swing-door twins hold no
+recurrence of their own: each runs the batch operator's resumable kernel
+(kernel/smooth.py, kernel/kalman.py, kernel/swing.py) once per micro-batch
+with the state the previous micro-batch returned, so their parity is
+shared code, not a second copy kept in step. Every stateful twin runs
+through operators/series.py::per_series_stateful, which orders each
+group's rows of a micro-batch on window_start as a whole — not per Arrow
+chunk — before the step sees them. Across micro-batches, order is the
+source's append order: rows of a conv must arrive in window_start order
+from one micro-batch to the next, the contract every twin here shares.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from yatsm_spark.ingest import with_measures
+from yatsm_spark.kernel import smooth
+from yatsm_spark.kernel.kalman import _snap6, kalman_filter
+from yatsm_spark.kernel.matrixprofile import left_profile
+from yatsm_spark.kernel.swing import swing_doors
 from yatsm_spark.operators.rollup import MEASURES, turn_aggs
+from yatsm_spark.operators.series import per_series_stateful
+from yatsm_spark.operators.sketches import CMS_DEPTH, cms_col, hll_parts
 
 
 def stream_rollup_1m(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -69,12 +83,20 @@ ALERT_SCHEMA = T.StructType([
     T.StructField("baseline_rate", T.DoubleType(), False),
 ])
 
-_STATE_SCHEMA = T.StructType([
-    T.StructField("n", T.LongType(), False),
-    T.StructField("s", T.DoubleType(), False),      # sum of rates
-    T.StructField("ss", T.DoubleType(), False),     # sum of squared rates
-    T.StructField("consec", T.IntegerType(), False),
-])
+#: the (conv_id, window_start, turn_count) rows every twin reads, and the
+#: leading output columns of the per-row twins
+_ROW = ["conv_id string", "window_start timestamp", "turn_count long"]
+
+
+def _per_conv(stream: DataFrame, step, schema, state_schema, name: str,
+              extra: tuple = ()) -> DataFrame:
+    return per_series_stateful(
+        stream.select("conv_id", "window_start", "turn_count", *extra),
+        "conv_id", "window_start", step, schema, state_schema, name=name)
+
+
+def _micros(ws: pd.Series) -> np.ndarray:
+    return ws.to_numpy(dtype="datetime64[us]").astype(np.int64)
 
 
 def monitor_scan(rates, state, threshold: float, consecutive: int, min_train: int):
@@ -97,8 +119,6 @@ def monitor_scan(rates, state, threshold: float, consecutive: int, min_train: in
 
     Returns (alert list of (row_idx, z, baseline_mean), new_state).
     """
-    import numpy as np
-
     n, s, ss, consec = state
     rates = np.asarray(rates, dtype=np.float64)
     m = len(rates)
@@ -187,23 +207,6 @@ def monitor_scan(rates, state, threshold: float, consecutive: int, min_train: in
     return alerts, (n, s, ss, consec)
 
 
-def _monitor_fn(threshold: float, consecutive: int, min_train: int):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else (0, 0.0, 0.0, 0)
-        alerts = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("window_start", kind="stable")
-            found, st = monitor_scan(
-                pdf["turn_count"].to_numpy(), st, threshold, consecutive, min_train)
-            ws = pdf["window_start"].reset_index(drop=True)
-            alerts.extend((key[0], ws.iloc[j], z, mean) for j, z, mean in found)
-        state.update(tuple(st))
-        if alerts:
-            yield pd.DataFrame(alerts, columns=["conv_id", "alert_ts", "score", "baseline_rate"])
-
-    return fn
-
-
 def online_monitor(
     rollup_stream: DataFrame,
     threshold: float = 3.55,
@@ -213,59 +216,21 @@ def online_monitor(
     """Stateful per-conv break monitor over a streaming 1m rollup.
     State = baseline (n, Σ, Σ²) + consecutive counter — the same moment
     discipline as the tiers, O(1) state per conv."""
-    return rollup_stream.groupBy("conv_id").applyInPandasWithState(
-        _monitor_fn(threshold, consecutive, min_train),
-        outputStructType=ALERT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    def step(pdf, st):
+        found, st = monitor_scan(pdf["turn_count"].to_numpy(),
+                                 st or (0, 0.0, 0.0, 0), threshold,
+                                 consecutive, min_train)
+        if not found:
+            return None, st
+        return pd.DataFrame(
+            [(pdf["conv_id"][j], pdf["window_start"][j], z, mean)
+             for j, z, mean in found],
+            columns=["conv_id", "alert_ts", "score", "baseline_rate"]), st
 
-
-#: stream_anomaly output — every input row, flagged (exact batch parity)
-_ANOM_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("window_start", T.TimestampType()),
-    T.StructField("turn_count", T.LongType()),
-    T.StructField("is_anomaly", T.BooleanType()),
-])
-#: state = ring buffer of the last k values (bounded, O(k) per conv)
-_ANOM_STATE = T.StructType([
-    T.StructField("buf", T.ArrayType(T.LongType())),
-])
-
-
-def _anomaly_fn(k: int, sigma: int, min_n: int):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        buf = list(state.get[0]) if state.exists else []
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("window_start", kind="stable")
-            for ws, v in zip(pdf["window_start"], pdf["turn_count"]):
-                v = int(v)
-                n = len(buf)
-                if n >= min_n:
-                    # Python ints: arbitrary precision, so this is the
-                    # SAME exact-integer cross-multiplied test as the
-                    # batch operator's decimal(38,0) arithmetic.
-                    s = sum(buf)
-                    q = sum(x * x for x in buf)
-                    dev = n * v - s
-                    var_n = n * q - s * s
-                    flag = (dev * dev * (n - 1) > sigma * sigma * n * var_n
-                            if var_n > 0 else dev != 0)
-                else:
-                    flag = None
-                out.append((key[0], ws, v, flag))
-                buf.append(v)
-                if len(buf) > k:
-                    buf = buf[-k:]
-        state.update((buf,))
-        if out:
-            yield pd.DataFrame(out, columns=["conv_id", "window_start",
-                                             "turn_count", "is_anomaly"])
-
-    return fn
+    # state: n, Σ rate, Σ rate², consecutive over-threshold rows
+    return _per_conv(rollup_stream, step, ALERT_SCHEMA,
+                     ["n long", "s double", "ss double", "consec int"],
+                     "online_monitor")
 
 
 def stream_anomaly(rollup_stream: DataFrame, k: int = 30, sigma: int = 3,
@@ -279,83 +244,30 @@ def stream_anomaly(rollup_stream: DataFrame, k: int = 30, sigma: int = 3,
     frame, persisted). Rows are processed in window_start order within
     each micro-batch; cross-batch order is the source's append order —
     the same contract ``online_monitor`` has."""
-    return rollup_stream.groupBy("conv_id").applyInPandasWithState(
-        _anomaly_fn(k, sigma, min_n),
-        outputStructType=_ANOM_SCHEMA,
-        stateStructType=_ANOM_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    def step(pdf, st):
+        buf = list(st[0]) if st else []
+        flags = []
+        for v in pdf["turn_count"].tolist():
+            n = len(buf)
+            if n >= min_n:
+                # Python ints: arbitrary precision, so this is the
+                # SAME exact-integer cross-multiplied test as the
+                # batch operator's decimal(38,0) arithmetic.
+                s = sum(buf)
+                q = sum(x * x for x in buf)
+                dev = n * v - s
+                var_n = n * q - s * s
+                flags.append(dev * dev * (n - 1) > sigma * sigma * n * var_n
+                             if var_n > 0 else dev != 0)
+            else:
+                flags.append(None)
+            buf.append(v)
+            if len(buf) > k:
+                buf = buf[-k:]
+        return pdf.assign(is_anomaly=flags), (buf,)
 
-
-#: stream_alert_episodes output — one row per CLOSED episode
-_EPISODE_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("episode_start", T.TimestampType()),
-    T.StructField("episode_end", T.TimestampType()),
-    T.StructField("n_slots", T.LongType()),
-    T.StructField("peak_zscore", T.DoubleType()),
-    T.StructField("peak_value", T.LongType()),
-])
-#: state = the currently-open episode (epoch-micros bounds, slot count,
-#: peak snapped zscore + its value; has_z distinguishes "all peaks were
-#: NULL-z zero-variance anomalies" from a real peak)
-_EPISODE_STATE = T.StructType([
-    T.StructField("start_us", T.LongType()),
-    T.StructField("end_us", T.LongType()),
-    T.StructField("n", T.LongType()),
-    T.StructField("peakz", T.DoubleType()),
-    T.StructField("has_z", T.BooleanType()),
-    T.StructField("peakv", T.LongType()),
-])
-
-
-def _episode_fn():
-    NEG = float("-inf")
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            s0, e0, n0, pz, has_z, pv = state.get
-            open_ep = (s0, e0, n0, pz if has_z else NEG, pv)
-        else:
-            open_ep = None
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("window_start", kind="stable")
-            for ws, v, flag, z in zip(pdf["window_start"],
-                                      pdf["turn_count"],
-                                      pdf["is_anomaly"], pdf["zscore"]):
-                us = int(pd.Timestamp(ws).value // 1_000)
-                if (not pd.isna(flag)) and bool(flag):
-                    zz = NEG if pd.isna(z) else float(z)
-                    if open_ep is None:
-                        open_ep = (us, us, 1, zz, int(v))
-                    else:
-                        s0, _, n0, bz, bv = open_ep
-                        # >= : equal peaks resolve to the LATER slot,
-                        # matching batch max_by((zscore, slot))
-                        if zz >= bz:
-                            bz, bv = zz, int(v)
-                        open_ep = (s0, us, n0 + 1, bz, bv)
-                elif open_ep is not None:
-                    out.append(open_ep)
-                    open_ep = None
-        if open_ep is not None:
-            s0, e0, n0, bz, bv = open_ep
-            state.update((s0, e0, n0,
-                          0.0 if bz == NEG else bz, bz != NEG, bv))
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(
-                [(key[0], pd.Timestamp(s, unit="us"),
-                  pd.Timestamp(e, unit="us"), n,
-                  None if z == NEG else z, v)
-                 for s, e, n, z, v in out],
-                columns=["conv_id", "episode_start", "episode_end",
-                         "n_slots", "peak_zscore", "peak_value"])
-
-    return fn
+    return _per_conv(rollup_stream, step, _ROW + ["is_anomaly boolean"],
+                     ["buf array<bigint>"], "stream_anomaly")
 
 
 def stream_alert_episodes(flag_stream: DataFrame) -> DataFrame:
@@ -374,172 +286,84 @@ def stream_alert_episodes(flag_stream: DataFrame) -> DataFrame:
     non-flagged row eventually arrives). Input rows must arrive in
     window_start order per conv, the contract every stream in this
     module shares."""
-    return flag_stream.groupBy("conv_id").applyInPandasWithState(
-        _episode_fn(),
-        outputStructType=_EPISODE_SCHEMA,
-        stateStructType=_EPISODE_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    NEG = float("-inf")
 
-
-#: stream_swing output — one row per CONFIRMED archive point
-_SWING_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("window_start", T.TimestampType()),
-    T.StructField("turn_count", T.LongType()),
-])
-#: state = anchor point, previous point, and the open door fractions
-#: (numerators are value-scale, denominators are micros deltas — all
-#: well inside long range; comparisons run in Python ints)
-_SWING_STATE = T.StructType([
-    T.StructField("a_t", T.LongType()),
-    T.StructField("a_x", T.LongType()),
-    T.StructField("p_t", T.LongType()),
-    T.StructField("p_x", T.LongType()),
-    T.StructField("up_n", T.LongType()),
-    T.StructField("up_d", T.LongType()),
-    T.StructField("lo_n", T.LongType()),
-    T.StructField("lo_d", T.LongType()),
-    T.StructField("has_doors", T.BooleanType()),
-])
-
-
-def _swing_fn(e: int):
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (a_t, a_x, p_t, p_x, up_n, up_d, lo_n, lo_d,
-             has_doors) = state.get
-            st = [a_t, a_x, p_t, p_x, up_n, up_d, lo_n, lo_d, has_doors]
-        else:
-            st = None
+    def step(pdf, st):
+        # the open episode: epoch-micros bounds, slot count, peak
+        # snapped zscore + its value; the stored has_z tells "all peaks
+        # were NULL-z zero-variance anomalies" from a real peak
+        open_ep = None if st is None else (st[0], st[1], st[2],
+                                           st[3] if st[4] else NEG, st[5])
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("window_start", kind="stable")
-            for ws, v in zip(pdf["window_start"], pdf["turn_count"]):
-                t = int(pd.Timestamp(ws).value // 1_000)
-                x = int(v)
-                if st is None:
-                    st = [t, x, t, x, 0, 0, 0, 0, False]
-                    continue
-                a_t, a_x, p_t, p_x, up_n, up_d, lo_n, lo_d, hd = st
-                if p_t == a_t:
-                    # anchor just (re)set: confirm it as an archive
-                    # point now that the series continues past it
-                    out.append((key[0], pd.Timestamp(a_t, unit="us"),
-                                a_x))
-                while True:
-                    dt = t - a_t
-                    hi = x + e - a_x
-                    lo = x - e - a_x
-                    if not hd:
-                        up_n, up_d, lo_n, lo_d, hd = hi, dt, lo, dt, True
-                        break
-                    if hi * up_d < up_n * dt:
-                        up_n, up_d = hi, dt
-                    if lo * lo_d > lo_n * dt:
-                        lo_n, lo_d = lo, dt
-                    if lo_n * up_d > up_n * lo_d:   # doors crossed
-                        out.append((key[0],
-                                    pd.Timestamp(p_t, unit="us"), p_x))
-                        a_t, a_x = p_t, p_x
-                        hd = False
-                        continue                    # reopen over x
-                    break
-                st = [a_t, a_x, t, x, up_n, up_d, lo_n, lo_d, hd]
-        if st is not None:
-            state.update(tuple(st))
-        if out:
-            yield pd.DataFrame(out, columns=["conv_id", "window_start",
-                                             "turn_count"])
+        for us, v, flag, z in zip(_micros(pdf["window_start"]).tolist(),
+                                  pdf["turn_count"], pdf["is_anomaly"],
+                                  pdf["zscore"]):
+            if (not pd.isna(flag)) and bool(flag):
+                zz = NEG if pd.isna(z) else float(z)
+                if open_ep is None:
+                    open_ep = (us, us, 1, zz, int(v))
+                else:
+                    s0, _, n0, bz, bv = open_ep
+                    # >= : equal peaks resolve to the LATER slot,
+                    # matching batch max_by((zscore, slot))
+                    if zz >= bz:
+                        bz, bv = zz, int(v)
+                    open_ep = (s0, us, n0 + 1, bz, bv)
+            elif open_ep is not None:
+                out.append(open_ep)
+                open_ep = None
+        frame = pd.DataFrame(
+            [(pdf["conv_id"][0], pd.Timestamp(s, unit="us"),
+              pd.Timestamp(e, unit="us"), n, None if z == NEG else z, v)
+             for s, e, n, z, v in out],
+            columns=["conv_id", "episode_start", "episode_end",
+                     "n_slots", "peak_zscore", "peak_value"]) if out else None
+        if open_ep is None:
+            return frame, None
+        s0, e0, n0, bz, bv = open_ep
+        return frame, (s0, e0, n0, 0.0 if bz == NEG else bz, bz != NEG, bv)
 
-    return fn
+    return _per_conv(
+        flag_stream, step,
+        ["conv_id string", "episode_start timestamp", "episode_end timestamp",
+         "n_slots long", "peak_zscore double", "peak_value long"],
+        ["start_us long", "end_us long", "n long", "peakz double",
+         "has_z boolean", "peakv long"],
+        "stream_alert_episodes", extra=("is_anomaly", "zscore"))
 
 
 def stream_swing(rollup_stream: DataFrame, e: int = 2) -> DataFrame:
     """Streaming twin of ``operators.downsample.swing_door``: the
     swinging-door retention codec maintained online with O(1) state per
-    conv (anchor, previous point, open door fractions). Decisions are
-    the SAME integer cross-multiplications as the batch kernel on the
-    same rows, so the emitted archive stream is EXACTLY the batch
-    keep-set minus its final element — the series-final point is only
-    archivable once the series ends, which a stream never observes
-    (pytest pins the contract, including a micro-batch boundary landing
-    mid-corridor). Rows must arrive in window_start order per conv —
-    the module-wide contract."""
+    conv (anchor, previous point, open door fractions). The door scan is
+    the batch kernel's own (kernel/swing.py::swing_doors) with the state
+    carried across micro-batches, so the emitted archive stream is
+    EXACTLY the batch keep-set minus its final element — the
+    series-final point is only archivable once the series ends, which a
+    stream never observes (pytest pins the contract, including a
+    micro-batch boundary landing mid-corridor). Rows must arrive in
+    window_start order per conv — the module-wide contract."""
     if e < 0:
         raise ValueError("stream_swing: error bound e must be >= 0")
-    return rollup_stream.groupBy("conv_id").applyInPandasWithState(
-        _swing_fn(int(e)),
-        outputStructType=_SWING_SCHEMA,
-        stateStructType=_SWING_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    e = int(e)
 
+    def step(pdf, st):
+        kept, new = swing_doors(_micros(pdf["window_start"]),
+                                pdf["turn_count"].to_numpy(np.int64), e, st)
+        if st is not None:
+            # kept index -1 is the carried previous point: row 0 here
+            prev = pdf.iloc[:1].assign(
+                window_start=pd.Timestamp(st[2], unit="us"), turn_count=st[3])
+            pdf = pd.concat([prev, pdf], ignore_index=True)
+            kept = [i + 1 for i in kept]
+        return pdf.iloc[kept], new
 
-#: stream_left_profile output — one row per window, the novelty score
-_LP_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("idx", T.LongType()),
-    T.StructField("window_start", T.TimestampType()),
-    T.StructField("lp", T.DoubleType()),
-    T.StructField("lp_idx", T.LongType()),
-])
-#: state = ring of the last m-1+excl+w_hist raw values (+ their slot
-#: micros), plus the global bookkeeping that maps ring-local window
-#: indices back to series indices
-_LP_STATE = T.StructType([
-    T.StructField("vals", T.ArrayType(T.LongType())),
-    T.StructField("ts", T.ArrayType(T.LongType())),
-    T.StructField("n_dropped", T.LongType()),
-    T.StructField("n_emitted", T.LongType()),
-])
-
-
-def _lp_fn(m: int, w_hist: int, excl: int):
-    import numpy as np
-
-    from yatsm_spark.kernel.matrixprofile import left_profile
-
-    R = m - 1 + excl + w_hist      # exactly enough history for parity
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            vals, ts, n_dropped, n_emitted = state.get
-            vals, ts = list(vals), list(ts)
-        else:
-            vals, ts, n_dropped, n_emitted = [], [], 0, 0
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("window_start", kind="stable")
-            for ws, v in zip(pdf["window_start"], pdf["turn_count"]):
-                vals.append(int(v))
-                ts.append(int(pd.Timestamp(ws).value // 1_000))
-        if vals:
-            lp, lpi = left_profile(np.array(vals, dtype=np.int64),
-                                   m, w_hist, excl)
-            for w in range(len(lp)):
-                gidx = n_dropped + w
-                if gidx < n_emitted:
-                    continue
-                out.append((key[0], gidx,
-                            pd.Timestamp(ts[w], unit="us"),
-                            None if not np.isfinite(lp[w])
-                            else float(lp[w]),
-                            None if lpi[w] < 0
-                            else int(n_dropped + lpi[w])))
-                n_emitted = gidx + 1
-            drop = max(0, len(vals) - R)
-            vals, ts = vals[drop:], ts[drop:]
-            n_dropped += drop
-        state.update((vals, ts, n_dropped, n_emitted))
-        if out:
-            yield pd.DataFrame(out, columns=["conv_id", "idx",
-                                             "window_start", "lp",
-                                             "lp_idx"])
-
-    return fn
+    # state: anchor, previous point and the open door fractions
+    # (numerators are value-scale, denominators micros deltas)
+    return _per_conv(rollup_stream, step, _ROW,
+                     ["a_t long", "a_x long", "p_t long", "p_x long",
+                      "up_n long", "up_d long", "lo_n long", "lo_d long",
+                      "has_doors boolean"], "stream_swing")
 
 
 def stream_left_profile(rollup_stream: DataFrame, m: int = 12,
@@ -554,143 +378,80 @@ def stream_left_profile(rollup_stream: DataFrame, m: int = 12,
     and the kernel replayed per micro-batch is the SAME
     left_profile(), so parity is structural, not numerical luck
     (pytest pins bit equality across a micro-batch boundary)."""
-    if excl is None:
-        excl = m // 2
-    return rollup_stream.groupBy("conv_id").applyInPandasWithState(
-        _lp_fn(int(m), int(w_hist), int(excl)),
-        outputStructType=_LP_SCHEMA,
-        stateStructType=_LP_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    m, w_hist = int(m), int(w_hist)
+    excl = m // 2 if excl is None else int(excl)
+    R = m - 1 + excl + w_hist      # exactly enough history for parity
 
-
-#: stream_ewma output — every input row with its smoothed value
-_EWMA_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("window_start", T.TimestampType()),
-    T.StructField("turn_count", T.LongType()),
-    T.StructField("ewma", T.DoubleType()),
-])
-#: state = the last smoothed value (one double per conv)
-_EWMA_STATE = T.StructType([T.StructField("s", T.DoubleType())])
-
-
-def _ewma_fn(alpha: float):
-    beta = 1.0 - alpha
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        s = state.get[0] if state.exists else None
+    def step(pdf, st):
+        # ring of raw values + their slot micros, and the bookkeeping that
+        # maps ring-local window indices back to series indices
+        vals, ts, n_dropped, n_emitted = \
+            (list(st[0]), list(st[1]), st[2], st[3]) if st else ([], [], 0, 0)
+        vals += pdf["turn_count"].tolist()
+        ts += _micros(pdf["window_start"]).tolist()
+        lp, lpi = left_profile(np.array(vals, dtype=np.int64), m, w_hist, excl)
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("window_start", kind="stable")
-            for ws, v in zip(pdf["window_start"], pdf["turn_count"]):
-                x = float(v)
-                s = x if s is None else alpha * x + beta * s
-                out.append((key[0], ws, int(v), s))
-        if s is not None:
-            state.update((s,))
-        if out:
-            yield pd.DataFrame(out, columns=["conv_id", "window_start",
-                                             "turn_count", "ewma"])
+        for w in range(max(n_emitted - n_dropped, 0), len(lp)):
+            out.append((pdf["conv_id"][0], n_dropped + w,
+                        pd.Timestamp(ts[w], unit="us"),
+                        float(lp[w]) if np.isfinite(lp[w]) else None,
+                        int(n_dropped + lpi[w]) if lpi[w] >= 0 else None))
+        n_emitted = max(n_emitted, n_dropped + len(lp))
+        drop = max(0, len(vals) - R)
+        frame = pd.DataFrame(out, columns=["conv_id", "idx", "window_start",
+                                           "lp", "lp_idx"])
+        return frame, (vals[drop:], ts[drop:], n_dropped + drop, n_emitted)
 
-    return fn
+    return _per_conv(rollup_stream, step,
+                     ["conv_id string", "idx long", "window_start timestamp",
+                      "lp double", "lp_idx long"],
+                     ["vals array<bigint>", "ts array<bigint>",
+                      "n_dropped long", "n_emitted long"],
+                     "stream_left_profile")
 
 
 def stream_ewma(rollup_stream: DataFrame, alpha: float = 0.25) -> DataFrame:
     """Streaming twin of ``operators.tsfuncs.ewma``: the adjust=False
-    recurrence maintained online with O(1) state per conv (the last
-    smoothed double). Same float64 multiply-add order as the batch
-    kernel, so the emitted stream is BIT-equal to the batch column on
+    recurrence (kernel/smooth.py::ewma, the batch operator's own)
+    maintained online with O(1) state per conv (the last smoothed
+    double), so the emitted stream is BIT-equal to the batch column on
     the same rows in the same order — including across micro-batch
     boundaries, where the state round-trip must preserve the exact
     double (pytest pins it). Pick alpha whose complement is an exact
     binary fraction (0.25 default) for the cross-engine guarantee the
     batch operator documents."""
-    return rollup_stream.groupBy("conv_id").applyInPandasWithState(
-        _ewma_fn(alpha),
-        outputStructType=_EWMA_SCHEMA,
-        stateStructType=_EWMA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    def step(pdf, st):
+        s, st = smooth.ewma(pdf["turn_count"].to_numpy(np.float64), alpha, st)
+        return pdf.assign(ewma=s), st
 
-
-_HW_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("window_start", T.TimestampType()),
-    T.StructField("turn_count", T.LongType()),
-    T.StructField("level", T.DoubleType()),
-    T.StructField("trend", T.DoubleType()),
-    T.StructField("seasonal", T.DoubleType()),
-])
-#: state = (level, trend, ring of the last `period` seasonals). The
-#: zero-initialized ring makes the warm-up window implicit: while fewer
-#: than `period` rows have been seen, s_prev reads a 0.0 slot — exactly
-#: the batch kernel's `se[i-p] if i >= p else 0.0`.
-_HW_STATE = T.StructType([
-    T.StructField("level", T.DoubleType()),
-    T.StructField("trend", T.DoubleType()),
-    T.StructField("ring", T.ArrayType(T.DoubleType())),
-])
-
-
-def _hw_fn(alpha: float, beta: float, gamma: float, period: int):
-    a, a1 = alpha, 1.0 - alpha
-    b, b1 = beta, 1.0 - beta
-    g, g1 = gamma, 1.0 - gamma
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            lv, tr, ring = state.get[0], state.get[1], list(state.get[2])
-        else:
-            lv, tr, ring = None, 0.0, [0.0] * period
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("window_start", kind="stable")
-            for ws, v in zip(pdf["window_start"], pdf["turn_count"]):
-                x = float(v)
-                if lv is None:
-                    lv, tr, se = x, 0.0, 0.0
-                else:
-                    sp = ring[0]
-                    nl = a * (x - sp) + a1 * (lv + tr)
-                    tr = b * (nl - lv) + b1 * tr
-                    se = g * (x - nl) + g1 * sp
-                    lv = nl
-                ring = ring[1:] + [se]
-                out.append((key[0], ws, int(v), lv, tr, se))
-        if lv is not None:
-            state.update((lv, tr, ring))
-        if out:
-            yield pd.DataFrame(out, columns=["conv_id", "window_start",
-                                             "turn_count", "level",
-                                             "trend", "seasonal"])
-
-    return fn
+    return _per_conv(rollup_stream, step, _ROW + ["ewma double"],
+                     ["s double"], "stream_ewma")
 
 
 def stream_holtwinters(rollup_stream: DataFrame, alpha: float = 0.5,
                        beta: float = 0.25, gamma: float = 0.25,
                        period: int = 24) -> DataFrame:
     """Streaming twin of ``operators.tsfuncs.holt_winters``: the additive
-    triple-smoothing recurrence maintained online with O(period) state
-    per conv (level + trend doubles and a `period`-slot seasonal ring,
-    the same ring the DuckDB oracle carries). The recurrence evaluates
-    the identical float64 expressions in the identical order as the
-    batch kernel, so emitted level/trend/seasonal streams are BIT-equal
-    to the batch columns — including across micro-batch boundaries,
-    where the array-typed state round-trip must hand back exact doubles
-    (pytest pins it)."""
+    triple-smoothing recurrence (kernel/smooth.py::holt_winters, the
+    batch operator's own) maintained online with O(period) state per
+    conv (level + trend doubles and a `period`-slot seasonal ring, the
+    same ring the DuckDB oracle carries), so emitted level/trend/seasonal
+    streams are BIT-equal to the batch columns — including across
+    micro-batch boundaries, where the array-typed state round-trip must
+    hand back exact doubles (pytest pins it)."""
     if period < 1:
         raise ValueError("period must be >= 1")
-    return rollup_stream.groupBy("conv_id").applyInPandasWithState(
-        _hw_fn(alpha, beta, gamma, period),
-        outputStructType=_HW_SCHEMA,
-        stateStructType=_HW_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+
+    def step(pdf, st):
+        (lv, tr, se), st = smooth.holt_winters(
+            pdf["turn_count"].to_numpy(np.float64), alpha, beta, gamma,
+            period, st)
+        return pdf.assign(level=lv, trend=tr, seasonal=se), st
+
+    return _per_conv(rollup_stream, step,
+                     _ROW + ["level double", "trend double", "seasonal double"],
+                     ["level double", "trend double", "ring array<double>"],
+                     "stream_holtwinters")
 
 
 def stream_sessionize(stream: DataFrame, key_col: str = "user_id",
@@ -744,8 +505,6 @@ def stream_hll_registers(stream: DataFrame, group_cols: list[str],
     construction equals the batch ``hll_distinct`` of the same rows
     (pinned by tests/test_streaming.py::test_stream_hll_equals_batch).
     """
-    from yatsm_spark.operators.sketches import hll_parts
-
     bucket, rho = hll_parts(value_col)
     s = (stream.filter(F.col(value_col).isNotNull())
                .withWatermark(ts_col, watermark))
@@ -773,8 +532,6 @@ def stream_cms_counters(stream: DataFrame, group_cols: list[str],
     of the same rows (tests/test_streaming.py::
     test_stream_cms_equals_batch).
     """
-    from yatsm_spark.operators.sketches import CMS_DEPTH, cms_col
-
     s = (stream.filter(F.col(value_col).isNotNull())
                .withWatermark(ts_col, watermark))
     cells = F.explode(F.array(*[
@@ -790,72 +547,23 @@ def stream_cms_counters(stream: DataFrame, group_cols: list[str],
                      *group_cols, "r", "c", "cnt"))
 
 
-#: stream_kalman output — every input row with its filtered level/variance
-_KAL_SCHEMA = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("window_start", T.TimestampType()),
-    T.StructField("turn_count", T.LongType()),
-    T.StructField("kalman_level", T.DoubleType()),
-    T.StructField("kalman_var", T.DoubleType()),
-])
-#: state = the UNSNAPPED posterior (m, p) — snapping happens only on emit
-#: (kernel/kalman.py discipline), so the recursion dynamics round-trip
-#: the exact doubles across micro-batches.
-_KAL_STATE = T.StructType([
-    T.StructField("m", T.DoubleType()),
-    T.StructField("p", T.DoubleType()),
-])
-
-
-def _kalman_fn(q: float, r: float, p0: float):
-    import math
-
-    def _snap(x: float) -> float:
-        return math.floor(x * 1e6 + 0.5) / 1e6
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            m, p = state.get[0], state.get[1]
-            seen = True
-        else:
-            m, p, seen = 0.0, p0, False
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("window_start", kind="stable")
-            for ws, v in zip(pdf["window_start"], pdf["turn_count"]):
-                x = float(v)
-                if seen:
-                    p = p + q
-                else:
-                    m, seen = x, True  # diffuse first-observation prior
-                k = p / (p + r)
-                m = m + k * (x - m)
-                p = (1.0 - k) * p
-                out.append((key[0], ws, int(v), _snap(m), _snap(p)))
-        state.update((m, p))
-        if out:
-            yield pd.DataFrame(out, columns=["conv_id", "window_start",
-                                             "turn_count", "kalman_level",
-                                             "kalman_var"])
-
-    return fn
-
-
 def stream_kalman(rollup_stream: DataFrame, q: float = 1.0, r: float = 4.0,
                   p0: float = 1e6) -> DataFrame:
     """Streaming twin of the FORWARD pass of ``operators.kalman.
-    kalman_smooth``: the local-level Kalman filter maintained online with
-    O(1) state per conv (posterior mean + variance, two doubles). The
-    float64 op order is identical to kernel/kalman.py's filter loop, so
-    emitted (kalman_level, kalman_var) are BIT-equal to the batch
-    columns on the same rows — including across micro-batch boundaries
-    (state stores the unsnapped doubles; pytest pins it). The RTS
-    smoother column is inherently offline (it reads the future) and has
-    no streaming twin — by design, not omission."""
-    return rollup_stream.groupBy("conv_id").applyInPandasWithState(
-        _kalman_fn(q, r, p0),
-        outputStructType=_KAL_SCHEMA,
-        stateStructType=_KAL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    kalman_smooth``: the local-level Kalman filter
+    (kernel/kalman.py::kalman_filter, the batch operator's own)
+    maintained online with O(1) state per conv (posterior mean +
+    variance, two doubles), so emitted (kalman_level, kalman_var) are
+    BIT-equal to the batch columns on the same rows — including across
+    micro-batch boundaries: the state stores the UNSNAPPED doubles and
+    snapping happens only on emit (pytest pins it). The RTS smoother
+    column is inherently offline (it reads the future) and has no
+    streaming twin — by design, not omission."""
+    def step(pdf, st):
+        (_, _, m, p), st = kalman_filter(
+            pdf["turn_count"].to_numpy(np.float64), q, r, p0, st)
+        return pdf.assign(kalman_level=_snap6(m), kalman_var=_snap6(p)), st
+
+    return _per_conv(rollup_stream, step,
+                     _ROW + ["kalman_level double", "kalman_var double"],
+                     ["m double", "p double"], "stream_kalman")
