@@ -81,37 +81,54 @@ def _day_to_ts(day: float) -> pd.Timestamp:
     return pd.Timestamp(round(day * 86400.0), unit="s")
 
 
+def _conv_series(conv_max: str, sql: str = GAPFILLED_1M_SQL,
+                 cols: tuple[str, ...] = ("turn_count",)):
+    """(conv_id, t in days, Y (len(cols), n)) per conv in conv_id order,
+    from the dense 1m table (DuckDB)."""
+    filled = duckdb.sql(sql.format(tx=TX, conv_max=conv_max)).df()
+    for conv_id, g in filled.groupby("conv_id", sort=True):
+        g = g.sort_values("window_start", kind="stable")
+        epochs = g["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
+        yield conv_id, epochs / 86400.0, np.vstack(
+            [g[c].to_numpy(dtype=np.float64) for c in cols])
+
+
+def _segment_row(conv_id: str, i: int, s, fit: bool = True) -> dict:
+    """The columns every segments-shaped golden starts with; ``fit`` adds
+    series 0's coef_j / rmse / magnitude / n_obs."""
+    row = {
+        "conv_id": conv_id,
+        "segment_id": np.int32(i),
+        "start_ts": _day_to_ts(s.start_day),
+        "end_ts": _day_to_ts(s.end_day),
+        "break_ts": _day_to_ts(s.break_day) if s.break_day else pd.NaT,
+    }
+    if fit:
+        for j in range(N_COEF):
+            row[f"coef_{j}"] = float(s.coef[0][j])
+        row.update(rmse=float(s.rmse[0]), magnitude=float(s.magnitude[0]),
+                   n_obs=np.int32(s.n_obs))
+    return row
+
+
+def _frame(rows: list[dict], int32_cols=("segment_id", "n_obs")) -> pd.DataFrame:
+    out = pd.DataFrame(rows)
+    for c in int32_cols:
+        out[c] = out[c].astype(np.int32)
+    return out
+
+
 def segments_twin(conv_max: str, convs: set[str] | None = None) -> pd.DataFrame:
     """Numpy-twin of q_tx_segments: dense 1m turn_count series per conv
     (DuckDB), then kernel ccdc_fit per conv in input order."""
-    filled = duckdb.sql(GAPFILLED_1M_SQL.format(tx=TX, conv_max=conv_max)).df()
     params = _conv_params()
     rows = []
-    for conv_id, g in filled.groupby("conv_id", sort=True):
+    for conv_id, t, Y in _conv_series(conv_max):
         if convs is not None and conv_id not in convs:
             continue
-        g = g.sort_values("window_start", kind="stable")
-        epochs = g["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        y = g["turn_count"].to_numpy(dtype=np.float64)
-        t = epochs / 86400.0
-        res = ccdc_fit(t, y, params)
-        for i, s in enumerate(res.segments):
-            row = {
-                "conv_id": conv_id,
-                "segment_id": np.int32(i),
-                "start_ts": _day_to_ts(s.start_day),
-                "end_ts": _day_to_ts(s.end_day),
-                "break_ts": _day_to_ts(s.break_day) if s.break_day else pd.NaT,
-            }
-            for j in range(N_COEF):
-                row[f"coef_{j}"] = float(s.coef[0][j])
-            row.update(rmse=float(s.rmse[0]), magnitude=float(s.magnitude[0]),
-                       n_obs=np.int32(s.n_obs))
-            rows.append(row)
-    out = pd.DataFrame(rows)
-    out["segment_id"] = out["segment_id"].astype(np.int32)
-    out["n_obs"] = out["n_obs"].astype(np.int32)
-    return out
+        for i, s in enumerate(ccdc_fit(t, Y, params).segments):
+            rows.append(_segment_row(conv_id, i, s))
+    return _frame(rows)
 
 
 GAPFILLED_MULTI_SQL = """
@@ -141,23 +158,12 @@ def segments_multi_twin(conv_max: str) -> pd.DataFrame:
     """Numpy-twin of q_tx_segments_multi: joint [turn_count,
     tool_call_count] fit per conv, per-band outputs flattened to scalar
     columns (coef_{band}_{j}, rmse_{band}, magnitude_{band})."""
-    filled = duckdb.sql(GAPFILLED_MULTI_SQL.format(tx=TX, conv_max=conv_max)).df()
     params = _conv_params()
     rows = []
-    for conv_id, g in filled.groupby("conv_id", sort=True):
-        g = g.sort_values("window_start", kind="stable")
-        epochs = g["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        Y = np.vstack([g["turn_count"].to_numpy(dtype=np.float64),
-                       g["tool_call_count"].to_numpy(dtype=np.float64)])
-        res = ccdc_fit(epochs / 86400.0, Y, params)
-        for i, s in enumerate(res.segments):
-            row = {
-                "conv_id": conv_id,
-                "segment_id": np.int32(i),
-                "start_ts": _day_to_ts(s.start_day),
-                "end_ts": _day_to_ts(s.end_day),
-                "break_ts": _day_to_ts(s.break_day) if s.break_day else pd.NaT,
-            }
+    for conv_id, t, Y in _conv_series(conv_max, GAPFILLED_MULTI_SQL,
+                                      ("turn_count", "tool_call_count")):
+        for i, s in enumerate(ccdc_fit(t, Y, params).segments):
+            row = _segment_row(conv_id, i, s, fit=False)
             for b in range(2):
                 for j in range(N_COEF):
                     row[f"coef_{b}_{j}"] = float(s.coef[b][j])
@@ -165,16 +171,16 @@ def segments_multi_twin(conv_max: str) -> pd.DataFrame:
                 row[f"magnitude_{b}"] = float(s.magnitude[b])
             row["n_obs"] = np.int32(s.n_obs)
             rows.append(row)
-    out = pd.DataFrame(rows)
-    out["segment_id"] = out["segment_id"].astype(np.int32)
-    out["n_obs"] = out["n_obs"].astype(np.int32)
-    return out
+    return _frame(rows)
 
 
-def classify_twin(segments: pd.DataFrame) -> pd.DataFrame:
-    """Numpy-twin of q_tx_classify on the conv<200 slice of the segments
-    twin: deterministic activity labels, sorted bounded sample, seeded
-    forest, predict every segment."""
+FCOLS = [f"coef_{j}" for j in range(N_COEF)] + ["rmse", "magnitude", "n_obs"]
+
+
+def _labeled_sample(segments: pd.DataFrame):
+    """(segs, feats, sample): the conv<200 slice of the segments twin, its
+    feature frame, and the sorted labeled sample (conv<100, labelled by
+    turn count) the classify and crossval queries train on."""
     segs = segments[segments["conv_id"] < "conv00000200"].reset_index(drop=True)
     labels = duckdb.sql(f"""
         SELECT conv_id,
@@ -182,14 +188,21 @@ def classify_twin(segments: pd.DataFrame) -> pd.DataFrame:
         FROM read_parquet('{TX}/*.parquet')
         WHERE conv_id < 'conv00000100' GROUP BY conv_id
     """).df()
-    fcols = [f"coef_{j}" for j in range(N_COEF)] + ["rmse", "magnitude", "n_obs"]
-    feats = segs[["conv_id", "segment_id"] + fcols].copy()
+    feats = segs[["conv_id", "segment_id"] + FCOLS].copy()
     feats["n_obs"] = feats["n_obs"].astype(np.float64)
     sample = feats.merge(labels, on="conv_id")
     sample = sample.sort_values(["conv_id", "segment_id"], kind="stable").reset_index(drop=True)
+    return segs, feats, sample
+
+
+def classify_twin(segments: pd.DataFrame) -> pd.DataFrame:
+    """Numpy-twin of q_tx_classify on the conv<200 slice of the segments
+    twin: deterministic activity labels, sorted bounded sample, seeded
+    forest, predict every segment."""
+    segs, feats, sample = _labeled_sample(segments)
     model = RandomForest(n_trees=20, seed=11).fit(
-        sample[fcols].to_numpy(dtype=np.float64), sample["label"].to_numpy())
-    proba = model.predict_proba(feats[fcols].to_numpy(dtype=np.float64))
+        sample[FCOLS].to_numpy(dtype=np.float64), sample["label"].to_numpy())
+    proba = model.predict_proba(feats[FCOLS].to_numpy(dtype=np.float64))
     k = np.argmax(proba, axis=1)
     return pd.DataFrame({
         "conv_id": segs["conv_id"],
@@ -205,19 +218,8 @@ def crossval_twin(segments: pd.DataFrame) -> pd.DataFrame:
     Spark lineage (segments -> features -> bounded sample collection)."""
     from yatsm_spark.kernel.classify import kfold_scores
 
-    segs = segments[segments["conv_id"] < "conv00000200"].reset_index(drop=True)
-    labels = duckdb.sql(f"""
-        SELECT conv_id,
-               CASE WHEN count(*) >= 400 THEN 'active' ELSE 'light' END AS label
-        FROM read_parquet('{TX}/*.parquet')
-        WHERE conv_id < 'conv00000100' GROUP BY conv_id
-    """).df()
-    fcols = [f"coef_{j}" for j in range(N_COEF)] + ["rmse", "magnitude", "n_obs"]
-    feats = segs[["conv_id", "segment_id"] + fcols].copy()
-    feats["n_obs"] = feats["n_obs"].astype(np.float64)
-    sample = feats.merge(labels, on="conv_id")
-    sample = sample.sort_values(["conv_id", "segment_id"], kind="stable").reset_index(drop=True)
-    scores = kfold_scores(sample[fcols].to_numpy(dtype=np.float64),
+    _, _, sample = _labeled_sample(segments)
+    scores = kfold_scores(sample[FCOLS].to_numpy(dtype=np.float64),
                           sample["label"].to_numpy(), k=5, n_trees=20)
     return pd.DataFrame({"fold": np.arange(5), "accuracy": scores})
 
@@ -234,40 +236,23 @@ def postprocess_twin(conv_max: str, crit: float | None) -> pd.DataFrame:
         refit_segments,
     )
 
-    filled = duckdb.sql(GAPFILLED_1M_SQL.format(tx=TX, conv_max=conv_max)).df()
     params = _conv_params()
     rows = []
-    for conv_id, g in filled.groupby("conv_id", sort=True):
-        g = g.sort_values("window_start", kind="stable")
-        epochs = g["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        y = g["turn_count"].to_numpy(dtype=np.float64)
-        t = epochs / 86400.0
+    for conv_id, t, Y in _conv_series(conv_max):
+        y = Y[0]
         segs = ccdc_fit(t, y, params).segments
         if crit is not None:
             segs = commission_test(t, y, segs, params, crit=crit)
         om = omission_scores(t, y, segs, params)
         rf = refit_segments(t, y, segs, params, estimator="rlm_maxiter10")
         for i, s in enumerate(segs):
-            row = {
-                "conv_id": conv_id,
-                "segment_id": np.int32(i),
-                "start_ts": _day_to_ts(s.start_day),
-                "end_ts": _day_to_ts(s.end_day),
-                "break_ts": _day_to_ts(s.break_day) if s.break_day else pd.NaT,
-            }
-            for j in range(N_COEF):
-                row[f"coef_{j}"] = float(s.coef[0][j])
-            row.update(rmse=float(s.rmse[0]), magnitude=float(s.magnitude[0]),
-                       n_obs=np.int32(s.n_obs),
-                       omission_score=float(om[i]))
+            row = _segment_row(conv_id, i, s)
+            row["omission_score"] = float(om[i])
             for j in range(N_COEF):
                 row[f"robust_coef_{j}"] = float(rf[i]["coef"][0][j])
             row["robust_rmse"] = float(rf[i]["rmse"][0])
             rows.append(row)
-    out = pd.DataFrame(rows)
-    out["segment_id"] = out["segment_id"].astype(np.int32)
-    out["n_obs"] = out["n_obs"].astype(np.int32)
-    return out
+    return _frame(rows)
 
 
 def pheno_segments_twin(conv_max: str) -> pd.DataFrame:
@@ -277,35 +262,17 @@ def pheno_segments_twin(conv_max: str) -> pd.DataFrame:
     end to end (round-3 VERDICT next #3)."""
     from yatsm_spark.kernel.phenology import diurnal_phenology
 
-    filled = duckdb.sql(GAPFILLED_1M_SQL.format(tx=TX, conv_max=conv_max)).df()
     params = _conv_params()
     rows = []
-    for conv_id, g in filled.groupby("conv_id", sort=True):
-        g = g.sort_values("window_start", kind="stable")
-        epochs = g["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        y = g["turn_count"].to_numpy(dtype=np.float64)
-        t = epochs / 86400.0
-        for i, s in enumerate(ccdc_fit(t, y, params).segments):
-            row = {
-                "conv_id": conv_id,
-                "segment_id": np.int32(i),
-                "start_ts": _day_to_ts(s.start_day),
-                "end_ts": _day_to_ts(s.end_day),
-                "break_ts": _day_to_ts(s.break_day) if s.break_day else pd.NaT,
-            }
-            for j in range(N_COEF):
-                row[f"coef_{j}"] = float(s.coef[0][j])
-            row.update(rmse=float(s.rmse[0]), magnitude=float(s.magnitude[0]),
-                       n_obs=np.int32(s.n_obs))
+    for conv_id, t, Y in _conv_series(conv_max):
+        for i, s in enumerate(ccdc_fit(t, Y, params).segments):
+            row = _segment_row(conv_id, i, s)
             seg = (t >= s.start_day) & (t <= s.end_day)
             row.update(diurnal_phenology(
-                np.round(t[seg] * 86400.0).astype(np.int64), y[seg]))
+                np.round(t[seg] * 86400.0).astype(np.int64), Y[0][seg]))
             rows.append(row)
-    out = pd.DataFrame(rows)
-    for c in ("segment_id", "n_obs", "peak_hour", "rise_hour", "fall_hour",
-              "pheno_nobs"):
-        out[c] = out[c].astype(np.int32)
-    return out
+    return _frame(rows, ("segment_id", "n_obs", "peak_hour", "rise_hour",
+                         "fall_hour", "pheno_nobs"))
 
 
 def kmeans_twin(n_centroids: int = 8, n_iters: int = 3, seed: int = 0,
@@ -389,16 +356,16 @@ def jpeg_twin() -> pd.DataFrame:
 def pca_twin(k: int = 4) -> pd.DataFrame:
     """Spark-free twin of operators/pca.pca_project on the sf0.01
     embeddings: same floor(x*2^20+0.5) quantization, same exact-int
-    moments (kernel.pca_core — arbitrary-precision combine), same eigh +
+    moments (kernel.pca_core — arbitrary-precision combine), same Jacobi eigh +
     sign convention, same sequential-fold projection. A driver hash match
     is a differential over the mapInPandas partial-moment plumbing, the
     decimal(38,0) combine, and the literal/broadcast projection paths."""
     from yatsm_spark.kernel.pca_core import (
         loadings_from_moments,
         moments_from_quantized,
-        project_seqfold,
         quantize,
     )
+    from yatsm_spark.kernel.vecmath import seq_dot
 
     df = duckdb.sql(
         f"SELECT vec_id, embedding FROM read_parquet('{EMB}') ORDER BY vec_id"
@@ -407,7 +374,7 @@ def pca_twin(k: int = 4) -> pd.DataFrame:
     V = np.stack([np.asarray(v, dtype=np.float64) for v in df["embedding"]])
     n, S, tri = moments_from_quantized(quantize(V))
     mean, comps, _eig = loadings_from_moments(n, S, tri, k)
-    Y = project_seqfold(V, mean, comps)
+    Y = seq_dot(V - np.asarray(mean), comps.T)
     out = {"vec_id": ids}
     for c in range(k):
         out[f"pc_{c}"] = Y[:, c]

@@ -32,14 +32,15 @@ F5  Online noise removal: a single over-threshold obs followed by an
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 
 import numpy as np
 
 from yatsm_spark.kernel.design import harmonic_design
-from yatsm_spark.kernel.fit import make_estimator
-from yatsm_spark.kernel.diagnostics import rmse as _rmse
+from yatsm_spark.kernel.fit import fit_series
 from yatsm_spark.kernel.screen import multitemp_screen, lowess_screen
+from yatsm_spark.kernel.vecmath import gram, normal_lstsq, seq_dot
 
 
 @dataclass
@@ -84,27 +85,6 @@ class CCDCResult:
     screened_out: np.ndarray | None = None  # bool mask on input obs (True=dropped)
 
 
-def _fit_window(t, Y, lo, hi, p: CCDCParams):
-    """Fit one estimator per series on obs [lo, hi]; returns (coefs, rmses)."""
-    X = harmonic_design(t[lo : hi + 1], order=p.harmonic_order, period=p.period,
-                        trend=p.trend)
-    n_series = Y.shape[0]
-    coefs = np.empty((n_series, X.shape[1]))
-    rmses = np.empty(n_series)
-    for b in range(n_series):
-        est = make_estimator(p.estimator)
-        est.fit(X, Y[b, lo : hi + 1])
-        coefs[b] = est.coef_
-        rmses[b] = _rmse(Y[b, lo : hi + 1], X @ est.coef_)
-    return coefs, rmses
-
-
-def _predict(t_pts, coefs, p: CCDCParams):
-    X = harmonic_design(np.atleast_1d(t_pts), order=p.harmonic_order,
-                        period=p.period, trend=p.trend)
-    return coefs @ X.T  # (n_series, n_pts)
-
-
 def _dynamic_rmse(t, Y, lo, hi, coefs, t_mon, p: CCDCParams):
     """W4: rmse from the k training obs closest in DOY to t_mon."""
     doy = np.mod(t[lo : hi + 1], p.period)
@@ -112,9 +92,9 @@ def _dynamic_rmse(t, Y, lo, hi, coefs, t_mon, p: CCDCParams):
     d = np.minimum(d, p.period - d)  # circular distance
     k = min(p.dynamic_rmse_k, hi - lo + 1)
     idx = np.argsort(d, kind="stable")[:k] + lo
-    yhat = _predict(t[idx], coefs, p)
-    out = np.sqrt(np.mean((Y[:, idx] - yhat) ** 2, axis=1))
-    return out
+    X = harmonic_design(t[idx], order=p.harmonic_order, period=p.period,
+                        trend=p.trend)
+    return np.sqrt(np.mean((Y[:, idx] - seq_dot(coefs, X)) ** 2, axis=1))
 
 
 def ccdc_fit(t: np.ndarray, Y: np.ndarray, params: CCDCParams | None = None) -> CCDCResult:
@@ -179,116 +159,93 @@ def ccdc_fit(t: np.ndarray, Y: np.ndarray, params: CCDCParams | None = None) -> 
     # copies before mutating), so results are unchanged.
     act_arange = True
 
+    # [X | Yᵀ]ᵀ, one row per variable: one Gram of a column block gives
+    # every moment a fit needs (XᵀX, XᵀY, YᵀY), in vecmath's fixed order.
+    k_cols = X_full.shape[1]
+    Zt_full = np.vstack([X_full.T, Y])
+
+    def solve_moments(M, nw, c):
+        """(coefs, rmses) from the augmented moments M of nw obs whose
+        trend column is centred at c; the intercept shifts back to the
+        global frame by the exact algebra a_global = a_centred - slope * c."""
+        cf, sse = normal_lstsq(M, k_cols)
+        if p.trend:
+            for row in cf:
+                row[0] -= row[1] * c
+        return (np.array(cf, dtype=np.float64),
+                np.array([math.sqrt(max(s, 0.0) / nw) for s in sse]))
+
     def fit_window(pos_lo, pos_hi):
         """Fit all series on act positions [pos_lo, pos_hi]; returns
-        (X, coefs, rmses)."""
+        (coefs, rmses)."""
         if act_arange:
             idx = slice(pos_lo, pos_hi + 1)
         else:
             idx = act[pos_lo : pos_hi + 1]
-        Xw = X_full[idx]
-        Yw = Y[:, idx]
         if fast_ols:
             # Normal equations with the trend column CENTERED inside the
             # window: t is epoch-scale (~2e4 days) while window spans are
             # ~1e-1..1e2 days, so the raw [1, t] block is nearly collinear
-            # (kappa(XtX) ~ 1e12 => solve loses the coefficients). Centering
-            # makes XtX well-conditioned; the intercept shifts back by the
-            # exact algebra a_global = a_centered - slope * c. One solve
-            # covers every series (vectorized RHS), ~3x faster than lstsq.
+            # (kappa(XtX) ~ 1e12 => the normal equations lose the
+            # coefficients). Centering makes XtX well-conditioned, and one
+            # Cholesky covers every series.
+            Zw = Zt_full[:, idx]
+            c = 0.0
             if p.trend:
-                # arr.sum()/arr.size is np.mean minus the wrapper: same
-                # pairwise umr_sum, same divide — bit-identical, and this
-                # runs a few hundred thousand times per large conv group
-                # (mean's _count_reduce_items machinery was ~20% of
-                # fit_window in profile).
+                # arr.sum()/arr.size is np.mean minus the wrapper (same
+                # pairwise sum, same divide); this runs a few hundred
+                # thousand times per large conv group.
                 ts = t[idx]
                 c = ts.sum() / ts.size
-                Xc = Xw.copy()
-                Xc[:, 1] = Xw[:, 1] - c
-            else:
-                c = 0.0
-                Xc = Xw
-            XtX = Xc.T @ Xc
-            try:
-                cf = np.linalg.solve(XtX, Xc.T @ Yw.T).T
-            except np.linalg.LinAlgError:
-                cf = np.vstack([np.linalg.lstsq(Xc, Yw[b], rcond=None)[0]
-                                for b in range(n_series)])
-            resid = Yw - cf @ Xc.T
-            sq = resid ** 2
-            rm = np.sqrt(sq.sum(axis=1) / sq.shape[1])
-            if p.trend:
-                cf = cf.copy()
-                cf[:, 0] = cf[:, 0] - cf[:, 1] * c
-            return Xw, cf, rm
-        cf = np.empty((n_series, Xw.shape[1]))
-        rm = np.empty(n_series)
-        for b in range(n_series):
-            est = make_estimator(p.estimator)
-            est.fit(Xw, Y[b, idx])
-            cf[b] = est.coef_
-            rm[b] = _rmse(Y[b, idx], Xw @ est.coef_)
-        return Xw, cf, rm
+                Zw = Zw.copy()
+                Zw[1] -= c
+            return solve_moments(gram(Zw), Zw.shape[1], c)
+        return fit_series(X_full[idx], Y[:, idx], p.estimator)
 
     # --- incremental normal-equation sums for monitor refits -------------
     # A refit at cadence re-estimates on the WHOLE segment window
     # [start, i) (reference semantics); fitting directly is O(window) per
-    # refit => O(n^2/cadence) on long segments. Instead maintain running
-    # Sxx (k,k), Sxy (k,S), Syy (S,) over the fitted window: each refit
+    # refit => O(n^2/cadence) on long segments. Instead maintain the
+    # running augmented moments over the fitted window: each refit
     # batch-adds only the rows passed since the previous refit (one small
-    # matmul) and solves in the centered frame in O(k^3). Deleted noise obs
+    # Gram) and solves in the centered frame in O(k^3). Deleted noise obs
     # are never added (deletions only happen at positions >= the refit
     # frontier), so no removals are needed during monitoring.
-    k_cols = X_full.shape[1]
-    sums = {"Sxx": None, "Sxy": None, "Syy": None, "n": 0, "c_num": 0.0}
+    sums = {}
 
-    def sums_reset(pos_lo, pos_hi):
-        idx = act[pos_lo : pos_hi + 1]
-        Xw = X_full[idx]
-        Yw = Y[:, idx]
-        sums["Sxx"] = Xw.T @ Xw
-        sums["Sxy"] = Xw.T @ Yw.T
-        sums["Syy"] = np.einsum("sn,sn->s", Yw, Yw)
-        sums["n"] = len(idx)
-        sums["c_num"] = float(t[idx].sum())
-
-    def sums_add(pos_lo, pos_hi):
+    def sums_add(pos_lo, pos_hi, reset=False):
+        if reset:
+            sums.update(M=0.0, n=0, c_num=0.0)
         if pos_hi < pos_lo:
             return
         idx = act[pos_lo : pos_hi + 1]
-        Xw = X_full[idx]
-        Yw = Y[:, idx]
-        sums["Sxx"] += Xw.T @ Xw
-        sums["Sxy"] += Xw.T @ Yw.T
-        sums["Syy"] += np.einsum("sn,sn->s", Yw, Yw)
+        sums["M"] += gram(Zt_full[:, idx])
         sums["n"] += len(idx)
         sums["c_num"] += float(t[idx].sum())
 
     def fit_from_sums():
-        """Solve in the centered frame built EXACTLY from the global-frame
-        sums via the translation Xc = X @ E (E = I, E[0,1] = -c)."""
-        Sxx, Sxy, Syy, nw = sums["Sxx"], sums["Sxy"], sums["Syy"], sums["n"]
+        """Solve in the centered frame built from the global-frame sums via
+        the translation Xc = X·E (E = I, E[0,1] = -c): row 1 and then
+        column 1 of the moments lose c times row/column 0."""
+        M, nw = sums["M"], sums["n"]
+        c = 0.0
         if p.trend:
             c = sums["c_num"] / nw
-            E = np.eye(k_cols)
-            E[0, 1] = -c
-            Sxx_c = E.T @ Sxx @ E
-            Sxy_c = E.T @ Sxy
-        else:
-            c = 0.0
-            Sxx_c, Sxy_c = Sxx, Sxy
-        try:
-            cf_c = np.linalg.solve(Sxx_c, Sxy_c).T
-        except np.linalg.LinAlgError:
-            cf_c = (np.linalg.pinv(Sxx_c) @ Sxy_c).T
-        sse = Syy - 2.0 * np.einsum("sk,ks->s", cf_c, Sxy_c) \
-            + np.einsum("sk,kj,sj->s", cf_c, Sxx_c, cf_c)
-        rm = np.sqrt(np.maximum(sse, 0.0) / nw)
-        cf = cf_c.copy()
-        if p.trend:
-            cf[:, 0] = cf_c[:, 0] - cf_c[:, 1] * c
-        return cf, rm
+            M = M.copy()
+            M[1] -= c * M[0]
+            M[:, 1] -= c * M[:, 0]
+        return solve_moments(M, nw, c)
+
+    def scores(cols, rm):
+        """(scores, residuals) of the obs at indices cols under the current
+        model with rmse rm: the W3 norm over test series, folded in
+        test-series order."""
+        resid = Y[:, cols] - seq_dot(coefs, X_full[cols])
+        sq = 0.0
+        for b in test_idx:
+            v = resid[b] / max(rm[b], p.min_rmse)
+            sq = sq + v * v
+        return np.sqrt(sq), resid
 
     def score_obs(pos, run_start_pos):
         """Scalar score + residual for one obs (run extension / dynamic rmse)."""
@@ -297,16 +254,8 @@ def ccdc_fit(t: np.ndarray, Y: np.ndarray, params: CCDCParams | None = None) -> 
                                coefs, day(pos), p)
         else:
             rm = rmses
-        resid = Y[:, act[pos]] - coefs @ X_full[act[pos]]
-        if len(test_idx) == 1:
-            # bit-identical single-series shortcut: sum() over one term is
-            # 0.0 + x = x, and v**2 is the same multiply as v*v
-            v = resid[test_idx[0]] / max(rm[test_idx[0]], p.min_rmse)
-            sc = np.sqrt(v * v)
-        else:
-            sc = np.sqrt(sum((resid[b] / max(rm[b], p.min_rmse)) ** 2
-                             for b in test_idx))
-        return sc, resid
+        sc, resid = scores(act[pos : pos + 1], rm)
+        return sc[0], resid[:, 0]
 
     while here < len(act):
         # --- W1/W2 training -------------------------------------------------
@@ -315,15 +264,16 @@ def ccdc_fit(t: np.ndarray, Y: np.ndarray, params: CCDCParams | None = None) -> 
             if not span_ok:
                 here += 1
                 continue
-            idx = act[start : here + 1]
-            Xw, coefs, rmses = fit_window(start, here)
+            coefs, rmses = fit_window(start, here)
             span_days = day(here) - day(start)
+            ends = act[[start, here]]
+            end_resid = Y[:, ends] - seq_dot(coefs, X_full[ends])
             stable = True
             slope_col = 1 if p.trend else None
             for b in test_idx:
                 denom = p.stability_crit * max(rmses[b], p.min_rmse)
-                resid = Y[b, idx] - Xw @ coefs[b]
-                if abs(resid[0]) / denom >= 1 or abs(resid[-1]) / denom >= 1:
+                first, last = end_resid[b]
+                if abs(first) / denom >= 1 or abs(last) / denom >= 1:
                     stable = False
                     break
                 if slope_col is not None and abs(coefs[b][slope_col]) * span_days / denom >= 1:
@@ -335,7 +285,7 @@ def ccdc_fit(t: np.ndarray, Y: np.ndarray, params: CCDCParams | None = None) -> 
                 continue
             trained = True
             last_fit_end = day(here)
-            sums_reset(start, here)
+            sums_add(start, here, reset=True)
             last_sum_end = here + 1
 
         # --- W3 monitor, block-vectorized ------------------------------------
@@ -359,7 +309,7 @@ def ccdc_fit(t: np.ndarray, Y: np.ndarray, params: CCDCParams | None = None) -> 
                     last_sum_end = i
                     coefs, rmses = fit_from_sums()
                 else:
-                    _, coefs, rmses = fit_window(start, i - 1)
+                    coefs, rmses = fit_window(start, i - 1)
                 last_fit_end = day(i - 1)
 
             # First position in [i-1, len(act)-1) whose day reaches the
@@ -394,14 +344,7 @@ def ccdc_fit(t: np.ndarray, Y: np.ndarray, params: CCDCParams | None = None) -> 
                     over[q] = sc_q > p.threshold
                     blk_resid[:, q] = r_q
             else:
-                blk_resid = Y[:, blk] - coefs @ X_full[blk].T
-                denom = np.maximum(rmses, p.min_rmse)
-                if len(test_idx) == 1:
-                    v = blk_resid[test_idx[0]] / denom[test_idx[0]]
-                    sc = np.sqrt(v * v)
-                else:
-                    sc = np.sqrt(sum((blk_resid[b] / denom[b]) ** 2
-                                     for b in test_idx))
+                sc, blk_resid = scores(blk, rmses)
                 over = sc > p.threshold
 
             # In-block scan with deletion reuse (r6): the model is FROZEN

@@ -10,9 +10,9 @@ Exactness discipline: every building block that CAN be an integer IS an
 integer — window sums / sum-of-squares via int64 cumsum, dot products
 QT via per-offset product cumsums — and floats enter only in the final
 elementwise distance expression (no BLAS reductions anywhere, so the
-result is reproducible across runs and unaffected by threaded-BLAS
-summation order; cf. the LAPACK-dependent goldens this repo had to
-regenerate after a host change). Brute force O(n^2); series here are
+result is reproducible across runs and hosts, unaffected by BLAS
+summation order — the discipline kernel/vecmath.py now enforces for the
+regression kernels too). Brute force O(n^2); series here are
 per-conv tier slices (hundreds to low thousands of slots), and the
 Spark operator bounds length with max_n.
 

@@ -7,10 +7,11 @@ Exactness policy (SURVEY.md §7.5.1): float sums depend on reduction
 order, so the second-moment (gram) accumulation runs over GRID-QUANTIZED
 integers — floor(x * 2^20 + 0.5) — combined with arbitrary-precision
 Python ints. The eigen-basis is then a deterministic function of the
-input bytes at ANY parallelism. The eigendecomposition itself is LAPACK
-and therefore environment-pinned (FIXTURES.md §5); the per-row
-projection is a sequential dimension fold (kernel.vecmath discipline),
-bit-identical between Catalyst literal expressions and the numpy path.
+input bytes at ANY parallelism. The eigendecomposition is kernel.vecmath's
+cyclic Jacobi (a fixed operation sequence, so the basis is the same on
+any CPU), and the per-row projection is ``vecmath.seq_dot(V - mean,
+components.T)``: a sequential dimension fold, bit-identical between
+Catalyst literal expressions and the numpy path.
 
 Parity anchor: yatsm has no PCA analogue — this is task-brief
 training-data-pipeline territory (embedding preprocessing before
@@ -21,6 +22,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from yatsm_spark.kernel.vecmath import eigh
+
 #: quantization grid: ~6 decimal digits of an O(1)-scale embedding
 QSCALE = 1 << 20
 
@@ -30,11 +33,6 @@ def quantize(V: np.ndarray) -> np.ndarray:
     closed-form both engines can evaluate (np.round's banker rounding
     has no cheap SQL twin)."""
     return np.floor(np.asarray(V, dtype=np.float64) * QSCALE + 0.5).astype(np.int64)
-
-
-def tri_index(i: int, j: int, d: int) -> int:
-    """Flat index of upper-triangle cell (i <= j) in row-major order."""
-    return i * d - i * (i - 1) // 2 + (j - i)
 
 
 def moments_from_quantized(Q: np.ndarray) -> tuple[int, list[int], list[int]]:
@@ -62,7 +60,7 @@ def loadings_from_moments(n: int, S: list[int], G_tri: list[int],
                           k: int) -> tuple[list[float], np.ndarray, list[float]]:
     """(mean[d], components (d, k), eigenvalues[k]) from exact integer
     moments. Covariance cells are int/int divisions (correctly-rounded
-    doubles of exact rationals); eigh is LAPACK (environment-pinned).
+    doubles of exact rationals); eigh is vecmath's cyclic Jacobi.
     Component sign convention: the largest-|loading| entry is positive,
     so the basis doesn't flip between otherwise-identical runs."""
     if n < 2:
@@ -78,27 +76,9 @@ def loadings_from_moments(n: int, S: list[int], G_tri: list[int],
             num = n * G_tri[t] - S[i] * S[j]
             C[i, j] = C[j, i] = num / denom
             t += 1
-    w, V = np.linalg.eigh(C)
-    order = np.argsort(w)[::-1][:k]
-    comps = V[:, order].copy()
-    for c in range(comps.shape[1]):
-        jstar = int(np.argmax(np.abs(comps[:, c])))
-        if comps[jstar, c] < 0:
-            comps[:, c] = -comps[:, c]
+    w, V = eigh(C)                                  # ascending
+    w, comps = w[::-1][:k], V[:, ::-1][:, :k].copy()
+    jstar = np.argmax(np.abs(comps), axis=0)
+    comps *= np.where(comps[jstar, np.arange(k)] < 0, -1.0, 1.0)
     mean = [S[dd] / (n * QSCALE) for dd in range(d)]
-    return mean, comps, [float(w[o]) for o in order]
-
-
-def project_seqfold(V: np.ndarray, mean: list[float],
-                    comps: np.ndarray) -> np.ndarray:
-    """(n, k) scores with every float step in Catalyst fold order:
-    acc_k starts at 0.0 and accumulates (x_d - m_d) * comp[d, k] in
-    dimension order — bit-identical to the literal expression
-    ``((0 + t_0) + t_1) + ...`` the operator's literal path builds."""
-    V = np.ascontiguousarray(V, dtype=np.float64)
-    comps = np.ascontiguousarray(comps, dtype=np.float64)
-    n, d = V.shape
-    acc = np.zeros((n, comps.shape[1]), dtype=np.float64)
-    for dd in range(d):
-        acc += (V[:, dd] - mean[dd])[:, None] * comps[dd, :][None, :]
-    return acc
+    return mean, comps, [float(x) for x in w]

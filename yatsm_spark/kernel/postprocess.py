@@ -16,9 +16,9 @@ import numpy as np
 
 from yatsm_spark.kernel.ccdc import Segment, CCDCParams
 from yatsm_spark.kernel.design import harmonic_design
-from yatsm_spark.kernel.diagnostics import rmse as _rmse
-from yatsm_spark.kernel.fit import make_estimator
+from yatsm_spark.kernel.fit import fit_series
 from yatsm_spark.kernel.recresid import omission_test_stat
+from yatsm_spark.kernel.vecmath import lstsq, row_dot, seq_dot
 
 
 def _design(t, p: CCDCParams):
@@ -26,9 +26,8 @@ def _design(t, p: CCDCParams):
 
 
 def _sse(X, y):
-    beta, *_ = np.linalg.lstsq(X, y, rcond=None)
-    r = y - X @ beta
-    return float(r @ r)
+    r = y - seq_dot(X, lstsq(X, y)[None, :])[:, 0]
+    return float(row_dot(r, r))
 
 
 def chow_f(t1, y1, t2, y2, p: CCDCParams) -> float:
@@ -69,15 +68,7 @@ def commission_test(
         f = chow_f(t[m1], Y[test_series, m1], t[m2], Y[test_series, m2], p)
         if f < crit:
             m = m1 | m2
-            X = _design(t[m], p)
-            n_series = Y.shape[0]
-            coefs = np.empty((n_series, X.shape[1]))
-            rmses = np.empty(n_series)
-            for s in range(n_series):
-                est = make_estimator(p.estimator)
-                est.fit(X, Y[s, m])
-                coefs[s] = est.coef_
-                rmses[s] = _rmse(Y[s, m], X @ est.coef_)
+            coefs, rmses = fit_series(_design(t[m], p), Y[:, m], p.estimator)
             merged = Segment(
                 start_day=a.start_day, end_day=b.end_day, break_day=b.break_day,
                 coef=coefs, rmse=rmses, magnitude=b.magnitude,
@@ -117,14 +108,6 @@ def refit_segments(
     out = []
     for s in segments:
         m = (t >= s.start_day) & (t <= s.end_day)
-        X = _design(t[m], p)
-        n_series = Y.shape[0]
-        coefs = np.empty((n_series, X.shape[1]))
-        rmses = np.empty(n_series)
-        for b in range(n_series):
-            est = make_estimator(estimator)
-            est.fit(X, Y[b, m])
-            coefs[b] = est.coef_
-            rmses[b] = _rmse(Y[b, m], X @ est.coef_)
+        coefs, rmses = fit_series(_design(t[m], p), Y[:, m], estimator)
         out.append({"coef": coefs, "rmse": rmses})
     return out

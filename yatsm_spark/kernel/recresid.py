@@ -9,14 +9,15 @@ first r-1 rows,
 
     w_r = (y_r - x_r' beta_{r-1}) / sqrt(1 + x_r' (X_{r-1}' X_{r-1})^-1 x_r)
 
-for r = k+1 .. n (k = number of regressors). Implemented with rank-1
-Sherman-Morrison updates of (X'X)^-1; cross-checked against brute-force
-per-step OLS in tests/test_recresid.py.
+for r = k+1 .. n (k = number of regressors); cross-checked against
+brute-force per-step OLS in tests/test_kernel_regression.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from yatsm_spark.kernel.vecmath import chol_solve, gram, lstsq, seq_rowdot
 
 
 def recresid(X: np.ndarray, y: np.ndarray, span: int | None = None) -> np.ndarray:
@@ -34,31 +35,22 @@ def recresid(X: np.ndarray, y: np.ndarray, span: int | None = None) -> np.ndarra
     if n <= span:
         return np.empty(0, dtype=np.float64)
 
+    # w_r needs beta_{r-1} and (X'X)^-1 x_r from the normal equations of
+    # rows < r: running moment sums (cumsum), all n - span systems solved
+    # by one stacked Cholesky — stable over long series, where rank-1
+    # inverse updates drift. The start fit is QR on X0 itself: an
+    # uncentred epoch-scale trend makes X0ᵀX0 nearly singular.
     X0, y0 = X[:span], y[:span]
-    # Maintain the normal equations incrementally and solve per step —
-    # O(n·k^3) with tiny k, numerically stable over long series (rank-1
-    # inverse updates drift after a few hundred steps).
-    XtX = X0.T @ X0
-    Xty = X0.T @ y0
-    beta = np.linalg.lstsq(X0, y0, rcond=None)[0]
-
-    out = np.empty(n - span, dtype=np.float64)
-    for i, r in enumerate(range(span, n)):
-        x_r = X[r]
-        try:
-            d = np.linalg.solve(XtX, x_r)
-        except np.linalg.LinAlgError:
-            d = np.linalg.pinv(XtX) @ x_r
-        fr = 1.0 + x_r @ d
-        resid = y[r] - x_r @ beta
-        out[i] = resid / np.sqrt(max(fr, 1.0))
-        XtX += np.outer(x_r, x_r)
-        Xty += x_r * y[r]
-        try:
-            beta = np.linalg.solve(XtX, Xty)
-        except np.linalg.LinAlgError:
-            beta = np.linalg.pinv(XtX) @ Xty
-    return out
+    Xr, prev = X[span:], slice(span, n - 1)
+    XtX = np.cumsum(np.concatenate(
+        [gram(X0.T)[None], X[prev, :, None] * X[prev, None, :]]), axis=0)
+    Xty = np.cumsum(np.concatenate(
+        [gram(X0.T, y0[None, :]).T, X[prev] * y[prev, None]]), axis=0)
+    sol = chol_solve(XtX, np.stack([Xty, Xr], axis=-1))
+    beta, d = sol[..., 0], sol[..., 1]
+    beta[0] = lstsq(X0, y0)
+    fr = 1.0 + seq_rowdot(Xr, d)
+    return (y[span:] - seq_rowdot(Xr, beta)) / np.sqrt(np.maximum(fr, 1.0))
 
 
 def cusum_efp(w: np.ndarray) -> np.ndarray:

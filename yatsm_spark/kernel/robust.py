@@ -16,6 +16,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from yatsm_spark.kernel.vecmath import lstsq, seq_dot
+
 #: Consistency constant so MAD estimates sigma for Gaussian data.
 MAD_C = 0.6745
 #: Tukey bisquare tuning constant (95% Gaussian efficiency).
@@ -46,12 +48,6 @@ class RLMResult:
     n_iter: int
 
 
-def _wls(X: np.ndarray, y: np.ndarray, w: np.ndarray) -> np.ndarray:
-    sw = np.sqrt(w)
-    beta, *_ = np.linalg.lstsq(X * sw[:, None], y * sw, rcond=None)
-    return beta
-
-
 def rlm_fit(
     X: np.ndarray,
     y: np.ndarray,
@@ -69,12 +65,12 @@ def rlm_fit(
     """
     X = np.asarray(X, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    beta = _wls(X, y, np.ones(len(y)))
+    beta = lstsq(X, y)
     w = np.ones(len(y))
     scale = 0.0
     it = 0
     for it in range(1, maxiter + 1):
-        resid = y - X @ beta
+        resid = y - seq_dot(X, beta[None, :])[:, 0]
         scale = mad(resid, scale_constant)
         if scale < EPS:
             # Perfect fit (or constant residuals) — weights undefined; stop.
@@ -84,10 +80,10 @@ def rlm_fit(
         if w.sum() < X.shape[1]:
             # Too aggressive downweighting; fall back to previous beta.
             break
-        beta_new = _wls(X, y, w)
+        beta_new = lstsq(X, y, w)
         if np.max(np.abs(beta_new - beta)) < tol:
             beta = beta_new
             break
         beta = beta_new
-    resid = y - X @ beta
+    resid = y - seq_dot(X, beta[None, :])[:, 0]
     return RLMResult(coef=beta, weights=w, resid=resid, scale=scale, n_iter=it)

@@ -16,6 +16,7 @@ import numpy as np
 
 from yatsm_spark.kernel.design import harmonic_design
 from yatsm_spark.kernel.robust import rlm_fit, mad
+from yatsm_spark.kernel.vecmath import lstsq
 
 
 def multitemp_screen(
@@ -63,15 +64,17 @@ def lowess_screen(
             d = np.abs(t - t[i])
             idx = np.argsort(d, kind="stable")[:k]
             dmax = d[idx].max()
-            w = (1 - (d[idx] / (dmax if dmax > 0 else 1.0)) ** 3) ** 3
-            w = np.clip(w, 0, None) * delta[idx]
+            # tricube (1 - u³)³ as products: np.power's SIMD kernels
+            # round differently per CPU, a multiply does not
+            u = d[idx] / (dmax if dmax > 0 else 1.0)
+            v = 1 - u * u * u
+            w = np.clip(v * v * v, 0, None) * delta[idx]
             if w.sum() <= 0:
                 fitted[i] = y[i]
                 continue
             # Weighted linear fit on the neighborhood.
             A = np.column_stack([np.ones(len(idx)), t[idx]])
-            sw = np.sqrt(w)
-            beta, *_ = np.linalg.lstsq(A * sw[:, None], y[idx] * sw, rcond=None)
+            beta = lstsq(A, y[idx], w)
             fitted[i] = beta[0] + beta[1] * t[i]
         resid = y - fitted
         s = np.median(np.abs(resid))

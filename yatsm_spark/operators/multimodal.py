@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from yatsm_spark.kernel.vecmath import seq_norm
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("payload", T.BinaryType(), False),
@@ -430,7 +432,7 @@ def _fake_feature(payload: bytes, dim: int = 8) -> np.ndarray:
     is exercised with stable values."""
     h = hashlib.sha1(payload).digest()
     v = np.frombuffer((h * ((dim * 4) // len(h) + 1))[: dim * 4], dtype=np.uint32).astype(np.float64)
-    v = v / np.linalg.norm(v)
+    v = v / seq_norm(v[None, :])[0]
     return v.astype(np.float32)
 
 

@@ -19,9 +19,9 @@ Scale shape (audited in BENCH/PLANS.md):
 
 Cross-parallelism exactness: the moments are integer sums (associative,
 commutative), so mean/covariance/loadings are identical at any
-partitioning; the projection has no cross-row accumulation. LAPACK eigh
-is environment-pinned (FIXTURES.md §5) — the golden twin runs in the
-same interpreter, so the driver differential is exact.
+partitioning; the projection has no cross-row accumulation. The
+eigendecomposition is kernel.vecmath's cyclic Jacobi, a fixed operation
+sequence, so the basis does not depend on the host CPU either.
 """
 
 from __future__ import annotations
@@ -135,7 +135,7 @@ def pca_project(df: DataFrame, k: int = 4, id_col: str = "vec_id",
     def gen(batches):
         import pandas as pd
 
-        from yatsm_spark.kernel.pca_core import project_seqfold
+        from yatsm_spark.kernel.vecmath import seq_dot
 
         m, C = bc.value
         Cm = np.asarray(C, dtype=np.float64)
@@ -144,7 +144,7 @@ def pca_project(df: DataFrame, k: int = 4, id_col: str = "vec_id",
                 continue
             V = np.stack([np.asarray(v, dtype=np.float64)
                           for v in pdf[vec_col]])
-            Y = project_seqfold(V, m, Cm)
+            Y = seq_dot(V - np.asarray(m, dtype=np.float64), Cm.T)
             out = {id_col: pdf[id_col]}
             for c in range(n_out):
                 out[f"pc_{c}"] = Y[:, c]

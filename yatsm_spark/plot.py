@@ -18,6 +18,7 @@ import numpy as np
 import pandas as pd
 
 from yatsm_spark.kernel.design import harmonic_design
+from yatsm_spark.kernel.vecmath import seq_dot
 
 #: Above this many observed points the per-point circles are dropped and
 #: only the polyline is drawn (keeps the SVG small for mega-convs).
@@ -125,7 +126,7 @@ def render_conv_svg(
         X = harmonic_design(t_seg / 86400.0, order=params.harmonic_order,
                             period=params.period)
         coef = np.asarray(list(row["coef"]), dtype=np.float64)
-        yhat = np.clip(X @ coef, y_lo, y_hi)
+        yhat = np.clip(seq_dot(X, coef[None, :])[:, 0], y_lo, y_hi)
         parts.append(_poly(px(t_seg), py(yhat), "fit"))
         if row.get("break_ts") is not None and pd.notna(row["break_ts"]):
             bx = float(px(pd.Timestamp(row["break_ts"]).timestamp()))
