@@ -75,8 +75,8 @@ CCDC_OPS = {"change_scores", "change_scores_post", "change_scores_multi"}
 
 @pytest.mark.parametrize("op", sorted(OPS))
 def test_one_exchange_below_the_grouped_map(spark, tier, chunks, docs, op):
-    """Each routed operator shuffles exactly once; the CCDC stages' own
-    wide repartition satisfies the grouping, so no second exchange."""
+    """Each routed operator shuffles exactly once; for the CCDC stages it is
+    the grouping's own exchange at the session width."""
     plan = str(OPS[op](tier, chunks, docs)._jdf.queryExecution().executedPlan())
     lines = plan.splitlines()
     top = next(i for i, ln in enumerate(lines) if "FlatMapGroupsInPandas" in ln)
@@ -84,7 +84,7 @@ def test_one_exchange_below_the_grouped_map(spark, tier, chunks, docs, op):
     assert len(exchanges) == 1, plan
     if op in CCDC_OPS:
         assert re.search(r"Exchange hashpartitioning\(conv_id#\d+, \d+\), "
-                         r"REPARTITION_BY_NUM", exchanges[0]), plan
+                         r"ENSURE_REQUIREMENTS", exchanges[0]), plan
 
 
 def test_kernel_sees_its_group_sorted_with_a_fresh_index(spark):

@@ -54,29 +54,10 @@ def shuffle_partitions_for_bytes(n_bytes: int, cores: int,
     lands on the measured winner at each scale and extrapolates to the
     cluster rule of thumb (100 TB -> ~400k partitions across 1000
     executors). AQE coalescing still shrinks small stages below the
-    floor at runtime.
+    floor at runtime. The target is calibrated on snappy parquet bytes
+    (the transcripts and the pipeline's staged measures).
     """
     return max(cores, min(32_768, int(n_bytes // target_bytes)))
-
-
-def grouped_stage_partitions(spark) -> int:
-    """Partition width for the CCDC grouped-kernel stages, its only
-    users (operators/changescore.py repartitions to it before
-    per_series). The codec's encode stage keeps the session width: its
-    kernel is cheap and the boundary's per-partition fixed costs
-    dominate there (A/B in operators/codec.py). Group sizes are
-    zipf-skewed, and a grouped stage gets NO AQE skew-splitting (a group
-    is atomic), so balance comes from the law of large numbers: more,
-    smaller partitions -> more groups per partition -> smaller relative
-    spread of per-partition work.
-    4x the scheduler's core count gives ~4 task waves for packing while
-    keeping partitions far above Arrow-batch granularity; floored by
-    the session shuffle width so a data-sized wider setting wins.
-    Measured at sf0.1/local[32]: segments_ccdc wall drops ~25% vs the
-    32-partition single wave. Scale-adaptive by construction (cores
-    and shuffle width both grow with the cluster)."""
-    conf_sp = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(conf_sp, 4 * spark.sparkContext.defaultParallelism)
 
 
 def host_memory_mb() -> int | None:

@@ -102,13 +102,6 @@ def merge_rollups(tier: DataFrame, delta: DataFrame,
     return merged
 
 
-def build_tiers(rollup_1m_filled: DataFrame) -> dict[str, DataFrame]:
-    """Full cascade from the gap-filled 1m tier."""
-    h1 = cascade(rollup_1m_filled, "1m", "1h")
-    d1 = cascade(h1, "1h", "1d")
-    return {"1m": rollup_1m_filled, "1h": h1, "1d": d1}
-
-
 def high_watermark(fine: DataFrame, to_tier: str):
     """Largest coarse slot that is COMPLETE in `fine` (its successor slot
     has begun), per conv. Rows at/below this slot are safe to compress and,

@@ -13,8 +13,9 @@ Scale notes:
 - The kernel consumes ROLLUP points, not raw turns (rollup-first design,
   SURVEY.md §7.5.4): a conv alive for a week is <= 10k 1m points regardless
   of how many million turns it holds, bounding per-group memory.
-- Groups shuffle once on conv_id; AQE handles residual skew. Arrow moves
-  each group as columnar batches.
+- Groups shuffle once on conv_id, or not at all when the input is already
+  conv-partitioned (the pipeline's cached 1m rollup). Arrow moves each
+  group as columnar batches.
 - Time axis handed to the kernel is DAYS (float64, exact for epoch/86400
   well past 2^53 ulp), so the CCDC math keeps its native units; the default
   harmonic period is 1 day (diurnal turn-rate seasonality) instead of the
@@ -99,20 +100,11 @@ def _day_to_ts(day: float) -> pd.Timestamp:
 
 
 def _conv_series(filled: DataFrame, measures: list[str]) -> DataFrame:
-    """(conv_id, window_start, *measures), hash-partitioned on conv_id for
-    the per-conv fit."""
-    from yatsm_spark.conf import grouped_stage_partitions
-
+    """(conv_id, window_start, *measures): the per-conv fit's columns."""
     # Column-prune BEFORE the group shuffle: the kernel needs these columns
     # only, so never move the others through the exchange (at 10^12 scale
-    # the shuffle is the cost of this operator). Repartition wider than the
-    # session shuffle width (grouped_stage_partitions): zipf-sized conv
-    # groups in one task wave straggle, and AQE cannot split a group —
-    # the explicit hash partitioning satisfies the groupBy's required
-    # distribution, so no second exchange is added.
-    return (filled.select("conv_id", "window_start", *measures)
-            .repartition(grouped_stage_partitions(filled.sparkSession),
-                         "conv_id"))
+    # the shuffle is the cost of this operator).
+    return filled.select("conv_id", "window_start", *measures)
 
 
 def _fit_input(pdf: pd.DataFrame, measures: list[str], densify: bool,

@@ -149,13 +149,6 @@ def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
     for m in STAT_COLS:
         sel.append(F.coalesce(F.col(m), F.lit(0)).cast("long").alias(m))
         sel.append(F.col(m).isNotNull().alias(f"_nn_{m}"))
-    # NO extra-wide repartition here (r6, measured): unlike the CCDC stage,
-    # the encode kernel is cheap (~0.7us/pt) and the grouped-map boundary's
-    # per-partition fixed costs dominate — 32/64/128-partition A/B from the
-    # cached tier read 14.5 / 15.7 / 17.0s, so the session shuffle width
-    # (data-sized, AQE-coalesced) is kept. The wide setting stays where the
-    # kernel is compute-heavy and group skew is the binding constraint
-    # (changescore.py).
     rollup = rollup.select(*sel)
 
     def enc(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -17,9 +17,19 @@ hundreds on a cluster); each bucket job still fans out to every executor.
 Stage graph per bucket (all conv-local, so everything after staging
 shuffles only within the bucket):
 
-    staging(bucket) → 1m rollup → gapfill → 1h → 1d
-                                    ↘ segments (applyInPandas kernel)
-                                    ↘ chunks 1m/1h/1d (Gorilla)
+    staging(bucket) → 1m rollup ⇒ conv cache → gapfill → tier_1m
+                                     ↘ 1h cache → gapfill → tier_1h
+                                         ↘ 1d cache → gapfill → tier_1d
+                                     ↘ segments (CCDC grouped map)
+                                     ↘ chunks_1m (Gorilla grouped map)
+
+A bucket runs two exchanges (salting "none"), both inside the 1m cache:
+the rollup's (conv_id, slot) aggregation with map-side partials, then ⇒
+a shuffle of only the sparse rollup rows on conv_id, sorted within each
+partition on (conv_id, window_start). The gap-fill windows, cascades and
+grouped maps all accept that layout, so nothing after it exchanges and
+each table has at most the bucket's shuffle width of files. Downstream of
+the conv cache, add no repartition.
 """
 
 from __future__ import annotations
@@ -46,6 +56,25 @@ _ROLLUP_1M = {
     "always": lambda df: R.rollup_from_turns_salted(df, "1m"),
     "adaptive": lambda df: R.rollup_from_turns_adaptive(df, "1m"),
 }
+
+
+def _conv_cache(df: DataFrame) -> DataFrame:
+    """``df`` (partitioned on conv_id) sorted on (conv_id, window_start)
+    within each partition and cached: the order the gap-fill window needs
+    and the per-conv time order the grouped maps sort into.
+
+    AQE is off for the ``cache()`` call: an adaptive cached plan reports no
+    partitioning and no order until it has run, so every consumer planned
+    before then adds its own exchange and sort. (Spark 4.1's
+    ``canChangeCachedPlanOutputPartitioning=false`` keeps the cached plan
+    adaptive, and the first tier_1m write still exchanges.)"""
+    conf = df.sparkSession.conf
+    prev = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df.sortWithinPartitions("conv_id", "window_start").cache()
+    finally:
+        conf.set("spark.sql.adaptive.enabled", prev)
 
 
 @dataclass
@@ -174,7 +203,7 @@ def run_pipeline(
             # the dense tier is ~8x the sparse one — none of it is exchanged.
             # Row counts are observed on the writes themselves: the sparse
             # count of a tier is its non-gap rows.
-            sparse = _ROLLUP_1M[cfg.salting](bm).cache()
+            sparse = _conv_cache(_ROLLUP_1M[cfg.salting](bm).repartition("conv_id"))
             cached, observed = [sparse], []
             store.write_bucket(_counted(R.gapfill(sparse, "1m"), observed,
                                         rollup_1m_sparse=sparse_count, rollup_1m=count),
@@ -184,7 +213,7 @@ def run_pipeline(
             for tier_from, tier_to in (("1m", "1h"), ("1h", "1d")):
                 if tier_to not in cfg.tiers:
                     continue
-                nxt = cascade(prev, tier_from, tier_to).cache()
+                nxt = _conv_cache(cascade(prev, tier_from, tier_to))
                 cached.append(nxt)
                 store.write_bucket(_counted(R.gapfill(nxt, tier_to), observed,
                                             **{f"rollup_{tier_to}": sparse_count}),
