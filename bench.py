@@ -10,9 +10,9 @@ wall times for the other engine operators on the driver tables. Writes
 sink to the `noop` format so we measure engine compute, not local-disk
 parquet encode.
 
-Scaling protocol (BASELINE.md): run this same file twice via
-tools/bench_scaling.py at SPARK_GRAFT_CPUS=8 and =32 on identical input
-files; efficiency = (thr_32 / thr_8) / 4.
+BENCH_HEADLINE_ONLY=1 stops after the headline; BENCH_FULL_JOB=1 times the
+whole job (tiers + change scores + chunks) instead. Every mode prints the
+same keys in the same order.
 """
 
 from __future__ import annotations
@@ -28,10 +28,6 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("BENCH_REPS", "1"))
-#: Optional master override, e.g. "local-cluster[8,4,12288]" for the
-#: process-isolated scaling probe (separate executor JVMs + heaps —
-#: tools/bench_scaling.py BENCH_ISOLATION=process). Default stays local[N].
-MASTER = os.environ.get("SPARK_GRAFT_MASTER", f"local[{CPUS}]")
 
 
 def sink(df):
@@ -100,13 +96,6 @@ def main():
     from yatsm_spark.operators.rollup import gapfill, rollup_from_turns
     from yatsm_spark.synth import transcripts_for_sf
 
-    extra = None
-    if MASTER.startswith("local-cluster"):
-        # Executors are separate JVMs: give each its own fixed heap (the
-        # thing a real N->4N scale-out holds constant) and shrink the
-        # driver (it only schedules here).
-        extra = {"spark.executor.memory": os.environ.get("SPARK_GRAFT_EXEC_MEM", "10g"),
-                 "spark.driver.memory": "8g"}
     # shuffle partitions: engine default (4x cores + AQE coalescing).
     # Pinning this to the core count looked harmless at sf0.1 but made the
     # tier phase superlinear at sf1.0 (791M turns): 32 reduce partitions
@@ -114,9 +103,8 @@ def main():
     # spill-free as data grows while AQE coalesces them away when small.
     # BENCH_SHUFFLE_PARTITIONS: explicit override for A/B probes.
     sp = os.environ.get("BENCH_SHUFFLE_PARTITIONS")
-    spark = get_spark(app_name="yatsm-spark-bench", master=MASTER,
-                      shuffle_partitions=int(sp) if sp else None,
-                      extra_confs=extra)
+    spark = get_spark(app_name="yatsm-spark-bench", master=f"local[{CPUS}]",
+                      shuffle_partitions=int(sp) if sp else None)
 
     # Materialize bench transcripts once (deterministic; excluded from timing).
     tx = transcripts_for_sf(spark, SF_DIR, data_root=os.path.join(REPO, "data"))
@@ -157,9 +145,9 @@ def main():
     # BENCH_WORK_DIR: where tier tables materialize. On a real cluster the
     # tier writes land on DISTRIBUTED storage whose bandwidth scales with
     # the executor count; a single local disk does not scale with threads,
-    # so scaling runs (tools/bench_scaling.py) point this at tmpfs to
-    # emulate storage that keeps up — otherwise the N->4N efficiency
-    # measures the disk, not the engine.
+    # so a scaling run points this at tmpfs to emulate storage that keeps
+    # up — otherwise the N->4N efficiency measures the disk, not the
+    # engine.
     work = os.environ.get("BENCH_WORK_DIR", os.path.join(REPO, "bench_work"))
 
     def rollup_path():
@@ -180,8 +168,8 @@ def main():
     # rebooted host charges ~90-130 s of per-JVM C2/codegen warm-up on
     # the first pass through the rollup path — measured 126 s first pass
     # vs 32.5 s second pass IN THE SAME JVM with a hot page cache, while
-    # tools/bench_ceiling.py's trivial scan is bit-stable across the
-    # reboot (so it is JIT, not IO or the engine). The scaling protocol
+    # a trivial parquet scan is bit-stable across the reboot (so it is
+    # JIT, not IO or the engine). The scaling protocol
     # (BENCH/BASELINE_8_32.md) has always timed the min of 2 in-JVM
     # passes for the same reason; running the headline path once untimed
     # makes every timed number steady-state. BENCH_NO_WARMUP=1 restores
@@ -193,6 +181,26 @@ def main():
         _t0 = time.time()
         rollup_path()
         jit_warmup_s = round(time.time() - _t0, 3)
+
+    def emit(metric, wall):
+        """The one JSON line every mode prints."""
+        probe_post = host_memory_probe()
+        print(json.dumps({
+            "metric": metric,
+            "value": round(wall, 3),
+            "unit": "sec",
+            "queries": queries,
+            "sf": SF_DIR,
+            "cpus": CPUS,
+            "n_turns": n_turns,
+            "turns_rolled_per_sec": round(n_turns / wall if wall > 0 else 0.0, 1),
+            "jit_warmup_s": jit_warmup_s,
+            "probe_pre": probe_pre,
+            "probe_post": probe_post,
+            "probe_healthy": bool(pre_ok and
+                                  probe_post["host_cache_gbs"] >= PROBE_MIN_GBS),
+            **probe_pre,
+        }))
 
     headline = timed("rollup_cascade_full", rollup_path)
 
@@ -206,42 +214,11 @@ def main():
             sink(change_scores(sparse, densify=True))
             sink(encode_chunks(sparse, "1m", densify=True))
 
-        job = timed("engine_job_full", full_job)
-        print(json.dumps({
-            "metric": "engine_job_full_wall",
-            "value": round(job, 3),
-            "unit": "sec",
-            "queries": queries,
-            "sf": SF_DIR,
-            "cpus": CPUS,
-            "n_turns": n_turns,
-            "turns_rolled_per_sec": round(n_turns / job, 1),
-            "jit_warmup_s": jit_warmup_s,
-            "probe_pre": probe_pre,
-            "probe_post": (pp := host_memory_probe()),
-            "probe_healthy": bool(pre_ok and
-                                  pp["host_cache_gbs"] >= PROBE_MIN_GBS),
-            **probe_pre,
-        }))
+        emit("engine_job_full_wall", timed("engine_job_full", full_job))
         return
 
     if os.environ.get("BENCH_HEADLINE_ONLY"):
-        print(json.dumps({
-            "metric": "rollup_cascade_full_wall",
-            "value": round(headline, 3),
-            "unit": "sec",
-            "queries": queries,
-            "sf": SF_DIR,
-            "cpus": CPUS,
-            "n_turns": n_turns,
-            "turns_rolled_per_sec": round(n_turns / headline, 1),
-            "jit_warmup_s": jit_warmup_s,
-            "probe_pre": probe_pre,
-            "probe_post": (pp := host_memory_probe()),
-            "probe_healthy": bool(pre_ok and
-                                  pp["host_cache_gbs"] >= PROBE_MIN_GBS),
-            **probe_pre,
-        }))
+        emit("rollup_cascade_full_wall", headline)
         return
 
     timed("rollup_1m_only", lambda: sink(rollup_from_turns(measures, "1m")))
@@ -279,23 +256,7 @@ def main():
         fn = e.queries()[name]
         timed(name, lambda fn=fn: sink(fn(spark, SF_DIR)))
 
-    turns_per_sec = n_turns / headline if headline > 0 else 0.0
-    print(json.dumps({
-        "metric": "rollup_cascade_full_wall",
-        "value": round(headline, 3),
-        "unit": "sec",
-        "queries": queries,
-        "sf": SF_DIR,
-        "cpus": CPUS,
-        "n_turns": n_turns,
-        "turns_rolled_per_sec": round(turns_per_sec, 1),
-        "jit_warmup_s": jit_warmup_s,
-        "probe_pre": probe_pre,
-        "probe_post": (pp := host_memory_probe()),
-        "probe_healthy": bool(pre_ok and
-                              pp["host_cache_gbs"] >= PROBE_MIN_GBS),
-        **probe_pre,
-    }))
+    emit("rollup_cascade_full_wall", headline)
 
 
 if __name__ == "__main__":

@@ -1,7 +1,7 @@
 """Print an order-insensitive hash of every rollup tier built at
-SPARK_GRAFT_CPUS parallelism — used by tools/bench_scaling.py to prove
-bit-identical tiers across cluster sizes (SURVEY.md §7.5.1), and to show a
-refactor leaves every tier bit-identical (run it before and after).
+SPARK_GRAFT_CPUS parallelism. Run it at two parallelisms to check the
+tiers are bit-identical across cluster sizes (SURVEY.md §7.5.1), or before
+and after a refactor to show it leaves every tier bit-identical.
 
 Env: SPARK_GRAFT_SF_DIR (default sf0.01; only the scale name, the last path
 component, is used: the transcripts are synthesized into data/),

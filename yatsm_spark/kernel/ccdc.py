@@ -159,82 +159,64 @@ def ccdc_fit(t: np.ndarray, Y: np.ndarray, params: CCDCParams | None = None) -> 
     # copies before mutating), so results are unchanged.
     act_arange = True
 
+    def window(pos_lo, pos_hi):
+        """Indices of act positions [pos_lo, pos_hi]: a basic slice (a
+        view) while act == arange(n)."""
+        return slice(pos_lo, pos_hi + 1) if act_arange else act[pos_lo : pos_hi + 1]
+
     # [X | Yᵀ]ᵀ, one row per variable: one Gram of a column block gives
     # every moment a fit needs (XᵀX, XᵀY, YᵀY), in vecmath's fixed order.
     k_cols = X_full.shape[1]
     Zt_full = np.vstack([X_full.T, Y])
 
-    def solve_moments(M, nw, c):
-        """(coefs, rmses) from the augmented moments M of nw obs whose
-        trend column is centred at c; the intercept shifts back to the
-        global frame by the exact algebra a_global = a_centred - slope * c."""
-        cf, sse = normal_lstsq(M, k_cols)
-        if p.trend:
-            for row in cf:
-                row[0] -= row[1] * c
-        return (np.array(cf, dtype=np.float64),
-                np.array([math.sqrt(max(s, 0.0) / nw) for s in sse]))
-
-    def fit_window(pos_lo, pos_hi):
-        """Fit all series on act positions [pos_lo, pos_hi]; returns
-        (coefs, rmses)."""
-        if act_arange:
-            idx = slice(pos_lo, pos_hi + 1)
-        else:
-            idx = act[pos_lo : pos_hi + 1]
-        if fast_ols:
-            # Normal equations with the trend column CENTERED inside the
-            # window: t is epoch-scale (~2e4 days) while window spans are
-            # ~1e-1..1e2 days, so the raw [1, t] block is nearly collinear
-            # (kappa(XtX) ~ 1e12 => the normal equations lose the
-            # coefficients). Centering makes XtX well-conditioned, and one
-            # Cholesky covers every series.
-            Zw = Zt_full[:, idx]
-            c = 0.0
-            if p.trend:
-                # arr.sum()/arr.size is np.mean minus the wrapper (same
-                # pairwise sum, same divide); this runs a few hundred
-                # thousand times per large conv group.
-                ts = t[idx]
-                c = ts.sum() / ts.size
-                Zw = Zw.copy()
-                Zw[1] -= c
-            return solve_moments(gram(Zw), Zw.shape[1], c)
-        return fit_series(X_full[idx], Y[:, idx], p.estimator)
-
-    # --- incremental normal-equation sums for monitor refits -------------
-    # A refit at cadence re-estimates on the WHOLE segment window
-    # [start, i) (reference semantics); fitting directly is O(window) per
-    # refit => O(n^2/cadence) on long segments. Instead maintain the
-    # running augmented moments over the fitted window: each refit
-    # batch-adds only the rows passed since the previous refit (one small
-    # Gram) and solves in the centered frame in O(k^3). Deleted noise obs
-    # are never added (deletions only happen at positions >= the refit
+    # --- one moment path for every OLS fit --------------------------------
+    # Training fits and monitor refits solve the same running augmented
+    # moments of the segment's rows, with the trend column taken about a
+    # fixed origin: the day of the segment's first observation. t is
+    # epoch-scale (~2e4 days) while windows span hours, so moments about
+    # t = 0 make [1, t] nearly collinear (kappa(XtX) ~ 1e12) and no
+    # translation of the sums afterwards gets the cancelled digits back;
+    # about the origin the trend spans the segment only. For epoch-scale t
+    # the difference t - origin is exact (Sterbenz), so shifting a series
+    # by whole days leaves every trend value bit-identical.
+    # A training fit resets the sums at the window start and solves. A
+    # refit at cadence re-estimates on the WHOLE segment window [start, i)
+    # (reference semantics) but adds only the rows passed since the
+    # previous fit (one small Gram) and solves in O(k^3). Deleted noise obs
+    # are never added (deletions only happen at positions >= the fit
     # frontier), so no removals are needed during monitoring.
     sums = {}
 
     def sums_add(pos_lo, pos_hi, reset=False):
+        """Add the rows at act positions [pos_lo, pos_hi] to the sums;
+        reset starts new sums with their origin at pos_lo's day."""
         if reset:
-            sums.update(M=0.0, n=0, c_num=0.0)
-        if pos_hi < pos_lo:
-            return
-        idx = act[pos_lo : pos_hi + 1]
-        sums["M"] += gram(Zt_full[:, idx])
-        sums["n"] += len(idx)
-        sums["c_num"] += float(t[idx].sum())
-
-    def fit_from_sums():
-        """Solve in the centered frame built from the global-frame sums via
-        the translation Xc = X·E (E = I, E[0,1] = -c): row 1 and then
-        column 1 of the moments lose c times row/column 0."""
-        M, nw = sums["M"], sums["n"]
-        c = 0.0
+            sums.update(M=0.0, n=0, origin=day(pos_lo))
+        Zw = Zt_full[:, window(pos_lo, pos_hi)]
         if p.trend:
-            c = sums["c_num"] / nw
-            M = M.copy()
-            M[1] -= c * M[0]
-            M[:, 1] -= c * M[:, 0]
-        return solve_moments(M, nw, c)
+            Zw = Zw.copy()
+            Zw[1] -= sums["origin"]
+        sums["M"] = sums["M"] + gram(Zw)
+        sums["n"] += Zw.shape[1]
+
+    def solve_moments():
+        """(coefs, rmses) from the sums; the intercept shifts back to the
+        global frame by the exact algebra a_global = a - slope * origin."""
+        cf, sse = normal_lstsq(sums["M"], k_cols)
+        if p.trend:
+            for row in cf:
+                row[0] -= row[1] * sums["origin"]
+        return (np.array(cf, dtype=np.float64),
+                np.array([math.sqrt(max(s, 0.0) / sums["n"]) for s in sse]))
+
+    def fit_window(pos_lo, pos_hi):
+        """Fit all series on act positions [pos_lo, pos_hi]; returns
+        (coefs, rmses)."""
+        if fast_ols:
+            sums_add(pos_lo, pos_hi, reset=True)
+            return solve_moments()
+        idx = window(pos_lo, pos_hi)
+        return fit_series(X_full[idx], Y[:, idx], p.estimator)
 
     def scores(cols, rm):
         """(scores, residuals) of the obs at indices cols under the current
@@ -285,8 +267,7 @@ def ccdc_fit(t: np.ndarray, Y: np.ndarray, params: CCDCParams | None = None) -> 
                 continue
             trained = True
             last_fit_end = day(here)
-            sums_add(start, here, reset=True)
-            last_sum_end = here + 1
+            last_sum_end = here + 1   # the training fit left the sums
 
         # --- W3 monitor, block-vectorized ------------------------------------
         # Between refits the model is FIXED, so scores for a whole block of
@@ -307,7 +288,7 @@ def ccdc_fit(t: np.ndarray, Y: np.ndarray, params: CCDCParams | None = None) -> 
                 if fast_ols:
                     sums_add(last_sum_end, i - 1)
                     last_sum_end = i
-                    coefs, rmses = fit_from_sums()
+                    coefs, rmses = solve_moments()
                 else:
                     coefs, rmses = fit_window(start, i - 1)
                 last_fit_end = day(i - 1)
