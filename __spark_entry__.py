@@ -35,6 +35,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from yatsm_spark import conf
 from yatsm_spark.ingest import with_measures
 from yatsm_spark.operators.bloomjoin import bloom_join
 from yatsm_spark.operators.bpe import bpe_merges, bpe_token_counts
@@ -163,7 +164,7 @@ def _ordered(df: DataFrame, *cols: str) -> DataFrame:
     exchange re-reads them — identical rows, one execution. The sort
     itself stays: ordered output is part of each query's contract.
     """
-    return df.localCheckpoint(eager=False).orderBy(*cols)
+    return conf.materialize(df, eager=False).orderBy(*cols)
 
 
 # ---------------------------------------------------------------------------

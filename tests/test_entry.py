@@ -51,7 +51,7 @@ def test_global_sorts_go_through_ordered():
              and c.func.attr == "transform" and c.args
              and isinstance(c.args[0], ast.Name) and c.args[0].id == "_ordered"]
     assert len(tails) == 52 and all(len(c.args) > 1 for c in tails)
-    assert QUERY_SIDE.count("localCheckpoint") == 1
+    assert QUERY_SIDE.count("conf.materialize(") == 1
 
 
 def _write(root, name, names):

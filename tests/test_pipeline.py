@@ -110,6 +110,23 @@ def test_unchanged_input_resume_skips_everything(spark, tx, tmp_path_factory):
     assert len(m.buckets) == 0
 
 
+def test_pipeline_leaves_unset_session_confs_unset(spark, tx, tmp_path):
+    """The bucket loop's shuffle width and the conv cache's AQE switch are
+    session-global: a key the caller never set must read back unset, not
+    as the last bucket's width or an explicit 'true'."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.unset(k)
+        run_pipeline(spark, tx, PipelineConfig(workdir=str(tmp_path), n_buckets=2,
+                                               compress=False, segments=False))
+        assert {k: spark.conf.get(k, None) for k in keys} == dict.fromkeys(keys)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
 def _window_start_encodings(workdir):
     """{(physical type, encodings)} of tier_1m.window_start over all files
     and row groups."""

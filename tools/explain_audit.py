@@ -1,730 +1,39 @@
-"""Dump .explain('formatted') for the engine's key plans and grep the
-properties that matter at 100 TB (pushed filters, pruned read schemas,
-partial aggregation, broadcast vs SMJ, WholeStageCodegen spans).
-Writes BENCH/PLANS.md. Usage: python tools/explain_audit.py
+"""Write BENCH/PLANS.md: each section of the plan-shape contract
+(tests/test_plans.py) with its PASS/FAIL lines and its formatted plan.
+Usage: SPARK_GRAFT_CPUS=4 python tools/explain_audit.py  (env SF_DIR picks
+the data, as in the test). Exits 1 if any expectation fails.
 """
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-
-
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main():
-    import __spark_entry__ as e
-    from pyspark.sql import functions as F
-
+    from tests.test_plans import SECTIONS, SF_DIR, Plans, holds
     from yatsm_spark.conf import get_spark
-    from yatsm_spark.ingest import with_measures
-    from yatsm_spark.operators.cascade import cascade
-    from yatsm_spark.operators.rollup import gapfill, rollup_from_turns
 
-    # Every declared query that ends in a global sort goes through entry
-    # `_ordered`, which inserts a lazy localCheckpoint before the orderBy
-    # (kills the RangePartitioner sampling re-execution). The checkpoint
-    # truncates explain() output to `Sort <- Scan ExistingRDD`, hiding the
-    # body this audit checks, so patch it to a plain orderBy here;
-    # plans/r06/*_runtime.txt documents the runtime shape.
-    e._ordered = lambda df, *cols: df.orderBy(*cols)
-
-    spark = get_spark(master="local[8]")
-    tx = spark.read.parquet(os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "data", "transcripts_sf0.01.parquet"))
-
-    sections = []
-
-    def audit(name, df, expectations):
-        p = plan_of(df)
-        checks = []
-        for label, needle, want in expectations:
-            if isinstance(want, bool):
-                ok = (needle in p) == want
-            else:  # int: exact occurrence count (e.g. "exactly 1 Exchange")
-                ok = p.count(needle) == want
-            checks.append(f"- {'PASS' if ok else '**FAIL**'}: {label}")
-        sections.append(f"## {name}\n\n" + "\n".join(checks) +
-                        "\n\n```\n" + p[:4000] + "\n```\n")
-
-    measures = with_measures(tx)
-    r1 = rollup_from_turns(measures, "1m")
-    audit("rollup_1m (A6)", r1, [
-        ("map-side partial aggregation present", "partial_count", True),
-        ("text column pruned from scan (only length survives projection)", "ReadSchema", True),
-    ])
-
-    filled = gapfill(r1, "1m")
-    audit("gapfill (W8)", filled, [
-        ("gap rows via Generate (explode), not a join", "Generate", True),
-        ("sparse+gaps union", "Union", True),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-
-    audit("cascade 1m->1h (A7)", cascade(filled, "1m", "1h"), [
-        ("hash aggregate (not sort-based)", "HashAggregate", True),
-    ])
-
-    # single-conv pushdown (S4)
-    one = tx.where(F.col("conv_id") == "conv00000007")
-    audit("single-conv read (S4)", one, [
-        ("predicate pushed to parquet scan", "PushedFilters: [IsNotNull(conv_id), EqualTo(conv_id,conv00000007)]", True),
-    ])
-
-    qs = e.queries()
-    audit("region_rollup (J2 broadcast)", qs["region_rollup"](spark, SF_DIR), [
-        ("broadcast hash join chosen", "BroadcastHashJoin", True),
-        ("no shuffle join for dims", "SortMergeJoin", False),
-    ])
-    audit("order_lineitem_interval (J1 range join)", qs["order_lineitem_interval"](spark, SF_DIR), [
-        ("equi-key join with range residual (hash or SMJ, never cartesian)", "CartesianProduct", False),
-    ])
-    audit("orders_asof (J3 as-of)", qs["orders_asof"](spark, SF_DIR), [
-        ("single window, rn filter", "RunningWindowFunction", False),  # informational
-        ("date filter pushed to scan", "PushedFilters", True),
-    ])
-    audit("cosine_topk (broadcast queries)", qs["cosine_topk"](spark, SF_DIR), [
-        ("query side broadcast", "BroadcastNestedLoopJoin", True),
-    ])
-    audit("token_counts (pure codegen)", qs["token_counts"](spark, SF_DIR), [
-        ("whole-stage codegen", "codegen id", True),
-        ("no Python UDF in plan", "BatchEvalPython", False),
-        ("no Arrow eval either (pure JVM)", "ArrowEvalPython", False),
-    ])
-    audit("tx_rollup_1m_salted (A6 two-phase)", qs["tx_rollup_1m_salted"](spark, SF_DIR), [
-        ("phase-1 map-side partial aggregation", "partial_count", True),
-        ("no Python anywhere", "EvalPython", False),
-    ])
-    audit("tx_phenology (A3 relational)", qs["tx_phenology"](spark, SF_DIR), [
-        ("profile stage partially aggregated map-side", "partial_count", True),
-        ("no Python anywhere (pure Catalyst)", "EvalPython", False),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-    audit("tx_retention (eviction anti-join)", qs["tx_retention"](spark, SF_DIR), [
-        ("left anti join (retained = fine MINUS evictable)", "LeftAnti", True),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-    audit("tx_rollup_1m_adaptive (selective salting)", qs["tx_rollup_1m_adaptive"](spark, SF_DIR), [
-        ("hot-key set broadcast to the flagging join", "BroadcastHashJoin", True),
-        ("both paths partially aggregated map-side", "partial_count", True),
-        ("no Python anywhere", "EvalPython", False),
-    ])
-    audit("embedding_near_dups (LSH + exact cosine)", qs["embedding_near_dups"](spark, SF_DIR), [
-        ("no cartesian product (bucketed candidates only)", "CartesianProduct", False),
-        ("no Python anywhere", "EvalPython", False),
-    ])
-    audit("curate_training (composed round-5 signals)",
-          qs["curate_training"](spark, SF_DIR), [
-        ("no Python anywhere", "EvalPython", False),
-        ("no cartesian product", "CartesianProduct", False),
-        ("final assembly joins move ids+scalars, text pruned upstream",
-         "ReadSchema", True),
-    ])
-    audit("lm_score (unigram LM quality signal)",
-          qs["lm_score"](spark, SF_DIR), [
-        ("word LM counts partially aggregated map-side", "partial_count", True),
-        ("no Python anywhere", "EvalPython", False),
-        ("no cartesian product (1-row total is a broadcast NL join)",
-         "CartesianProduct", False),
-    ])
-    audit("shuffle_export (two-phase global order)",
-          qs["shuffle_export"](spark, SF_DIR), [
-        ("rank window partitioned by the range-partition id (parallel)",
-         "windowspecdefinition(_part", True),
-        ("never collapses to one reducer", "SinglePartition", False),
-        ("offsets broadcast back", "BroadcastHashJoin", True),
-        ("no Python anywhere", "EvalPython", False),
-    ])
-    audit("decontaminate_fuzzy (broadcast-eval Jaccard)",
-          qs["decontaminate_fuzzy"](spark, SF_DIR), [
-        ("eval shingles broadcast to the train side", "BroadcastHashJoin", True),
-        ("no Python anywhere", "EvalPython", False),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-    audit("dup_ngram_spans (ExactSubstr coverage)",
-          qs["dup_ngram_spans"](spark, SF_DIR), [
-        ("gram counting partially aggregated map-side", "partial_count", True),
-        ("no Python anywhere (sequence/slice grams, window merge)",
-         "EvalPython", False),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-    audit("semdedup (clustered semantic dedup)", qs["semdedup"](spark, SF_DIR), [
-        ("no cartesian product (pairs join WITHIN clusters only)",
-         "CartesianProduct", False),
-        ("codebook assignment is one Arrow mapInPandas stage", "MapInPandas", True),
-        ("no row-at-a-time Python", "BatchEvalPython", False),
-    ])
-    audit("ivf_topk (IVF probe join)", qs["ivf_topk"](spark, SF_DIR), [
-        ("probe table broadcast (corpus side never shuffles for the join)",
-         "BroadcastHashJoin", True),
-        ("no cartesian product", "CartesianProduct", False),
-        ("codebook sims are JVM expressions, no Python", "EvalPython", False),
-    ])
-    audit("ivf_topk_b256 (broadcast-codebook IVF)", qs["ivf_topk_b256"](spark, SF_DIR), [
-        ("codebook assignment is ONE Arrow mapInPandas stage (no literal "
-         "explosion at 256x64; plan size O(1) in the codebook)", "MapInPandas", True),
-        ("probe table broadcast (corpus side never shuffles for the join)",
-         "BroadcastHashJoin", True),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-    audit("tx_commission_omission (P1-P3 grouped-map)",
-          qs["tx_commission_omission"](spark, SF_DIR), [
-        ("single grouped-map Python stage — postprocess reuses the CCDC "
-         "pass, zero extra exchanges", "FlatMapGroupsInPandas", True),
-        ("text pruned before the conv shuffle", "ReadSchema", True),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-    audit("events_sessionize (gaps-and-islands, 1 shuffle)",
-          qs["events_sessionize"](spark, SF_DIR), [
-        ("window lag/cumsum pass present", "Window", True),
-        ("session agg reuses the window's HashPartitioning(user_id) — the "
-         "subset rule means NO second exchange: exactly one Exchange in "
-         "the whole plan", "+- Exchange", 1),
-        ("no Python anywhere", "EvalPython", False),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-    audit("pii_redact (Catalyst regex scan+redact)", qs["pii_redact"](spark, SF_DIR), [
-        ("no Python anywhere", "EvalPython", False),
-        ("no exchange at all — pure per-row map over the scan", "Exchange", False),
-    ])
-    audit("text_repetition (array ngrams + word share)",
-          qs["text_repetition"](spark, SF_DIR), [
-        ("partial aggregation map-side", "partial_", True),
-        ("no Python anywhere", "EvalPython", False),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-    audit("multimodal_png (real compressed decode, mapInPandas)",
-          qs["multimodal_png"](spark, SF_DIR), [
-        ("decode is Arrow-batched mapInPandas", "MapInPandas", True),
-        ("zero shuffle (no Exchange)", "Exchange", False),
-    ])
-    audit("minhash_pairs (LSH band join, capped)", qs["minhash_pairs"](spark, SF_DIR), [
-        ("bucket-size cap applied via broadcast semi-side", "BroadcastHashJoin", True),
-        ("no cartesian product", "CartesianProduct", False),
-        ("no Python anywhere", "EvalPython", False),
-    ])
-    audit("multimodal_jpeg (baseline-DCT decode, mapInPandas)",
-          qs["multimodal_jpeg"](spark, SF_DIR), [
-        ("decode is Arrow-batched mapInPandas", "MapInPandas", True),
-        ("zero shuffle (no Exchange)", "Exchange", False),
-    ])
-    audit("tfidf_topk (explode + 2 hash-agg + vocab join)",
-          qs["tfidf_topk"](spark, SF_DIR), [
-        ("map-side partial counts on (doc,term)", "partial_count", True),
-        ("no cartesian product (scalar N is broadcast-NLJ)", "CartesianProduct", False),
-        ("pure Catalyst, no Python", "EvalPython", False),
-    ])
-    audit("bm25_topk (filtered postings + TakeOrdered)",
-          qs["bm25_topk"](spark, SF_DIR), [
-        ("top-k is TakeOrderedAndProject, not a global sort",
-         "TakeOrderedAndProject", True),
-        ("tiny df side broadcast", "BroadcastHashJoin", True),
-        ("no cartesian product", "CartesianProduct", False),
-        ("pure Catalyst, no Python", "EvalPython", False),
-    ])
-    audit("sample_hash (narrow deterministic filter)",
-          qs["sample_hash"](spark, SF_DIR), [
-        ("zero shuffle (filter runs in the scan stage)", "Exchange", False),
-        ("unreferenced text column pruned from the read", "text", False),
-    ])
-    audit("curate_corpus (staged pipeline decision table)",
-          qs["curate_corpus"](spark, SF_DIR), [
-        ("no cartesian product anywhere in the composed plan",
-         "CartesianProduct", False),
-        ("pure Catalyst, no Python", "EvalPython", False),
-        ("stage-restriction joins broadcast the id sets",
-         "BroadcastHashJoin", True),
-    ])
-    audit("hll_distinct (MAX-merged registers, m=4096)",
-          qs["hll_distinct"](spark, SF_DIR), [
-        ("register max partial-aggregates map-side (a map task ships at "
-         "most m rows per group, not its row count)", "partial_max", True),
-        ("pure Catalyst, no Python", "EvalPython", False),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-    audit("hdr_quantiles (integer log-histogram + rational ranks)",
-          qs["hdr_quantiles"](spark, SF_DIR), [
-        ("corpus shuffle carries partial (group, bucket) counts",
-         "partial_count", True),
-        ("quantile table is broadcast", "BroadcastNestedLoopJoin", True),
-        ("pure Catalyst, no Python", "EvalPython", False),
-    ])
-    audit("decontaminate (broadcast bench n-grams vs train explode)",
-          qs["decontaminate"](spark, SF_DIR), [
-        ("eval-sized n-gram set broadcast, never shuffled on the corpus",
-         "BroadcastHashJoin", True),
-        ("no cartesian product", "CartesianProduct", False),
-        ("pure Catalyst, no Python", "EvalPython", False),
-    ])
-    audit("chunk_docs (in-row window expand + explode)",
-          qs["chunk_docs"](spark, SF_DIR), [
-        ("zero shuffle — chunking runs at scan bandwidth", "Exchange", False),
-        ("pure Catalyst, no Python", "EvalPython", False),
-        ("only doc_id+text read", "ReadSchema: struct<doc_id:bigint,text:string>",
-         True),
-    ])
-    audit("pack_docs (applyInPandas fold per (source, shard))",
-          qs["pack_docs"](spark, SF_DIR), [
-        ("one shuffle on the bounded (source, shard) fold domain",
-         "+- Exchange", 1),
-        ("the fold itself is Arrow-batched FlatMapGroupsInPandas",
-         "FlatMapGroupsIn", True),
-        ("text pruned before the shuffle — only (doc_id, source, shard, dl) "
-         "ride the exchange", "ReadSchema: struct<doc_id:bigint,text:string,"
-         "source:string>", True),
-    ])
-    audit("sample_stratified (one window shuffle on the stratum key)",
-          qs["sample_stratified"](spark, SF_DIR), [
-        ("exactly one exchange", "+- Exchange", 1),
-        ("rank is a Window, no join", "Window", True),
-        ("partial top-k runs BEFORE the shuffle — each map task ships at "
-         "most n rows per stratum, so a hot stratum's shuffle volume is "
-         "n x maps, not the stratum size", "WindowGroupLimit", True),
-    ])
-
-    audit("heavy_hitters (adaptive prefilter, r6)",
-          qs["heavy_hitters"](spark, SF_DIR), [
-        # At this cardinality (values repeat ~500x) the sampled decision
-        # takes the plain exact plan: map-side partials already bound the
-        # shuffle, so the sketch passes would be pure overhead. The sketch
-        # branch remains for the high-cardinality regime (prefilter=
-        # "always" pins it; tested path-equal in test_sketches.py).
-        ("adaptive prefilter skips sketch joins here", "BroadcastHashJoin", False),
-        ("no sort-merge join anywhere", "SortMergeJoin", False),
-        ("final exact count partial-aggregates map-side", "partial_count", True),
-    ])
-
-    audit("cms_estimate (depth broadcast probes over the counter table)",
-          qs["cms_estimate"](spark, SF_DIR), [
-        ("broadcast hash joins, not SMJ", "BroadcastHashJoin", True),
-        ("no sort-merge join anywhere", "SortMergeJoin", False),
-    ])
-
-    audit("pca_project (literal-loadings projection)",
-          qs["pca_project"](spark, SF_DIR), [
-        ("projection is narrow: the ONLY exchange is the presentation "
-         "orderBy's range partitioning", "+- Exchange", 1),
-        ("no Python in the projection path (Catalyst literals)",
-         "ArrowEvalPython", False),
-        ("scan prunes to id + vector", "ReadSchema", True),
-    ])
-
-    audit("zorder_events (Morton key, pure Catalyst)",
-          qs["zorder_events"](spark, SF_DIR), [
-        ("key math is Project expressions over the scan (no UDF nodes)",
-         "MapInPandas", False),
-        ("no Python anywhere", "ArrowEvalPython", False),
-        ("only the final presentation sort exchanges", "+- Exchange", 1),
-    ])
-
-    audit("pq_adc_topk (codes scan + ranking window)",
-          qs["pq_adc_topk"](spark, SF_DIR), [
-        ("exactly two exchanges: the ranking window + the presentation "
-         "sort; encode->ADC is exchange-free map work", "+- Exchange", 2),
-        ("partial top-k below the exchange bounds shuffle volume",
-         "WindowGroupLimit", True),
-        ("no join at serve time (LUTs are broadcast variables)",
-         "Join", False),
-    ])
-
-    audit("bloom_join (bitmap lookups prune fact pre-exchange)",
-          qs["bloom_join"](spark, SF_DIR), [
-        ("every bitmap word-lookup is a broadcast join (never a shuffle "
-         "of fact)", "BroadcastHashJoin", True),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-
-    audit("tx_locf (gap-fill + LOCF windows)",
-          qs["tx_locf"](spark, SF_DIR), [
-        ("window functions present (lag for holes, last for carry)",
-         "Window", True),
-        ("no join in the fill path (sequence+explode, not grid join)",
-         "SortMergeJoin", False),
-    ])
-
-    audit("tx_twa (lead-window + decimal-exact agg)",
-          qs["tx_twa"](spark, SF_DIR), [
-        ("map-side partial aggregation present", "partial_", True),
-        ("text pruned before the shuffle (only length survives)",
-         "ReadSchema", True),
-    ])
-
-    audit("tx_lttb (bounded downsample, one grouping pass)",
-          qs["tx_lttb"](spark, SF_DIR), [
-        ("applyInPandas grouping present", "FlatMapGroupsInPandas", True),
-        ("no cartesian product", "CartesianProduct", False),
-    ])
-
-    audit("tx_rate (counter window + agg on the same key)",
-          qs["tx_rate"](spark, SF_DIR), [
-        ("map-side partial aggregation present", "partial_", True),
-        ("no join anywhere in the rate path", "Join", False),
-    ])
-
-    audit("tx_deriv (sum128 LS moments, one agg)",
-          qs["tx_deriv"](spark, SF_DIR), [
-        ("map-side partial aggregation present", "partial_", True),
-        ("no join anywhere in the slope path", "Join", False),
-        ("per-series min() window eliminated (constant-shift moments, r6)",
-         "Window", False),
-        ("no python in the moment path (pure Catalyst int64/decimal)",
-         "FlatMapGroupsInPandas", False),
-    ])
-
-    audit("tx_anomaly (rolling integer z-test, one window shuffle)",
-          qs["tx_anomaly"](spark, SF_DIR), [
-        ("window frame present", "Window", True),
-        ("no join / no python row path", "Join", False),
-        ("no python UDF (pure Catalyst decimals)", "Python", False),
-    ])
-
-    audit("tx_asof_tool (union-stream as-of: ONE window shuffle, no join)",
-          qs["tx_asof_tool"](spark, SF_DIR), [
-        ("window pass present", "Window", True),
-        ("NO join operator anywhere (union-stream formulation)",
-         "Join", False),
-        ("text column pruned from both scans", "text", False),
-    ])
-
-    audit("tx_hll_cascade (register MAX-merge serve path)",
-          qs["tx_hll_cascade"](spark, SF_DIR), [
-        ("map-side partial MAX before the corpus shuffle", "partial_max", True),
-        ("no join in the merge path", "Join", False),
-    ])
-
-    audit("tx_hdr_cascade (sketch merge serve path)",
-          qs["tx_hdr_cascade"](spark, SF_DIR), [
-        ("map-side partial counts before the corpus shuffle", "partial_", True),
-        ("quantile table broadcast (never shuffled against the sketch)",
-         "BroadcastNestedLoopJoin", True),
-        ("text column itself pruned (only length read)", "ReadSchema", True),
-    ])
-
-    audit("tx_ccf (lead-lag moments: one window pass + one agg, "
-          "shared conv key)",
-          qs["tx_ccf"](spark, SF_DIR), [
-        ("window pass present", "Window", True),
-        ("no join", "Join", False),
-        ("no python UDF (pure Catalyst decimals)", "BatchEvalPython", False),
-    ])
-
-    audit("tx_sax (PAA via row windows + agg on the series key)",
-          qs["tx_sax"](spark, SF_DIR), [
-        ("window pass present", "Window", True),
-        ("no join on the letter path", "SortMergeJoin", False),
-        ("no python UDF", "BatchEvalPython", False),
-    ])
-
-    audit("tx_alert_episodes (islands: window + agg reuse ONE exchange)",
-          qs["tx_alert_episodes"](spark, SF_DIR), [
-        ("window pass present", "Window", True),
-        ("no join", "Join", False),
-        ("no python UDF", "BatchEvalPython", False),
-    ])
-
-    audit("tx_dist_shift (chi2 halves: window + two aggs, one conv "
-          "shuffle)",
-          qs["tx_dist_shift"](spark, SF_DIR), [
-        ("window pass present", "Window", True),
-        ("map-side partial agg on the bucket counts", "partial_", True),
-        ("no join", "Join", False),
-        ("no python UDF", "BatchEvalPython", False),
-    ])
-
-    audit("tx_matrix_profile (bounded O(n^2) kernel per conv, one "
-          "group shuffle)",
-          qs["tx_matrix_profile"](spark, SF_DIR), [
-        ("applyInPandas group map (Arrow, not per-row python)",
-         "FlatMapGroupsInPandas", True),
-        ("no join", "Join", False),
-        ("text column pruned from scan", "text", False),
-    ])
-
-    audit("tx_theilsen (pairwise-median kernel per conv)",
-          qs["tx_theilsen"](spark, SF_DIR), [
-        ("applyInPandas group map (Arrow, not per-row python)",
-         "FlatMapGroupsInPandas", True),
-        ("no join", "Join", False),
-        ("text column pruned from scan", "text", False),
-    ])
-
-    audit("tx_swing (retention codec: one group shuffle, Arrow kernel)",
-          qs["tx_swing"](spark, SF_DIR), [
-        ("applyInPandas group map (Arrow, not per-row python)",
-         "FlatMapGroupsInPandas", True),
-        ("no join", "Join", False),
-        ("text column pruned from scan", "text", False),
-    ])
-
-    audit("tx_bursts (raw-arrival Viterbi per conv, one group shuffle)",
-          qs["tx_bursts"](spark, SF_DIR), [
-        ("applyInPandas group map (Arrow, not per-row python)",
-         "FlatMapGroupsInPandas", True),
-        ("no join", "Join", False),
-        ("text column pruned from scan", "text", False),
-    ])
-
-    audit("tx_dtw_rerank (bucket pairs -> exact DTW: joins on bounded "
-          "candidates only)",
-          qs["tx_dtw_rerank"](spark, SF_DIR), [
-        ("Arrow batch pass for the DTW kernel (mapInPandas)",
-         "MapInPandas", True),
-        ("hot-word anti-join is broadcast (tiny hot set)",
-         "BroadcastHashJoin", True),
-        ("text column pruned from scan", "text", False),
-    ])
-
-    audit("tx_left_profile (bounded-history novelty kernel per conv)",
-          qs["tx_left_profile"](spark, SF_DIR), [
-        ("applyInPandas group map (Arrow, not per-row python)",
-         "FlatMapGroupsInPandas", True),
-        ("no join", "Join", False),
-        ("text column pruned from scan", "text", False),
-    ])
-
-    audit("events_funnel (MIN-based step chain: hash joins on the "
-          "user key, no windows)",
-          qs["events_funnel"](spark, SF_DIR), [
-        ("map-side partial MIN per step", "partial_min", True),
-        ("rate base broadcast (one row)", "BroadcastNestedLoopJoin",
-         True),
-        ("no python UDF", "BatchEvalPython", False),
-        ("props column pruned from scan", "props", False),
-    ])
-
-    audit("tx_realtime_view (materialized tier UNION fresh-tail rollup)",
-          qs["tx_realtime_view"](spark, SF_DIR), [
-        ("union serve path present", "Union", True),
-        ("map-side partial agg on the fresh tail", "partial_count", True),
-        ("no python UDF", "BatchEvalPython", False),
-        ("text pruned (only length read)", "ReadSchema", True),
-    ])
-
-    audit("events_cohorts (cohort MIN + distinct + co-partitioned join)",
-          qs["events_cohorts"](spark, SF_DIR), [
-        ("map-side partial MIN for cohort assignment", "partial_min",
-         True),
-        ("no python UDF", "BatchEvalPython", False),
-        ("props column pruned from scan", "props", False),
-    ])
-
-    audit("tx_topk_slots (rank-limit: partial WindowGroupLimit below "
-          "the exchange)",
-          qs["tx_topk_slots"](spark, SF_DIR), [
-        ("partial WindowGroupLimit planned (hot conv ships k x maps "
-         "rows, not its series)", "WindowGroupLimit", True),
-        ("no join", "Join", False),
-    ])
-
-    # tier-routing over MATERIALIZED tier tables (the production shape —
-    # tx_route builds tiers inline, which hides the scan-pruning story):
-    # every tier slice must push its window_start range to the parquet
-    # scan, and the whole request is one union + ONE final hash agg.
-    import tempfile
-
-    from yatsm_spark.operators.routing import route_range
-
-    tdir = tempfile.mkdtemp(prefix="route_audit_")
-    t1m = rollup_from_turns(measures.where(F.col("ts") < "2025-01-20"), "1m")
-    t1m.write.mode("overwrite").parquet(f"{tdir}/t1m")
-    t1m_r = spark.read.parquet(f"{tdir}/t1m")
-    cascade(t1m_r, "1m", "1h").write.mode("overwrite").parquet(f"{tdir}/t1h")
-    cascade(t1m_r, "1m", "1d").write.mode("overwrite").parquet(f"{tdir}/t1d")
-    tiers = {"1m": t1m_r, "1h": spark.read.parquet(f"{tdir}/t1h"),
-             "1d": spark.read.parquet(f"{tdir}/t1d")}
-    routed = route_range(tiers, "2025-01-02 00:30:00", "2025-01-22 02:03:00",
-                         fresh_measures=measures,
-                         watermark="2025-01-20 00:00:00")
-    audit("route_range over materialized tiers (tier-routing serve path)",
-          routed, [
-        ("window_start range pushed to tier scans",
-         "PushedFilters: [IsNotNull(window_start), GreaterThanOrEqual(window_start", True),
-        ("fresh-tail ts range pushed to the raw scan",
-         "PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts", True),
-        ("union serve path present", "Union", True),
-        ("one partial+final agg pair, nothing more (each op appears "
-         "twice in formatted output)", "HashAggregate", 4),
-        ("exactly ONE exchange for the whole request", "Exchange", 2),
-        ("no python UDF", "BatchEvalPython", False),
-    ])
-
-    from yatsm_spark.operators.codec import encode_chunks
-
-    chunks = encode_chunks(t1m_r, "1m", densify=True)
-    chunks.write.mode("overwrite").parquet(f"{tdir}/chunks")
-    chunks_r = spark.read.parquet(f"{tdir}/chunks")
-    live = t1m_r.where(F.col("window_start") >= "2025-01-15")
-    routed_c = route_range(
-        {"1m": live, "1h": spark.read.parquet(f"{tdir}/t1h"),
-         "1d": spark.read.parquet(f"{tdir}/t1d")},
-        "2025-01-02 00:30:00", "2025-01-22 02:03:00",
-        fresh_measures=measures, watermark="2025-01-20 00:00:00",
-        chunks=chunks_r)
-    audit("route_range through compressed chunks (evicted-history serve)",
-          routed_c, [
-        ("chunk_start range pushed to the CHUNK scan (prune before "
-         "decode)", "GreaterThanOrEqual(chunk_start", True),
-        ("anti-join dedup of the compressed/live overlap", "LeftAnti", True),
-        ("decode is mapInPandas (Arrow), not row-at-a-time python",
-         "MapInPandas", True),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-    ])
-
-    audit("bpe_token_counts (real BPE: distinct-word tokenize + "
-          "broadcast join back)",
-          qs["bpe_token_counts"](spark, SF_DIR), [
-        ("distinct-word kernel feeds a BROADCAST join back to the "
-         "exploded docs (never a shuffle of the corpus against the "
-         "vocab)", "BroadcastHashJoin", True),
-        ("tokenize kernel is a grouped Arrow UDF over DISTINCT words "
-         "only", "FlatMapGroupsInPandas", True),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-        ("no cartesian product", "Cartesian", False),
-        ("text column pruned after pretokenization (explode output "
-         "carries word, not text)", "ReadSchema: struct<doc_id:bigint,text:string>", True),
-    ])
-
-    audit("pack_docs_bpe (BPE lengths joined into the next-fit fold)",
-          qs["pack_docs_bpe"](spark, SF_DIR), [
-        ("fold is a grouped Arrow UDF per (source, shard)",
-         "FlatMapGroupsInPandas", True),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-        ("no cartesian product", "Cartesian", False),
-    ])
-
-    audit("gopher_rules (full rule battery: one linear projection)",
-          qs["gopher_rules"](spark, SF_DIR), [
-        ("zero shuffles — pure per-row Catalyst", "Exchange", 0),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-        # higher-order array lambdas are not WSCG-supported; the property
-        # that matters is that each array traversal runs ONCE per row
-        # (two stacked projections — CollapseProject keeps non-cheap
-        # expressions out-of-line), not 8x per referencing column
-        ("word split+filter evaluated exactly once per row",
-         "split(trim(text", 1),
-        ("line split evaluated exactly once per row (word split uses "
-         "trim, so the two don't collide)", "split(text", 1),
-    ])
-
-    audit("tx_periodogram (harmonic power scan over the gap-filled grid)",
-          qs["tx_periodogram"](spark, SF_DIR), [
-        ("per-(conv,period) moments partially aggregated map-side",
-         "partial_count", True),
-        ("period fan-out is a Generate (explode), not a join",
-         "Generate", True),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-        ("no cartesian product", "Cartesian", False),
-    ])
-
-    audit("dsir_weights (hashed n-gram importance weights)",
-          qs["dsir_weights"](spark, SF_DIR), [
-        ("bounded ratio dim BROADCASTS back onto the checkpointed gram table",
-         "BroadcastHashJoin", True),
-        # r6: the tokenize+hash pass runs ONCE into a checkpointed
-        # (doc, flag, bucket, k) table; the visible plan aggregates that
-        # table (partial_sum of k) — the old triple-recomputed
-        # partial_count subtrees are gone.
-        ("bucket multiplicities partially aggregated map-side",
-         "partial_sum", True),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-        ("no cartesian product", "Cartesian", False),
-    ])
-
-    audit("c4_clean (line-rule battery, byte-exact rewrite)",
-          qs["c4_clean"](spark, SF_DIR), [
-        ("zero shuffles — pure per-row Catalyst", "Exchange", False),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-    ])
-
-    audit("para_dedup (canonical-instance paragraph dedup + reassembly)",
-          qs["para_dedup"](spark, SF_DIR), [
-        ("paragraph fan-out is a Generate (posexplode)", "Generate", True),
-        ("canonical-owner agg is partial+final on the paragraph hash",
-         "partial_min", True),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-        ("no cartesian product", "Cartesian", False),
-    ])
-
-    audit("remove_dup_spans (ExactSubstr removal rewrite)",
-          qs["remove_dup_spans"](spark, SF_DIR), [
-        ("gram fan-out is a Generate (posexplode)", "Generate", True),
-        ("gram counts partially aggregated map-side", "partial_count", True),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-        ("no cartesian product", "Cartesian", False),
-    ])
-
-    audit("dsir_select (deterministic resampling cut)",
-          qs["dsir_select"](spark, SF_DIR), [
-        ("no one-reducer global window (rank is range-partitioned)",
-         "Exchange SinglePartition", False),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-    ])
-
-    audit("datamix_report (per-source curation telemetry)",
-          qs["datamix_report"](spark, SF_DIR), [
-        ("source rollup partially aggregated map-side", "partial_count", True),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-        ("no cartesian product", "Cartesian", False),
-    ])
-
-    audit("tx_kalman (state-space smoother via grouped Arrow UDF)",
-          qs["tx_kalman"](spark, SF_DIR), [
-        ("kernel drives through ONE grouped Arrow UDF",
-         "FlatMapGroupsInPandas", True),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-    ])
-
-    audit("tx_compact (chunk compaction feeding the chunk-serve path)",
-          qs["tx_compact"](spark, SF_DIR), [
-        ("compaction is a grouped Arrow UDF per (conv, tier)",
-         "FlatMapGroupsInPandas", True),
-        ("chunk decode on the serve side is mapInPandas (no shuffle)",
-         "MapInPandas", True),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-        ("no cartesian product", "Cartesian", False),
-    ])
-
-    audit("tx_response_latency (forward-frame pairing + selection ranks)",
-          qs["tx_response_latency"](spark, SF_DIR), [
-        ("forward-frame window, rank window and final agg all share the "
-         "conv partitioning: exactly one Exchange", "+- Exchange", 1),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-    ])
-
-    audit("weighted_sample (A-ES draw via shared global_rank)",
-          qs["weighted_sample"](spark, SF_DIR), [
-        ("no one-reducer global window (rank is range-partitioned)",
-         "Exchange SinglePartition", False),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-    ])
-
-    audit("tx_tool_transitions (Markov counts over tool sequences)",
-          qs["tx_tool_transitions"](spark, SF_DIR), [
-        ("text pruned at the scan (only conv/turn/tool read)",
-         "text", False),
-        ("no row-at-a-time python UDF", "BatchEvalPython", False),
-        ("no cartesian product", "Cartesian", False),
-    ])
-
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "BENCH", "PLANS.md")
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    with open(out, "w") as f:
+    spark = get_spark()
+    sections, fails = [], 0
+    with tempfile.TemporaryDirectory(prefix="plans_") as work:
+        plans = Plans(spark, SF_DIR, work)
+        for section, checks in SECTIONS:
+            plan = plans.section_plan(section)
+            oks = [holds(plan, needle, want) for _, needle, want in checks]
+            fails += oks.count(False)
+            sections.append(f"## {section}\n\n" + "\n".join(
+                f"- {'PASS' if ok else '**FAIL**'}: {label}"
+                for ok, (label, _, _) in zip(oks, checks)) +
+                "\n\n```\n" + plan[:4000] + "\n```\n")
+    with open(os.path.join(REPO, "BENCH", "PLANS.md"), "w") as f:
         f.write("# PLANS — physical-plan audit (tools/explain_audit.py)\n\n"
                 "Checks the plan properties that decide 100 TB behavior: pushdown,\n"
-                "pruning, partial aggregation, join strategy, codegen coverage.\n\n"
-                + "\n".join(sections))
-    fails = sum(s.count("**FAIL**") for s in sections)
+                "pruning, partial aggregation, join strategy, codegen coverage.\n"
+                f"Captured at {spark.sparkContext.master} on "
+                f"{os.path.basename(SF_DIR.rstrip('/'))}.\n\n" + "\n".join(sections))
     print(f"wrote BENCH/PLANS.md, {fails} failed expectations")
     sys.exit(1 if fails else 0)
 

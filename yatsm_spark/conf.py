@@ -9,8 +9,9 @@ cores for local runs — on a real cluster this is overridden by
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Confs that matter at 100 TB and cost nothing locally.
 ENGINE_CONFS = {
@@ -40,6 +41,31 @@ ENGINE_CONFS = {
     "spark.ui.showConsoleProgress": "false",
     "spark.ui.enabled": "false",
 }
+
+
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df`` computed once and its lineage cut: the engine's one
+    ``localCheckpoint``. Call sites look it up through this module
+    (``conf.materialize``), so replacing this one attribute reaches every
+    site; the plan contract (tests/test_plans.py) replaces it with the
+    identity to see the plan behind each checkpoint."""
+    return df.localCheckpoint(eager=eager)
+
+
+@contextmanager
+def scoped_conf(conf, key: str, value: str | None = None):
+    """Session conf ``key`` set to ``value`` (if given) for the block, then
+    put back: unset again if it was unset on entry."""
+    prev = conf.get(key, None)
+    if value is not None:
+        conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            conf.unset(key)
+        else:
+            conf.set(key, prev)
 
 
 def shuffle_partitions_for_bytes(n_bytes: int, cores: int,

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yatsm_spark import conf
+
 DEFAULT_BITS = 1 << 20
 DEFAULT_HASHES = 5
 
@@ -89,7 +91,7 @@ def bloom_prune(fact: DataFrame, bitmap: DataFrame, key_col: str,
 
     The bitmap plan is referenced k times with different column aliases,
     which defeats exchange reuse — materialize it once (``bloom_join``
-    does ``localCheckpoint(eager=True)``) so the dim aggregation runs a
+    does ``conf.materialize``) so the dim aggregation runs a
     single time, not per hash.
     """
     out = fact
@@ -125,6 +127,6 @@ def bloom_join(fact: DataFrame, dim: DataFrame, fact_key: str,
     # materialize the (tiny, bounded) bitmap once: its plan is probed k
     # times under different aliases, which defeats exchange reuse
     bm = bloom_bitmap(dim, dim_key, n_bits, n_hashes) \
-        .localCheckpoint(eager=True)
+        .transform(conf.materialize)
     pruned = bloom_prune(fact, bm, fact_key, n_bits, n_hashes)
     return pruned.join(dim, pruned[fact_key] == dim[dim_key])

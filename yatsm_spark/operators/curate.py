@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yatsm_spark import conf
 from yatsm_spark.operators.decontam import decontaminate
 from yatsm_spark.operators.dedup import (
     _NORM,
@@ -65,24 +66,24 @@ def curate_corpus(docs: DataFrame, bench_rate: float = 0.05,
     ids = docs.select("doc_id")
     bench = sample_hash(docs, bench_rate)
     train_ids = sample_hash(docs, bench_rate, complement=True) \
-        .select("doc_id").localCheckpoint(eager=True)
+        .select("doc_id").transform(conf.materialize)
     q = quality_scores(docs, text_col).select("doc_id", "quality_keep") \
-        .localCheckpoint(eager=True)
+        .transform(conf.materialize)
 
     s1_ids = train_ids.join(q.filter("quality_keep").select("doc_id"),
                             "doc_id")
     s1 = docs.select("doc_id", text_col).join(s1_ids, "doc_id")
     keep2 = (s1.select("doc_id", F.md5(_NORM(F.col(text_col))).alias("fp"))
                .groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-               .select("doc_id").localCheckpoint(eager=True))
+               .select("doc_id").transform(conf.materialize))
     # s2 carries text into the near-dup stage and is consumed by the pair
     # builder, the labeling join and s3 — checkpoint the survivor slice so
     # the docs-scan+joins run once.
-    s2 = s1.join(keep2, "doc_id").localCheckpoint(eager=True)
+    s2 = conf.materialize(s1.join(keep2, "doc_id"))
     keep3 = (dedup_groups(s2, ngram_jaccard_pairs(
                  s2, threshold=jaccard_threshold, text_col=text_col))
              .filter("is_canonical").select("doc_id")
-             .localCheckpoint(eager=True))
+             .transform(conf.materialize))
     s3 = s2.join(keep3, "doc_id")
     dec = decontaminate(s3, bench, n=ngram_n, text_col=text_col) \
         .select("doc_id", "n_contaminated_ngrams")

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from yatsm_spark import conf
+
 # Explicit class (not \s): Java includes U+000B in \s, RE2 (oracle) does
 # not — see operators/textstats.py WS_CLASS (round-3 ADVICE).
 _NORM = lambda c: F.lower(F.regexp_replace(F.trim(c), "[ \\t\\n\\x0B\\f\\r]+", " "))
@@ -100,7 +102,7 @@ def minhash_candidates(docs: DataFrame, n_hashes: int = 8, bands: int = 4,
     # Size is docs x bands short rows — the same bounded-intermediate class
     # as the CMS/connected-components checkpoints.
     banded = (sig.select("doc_id", F.explode(F.array(*band_cols)).alias("band_key"))
-                 .localCheckpoint(eager=True))
+                 .transform(conf.materialize))
     # Remove the OVER-cap keys with a broadcast anti-join: the hot-key set is
     # tiny by construction (each key over the cap covers >max_band_size docs),
     # while the keep-set is O(docs x bands) — broadcasting THAT would OOM at
@@ -131,13 +133,13 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5, shingle_n: int 
     the capped sets (round-1 ADVICE: mixing capped intersections with
     uncapped sizes silently underestimates J whenever the cap fires).
     """
-    # localCheckpoint, NOT cache() (r6): the shingle stream has three
+    # materialize, NOT cache() (r6): the shingle stream has three
     # consumers in one query (stop-key agg, both self-join sides via shf);
     # a lazy cache lets the first execution's consumers RACE to populate
     # it, each recomputing the upstream subtree — measured 11.7s vs 2.7s
     # when the input is itself a join (curate_corpus's survivor slice).
     # The eager checkpoint materializes exactly once.
-    sh = word_shingles(docs, shingle_n, text_col).localCheckpoint(eager=True)
+    sh = conf.materialize(word_shingles(docs, shingle_n, text_col))
     # Stop-shingles (df > cap) are the SMALL set — broadcast-anti-join them
     # out rather than broadcasting the corpus-sized keep-set (round-2 ADVICE).
     stop = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).filter(
@@ -203,13 +205,13 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     groupBy-min + one join on the node key: 2 shuffles, all JVM.
 
     Scale posture: the edge set shrinks toward stars every round; state is
-    localCheckpoint()ed per round to truncate lineage (iterative plans
+    materialized per round to truncate lineage (iterative plans
     otherwise recompute the whole prefix), and convergence is a driver-side
     scalar (count + order-insensitive hash) — no collect of data rows."""
     spark = pairs.sparkSession
     a, b = F.col(a_col), F.col(b_col)
     edges = (pairs.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-             .filter(F.col("u") != F.col("v")).distinct().localCheckpoint())
+             .filter(F.col("u") != F.col("v")).distinct().transform(conf.materialize))
 
     def star(e: DataFrame, large: bool) -> DataFrame:
         # symmetric neighbor list, grouped min m(u) = min(N(u) ∪ {u})
@@ -282,7 +284,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
         return spark.createDataFrame(
             [(n, comp_min[find(n)]) for n in sorted(nodes)], schema)
     for _ in range(max_iters):
-        edges = star(star(edges, large=True), large=False).localCheckpoint()
+        edges = conf.materialize(star(star(edges, large=True), large=False))
         cur = sig(edges)
         if cur == prev:
             break

@@ -14,7 +14,7 @@ long and ranking is integer-exact cross-engine.
 
 Scale shape: ONE tokenize + explode + md5 pass over the corpus, reduced
 to a (doc, target-flag, bucket, multiplicity) table that is
-localCheckpoint()ed (bounded by docs x n_buckets, far smaller than the
+materialized once (bounded by docs x n_buckets, far smaller than the
 occurrence stream); source/target bucket counts and the per-doc weight agg
 all reuse it, so the text is normalized and hashed exactly once. The ratio
 dim broadcast-joins back onto the checkpointed table; ONE per-doc hash agg.
@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from yatsm_spark import conf
 from yatsm_spark.operators.dedup import _NORM
 
 
@@ -56,7 +57,7 @@ def dsir_weights(docs: DataFrame, target: Column, text_col: str = "text",
     # join-back) and Spark recomputed the full normalize/split/md5 pass for
     # each — 3x the dominant cost. Carrying the target flag through one
     # gram stream, pre-aggregating to (doc, flag, bucket, k) and
-    # localCheckpoint()ing that bounded table (<= docs x n_buckets rows,
+    # materializing that bounded table (<= docs x n_buckets rows,
     # far smaller than the occurrence stream) lets every downstream agg
     # reuse one tokenize pass. All sums below are over the same integers,
     # so cs/ct/n_feats/lw are unchanged.
@@ -82,7 +83,7 @@ def dsir_weights(docs: DataFrame, target: Column, text_col: str = "text",
            .select("doc_id", "_is_t", _bucket(F.col("gram")).alias("bucket")))
     occ_k = (occ.groupBy("doc_id", "_is_t", "bucket")
                 .agg(F.count(F.lit(1)).alias("k"))
-                .localCheckpoint(eager=True))
+                .transform(conf.materialize))
 
     src = occ_k.groupBy("bucket").agg(F.sum("k").alias("cs"))
     tgt = (occ_k.filter(F.col("_is_t"))

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from yatsm_spark import conf
+
 #: Knuth multiplicative constant (2^32 / phi); ids here are < 2^31 so the
 #: product stays far inside int64 — no overflow wrap to reason about.
 _KNUTH = 2654435761
@@ -145,14 +147,14 @@ def global_shuffle(df: DataFrame, seed: int = 0, id_col: str = "doc_id",
         n_parts = spark.sparkContext.defaultParallelism
     key = F.pmod((F.col(id_col) + F.lit(int(seed))) * F.lit(_KNUTH),
                  F.lit(_MOD)).alias("_h")
-    # localCheckpoint pins ONE materialization: the counts collected below
+    # materialize pins ONE computation: the counts collected below
     # and the window pass must see identical partition contents (range
     # boundaries come from sampling; recomputing the exchange could place
     # them differently and silently shift every offset).
     d = (df.select(F.col(id_col), key)
          .repartitionByRange(n_parts, F.col("_h"), F.col(id_col))
          .withColumn("_part", F.spark_partition_id())
-         .localCheckpoint())
+         .transform(conf.materialize))
     counts = (d.groupBy("_part").agg(F.count(F.lit(1)).alias("_c"))
               .orderBy("_part").collect())
     offsets, acc = {}, 0
@@ -186,10 +188,10 @@ def global_rank(df: DataFrame, order_cols: list, n_parts: int | None = None,
     # bounds by sampling-executing the child plan, so an expensive upstream
     # (e.g. dsir_weights feeding dsir_select) otherwise runs twice — once
     # for the sampling pass, once for the real exchange.
-    d = (df.localCheckpoint(eager=False)
+    d = (df.transform(conf.materialize, eager=False)
          .repartitionByRange(n_parts, *cols)
          .withColumn("_part", F.spark_partition_id())
-         .localCheckpoint())
+         .transform(conf.materialize))
     counts = (d.groupBy("_part").agg(F.count(F.lit(1)).alias("_c"))
               .orderBy("_part").collect())
     offsets, acc = {}, 0

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from yatsm_spark import conf
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -367,7 +369,7 @@ def train_kmeans(
     # Lloyd iteration re-assigned over this subtree, re-scanning and
     # re-casting the embeddings n_iters+1 times.
     sample = sample.select(F.col(id_col), vec_d.alias("v")) \
-                   .localCheckpoint(eager=True)
+                   .transform(conf.materialize)
 
     init = sample.orderBy(F.col(id_col).asc()).limit(n_centroids).collect()
     if len(init) < n_centroids:
@@ -556,7 +558,7 @@ def semdedup(
         F.element_at(F.col("csims"), (F.col("cluster") + 1).cast("int"))
          .alias("cent_sim"),
         F.col("v"), F.col("nrm"),
-    ).localCheckpoint(eager=True)
+    ).transform(conf.materialize)
     sizes = base.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
     worst = max((r.n for r in sizes), default=0)
     if worst > max_cluster_size:

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from yatsm_spark import conf
+
 #: HLL precision: p=12 -> m=4096 registers; md5 nibbles 1-3 pick the
 #: register, nibbles 4-18 give the 60-bit rho stream.
 HLL_P = 12
@@ -224,7 +226,7 @@ def _with_cms_estimate(df: DataFrame, cms: DataFrame,
     (missing cell = 0). depth broadcast hash joins — the sketch is
     bounded (groups * depth * width rows) so every join is narrow and
     shuffle-free on the probe side. ``cms`` must be materialized
-    (localCheckpoint) so the depth probes don't recompute the corpus
+    (``conf.materialize``) so the depth probes don't recompute the corpus
     aggregation once per join."""
     ests = []
     for r in range(CMS_DEPTH):
@@ -244,7 +246,7 @@ def cms_estimate(df: DataFrame, group_cols: list[str],
     """Point-query the CMS built over ``df``: for each row of ``items``
     (group... + value_col), return (group..., value, est_count) with
     the classic one-sided guarantee est_count >= true count."""
-    cms = cms_table(df, group_cols, value_col).localCheckpoint(eager=True)
+    cms = conf.materialize(cms_table(df, group_cols, value_col))
     est = _with_cms_estimate(items, cms, group_cols, value_col,
                              "est_count")
     return est.select(*group_cols, value_col, "est_count")
@@ -333,7 +335,7 @@ def heavy_hitters(df: DataFrame, group_cols: list[str], value_col: str,
                     .agg(F.count("*").alias("cnt"))
                     .filter(F.col("cnt") >= min_count))
     cms = _cms_table_fast(rows, group_cols, value_col, depth, width) \
-        .localCheckpoint(eager=True)
+        .transform(conf.materialize)
     ests = []
     pre = rows
     for r in range(depth):

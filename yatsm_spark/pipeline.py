@@ -41,7 +41,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from yatsm_spark.checkpoint import CheckpointManager
-from yatsm_spark.conf import shuffle_partitions_for_bytes
+from yatsm_spark.conf import scoped_conf, shuffle_partitions_for_bytes
 from yatsm_spark.ingest import with_measures
 from yatsm_spark.operators import rollup as R
 from yatsm_spark.operators.cascade import cascade
@@ -68,13 +68,8 @@ def _conv_cache(df: DataFrame) -> DataFrame:
     before then adds its own exchange and sort. (Spark 4.1's
     ``canChangeCachedPlanOutputPartitioning=false`` keeps the cached plan
     adaptive, and the first tier_1m write still exchanges.)"""
-    conf = df.sparkSession.conf
-    prev = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(df.sparkSession.conf, "spark.sql.adaptive.enabled", "false"):
         return df.sortWithinPartitions("conv_id", "window_start").cache()
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev)
 
 
 @dataclass
@@ -147,11 +142,6 @@ def run_pipeline(
     store = ParquetStorage(cfg.workdir, cfg.n_buckets)
     ckpt = CheckpointManager(cfg.workdir)
     metrics = PipelineMetrics()
-    # The bucket loop sets a DATA-SIZED shuffle width per bucket; that is a
-    # session-global conf, so remember the caller's value and restore it on
-    # every exit path — otherwise the last bucket's width leaks into
-    # whatever the caller runs next on this SparkSession (round-3 ADVICE).
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions", None)
 
     # --- stage 0: bucketed staging of per-turn measures ---------------------
     # One full-input pass; partitionBy(bucket) so each bucket job reads only
@@ -173,7 +163,10 @@ def run_pipeline(
 
     count = F.count(F.lit(1))
     sparse_count = F.count_if(~F.col("gap_filled"))
-    try:
+    # The bucket loop sets a data-sized shuffle width per bucket; that is a
+    # session-global conf, so the caller's value (or its absence) comes back
+    # on every exit path, the injected-failure raise of the resume tests too.
+    with scoped_conf(spark.conf, "spark.sql.shuffle.partitions"):
         # --- per-bucket stage graph ---------------------------------------------
         for b in range(cfg.n_buckets):
             bdir = os.path.join(store.path(staging), f"bucket={b}")
@@ -237,11 +230,6 @@ def run_pipeline(
             metrics.buckets.append(m)
             if fail_after_bucket is not None and b >= fail_after_bucket:
                 raise RuntimeError(f"injected failure after bucket {b}")
-    finally:
-        # Restore the caller's shuffle width on every exit path
-        # (including the injected-failure raise used by resume tests).
-        if prev_shuffle is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
     metrics.wall_s = time.time() - t0
     return metrics

@@ -44,6 +44,8 @@ import shutil
 
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, functions as F
 
+from yatsm_spark.conf import scoped_conf
+
 DEFAULT_BUCKETS = 16
 
 #: Version of the on-disk format ParquetStorage writes. The pipeline folds
@@ -77,18 +79,10 @@ class ParquetStorage:
         """Write in the TIER_FORMAT_VERSION format. The timestamp type is a
         session conf, so set it for this write and restore the caller's
         value (or its absence) afterwards."""
-        conf = df.sparkSession.conf
-        prev = conf.get(_TS_TYPE_CONF, None)
-        conf.set(_TS_TYPE_CONF, "TIMESTAMP_MICROS")
-        try:
+        with scoped_conf(df.sparkSession.conf, _TS_TYPE_CONF, "TIMESTAMP_MICROS"):
             (writer.option("parquet.writer.version", "v2")
                    .option("parquet.enable.dictionary#window_start", "false")
                    .parquet(path))
-        finally:
-            if prev is None:
-                conf.unset(_TS_TYPE_CONF)
-            else:
-                conf.set(_TS_TYPE_CONF, prev)
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite",
               partition_by: tuple[str, ...] = ("bucket",)) -> None:
