@@ -1,8 +1,8 @@
 """Per-bucket physical layout of a pipeline run: the sparse 1m rollup is the
 bucket's one conv exchange, every table write inherits its partitioning and
-order, each table has at most the bucket's shuffle width of files, and the
-tables are zstd parquet (a resume rewrites buckets of the older snappy
-format)."""
+order, each table has at most the bucket's shuffle width of files, the
+tables are zstd parquet, and their footers carry only the metadata readers
+use (a resume rewrites buckets of the older formats)."""
 
 import json
 import os
@@ -12,11 +12,14 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
+from yatsm_spark.conf import scoped_conf
+from yatsm_spark.operators.rollup import MEASURES, MOMENTS
 from yatsm_spark.pipeline import PipelineConfig, run_pipeline
 from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage
 from yatsm_spark.synth import generate_transcripts
 
 TABLES = ("tier_1m", "tier_1h", "tier_1d", "segments", "chunks_1m")
+STAT_MOMENTS = {m.name for m in MOMENTS if m.gap is None}
 
 
 @pytest.fixture(scope="module")
@@ -116,16 +119,113 @@ def test_bucket_tables_have_at_most_shuffle_width_files(traced):
         assert 1 <= len(files) <= width, (table, b, len(files), width)
 
 
-def _codecs(workdir: str, table: str) -> set[str]:
-    out = set()
+def _column_chunks(workdir: str, table: str):
+    """Metadata of every column chunk over a table's files and row groups."""
     for d, _, files in os.walk(os.path.join(workdir, table)):
         for f in files:
             if f.endswith(".parquet"):
                 md = pq.ParquetFile(os.path.join(d, f)).metadata
-                out |= {md.row_group(g).column(c).compression
-                        for g in range(md.num_row_groups)
-                        for c in range(md.num_columns)}
+                for g in range(md.num_row_groups):
+                    for c in range(md.num_columns):
+                        yield md.row_group(g).column(c)
+
+
+def _codecs(workdir: str, table: str) -> set[str]:
+    return {cc.compression for cc in _column_chunks(workdir, table)}
+
+
+def _footers(workdir: str, table: str) -> dict[str, tuple[set, set]]:
+    """{column path: ({has min/max}, {encodings})} over a table's column
+    chunks; an all-null chunk with statistics counts as having min/max."""
+    out = {}
+    for cc in _column_chunks(workdir, table):
+        stats, encs = out.setdefault(cc.path_in_schema, (set(), set()))
+        st = cc.statistics if cc.is_stats_set else None
+        stats.add(st is not None and (st.has_min_max or st.num_values == 0))
+        encs.add(cc.encodings)
     return out
+
+
+def _relabel_manifests(workdir: str, version: int) -> None:
+    """Make every bucket manifest name tier format ``version``."""
+    mdir = os.path.join(workdir, "_manifests")
+    for f in os.listdir(mdir):
+        if f.startswith("bucket_"):
+            path = os.path.join(mdir, f)
+            with open(path) as fh:
+                m = json.load(fh)
+            assert m["input_fingerprint"].endswith(f":tfv{TIER_FORMAT_VERSION}")
+            m["input_fingerprint"] = m["input_fingerprint"].replace(
+                f":tfv{TIER_FORMAT_VERSION}", f":tfv{version}")
+            with open(path, "w") as fh:
+                json.dump(m, fh)
+
+
+#: Columns reads filter on: they keep min/max statistics where present.
+FILTERED = {"conv_id", "tier", "window_start", "chunk_start", "start_ts", "end_ts",
+            "break_ts", "gap_filled"}
+#: Columns no read filters on: counts, segment fit values, codec blobs.
+UNFILTERED = {*MEASURES, "n_points", "ts_codec", "val_codec", "segment_id",
+              "coef.list.element", "rmse", "magnitude", "n_obs"}
+
+
+def _assert_footer_contract(workdir: str, tables) -> None:
+    for table in tables:
+        cols = _footers(workdir, table)
+        assert set(cols) <= FILTERED | UNFILTERED, (table, sorted(cols))
+        assert "conv_id" in cols, table
+        for col, (stats, encs) in cols.items():
+            assert stats == {col in FILTERED}, (table, col, stats)
+            if col in STAT_MOMENTS:
+                assert not any("RLE_DICTIONARY" in e or "PLAIN_DICTIONARY" in e
+                               for e in encs), (table, col, encs)
+            if col == "window_start":
+                assert encs == {("DELTA_BINARY_PACKED",)}, (table, encs)
+
+
+def test_bucket_footers_keep_only_filtered_statistics(traced):
+    """Min/max statistics (and with them the column indexes) stay on the
+    key, time and flag columns that route_range, retention and the tier
+    reads filter on; measures, fit values and codec blobs have none; no
+    stat moment is dictionary-encoded; window_start stays delta-encoded."""
+    w, _, _ = traced
+    _assert_footer_contract(w, TABLES)
+    seen = set().union(*(_footers(w, t) for t in TABLES))
+    assert FILTERED | UNFILTERED == seen
+
+
+def test_v3_tier_buckets_are_rewritten_on_resume(spark, tx, tmp_path_factory):
+    """A bucket written in format 3 (statistics on every column, dictionary
+    on the stat moments) under ``:tfv3`` manifests is rewritten on resume,
+    with the same values and the format-4 footers."""
+    w = str(tmp_path_factory.mktemp("v3"))
+    cfg = PipelineConfig(workdir=w, n_buckets=2, compress=False, segments=False)
+    run_pipeline(spark, tx, cfg, resume=False)
+    table = lambda: (spark.read.option("basePath", os.path.join(w, "tier_1m"))
+                     .parquet(os.path.join(w, "tier_1m")).drop("bucket"))
+    before = table().cache()
+    before.count()
+
+    old = os.path.join(w, "tier_1m", "bucket=0")
+    with scoped_conf(spark.conf, "spark.sql.parquet.outputTimestampType",
+                     "TIMESTAMP_MICROS"):
+        (spark.read.parquet(old).write.mode("overwrite")
+         .option("compression", "zstd").option("parquet.writer.version", "v2")
+         .option("parquet.enable.dictionary#window_start", "false")
+         .parquet(old + ".v3"))
+    shutil.rmtree(old)
+    os.rename(old + ".v3", old)
+    v3 = _footers(w, os.path.join("tier_1m", "bucket=0"))
+    assert all(v3[m][0] == {True} for m in MEASURES)
+    assert any(any("RLE_DICTIONARY" in e for e in v3[m][1]) for m in STAT_MOMENTS)
+    _relabel_manifests(w, 3)
+
+    m = run_pipeline(spark, tx, cfg, resume=True)
+    assert len(m.buckets) == 2
+    after = table()
+    assert before.exceptAll(after).count() == 0 and after.exceptAll(before).count() == 0
+    _assert_footer_contract(w, ("tier_1m", "tier_1h", "tier_1d"))
+    before.unpersist()
 
 
 def test_v2_tier_buckets_are_rewritten_on_resume(spark, tx, tmp_path_factory):
@@ -146,16 +246,7 @@ def test_v2_tier_buckets_are_rewritten_on_resume(spark, tx, tmp_path_factory):
     shutil.rmtree(old)
     os.rename(old + ".v2", old)
     assert _codecs(w, "tier_1m") == {"SNAPPY", "ZSTD"}
-    mdir = os.path.join(w, "_manifests")
-    for f in os.listdir(mdir):
-        if f.startswith("bucket_"):
-            path = os.path.join(mdir, f)
-            with open(path) as fh:
-                m = json.load(fh)
-            m["input_fingerprint"] = m["input_fingerprint"].replace(
-                f":tfv{TIER_FORMAT_VERSION}", ":tfv2")
-            with open(path, "w") as fh:
-                json.dump(m, fh)
+    _relabel_manifests(w, 2)
 
     m = run_pipeline(spark, tx, cfg, resume=True)
     assert len(m.buckets) == 2

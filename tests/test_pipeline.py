@@ -58,9 +58,18 @@ def _bucket(spark, workdir, name, b):
     return spark.read.parquet(os.path.join(workdir, name, f"bucket={b}"))
 
 
+def _on_disk(workdir, name, b):
+    """(bytes, files) of a bucket's parquet data files."""
+    d = os.path.join(workdir, name, f"bucket={b}")
+    sizes = [os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
+             if f.endswith(".parquet")]
+    return sum(sizes), len(sizes)
+
+
 def test_manifests_record_lineage_and_metrics(spark, tx, tmp_path_factory):
     """Every count a bucket manifest records (observed on the writes) equals
-    a read-back count of that bucket's files."""
+    a read-back count of that bucket's files, and its per-table bytes and
+    file counts equal the bucket's parquet files on disk."""
     w = str(tmp_path_factory.mktemp("mani"))
     cfg = PipelineConfig(workdir=w, n_buckets=4, compress=True, segments=True)
     run_pipeline(spark, tx, cfg, resume=False)
@@ -80,6 +89,10 @@ def test_manifests_record_lineage_and_metrics(spark, tx, tmp_path_factory):
         assert m["rollup_1d"] == real("tier_1d")
         assert m["segments"] == _bucket(spark, w, "segments", b).count()
         assert m["chunks_1m"] == _bucket(spark, w, "chunks_1m", b).count()
+        for t in ("tier_1m", "tier_1h", "tier_1d", "segments", "chunks_1m"):
+            nbytes, nfiles = _on_disk(w, t, b)
+            assert nfiles >= 1 and nbytes > 0, t
+            assert (m[f"bytes_{t}"], m[f"files_{t}"]) == (nbytes, nfiles), t
 
 
 def test_changed_input_invalidates_bucket(spark, tx, tmp_path_factory):

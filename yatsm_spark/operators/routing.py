@@ -8,15 +8,24 @@ decomposable LONG moments; routing exploits exactly that decomposability
 to answer an arbitrary slot-aligned range with the minimum number of
 stored rows. The same idea TimescaleDB's real-time continuous aggregates
 and Druid's query-granularity rollups serve with — recast as a pure
-Catalyst plan: each tier slice is a range predicate on `window_start`
-(parquet min/max pushdown prunes row groups, partition pruning prunes
-files on a window_start-partitioned tier table), and the whole request is
-ONE union + ONE hash aggregate on conv_id.
+Catalyst plan: each tier slice is a range predicate on `window_start`,
+and the whole request is ONE union + ONE hash aggregate on conv_id.
+
+The predicate reaches parquet's `window_start` min/max statistics and
+column indexes, but those skip data only where a file, row group or page
+covers a narrow time range. The pipeline's bucket tables are not laid out
+that way: one row group per file, rows in conv order, so every file spans
+the whole time range and few pages can be skipped. On that layout a slice
+reads nearly its whole tier: on perfbench seed 1, a 149-row 1 h range and
+a 3,433-row 1 d range over `tier_1m` each read all 58,412 rows (the
+scan's output rows). Pruning needs time-clustered files or row groups (or
+a window_start-partitioned table).
 
 Why it matters at 100 TB: a 30-day dashboard query against a 1m tier
-scans ~43,200 slots per conv; routed, it scans ~30 rows of the 1d tier
-plus <=2*23 hour rows and <=2*59 minute rows at the ragged edges —
-three orders of magnitude fewer bytes, with BIT-IDENTICAL results
+aggregates ~43,200 slots per conv; routed, it aggregates ~30 rows of the
+1d tier plus <=2*23 hour rows and <=2*59 minute rows at the ragged edges —
+three orders of magnitude fewer rows (and bytes read, on a layout that
+prunes), with BIT-IDENTICAL results
 (moments are exact longs; the tx_route oracle is the raw-turn
 aggregation itself).
 
@@ -141,8 +150,9 @@ def route_range(tiers: dict[str, DataFrame], qs, qe,
     anti-join on (conv_id, window_start) — so a compressed-but-not-yet-
     evicted overlap window never double-counts.
 
-    Plan shape: k range-filtered tier scans (filters push to parquet
-    row-group pruning) + optionally one raw scan and one range-pruned
+    Plan shape: k range-filtered tier scans (the filters reach parquet's
+    statistics, which prune only on time-clustered files; see the module
+    docstring) + optionally one raw scan and one range-pruned
     chunk decode, ONE unionByName, ONE hash aggregate on conv_id — a
     single shuffle regardless of how many tiers serve (plus the
     anti-join exchange on the chunk path, both sides range-pruned).

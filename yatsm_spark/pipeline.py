@@ -197,10 +197,17 @@ def run_pipeline(
             # Row counts are observed on the writes themselves: the sparse
             # count of a tier is its non-gap rows.
             sparse = _conv_cache(_ROLLUP_1M[cfg.salting](bm).repartition("conv_id"))
-            cached, observed = [sparse], []
-            store.write_bucket(_counted(R.gapfill(sparse, "1m"), observed,
-                                        rollup_1m_sparse=sparse_count, rollup_1m=count),
-                               "tier_1m", b)
+            cached, observed, stored = [sparse], [], {}
+
+            def write(df: DataFrame, table: str, **counts) -> None:
+                """Write one bucket table, its row counts observed on the
+                write and its bytes and files listed from disk afterwards."""
+                store.write_bucket(_counted(df, observed, **counts), table, b)
+                stored[f"bytes_{table}"], stored[f"files_{table}"] = \
+                    store.bucket_size(table, b)
+
+            write(R.gapfill(sparse, "1m"), "tier_1m",
+                  rollup_1m_sparse=sparse_count, rollup_1m=count)
 
             prev = sparse
             for tier_from, tier_to in (("1m", "1h"), ("1h", "1d")):
@@ -208,25 +215,24 @@ def run_pipeline(
                     continue
                 nxt = _conv_cache(cascade(prev, tier_from, tier_to))
                 cached.append(nxt)
-                store.write_bucket(_counted(R.gapfill(nxt, tier_to), observed,
-                                            **{f"rollup_{tier_to}": sparse_count}),
-                                   f"tier_{tier_to}", b)
+                write(R.gapfill(nxt, tier_to), f"tier_{tier_to}",
+                      **{f"rollup_{tier_to}": sparse_count})
                 prev = nxt
 
             if cfg.segments:
                 segs = change_scores(sparse, "turn_count", CONV_PARAMS, densify=True,
                                      phenology=cfg.phenology)
-                store.write_bucket(_counted(segs, observed, segments=count), "segments", b)
+                write(segs, "segments", segments=count)
 
             if cfg.compress:
-                chunks = encode_chunks(sparse, "1m", cfg.chunk_points, densify=True)
-                store.write_bucket(_counted(chunks, observed, chunks_1m=count), "chunks_1m", b)
+                write(encode_chunks(sparse, "1m", cfg.chunk_points, densify=True),
+                      "chunks_1m", chunks_1m=count)
 
             for df in cached:
                 df.unpersist()
             rows = {k: v for o in observed for k, v in o.get.items()}
             m = ckpt.commit("bucket", b, fp, rows.get("rollup_1m", 0),
-                            (time.time() - t) * 1000, **rows)
+                            (time.time() - t) * 1000, **rows, **stored)
             metrics.buckets.append(m)
             if fail_after_bucket is not None and b >= fail_after_bucket:
                 raise RuntimeError(f"injected failure after bucket {b}")

@@ -24,17 +24,36 @@ deprecates and which costs 12 bytes per slot. On the dense 1m grid it also
 defeats the dictionary and snappy: ``window_start`` alone was about half
 of all bytes a pipeline run wrote. INT64 alone changes nothing; v2 pages
 let the writer use DELTA_BINARY_PACKED, which stores a regular grid of
-timestamps in a few bits per row. ``window_start`` skips the dictionary:
-on inputs whose first page repeats many slots the dictionary passes the
-writer's size check and then keeps the column near its INT96 size. Other
-timestamp and int64 columns go to DELTA_BINARY_PACKED where the dictionary
-falls back. ``write_bucket`` compresses pages with zstd (15% fewer bytes
-than snappy over a perfbench seed-1 run's tables); ``write`` (the staged
-measures) keeps snappy, which ``conf.shuffle_partitions_for_bytes`` is
-calibrated on. Values are unchanged; only their encoding is.
+timestamps in a few bits per row. Other int64 columns go to
+DELTA_BINARY_PACKED where the dictionary falls back. ``write_bucket``
+compresses pages with zstd (15% fewer bytes than snappy over a perfbench
+seed-1 run's tables); ``write`` (the staged measures) keeps snappy, which
+``conf.shuffle_partitions_for_bytes`` is calibrated on, and the writer's
+default metadata. Values are unchanged; only their encoding is.
+
+``write_bucket`` also derives per-column writer options from the frame's
+schema (``bucket_column_options``), so a bucket table carries only the
+metadata its readers use:
+
+- **Statistics.** Min/max statistics and column indexes are kept on
+  string, timestamp and boolean columns only: ``conv_id``, ``tier``,
+  ``window_start``, ``chunk_start``, the segment timestamps and
+  ``gap_filled``, the columns that ``route_range``, retention and the
+  tier reads filter on. The measures, counts, fit values and codec blobs
+  have none; ``val_codec``'s min and max alone were about 1 KB of one
+  chunks footer.
+- **Dictionary.** Timestamps and the stat moments (``rollup.MOMENTS``
+  with a null gap value) skip the dictionary. Their values rarely repeat
+  within a file, yet on inputs whose first page repeats many values the
+  dictionary passes the writer's size check and then keeps the column
+  far above its delta-encoded size (``window_start`` near its INT96 size;
+  on perfbench seed 1, the sum of squares of ``tier_1m`` 23,855 B against
+  18,808 B).
 
 Version history: 1: Spark defaults (INT96 timestamps, v1 pages, snappy).
 2: INT64 ``TIMESTAMP_MICROS`` + v2 pages. 3: zstd bucket tables.
+4: statistics only on string, timestamp and boolean columns, and no
+dictionary on timestamps and stat moments.
 """
 
 from __future__ import annotations
@@ -43,8 +62,18 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DataType,
+    StringType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from yatsm_spark.conf import scoped_conf
+from yatsm_spark.operators.rollup import MOMENTS
 
 DEFAULT_BUCKETS = 16
 
@@ -52,11 +81,39 @@ DEFAULT_BUCKETS = 16
 #: it into each bucket's fingerprint, so a resume rewrites buckets written
 #: in an older format instead of mixing formats in one table (history in
 #: the module docstring).
-TIER_FORMAT_VERSION = 3
+TIER_FORMAT_VERSION = 4
 
 #: The parquet writer reads the timestamp type from the session conf only;
 #: a write option for it is ignored.
 _TS_TYPE_CONF = "spark.sql.parquet.outputTimestampType"
+
+_TIMES = (TimestampType, TimestampNTZType)
+#: Leaf types that keep min/max statistics in bucket tables: the keys,
+#: times and flags that reads filter on.
+_FILTERED = (StringType, BooleanType, *_TIMES)
+
+
+def _leaf(path: str, dtype: DataType) -> tuple[str, DataType]:
+    """Parquet column path and type of a field's leaf. Bucket tables nest
+    only arrays, which Spark writes as three-level lists."""
+    while isinstance(dtype, ArrayType):
+        path, dtype = f"{path}.list.element", dtype.elementType
+    return path, dtype
+
+
+def bucket_column_options(schema: StructType) -> dict[str, str]:
+    """Per-column parquet writer options of a bucket table with ``schema``:
+    no statistics on a leaf that is not a string, timestamp or boolean, and
+    no dictionary on timestamps and stat moments (module docstring)."""
+    stat_moments = {m.name for m in MOMENTS if m.gap is None}
+    opts = {}
+    for f in schema.fields:
+        path, leaf = _leaf(f.name, f.dataType)
+        if not isinstance(leaf, _FILTERED):
+            opts[f"parquet.column.statistics.enabled#{path}"] = "false"
+        if isinstance(leaf, _TIMES) or path in stat_moments:
+            opts[f"parquet.enable.dictionary#{path}"] = "false"
+    return opts
 
 
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -76,13 +133,11 @@ class ParquetStorage:
 
     @staticmethod
     def _write_parquet(df: DataFrame, writer: DataFrameWriter, path: str) -> None:
-        """Write in the TIER_FORMAT_VERSION format. The timestamp type is a
+        """Write with INT64 timestamps and v2 pages. The timestamp type is a
         session conf, so set it for this write and restore the caller's
         value (or its absence) afterwards."""
         with scoped_conf(df.sparkSession.conf, _TS_TYPE_CONF, "TIMESTAMP_MICROS"):
-            (writer.option("parquet.writer.version", "v2")
-                   .option("parquet.enable.dictionary#window_start", "false")
-                   .parquet(path))
+            writer.option("parquet.writer.version", "v2").parquet(path)
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite",
               partition_by: tuple[str, ...] = ("bucket",)) -> None:
@@ -98,11 +153,20 @@ class ParquetStorage:
         tmp = final + ".inprogress"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        self._write_parquet(df, df.write.mode("overwrite").option("compression", "zstd"),
-                            tmp)
+        writer = (df.write.mode("overwrite").option("compression", "zstd")
+                  .options(**bucket_column_options(df.schema)))
+        self._write_parquet(df, writer, tmp)
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
+
+    def bucket_size(self, table: str, bucket: int) -> tuple[int, int]:
+        """(bytes, files) of a committed bucket's parquet data files, from a
+        directory listing (checksum and _SUCCESS files left out)."""
+        d = os.path.join(self.path(table), f"bucket={bucket}")
+        sizes = [os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
+                 if f.endswith(".parquet")]
+        return sum(sizes), len(sizes)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.option("basePath", self.path(table)).parquet(self.path(table))
