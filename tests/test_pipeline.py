@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from yatsm_spark.checkpoint import CheckpointManager
+from yatsm_spark.operators.changescore import SEGMENT_SCHEMA
 from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION, decode_chunks
 from yatsm_spark.pipeline import PipelineConfig, PipelineMetrics, run_pipeline
 from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage
@@ -32,6 +33,16 @@ def _table(spark, workdir, name):
     )
 
 
+def _assert_tables_equal(spark, w_a, w_b, tables, cols=None):
+    """Each table of ``tables`` holds the same rows, bucket column included,
+    in workdirs ``w_a`` and ``w_b`` (over ``cols`` when given)."""
+    for t in tables:
+        a, b = (spark.read.parquet(os.path.join(w, t)) for w in (w_a, w_b))
+        if cols is not None:
+            a, b = a.select(*cols), b.select(*cols)
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, t
+
+
 def test_kill_and_resume_is_bit_identical(spark, tx, tmp_path_factory):
     w_full = str(tmp_path_factory.mktemp("full"))
     w_res = str(tmp_path_factory.mktemp("resumed"))
@@ -47,11 +58,8 @@ def test_kill_and_resume_is_bit_identical(spark, tx, tmp_path_factory):
     # resumed run must only have processed the remaining buckets
     assert len(m2.buckets) < 4
 
-    for t in ("tier_1m", "tier_1h", "tier_1d", "segments", "chunks_1m"):
-        a = _table(spark, w_full, t)
-        b = _table(spark, w_res, t)
-        assert a.exceptAll(b).count() == 0, t
-        assert b.exceptAll(a).count() == 0, t
+    _assert_tables_equal(spark, w_full, w_res,
+                         ("tier_1m", "tier_1h", "tier_1d", "segments", "chunks_1m"))
 
 
 def _bucket(spark, workdir, name, b):
@@ -247,24 +255,6 @@ def test_window_start_skips_dictionary_when_slots_repeat(spark, tmp_path):
     assert df.exceptAll(back).count() == 0 and back.exceptAll(df).count() == 0
 
 
-def test_adaptive_salting_pipeline_tiers_identical(spark, tx, tmp_path_factory):
-    # The salting knob changes only the physical agg plan; every tier a
-    # pipeline writes must be bit-identical across strategies.
-    w_none = str(tmp_path_factory.mktemp("p_salt_none"))
-    w_adpt = str(tmp_path_factory.mktemp("p_salt_adaptive"))
-    run_pipeline(spark, tx, PipelineConfig(workdir=w_none, n_buckets=2,
-                                           compress=False, segments=False),
-                 resume=False)
-    run_pipeline(spark, tx, PipelineConfig(workdir=w_adpt, n_buckets=2,
-                                           compress=False, segments=False,
-                                           salting="adaptive"),
-                 resume=False)
-    for tier in ("tier_1m", "tier_1h", "tier_1d"):
-        a = _table(spark, w_none, tier)
-        b = _table(spark, w_adpt, tier)
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, tier
-
-
 def test_empty_transcripts_raise_before_staging(spark, tx, tmp_path):
     # rollup("bucket") returns no rows at all for an empty input, so the
     # fingerprint pass has no grand-total row to read.
@@ -274,6 +264,45 @@ def test_empty_transcripts_raise_before_staging(spark, tx, tmp_path):
     assert not os.path.exists(os.path.join(str(tmp_path), "staging_measures"))
 
 
-def test_unknown_salting_is_rejected(tmp_path):
-    with pytest.raises(ValueError, match=r"one of \['adaptive', 'always', 'none'\], got 'adaptiv'"):
-        PipelineConfig(workdir=str(tmp_path), salting="adaptiv")
+def test_resume_honours_segments_and_phenology(spark, tx, tmp_path_factory):
+    """Turning segments or phenology on or off between runs rewrites every
+    bucket: the resumed segments table equals a fresh run's, and a table the
+    config no longer writes loses its bucket directories."""
+    w_fresh = str(tmp_path_factory.mktemp("segs_fresh"))
+    w = str(tmp_path_factory.mktemp("segs_resumed"))
+    cfg = dict(n_buckets=2, compress=False)
+    run_pipeline(spark, tx, PipelineConfig(workdir=w_fresh, phenology=True, **cfg),
+                 resume=False)
+    run_pipeline(spark, tx, PipelineConfig(workdir=w, segments=False, **cfg))
+
+    m = run_pipeline(spark, tx, PipelineConfig(workdir=w, phenology=True, **cfg))
+    assert len(m.buckets) == 2
+    _assert_tables_equal(spark, w_fresh, w, ("segments", "tier_1m"))
+
+    m = run_pipeline(spark, tx, PipelineConfig(workdir=w, **cfg))
+    assert len(m.buckets) == 2
+    base = [*SEGMENT_SCHEMA.fieldNames(), "bucket"]
+    assert sorted(spark.read.parquet(os.path.join(w, "segments")).columns) == sorted(base)
+    _assert_tables_equal(spark, w_fresh, w, ("segments",), cols=base)
+
+    m = run_pipeline(spark, tx, PipelineConfig(workdir=w, segments=False, **cfg))
+    assert len(m.buckets) == 2
+    assert ParquetStorage(w).buckets("segments") == []
+
+
+def test_resume_with_another_bucket_count(spark, tx, tmp_path_factory):
+    """A resume with more or fewer buckets restages the input and leaves
+    the tables and manifests a fresh run with that count would."""
+    fresh = {}
+    for n in (2, 4):
+        fresh[n] = str(tmp_path_factory.mktemp(f"fresh{n}"))
+        run_pipeline(spark, tx, PipelineConfig(workdir=fresh[n], n_buckets=n,
+                                               compress=False, segments=False),
+                     resume=False)
+    w = str(tmp_path_factory.mktemp("rebucket"))
+    for n in (2, 4, 2):
+        run_pipeline(spark, tx, PipelineConfig(workdir=w, n_buckets=n,
+                                               compress=False, segments=False))
+        _assert_tables_equal(spark, fresh[n], w, ("tier_1m", "tier_1h", "tier_1d"))
+        assert sorted(m["bucket"] for m in CheckpointManager(w).manifests("bucket")) \
+            == list(range(n))

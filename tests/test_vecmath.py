@@ -1,7 +1,7 @@
 """kernel/vecmath.py owns float-op order: its solvers agree with numpy's
 LAPACK within tolerance (hypothesis), follow the one rank-deficient rule,
-and a source guard keeps BLAS/LAPACK calls out of the rest of the
-package."""
+and source guards keep BLAS/LAPACK calls out of the rest of the package
+and the 1e-6 grid inside its two owners (vecmath and operators/grid.py)."""
 
 import io
 import os
@@ -48,6 +48,41 @@ def test_numpy_linalg_only_in_vecmath():
                 if tok.type == tokenize.NAME and tok.string in ("linalg", "LinAlgError"):
                     offenders.append(f"{os.path.relpath(path, REPO)}:{tok.start[0]}")
     assert offenders == [], f"numpy.linalg outside kernel/vecmath.py: {offenders}"
+
+
+def test_grid_snap_only_in_its_owners():
+    """floor(x·1e6 + 0.5), bare or as ``F.lit(1e6) + F.lit(0.5)``, is
+    spelled only in ``kernel/vecmath.py`` and ``operators/grid.py``."""
+    owners = (os.path.join(KERNEL, "vecmath.py"), os.path.join(PKG, "operators", "grid.py"))
+    offenders = []
+    for root, _dirs, files in os.walk(PKG):
+        for name in files:
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path in owners:
+                continue
+            toks = [t for t in _code_tokens(path) if t.type != tokenize.NL]
+            for i, tok in enumerate(toks):
+                after = "".join(t.string for t in toks[i + 1:i + 8])
+                if tok.string == "1e6" and re.match(r"\)?\+(F\.lit\()?0\.5", after):
+                    offenders.append(f"{os.path.relpath(path, REPO)}:{tok.start[0]}")
+    assert offenders == [], f"1e-6 grid spelled outside its owners: {offenders}"
+
+
+def test_grid_owners_agree_across_engines(spark):
+    """The Catalyst and numpy forms of the grid give the same values,
+    negatives and near-ties included."""
+    from pyspark.sql import functions as F
+
+    from yatsm_spark.operators import grid
+
+    rng = np.random.default_rng(6)
+    xs = np.concatenate([rng.uniform(-1e3, 1e3, 500),
+                         np.arange(-500, 500) / 1e6 + 5e-7, [0.0, -0.0, 5e-7, -5e-7]])
+    got = (spark.createDataFrame([(float(x),) for x in xs], "x double")
+           .select(grid.snap6(F.col("x")).alias("s"), grid.micro6(F.col("x")).alias("m"))
+           .collect())
+    assert [r.s for r in got] == vm.snap6(xs).tolist()
+    assert [r.m for r in got] == [int(vm.micro6(x)) for x in xs]
 
 
 @pytest.mark.parametrize("module", PRODUCT_MODULES)

@@ -35,8 +35,6 @@ def main(argv=None):
     ap.add_argument("--phenology", action="store_true",
                     help="append A3 diurnal phenology fields to segments")
     ap.add_argument("--no-compress", action="store_true")
-    ap.add_argument("--salting", default="none", choices=("none", "always", "adaptive"),
-                    help="rollup skew strategy (adaptive = sample-detected hot keys only)")
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--master", default=None,
                     help="override master (default: cluster-provided or local[$SPARK_GRAFT_CPUS])")
@@ -59,8 +57,7 @@ def main(argv=None):
         PipelineConfig(workdir=args.workdir, n_buckets=args.buckets,
                        segments=not args.no_segments,
                        phenology=args.phenology,
-                       compress=not args.no_compress,
-                       salting=args.salting),
+                       compress=not args.no_compress),
         resume=not args.no_resume,
     )
     print(json.dumps({

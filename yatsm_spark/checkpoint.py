@@ -64,6 +64,11 @@ class CheckpointManager:
         os.replace(tmp, p)  # atomic on POSIX
         return m
 
+    def drop(self, stage: str, bucket: int) -> None:
+        p = self._path(stage, bucket)
+        if os.path.exists(p):
+            os.remove(p)
+
     def manifests(self, stage: str | None = None) -> list[dict]:
         out = []
         for name in sorted(os.listdir(self.root)):

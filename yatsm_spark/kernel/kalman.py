@@ -12,7 +12,7 @@ NaN observations are missing: the filter runs its predict step and skips
 the update, which is exactly how gap slots should be treated when the
 caller chooses NOT to read gap-filled zeros as real observations.
 
-Emitted levels are snapped to the 1e-6 grid (floor(x*1e6+0.5)/1e6, the
+Emitted levels are snapped to the 1e-6 grid (``vecmath.snap6``, the
 engine-wide float policy) AFTER the recursion, so the recursion dynamics
 are untouched but persisted goldens compare exactly.
 """
@@ -21,9 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-
-def _snap6(a: np.ndarray) -> np.ndarray:
-    return np.floor(a * 1e6 + 0.5) / 1e6
+from yatsm_spark.kernel.vecmath import snap6
 
 
 def kalman_filter(y: np.ndarray, q: float = 1.0, r: float = 4.0,
@@ -89,4 +87,4 @@ def kalman_local_level(y: np.ndarray, q: float = 1.0, r: float = 4.0,
         c = p_filt[t] / p_pred[t + 1]
         ms[t] = m_filt[t] + c * (ms[t + 1] - m_pred[t + 1])
 
-    return _snap6(m_filt), _snap6(p_filt), _snap6(ms)
+    return snap6(m_filt), snap6(p_filt), snap6(ms)

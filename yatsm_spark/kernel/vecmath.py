@@ -17,6 +17,9 @@ shapes (SURVEY.md §7.5.1's float policy):
   never handed to BLAS.
 - ``normal_lstsq``/``chol_solve`` (Cholesky), ``lstsq`` (Householder QR)
   and ``eigh`` (cyclic Jacobi) are written out on those.
+- ``snap6``/``micro6`` put a float on the 1e-6 grid the DuckDB oracles
+  replay, ``floor(x·1e6 + 0.5)``; ``operators/grid.py`` has the Column
+  form.
 
 Rank-deficient rule, the one rule of every solver here: pivots are taken
 in column order, and a column whose pivot is at most ``DEP_TOL`` times
@@ -301,3 +304,18 @@ def eigh(A: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     w = A.diagonal().copy()
     order = np.argsort(w, kind="stable")
     return w[order], V[:, order]
+
+
+def micro6(x):
+    """``floor(x·1e6 + 0.5)`` of an array or a float: x in integer
+    micro-units, held in float64, the numpy form of
+    ``operators/grid.py::micro6`` (the same IEEE multiply, add and floor).
+    Callers that sum them convert first, as ``int(micro6(x))``: Python
+    ints keep sums and squares exact where an int64 could overflow."""
+    return np.floor(x * 1e6 + 0.5)
+
+
+def snap6(x):
+    """``floor(x·1e6 + 0.5) / 1e6`` of an array or a float: x on the 1e-6
+    grid, the numpy form of ``operators/grid.py::snap6``."""
+    return micro6(x) / 1e6

@@ -50,6 +50,10 @@ STAT_COLS = [m.name for m in MOMENTS if m.gap is None]
 #: by a different format re-encodes instead of mixing layouts.
 CHUNK_FORMAT_VERSION = 4
 
+#: Slots per chunk row: the pipeline's chunk size and the bound that
+#: ``routing.route_range`` prunes chunk scans with.
+CHUNK_POINTS = 4096
+
 CHUNK_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
     T.StructField("tier", T.StringType(), False),
@@ -126,7 +130,7 @@ def _decode_chunk(n_points, ts_codec, val_codec) -> tuple[np.ndarray, np.ndarray
     return epochs, gap, cols
 
 
-def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
+def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = CHUNK_POINTS,
                   densify: bool = False) -> DataFrame:
     """Rollup tier -> compressed chunk rows (one shuffle on conv_id).
 
@@ -200,7 +204,7 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
     return chunks.mapInPandas(dec, ROLLUP_SCHEMA)
 
 
-def compact_chunks(chunks: DataFrame, chunk_points: int = 4096) -> DataFrame:
+def compact_chunks(chunks: DataFrame, chunk_points: int = CHUNK_POINTS) -> DataFrame:
     """Chunk-table compaction (the TimescaleDB ``compress_chunk``
     maintenance analog): per (conv, tier), decode every chunk, stitch the
     point streams back together in chunk_start order, and re-encode at

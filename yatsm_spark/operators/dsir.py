@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from yatsm_spark import conf
 from yatsm_spark.operators.dedup import _NORM
+from yatsm_spark.operators.grid import micro6
 
 
 def _bucket(col) -> Column:
@@ -104,7 +105,7 @@ def dsir_weights(docs: DataFrame, target: Column, text_col: str = "text",
              / ((F.col("cs") + 1).cast("double")
                 * (F.col("tt").cast("double") + b)))
     dim = dim.select(
-        "bucket", F.floor(F.log(ratio) * 1e6 + 0.5).cast("long").alias("lr"))
+        "bucket", micro6(F.log(ratio)).cast("long").alias("lr"))
 
     per_doc = (occ_k.join(F.broadcast(dim), "bucket")
                 .groupBy("doc_id")

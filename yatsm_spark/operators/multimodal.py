@@ -295,22 +295,28 @@ def png_payload(media_id: int) -> bytes:
             + _png_chunk(b"IEND", b""))
 
 
-def synth_png_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic PNG payload per doc id (blob-store stand-in), same
-    pixel closed form as synth_ppm_media — only the container differs."""
+def _synth_media(docs: DataFrame, id_col: str, payload, media_type: str) -> DataFrame:
+    """(media_id, payload, media_type, n_bytes) with ``payload(media_id)``
+    per doc id: the generator behind every ``synth_*_media``."""
     ids = docs.select(F.col(id_col).cast("long").alias("media_id"))
 
     def gen(batches):
         for pdf in batches:
-            payloads = [png_payload(int(i)) for i in pdf["media_id"]]
+            payloads = [payload(int(i)) for i in pdf["media_id"]]
             yield pd.DataFrame({
                 "media_id": pdf["media_id"],
                 "payload": payloads,
-                "media_type": "image/png",
+                "media_type": media_type,
                 "n_bytes": [len(p) for p in payloads],
             })
 
     return ids.mapInPandas(gen, MEDIA_SCHEMA)
+
+
+def synth_png_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Deterministic PNG payload per doc id (blob-store stand-in), same
+    pixel closed form as synth_ppm_media — only the container differs."""
+    return _synth_media(docs, id_col, png_payload, "image/png")
 
 
 def jpeg_payload(media_id: int) -> bytes:
@@ -342,19 +348,7 @@ def jpeg_payload(media_id: int) -> bytes:
 
 def synth_jpeg_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic JPEG payload per doc id (blob-store stand-in)."""
-    ids = docs.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = [jpeg_payload(int(i)) for i in pdf["media_id"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": payloads,
-                "media_type": "image/jpeg",
-                "n_bytes": [len(p) for p in payloads],
-            })
-
-    return ids.mapInPandas(gen, MEDIA_SCHEMA)
+    return _synth_media(docs, id_col, jpeg_payload, "image/jpeg")
 
 
 def decode_image(payload: bytes) -> np.ndarray:
@@ -379,19 +373,7 @@ def synth_ppm_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     read): w = 16 + id%7, h = 12 + id%5, byte at channel c / pixel k
     (row-major) = (id*31 + c*97 + k*13) % 256 — a closed form any engine
     can recompute, making the decode path oracle-checkable end to end."""
-    ids = docs.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = [ppm_payload(int(i)) for i in pdf["media_id"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": payloads,
-                "media_type": "image/x-portable-pixmap",
-                "n_bytes": [len(p) for p in payloads],
-            })
-
-    return ids.mapInPandas(gen, MEDIA_SCHEMA)
+    return _synth_media(docs, id_col, ppm_payload, "image/x-portable-pixmap")
 
 
 def ppm_payload(media_id: int) -> bytes:
@@ -519,19 +501,7 @@ def video_payload(media_id: int) -> bytes:
 def synth_video_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic synthetic video payload per doc id (the blob-store
     stand-in for the frame-sampling path)."""
-    ids = docs.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = [video_payload(int(i)) for i in pdf["media_id"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": payloads,
-                "media_type": "video/x-raw-frames",
-                "n_bytes": [len(p) for p in payloads],
-            })
-
-    return ids.mapInPandas(gen, MEDIA_SCHEMA)
+    return _synth_media(docs, id_col, video_payload, "video/x-raw-frames")
 
 
 def sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
@@ -597,19 +567,7 @@ def wav_payload(media_id: int, rate: int = 8000) -> bytes:
 def synth_wav_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic WAV payload per doc id (blob-store stand-in for the
     audio decode path)."""
-    ids = docs.select(F.col(id_col).cast("long").alias("media_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            payloads = [wav_payload(int(i)) for i in pdf["media_id"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": payloads,
-                "media_type": "audio/wav",
-                "n_bytes": [len(p) for p in payloads],
-            })
-
-    return ids.mapInPandas(gen, MEDIA_SCHEMA)
+    return _synth_media(docs, id_col, wav_payload, "audio/wav")
 
 
 def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:

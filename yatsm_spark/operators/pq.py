@@ -38,6 +38,7 @@ from yatsm_spark.kernel.pq_core import (
     pq_lut,
     pq_train_core,
 )
+from yatsm_spark.operators.grid import snap6
 
 #: training-sample hard cap — raising, not truncating, is the contract
 MAX_TRAIN_SAMPLE = 1 << 17
@@ -144,8 +145,7 @@ def pq_adc_topk(df: DataFrame, codebooks: np.ndarray, query_ids: list[int],
     pairs = (codes.mapInPandas(gen, "query_id long, neighbor_id long, "
                                     "adist double")
                   .filter(F.col("neighbor_id") != F.col("query_id")))
-    adist = (F.floor(F.col("adist") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-             if round6 else F.col("adist"))
+    adist = snap6(F.col("adist")) if round6 else F.col("adist")
     w = Window.partitionBy("query_id").orderBy(
         F.col("adist").asc(), F.col("neighbor_id").asc())
     return (pairs.select("query_id", "neighbor_id", adist.alias("adist"))
@@ -276,7 +276,7 @@ def ivfpq_topk(df: DataFrame, coarse: np.ndarray, books: np.ndarray,
     pairs = cand.select("query_id", id_col, "code") \
                 .mapInPandas(gen, "query_id long, neighbor_id long, "
                                   "adist double")
-    snapped = F.floor(F.col("adist") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    snapped = snap6(F.col("adist"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("adist").asc(), F.col("neighbor_id").asc())
     return (pairs.select("query_id", "neighbor_id", snapped.alias("adist"))

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from yatsm_spark.operators.grid import micro6, snap6
+
 #: Same token class in Java regex (Spark) and RE2 (DuckDB): both engines
 #: interpret an explicit [^a-z0-9]+ identically (no \s / \w dialect
 #: divergence — the textstats.py BPE lesson).
@@ -54,13 +56,6 @@ TOKEN_SPLIT = "[^a-z0-9]+"
 #: with the Lucene k1/b defaults.
 BM25_K1 = 1.2
 BM25_B = 0.75
-
-
-def _snap6(col):
-    """Snap a double to the 1e-6 grid identically in Spark and DuckDB:
-    floor(x * 1e6 + 0.5) / 1e6 — pure IEEE multiply/add/floor, no
-    half-even-vs-half-up round() dialect dependence."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
 def _tokens(docs: DataFrame, text_col: str) -> DataFrame:
@@ -94,7 +89,7 @@ def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text") -> DataFrame
     n_docs = docs.select(F.count("*").alias("n_docs"))
     scored = (tf.join(df_t, "term")
                 .crossJoin(F.broadcast(n_docs))
-                .withColumn("tfidf", _snap6(
+                .withColumn("tfidf", snap6(
                     F.col("tf") * (F.log((F.col("n_docs") + F.lit(1.0))
                                          / (F.col("df") + F.lit(1.0)))
                                    + F.lit(1.0)))))
@@ -138,8 +133,7 @@ def bm25_scores(docs: DataFrame, query_terms: list[str],
                 # integer micro-units BEFORE the sum: long addition is
                 # associative, so reduce order cannot perturb the total
                 .withColumn("contrib_u",
-                            F.floor(F.col("contrib") * F.lit(1e6)
-                                    + F.lit(0.5)).cast("long")))
+                            micro6(F.col("contrib")).cast("long")))
     return (per_term.groupBy("doc_id")
             .agg(F.count("*").alias("n_hit_terms"),
                  F.first("dl").alias("dl"),
@@ -159,7 +153,7 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
     scored = bm25_scores(docs, query_terms, text_col, k1, b)
     # re-snap (not a bare cast): score = u/1e6 may sit 1 ulp under the
     # integer, and cast() truncates — floor(x*1e6 + .5) recovers u exactly
-    skey = F.floor(F.col("score") * F.lit(1e6) + F.lit(0.5)).cast("long")
+    skey = micro6(F.col("score")).cast("long")
     return (scored.withColumn("_skey", skey)
                   .orderBy(F.col("_skey").desc(), F.col("doc_id").asc())
                   .limit(k)

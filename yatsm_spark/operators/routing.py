@@ -40,7 +40,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, functions as F
 
-from yatsm_spark.operators.codec import decode_chunks
+from yatsm_spark.operators.codec import CHUNK_POINTS, decode_chunks
 from yatsm_spark.operators.rollup import MEASURES, TIERS, merge_aggs, turn_moments
 
 
@@ -124,7 +124,7 @@ def route_range(tiers: dict[str, DataFrame], qs, qe,
                 watermark=None,
                 chunks: DataFrame | None = None,
                 chunk_tier: str = "1m",
-                chunk_points: int = 4096) -> DataFrame:
+                chunk_points: int = CHUNK_POINTS) -> DataFrame:
     """Per-conv aggregate of every measure over [qs, qe), served from the
     coarsest tiers that cover it (route_plan) with raw-turn fallback for
     the fresh tail. BIT-IDENTICAL to aggregating the 1m tier (or the raw

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from yatsm_spark import conf
+from yatsm_spark.operators.grid import micro6
 
 #: Knuth multiplicative constant (2^32 / phi); ids here are < 2^31 so the
 #: product stays far inside int64 — no overflow wrap to reason about.
@@ -227,8 +228,7 @@ def weighted_sample(df: DataFrame, weight_col: str, k: int, seed: int = 0,
     h = F.pmod((F.col(id_col) + F.lit(int(seed))) * F.lit(_KNUTH),
                F.lit(_MOD))
     u = (h.cast("double") + F.lit(0.5)) / F.lit(float(_MOD))
-    key_micro = F.floor(F.log(u) / F.col(weight_col).cast("double")
-                        * 1e6 + 0.5).cast("long")
+    key_micro = micro6(F.log(u) / F.col(weight_col).cast("double")).cast("long")
     base = (df.filter(F.col(weight_col) > 0)
             .select(id_col, weight_col, key_micro.alias("key_micro"))
             .withColumn("_neg", -F.col("key_micro")))

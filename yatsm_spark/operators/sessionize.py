@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from yatsm_spark.operators.grid import snap6
+
 
 def sessionize(events: DataFrame, key_col: str = "user_id", ts_col: str = "ts",
                order_col: str = "event_id", timeout_s: int = 1800) -> DataFrame:
@@ -93,9 +95,8 @@ def funnel(events: DataFrame, steps: list[str], horizon_s: int = 86400,
     base = counts.where(F.col("step_ord") == 1) \
                  .select(F.col("n_users").alias("_n1"))
     rate = F.when(F.col("_n1") > 0,
-                  F.floor(F.col("n_users").cast("double")
-                          / F.col("_n1").cast("double")
-                          * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6))
+                  snap6(F.col("n_users").cast("double")
+                        / F.col("_n1").cast("double")))
     return (counts.crossJoin(F.broadcast(base))
                   .select("step_ord", "step", "n_users",
                           rate.alias("conv_rate")))
@@ -124,9 +125,8 @@ def cohort_retention(events: DataFrame, period_s: int = 604800,
                .groupBy("_c", (F.col("_p") - F.col("_c")).alias(
                    "period_offset"))
                .agg(F.count(F.lit(1)).alias("n_active")))
-    rate = F.floor(F.col("n_active").cast("double")
-                   / F.col("n_cohort").cast("double")
-                   * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+    rate = snap6(F.col("n_active").cast("double")
+                 / F.col("n_cohort").cast("double"))
     return (m.join(sizes, "_c")
              .select(F.timestamp_micros(
                          (F.col("_c") * period_s * 1_000_000)

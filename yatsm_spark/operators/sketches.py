@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from yatsm_spark import conf
+from yatsm_spark.operators.grid import snap6
 
 #: HLL precision: p=12 -> m=4096 registers; md5 nibbles 1-3 pick the
 #: register, nibbles 4-18 give the 60-bit rho stream.
@@ -52,10 +53,6 @@ _HLL_SMALL = 2.5 * HLL_M
 
 #: default quantiles as exact rationals (numerator, denominator, label)
 DEFAULT_QUANTILES = [(1, 2, "p50"), (9, 10, "p90"), (99, 100, "p99")]
-
-
-def _snap6(col):
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
 def hll_parts(value_col: str):
@@ -103,7 +100,7 @@ def hll_estimate(reg: DataFrame, group_cols: list[str]) -> DataFrame:
                F.log(F.lit(float(HLL_M)) / F.col("v_zero"))) \
          .otherwise(e_raw)
     return numer.select(*group_cols, "n_buckets_used", "v_zero",
-                        _snap6(e).alias("est_distinct"))
+                        snap6(e).alias("est_distinct"))
 
 
 def hll_distinct(df: DataFrame, group_cols: list[str],

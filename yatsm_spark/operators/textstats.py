@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from yatsm_spark.operators.grid import micro6
+
 #: tiny stopword lists per language for the n-gram/stopword LID heuristic
 LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "a"],
@@ -228,9 +230,7 @@ def lm_unigram_score(docs: DataFrame, text_col: str = "text",
              .select("doc_id", F.explode("toks").alias("word")))
     counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
-    micro = F.floor(
-        F.log(F.col("cnt").cast("double") / F.col("total")) * 1e6 + 0.5
-    ).cast("long")
+    micro = micro6(F.log(F.col("cnt").cast("double") / F.col("total"))).cast("long")
     scored = (words.join(counts, "word").crossJoin(F.broadcast(total))
               .select("doc_id", micro.alias("lp_micro")))
     per_doc = (scored.groupBy("doc_id")

@@ -21,13 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-
-def _snap6(col):
-    # non-negative OR signed-safe round-half-up: floor(x*1e6 + 0.5)/1e6.
-    # For negative x this is round-half-toward-positive — the SAME
-    # convention as the DuckDB oracles, which replay the identical
-    # expression, so the direction of the half-tie never diverges.
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+from yatsm_spark.kernel import vecmath
+from yatsm_spark.operators.grid import micro6, snap6
 
 
 def ohlc(tier: DataFrame, value_col: str = "turn_count",
@@ -183,7 +178,7 @@ def acf(tier: DataFrame, value_col: str = "turn_count", max_lag: int = 5,
         rows.append(F.struct(
             F.lit(lag).alias("lag"),
             F.when((a0 > 0) & (F.col(f"_m{lag}") > 0),
-                   _snap6(al.cast("double") / a0.cast("double")))
+                   snap6(al.cast("double") / a0.cast("double")))
              .alias("acf")))
     return (m.select(F.col(by), n.cast("long").alias("n_points"),
                      F.explode(F.array(*rows)).alias("_r"))
@@ -249,13 +244,13 @@ def seasonal_decompose(tier: DataFrame, value_col: str = "turn_count",
     den_s = (F.lit(two_p) * F.col("_cp")).cast("double")
     return t.select(
         by, order_col, value_col, "phase",
-        _snap6(F.col("_tr2p").cast("double") / den_t).alias("trend"),
+        snap6(F.col("_tr2p").cast("double") / den_t).alias("trend"),
         F.when(F.col("_cp") > 0,
-               _snap6(F.col("_sp").cast("double") / den_s))
+               snap6(F.col("_sp").cast("double") / den_s))
          .alias("seasonal"),
         F.when(F.col("_d2p").isNotNull() & (F.col("_cp") > 0),
-               _snap6((F.col("_d2p") * F.col("_cp") - F.col("_sp"))
-                      .cast("decimal(38,0)").cast("double") / den_s))
+               snap6((F.col("_d2p") * F.col("_cp") - F.col("_sp"))
+                     .cast("decimal(38,0)").cast("double") / den_s))
          .alias("resid"))
 
 
@@ -335,8 +330,8 @@ def ccf(tier: DataFrame, x_col: str, y_col: str, max_lag: int = 3,
                      F.explode(F.array(*rows)).alias("_r"))
              .select(by, "n_points", F.col("_r.lag").alias("lag"),
                      F.when(F.col("_okx") & F.col("_oky"),
-                            _snap6(F.col("_r._num").cast("double")
-                                   / F.col("_den"))).alias("ccf")))
+                            snap6(F.col("_r._num").cast("double")
+                                  / F.col("_den"))).alias("ccf")))
 
 
 #: Gaussian breakpoints for the SAX alphabets we support. Literal
@@ -388,11 +383,11 @@ def sax_paa(tier: DataFrame, value_col: str = "turn_count", w: int = 16,
                  F.first("_n").alias("_n"), F.first("_sx").alias("_sx"),
                  F.first("_sxx").alias("_sxx")))
     n, sx, sxx = F.col("_n"), F.col("_sx"), F.col("_sxx")
-    paa = _snap6(F.col("_sp").cast("double")
-                 / F.col("n_in_seg").cast("double"))
-    mean = _snap6(sx.cast("double") / n.cast("double"))
+    paa = snap6(F.col("_sp").cast("double")
+                / F.col("n_in_seg").cast("double"))
+    mean = snap6(sx.cast("double") / n.cast("double"))
     varn = (n * sxx - sx * sx).cast("decimal(38,0)")
-    var = _snap6(varn.cast("double") / (n * n).cast("double"))
+    var = snap6(varn.cast("double") / (n * n).cast("double"))
     z = (F.col("paa") - F.col("_mean")) / F.sqrt(F.col("_var"))
     bps = SAX_BREAKPOINTS[alphabet]
     idx = sum((F.when(F.col("_z") >= F.lit(b), 1).otherwise(0)
@@ -497,8 +492,7 @@ def distribution_shift(tier: DataFrame, value_col: str = "turn_count",
     o1, o2 = F.col("_o1"), F.col("_o2")
     num = ((o1 * n2 - o2 * n1) * (o1 * n2 - o2 * n1)).cast("decimal(38,0)")
     den = (n1 * n2 * (o1 + o2)).cast("decimal(38,0)")
-    term6 = F.floor(num.cast("double") / den.cast("double")
-                    * F.lit(1e6) + F.lit(0.5)).cast("decimal(38,0)")
+    term6 = micro6(num.cast("double") / den.cast("double")).cast("decimal(38,0)")
     agg = (g.withColumn("_t6", F.when((n1 > 0) & (n2 > 0), term6))
             .groupBy(by)
             .agg(F.max("_n").alias("n_points"),
@@ -522,8 +516,8 @@ def trig_micro_tables(period: int) -> tuple[list[int], list[int]]:
     cs, sn = [], []
     for k in range(period):
         ang = 2.0 * math.pi * k / period
-        cs.append(int(math.floor(math.cos(ang) * 1e6 + 0.5)))
-        sn.append(int(math.floor(math.sin(ang) * 1e6 + 0.5)))
+        cs.append(int(vecmath.micro6(math.cos(ang))))
+        sn.append(int(vecmath.micro6(math.sin(ang))))
     return cs, sn
 
 

@@ -28,13 +28,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from yatsm_spark.kernel import smooth
+from yatsm_spark.kernel import smooth, vecmath
+from yatsm_spark.operators.grid import snap6
 from yatsm_spark.operators.series import per_series
-
-
-def _snap6(col):
-    # values here are non-negative; floor(x*1e6 + 0.5) is round-half-up
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
 def sum128(terms: dict):
@@ -111,7 +107,7 @@ def interp_linear(filled: DataFrame, value_cols: list[str],
         nv = F.first(v, ignorenulls=True).over(wn).cast("double")
         ns = F.first(at, ignorenulls=True).over(wn)
         frac = (secs - ps).cast("double") / (ns - ps).cast("double")
-        interp = _snap6(pv + (nv - pv) * frac)
+        interp = snap6(pv + (nv - pv) * frac)
         out = out.withColumn(
             c, F.when(v.isNotNull(), v.cast("double")).otherwise(interp))
     return out
@@ -187,9 +183,9 @@ def time_weighted_avg(df: DataFrame, value_col: str, by: str = "conv_id",
     return (df.withColumn("_dur", dur)
               .withColumn("_wv", weighted)
               .groupBy(by)
-              .agg(_snap6(F.sum("_wv").cast("double")
-                          / F.sum(F.col("_dur").cast("decimal(38,0)"))
-                              .cast("double")).alias("twa"),
+              .agg(snap6(F.sum("_wv").cast("double")
+                         / F.sum(F.col("_dur").cast("decimal(38,0)"))
+                             .cast("double")).alias("twa"),
                    F.sum("_dur").cast("long").alias("span_secs")))
 
 
@@ -212,8 +208,8 @@ def rate_per_sec(df: DataFrame, counter_col: str, by: str = "conv_id",
                .withColumn(
                    "rate",
                    F.when(F.col("span_secs") > 0,
-                          _snap6(F.col("total_increase").cast("double")
-                                 / F.col("span_secs").cast("double"))))
+                          snap6(F.col("total_increase").cast("double")
+                                / F.col("span_secs").cast("double"))))
                .select(by, "rate", "total_increase", "span_secs"))
 
 
@@ -264,8 +260,8 @@ def deriv(df: DataFrame, value_col: str, by: str = "conv_id",
              .select(F.col(by),
                      F.col("_n").cast("long").alias("n_points"),
                      F.when(F.col("_den") > 0,
-                            _snap6(F.col("_num").cast("double")
-                                   / F.col("_den").cast("double")))
+                            snap6(F.col("_num").cast("double")
+                                  / F.col("_den").cast("double")))
                       .alias("slope")))
 
 
@@ -306,7 +302,7 @@ def pearson_corr(df: DataFrame, x_col: str, y_col: str,
                               * F.sqrt(vy.cast("double")))
     return (m.select(F.col(by),
                      F.col("_n").cast("long").alias("n_points"),
-                     F.when((vx > 0) & (vy > 0), _snap6(r)).alias("corr")))
+                     F.when((vx > 0) & (vy > 0), snap6(r)).alias("corr")))
 
 
 def rolling_anomaly(df: DataFrame, value_col: str, k: int = 30,
@@ -362,15 +358,8 @@ def rolling_anomaly(df: DataFrame, value_col: str, k: int = 30,
     warm = F.col("_n") >= min_n
     return (d.withColumn("is_anomaly", F.when(warm, flag))
              .withColumn("zscore",
-                         F.when(warm & (var_n > 0), _snap6_signed(z)))
+                         F.when(warm & (var_n > 0), snap6(z)))
              .drop("_n", "_shi", "_slo", "_q", "_dev", "_varn"))
-
-
-def _snap6_signed(col):
-    # round-half-up on the 1e-6 grid for possibly-negative values; the
-    # oracle replays floor(x*1e6 + 0.5)/1e6 literally, so ties and
-    # negatives land identically in both engines.
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
 def topk_slots(tier: DataFrame, value_col: str = "turn_count",
@@ -469,12 +458,6 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
     if p < 1:
         raise ValueError("period must be >= 1")
 
-    def snap6i(v):
-        return int(math.floor(v * 1e6 + 0.5))
-
-    def snap6(v):
-        return math.floor(v * 1e6 + 0.5) / 1e6
-
     def fit(pdf):
         n = len(pdf)
         key = pdf.iloc[0, 0]
@@ -486,12 +469,12 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
         for i in range(1, n):
             f = (lv[i - 1] + tr[i - 1]) + (se[i - p] if i >= p else 0.0)
             e = x[i] - f
-            e6 = snap6i(e)
+            e6 = int(vecmath.micro6(e))
             sum_ae6 += abs(e6)
             sum_sq += e6 * e6
             den = abs(x[i]) + abs(f)
             t = 0.0 if den == 0.0 else 2.0 * abs(e) / den
-            sum_t6 += snap6i(t)
+            sum_t6 += int(vecmath.micro6(t))
             if i >= p:
                 sum_naive += int(abs(xi[i] - xi[i - p]))
                 n_naive += 1
@@ -501,12 +484,12 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
             # numerator and denominator each converted int -> double
             # ONCE, then one division — the exact op sequence the
             # oracle's ::double casts perform
-            mae = snap6(float(sum_ae6) / float(ne * 10 ** 6))
-            rmse = snap6(math.sqrt(float(sum_sq) / float(ne * 10 ** 12)))
-            smape = snap6(float(sum_t6) / float(ne * 10 ** 6))
+            mae = vecmath.snap6(float(sum_ae6) / float(ne * 10 ** 6))
+            rmse = vecmath.snap6(math.sqrt(float(sum_sq) / float(ne * 10 ** 12)))
+            smape = vecmath.snap6(float(sum_t6) / float(ne * 10 ** 6))
             if sum_naive > 0:
-                mase = snap6(float(sum_ae6 * n_naive)
-                             / float(ne * sum_naive * 10 ** 6))
+                mase = vecmath.snap6(float(sum_ae6 * n_naive)
+                                     / float(ne * sum_naive * 10 ** 6))
         return pd.DataFrame(
             {by: [key], "n_eval": [ne],
              "mae": pd.array([mae], dtype="Float64"),
@@ -565,10 +548,10 @@ def theil_sen(tier: DataFrame, value_col: str = "turn_count",
         dt = (t[iu[1]] - t[iu[0]]).astype(np.float64)
         slopes = np.sort(dx / dt)
         sl = float(slopes[(len(slopes) - 1) // 2])
-        sl = math.floor(sl * 1e6 + 0.5) / 1e6
+        sl = vecmath.snap6(sl)
         resid = np.sort(x.astype(np.float64) - sl * t.astype(np.float64))
         ic = float(resid[(len(resid) - 1) // 2])
-        ic = math.floor(ic * 1e6 + 0.5) / 1e6
+        ic = vecmath.snap6(ic)
         return pd.DataFrame({by: [key], "n_points": [n],
                              "slope": [sl], "intercept": [ic]})
 

@@ -23,7 +23,7 @@ shuffles only within the bucket):
                                      ↘ segments (CCDC grouped map)
                                      ↘ chunks_1m (Gorilla grouped map)
 
-A bucket runs two exchanges (salting "none"), both inside the 1m cache:
+A bucket runs two exchanges, both inside the 1m cache:
 the rollup's (conv_id, slot) aggregation with map-side partials, then ⇒
 a shuffle of only the sparse rollup rows on conv_id, sorted within each
 partition on (conv_id, window_start). The gap-fill windows, cascades and
@@ -34,7 +34,6 @@ the conv cache, add no repartition.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 
@@ -49,13 +48,9 @@ from yatsm_spark.operators.changescore import change_scores, CONV_PARAMS
 from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION, encode_chunks
 from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage, with_bucket
 
-
-#: The 1m rollup each ``PipelineConfig.salting`` value runs.
-_ROLLUP_1M = {
-    "none": lambda df: R.rollup_from_turns(df, "1m"),
-    "always": lambda df: R.rollup_from_turns_salted(df, "1m"),
-    "adaptive": lambda df: R.rollup_from_turns_adaptive(df, "1m"),
-}
+#: Every table a bucket run can write; one run writes the tiers and the
+#: tables its config turns on.
+BUCKET_TABLES = ("tier_1m", "tier_1h", "tier_1d", "segments", "chunks_1m")
 
 
 def _conv_cache(df: DataFrame) -> DataFrame:
@@ -76,22 +71,9 @@ def _conv_cache(df: DataFrame) -> DataFrame:
 class PipelineConfig:
     workdir: str
     n_buckets: int = 16
-    tiers: tuple[str, ...] = ("1m", "1h", "1d")
     compress: bool = True
     segments: bool = True
     phenology: bool = False   # A3: append diurnal fields to segments
-    chunk_points: int = 4096
-    #: rollup skew strategy: "none" (single-phase hash agg; map-side
-    #: partials already absorb ordinary zipf skew), "always" (two-phase
-    #: salt on every key), "adaptive" (sample-detected hot keys salted,
-    #: cold keys single-phase — see BENCH/SKEW.md). Values are
-    #: bit-identical across all three (tested).
-    salting: str = "none"
-
-    def __post_init__(self):
-        if self.salting not in _ROLLUP_1M:
-            raise ValueError(f"PipelineConfig.salting must be one of "
-                             f"{sorted(_ROLLUP_1M)}, got {self.salting!r}")
 
 
 @dataclass
@@ -153,6 +135,8 @@ def run_pipeline(
     # manifests, and silently skip every bucket (round-1 ADVICE, medium).
     staging = "staging_measures"
     stage_fp, bucket_fps, n_turns = _input_fingerprint(transcripts, cfg.n_buckets)
+    # the staged files are split into cfg.n_buckets partitions
+    stage_fp = f"{stage_fp}:b{cfg.n_buckets}"
     if not (resume and store.exists(staging) and ckpt.is_done("staging", -1, stage_fp)):
         measures = with_bucket(with_measures(transcripts), cfg.n_buckets)
         t = time.time()
@@ -160,6 +144,29 @@ def run_pipeline(
         ckpt.commit("staging", -1, stage_fp, n_turns, (time.time() - t) * 1000)
     metrics.staged_turns = n_turns
     staged = store.read(spark, staging)
+
+    # Buckets past cfg.n_buckets were written by a run with more buckets.
+    for table in BUCKET_TABLES:
+        for b in store.buckets(table):
+            if b >= cfg.n_buckets:
+                store.drop_bucket(table, b)
+    for m in ckpt.manifests("bucket"):
+        if m["bucket"] >= cfg.n_buckets:
+            ckpt.drop("bucket", m["bucket"])
+
+    tables = ["tier_1m", "tier_1h", "tier_1d"]
+    if cfg.segments:
+        tables.append("segments")
+    if cfg.compress:
+        tables.append("chunks_1m")
+    # A bucket's fingerprint covers its input, the tables written, their
+    # columns and their format versions: a resume rewrites a bucket when
+    # any of them changed, instead of keeping tables of another config or
+    # mixing formats in one table.
+    written = "+".join(tables) + (":phenology" if cfg.segments and cfg.phenology else "")
+    written += f":tfv{TIER_FORMAT_VERSION}"
+    if cfg.compress:
+        written += f":cfv{CHUNK_FORMAT_VERSION}"
 
     count = F.count(F.lit(1))
     sparse_count = F.count_if(~F.col("gap_filled"))
@@ -169,34 +176,33 @@ def run_pipeline(
     with scoped_conf(spark.conf, "spark.sql.shuffle.partitions"):
         # --- per-bucket stage graph ---------------------------------------------
         for b in range(cfg.n_buckets):
-            bdir = os.path.join(store.path(staging), f"bucket={b}")
             if b not in bucket_fps:
-                ckpt.commit(f"bucket", b, "empty", 0, 0.0)
+                for table in BUCKET_TABLES:
+                    store.drop_bucket(table, b)
+                ckpt.commit("bucket", b, "empty", 0, 0.0)
                 continue
             bm = staged.where(F.col("bucket") == b).drop("bucket")
             # Data-sized shuffle width per bucket (conf.shuffle_partitions_for_bytes):
             # a fixed width spills at 10x data and over-fragments at 0.1x.
-            b_bytes = sum(os.path.getsize(os.path.join(bdir, f))
-                          for f in os.listdir(bdir) if f.endswith(".parquet"))
             spark.conf.set(
                 "spark.sql.shuffle.partitions",
                 str(shuffle_partitions_for_bytes(
-                    b_bytes, spark.sparkContext.defaultParallelism)))
-            # Format bumps -> fingerprint mismatch -> the bucket is rewritten on
-            # resume instead of leaving mixed-format tables behind.
-            fp = f"{bucket_fps[b]}:tfv{TIER_FORMAT_VERSION}"
-            if cfg.compress:
-                fp = f"{fp}:cfv{CHUNK_FORMAT_VERSION}"
+                    store.bucket_size(staging, b)[0],
+                    spark.sparkContext.defaultParallelism)))
+            fp = f"{bucket_fps[b]}:{written}"
             if resume and ckpt.is_done("bucket", b, fp):
                 continue
             t = time.time()
+            for table in BUCKET_TABLES:
+                if table not in tables:
+                    store.drop_bucket(table, b)
             # Sparse-first dataflow: every shuffle moves only REAL slots; the
             # dense (gap-filled) tiers are generated post-shuffle on the write
             # path, and the kernels densify per conv in numpy. At bench skew
             # the dense tier is ~8x the sparse one — none of it is exchanged.
             # Row counts are observed on the writes themselves: the sparse
             # count of a tier is its non-gap rows.
-            sparse = _conv_cache(_ROLLUP_1M[cfg.salting](bm).repartition("conv_id"))
+            sparse = _conv_cache(R.rollup_from_turns(bm, "1m").repartition("conv_id"))
             cached, observed, stored = [sparse], [], {}
 
             def write(df: DataFrame, table: str, **counts) -> None:
@@ -211,8 +217,6 @@ def run_pipeline(
 
             prev = sparse
             for tier_from, tier_to in (("1m", "1h"), ("1h", "1d")):
-                if tier_to not in cfg.tiers:
-                    continue
                 nxt = _conv_cache(cascade(prev, tier_from, tier_to))
                 cached.append(nxt)
                 write(R.gapfill(nxt, tier_to), f"tier_{tier_to}",
@@ -225,7 +229,7 @@ def run_pipeline(
                 write(segs, "segments", segments=count)
 
             if cfg.compress:
-                write(encode_chunks(sparse, "1m", cfg.chunk_points, densify=True),
+                write(encode_chunks(sparse, "1m", densify=True),
                       "chunks_1m", chunks_1m=count)
 
             for df in cached:

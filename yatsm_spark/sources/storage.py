@@ -160,6 +160,18 @@ class ParquetStorage:
             shutil.rmtree(final)
         os.rename(tmp, final)
 
+    def buckets(self, table: str) -> list[int]:
+        """The buckets of ``table`` that have a committed directory."""
+        if not self.exists(table):
+            return []
+        return [int(d[len("bucket="):]) for d in os.listdir(self.path(table))
+                if d.startswith("bucket=") and d[len("bucket="):].isdigit()]
+
+    def drop_bucket(self, table: str, bucket: int) -> None:
+        d = os.path.join(self.path(table), f"bucket={bucket}")
+        if os.path.exists(d):
+            shutil.rmtree(d)
+
     def bucket_size(self, table: str, bucket: int) -> tuple[int, int]:
         """(bytes, files) of a committed bucket's parquet data files, from a
         directory listing (checksum and _SUCCESS files left out)."""

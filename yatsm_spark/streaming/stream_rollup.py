@@ -47,9 +47,10 @@ from pyspark.sql import types as T
 
 from yatsm_spark.ingest import with_measures
 from yatsm_spark.kernel import smooth
-from yatsm_spark.kernel.kalman import _snap6, kalman_filter
+from yatsm_spark.kernel.kalman import kalman_filter
 from yatsm_spark.kernel.matrixprofile import left_profile
 from yatsm_spark.kernel.swing import swing_doors
+from yatsm_spark.kernel.vecmath import snap6
 from yatsm_spark.operators.rollup import MEASURES, turn_aggs
 from yatsm_spark.operators.series import per_series_stateful
 from yatsm_spark.operators.sketches import CMS_DEPTH, cms_col, hll_parts
@@ -562,7 +563,7 @@ def stream_kalman(rollup_stream: DataFrame, q: float = 1.0, r: float = 4.0,
     def step(pdf, st):
         (_, _, m, p), st = kalman_filter(
             pdf["turn_count"].to_numpy(np.float64), q, r, p0, st)
-        return pdf.assign(kalman_level=_snap6(m), kalman_var=_snap6(p)), st
+        return pdf.assign(kalman_level=snap6(m), kalman_var=snap6(p)), st
 
     return _per_conv(rollup_stream, step,
                      _ROW + ["kalman_level double", "kalman_var double"],
