@@ -12,6 +12,7 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
+from tests.test_plans import plan_of
 from yatsm_spark.conf import scoped_conf
 from yatsm_spark.operators.rollup import MEASURES, MOMENTS
 from yatsm_spark.pipeline import PipelineConfig, run_pipeline
@@ -38,7 +39,7 @@ def traced(spark, tx, tmp_path_factory):
     orig = ParquetStorage.write_bucket
 
     def write_bucket(self, df, table, bucket):
-        plans[table, bucket] = str(df._jdf.queryExecution().executedPlan())
+        plans[table, bucket] = plan_of(lambda: df, "simple")
         widths[table, bucket] = int(spark.conf.get("spark.sql.shuffle.partitions"))
         orig(self, df, table, bucket)
 

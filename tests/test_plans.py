@@ -32,15 +32,15 @@ REPO = Path(__file__).resolve().parents[1]
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 
 
-def plan_of(build) -> str:
-    """The formatted physical plan of ``build()``, built with every
-    ``conf.materialize`` seen through."""
+def plan_of(build, mode: str = "formatted") -> str:
+    """The physical plan of ``build()`` as ``explain(mode)`` prints it,
+    built with every ``conf.materialize`` seen through."""
     real, conf.materialize = conf.materialize, lambda df, eager=True: df
     try:
         df = build()
     finally:
         conf.materialize = real
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
 def holds(plan: str, needle: str, want) -> bool:

@@ -1,6 +1,7 @@
-"""The per-series kernel boundary (operators/series.py::per_series): its
-contract, the plan shape of every operator routed through it, and a source
-guard that keeps grouped maps from being written out by hand again."""
+"""The engine's Arrow boundary (operators/series.py): the contracts of
+``per_series`` and ``per_batch``, the plan shape of every operator routed
+through ``per_series``, and source guards that keep grouped and ungrouped
+Arrow maps from being written out by hand again."""
 
 import pathlib
 import re
@@ -9,10 +10,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from tests.test_plans import plan_of
 from yatsm_spark.operators import (changepoint, changescore, codec, downsample,
                                    kalman, matrixprofile, packing, tsfuncs)
 from yatsm_spark.operators.rollup import MEASURES
-from yatsm_spark.operators.series import per_series
+from yatsm_spark.operators.series import per_batch, per_series
 
 OPERATORS = pathlib.Path(__file__).resolve().parents[1] / "yatsm_spark" / "operators"
 
@@ -77,7 +79,7 @@ CCDC_OPS = {"change_scores", "change_scores_post", "change_scores_multi"}
 def test_one_exchange_below_the_grouped_map(spark, tier, chunks, docs, op):
     """Each routed operator shuffles exactly once; for the CCDC stages it is
     the grouping's own exchange at the session width."""
-    plan = str(OPS[op](tier, chunks, docs)._jdf.queryExecution().executedPlan())
+    plan = plan_of(lambda: OPS[op](tier, chunks, docs), "simple")
     lines = plan.splitlines()
     top = next(i for i, ln in enumerate(lines) if "FlatMapGroupsInPandas" in ln)
     exchanges = [ln for ln in lines[top + 1:] if "Exchange " in ln]
@@ -143,3 +145,58 @@ def test_stateful_maps_go_through_per_series_stateful():
     hits = {p.relative_to(pkg).as_posix() for p in pkg.rglob("*.py")
             if "applyInPandasWithState(" in p.read_text()}
     assert hits == {"operators/series.py"}
+
+
+def test_none_or_empty_from_fn_yields_no_rows_of_the_declared_schema(spark):
+    df = spark.createDataFrame(pd.DataFrame({
+        "k": ["a", "b", "c"], "t": pd.date_range("2026-01-01", periods=3, freq="h")}))
+    for fn in (lambda pdf: None, lambda pdf: pdf.iloc[:0].assign(x=1.5)):
+        out = per_batch(df, fn, ["k", "t", "x double"], name="probe")
+        assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+            ("k", "string"), ("t", "timestamp"), ("x", "double")]
+        assert list(out.toPandas().columns) == ["k", "t", "x"]
+        assert out.count() == 0
+
+
+def test_per_batch_keeps_rows_and_reads_the_payload(spark):
+    df = spark.createDataFrame(pd.DataFrame({"x": np.arange(50, dtype=np.int64)})) \
+        .repartition(3)
+    out = per_batch(df, lambda pdf, table: pdf.assign(y=table[pdf["x"] % 4]),
+                    ["x", "y double"], name="probe",
+                    payload=np.array([0.5, 1.5, 2.5, 3.5]))
+    got = out.toPandas().sort_values("x", ignore_index=True)
+    assert got["x"].tolist() == list(range(50))
+    assert got["y"].tolist() == [0.5 + (x % 4) for x in range(50)]
+
+
+def test_per_batch_skips_empty_batches_and_empty_outputs(spark, monkeypatch):
+    """The helper's own loop, run locally on hand-made batches."""
+    df = spark.range(1)
+    monkeypatch.setattr(type(df), "mapInPandas", lambda self, run, schema: run)
+    seen = []
+
+    def fn(pdf):
+        seen.append(len(pdf))
+        return None if len(pdf) == 1 else pdf
+
+    run = per_batch(df, fn, ["id"], name="probe")
+    batches = [pd.DataFrame({"id": v}, dtype="int64")
+               for v in ([], [1], [], [2, 3], [4, 5, 6])]
+    assert [len(o) for o in run(iter(batches))] == [2, 3]
+    assert seen == [1, 2, 3]
+
+
+def test_boundary_stages_are_named_after_their_operator(spark):
+    df = spark.createDataFrame(pd.DataFrame({"k": ["a"], "t": [1]}))
+    plan = plan_of(lambda: per_batch(df, lambda pdf: pdf, ["k", "t"],
+                                     name="probe_batch"), "simple")
+    assert re.search(r"MapInPandas probe_batch\(", plan), plan
+    plan = plan_of(lambda: per_series(df, "k", "t", lambda g: g, ["k", "t"],
+                                      name="probe_series"), "simple")
+    assert re.search(r"FlatMapGroupsInPandas \[k#\d+\], probe_series\(", plan), plan
+
+
+def test_arrow_maps_go_through_per_batch():
+    """Only the helper itself maps Arrow batches without grouping."""
+    hits = {p.name for p in OPERATORS.glob("*.py") if "mapInPandas(" in p.read_text()}
+    assert hits == {"series.py"}

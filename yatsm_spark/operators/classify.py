@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from yatsm_spark.kernel.classify import RandomForest, kfold_scores
+from yatsm_spark.operators.series import per_batch
 
 #: Scalar numeric fields of the segments schema used as features; the
 #: harmonic coef array is flattened to coef_0..coef_{k-1}.
@@ -107,21 +108,13 @@ def classify_segments(segments: DataFrame, model: RandomForest,
         ]
     )
 
-    def run(batches):
-        for pdf in batches:
-            if len(pdf):
-                X = pdf[fcols].to_numpy(dtype=np.float64)
-                proba = model.predict_proba(X)
-                k = np.argmax(proba, axis=1)
-                pdf = pdf.assign(**{
-                    "class": model.classes_[k].astype(str),
-                    "class_proba": proba[np.arange(len(k)), k],
-                })
-            else:
-                pdf = pdf.assign(**{"class": [], "class_proba": []})
-            yield pdf
+    def predict(pdf):
+        proba = model.predict_proba(pdf[fcols].to_numpy(dtype=np.float64))
+        k = np.argmax(proba, axis=1)
+        return pdf.assign(**{"class": model.classes_[k].astype(str),
+                             "class_proba": proba[np.arange(len(k)), k]})
 
-    return feats.mapInPandas(run, out_schema)
+    return per_batch(feats, predict, out_schema, name="classify_segments")
 
 
 def crossval_report(feats: DataFrame, labels: DataFrame, label_col: str = "label",

@@ -40,7 +40,7 @@ from pyspark.sql import types as T
 from yatsm_spark.kernel import gorilla_vec as g_vec
 from yatsm_spark.kernel.gapfill import gapfill_slots
 from yatsm_spark.operators.rollup import MEASURES, MOMENTS, TIERS
-from yatsm_spark.operators.series import per_series
+from yatsm_spark.operators.series import per_batch, per_series
 
 COUNT_COLS = [m.name for m in MOMENTS if m.gap == 0]
 STAT_COLS = [m.name for m in MOMENTS if m.gap is None]
@@ -186,22 +186,20 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
     """Compressed chunks -> rollup rows (decode-path reader for parity
     checks and tier-serving). mapInPandas: no shuffle at all."""
 
-    def dec(batches):
-        for pdf in batches:
-            frames = []
-            for conv_id, *chunk in zip(pdf["conv_id"], pdf["n_points"],
-                                       pdf["ts_codec"], pdf["val_codec"]):
-                epochs, gap, cols = _decode_chunk(*chunk)
-                d = {"conv_id": conv_id,
-                     "window_start": epochs.astype("datetime64[s]").astype("datetime64[us]")}
-                for m, (v, null) in cols.items():
-                    d[m] = pd.arrays.IntegerArray(v, null)
-                d["gap_filled"] = gap
-                frames.append(pd.DataFrame(d))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def dec(pdf):
+        frames = []
+        for conv_id, *chunk in zip(pdf["conv_id"], pdf["n_points"],
+                                   pdf["ts_codec"], pdf["val_codec"]):
+            epochs, gap, cols = _decode_chunk(*chunk)
+            d = {"conv_id": conv_id,
+                 "window_start": epochs.astype("datetime64[s]").astype("datetime64[us]")}
+            for m, (v, null) in cols.items():
+                d[m] = pd.arrays.IntegerArray(v, null)
+            d["gap_filled"] = gap
+            frames.append(pd.DataFrame(d))
+        return pd.concat(frames, ignore_index=True)
 
-    return chunks.mapInPandas(dec, ROLLUP_SCHEMA)
+    return per_batch(chunks, dec, ROLLUP_SCHEMA, name="decode_chunks")
 
 
 def compact_chunks(chunks: DataFrame, chunk_points: int = CHUNK_POINTS) -> DataFrame:

@@ -14,8 +14,12 @@ floats anywhere — the distance is bit-identical at any parallelism.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from yatsm_spark.kernel.dtw import dtw_core
+from yatsm_spark.operators.series import per_batch
 
 
 def series_arrays(tier: DataFrame, value_col: str = "turn_count",
@@ -36,8 +40,6 @@ def dtw_rerank(tier: DataFrame, pairs: DataFrame,
                a_col: str = "conv_a", b_col: str = "conv_b") -> DataFrame:
     """Exact (banded) DTW distance for every candidate pair: returns
     (conv_a, conv_b, len_a, len_b, dtw)."""
-    from yatsm_spark.kernel.dtw import dtw_core
-
     arrs = series_arrays(tier, value_col, by, order_col)
     j = (pairs.select(a_col, b_col)
          .join(arrs.select(F.col(by).alias(a_col),
@@ -46,25 +48,19 @@ def dtw_rerank(tier: DataFrame, pairs: DataFrame,
                            F.col("series").alias("_sb")), b_col)
          .select(a_col, b_col, "_sa", "_sb"))
 
-    def compute(batches):
-        import pandas as pd
+    def compute(pdf):
+        rows = []
+        for ca, cb, sa, sb in zip(pdf[a_col], pdf[b_col],
+                                  pdf["_sa"], pdf["_sb"]):
+            if len(sa) > max_n or len(sb) > max_n:
+                raise ValueError(
+                    f"dtw_rerank: series of {max(len(sa), len(sb))} "
+                    f"rows exceeds max_n={max_n}; downsample "
+                    "(lttb/m4/cascade) first")
+            d = dtw_core([int(v) for v in sa], [int(v) for v in sb], radius)
+            rows.append((ca, cb, len(sa), len(sb), d))
+        return pd.DataFrame(rows, columns=[a_col, b_col, "len_a", "len_b", "dtw"])
 
-        for pdf in batches:
-            rows = []
-            for ca, cb, sa, sb in zip(pdf[a_col], pdf[b_col],
-                                      pdf["_sa"], pdf["_sb"]):
-                if len(sa) > max_n or len(sb) > max_n:
-                    raise ValueError(
-                        f"dtw_rerank: series of {max(len(sa), len(sb))} "
-                        f"rows exceeds max_n={max_n}; downsample "
-                        "(lttb/m4/cascade) first")
-                d = dtw_core([int(v) for v in sa],
-                             [int(v) for v in sb], radius)
-                rows.append((ca, cb, len(sa), len(sb), d))
-            yield pd.DataFrame(rows, columns=[a_col, b_col, "len_a",
-                                              "len_b", "dtw"])
-
-    ptypes = dict(pairs.dtypes)
-    schema = (f"{a_col} {ptypes[a_col]}, {b_col} {ptypes[b_col]}, "
-              "len_a long, len_b long, dtw long")
-    return j.mapInPandas(compute, schema)
+    return per_batch(j, compute,
+                     [a_col, b_col, "len_a long", "len_b long", "dtw long"],
+                     name="dtw_rerank")

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from yatsm_spark.kernel.vecmath import seq_norm
+from yatsm_spark.operators.series import per_batch
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -300,17 +301,16 @@ def _synth_media(docs: DataFrame, id_col: str, payload, media_type: str) -> Data
     per doc id: the generator behind every ``synth_*_media``."""
     ids = docs.select(F.col(id_col).cast("long").alias("media_id"))
 
-    def gen(batches):
-        for pdf in batches:
-            payloads = [payload(int(i)) for i in pdf["media_id"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": payloads,
-                "media_type": media_type,
-                "n_bytes": [len(p) for p in payloads],
-            })
+    def gen(pdf):
+        payloads = [payload(int(i)) for i in pdf["media_id"]]
+        return pd.DataFrame({
+            "media_id": pdf["media_id"],
+            "payload": payloads,
+            "media_type": media_type,
+            "n_bytes": [len(p) for p in payloads],
+        })
 
-    return ids.mapInPandas(gen, MEDIA_SCHEMA)
+    return per_batch(ids, gen, MEDIA_SCHEMA, name="synth_media")
 
 
 def synth_png_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -392,20 +392,19 @@ def image_features(media: DataFrame) -> DataFrame:
     (each byte < 256, so float64 sums are exact at any accumulation
     order), bit-reproducible in any engine."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload)
-                img = decode_image(p)
-                h, w, _ = img.shape
-                s = img.reshape(-1, 3).astype(np.float64).sum(axis=0)
-                n = float(h * w)
-                rows.append((int(mid), w, h, s[0] / n, s[1] / n, s[2] / n,
-                             hashlib.sha1(p).hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURE_SCHEMA.fields])
+    def run(pdf):
+        rows = []
+        for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+            p = bytes(payload)
+            img = decode_image(p)
+            h, w, _ = img.shape
+            s = img.reshape(-1, 3).astype(np.float64).sum(axis=0)
+            n = float(h * w)
+            rows.append((int(mid), w, h, s[0] / n, s[1] / n, s[2] / n,
+                         hashlib.sha1(p).hexdigest()))
+        return pd.DataFrame(rows, columns=IMAGE_FEATURE_SCHEMA.fieldNames())
 
-    return media.mapInPandas(run, IMAGE_FEATURE_SCHEMA)
+    return per_batch(media, run, IMAGE_FEATURE_SCHEMA, name="image_features")
 
 
 def _fake_feature(payload: bytes, dim: int = 8) -> np.ndarray:
@@ -422,18 +421,17 @@ def extract_features(media: DataFrame, dim: int = 8, batch_hint: int = 1024) -> 
     """mapInPandas feature extraction: Arrow batches in, one row per media
     item out. Partitioning is whatever the source had — no shuffle."""
 
-    def run(batches):
-        for pdf in batches:
-            payloads = [bytes(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "media_type": pdf["media_type"],
-                "n_bytes": pdf["n_bytes"],
-                "sha1": [hashlib.sha1(p).hexdigest() for p in payloads],
-                "feature": [_fake_feature(p, dim) for p in payloads],
-            })
+    def run(pdf):
+        payloads = [bytes(p) for p in pdf["payload"]]
+        return pd.DataFrame({
+            "media_id": pdf["media_id"],
+            "media_type": pdf["media_type"],
+            "n_bytes": pdf["n_bytes"],
+            "sha1": [hashlib.sha1(p).hexdigest() for p in payloads],
+            "feature": [_fake_feature(p, dim) for p in payloads],
+        })
 
-    return media.mapInPandas(run, FEATURE_SCHEMA)
+    return per_batch(media, run, FEATURE_SCHEMA, name="extract_features")
 
 
 def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -448,22 +446,21 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     with width/height = the OUTPUT dims and sha1 of the RESIZED buffer.
     """
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_image(bytes(payload))
-                h, w, _ = img.shape
-                sy = (np.arange(out_h, dtype=np.int64) * h) // out_h
-                sx = (np.arange(out_w, dtype=np.int64) * w) // out_w
-                resized = img[sy][:, sx]
-                s = resized.reshape(-1, 3).astype(np.float64).sum(axis=0)
-                n = float(out_h * out_w)
-                rows.append((int(mid), out_w, out_h, s[0] / n, s[1] / n, s[2] / n,
-                             hashlib.sha1(resized.tobytes()).hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURE_SCHEMA.fields])
+    def run(pdf):
+        rows = []
+        for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+            img = decode_image(bytes(payload))
+            h, w, _ = img.shape
+            sy = (np.arange(out_h, dtype=np.int64) * h) // out_h
+            sx = (np.arange(out_w, dtype=np.int64) * w) // out_w
+            resized = img[sy][:, sx]
+            s = resized.reshape(-1, 3).astype(np.float64).sum(axis=0)
+            n = float(out_h * out_w)
+            rows.append((int(mid), out_w, out_h, s[0] / n, s[1] / n, s[2] / n,
+                         hashlib.sha1(resized.tobytes()).hexdigest()))
+        return pd.DataFrame(rows, columns=IMAGE_FEATURE_SCHEMA.fieldNames())
 
-    return media.mapInPandas(run, IMAGE_FEATURE_SCHEMA)
+    return per_batch(media, run, IMAGE_FEATURE_SCHEMA, name="resize_images")
 
 
 #: Synthetic uncompressed video container: b"VID0" + u16 n_frames + u16 w
@@ -511,26 +508,25 @@ def sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
     one output row per sampled frame (explode happens inside the Arrow
     batch, so a long video never leaves its partition)."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload)
-                if p[:4] != VIDEO_MAGIC:
-                    raise ValueError(f"not a VID0 payload for media_id={mid}")
-                n_frames = p[4] | (p[5] << 8)
-                w = p[6] | (p[7] << 8)
-                h = p[8] | (p[9] << 8)
-                fsz = w * h * 3
-                for f in range(0, n_frames, every_k):
-                    raw = p[10 + f * fsz: 10 + (f + 1) * fsz]
-                    px = np.frombuffer(raw, dtype=np.uint8).astype(np.float64)
-                    rows.append((int(mid), f,
-                                 px[0::3].mean(), px[1::3].mean(), px[2::3].mean(),
-                                 hashlib.sha1(raw).hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
+    def run(pdf):
+        rows = []
+        for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+            p = bytes(payload)
+            if p[:4] != VIDEO_MAGIC:
+                raise ValueError(f"not a VID0 payload for media_id={mid}")
+            n_frames = p[4] | (p[5] << 8)
+            w = p[6] | (p[7] << 8)
+            h = p[8] | (p[9] << 8)
+            fsz = w * h * 3
+            for f in range(0, n_frames, every_k):
+                raw = p[10 + f * fsz: 10 + (f + 1) * fsz]
+                px = np.frombuffer(raw, dtype=np.uint8).astype(np.float64)
+                rows.append((int(mid), f,
+                             px[0::3].mean(), px[1::3].mean(), px[2::3].mean(),
+                             hashlib.sha1(raw).hexdigest()))
+        return pd.DataFrame(rows, columns=FRAME_SCHEMA.fieldNames())
 
-    return media.mapInPandas(run, FRAME_SCHEMA)
+    return per_batch(media, run, FRAME_SCHEMA, name="sample_frames")
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType([
@@ -602,17 +598,16 @@ def audio_features(media: DataFrame) -> DataFrame:
     <= 2^22, counts <= 2^11 per clip => integer sums far below 2^53), so
     mean and RMS are bit-reproducible in any engine."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload)
-                rate, x = decode_wav(p)
-                xf = x.astype(np.float64)
-                n = len(x)
-                rows.append((int(mid), int(rate), n, n / float(rate),
-                             xf.sum() / n, float(np.sqrt((xf * xf).sum() / n)),
-                             hashlib.sha1(p).hexdigest()))
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA.fields])
+    def run(pdf):
+        rows = []
+        for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+            p = bytes(payload)
+            rate, x = decode_wav(p)
+            xf = x.astype(np.float64)
+            n = len(x)
+            rows.append((int(mid), int(rate), n, n / float(rate),
+                         xf.sum() / n, float(np.sqrt((xf * xf).sum() / n)),
+                         hashlib.sha1(p).hexdigest()))
+        return pd.DataFrame(rows, columns=AUDIO_FEATURE_SCHEMA.fieldNames())
 
-    return media.mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    return per_batch(media, run, AUDIO_FEATURE_SCHEMA, name="audio_features")

@@ -29,6 +29,7 @@ from __future__ import annotations
 from functools import reduce
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -38,6 +39,9 @@ from yatsm_spark.kernel.pca_core import (
     moments_from_quantized,
     quantize,
 )
+from yatsm_spark.kernel.vecmath import seq_dot
+from yatsm_spark.operators.series import per_batch
+from yatsm_spark.operators.vectors import matrix, valid
 
 #: beyond this many d*k literal doubles, route projection through the
 #: broadcast mapInPandas path (same plan-size rationale as the IVF
@@ -59,23 +63,15 @@ def pca_moments(df: DataFrame, vec_col: str = "embedding",
     vector is null or length-mismatched are dropped (documented contract;
     mixed-dimension corpora must be split upstream)."""
     d = dim or _vec_dim(df, vec_col)
-    src = df.filter(F.col(vec_col).isNotNull()
-                    & (F.size(F.col(vec_col)) == d)).select(vec_col)
 
-    def gen(batches):
-        import pandas as pd
+    def moments(pdf):
+        n, S, tri = moments_from_quantized(quantize(matrix(pdf[vec_col])))
+        vals = [n] + S + tri
+        return pd.DataFrame({"idx": range(len(vals)),
+                             "val": [str(v) for v in vals]})
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            n, S, tri = moments_from_quantized(quantize(V))
-            vals = [n] + S + tri
-            yield pd.DataFrame({"idx": range(len(vals)),
-                                "val": [str(v) for v in vals]})
-
-    combined = (src.mapInPandas(gen, "idx int, val string")
+    combined = (per_batch(valid(df, vec_col, d).select(vec_col), moments,
+                          ["idx int", "val string"], name="pca_moments")
                    .groupBy("idx")
                    .agg(F.sum(F.col("val").cast("decimal(38,0)")).alias("v"))
                    .collect())
@@ -103,8 +99,7 @@ def pca_project(df: DataFrame, k: int = 4, id_col: str = "vec_id",
     the moment pass (train once, project many)."""
     mean, comps, _eig = loadings or pca_loadings(df, k, vec_col)
     d = len(mean)
-    src = df.filter(F.col(vec_col).isNotNull()
-                    & (F.size(F.col(vec_col)) == d))
+    src = valid(df, vec_col, d)
     if method == "auto":
         method = ("literal" if d * comps.shape[1]
                   <= LITERAL_LOADINGS_MAX_DOUBLES else "broadcast")
@@ -125,29 +120,18 @@ def pca_project(df: DataFrame, k: int = 4, id_col: str = "vec_id",
     if method != "broadcast":
         raise ValueError(f"unknown pca method {method!r}")
 
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(
-        ([float(m) for m in mean], comps.astype(np.float64).tolist()))
     n_out = comps.shape[1]
-    schema = (f"{id_col} " + dict(df.dtypes)[id_col] + ", "
-              + ", ".join(f"pc_{c} double" for c in range(n_out)))
 
-    def gen(batches):
-        import pandas as pd
+    def project(pdf, payload):
+        m, Cm = payload
+        Y = seq_dot(matrix(pdf[vec_col]) - m, Cm.T)
+        out = {id_col: pdf[id_col]}
+        for c in range(n_out):
+            out[f"pc_{c}"] = Y[:, c]
+        return pd.DataFrame(out)
 
-        from yatsm_spark.kernel.vecmath import seq_dot
-
-        m, C = bc.value
-        Cm = np.asarray(C, dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            Y = seq_dot(V - np.asarray(m, dtype=np.float64), Cm.T)
-            out = {id_col: pdf[id_col]}
-            for c in range(n_out):
-                out[f"pc_{c}"] = Y[:, c]
-            yield pd.DataFrame(out)
-
-    return src.select(id_col, vec_col).mapInPandas(gen, schema)
+    return per_batch(src.select(id_col, vec_col), project,
+                     [id_col, *(f"pc_{c} double" for c in range(n_out))],
+                     name="pca_project",
+                     payload=(np.asarray(mean, dtype=np.float64),
+                              np.asarray(comps, dtype=np.float64)))

@@ -29,6 +29,7 @@ batching, and the ranking window.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,10 +39,15 @@ from yatsm_spark.kernel.pq_core import (
     pq_lut,
     pq_train_core,
 )
+from yatsm_spark.kernel.vecmath import seq_sqdist
 from yatsm_spark.operators.grid import snap6
+from yatsm_spark.operators.series import per_batch
+from yatsm_spark.operators.vectors import gather, matrix, valid
 
 #: training-sample hard cap — raising, not truncating, is the contract
 MAX_TRAIN_SAMPLE = 1 << 17
+#: (query, neighbor, unsnapped asymmetric distance) rows of both ADC scans
+ADC_SCHEMA = ["query_id long", "neighbor_id long", "adist double"]
 
 
 def pq_train(df: DataFrame, m: int = 8, ksub: int = 16, n_iters: int = 5,
@@ -52,17 +58,23 @@ def pq_train(df: DataFrame, m: int = 8, ksub: int = 16, n_iters: int = 5,
     means, empty clusters keep their centroid)."""
     if m < 1 or ksub < 2 or n_iters < 1:
         raise ValueError("need m >= 1, ksub >= 2, n_iters >= 1")
-    rows = (df.filter(F.col(vec_col).isNotNull()
-                      & (F.col(id_col) % sample_mod == 0))
-              .select(id_col, vec_col).orderBy(id_col).collect())
-    if len(rows) > MAX_TRAIN_SAMPLE:
-        raise ValueError(
-            f"PQ training sample {len(rows)} exceeds {MAX_TRAIN_SAMPLE}; "
-            "raise sample_mod — training is sample-bounded by design")
-    if not rows:
-        raise ValueError("PQ training sample is empty")
-    V = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+    V = _train_sample(df, id_col, vec_col, sample_mod, "PQ",
+                      " — training is sample-bounded by design")
     return pq_train_core(V, m, ksub, n_iters)
+
+
+def _train_sample(df: DataFrame, id_col: str, vec_col: str, sample_mod: int,
+                  what: str, why: str = "") -> np.ndarray:
+    return gather(df, F.col(vec_col).isNotNull()
+                  & (F.col(id_col) % sample_mod == 0), id_col, vec_col,
+                  cap=MAX_TRAIN_SAMPLE, empty=f"{what} training sample is empty",
+                  over=f"{what} training sample {{n}} exceeds {{cap}}; "
+                       f"raise sample_mod{why}")[1]
+
+
+def _queries(df: DataFrame, query_ids: list[int], id_col: str, vec_col: str):
+    return gather(df, F.col(id_col).isin([int(q) for q in query_ids]),
+                  id_col, vec_col, empty="no query vectors found for the given ids")
 
 
 def pq_encode(df: DataFrame, codebooks: np.ndarray,
@@ -71,29 +83,16 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray,
     """(id, code array<int> of length m): per-subspace argmin against the
     broadcast codebooks — zero shuffle, one Arrow pass per batch. Null /
     length-mismatched vectors are dropped (same contract as PCA)."""
-    m, ksub, dsub = codebooks.shape
-    d = m * dsub
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(codebooks.tolist())
-    src = df.filter(F.col(vec_col).isNotNull()
-                    & (F.size(F.col(vec_col)) == d)) \
-            .select(id_col, vec_col)
-    schema = f"{id_col} " + dict(df.dtypes)[id_col] + ", code array<int>"
+    m, _, dsub = codebooks.shape
 
-    def gen(batches):
-        import pandas as pd
+    def encode(pdf, B):
+        codes = pq_encode_core(matrix(pdf[vec_col]), B)
+        return pd.DataFrame({id_col: pdf[id_col],
+                             "code": [row.tolist() for row in codes]})
 
-        B = np.asarray(bc.value, dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            codes = pq_encode_core(V, B)
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "code": [row.tolist() for row in codes]})
-
-    return src.mapInPandas(gen, schema)
+    return per_batch(valid(df, vec_col, m * dsub).select(id_col, vec_col),
+                     encode, [id_col, "code array<int>"], name="pq_encode",
+                     payload=np.asarray(codebooks, dtype=np.float64))
 
 
 def pq_adc_topk(df: DataFrame, codebooks: np.ndarray, query_ids: list[int],
@@ -108,43 +107,26 @@ def pq_adc_topk(df: DataFrame, codebooks: np.ndarray, query_ids: list[int],
     the production shape, where encode happens once at ingest.
     Deterministic ranking: grid-snapped adist ASC, neighbor id ASC
     (floor(x*1e6+0.5) — adist >= 0, identical closed form in the twin)."""
-    m, ksub, dsub = codebooks.shape
-    q_rows = (df.filter(F.col(id_col).isin([int(q) for q in query_ids]))
-                .select(id_col, vec_col).orderBy(id_col).collect())
-    if not q_rows:
-        raise ValueError("no query vectors found for the given ids")
-    qids = [int(r[id_col]) for r in q_rows]
-    Q = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
-    lut = pq_lut(Q, codebooks)
-
+    qids, Q = _queries(df, query_ids, id_col, vec_col)
     if codes is None:
         codes = pq_encode(df, codebooks, id_col, vec_col)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((qids, lut.tolist()))
 
-    def gen(batches):
-        import pandas as pd
+    def adc(pdf, payload):
+        qids_b, L = payload
+        C = matrix(pdf["code"], np.int64)
+        n = len(pdf)
+        out_q, out_n, out_d = [], [], []
+        for qi, qid in enumerate(qids_b):
+            acc = pq_adc_core(C, L[qi])
+            out_q += [qid] * n
+            out_n += list(pdf[id_col])
+            out_d += list(acc)
+        return pd.DataFrame({"query_id": out_q, "neighbor_id": out_n,
+                             "adist": out_d})
 
-        qids_b, lut_l = bc.value
-        L = np.asarray(lut_l, dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.stack([np.asarray(c, dtype=np.int64)
-                          for c in pdf["code"]])
-            n = len(pdf)
-            out_q, out_n, out_d = [], [], []
-            for qi, qid in enumerate(qids_b):
-                acc = pq_adc_core(C, L[qi])
-                out_q += [qid] * n
-                out_n += list(pdf[id_col])
-                out_d += list(acc)
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n,
-                                "adist": out_d})
-
-    pairs = (codes.mapInPandas(gen, "query_id long, neighbor_id long, "
-                                    "adist double")
-                  .filter(F.col("neighbor_id") != F.col("query_id")))
+    pairs = per_batch(codes, adc, ADC_SCHEMA, name="pq_adc_topk",
+                      payload=(qids, pq_lut(Q, codebooks))) \
+        .filter(F.col("neighbor_id") != F.col("query_id"))
     adist = snap6(F.col("adist")) if round6 else F.col("adist")
     w = Window.partitionBy("query_id").orderBy(
         F.col("adist").asc(), F.col("neighbor_id").asc())
@@ -164,16 +146,7 @@ def ivfpq_index(df: DataFrame, n_centroids: int = 8, m: int = 8,
     n_centroids — so both trainings share the same kernel conventions.
     PQ encodes RAW vectors (not residuals) — documented simplification;
     the routing/compression architecture is the FAISS shape either way."""
-    rows = (df.filter(F.col(vec_col).isNotNull()
-                      & (F.col(id_col) % sample_mod == 0))
-              .select(id_col, vec_col).orderBy(id_col).collect())
-    if len(rows) > MAX_TRAIN_SAMPLE:
-        raise ValueError(
-            f"IVF-PQ training sample {len(rows)} exceeds {MAX_TRAIN_SAMPLE};"
-            " raise sample_mod")
-    if not rows:
-        raise ValueError("IVF-PQ training sample is empty")
-    V = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+    V = _train_sample(df, id_col, vec_col, sample_mod, "IVF-PQ")
     coarse = pq_train_core(V, 1, n_centroids, n_iters)[0]
     books = pq_train_core(V, m, ksub, n_iters)
     return coarse, books
@@ -185,33 +158,21 @@ def ivfpq_encode(df: DataFrame, coarse: np.ndarray, books: np.ndarray,
     """(id, cluster, code): coarse assignment + PQ codes in ONE
     zero-shuffle Arrow pass — the ingest-time index build. Ties take the
     lowest cluster id (argmin first occurrence)."""
-    from yatsm_spark.kernel.vecmath import seq_sqdist
+    m, _, dsub = books.shape
 
-    m, ksub, dsub = books.shape
-    d = m * dsub
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((coarse.tolist(), books.tolist()))
-    src = df.filter(F.col(vec_col).isNotNull()
-                    & (F.size(F.col(vec_col)) == d)) \
-            .select(id_col, vec_col)
-    schema = (f"{id_col} " + dict(df.dtypes)[id_col]
-              + ", cluster int, code array<int>")
+    def encode(pdf, payload):
+        Cm, B = payload
+        V = matrix(pdf[vec_col])
+        cl = np.argmin(seq_sqdist(V, Cm), axis=1).astype(np.int32)
+        codes = pq_encode_core(V, B)
+        return pd.DataFrame({id_col: pdf[id_col], "cluster": cl,
+                             "code": [row.tolist() for row in codes]})
 
-    def gen(batches):
-        import pandas as pd
-
-        Cm, B = (np.asarray(a, dtype=np.float64) for a in bc.value)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            cl = np.argmin(seq_sqdist(V, Cm), axis=1).astype(np.int32)
-            codes = pq_encode_core(V, B)
-            yield pd.DataFrame({id_col: pdf[id_col], "cluster": cl,
-                                "code": [row.tolist() for row in codes]})
-
-    return src.mapInPandas(gen, schema)
+    return per_batch(valid(df, vec_col, m * dsub).select(id_col, vec_col),
+                     encode, [id_col, "cluster int", "code array<int>"],
+                     name="ivfpq_encode",
+                     payload=tuple(np.asarray(a, dtype=np.float64)
+                                   for a in (coarse, books)))
 
 
 def ivfpq_topk(df: DataFrame, coarse: np.ndarray, books: np.ndarray,
@@ -228,21 +189,12 @@ def ivfpq_topk(df: DataFrame, coarse: np.ndarray, books: np.ndarray,
     and the only exchange is the final per-query ranking. With nprobe =
     n_centroids the result equals brute-force pq_adc_topk on the same
     codebooks (pytest-pinned)."""
-    from yatsm_spark.kernel.vecmath import seq_sqdist
-
-    q_rows = (df.filter(F.col(id_col).isin([int(q) for q in query_ids]))
-                .select(id_col, vec_col).orderBy(id_col).collect())
-    if not q_rows:
-        raise ValueError("no query vectors found for the given ids")
-    qids = [int(r[id_col]) for r in q_rows]
-    Q = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
+    qids, Q = _queries(df, query_ids, id_col, vec_col)
     nprobe = min(nprobe, coarse.shape[0])
     cdist = seq_sqdist(Q, coarse)
     # probe order: distance, then lowest cluster id (lexsort is stable)
     probes = [np.lexsort((np.arange(coarse.shape[0]), cdist[i]))[:nprobe]
               for i in range(len(qids))]
-    lut = pq_lut(Q, books)
-
     if encoded is None:
         encoded = ivfpq_encode(df, coarse, books, id_col, vec_col)
     spark = df.sparkSession
@@ -251,31 +203,22 @@ def ivfpq_topk(df: DataFrame, coarse: np.ndarray, books: np.ndarray,
         "query_id long, cluster int")
     cand = encoded.join(F.broadcast(probe_pairs), "cluster") \
                   .filter(F.col(id_col) != F.col("query_id"))
-    bc = spark.sparkContext.broadcast((qids, lut.tolist()))
 
-    def gen(batches):
-        import pandas as pd
-
-        qids_b, lut_l = bc.value
-        L = np.asarray(lut_l, dtype=np.float64)
+    def adc(pdf, payload):
+        qids_b, L = payload
         pos = {q: i for i, q in enumerate(qids_b)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.stack([np.asarray(c, dtype=np.int64)
-                          for c in pdf["code"]])
-            qcol = pdf["query_id"].to_numpy()
-            adist = np.empty(len(pdf), dtype=np.float64)
-            for q in np.unique(qcol):
-                sel = qcol == q
-                adist[sel] = pq_adc_core(C[sel], L[pos[int(q)]])
-            yield pd.DataFrame({"query_id": qcol,
-                                "neighbor_id": pdf[id_col],
-                                "adist": adist})
+        C = matrix(pdf["code"], np.int64)
+        qcol = pdf["query_id"].to_numpy()
+        adist = np.empty(len(pdf), dtype=np.float64)
+        for q in np.unique(qcol):
+            sel = qcol == q
+            adist[sel] = pq_adc_core(C[sel], L[pos[int(q)]])
+        return pd.DataFrame({"query_id": qcol, "neighbor_id": pdf[id_col],
+                             "adist": adist})
 
-    pairs = cand.select("query_id", id_col, "code") \
-                .mapInPandas(gen, "query_id long, neighbor_id long, "
-                                  "adist double")
+    pairs = per_batch(cand.select("query_id", id_col, "code"), adc,
+                      ADC_SCHEMA, name="ivfpq_topk",
+                      payload=(qids, pq_lut(Q, books)))
     snapped = snap6(F.col("adist"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("adist").asc(), F.col("neighbor_id").asc())

@@ -1,11 +1,18 @@
-"""The per-series kernel boundary: one sorted grouped map per series key.
+"""The engine's Arrow boundary: every operator stage that hands rows to
+Python crosses it here (bpe's one-row-per-word fold aside).
 
 Every sequential kernel of the engine (CCDC segments, Gorilla chunks, the
 smoothers, matrix profile, PELT, Kalman, LTTB, swing-door, packing folds)
 runs in parallel across series and sequentially within each one. Spark owns
 the grouping shuffle and hands each whole group to the kernel as one pandas
-frame; this module owns what every such stage needs around the kernel: the
-in-group time order, the series-length guard and the output schema.
+frame (``per_series``); this module owns what every such stage needs around
+the kernel: the in-group time order, the series-length guard and the output
+schema.
+
+Row-wise numpy work (chunk decode, embedding encode and projection, media
+decode, classifier predict) needs no grouping: ``per_batch`` runs it once
+per Arrow batch, with no shuffle, and owns the empty batches, the output
+schema and the one broadcast such a stage reads.
 
 The streaming twins (streaming/stream_rollup.py) cross the same boundary
 once per micro-batch through ``per_series_stateful``: the group's rows of
@@ -16,7 +23,7 @@ state, so batch and stream run one recurrence.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Sequence
+from typing import Any, Callable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -53,7 +60,8 @@ def per_series(df: DataFrame, by: str | Sequence[str], order: str,
     for no rows. ``schema`` is a StructType, or a sequence whose entries
     are either a column of ``df`` (copied: its type is read from
     ``df.dtypes``) or a ``"name type"`` DDL fragment. A group longer
-    than ``max_n`` raises ValueError naming ``name``.
+    than ``max_n`` raises ValueError naming ``name``, which also labels
+    the stage in query plans.
     """
     schema = _struct(df, schema)
     cols = schema.fieldNames()
@@ -66,7 +74,30 @@ def per_series(df: DataFrame, by: str | Sequence[str], order: str,
         out = kernel(_sorted(pdf, order))
         return pd.DataFrame(columns=cols) if out is None else out
 
+    run.__name__ = run.__qualname__ = name
     return _grouped(df, by).applyInPandas(run, schema)
+
+
+def per_batch(df: DataFrame, fn: Callable[..., pd.DataFrame | None],
+              schema: Schema, *, name: str, payload: Any = None) -> DataFrame:
+    """Run ``fn`` once per non-empty Arrow batch of ``df``, with no shuffle.
+
+    ``fn(pdf)`` returns a frame of ``schema``'s columns, or None for no
+    rows. With a ``payload``, it is broadcast once and ``fn(pdf, value)``
+    gets its value. Schemas resolve as in ``per_series``; ``name`` labels
+    the stage in query plans.
+    """
+    bc = None if payload is None else df.sparkSession.sparkContext.broadcast(payload)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        args = () if bc is None else (bc.value,)
+        for pdf in batches:
+            out = fn(pdf, *args) if len(pdf) else None
+            if out is not None and len(out):
+                yield out
+
+    run.__name__ = run.__qualname__ = name
+    return df.mapInPandas(run, _struct(df, schema))
 
 
 def per_series_stateful(df: DataFrame, by: str | Sequence[str], order: str,

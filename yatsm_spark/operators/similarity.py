@@ -14,9 +14,14 @@ the standard recall/cost trade for ANN at 10^9+ vectors.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from yatsm_spark import conf
+from yatsm_spark.kernel.vecmath import cosine_sims_seqfold, seq_norm
+from yatsm_spark.operators.series import per_batch
+from yatsm_spark.operators.vectors import matrix
 
 
 def _dot(a, b):
@@ -133,14 +138,9 @@ def _with_csims_broadcast(df: DataFrame, centroids, id_col: str, vec_col: str,
     the literal path. Pinned by
     tests/test_dedup_similarity.py::test_broadcast_assignment_bit_equals_literal.
     """
-    from pyspark.sql.types import (ArrayType, DoubleType, StructField,
-                                   StructType)
-
-    spark = df.sparkSession
     cids = [c[0] for c in centroids]
-    C = [list(map(float, c[1])) for c in centroids]
-    cn = [float(c[2]) for c in centroids]
-    bc = spark.sparkContext.broadcast((C, cn))
+    C = np.asarray([c[1] for c in centroids], dtype=np.float64)
+    cn = np.asarray([c[2] for c in centroids], dtype=np.float64)
 
     appended = [StructField("v", ArrayType(DoubleType()), False),
                 StructField("nrm", DoubleType(), False),
@@ -151,26 +151,17 @@ def _with_csims_broadcast(df: DataFrame, centroids, id_col: str, vec_col: str,
     )
     out_cols = [f.name for f in out_schema.fields]
 
-    def _assign(batches):
-        import numpy as np
+    def assign(pdf, codebook):
+        V = matrix(pdf[vec_col])
+        sims, vnorms = cosine_sims_seqfold(V, *codebook)
+        out = pdf.copy()
+        out["v"] = [row.tolist() for row in V]
+        out["nrm"] = vnorms
+        out["csims_raw"] = [row.tolist() for row in sims]
+        return out[out_cols]
 
-        from yatsm_spark.kernel.vecmath import cosine_sims_seqfold
-
-        Cm = np.asarray(bc.value[0], dtype=np.float64)
-        cnv = np.asarray(bc.value[1], dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            sims, vnorms = cosine_sims_seqfold(V, Cm, cnv)
-            out = pdf.copy()
-            out["v"] = [row.tolist() for row in V]
-            out["nrm"] = vnorms
-            out["csims_raw"] = [row.tolist() for row in sims]
-            yield out[out_cols]
-
-    with_raw = df.mapInPandas(_assign, schema=out_schema)
+    with_raw = per_batch(df, assign, out_schema, name="ivf_assign",
+                         payload=(C, cn))
     csims = (F.transform(F.col("csims_raw"), lambda x: F.round(x, 6))
              if round6 else F.col("csims_raw"))
     cid_arr = F.array(*[F.lit(int(c)) for c in cids])
@@ -354,10 +345,6 @@ def train_kmeans(
     feed the first three fields to :func:`ivf_index` / :func:`ivf_topk`
     via ``codebook=``.
     """
-    import numpy as np
-
-    from yatsm_spark.kernel.vecmath import seq_norm
-
     if n_iters < 1:
         raise ValueError("n_iters must be >= 1")
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))

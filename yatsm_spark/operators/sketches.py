@@ -199,15 +199,16 @@ def cms_col(value_col: str, r: int):
     return F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % CMS_WIDTH
 
 
-def cms_table(df: DataFrame, group_cols: list[str],
-              value_col: str) -> DataFrame:
-    """Exact CMS counter table: (group..., r, c, cnt). Counters merge
-    by SUM (commutative/associative), so the table is bit-identical at
-    any parallelism. One corpus shuffle with map-side partials: a map
+def cms_table(df: DataFrame, group_cols: list[str], value_col: str,
+              cell=cms_col, depth: int = CMS_DEPTH) -> DataFrame:
+    """Exact CMS counter table: (group..., r, c, cnt) over ``depth`` hash
+    rows, ``cell(value_col, r)`` being row r's counter column. Counters
+    merge by SUM (commutative/associative), so the table is bit-identical
+    at any parallelism. One corpus shuffle with map-side partials: a map
     task emits at most depth*width rows per group, not its row count."""
     cells = F.array(*[
-        F.struct(F.lit(r).alias("r"), cms_col(value_col, r).alias("c"))
-        for r in range(CMS_DEPTH)])
+        F.struct(F.lit(r).alias("r"), cell(value_col, r).alias("c"))
+        for r in range(depth)])
     return (df.filter(F.col(value_col).isNotNull())
               .select(*group_cols, F.explode(cells).alias("_cell"))
               .select(*group_cols, F.col("_cell.r").alias("r"),
@@ -218,24 +219,26 @@ def cms_table(df: DataFrame, group_cols: list[str],
 
 def _with_cms_estimate(df: DataFrame, cms: DataFrame,
                        group_cols: list[str], value_col: str,
-                       out_col: str) -> DataFrame:
+                       out_col: str, cell=cms_col,
+                       depth: int = CMS_DEPTH) -> DataFrame:
     """Append ``out_col`` = min over hash rows of the matching counter
-    (missing cell = 0). depth broadcast hash joins — the sketch is
+    (missing cell = 0) of a ``cms_table`` built with the same ``cell``
+    and ``depth``. depth broadcast hash joins — the sketch is
     bounded (groups * depth * width rows) so every join is narrow and
     shuffle-free on the probe side. ``cms`` must be materialized
     (``conf.materialize``) so the depth probes don't recompute the corpus
     aggregation once per join."""
     ests = []
-    for r in range(CMS_DEPTH):
+    for r in range(depth):
         side = (cms.filter(F.col("r") == r)
                    .select(*group_cols, F.col("c").alias(f"_c{r}"),
                            F.col("cnt").alias(f"_n{r}")))
-        df = (df.withColumn(f"_c{r}", cms_col(value_col, r))
+        df = (df.withColumn(f"_c{r}", cell(value_col, r))
                 .join(F.broadcast(side), [*group_cols, f"_c{r}"], "left"))
         ests.append(F.coalesce(F.col(f"_n{r}"), F.lit(0)))
     return (df.withColumn(out_col, F.least(*ests))
-              .drop(*[f"_c{r}" for r in range(CMS_DEPTH)],
-                    *[f"_n{r}" for r in range(CMS_DEPTH)]))
+              .drop(*[f"_c{r}" for r in range(depth)],
+                    *[f"_n{r}" for r in range(depth)]))
 
 
 def cms_estimate(df: DataFrame, group_cols: list[str],
@@ -249,30 +252,15 @@ def cms_estimate(df: DataFrame, group_cols: list[str],
     return est.select(*group_cols, value_col, "est_count")
 
 
-def _cms_col_fast(value_col: str, r: int, width: int):
-    """Fast internal counter column for hash row ``r``: JVM-native
-    xxhash64 salted by the row index, pmod'd to the width. Used only by
+def _cms_col_fast(width: int):
+    """Cell function of the fast internal sketch: hash row ``r``'s counter
+    is JVM-native xxhash64 salted by r, pmod'd to ``width``. Used only by
     the heavy-hitter PREFILTER, where the sketch never reaches the
     output (any hash family keeps the one-sided guarantee); the
     cross-engine md5 recipe of :func:`cms_col` stays the contract for
     point estimates the oracle replays."""
-    return F.pmod(F.xxhash64(F.lit(r), F.col(value_col)), F.lit(width))
-
-
-def _cms_table_fast(df: DataFrame, group_cols: list[str], value_col: str,
-                    depth: int, width: int) -> DataFrame:
-    """Counter table of the fast internal sketch (same shape/merge
-    semantics as :func:`cms_table`, xxhash64 cells, parameterized
-    depth x width)."""
-    cells = F.array(*[
-        F.struct(F.lit(r).alias("r"),
-                 _cms_col_fast(value_col, r, width).alias("c"))
-        for r in range(depth)])
-    return (df.select(*group_cols, F.explode(cells).alias("_cell"))
-              .select(*group_cols, F.col("_cell.r").alias("r"),
-                      F.col("_cell.c").alias("c"))
-              .groupBy(*group_cols, "r", "c")
-              .agg(F.count("*").alias("cnt")))
+    return lambda value_col, r: F.pmod(F.xxhash64(F.lit(r), F.col(value_col)),
+                                       F.lit(width))
 
 
 def heavy_hitters(df: DataFrame, group_cols: list[str], value_col: str,
@@ -331,19 +319,10 @@ def heavy_hitters(df: DataFrame, group_cols: list[str], value_col: str,
         return (rows.groupBy(*group_cols, value_col)
                     .agg(F.count("*").alias("cnt"))
                     .filter(F.col("cnt") >= min_count))
-    cms = _cms_table_fast(rows, group_cols, value_col, depth, width) \
-        .transform(conf.materialize)
-    ests = []
-    pre = rows
-    for r in range(depth):
-        side = (cms.filter(F.col("r") == r)
-                   .select(*group_cols, F.col("c").alias(f"_c{r}"),
-                           F.col("cnt").alias(f"_n{r}")))
-        pre = (pre.withColumn(f"_c{r}", _cms_col_fast(value_col, r, width))
-                  .join(F.broadcast(side), [*group_cols, f"_c{r}"], "left"))
-        ests.append(F.coalesce(F.col(f"_n{r}"), F.lit(0)))
-    pre = (pre.withColumn("_est", F.least(*ests))
-              .filter(F.col("_est") >= min_count))
+    cell = _cms_col_fast(width)
+    cms = conf.materialize(cms_table(rows, group_cols, value_col, cell, depth))
+    pre = _with_cms_estimate(rows, cms, group_cols, value_col, "_est",
+                             cell, depth).filter(F.col("_est") >= min_count)
     return (pre.groupBy(*group_cols, value_col)
                .agg(F.count("*").alias("cnt"))
                .filter(F.col("cnt") >= min_count))
