@@ -1,6 +1,7 @@
 """Chunk value layout (operators/codec.py): gap slots cost one presence bit
-and carry nothing else, decode rebuilds them exactly, and the encoder
-refuses a gap slot that carries a value."""
+and carry nothing else, decode rebuilds them exactly, the encoder refuses a
+gap slot that carries a value, and the mode byte names the identities a
+chunk leaves values out by."""
 
 import numpy as np
 import pandas as pd
@@ -16,7 +17,9 @@ BASE = pd.Timestamp("2025-01-01")
 @pytest.fixture(scope="module")
 def sparse(spark):
     """conv 'a': two bursts 10,000 minutes apart, a gap longer than a chunk;
-    conv 'b': three slots, one with null stats, one at the int64 limit."""
+    conv 'b': three slots, one with null stats, one at the int64 limit.
+    Every measure is i+1, so the role identity fails on every slot and the
+    2-turn identity on every non-null 2-turn slot: the explicit layout."""
     rows = []
     for conv, minutes in (("a", [0, 1, 2, 10_000, 10_001]), ("b", [5, 6, 9])):
         for i, minute in enumerate(minutes):
@@ -48,13 +51,25 @@ def test_chunk_with_zero_real_slots_round_trips(spark, sparse):
     assert all((cols[m][0] == 0).all() for m in MEASURES)
     assert all(cols[m][1].all() for m in C.STAT_COLS)
     assert not any(cols[m][1].any() for m in C.COUNT_COLS)
-    # one presence bit per slot, then per measure an empty stream:
-    # has_nulls byte + min + width
-    assert len(rows[1].val_codec) == 4096 // 8 + len(MEASURES) * 10
+    # one presence bit per slot, the mode byte, then per stored measure an
+    # empty stream (has_nulls byte + min + width): with no real slot both
+    # identities hold, so the derived role count is not stored
+    assert len(rows[1].val_codec) == 4096 // 8 + 1 + (len(MEASURES) - 1) * 10
 
     back = C.decode_chunks(dense)
     assert back.exceptAll(filled).count() == 0 and filled.exceptAll(back).count() == 0
     dense.unpersist()
+
+
+def test_chunk_mode_bytes(sparse):
+    """The mode byte follows the presence bitmap: conv 'a's first chunk
+    breaks both identities (0), its all-gap chunk holds both vacuously (3),
+    and its last chunk and conv 'b' (a 2-turn slot with null stats) keep
+    only the small-slot identity (2)."""
+    chunks = C.encode_chunks(gapfill(sparse, "1m"), "1m").orderBy("conv_id", "chunk_start")
+    modes = [(r.conv_id, r.val_codec[(r.n_points + 7) // 8]) for r in chunks.collect()]
+    assert modes == [("a", 0), ("a", C.FULL_MODE), ("a", C.SMALL_DERIVED),
+                     ("b", C.SMALL_DERIVED)]
 
 
 def _columns(n, gap):

@@ -1,9 +1,12 @@
-"""Property-based round-trip tests for the block codecs (hypothesis)."""
+"""Property-based round-trip tests for the block codecs and the chunk value
+layout (hypothesis)."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from yatsm_spark.kernel import gorilla_vec as gv
+from yatsm_spark.operators import codec as C
+from yatsm_spark.operators.rollup import MEASURES, ROLE_SPLIT, SMALL_SLOT
 
 floats = st.lists(
     st.one_of(
@@ -99,3 +102,117 @@ def test_int_stream_widths():
     vals, null = gv.decode_ints_block(gv.encode_ints_block(a))
     np.testing.assert_array_equal(vals, a)
     assert not null.any()
+
+
+# --- chunk values (operators/codec.py, layout v5) -----------------------------
+
+def _wrap(x):
+    """x as int64 with wraparound."""
+    return (x + 2**63) % 2**64 - 2**63
+
+
+OTHER, TURNS, USER, ASSISTANT = ROLE_SPLIT
+_, SUM, MIN, MAX, SUMSQ = SMALL_SLOT
+i64 = st.one_of(st.sampled_from([INT64_MIN, INT64_MAX, 0, -1, 1, 2**62, 2**32]),
+                st.integers(INT64_MIN, INT64_MAX))
+token_len = st.one_of(st.none(), st.integers(0, 10**6), i64)
+BREAKS = (OTHER, MIN, MAX, SUMSQ, "null_min", "null_max", "null_user")
+
+
+@st.composite
+def chunk_slot(draw, lens_null_together):
+    """None for a gap slot, else measure -> int or None. 1- and 2-turn slots
+    hold the moments real turns give; a 2-turn slot with one null length
+    breaks the small-slot identity, as in a rollup, unless
+    ``lens_null_together``."""
+    kind = draw(st.sampled_from(["gap", 1, 2, "many"]))
+    if kind == "gap":
+        return None
+    if kind == "many":
+        turns = draw(st.one_of(st.integers(3, 500), i64))
+        stats = [draw(token_len) for _ in range(4)]
+    else:
+        lens = [draw(token_len) for _ in range(kind)]
+        if lens_null_together and None in lens:
+            lens = []
+        lens = [x for x in lens if x is not None]
+        stats = ([_wrap(sum(lens)), min(lens), max(lens), _wrap(sum(x * x for x in lens))]
+                 if lens else [None] * 4)
+        turns = kind
+    s = dict(zip((SUM, MIN, MAX, SUMSQ), stats))
+    s[TURNS] = turns
+    s.update({m: draw(i64) for m in MEASURES if m not in s})
+    s[OTHER] = _wrap(s[TURNS] - s[USER] - s[ASSISTANT])
+    return s
+
+
+@st.composite
+def chunk(draw):
+    """A chunk's slots, of which at most one breaks an identity on purpose."""
+    slots = draw(st.lists(chunk_slot(draw(st.booleans())), max_size=60))
+    brk = draw(st.sampled_from((None,) + BREAKS))
+    s = slots[draw(st.integers(0, len(slots) - 1))] if slots else None
+    if brk is None or s is None:
+        return slots
+    if brk.startswith("null_"):
+        s[{"null_min": MIN, "null_max": MAX, "null_user": USER}[brk]] = None
+    else:
+        s[brk] = 0 if s[brk] is None else _wrap(s[brk] + 1)
+    return slots
+
+
+def _mode_that_holds(slots):
+    """The mode bits whose identities hold on every real slot, computed
+    independently of the codec with Python integers."""
+    role = small = True
+    for s in filter(None, slots):
+        t, u, a = s[TURNS], s[USER], s[ASSISTANT]
+        role &= s[OTHER] == (None if None in (t, u, a) else _wrap(t - u - a))
+        sm, lo = s[SUM], s[MIN]
+        if t == 1:
+            small &= (lo, s[MAX], s[SUMSQ]) == (
+                (None,) * 3 if sm is None else (sm, sm, _wrap(sm * sm)))
+        elif t == 2:
+            hi = None if None in (sm, lo) else _wrap(sm - lo)
+            small &= (s[MAX], s[SUMSQ]) == (
+                hi, None if hi is None else _wrap(lo * lo + hi * hi))
+    return C.ROLE_DERIVED * role | C.SMALL_DERIVED * small
+
+
+@settings(max_examples=200, deadline=None)
+@given(chunk())
+def test_chunk_values_roundtrip_and_mode(slots):
+    """Chunks mixing 1-, 2- and many-turn slots, gap slots, null stats and
+    nulls, int64 extremes, and slots that break an identity: the round trip
+    is bit-exact and the mode byte names exactly the identities that hold.
+    Null slots carry garbage values, which decode as 0."""
+    n = len(slots)
+    gap = np.array([s is None for s in slots], dtype=bool)
+    cols = {}
+    for m in MEASURES:
+        null = np.array([m in C.STAT_COLS if s is None else s[m] is None for s in slots],
+                        dtype=bool)
+        v = np.array([0 if s is None else 12345 if s[m] is None else s[m] for s in slots],
+                     dtype=np.int64)
+        cols[m] = (v, null)
+    buf = C.encode_values(gap, cols)
+    assert buf[(n + 7) // 8] == _mode_that_holds(slots)
+    back_gap, back = C.decode_values(buf, n)
+    np.testing.assert_array_equal(back_gap, gap)
+    for m in MEASURES:
+        v, null = cols[m]
+        np.testing.assert_array_equal(back[m][1], null, err_msg=m)
+        np.testing.assert_array_equal(back[m][0], np.where(null, 0, v), err_msg=m)
+
+
+def test_one_turn_square_wraps():
+    """sum = 2^62 on a 1-turn slot: sumsq = sum² wraps to 0 in int64, and
+    the slot still takes the derived layout and round-trips."""
+    s = {m: 0 for m in MEASURES}
+    s.update({TURNS: 1, ASSISTANT: 1, SUM: 2**62, MIN: 2**62, MAX: 2**62, SUMSQ: 0})
+    cols = {m: (np.array([s[m]], dtype=np.int64), np.zeros(1, dtype=bool)) for m in MEASURES}
+    buf = C.encode_values(np.zeros(1, dtype=bool), cols)
+    assert buf[1] == C.FULL_MODE
+    _, back = C.decode_values(buf, 1)
+    assert {m: int(back[m][0][0]) for m in MEASURES} == s
+    assert not any(back[m][1].any() for m in MEASURES)

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from yatsm_spark.checkpoint import CheckpointManager
 from yatsm_spark.operators.changescore import SEGMENT_SCHEMA
-from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION, decode_chunks
+from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION, FULL_MODE, decode_chunks
 from yatsm_spark.pipeline import PipelineConfig, PipelineMetrics, run_pipeline
 from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage
 from yatsm_spark.synth import generate_transcripts
@@ -96,11 +96,32 @@ def test_manifests_record_lineage_and_metrics(spark, tx, tmp_path_factory):
         assert m["rollup_1h"] == real("tier_1h")
         assert m["rollup_1d"] == real("tier_1d")
         assert m["segments"] == _bucket(spark, w, "segments", b).count()
-        assert m["chunks_1m"] == _bucket(spark, w, "chunks_1m", b).count()
+        chunks = _bucket(spark, w, "chunks_1m", b).collect()
+        assert m["chunks_1m"] == len(chunks)
+        assert m["chunks_1m_underived"] == sum(
+            r.val_codec[(r.n_points + 7) // 8] != FULL_MODE for r in chunks)
         for t in ("tier_1m", "tier_1h", "tier_1d", "segments", "chunks_1m"):
             nbytes, nfiles = _on_disk(w, t, b)
             assert nfiles >= 1 and nbytes > 0, t
             assert (m[f"bytes_{t}"], m[f"files_{t}"]) == (nbytes, nfiles), t
+
+
+def test_rollup_chunks_all_take_the_derived_layout(spark, tmp_path):
+    """Over the bundled sf0.001 transcripts every chunk a run writes leaves
+    out the values the moment identities give (codec.py): the manifest
+    counts 0 chunks with another mode byte, and the chunks decode to
+    tier_1m."""
+    w = str(tmp_path)
+    tx = spark.read.parquet(os.path.join(os.path.dirname(__file__), os.pardir, "data",
+                                         "transcripts_sf0.001.parquet"))
+    cfg = PipelineConfig(workdir=w, n_buckets=1, compress=True, segments=False)
+    run_pipeline(spark, tx, cfg, resume=False)
+    (m,) = CheckpointManager(w).manifests("bucket")
+    assert m["chunks_1m"] > 0
+    assert m["chunks_1m_underived"] == 0
+    tier = _table(spark, w, "tier_1m")
+    back = decode_chunks(_table(spark, w, "chunks_1m"))
+    assert back.exceptAll(tier).count() == 0 and tier.exceptAll(back).count() == 0
 
 
 def test_changed_input_invalidates_bucket(spark, tx, tmp_path_factory):

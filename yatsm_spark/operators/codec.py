@@ -11,19 +11,41 @@ ts_codec is the delta-of-delta timestamp block of EVERY slot's epoch, gap
 slots included, so chunks of a sparse tier (densify=False) keep their own
 slot grid.
 
-val_codec layout (CHUNK_FORMAT_VERSION 4):
+val_codec layout (CHUNK_FORMAT_VERSION 5):
     [presence: n_points bits, byte-padded]   1 = real slot (not gap_filled)
-    then, for each measure in rollup.MEASURES order, one nullable-int64
-    stream (kernel/gorilla_vec.py) over the REAL slots only.
+    [mode: 8 bits]                           which identities the chunk uses
+    then one nullable-int64 stream (kernel/gorilla_vec.py) per stored
+    measure, over REAL slots only: turn_count's first, then the others in
+    rollup.MEASURES order.
 A gap slot carries no information — counts 0, stats null, gap_filled
 true — so it costs its presence bit and nothing else. Which measures are
 counts and which are stats comes from each moment's gap value in
 rollup.MOMENTS (COUNT_COLS / STAT_COLS below). The encoder checks
 that precondition (ValueError otherwise) and decode rebuilds the gap
-slots. Each stream's length follows from the real-slot count, so streams
-are concatenated without length prefixes. The int streams are exact over
-the FULL int64 range (the float path is exact only below 2^53, round-1
-ADVICE).
+slots. Each stream's length follows from the real-slot count and the
+mode, so streams are concatenated without length prefixes. The int
+streams are exact over the FULL int64 range (the float path is exact only
+below 2^53, round-1 ADVICE).
+
+The mode bits name exact identities (rollup.ROLE_SPLIT, rollup.SMALL_SLOT),
+computed in int64 with wraparound; a derived value is null when one of its
+operands is:
+    bit 0  every real slot: other roles = turns - user - assistant. The
+           other-role stream is left out.
+    bit 1  every real 1-turn slot: min = max = sum, sumsq = sum²; every real
+           2-turn slot: max = sum - min, sumsq = min² + max². The min stream
+           covers only the real slots whose turn count is not 1, the max
+           and sumsq streams only those whose turn count is neither 1 nor 2
+           (3 or more in a rollup).
+The encoder sets a bit when its identity holds on every slot it covers,
+nulls included (a 1-turn slot with a null sum has all four stats null).
+A chunk that breaks one stores those streams in full, so any int64 input
+still round-trips bit-exactly. A reader decodes turn_count first and takes
+each subset stream's ranks from its slot mask (a cumulative sum); every
+stream keeps one fixed bit width. Chunks of a rollup tier have mode 3
+(FULL_MODE) unless a turn's role is null or a 2-turn slot has exactly one
+null token length; a pipeline bucket manifest counts the other chunks as
+``chunks_1m_underived``.
 
 Bounded chunks (default 4096 points ≈ 2.8 days of 1m) keep a mega-conv from
 producing one giant row; each conv's slots reach the encoder in epoch order
@@ -34,12 +56,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from yatsm_spark.kernel import gorilla_vec as g_vec
 from yatsm_spark.kernel.gapfill import gapfill_slots
-from yatsm_spark.operators.rollup import MEASURES, MOMENTS, TIERS
+from yatsm_spark.operators.rollup import (MEASURES, MOMENTS, ROLE_SPLIT,
+                                          SMALL_SLOT, TIERS)
 from yatsm_spark.operators.series import per_batch, per_series
 
 COUNT_COLS = [m.name for m in MOMENTS if m.gap == 0]
@@ -48,7 +71,7 @@ STAT_COLS = [m.name for m in MOMENTS if m.gap is None]
 #: Bumped whenever the persisted chunk byte layout changes; folded into the
 #: pipeline's per-bucket checkpoint fingerprint so a resumed workdir written
 #: by a different format re-encodes instead of mixing layouts.
-CHUNK_FORMAT_VERSION = 4
+CHUNK_FORMAT_VERSION = 5
 
 #: Slots per chunk row: the pipeline's chunk size and the bound that
 #: ``routing.route_range`` prunes chunk scans with.
@@ -75,13 +98,75 @@ ROLLUP_SCHEMA = T.StructType(
 Columns = dict[str, tuple[np.ndarray, np.ndarray]]
 
 
+#: val_codec mode bits (layout in the module docstring).
+ROLE_DERIVED = 0b01
+SMALL_DERIVED = 0b10
+FULL_MODE = ROLE_DERIVED | SMALL_DERIVED
+
+_OTHER, _TURNS, _USER, _ASSISTANT = ROLE_SPLIT
+_SUM, _MIN, _MAX, _SUMSQ = SMALL_SLOT[1:]
+#: the measures each mode bit derives
+_DERIVED = {ROLE_DERIVED: (_OTHER,), SMALL_DERIVED: (_MIN, _MAX, _SUMSQ)}
+
+
+def _small_slots(turns: tuple[np.ndarray, np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """(1-turn, 2-turn) masks of real slots; a null turn count (value 0)
+    is neither."""
+    v, _ = turns
+    return v == 1, v == 2
+
+
+def _streams(mode: int, turns: tuple[np.ndarray, np.ndarray]) -> dict[str, np.ndarray]:
+    """Stored measure -> the real slots its stream covers, in stream order
+    (turn_count first). A measure that is not a key is not stored."""
+    every = np.ones(len(turns[0]), dtype=bool)
+    out = {_TURNS: every} | {m: every for m in MEASURES if m != _TURNS}
+    if mode & ROLE_DERIVED:
+        del out[_OTHER]
+    if mode & SMALL_DERIVED:
+        one, two = _small_slots(turns)
+        out[_MIN] = ~one
+        out[_MAX] = out[_SUMSQ] = ~(one | two)
+    return out
+
+
+def _rebuild(cols: Columns, mode: int) -> None:
+    """Overwrite, in the real-slot columns, the values that ``mode``'s
+    identities give (int64 with wraparound; null when an operand is null,
+    0 at null slots)."""
+    def put(m, mask, v, null):
+        cols[m][0][mask] = np.where(null, 0, v)[mask]
+        cols[m][1][mask] = null[mask]
+
+    if mode & SMALL_DERIVED:
+        one, two = _small_slots(cols[_TURNS])
+        s, s_null = cols[_SUM]
+        put(_MIN, one, s, s_null)
+        put(_MAX, one, s, s_null)
+        put(_SUMSQ, one, s * s, s_null)
+        lo, lo_null = cols[_MIN]
+        put(_MAX, two, s - lo, s_null | lo_null)
+        hi, hi_null = cols[_MAX]
+        put(_SUMSQ, two, lo * lo + hi * hi, hi_null)
+    if mode & ROLE_DERIVED:
+        (t, t_null), (u, u_null), (a, a_null) = cols[_TURNS], cols[_USER], cols[_ASSISTANT]
+        put(_OTHER, np.ones(len(t), dtype=bool), t - u - a, t_null | u_null | a_null)
+
+
 def encode_values(gap: np.ndarray, cols: Columns) -> bytes:
     """One chunk's val_codec (layout in the module docstring)."""
     real = ~gap
-    parts = [np.packbits(real).tobytes()]
-    for m in MEASURES:
-        v, null = cols[m]
-        parts.append(g_vec.encode_int_stream(v[real], null[real]))
+    real_cols = {m: (np.where(null, 0, v)[real], null[real]) for m, (v, null) in cols.items()}
+    mode = 0
+    for bit, derived in _DERIVED.items():
+        trial = real_cols | {m: tuple(a.copy() for a in real_cols[m]) for m in derived}
+        _rebuild(trial, bit)
+        if all(np.array_equal(trial[m][i], real_cols[m][i]) for m in derived for i in (0, 1)):
+            mode |= bit
+    parts = [np.packbits(real).tobytes(), bytes([mode])]
+    for m, cover in _streams(mode, real_cols[_TURNS]).items():
+        v, null = real_cols[m]
+        parts.append(g_vec.encode_int_stream(v[cover], null[cover]))
     return b"".join(parts)
 
 
@@ -91,17 +176,35 @@ def decode_values(buf: bytes, n: int) -> tuple[np.ndarray, Columns]:
     nb = (n + 7) // 8
     real = np.unpackbits(np.frombuffer(buf, np.uint8, nb), count=n).astype(bool)
     k = int(real.sum())
-    pos = nb
+    mode = buf[nb]
+    v, null, pos = g_vec.decode_int_stream(buf, nb + 1, k)
+    real_cols = {_TURNS: (v, null)}
+    for m, cover in _streams(mode, real_cols[_TURNS]).items():
+        if m == _TURNS:
+            continue
+        v, null, pos = g_vec.decode_int_stream(buf, pos, int(cover.sum()))
+        vals, nulls = np.zeros(k, dtype=np.int64), np.zeros(k, dtype=bool)
+        vals[cover], nulls[cover] = v, null
+        real_cols[m] = (vals, nulls)
+    assert pos == len(buf)
+    for m in MEASURES:
+        real_cols.setdefault(m, (np.zeros(k, dtype=np.int64), np.zeros(k, dtype=bool)))
+    _rebuild(real_cols, mode)
     cols = {}
     for m in MEASURES:
-        v, null, pos = g_vec.decode_int_stream(buf, pos, k)
         vals = np.zeros(n, dtype=np.int64)
-        vals[real] = v
+        vals[real] = real_cols[m][0]
         nulls = np.full(n, m in STAT_COLS)
-        nulls[real] = null
+        nulls[real] = real_cols[m][1]
         cols[m] = (vals, nulls)
-    assert pos == len(buf)
     return ~real, cols
+
+
+def count_underived() -> Column:
+    """Aggregate: chunk rows whose mode byte, the byte after the presence
+    bitmap, is not FULL_MODE. Reads the byte without decoding."""
+    mode = F.col("val_codec").substr(F.ceil(F.col("n_points") / 8).cast("int") + 1, F.lit(1))
+    return F.count_if(mode != F.lit(bytes([FULL_MODE])))
 
 
 def chunk_rows(conv_id: str, tier: str, epochs: np.ndarray, gap: np.ndarray,

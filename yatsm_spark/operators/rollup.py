@@ -77,6 +77,16 @@ MOMENTS = (
 
 MEASURES = [m.name for m in MOMENTS]
 
+#: Exact identities between one slot's moments, in int64 with wraparound
+#: like the sums themselves. The chunk codec (operators/codec.py) leaves out
+#: the values they give.
+#: Every slot: role_other_count = turn_count - role_user_count - role_assistant_count.
+ROLE_SPLIT = ("role_other_count", "turn_count", "role_user_count", "role_assistant_count")
+#: A 1-turn slot: min = max = sum, sumsq = sum²; a 2-turn slot: max = sum - min,
+#: sumsq = min² + max² (listed as turn_count, then sum, min, max, sumsq).
+SMALL_SLOT = ("turn_count", "token_len_sum", "token_len_min", "token_len_max",
+              "token_len_sumsq")
+
 
 def turn_moments() -> list[Column]:
     """Each moment's value for one turn (a select list over measures)."""

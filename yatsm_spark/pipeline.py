@@ -45,7 +45,8 @@ from yatsm_spark.ingest import with_measures
 from yatsm_spark.operators import rollup as R
 from yatsm_spark.operators.cascade import cascade
 from yatsm_spark.operators.changescore import change_scores, CONV_PARAMS
-from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION, encode_chunks
+from yatsm_spark.operators.codec import (CHUNK_FORMAT_VERSION, count_underived,
+                                         encode_chunks)
 from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage, with_bucket
 
 #: Every table a bucket run can write; one run writes the tiers and the
@@ -230,7 +231,8 @@ def run_pipeline(
 
             if cfg.compress:
                 write(encode_chunks(sparse, "1m", densify=True),
-                      "chunks_1m", chunks_1m=count)
+                      "chunks_1m", chunks_1m=count,
+                      chunks_1m_underived=count_underived())
 
             for df in cached:
                 df.unpersist()
