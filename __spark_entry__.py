@@ -578,7 +578,7 @@ def q_tx_route_chunks(spark, sf_dir):
     wm, evict_cutoff = "2025-01-20 00:00:00", "2025-01-15 00:00:00"
     m = with_measures(_tx(spark, sf_dir))
     t1m = rollup_from_turns(m.where(F.col("ts") < F.lit(wm)), "1m")
-    chunks = encode_chunks(t1m, "1m", densify=True)
+    chunks = encode_chunks(t1m, "1m")
     live_1m = t1m.where(F.col("window_start") >= F.lit(evict_cutoff))
     tiers = {"1m": live_1m, "1h": cascade(t1m, "1m", "1h"),
              "1d": cascade(t1m, "1m", "1d")}
@@ -598,9 +598,7 @@ def q_tx_compact(spark, sf_dir):
     wm, evict_cutoff = "2025-01-20 00:00:00", "2025-01-15 00:00:00"
     m = with_measures(_tx(spark, sf_dir))
     t1m = rollup_from_turns(m.where(F.col("ts") < F.lit(wm)), "1m")
-    chunks = compact_chunks(
-        encode_chunks(t1m, "1m", chunk_points=256, densify=True),
-        chunk_points=4096)
+    chunks = compact_chunks(encode_chunks(t1m, "1m", chunk_points=256))
     live_1m = t1m.where(F.col("window_start") >= F.lit(evict_cutoff))
     tiers = {"1m": live_1m, "1h": cascade(t1m, "1m", "1h"),
              "1d": cascade(t1m, "1m", "1d")}

@@ -211,8 +211,8 @@ def main():
             rollup_path()
             # re-read AFTER the overwrite (file listings are cached per DF)
             sparse = spark.read.parquet(f"{work}/sparse_1m")
-            sink(change_scores(sparse, densify=True))
-            sink(encode_chunks(sparse, "1m", densify=True))
+            sink(change_scores(sparse))
+            sink(encode_chunks(sparse, "1m"))
 
         emit("engine_job_full_wall", timed("engine_job_full", full_job))
         return
@@ -226,8 +226,8 @@ def main():
     sparse_cached.count()
     timed("gapfill_from_cached", lambda: sink(gapfill(sparse_cached, "1m")))
     timed("cascade_from_cached_1m", lambda: sink(cascade(sparse_cached, "1m", "1h")))
-    timed("segments_ccdc", lambda: sink(change_scores(sparse_cached, densify=True)))
-    timed("gorilla_encode", lambda: sink(encode_chunks(sparse_cached, "1m", densify=True)))
+    timed("segments_ccdc", lambda: sink(change_scores(sparse_cached)))
+    timed("gorilla_encode", lambda: sink(encode_chunks(sparse_cached, "1m")))
     sparse_cached.unpersist()
 
     # CMS-accelerated exact heavy hitters over the FULL bench transcripts

@@ -123,7 +123,7 @@ def deriv_full(spark, tx):
 def segments_ccdc(spark, tx):
     from yatsm_spark.operators.changescore import change_scores
 
-    return change_scores(_tier(tx), densify=True)
+    return change_scores(_tier(tx))
 
 
 @probe
@@ -148,7 +148,7 @@ def segments_trivial_kernel(spark, tx):
 def gorilla_encode(spark, tx):
     from yatsm_spark.operators.codec import encode_chunks
 
-    return encode_chunks(_tier(tx), "1m", densify=True)
+    return encode_chunks(_tier(tx), "1m")
 
 
 @probe

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_plans import plan_of
 from yatsm_spark.api import Engine
 from yatsm_spark.synth import generate_transcripts
 
@@ -20,7 +21,7 @@ def test_explain_conv_pushes_down_and_returns_series(engine):
     assert series.select("conv_id").distinct().count() == 1
     assert "token_len_avg" in series.columns
     # predicate reaches the scan: single-conv plan must not aggregate others
-    plan = series._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(lambda: engine.explain_conv("conv00000006")["series"], "simple")
     assert "conv00000006" in plan
     segs = out["segments"]
     assert segs.filter(F.col("conv_id") != "conv00000006").count() == 0

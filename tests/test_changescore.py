@@ -89,20 +89,20 @@ def test_chunks_roundtrip_exactly(spark, filled):
 
 
 def test_sparse_densify_paths_equal_dense(spark, filled):
-    """The scale path (sparse input + in-kernel densify) must be
-    indistinguishable from feeding the gap-filled tier."""
+    """The scale path (sparse input, reindexed in the kernel) must be
+    indistinguishable from feeding the gap-filled tier to the same call."""
     from pyspark.sql import functions as F
 
     from yatsm_spark.operators.cascade import cascade
 
     sparse = filled.filter(~F.col("gap_filled"))
     a = change_scores(filled, "turn_count", CONV_PARAMS).orderBy("conv_id", "segment_id").toPandas()
-    b = change_scores(sparse, "turn_count", CONV_PARAMS, densify=True) \
+    b = change_scores(sparse, "turn_count", CONV_PARAMS) \
         .orderBy("conv_id", "segment_id").toPandas()
     pd.testing.assert_frame_equal(a, b)
 
     ca = encode_chunks(filled, "1m", chunk_points=512)
-    cb = encode_chunks(sparse, "1m", chunk_points=512, densify=True)
+    cb = encode_chunks(sparse, "1m", chunk_points=512)
     assert ca.exceptAll(cb).count() == 0
     assert cb.exceptAll(ca).count() == 0
 
@@ -202,7 +202,7 @@ def test_compact_chunks_decode_identical_and_fewer_rows(spark, filled):
     from yatsm_spark.operators.codec import compact_chunks
 
     small = encode_chunks(filled, "1m", chunk_points=64).cache()
-    big = compact_chunks(small, chunk_points=4096).cache()
+    big = compact_chunks(small).cache()
 
     n_small, n_big = small.count(), big.count()
     assert n_big < n_small
@@ -222,6 +222,6 @@ def test_compact_chunks_decode_identical_and_fewer_rows(spark, filled):
     # chunk invariants survive: bounded size, starts align with slots
     assert big.filter("n_points > 4096").count() == 0
     # compaction is idempotent at the same target
-    again = compact_chunks(big, chunk_points=4096)
+    again = compact_chunks(big)
     assert big.exceptAll(again).count() == 0
     assert again.exceptAll(big).count() == 0

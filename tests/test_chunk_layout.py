@@ -1,7 +1,8 @@
 """Chunk value layout (operators/codec.py): gap slots cost one presence bit
 and carry nothing else, decode rebuilds them exactly, the encoder refuses a
-gap slot that carries a value, and the mode byte names the identities a
-chunk leaves values out by."""
+gap slot that carries a value, the mode byte names the identities a chunk
+leaves values out by, and a chunk is one run of at most CHUNK_POINTS
+consecutive slots."""
 
 import numpy as np
 import pandas as pd
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 
 from yatsm_spark.operators import codec as C
 from yatsm_spark.operators.rollup import MEASURES, gapfill
+from yatsm_spark.operators.routing import route_range
 
 BASE = pd.Timestamp("2025-01-01")
 
@@ -39,8 +41,8 @@ def sparse(spark):
 def test_chunk_with_zero_real_slots_round_trips(spark, sparse):
     filled = gapfill(sparse, "1m")
     dense = C.encode_chunks(filled, "1m").cache()
-    # the scale path (sparse input, densified in the kernel) writes the same rows
-    densified = C.encode_chunks(sparse, "1m", densify=True)
+    # the scale path (sparse input, reindexed in the kernel) writes the same rows
+    densified = C.encode_chunks(sparse, "1m")
     assert dense.exceptAll(densified).count() == 0
     assert densified.exceptAll(dense).count() == 0
 
@@ -107,3 +109,35 @@ def test_encode_chunks_rejects_stat_on_gap_row(spark, sparse):
     assert bad.filter("gap_filled AND token_len_max IS NOT NULL").count() == 1
     with pytest.raises(Exception, match="gap_filled slots carry values"):
         C.encode_chunks(bad, "1m").collect()
+
+
+def test_chunks_hold_at_most_chunk_points(spark, sparse):
+    """CHUNK_POINTS bounds every chunk the codec writes, which is what the
+    router prunes chunk scans by: a longer chunk is refused, not written."""
+    with pytest.raises(ValueError, match="CHUNK_POINTS"):
+        C.encode_chunks(sparse, "1m", chunk_points=C.CHUNK_POINTS + 1)
+    epochs = np.arange(4, dtype=np.int64) * 60
+    gap = np.zeros(4, dtype=bool)
+    with pytest.raises(ValueError, match="CHUNK_POINTS"):
+        C.chunk_rows("c", "1m", epochs, gap, _columns(4, gap), C.CHUNK_POINTS + 1)
+
+
+def test_compaction_keeps_chunks_on_the_slot_grid(spark, sparse):
+    """Chunks encoded apart (conv 'a's two bursts) compact into one chunk
+    per run of consecutive slots, never one spanning the break, decode to
+    the same rows and serve a routed read of the second run."""
+    early = F.col("window_start") < F.lit(BASE + pd.Timedelta(minutes=100))
+    apart = C.encode_chunks(sparse.where(early), "1m", chunk_points=2) \
+        .unionByName(C.encode_chunks(sparse.where(~early), "1m", chunk_points=2))
+    compacted = C.compact_chunks(apart)
+    got = [(r.conv_id, r.chunk_start, r.n_points)
+           for r in compacted.orderBy("conv_id", "chunk_start").collect()]
+    assert got == [("a", BASE.to_pydatetime(), 3),
+                   ("a", (BASE + pd.Timedelta(minutes=10_000)).to_pydatetime(), 2),
+                   ("b", (BASE + pd.Timedelta(minutes=5)).to_pydatetime(), 5)]
+    a, b = C.decode_chunks(apart), C.decode_chunks(compacted)
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    # a chunk spanning the break would be pruned from a read of its tail
+    got = route_range({"1m": sparse.where("false")}, BASE + pd.Timedelta(minutes=10_000),
+                      BASE + pd.Timedelta(minutes=10_002), chunks=compacted).collect()
+    assert [(r.conv_id, r.turn_count) for r in got] == [("a", 4 + 5)]

@@ -9,6 +9,7 @@ offsets contiguous, shards independent).
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_plans import plan_of
 from yatsm_spark.operators.decontam import decontaminate
 from yatsm_spark.operators.packing import chunk_documents, pack_documents
 
@@ -77,8 +78,7 @@ def test_decontaminate_short_docs_clean(spark, bench):
 
 
 def test_decontaminate_bench_side_broadcast(train, bench):
-    plan = decontaminate(train, bench, n=3)._jdf.queryExecution() \
-        .executedPlan().toString()
+    plan = plan_of(lambda: decontaminate(train, bench, n=3), "simple")
     assert "BroadcastHashJoin" in plan
 
 
@@ -110,8 +110,7 @@ def test_chunk_hand_computed(spark):
 def test_chunk_plan_is_shuffle_free(spark):
     docs = spark.createDataFrame(
         [(0, "a b c", "s0")], "doc_id long, text string, source string")
-    plan = chunk_documents(docs, 8)._jdf.queryExecution() \
-        .executedPlan().toString()
+    plan = plan_of(lambda: chunk_documents(docs, 8), "simple")
     assert "Exchange" not in plan and "EvalPython" not in plan
 
 
@@ -294,8 +293,7 @@ def test_decontaminate_fuzzy_threshold_gates(train, bench):
 def test_decontaminate_fuzzy_bench_side_broadcast(train, bench):
     from yatsm_spark.operators.decontam import decontaminate_fuzzy
 
-    plan = decontaminate_fuzzy(train, bench)._jdf.queryExecution() \
-        .executedPlan().toString()
+    plan = plan_of(lambda: decontaminate_fuzzy(train, bench), "simple")
     assert "BroadcastHashJoin" in plan
 
 

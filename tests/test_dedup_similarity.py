@@ -5,6 +5,7 @@ cap-consistency (sizes and intersections on the same shingle universe)."""
 import pytest
 from pyspark.sql import Row, functions as F
 
+from tests.test_plans import plan_of
 from yatsm_spark.operators.dedup import (
     minhash_candidates,
     ngram_jaccard_pairs,
@@ -190,15 +191,15 @@ def test_ivf_auto_method_thresholds(spark):
     from yatsm_spark.operators import similarity as S
 
     emb = _emb_corpus(spark)  # dim 16
-    small, _ = S.ivf_index(emb, n_centroids=8, method="auto")      # 128 doubles
-    plan_small = small._jdf.queryExecution().executedPlan().toString()
+    plan_small = plan_of(lambda: S.ivf_index(emb, n_centroids=8, method="auto")[0],
+                         "simple")                                 # 128 doubles
     assert "MapInPandas" not in plan_small
 
     old = S.LITERAL_CODEBOOK_MAX_DOUBLES
     S.LITERAL_CODEBOOK_MAX_DOUBLES = 64
     try:
-        big, _ = S.ivf_index(emb, n_centroids=8, method="auto")    # 128 > 64
-        plan_big = big._jdf.queryExecution().executedPlan().toString()
+        plan_big = plan_of(lambda: S.ivf_index(emb, n_centroids=8, method="auto")[0],
+                           "simple")                               # 128 > 64
         assert "MapInPandas" in plan_big
     finally:
         S.LITERAL_CODEBOOK_MAX_DOUBLES = old

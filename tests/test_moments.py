@@ -79,7 +79,7 @@ def _producers(spark, tmp_path):
         "route_range": route_range(
             {"1m": sparse, "1h": h1}, dt.datetime(2025, 1, 2, 0, 30, tzinfo=UTC),
             dt.datetime(2025, 1, 22, 2, 3, tzinfo=UTC), fresh_measures=m,
-            watermark=wm, chunks=encode_chunks(sparse, "1m", densify=True)),
+            watermark=wm, chunks=encode_chunks(sparse, "1m")),
         "decode_chunks": decode_chunks(encode_chunks(filled, "1m")),
         "stream_rollup_1m": stream_rollup_1m(stream),
     }

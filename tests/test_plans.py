@@ -66,8 +66,8 @@ class Plans:
             "rollup_1m_only": lambda: r1,
             "gapfill_1m": lambda: gapfill(r1, "1m"),
             "cascade_1m_1h": lambda: cascade(r1, "1m", "1h"),
-            "segments_ccdc": lambda: change_scores(r1, densify=True),
-            "gorilla_encode": lambda: encode_chunks(r1, "1m", densify=True),
+            "segments_ccdc": lambda: change_scores(r1),
+            "gorilla_encode": lambda: encode_chunks(r1, "1m"),
             "heavy_hitters_cms": lambda: heavy_hitters(self.tx, ["role"], "conv_id", 600),
             "single_conv": lambda: self.tx.where(F.col("conv_id") == "conv00000007"),
             "routed_tiers": self._routed_tiers,
@@ -102,7 +102,7 @@ class Plans:
 
     def _routed_chunks(self):
         d, tiers = self.workdir, self._tiers
-        encode_chunks(tiers["1m"], "1m", densify=True) \
+        encode_chunks(tiers["1m"], "1m") \
             .write.mode("overwrite").parquet(f"{d}/chunks")
         live = {**tiers, "1m": tiers["1m"].where(F.col("window_start") >= "2025-01-15")}
         return route_range(live, "2025-01-02 00:30:00", "2025-01-22 02:03:00",

@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_plans import plan_of
 from yatsm_spark.operators.ranking import (
     bm25_scores,
     bm25_topk,
@@ -101,8 +102,7 @@ def test_bm25_plan_filters_before_shuffle(docs):
     """The query-term isin filter must land below the first exchange —
     only query-term postings may shuffle — and top-k must compile to
     TakeOrderedAndProject, not a global Sort exchange."""
-    plan = bm25_topk(docs, ["apple"], k=3)._jdf.queryExecution() \
-        .executedPlan().toString()
+    plan = plan_of(lambda: bm25_topk(docs, ["apple"], k=3), "simple")
     assert "TakeOrderedAndProject" in plan
     pre_shuffle = plan[plan.index("Exchange"):]
     assert "apple" in pre_shuffle  # the literal rides below every exchange
@@ -112,8 +112,7 @@ def test_sample_hash_membership_and_no_shuffle(docs):
     kept = sorted(r.doc_id for r in sample_hash(docs, rate=0.5).collect())
     want = [i for i, _, _ in CORPUS if (i * _KNUTH) % _MOD < (1 << 31)]
     assert kept == want
-    plan = sample_hash(docs, rate=0.5)._jdf.queryExecution() \
-        .executedPlan().toString()
+    plan = plan_of(lambda: sample_hash(docs, rate=0.5), "simple")
     assert "Exchange" not in plan
     with pytest.raises(ValueError):
         sample_hash(docs, rate=1.5)
@@ -272,8 +271,7 @@ def test_global_shuffle_plan_has_no_global_window(spark):
     from yatsm_spark.operators.sampling import global_shuffle
 
     df = spark.createDataFrame([(i,) for i in range(50)], "doc_id long")
-    plan = global_shuffle(df, n_parts=4)._jdf.queryExecution() \
-        .executedPlan().toString().lower()
+    plan = plan_of(lambda: global_shuffle(df, n_parts=4), "simple").lower()
     # the rank window is PARTITIONED by the range-partition id (parallel),
     # and nothing in the plan collapses to a single partition
     assert "windowspecdefinition(_part" in plan

@@ -135,7 +135,7 @@ def test_route_range_serves_evicted_history_from_chunks(spark):
     m = with_measures(tx)
     wm = dt.datetime(2025, 1, 20, 0, 0, tzinfo=UTC)
     t1m = rollup_from_turns(m.where(F.col("ts") < "2025-01-20"), "1m").cache()
-    chunks = encode_chunks(t1m, "1m", densify=True).cache()
+    chunks = encode_chunks(t1m, "1m").cache()
     chunks.count()
     # evict fine rows older than Jan 15 — they now exist ONLY in chunks;
     # [Jan 15, Jan 20) is double-covered (live + compressed)
@@ -161,3 +161,27 @@ def test_route_range_serves_evicted_history_from_chunks(spark):
               "token_len_max", "token_len_sumsq"):
         assert (got[c].astype("Int64") == want[c].astype("Int64")).all(), c
     tx.unpersist(); t1m.unpersist(); chunks.unpersist()
+
+
+def test_route_range_chunk_prune_admits_every_chunk_a_slice_needs(spark):
+    """A conv of 10,000 one-turn minutes in CHUNK_POINTS chunks (starting
+    at minutes 0, 4096 and 8192) with its 1m rows before minute 9,000
+    evicted: each range, inside one chunk or across a chunk boundary and
+    the eviction cutoff, counts exactly its minutes."""
+    from yatsm_spark.operators.codec import encode_chunks
+
+    base = 1_735_689_600
+    ones = {m: 1 for m in MEASURES} | {"role_assistant_count": 0,
+                                       "role_other_count": 0, "tool_call_count": 0}
+    t1m = spark.range(10_000).select(
+        F.lit("c").alias("conv_id"),
+        F.timestamp_seconds(F.lit(base) + F.col("id") * 60).alias("window_start"),
+        *(F.lit(ones[m]).cast("long").alias(m) for m in MEASURES),
+        F.lit(False).alias("gap_filled")).cache()
+    chunks = encode_chunks(t1m, "1m").cache()
+    assert sorted(r.n_points for r in chunks.collect()) == [1808, 4096, 4096]
+    live = {"1m": t1m.where(F.col("window_start")
+                            >= F.timestamp_seconds(F.lit(base + 9000 * 60)))}
+    for lo, hi in ((6030, 6300), (4000, 4200), (4095, 4100), (4096, 4100), (8000, 9100)):
+        got = route_range(live, base + lo * 60, base + hi * 60, chunks=chunks).collect()
+        assert [(r.conv_id, r.turn_count) for r in got] == [("c", hi - lo)], (lo, hi)

@@ -69,7 +69,7 @@ OPS = {
     "change_scores_multi": lambda t, ch, d: changescore.change_scores_multi(
         t, ["turn_count", "token_len_sum"]),
     "encode_chunks": lambda t, ch, d: codec.encode_chunks(t, "1m", chunk_points=16),
-    "compact_chunks": lambda t, ch, d: codec.compact_chunks(ch, chunk_points=16),
+    "compact_chunks": lambda t, ch, d: codec.compact_chunks(ch),
     "pack_documents": lambda t, ch, d: packing.pack_documents(d, 8, n_shards=2),
 }
 CCDC_OPS = {"change_scores", "change_scores_post", "change_scores_multi"}

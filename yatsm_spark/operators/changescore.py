@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from yatsm_spark.kernel.ccdc import CCDCParams, ccdc_fit
+from yatsm_spark.kernel.gapfill import gapfill_slots
 from yatsm_spark.operators.series import per_series
 
 SEGMENT_SCHEMA = T.StructType([
@@ -107,13 +108,12 @@ def _conv_series(filled: DataFrame, measures: list[str]) -> DataFrame:
     return filled.select("conv_id", "window_start", *measures)
 
 
-def _fit_input(pdf: pd.DataFrame, measures: list[str], densify: bool,
-               step_seconds: int) -> tuple[np.ndarray, np.ndarray]:
-    """One conv's time-sorted slots -> (t in days, Y[measure, slot]) over
-    the slots where every measure is present: count measures without nulls
-    travel as int64 (0-filled by densify), the rest as float (NaN-filled);
-    densify=True reindexes onto the dense slot grid first. NaN slots are
-    dropped because the CCDC kernel fits a garbage segment to NaN input."""
+def _fit_input(pdf: pd.DataFrame, measures: list[str], step: int) -> tuple[np.ndarray, np.ndarray]:
+    """One conv's time-sorted slots, sparse or gap-filled -> (t in days,
+    Y[measure, slot]) on its dense slot grid, over the slots where every
+    measure is present: count measures without nulls travel as int64
+    (0-filled), the rest as float (NaN-filled). NaN slots are dropped
+    because the CCDC kernel fits a garbage segment to NaN input."""
     # datetime64 unit varies (ns via Arrow, us elsewhere) — normalize to
     # epoch seconds explicitly; slots are whole minutes so this is exact.
     epochs = pdf["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
@@ -121,14 +121,9 @@ def _fit_input(pdf: pd.DataFrame, measures: list[str], densify: bool,
     for m in measures:
         a = pdf[m].to_numpy(dtype=np.float64, na_value=np.nan)
         cols[m] = a.astype(np.int64) if m.endswith("_count") and not np.isnan(a).any() else a
-    if densify:
-        from yatsm_spark.kernel.gapfill import gapfill_slots
-
-        dense = gapfill_slots(epochs, cols, step=step_seconds)
-        epochs = dense["slot_epoch"]
-        cols = {m: dense[m] for m in measures}
-    Y = np.vstack([np.asarray(cols[m], dtype=np.float64) for m in measures])
-    t = epochs / 86400.0
+    dense = gapfill_slots(epochs, cols, step=step)
+    Y = np.vstack([np.asarray(dense[m], dtype=np.float64) for m in measures])
+    t = dense["slot_epoch"] / 86400.0
     ok = ~np.isnan(Y).any(axis=0)
     return t[ok], Y[:, ok]
 
@@ -174,21 +169,19 @@ def change_scores(
     filled: DataFrame,
     measure: str = "turn_count",
     params: CCDCParams | None = None,
-    densify: bool = False,
     step_seconds: int = 60,
     phenology: bool = False,
 ) -> DataFrame:
-    """Segments table from a rollup tier.
+    """Segments table from a rollup tier, sparse or gap-filled.
 
     measure: any rollup column; counts treat gap slots as real zeros,
     stat measures (null on gap slots) are dropped before fitting (the
     kernel must never see NaN — see .claude/skills/verify/SKILL.md).
 
-    densify=True accepts the SPARSE tier and reindexes each conv onto the
-    dense slot grid INSIDE the kernel (kernel/gapfill.py) — the scale path:
-    the group shuffle then moves only real slots (~1/8 of dense volume at
-    bench skew) and the zeros are materialized post-shuffle in numpy.
-    Output is identical to feeding the gap-filled tier (tested).
+    Each conv is reindexed onto its slot grid INSIDE the kernel
+    (kernel/gapfill.py), so both forms give the same segments (tested); fed
+    the sparse tier, the group shuffle moves only real slots (~1/8 of dense
+    volume at bench skew).
 
     phenology=True appends the A3 long-term-mean diurnal fields per
     segment (PHENO_SEGMENT_SCHEMA; kernel/phenology.py) — computed inside
@@ -200,7 +193,7 @@ def change_scores(
     schema = PHENO_SEGMENT_SCHEMA if phenology else SEGMENT_SCHEMA
 
     def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        t, Y = _fit_input(pdf, [measure], densify, step_seconds)
+        t, Y = _fit_input(pdf, [measure], step_seconds)
         y = Y[0]
         res = ccdc_fit(t, y, CCDCParams(**p_dict))
         rows = []
@@ -242,7 +235,6 @@ def change_scores_post(
     params: CCDCParams | None = None,
     commission_crit: float | None = 3.0,
     refit_estimator: str = "rlm_maxiter10",
-    densify: bool = False,
     step_seconds: int = 60,
 ) -> DataFrame:
     """P1-P3 over the segments of :func:`change_scores`, in ONE grouped-map
@@ -252,8 +244,8 @@ def change_scores_post(
     score and a robust refit (coef + rmse under ``refit_estimator``) per
     surviving segment.
 
-    Scale shape is identical to change_scores — the post-processing reuses
-    the conv's already-shuffled, already-densified series in-kernel, so
+    Input and scale shape are change_scores' — the post-processing reuses
+    the conv's already-shuffled, already-reindexed series in-kernel, so
     P1-P3 cost zero extra exchanges (the reference's record-array field
     appends have the same property). Raw doubles out: both sides of the
     driver differential (tools/make_goldens.py postprocess_twin) run the
@@ -267,7 +259,7 @@ def change_scores_post(
     p_dict = asdict(params or CONV_PARAMS)
 
     def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        t, Y = _fit_input(pdf, [measure], densify, step_seconds)
+        t, Y = _fit_input(pdf, [measure], step_seconds)
         y = Y[0]
         kp = CCDCParams(**p_dict)
         segs = ccdc_fit(t, y, kp).segments
@@ -294,7 +286,6 @@ def change_scores_multi(
     filled: DataFrame,
     measures: list[str],
     params: CCDCParams | None = None,
-    densify: bool = False,
     step_seconds: int = 60,
     test_indices: list[int] | None = None,
 ) -> DataFrame:
@@ -303,10 +294,11 @@ def change_scores_multi(
     exceeds the threshold — the reference's multi-band CCDCesque semantics
     (all bands share observation dates; break tests pool test bands).
 
-    Observation alignment: after optional in-kernel densify (count
-    measures 0-fill, float measures NaN on gap slots), any slot where ANY
-    measure is NaN is dropped for every series — bands share dates exactly
-    as the reference's acquisition-aligned raster bands do.
+    Observation alignment: after the in-kernel reindex of a sparse or
+    gap-filled tier (count measures 0-fill, float measures NaN on gap
+    slots), any slot where ANY measure is NaN is dropped for every series —
+    bands share dates exactly as the reference's acquisition-aligned raster
+    bands do.
 
     Output carries one coef vector / rmse / magnitude per measure
     (MULTI_SEGMENT_SCHEMA), segment boundaries shared across measures.
@@ -321,7 +313,7 @@ def change_scores_multi(
     p_dict = asdict(p)
 
     def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        t, Y = _fit_input(pdf, measures, densify, step_seconds)
+        t, Y = _fit_input(pdf, measures, step_seconds)
         res = ccdc_fit(t, Y, CCDCParams(**p_dict))
         rows = [dict(_segment_row(pdf["conv_id"].iloc[0], i, s),
                      coefs=[list(map(float, s.coef[b])) for b in range(len(measures))],

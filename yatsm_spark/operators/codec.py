@@ -8,8 +8,8 @@ Chunk row schema per FIXTURES.md §2.3:
     (conv_id, tier, chunk_start, n_points, ts_codec binary, val_codec binary)
 
 ts_codec is the delta-of-delta timestamp block of EVERY slot's epoch, gap
-slots included, so chunks of a sparse tier (densify=False) keep their own
-slot grid.
+slots included. A chunk is one run of at most CHUNK_POINTS consecutive slots
+of its tier: it covers [chunk_start, chunk_start + n_points slots).
 
 val_codec layout (CHUNK_FORMAT_VERSION 5):
     [presence: n_points bits, byte-padded]   1 = real slot (not gap_filled)
@@ -47,7 +47,7 @@ stream keeps one fixed bit width. Chunks of a rollup tier have mode 3
 null token length; a pipeline bucket manifest counts the other chunks as
 ``chunks_1m_underived``.
 
-Bounded chunks (default 4096 points ≈ 2.8 days of 1m) keep a mega-conv from
+Bounded chunks (CHUNK_POINTS ≈ 2.8 days of 1m) keep a mega-conv from
 producing one giant row; each conv's slots reach the encoder in epoch order
 through operators/series.py::per_series.
 """
@@ -73,8 +73,9 @@ STAT_COLS = [m.name for m in MOMENTS if m.gap is None]
 #: by a different format re-encodes instead of mixing layouts.
 CHUNK_FORMAT_VERSION = 5
 
-#: Slots per chunk row: the pipeline's chunk size and the bound that
-#: ``routing.route_range`` prunes chunk scans with.
+#: The longest chunk (encode_chunks and chunk_rows raise ValueError above
+#: it), the size compact_chunks writes and the bound ``routing.route_range``
+#: prunes chunk scans with.
 CHUNK_POINTS = 4096
 
 CHUNK_SCHEMA = T.StructType([
@@ -207,22 +208,31 @@ def count_underived() -> Column:
     return F.count_if(mode != F.lit(bytes([FULL_MODE])))
 
 
+def _check_points(chunk_points: int) -> None:
+    if not 0 < chunk_points <= CHUNK_POINTS:
+        raise ValueError(f"chunk_points={chunk_points} outside [1, CHUNK_POINTS={CHUNK_POINTS}]")
+
+
 def chunk_rows(conv_id: str, tier: str, epochs: np.ndarray, gap: np.ndarray,
-               cols: Columns, chunk_points: int) -> pd.DataFrame:
-    """One conv's slots (epoch order) -> chunk rows of at most chunk_points
-    slots each. Raises ValueError if a gap slot carries a nonzero count or
-    a non-null stat: those values would not survive the round trip."""
+               cols: Columns, chunk_points: int = CHUNK_POINTS) -> pd.DataFrame:
+    """One conv's slots (epoch order) -> chunk rows, each a run of at most
+    chunk_points consecutive slots. Raises ValueError above CHUNK_POINTS or
+    if a gap slot carries a nonzero count or a non-null stat: those values
+    would not survive the round trip."""
+    _check_points(chunk_points)
     gap = np.asarray(gap, dtype=bool)
     bad = ([m for m in COUNT_COLS if (cols[m][0][gap] != 0).any()]
            + [m for m in STAT_COLS if not cols[m][1][gap].all()])
     if bad:
         raise ValueError(f"{conv_id}: gap_filled slots carry values in {bad}")
+    breaks = [*np.flatnonzero(np.diff(epochs) != TIERS[tier]) + 1]
     rows = []
-    for lo in range(0, len(epochs), chunk_points):
-        sl = slice(lo, lo + chunk_points)
-        rows.append((conv_id, tier, pd.Timestamp(int(epochs[lo]), unit="s"),
-                     len(epochs[sl]), g_vec.encode_timestamps_block(epochs[sl]),
-                     encode_values(gap[sl], {m: (v[sl], nm[sl]) for m, (v, nm) in cols.items()})))
+    for run_lo, run_hi in zip([0, *breaks], [*breaks, len(epochs)]):
+        for lo in range(run_lo, run_hi, chunk_points):
+            sl = slice(lo, min(lo + chunk_points, run_hi))
+            part = {m: (v[sl], nm[sl]) for m, (v, nm) in cols.items()}
+            rows.append((conv_id, tier, pd.Timestamp(int(epochs[lo]), unit="s"), len(epochs[sl]),
+                         g_vec.encode_timestamps_block(epochs[sl]), encode_values(gap[sl], part)))
     return pd.DataFrame(rows, columns=_CHUNK_COLS)
 
 
@@ -233,15 +243,14 @@ def _decode_chunk(n_points, ts_codec, val_codec) -> tuple[np.ndarray, np.ndarray
     return epochs, gap, cols
 
 
-def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = CHUNK_POINTS,
-                  densify: bool = False) -> DataFrame:
-    """Rollup tier -> compressed chunk rows (one shuffle on conv_id).
-
-    densify=True accepts the SPARSE tier and reindexes each conv onto the
-    dense slot grid in the kernel (counts 0, stats null, gap_filled true)
-    before encoding — gap slots then cost 1 bit each in the codec instead
-    of a shuffled row each. Output chunks are identical to encoding the
-    gap-filled tier (tested)."""
+def encode_chunks(rollup: DataFrame, tier: str,
+                  chunk_points: int = CHUNK_POINTS) -> DataFrame:
+    """Rollup tier, sparse or gap-filled -> compressed chunk rows (one
+    shuffle on conv_id); ValueError above CHUNK_POINTS. The kernel reindexes
+    each conv onto its slot grid (kernel/gapfill.py: counts 0, stats null,
+    gap_filled true), so both forms give the same chunks (tested) and a
+    sparse tier shuffles only its real slots."""
+    _check_points(chunk_points)
     step = TIERS[tier]
 
     # Null stat slots are split into (coalesced long, notnull flag) BEFORE
@@ -264,22 +273,18 @@ def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = CHUNK_POINTS
         no float round-trip — then chunk_rows slices numpy arrays.
         (Per-chunk pandas ops were ~2x the actual codec cost.)"""
         epochs = pdf["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        gap = pdf["gap_filled"].to_numpy(dtype=bool)
-        vals = {c: pdf[c].to_numpy(dtype=np.int64) for c in MEASURES}
-        nulls = {c: ~pdf[f"_nn_{c}"].to_numpy(dtype=bool) for c in STAT_COLS}
-        if densify:
-            # stats travel as int64 + a notnull flag column: gap slots get
-            # notnull=0 (int fill is 0), i.e. null — no float64 detour, so
-            # values above 2^53 stay exact through densification too.
-            grid_in = dict(vals, **{f"_nn_{c}": (~nulls[c]).astype(np.int64)
-                                    for c in STAT_COLS})
-            dense = gapfill_slots(epochs, grid_in, step=step)
-            epochs, gap = dense["slot_epoch"], dense["gap_filled"]
-            vals = {c: dense[c] for c in MEASURES}
-            nulls = {c: dense[f"_nn_{c}"] == 0 for c in STAT_COLS}
-        no_nulls = np.zeros(len(epochs), dtype=bool)
-        cols = {c: (vals[c], nulls.get(c, no_nulls)) for c in MEASURES}
-        return chunk_rows(pdf["conv_id"].iloc[0], tier, epochs, gap, cols, chunk_points)
+        # notnull flags and the input's gap flag cross the reindex as int64
+        # (0-filled): no float64 detour for stats, and a gap row carrying a
+        # value still reaches chunk_rows' check.
+        grid_in = {c: pdf[c].to_numpy(dtype=np.int64)
+                   for c in MEASURES + [f"_nn_{c}" for c in STAT_COLS]}
+        grid_in["_gap"] = pdf["gap_filled"].to_numpy(dtype=np.int64)
+        dense = gapfill_slots(epochs, grid_in, step=step)
+        gap = dense["gap_filled"] | (dense["_gap"] != 0)
+        cols = {c: (dense[c], dense[f"_nn_{c}"] == 0 if c in STAT_COLS
+                    else np.zeros(len(gap), dtype=bool)) for c in MEASURES}
+        return chunk_rows(pdf["conv_id"].iloc[0], tier, dense["slot_epoch"], gap,
+                          cols, chunk_points)
 
     return per_series(rollup, "conv_id", "window_start", enc, CHUNK_SCHEMA,
                       name="encode_chunks")
@@ -305,14 +310,14 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
     return per_batch(chunks, dec, ROLLUP_SCHEMA, name="decode_chunks")
 
 
-def compact_chunks(chunks: DataFrame, chunk_points: int = CHUNK_POINTS) -> DataFrame:
+def compact_chunks(chunks: DataFrame) -> DataFrame:
     """Chunk-table compaction (the TimescaleDB ``compress_chunk``
     maintenance analog): per (conv, tier), decode every chunk, stitch the
     point streams back together in chunk_start order, and re-encode at
-    the target ``chunk_points`` — many small chunks (written by frequent
-    incremental eviction runs) become few large ones, shrinking both the
-    chunk-row count the serve path scans and the per-chunk codec framing
-    overhead.
+    CHUNK_POINTS — many small chunks (written by frequent incremental
+    eviction runs) become few large ones, shrinking both the chunk-row
+    count the serve path scans and the per-chunk codec framing overhead.
+    A break in the slot grid between two input chunks still ends a chunk.
 
     Invariant (tested): ``decode_chunks(compact_chunks(x))`` is
     bit-identical to ``decode_chunks(x)`` — same slots, same values, same
@@ -328,7 +333,7 @@ def compact_chunks(chunks: DataFrame, chunk_points: int = CHUNK_POINTS) -> DataF
         cols = {m: (np.concatenate([p[m][0] for p in parts]),
                     np.concatenate([p[m][1] for p in parts])) for m in MEASURES}
         return chunk_rows(pdf["conv_id"].iloc[0], pdf["tier"].iloc[0],
-                          np.concatenate(epochs), np.concatenate(gaps), cols, chunk_points)
+                          np.concatenate(epochs), np.concatenate(gaps), cols)
 
     return per_series(chunks, ["conv_id", "tier"], "chunk_start", compact,
                       CHUNK_SCHEMA, name="compact_chunks")

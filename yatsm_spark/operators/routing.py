@@ -122,9 +122,7 @@ def route_plan(qs, qe, tiers=("1m", "1h", "1d"), watermark=None):
 def route_range(tiers: dict[str, DataFrame], qs, qe,
                 fresh_measures: DataFrame | None = None,
                 watermark=None,
-                chunks: DataFrame | None = None,
-                chunk_tier: str = "1m",
-                chunk_points: int = CHUNK_POINTS) -> DataFrame:
+                chunks: DataFrame | None = None) -> DataFrame:
     """Per-conv aggregate of every measure over [qs, qe), served from the
     coarsest tiers that cover it (route_plan) with raw-turn fallback for
     the fresh tail. BIT-IDENTICAL to aggregating the 1m tier (or the raw
@@ -139,16 +137,17 @@ def route_range(tiers: dict[str, DataFrame], qs, qe,
     raises instead of silently under-counting.
 
     With ``chunks`` (the Gorilla chunk table from
-    operators/codec.py::encode_chunks), slices on ``chunk_tier`` ALSO
-    serve from compressed storage: live tier rows win, and decoded
-    chunk rows fill slots the retention driver has already evicted —
-    the complete retention story (compress → evict fine rows → queries
-    transparently fall through to the chunks). The decode side is
-    range-pruned BEFORE decoding via ``chunk_start`` predicates (sound
-    because chunks are bounded at ``chunk_points`` slots), decoded with
-    a zero-shuffle mapInPandas, and deduped against live rows with an
-    anti-join on (conv_id, window_start) — so a compressed-but-not-yet-
-    evicted overlap window never double-counts.
+    operators/codec.py::encode_chunks), 1m slices ALSO serve from its 1m
+    chunks: live tier rows win, and decoded chunk rows fill slots the
+    retention driver has already evicted — the complete retention story
+    (compress → evict fine rows → queries transparently fall through to
+    the chunks). The decode side is range-pruned BEFORE decoding via
+    ``chunk_start`` predicates (sound because a chunk is a run of at most
+    ``codec.CHUNK_POINTS`` consecutive slots: one holding a slot of the
+    slice [a, b) starts in [a - CHUNK_POINTS slots, b) and ends after a),
+    decoded with a zero-shuffle mapInPandas, and deduped against live rows
+    with an anti-join on (conv_id, window_start) — so a compressed-but-
+    not-yet-evicted overlap window never double-counts.
 
     Plan shape: k range-filtered tier scans (the filters reach parquet's
     statistics, which prune only on time-clustered files; see the module
@@ -174,12 +173,13 @@ def route_range(tiers: dict[str, DataFrame], qs, qe,
         rng = ((F.col("window_start") >= F.timestamp_seconds(F.lit(a)))
                & (F.col("window_start") < F.timestamp_seconds(F.lit(b))))
         live = t.where(rng)
-        if chunks is not None and name == chunk_tier:
-            span = chunk_points * TIERS[name]
+        if chunks is not None and name == "1m":
+            step = TIERS[name]
             pruned = chunks.where(
                 (F.col("tier") == name)
-                & (F.col("chunk_start") >= F.timestamp_seconds(F.lit(a - span)))
-                & (F.col("chunk_start") < F.timestamp_seconds(F.lit(b))))
+                & (F.col("chunk_start") >= F.timestamp_seconds(F.lit(a - CHUNK_POINTS * step)))
+                & (F.col("chunk_start") < F.timestamp_seconds(F.lit(b)))
+                & (F.unix_seconds("chunk_start") + F.col("n_points") * step > a))
             dec = (decode_chunks(pruned)
                    .where(rng & ~F.col("gap_filled"))
                    .join(live.select("conv_id", "window_start"),

@@ -225,12 +225,12 @@ def run_pipeline(
                 prev = nxt
 
             if cfg.segments:
-                segs = change_scores(sparse, "turn_count", CONV_PARAMS, densify=True,
+                segs = change_scores(sparse, "turn_count", CONV_PARAMS,
                                      phenology=cfg.phenology)
                 write(segs, "segments", segments=count)
 
             if cfg.compress:
-                write(encode_chunks(sparse, "1m", densify=True),
+                write(encode_chunks(sparse, "1m"),
                       "chunks_1m", chunks_1m=count,
                       chunks_1m_underived=count_underived())
 
