@@ -276,6 +276,32 @@ def test_window_start_skips_dictionary_when_slots_repeat(spark, tmp_path):
     assert df.exceptAll(back).count() == 0 and back.exceptAll(df).count() == 0
 
 
+def test_an_uncommitted_bucket_stays_out_of_reads(spark, tmp_path, monkeypatch):
+    """A crash between a bucket's write and its rename leaves the staged
+    directory in the table; reads of the table see only committed buckets,
+    with an int bucket column, and the next write of the bucket commits."""
+    store = ParquetStorage(str(tmp_path))
+    rows = lambda n: spark.range(n).select(F.format_string("c%d", "id").alias("conv_id"))
+    store.write_bucket(rows(5), "tier_1m", 0)
+
+    def crash(src, dst):
+        raise OSError("crashed before the rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash)
+        with pytest.raises(OSError, match="crashed before the rename"):
+            store.write_bucket(rows(2), "tier_1m", 1)
+    assert len(os.listdir(store.path("tier_1m"))) == 2
+    for df in (store.read(spark, "tier_1m"), spark.read.parquet(store.path("tier_1m"))):
+        assert df.count() == 5
+        assert dict(df.dtypes)["bucket"] == "int"
+    assert store.buckets("tier_1m") == [0]
+
+    store.write_bucket(rows(2), "tier_1m", 1)
+    assert sorted(os.listdir(store.path("tier_1m"))) == ["bucket=0", "bucket=1"]
+    assert store.read(spark, "tier_1m").count() == 7
+
+
 def test_empty_transcripts_raise_before_staging(spark, tx, tmp_path):
     # rollup("bucket") returns no rows at all for an empty input, so the
     # fingerprint pass has no grand-total row to read.

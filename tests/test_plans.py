@@ -32,14 +32,19 @@ REPO = Path(__file__).resolve().parents[1]
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 
 
+def seen_through(build):
+    """``build()`` with every ``conf.materialize`` seen through."""
+    real, conf.materialize = conf.materialize, lambda df, eager=True: df
+    try:
+        return build()
+    finally:
+        conf.materialize = real
+
+
 def plan_of(build, mode: str = "formatted") -> str:
     """The physical plan of ``build()`` as ``explain(mode)`` prints it,
     built with every ``conf.materialize`` seen through."""
-    real, conf.materialize = conf.materialize, lambda df, eager=True: df
-    try:
-        df = build()
-    finally:
-        conf.materialize = real
+    df = seen_through(build)
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
@@ -75,10 +80,14 @@ class Plans:
         }
         self._plans = {}
 
+    def build(self, name: str):
+        """The builder of frame or query ``name``."""
+        return self.frames.get(name) or (
+            lambda: self.queries[name](self.spark, self.sf_dir))
+
     def plan(self, name: str) -> str:
         if name not in self._plans:
-            self._plans[name] = plan_of(self.frames.get(name) or (
-                lambda: self.queries[name](self.spark, self.sf_dir)))
+            self._plans[name] = plan_of(self.build(name))
         return self._plans[name]
 
     def section_plan(self, section: str) -> str:

@@ -3,6 +3,7 @@
 through ``per_series``, and source guards that keep grouped and ungrouped
 Arrow maps from being written out by hand again."""
 
+import ast
 import pathlib
 import re
 
@@ -200,3 +201,26 @@ def test_arrow_maps_go_through_per_batch():
     """Only the helper itself maps Arrow batches without grouping."""
     hits = {p.name for p in OPERATORS.glob("*.py") if "mapInPandas(" in p.read_text()}
     assert hits == {"series.py"}
+
+
+#: The series toolkit's modules: each names its key and time columns
+#: (conv_id/window_start on a tier, ts/turn_idx on turns, user_id/ts/event_id
+#: on events) the way rollup.py does.
+SERIES_MODULES = [f"operators/{m}.py" for m in (
+    "tsfuncs", "tsanalytics", "sessionize", "matrixprofile", "downsample",
+    "dtw", "changepoint", "kalman")] + ["streaming/stream_rollup.py"]
+COLUMN_OPTIONS = {"by", "order_col", "ts_col", "key_col", "time_col"}
+
+
+def test_series_functions_take_no_key_or_time_column_option():
+    """A series' key and time columns are facts of the table schema, not
+    options: no public function of the series toolkit declares one."""
+    hits = []
+    for rel in SERIES_MODULES:
+        tree = ast.parse((OPERATORS.parent / rel).read_text())
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
+                a = fn.args
+                names = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+                hits += [f"{rel}::{fn.name}({p})" for p in sorted(names & COLUMN_OPTIONS)]
+    assert hits == []

@@ -1,20 +1,28 @@
-"""Capture .explain('formatted') for a set of bench queries into files.
+"""Capture the formatted plan and the schema of declared queries and of the
+plan-contract frames, normalized so that two checkouts compare with diff.
 
 Usage: python tools/capture_plans.py OUTDIR [name ...]
 A name is a declared query or a frame of tests/test_plans.py::Plans (the
 bench-internal paths: rollup_1m_only, gapfill_1m, cascade_1m_1h,
-segments_ccdc, gorilla_encode, heavy_hitters_cms). Plans are captured with
-every materialize seen through, so they show the computation body; at run
-time a materialized query is the `Sort <- Scan ExistingRDD` documented by
+segments_ccdc, gorilla_encode, heavy_hitters_cms, ...); with no names, every
+declared query and every frame is captured. OUTDIR/<name>.txt holds
+explain("formatted") and then the frame's schema as JSON (nullability
+included). Expression ids (``#<id>``), ``plan_id=`` values, RDD ids, the
+checkout root and the temporary work dir are replaced by fixed tokens, so
+the text depends only on the plan. Plans are captured with every
+materialize seen through, so they show the computation body; at run time a
+materialized query is the `Sort <- Scan ExistingRDD` documented by
 plans/r06/*_runtime.txt. The session mirrors bench.py (engine confs,
 data-sized shuffle width) so the captured plans are the ones the bench
-actually runs. It imports the checkout it sits in: run another checkout's
-copy to capture that commit's plans.
+actually runs. It imports the checkout it sits in: to compare two commits,
+run each checkout's copy into its own OUTDIR, then ``diff -r`` the two.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
 import tempfile
 
@@ -25,11 +33,20 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def normalized(text: str, work: str) -> str:
+    """``text`` without the ids and paths that differ between runs and
+    checkouts."""
+    text = text.replace(work, "<work>").replace(REPO, "<repo>")
+    for ids, token in ((r"#\d+", "#"), (r"plan_id=\d+", "plan_id="),
+                       (r"RDD\[\d+\]", "RDD[]")):
+        text = re.sub(ids, token, text)
+    return text
+
+
 def main():
     outdir = sys.argv[1]
-    names = sys.argv[2:]
     os.makedirs(outdir, exist_ok=True)
-    from tests.test_plans import Plans
+    from tests.test_plans import Plans, plan_of, seen_through
     from yatsm_spark.conf import get_spark, shuffle_partitions_for_bytes
 
     spark = get_spark(app_name="yatsm-plans", master=f"local[{CPUS}]")
@@ -42,8 +59,11 @@ def main():
 
     with tempfile.TemporaryDirectory(prefix="plans_") as work:
         plans = Plans(spark, SF_DIR, work)
-        for name in names:
-            txt = plans.plan(name)
+        for name in sys.argv[2:] or [*plans.queries, *plans.frames]:
+            df = seen_through(plans.build(name))
+            txt = normalized(plan_of(lambda: df) + "\n== Schema ==\n"
+                             + json.dumps(df.schema.jsonValue(), indent=1) + "\n",
+                             work)
             path = os.path.join(outdir, f"{name}.txt")
             with open(path, "w") as f:
                 f.write(txt)

@@ -79,7 +79,3 @@ class CheckpointManager:
             with open(os.path.join(self.root, name)) as f:
                 out.append(json.load(f))
         return out
-
-    def clear(self) -> None:
-        for name in os.listdir(self.root):
-            os.remove(os.path.join(self.root, name))

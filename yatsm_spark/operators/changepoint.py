@@ -15,12 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yatsm_spark.operators.series import per_series
+from yatsm_spark.operators.series import per_conv, per_series
 
 
 def burst_intervals(turns: DataFrame, s: float = 3.0,
-                    gamma: float = 1.0, by: str = "conv_id",
-                    ts_col: str = "ts",
+                    gamma: float = 1.0,
                     max_n: int = 100_000) -> DataFrame:
     """Kleinberg two-state burst detection per conversation over RAW
     turn arrival times (kernel/bursts.py) — no tier, no binning. Long
@@ -33,13 +32,13 @@ def burst_intervals(turns: DataFrame, s: float = 3.0,
     from yatsm_spark.kernel.bursts import kleinberg_bursts
 
     def fit(pdf):
-        t_us = pdf[ts_col].to_numpy(dtype="datetime64[us]") \
+        t_us = pdf["ts"].to_numpy(dtype="datetime64[us]") \
             .astype(np.int64)
         bursts = kleinberg_bursts(t_us, s, gamma)
         if not bursts:
             return None
         return pd.DataFrame({
-            by: pdf.iloc[0, 0],
+            "conv_id": pdf.iloc[0, 0],
             "burst_ord": np.arange(1, len(bursts) + 1, dtype=np.int64),
             "start_us": [b[0] for b in bursts],
             "end_us": [b[1] for b in bursts],
@@ -50,8 +49,8 @@ def burst_intervals(turns: DataFrame, s: float = 3.0,
             "n_events": [b[2] for b in bursts],
         })
 
-    return per_series(turns.select(by, ts_col), by, ts_col, fit,
-                      [by, "burst_ord long", "start_us long", "end_us long",
+    return per_series(turns.select("conv_id", "ts"), "conv_id", "ts", fit,
+                      ["conv_id", "burst_ord long", "start_us long", "end_us long",
                        "burst_start timestamp", "burst_end timestamp",
                        "n_events long"],
                       max_n=max_n, name="burst_intervals")
@@ -59,8 +58,6 @@ def burst_intervals(turns: DataFrame, s: float = 3.0,
 
 def pelt_changepoints(tier: DataFrame, value_col: str = "turn_count",
                       penalty: float | None = None, min_size: int = 2,
-                      by: str = "conv_id",
-                      order_col: str = "window_start",
                       max_n: int = 8192) -> DataFrame:
     """Long form: one row per detected changepoint with its 1-based
     rank, row index, the slot where the new segment starts, and the
@@ -78,14 +75,14 @@ def pelt_changepoints(tier: DataFrame, value_col: str = "turn_count",
         if cps.size == 0:
             return None
         return pd.DataFrame({
-            by: pdf.iloc[0, 0],
+            "conv_id": pdf.iloc[0, 0],
             "cp_ord": np.arange(1, cps.size + 1, dtype=np.int64),
             "idx": cps,
-            order_col: pdf[order_col].iloc[cps].to_numpy(),
+            "window_start": pdf["window_start"].iloc[cps].to_numpy(),
             "n_changepoints": np.int64(cps.size),
         })
 
-    return per_series(tier.select(by, order_col, value_col), by, order_col,
-                      fit, [by, "cp_ord long", "idx long", order_col,
-                            "n_changepoints long"],
-                      max_n=max_n, name="pelt_changepoints")
+    return per_conv(tier, [value_col], fit,
+                    ["conv_id", "cp_ord long", "idx long", "window_start",
+                     "n_changepoints long"],
+                    max_n=max_n, name="pelt_changepoints")

@@ -33,7 +33,8 @@ from pyspark.sql import types as T
 
 from yatsm_spark.kernel.ccdc import CCDCParams, ccdc_fit
 from yatsm_spark.kernel.gapfill import gapfill_slots
-from yatsm_spark.operators.series import per_series
+from yatsm_spark.operators.rollup import TIERS
+from yatsm_spark.operators.series import per_conv
 
 SEGMENT_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
@@ -100,16 +101,8 @@ def _day_to_ts(day: float) -> pd.Timestamp:
     return pd.Timestamp(round(day * 86400.0), unit="s")
 
 
-def _conv_series(filled: DataFrame, measures: list[str]) -> DataFrame:
-    """(conv_id, window_start, *measures): the per-conv fit's columns."""
-    # Column-prune BEFORE the group shuffle: the kernel needs these columns
-    # only, so never move the others through the exchange (at 10^12 scale
-    # the shuffle is the cost of this operator).
-    return filled.select("conv_id", "window_start", *measures)
-
-
-def _fit_input(pdf: pd.DataFrame, measures: list[str], step: int) -> tuple[np.ndarray, np.ndarray]:
-    """One conv's time-sorted slots, sparse or gap-filled -> (t in days,
+def _fit_input(pdf: pd.DataFrame, measures: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """One conv's time-sorted 1m slots, sparse or gap-filled -> (t in days,
     Y[measure, slot]) on its dense slot grid, over the slots where every
     measure is present: count measures without nulls travel as int64
     (0-filled), the rest as float (NaN-filled). NaN slots are dropped
@@ -121,7 +114,7 @@ def _fit_input(pdf: pd.DataFrame, measures: list[str], step: int) -> tuple[np.nd
     for m in measures:
         a = pdf[m].to_numpy(dtype=np.float64, na_value=np.nan)
         cols[m] = a.astype(np.int64) if m.endswith("_count") and not np.isnan(a).any() else a
-    dense = gapfill_slots(epochs, cols, step=step)
+    dense = gapfill_slots(epochs, cols, step=TIERS["1m"])
     Y = np.vstack([np.asarray(dense[m], dtype=np.float64) for m in measures])
     t = dense["slot_epoch"] / 86400.0
     ok = ~np.isnan(Y).any(axis=0)
@@ -169,10 +162,9 @@ def change_scores(
     filled: DataFrame,
     measure: str = "turn_count",
     params: CCDCParams | None = None,
-    step_seconds: int = 60,
     phenology: bool = False,
 ) -> DataFrame:
-    """Segments table from a rollup tier, sparse or gap-filled.
+    """Segments table from the 1m tier, sparse or gap-filled.
 
     measure: any rollup column; counts treat gap slots as real zeros,
     stat measures (null on gap slots) are dropped before fitting (the
@@ -193,7 +185,7 @@ def change_scores(
     schema = PHENO_SEGMENT_SCHEMA if phenology else SEGMENT_SCHEMA
 
     def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        t, Y = _fit_input(pdf, [measure], step_seconds)
+        t, Y = _fit_input(pdf, [measure])
         y = Y[0]
         res = ccdc_fit(t, y, CCDCParams(**p_dict))
         rows = []
@@ -211,8 +203,7 @@ def change_scores(
             rows.append(row)
         return pd.DataFrame(rows) if rows else None
 
-    return per_series(_conv_series(filled, [measure]), "conv_id",
-                      "window_start", fit_conv, schema, name="change_scores")
+    return per_conv(filled, [measure], fit_conv, schema, name="change_scores")
 
 
 #: P1-P3 post-processing fields appended per (possibly merged) segment:
@@ -235,7 +226,6 @@ def change_scores_post(
     params: CCDCParams | None = None,
     commission_crit: float | None = 3.0,
     refit_estimator: str = "rlm_maxiter10",
-    step_seconds: int = 60,
 ) -> DataFrame:
     """P1-P3 over the segments of :func:`change_scores`, in ONE grouped-map
     pass: fit the conv, optionally merge false breaks (commission Chow
@@ -244,12 +234,13 @@ def change_scores_post(
     score and a robust refit (coef + rmse under ``refit_estimator``) per
     surviving segment.
 
-    Input and scale shape are change_scores' — the post-processing reuses
-    the conv's already-shuffled, already-reindexed series in-kernel, so
-    P1-P3 cost zero extra exchanges (the reference's record-array field
-    appends have the same property). Raw doubles out: both sides of the
-    driver differential (tools/make_goldens.py postprocess_twin) run the
-    same kernel bits on the same series, so values are bit-identical."""
+    Input (the 1m tier) and scale shape are change_scores' — the
+    post-processing reuses the conv's already-shuffled, already-reindexed
+    series in-kernel, so P1-P3 cost zero extra exchanges (the reference's
+    record-array field appends have the same property). Raw doubles out:
+    both sides of the driver differential (tools/make_goldens.py
+    postprocess_twin) run the same kernel bits on the same series, so
+    values are bit-identical."""
     from yatsm_spark.kernel.postprocess import (
         commission_test,
         omission_scores,
@@ -259,7 +250,7 @@ def change_scores_post(
     p_dict = asdict(params or CONV_PARAMS)
 
     def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        t, Y = _fit_input(pdf, [measure], step_seconds)
+        t, Y = _fit_input(pdf, [measure])
         y = Y[0]
         kp = CCDCParams(**p_dict)
         segs = ccdc_fit(t, y, kp).segments
@@ -277,16 +268,14 @@ def change_scores_post(
                 for i, s in enumerate(segs)]
         return pd.DataFrame(rows) if rows else None
 
-    return per_series(_conv_series(filled, [measure]), "conv_id",
-                      "window_start", fit_conv, POST_SEGMENT_SCHEMA,
-                      name="change_scores_post")
+    return per_conv(filled, [measure], fit_conv, POST_SEGMENT_SCHEMA,
+                    name="change_scores_post")
 
 
 def change_scores_multi(
     filled: DataFrame,
     measures: list[str],
     params: CCDCParams | None = None,
-    step_seconds: int = 60,
     test_indices: list[int] | None = None,
 ) -> DataFrame:
     """Multi-band W9: fit EVERY measure's series jointly per conv; break
@@ -294,8 +283,8 @@ def change_scores_multi(
     exceeds the threshold — the reference's multi-band CCDCesque semantics
     (all bands share observation dates; break tests pool test bands).
 
-    Observation alignment: after the in-kernel reindex of a sparse or
-    gap-filled tier (count measures 0-fill, float measures NaN on gap
+    Observation alignment: after the in-kernel reindex of the sparse or
+    gap-filled 1m tier (count measures 0-fill, float measures NaN on gap
     slots), any slot where ANY measure is NaN is dropped for every series —
     bands share dates exactly as the reference's acquisition-aligned raster
     bands do.
@@ -313,7 +302,7 @@ def change_scores_multi(
     p_dict = asdict(p)
 
     def fit_conv(pdf: pd.DataFrame) -> pd.DataFrame | None:
-        t, Y = _fit_input(pdf, measures, step_seconds)
+        t, Y = _fit_input(pdf, measures)
         res = ccdc_fit(t, Y, CCDCParams(**p_dict))
         rows = [dict(_segment_row(pdf["conv_id"].iloc[0], i, s),
                      coefs=[list(map(float, s.coef[b])) for b in range(len(measures))],
@@ -322,6 +311,5 @@ def change_scores_multi(
                 for i, s in enumerate(res.segments)]
         return pd.DataFrame(rows) if rows else None
 
-    return per_series(_conv_series(filled, measures), "conv_id",
-                      "window_start", fit_conv, MULTI_SEGMENT_SCHEMA,
-                      name="change_scores_multi")
+    return per_conv(filled, measures, fit_conv, MULTI_SEGMENT_SCHEMA,
+                    name="change_scores_multi")

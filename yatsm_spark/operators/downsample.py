@@ -18,32 +18,32 @@ from pyspark.sql import functions as F
 
 from yatsm_spark.kernel.downsample import lttb_frame
 from yatsm_spark.kernel.swing import swing_compress
-from yatsm_spark.operators.series import per_series
+from yatsm_spark.operators.series import per_conv
 
 
-def lttb(tier: DataFrame, value_col: str = "turn_count", n_out: int = 64,
-         by: str = "conv_id", order_col: str = "window_start") -> DataFrame:
-    """(by, order_col, value_col, pos): the LTTB-selected points of each
-    series, pos = 0..k-1 in time order (k = min(n_out, series length)).
-    Series shorter than n_out pass through whole."""
+def lttb(tier: DataFrame, value_col: str = "turn_count",
+         n_out: int = 64) -> DataFrame:
+    """(conv_id, window_start, value_col, pos): the LTTB-selected points
+    of each series, pos = 0..k-1 in time order (k = min(n_out, series
+    length)). Series shorter than n_out pass through whole."""
     if n_out < 3:
         raise ValueError("n_out must be >= 3")
 
     def fit(pdf):
-        ts_ns = pdf[order_col].astype("datetime64[ns]").astype("int64")
+        ts_ns = pdf["window_start"].astype("datetime64[ns]").astype("int64")
         sel, pos = lttb_frame(ts_ns.to_numpy(), pdf[value_col].to_numpy(),
                               n_out)
-        out = pdf.iloc[sel][[by, order_col, value_col]].reset_index(drop=True)
+        out = pdf.iloc[sel].reset_index(drop=True)
         out["pos"] = pos
         return out
 
-    return per_series(tier.select(by, order_col, value_col), by, order_col,
-                      fit, [by, order_col, value_col, "pos int"], name="lttb")
+    return per_conv(tier, [value_col], fit,
+                    ["conv_id", "window_start", value_col, "pos int"],
+                    name="lttb")
 
 
 def m4_downsample(tier: DataFrame, value_col: str = "turn_count",
-                  bucket_secs: int = 3600, by: str = "conv_id",
-                  order_col: str = "window_start") -> DataFrame:
+                  bucket_secs: int = 3600) -> DataFrame:
     """M4 downsampling (Jugel et al., VLDB 2014 — the error-free
     line-chart reduction): per (series, time bucket) keep ONLY the rows
     that are the bucket's first, last, min-value, and max-value points,
@@ -54,11 +54,11 @@ def m4_downsample(tier: DataFrame, value_col: str = "turn_count",
     plan, one shuffle, SQL-oracle-able with no floats anywhere. Output
     is <= 4 rows per bucket regardless of series density.
     """
-    b = F.floor(F.unix_timestamp(F.col(order_col)) / bucket_secs) \
+    b = F.floor(F.unix_timestamp(F.col("window_start")) / bucket_secs) \
         .cast("long").alias("bucket")
-    src = tier.select(by, order_col, value_col, b)
-    v, t = F.col(value_col), F.col(order_col)
-    part = [by, "bucket"]
+    src = tier.select("conv_id", "window_start", value_col, b)
+    v, t = F.col(value_col), F.col("window_start")
+    part = ["conv_id", "bucket"]
     rn = {
         "is_min": Window.partitionBy(*part).orderBy(v.asc(), t.asc()),
         "is_max": Window.partitionBy(*part).orderBy(v.desc(), t.asc()),
@@ -72,9 +72,7 @@ def m4_downsample(tier: DataFrame, value_col: str = "turn_count",
 
 
 def swing_door(tier: DataFrame, value_col: str = "turn_count",
-               e: int = 2, by: str = "conv_id",
-               order_col: str = "window_start",
-               max_n: int = 1_000_000) -> DataFrame:
+               e: int = 2, max_n: int = 1_000_000) -> DataFrame:
     """Swinging-door trend compression per series (kernel/swing.py —
     Bristol 1990, the PI-historian retention codec): emit only the
     archive points whose E-half-width door corridor covers every
@@ -88,15 +86,15 @@ def swing_door(tier: DataFrame, value_col: str = "turn_count",
     so the kept-point set is bit-identical at any parallelism. One
     shuffle on the series key; O(n) kernel per conv."""
     def fit(pdf):
-        t_us = pdf[order_col].to_numpy(dtype="datetime64[us]") \
+        t_us = pdf["window_start"].to_numpy(dtype="datetime64[us]") \
             .astype(np.int64)
         keep = swing_compress(t_us, pdf[value_col].to_numpy(np.int64), e)
-        out = pdf.iloc[keep][[by, order_col, value_col]] \
-            .reset_index(drop=True)
+        out = pdf.iloc[keep].reset_index(drop=True)
         out["pos"] = np.arange(len(keep), dtype=np.int64)
         out["n_in"] = np.int64(len(pdf))
         return out
 
-    return per_series(tier.select(by, order_col, value_col), by, order_col,
-                      fit, [by, order_col, value_col, "pos long", "n_in long"],
-                      max_n=max_n, name="swing_door")
+    return per_conv(tier, [value_col], fit,
+                    ["conv_id", "window_start", value_col, "pos long",
+                     "n_in long"],
+                    max_n=max_n, name="swing_door")

@@ -22,29 +22,26 @@ from yatsm_spark.kernel.dtw import dtw_core
 from yatsm_spark.operators.series import per_batch
 
 
-def series_arrays(tier: DataFrame, value_col: str = "turn_count",
-                  by: str = "conv_id",
-                  order_col: str = "window_start") -> DataFrame:
-    """(key, series array ordered by slot) — struct-sort, so the order
+def series_arrays(tier: DataFrame, value_col: str = "turn_count") -> DataFrame:
+    """(conv_id, series array ordered by slot) — struct-sort, so the order
     is deterministic without a global sort."""
     arr = F.transform(
-        F.array_sort(F.collect_list(F.struct(order_col, value_col))),
+        F.array_sort(F.collect_list(F.struct("window_start", value_col))),
         lambda s: s[value_col])
-    return tier.groupBy(by).agg(arr.alias("series"))
+    return tier.groupBy("conv_id").agg(arr.alias("series"))
 
 
 def dtw_rerank(tier: DataFrame, pairs: DataFrame,
                value_col: str = "turn_count", radius: int | None = None,
-               by: str = "conv_id", order_col: str = "window_start",
                max_n: int = 2048,
                a_col: str = "conv_a", b_col: str = "conv_b") -> DataFrame:
     """Exact (banded) DTW distance for every candidate pair: returns
     (conv_a, conv_b, len_a, len_b, dtw)."""
-    arrs = series_arrays(tier, value_col, by, order_col)
+    arrs = series_arrays(tier, value_col)
     j = (pairs.select(a_col, b_col)
-         .join(arrs.select(F.col(by).alias(a_col),
+         .join(arrs.select(F.col("conv_id").alias(a_col),
                            F.col("series").alias("_sa")), a_col)
-         .join(arrs.select(F.col(by).alias(b_col),
+         .join(arrs.select(F.col("conv_id").alias(b_col),
                            F.col("series").alias("_sb")), b_col)
          .select(a_col, b_col, "_sa", "_sb"))
 

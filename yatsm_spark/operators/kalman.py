@@ -23,17 +23,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from yatsm_spark.kernel.kalman import kalman_local_level
-from yatsm_spark.operators.series import per_series
+from yatsm_spark.operators.series import per_conv
 
 
 def kalman_smooth(tier: DataFrame, value_col: str = "turn_count",
                   q: float = 1.0, r: float = 4.0,
-                  by: str = "conv_id", order_col: str = "window_start",
                   max_n: int = 1 << 20) -> DataFrame:
     """Per-series local-level Kalman filter + RTS smoother over a dense
     tier. NULL values are missing observations (predict-only steps);
     gap-filled zeros are real observations of zero — the caller picks
-    the semantics by what it feeds in. Emits (by, order_col, value,
+    the semantics by what it feeds in. Emits (conv_id, window_start, value,
     kalman_level, kalman_var, kalman_smooth), levels micro-snapped by
     the kernel. Linear per series; ``max_n`` is a raising guard against
     runaway mega-series (the kernel is O(n) but driver-visible memory
@@ -41,16 +40,11 @@ def kalman_smooth(tier: DataFrame, value_col: str = "turn_count",
     def fit(pdf):
         y = pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
         level, var, smooth = kalman_local_level(y, q=q, r=r)
-        return pd.DataFrame({
-            by: pdf[by],
-            order_col: pdf[order_col],
-            value_col: pdf[value_col],
-            "kalman_level": level,
-            "kalman_var": var,
-            "kalman_smooth": smooth,
-        })
+        return pdf.assign(kalman_level=level, kalman_var=var,
+                          kalman_smooth=smooth)
 
-    return per_series(tier.select(by, order_col, value_col), by, order_col,
-                      fit, [by, order_col, value_col, "kalman_level double",
-                            "kalman_var double", "kalman_smooth double"],
-                      max_n=max_n, name="kalman_smooth")
+    return per_conv(tier, [value_col], fit,
+                    ["conv_id", "window_start", value_col,
+                     "kalman_level double", "kalman_var double",
+                     "kalman_smooth double"],
+                    max_n=max_n, name="kalman_smooth")

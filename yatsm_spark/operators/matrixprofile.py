@@ -16,12 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yatsm_spark.operators.series import per_series
+from yatsm_spark.operators.series import per_conv
 
 
 def matrix_profile(tier: DataFrame, value_col: str = "turn_count",
                    m: int = 24, excl: int | None = None,
-                   by: str = "conv_id", order_col: str = "window_start",
                    max_n: int = 8192) -> DataFrame:
     """Long-form matrix profile: one row per length-``m`` window with
     the window's start slot, its z-normalized nearest-neighbor distance
@@ -40,9 +39,9 @@ def matrix_profile(tier: DataFrame, value_col: str = "turn_count",
         mp, mpi = matrix_profile_core(
             pdf[value_col].to_numpy(dtype=np.int64), m, excl)
         out = pd.DataFrame({
-            by: pdf.iloc[0, 0],
+            "conv_id": pdf.iloc[0, 0],
             "idx": np.arange(L, dtype=np.int64),
-            order_col: pdf[order_col].iloc[:L].to_numpy(),
+            "window_start": pdf["window_start"].iloc[:L].to_numpy(),
             "mp": mp,
             "mp_idx": pd.array([None if v < 0 else int(v) for v in mpi],
                                dtype="Int64"),
@@ -52,16 +51,15 @@ def matrix_profile(tier: DataFrame, value_col: str = "turn_count",
                               for v in mp], dtype="Float64")
         return out
 
-    return per_series(tier.select(by, order_col, value_col), by, order_col,
-                      fit, [by, "idx long", order_col, "mp double",
-                            "mp_idx long"],
-                      max_n=max_n, name="matrix_profile")
+    return per_conv(tier, [value_col], fit,
+                    ["conv_id", "idx long", "window_start", "mp double",
+                     "mp_idx long"],
+                    max_n=max_n, name="matrix_profile")
 
 
 def left_matrix_profile(tier: DataFrame, value_col: str = "turn_count",
                         m: int = 12, w_hist: int = 64,
-                        excl: int | None = None, by: str = "conv_id",
-                        order_col: str = "window_start",
+                        excl: int | None = None,
                         max_n: int = 8192) -> DataFrame:
     """Left matrix profile with bounded history (novelty score): each
     window's distance to its nearest PRECEDING window within the last
@@ -82,24 +80,23 @@ def left_matrix_profile(tier: DataFrame, value_col: str = "turn_count",
         lp, lpi = left_profile(
             pdf[value_col].to_numpy(dtype=np.int64), m, w_hist, excl)
         return pd.DataFrame({
-            by: pdf.iloc[0, 0],
+            "conv_id": pdf.iloc[0, 0],
             "idx": np.arange(L, dtype=np.int64),
-            order_col: pdf[order_col].iloc[:L].to_numpy(),
+            "window_start": pdf["window_start"].iloc[:L].to_numpy(),
             "lp": pd.array([None if not np.isfinite(v) else float(v)
                             for v in lp], dtype="Float64"),
             "lp_idx": pd.array([None if v < 0 else int(v) for v in lpi],
                                dtype="Int64"),
         })
 
-    return per_series(tier.select(by, order_col, value_col), by, order_col,
-                      fit, [by, "idx long", order_col, "lp double",
-                            "lp_idx long"],
-                      max_n=max_n, name="left_matrix_profile")
+    return per_conv(tier, [value_col], fit,
+                    ["conv_id", "idx long", "window_start", "lp double",
+                     "lp_idx long"],
+                    max_n=max_n, name="left_matrix_profile")
 
 
 def ab_join_profile(tier: DataFrame, query_conv: str, m: int = 12,
-                    value_col: str = "turn_count", by: str = "conv_id",
-                    order_col: str = "window_start",
+                    value_col: str = "turn_count",
                     max_n: int = 8192) -> DataFrame:
     """Cross-series similarity search: for EVERY other series in the
     tier, the single window closest (z-normalized) to ANY window of
@@ -118,9 +115,9 @@ def ab_join_profile(tier: DataFrame, query_conv: str, m: int = 12,
 
     from yatsm_spark.kernel.matrixprofile import ab_best_match
 
-    qrows = (tier.where(F.col(by) == query_conv)
-                 .select(order_col, value_col)
-                 .orderBy(order_col).collect())
+    qrows = (tier.where(F.col("conv_id") == query_conv)
+                 .select("window_start", value_col)
+                 .orderBy("window_start").collect())
     if len(qrows) > max_n:
         raise ValueError(
             f"ab_join_profile: query series of {len(qrows)} rows "
@@ -140,18 +137,16 @@ def ab_join_profile(tier: DataFrame, query_conv: str, m: int = 12,
             return None
         dist, qi, yj = best
         return pd.DataFrame({
-            by: [pdf.iloc[0, 0]], "q_idx": [qi], "c_idx": [yj],
-            order_col: [pdf[order_col].iloc[yj]], "dist": [dist]})
+            "conv_id": [pdf.iloc[0, 0]], "q_idx": [qi], "c_idx": [yj],
+            "window_start": [pdf["window_start"].iloc[yj]], "dist": [dist]})
 
-    return per_series(tier.where(F.col(by) != query_conv)
-                          .select(by, order_col, value_col),
-                      by, order_col, fit,
-                      [by, "q_idx long", "c_idx long", order_col,
-                       "dist double"],
-                      max_n=max_n, name="ab_join_profile")
+    return per_conv(tier.where(F.col("conv_id") != query_conv), [value_col],
+                    fit, ["conv_id", "q_idx long", "c_idx long",
+                          "window_start", "dist double"],
+                    max_n=max_n, name="ab_join_profile")
 
 
-def mp_extrema(profile: DataFrame, by: str = "conv_id") -> DataFrame:
+def mp_extrema(profile: DataFrame) -> DataFrame:
     """Per-series motif + discord summary off the long-form profile:
     the window with the SMALLEST nearest-neighbor distance (top motif,
     reported with its partner index) and the LARGEST (top discord).
@@ -162,7 +157,7 @@ def mp_extrema(profile: DataFrame, by: str = "conv_id") -> DataFrame:
     p = profile.where(F.col("mp").isNotNull())
     lo = F.struct(F.col("mp"), F.col("idx"))
     hi = F.struct(F.col("mp"), (-F.col("idx")).alias("idx"))
-    return (p.groupBy(by)
+    return (p.groupBy("conv_id")
              .agg(F.min_by(F.col("idx"), lo).alias("motif_idx"),
                   F.min_by(F.col("mp_idx"), lo).alias("motif_pair"),
                   F.min("mp").alias("motif_dist"),

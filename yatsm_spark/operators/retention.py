@@ -14,19 +14,9 @@ semantics, different mechanics, both behind evict().
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from yatsm_spark.operators.cascade import high_watermark
-
-
-@dataclass
-class RetentionPolicy:
-    """TTL per tier in seconds of age relative to the conv's max slot.
-    None = keep forever. Defaults keep 1m for 7d, 1h for 90d, 1d forever."""
-
-    ttl: dict = field(default_factory=lambda: {"1m": 7 * 86400, "1h": 90 * 86400, "1d": None})
 
 
 def evictable(fine: DataFrame, from_tier: str, to_tier: str, ttl_seconds: int) -> DataFrame:

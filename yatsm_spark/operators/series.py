@@ -7,7 +7,8 @@ runs in parallel across series and sequentially within each one. Spark owns
 the grouping shuffle and hands each whole group to the kernel as one pandas
 frame (``per_series``); this module owns what every such stage needs around
 the kernel: the in-group time order, the series-length guard and the output
-schema.
+schema. ``per_conv`` is that stage over a tier, whose series are its
+``conv_id`` groups in ``window_start`` order.
 
 Row-wise numpy work (chunk decode, embedding encode and projection, media
 decode, classifier predict) needs no grouping: ``per_batch`` runs it once
@@ -76,6 +77,19 @@ def per_series(df: DataFrame, by: str | Sequence[str], order: str,
 
     run.__name__ = run.__qualname__ = name
     return _grouped(df, by).applyInPandas(run, schema)
+
+
+def per_conv(tier: DataFrame, cols: Sequence[str],
+             kernel: Callable[[pd.DataFrame], pd.DataFrame | None],
+             schema: Schema, *, max_n: int | None = None,
+             name: str) -> DataFrame:
+    """``per_series`` over a tier's conversations: the kernel sees one
+    conv's ``(conv_id, window_start, *cols)`` in slot order. The other
+    columns are pruned before the group shuffle, so the exchange moves
+    only what the kernel reads."""
+    return per_series(tier.select("conv_id", "window_start", *cols),
+                      "conv_id", "window_start", kernel, schema,
+                      max_n=max_n, name=name)
 
 
 def per_batch(df: DataFrame, fn: Callable[..., pd.DataFrame | None],

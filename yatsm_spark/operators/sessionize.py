@@ -20,32 +20,30 @@ from pyspark.sql import DataFrame, Window, functions as F
 from yatsm_spark.operators.grid import snap6
 
 
-def sessionize(events: DataFrame, key_col: str = "user_id", ts_col: str = "ts",
-               order_col: str = "event_id", timeout_s: int = 1800) -> DataFrame:
-    """Append session_idx (0-based per key): a new session starts when the
-    gap since the previous event exceeds timeout_s STRICTLY (gap ==
-    timeout stays in-session). Ordering ties on (ts, order_col) for
+def sessionize(events: DataFrame, timeout_s: int = 1800) -> DataFrame:
+    """Append session_idx (0-based per user_id): a new session starts when
+    the gap since the previous event exceeds timeout_s STRICTLY (gap ==
+    timeout stays in-session). Ordering ties on (ts, event_id) for
     determinism under duplicate timestamps."""
-    w = Window.partitionBy(key_col).orderBy(ts_col, order_col)
-    gap_us = F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(F.lag(F.col(ts_col).cast("timestamp")).over(w))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap_us = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(F.lag(F.col("ts").cast("timestamp")).over(w))
     brk = F.when(gap_us.isNull() | (gap_us > timeout_s * 1_000_000), 1).otherwise(0)
     idx = F.sum(brk).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1
     return events.withColumn("session_idx", idx.cast("long"))
 
 
-def session_stats(events: DataFrame, key_col: str = "user_id",
-                  ts_col: str = "ts", order_col: str = "event_id",
-                  type_col: str = "event_type", timeout_s: int = 1800) -> DataFrame:
+def session_stats(events: DataFrame, type_col: str = "event_type",
+                  timeout_s: int = 1800) -> DataFrame:
     """Per-session rollup: bounds, event count, distinct event types,
     duration. All exact (timestamps/longs) — no order-dependent float
     accumulation, so any engine reproduces it bit-for-bit."""
-    s = sessionize(events, key_col, ts_col, order_col, timeout_s)
-    dur = (F.unix_micros(F.max(ts_col).cast("timestamp")) - F.unix_micros(F.min(ts_col).cast("timestamp"))) / 1e6
+    s = sessionize(events, timeout_s)
+    dur = (F.unix_micros(F.max("ts").cast("timestamp")) - F.unix_micros(F.min("ts").cast("timestamp"))) / 1e6
     return (
-        s.groupBy(key_col, "session_idx")
-        .agg(F.min(ts_col).alias("session_start"),
-             F.max(ts_col).alias("session_end"),
+        s.groupBy("user_id", "session_idx")
+        .agg(F.min("ts").alias("session_start"),
+             F.max("ts").alias("session_end"),
              F.count(F.lit(1)).alias("n_events"),
              F.countDistinct(type_col).alias("n_event_types"),
              dur.alias("duration_s"))
@@ -53,7 +51,7 @@ def session_stats(events: DataFrame, key_col: str = "user_id",
 
 
 def funnel(events: DataFrame, steps: list[str], horizon_s: int = 86400,
-           user_col: str = "user_id", ts_col: str = "ts",
+           user_col: str = "user_id",
            type_col: str = "event_type") -> DataFrame:
     """Ordered funnel analysis over the events table: for each step k,
     the number of users whose EARLIEST step-k event falls strictly
@@ -69,22 +67,22 @@ def funnel(events: DataFrame, steps: list[str], horizon_s: int = 86400,
     windows, no UDFs."""
     if len(steps) < 2:
         raise ValueError("funnel: need at least 2 steps")
-    s = events.select(user_col, ts_col, type_col)
+    s = events.select(user_col, "ts", type_col)
     reached = (s.where(F.col(type_col) == steps[0])
                 .groupBy(user_col)
-                .agg(F.min(ts_col).alias("_t")))
+                .agg(F.min("ts").alias("_t")))
     per_step = [reached]
     for st_ in steps[1:]:
         prev = per_step[-1].select(user_col,
                                    F.col("_t").alias("_tp"))
         nxt = (s.where(F.col(type_col) == st_)
                 .join(prev, user_col)
-                .where((F.col(ts_col) > F.col("_tp"))
-                       & (F.col(ts_col) <= F.col("_tp")
+                .where((F.col("ts") > F.col("_tp"))
+                       & (F.col("ts") <= F.col("_tp")
                           + F.expr(f"INTERVAL {int(horizon_s)} "
                                    "SECONDS")))
                 .groupBy(user_col)
-                .agg(F.min(ts_col).alias("_t")))
+                .agg(F.min("ts").alias("_t")))
         per_step.append(nxt)
     counts = None
     for k, (st_, df) in enumerate(zip(steps, per_step), start=1):
@@ -103,8 +101,7 @@ def funnel(events: DataFrame, steps: list[str], horizon_s: int = 86400,
 
 
 def cohort_retention(events: DataFrame, period_s: int = 604800,
-                     user_col: str = "user_id",
-                     ts_col: str = "ts") -> DataFrame:
+                     user_col: str = "user_id") -> DataFrame:
     """Cohort retention matrix: users bucketed by their FIRST-event
     period (the cohort); for each (cohort, period offset) the count of
     cohort members active in that period and the retention rate vs the
@@ -114,7 +111,7 @@ def cohort_retention(events: DataFrame, period_s: int = 604800,
     Plan: one agg for cohorts, one distinct for (user, period)
     activity, one user-key join (co-partitioned), one final agg —
     no windows, no UDFs."""
-    epoch = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    epoch = F.unix_micros(F.col("ts").cast("timestamp"))
     slot = F.floor(epoch / (period_s * 1_000_000)).cast("long")
     s = events.select(F.col(user_col).alias("_u"), slot.alias("_p"))
     cohorts = s.groupBy("_u").agg(F.min("_p").alias("_c"))
@@ -135,7 +132,7 @@ def cohort_retention(events: DataFrame, period_s: int = 604800,
                      rate.alias("retention_rate")))
 
 
-def response_latency(tx: DataFrame, by: str = "conv_id") -> DataFrame:
+def response_latency(tx: DataFrame) -> DataFrame:
     """Per-conversation response-latency profile over raw transcripts:
     each user turn pairs with the NEXT assistant turn (nearest following
     turn_idx — MIN over the forward frame, so the pairing is
@@ -143,7 +140,7 @@ def response_latency(tx: DataFrame, by: str = "conv_id") -> DataFrame:
     MICROSECONDS (`unix_micros` — the engine-wide no-second-truncation
     rule). User turns with no following assistant turn drop out.
 
-    Emits (by, n_pairs, lat_median_us, lat_p90_us, lat_max_us). Median
+    Emits (conv_id, n_pairs, lat_median_us, lat_p90_us, lat_max_us). Median
     and p90 are SELECTION ranks — lower median (m+1)//2 and
     ceil(0.9·m) spelled as floor((9m+9)/10) in INTEGER math (never
     0.9*m in floats: 9·m/10 at exact multiples rounds up in binary and
@@ -153,20 +150,21 @@ def response_latency(tx: DataFrame, by: str = "conv_id") -> DataFrame:
     Scale shape: one window pass partitioned by conv (forward-frame MIN
     + the rank window share the conv partitioning with the final agg —
     one shuffle total, the sessionize property)."""
-    fwd = (Window.partitionBy(by).orderBy("turn_idx")
+    fwd = (Window.partitionBy("conv_id").orderBy("turn_idx")
            .rowsBetween(1, Window.unboundedFollowing))
     na = F.min(F.when(F.col("role") == "assistant", F.col("_us"))).over(fwd)
-    lat = (tx.select(by, "turn_idx", "role",
+    lat = (tx.select("conv_id", "turn_idx", "role",
                      F.unix_micros(F.col("ts")).alias("_us"))
            .withColumn("_na", na)
            .filter((F.col("role") == "user") & F.col("_na").isNotNull())
-           .select(by, (F.col("_na") - F.col("_us")).alias("lat")))
-    wr = Window.partitionBy(by).orderBy("lat")
+           .select("conv_id", (F.col("_na") - F.col("_us")).alias("lat")))
+    wr = Window.partitionBy("conv_id").orderBy("lat")
     rk = (lat.withColumn("rn", F.row_number().over(wr))
-          .withColumn("m", F.count(F.lit(1)).over(Window.partitionBy(by))))
+          .withColumn("m", F.count(F.lit(1))
+                      .over(Window.partitionBy("conv_id"))))
     med_rank = F.floor((F.col("m") + 1) / 2)
     p90_rank = F.floor((9 * F.col("m") + 9) / 10)
-    return rk.groupBy(by).agg(
+    return rk.groupBy("conv_id").agg(
         F.max("m").cast("long").alias("n_pairs"),
         F.max(F.when(F.col("rn") == med_rank, F.col("lat")))
          .cast("long").alias("lat_median_us"),
@@ -175,8 +173,7 @@ def response_latency(tx: DataFrame, by: str = "conv_id") -> DataFrame:
         F.max("lat").cast("long").alias("lat_max_us"))
 
 
-def tool_transitions(tx: DataFrame, by: str = "conv_id",
-                     include_terminal: bool = True) -> DataFrame:
+def tool_transitions(tx: DataFrame, include_terminal: bool = True) -> DataFrame:
     """First-order Markov transition counts over each conversation's
     TOOL-CALL sequence: for consecutive tool-bearing turns (ordered by
     turn_idx, non-tool turns skipped), count corpus-wide (tool ->
@@ -190,9 +187,9 @@ def tool_transitions(tx: DataFrame, by: str = "conv_id",
     row. One conv-partitioned LEAD window + one small hash agg; the
     window and nothing else touches per-turn data (text pruned at the
     scan)."""
-    w = Window.partitionBy(by).orderBy("turn_idx")
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
     seq = (tx.filter(F.col("tool").isNotNull())
-           .select(by, "turn_idx", "tool")
+           .select("conv_id", "turn_idx", "tool")
            .withColumn("next_tool", F.lead("tool").over(w)))
     if not include_terminal:
         seq = seq.filter(F.col("next_tool").isNotNull())

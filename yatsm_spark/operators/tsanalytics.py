@@ -23,11 +23,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from yatsm_spark.kernel import vecmath
 from yatsm_spark.operators.grid import micro6, snap6
+from yatsm_spark.operators.rollup import TIERS
 
 
 def ohlc(tier: DataFrame, value_col: str = "turn_count",
-         bucket_secs: int = 3600, by: str = "conv_id",
-         order_col: str = "window_start") -> DataFrame:
+         bucket_secs: int = 3600) -> DataFrame:
     """Candlestick reduction (TimescaleDB candlestick_agg): per
     (series, bucket) the open/high/low/close of ``value_col`` plus the
     slot count. Open/close are picked by min_by/max_by on the slot
@@ -38,9 +38,9 @@ def ohlc(tier: DataFrame, value_col: str = "turn_count",
         F.floor(F.unix_timestamp(F.col("_t")) / bucket_secs)
         .cast("bigint") * bucket_secs)
     v = F.col(value_col)
-    return (tier.select(by, F.col(order_col).alias("_t"),
+    return (tier.select("conv_id", F.col("window_start").alias("_t"),
                         v.alias("_v"))
-                .groupBy(F.col(by), b.alias("bucket_start"))
+                .groupBy(F.col("conv_id"), b.alias("bucket_start"))
                 .agg(F.min_by("_v", "_t").alias("open"),
                      F.max("_v").alias("high"),
                      F.min("_v").alias("low"),
@@ -48,9 +48,7 @@ def ohlc(tier: DataFrame, value_col: str = "turn_count",
                      F.count(F.lit(1)).alias("n_slots")))
 
 
-def state_durations(tx: DataFrame, state_col: str = "role",
-                    by: str = "conv_id", ts_col: str = "ts",
-                    order_col: str = "turn_idx") -> DataFrame:
+def state_durations(tx: DataFrame, state_col: str = "role") -> DataFrame:
     """State accounting (TimescaleDB state_agg): total wall seconds a
     series spent in each state, where each event holds its state until
     the next event (the last event holds for 0s — the series has no
@@ -62,22 +60,21 @@ def state_durations(tx: DataFrame, state_col: str = "role",
     exact integer MICROSECONDS (unix_micros diffs — second-granularity
     epochs would force a truncate-vs-round choice that differs between
     engines)."""
-    w = Window.partitionBy(by).orderBy(ts_col, order_col)
-    e = F.unix_micros(F.col(ts_col))
+    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+    e = F.unix_micros(F.col("ts"))
     stepped = tx.select(
-        by, F.col(state_col).alias("state"),
+        "conv_id", F.col(state_col).alias("state"),
         (F.coalesce(F.lead(e).over(w), e) - e).alias("_dur"),
         F.when(F.lag(state_col).over(w).isNull()
                | (F.lag(state_col).over(w) != F.col(state_col)), 1)
          .otherwise(0).alias("_run_start"))
-    return (stepped.groupBy(by, "state")
+    return (stepped.groupBy("conv_id", "state")
                    .agg(F.sum("_dur").cast("long").alias("total_us"),
                         F.count(F.lit(1)).alias("n_events"),
                         F.sum("_run_start").cast("long").alias("n_runs")))
 
 
-def uptime_intervals(tx: DataFrame, tolerance_secs: int = 300,
-                     by: str = "conv_id", ts_col: str = "ts") -> DataFrame:
+def uptime_intervals(tx: DataFrame, tolerance_secs: int = 300) -> DataFrame:
     """Heartbeat/uptime accounting (TimescaleDB heartbeat_agg): treat
     each event timestamp as a liveness beat; merge beats closer than
     ``tolerance_secs`` into live intervals (gaps-and-islands), then
@@ -92,8 +89,8 @@ def uptime_intervals(tx: DataFrame, tolerance_secs: int = 300,
     (a ROWS frame here would be order-ambiguous). All times are exact
     integer MICROSECONDS (unix_micros); one partition-by-series window
     pass plus one groupBy."""
-    w = Window.partitionBy(by).orderBy("_e")
-    beats = tx.select(by, F.unix_micros(F.col(ts_col)).alias("_e"))
+    w = Window.partitionBy("conv_id").orderBy("_e")
+    beats = tx.select("conv_id", F.unix_micros(F.col("ts")).alias("_e"))
     gap = F.col("_e") - F.lag("_e").over(w)
     tol_us = int(tolerance_secs) * 1_000_000
     beats = beats.withColumn(
@@ -102,9 +99,9 @@ def uptime_intervals(tx: DataFrame, tolerance_secs: int = 300,
     isl = beats.withColumn(
         "_isl", F.sum("_start").over(
             w.rangeBetween(Window.unboundedPreceding, Window.currentRow)))
-    per_isl = (isl.groupBy(by, "_isl")
+    per_isl = (isl.groupBy("conv_id", "_isl")
                   .agg(F.min("_e").alias("_i0"), F.max("_e").alias("_i1")))
-    return (per_isl.groupBy(by)
+    return (per_isl.groupBy("conv_id")
                    .agg(F.count(F.lit(1)).alias("n_intervals"),
                         F.sum(F.col("_i1") - F.col("_i0")).cast("long")
                          .alias("uptime_us"),
@@ -112,8 +109,8 @@ def uptime_intervals(tx: DataFrame, tolerance_secs: int = 300,
                          .alias("span_us")))
 
 
-def acf(tier: DataFrame, value_col: str = "turn_count", max_lag: int = 5,
-        by: str = "conv_id", order_col: str = "window_start") -> DataFrame:
+def acf(tier: DataFrame, value_col: str = "turn_count",
+        max_lag: int = 5) -> DataFrame:
     """Autocorrelation function at lags 1..max_lag per series, the
     standard biased estimator with the FULL-series mean:
 
@@ -137,7 +134,6 @@ def acf(tier: DataFrame, value_col: str = "turn_count", max_lag: int = 5,
     long form — one shuffle total."""
     if max_lag < 1:
         raise ValueError("max_lag must be >= 1")
-    w = Window.partitionBy(by).orderBy(order_col)
     # sum128 moments (r6): per-row terms (x, x^2, x*lag) are int64 for any
     # |x| < ~3e9 (counts/token sums sit orders of magnitude below), and
     # the hi/lo split sums are exact at any group size — bit-identical to
@@ -147,11 +143,11 @@ def acf(tier: DataFrame, value_col: str = "turn_count", max_lag: int = 5,
     from yatsm_spark.operators.tsfuncs import sum128
 
     x = F.col(value_col).cast("long")
-    src = tier.select(by, F.col(order_col).alias("_t"), x.alias("_x"))
+    src = tier.select("conv_id", F.col("window_start").alias("_t"),
+                      x.alias("_x"))
+    w = Window.partitionBy("conv_id").orderBy("_t")
     for lag in range(1, max_lag + 1):
-        src = src.withColumn(f"_g{lag}",
-                             F.lag("_x", lag).over(
-                                 Window.partitionBy(by).orderBy("_t")))
+        src = src.withColumn(f"_g{lag}", F.lag("_x", lag).over(w))
     terms = {"_sx": F.col("_x"), "_sxx": F.col("_x") * F.col("_x")}
     extra = []
     for lag in range(1, max_lag + 1):
@@ -162,10 +158,10 @@ def acf(tier: DataFrame, value_col: str = "turn_count", max_lag: int = 5,
         terms[f"_t{lag}"] = g
         extra.append(F.count(g).cast("decimal(38,0)").alias(f"_m{lag}"))
     s_aggs, rebuild = sum128(terms)
-    m = (src.groupBy(by)
+    m = (src.groupBy("conv_id")
             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("_n"),
                  *s_aggs, *extra)
-            .select(F.col(by), "_n", *rebuild,
+            .select(F.col("conv_id"), "_n", *rebuild,
                     *[f"_m{lag}" for lag in range(1, max_lag + 1)]))
     n, sx, sxx = F.col("_n"), F.col("_sx"), F.col("_sxx")
     a0 = (n * n * sxx - n * sx * sx).cast("decimal(38,0)")
@@ -180,16 +176,15 @@ def acf(tier: DataFrame, value_col: str = "turn_count", max_lag: int = 5,
             F.when((a0 > 0) & (F.col(f"_m{lag}") > 0),
                    snap6(al.cast("double") / a0.cast("double")))
              .alias("acf")))
-    return (m.select(F.col(by), n.cast("long").alias("n_points"),
+    return (m.select(F.col("conv_id"), n.cast("long").alias("n_points"),
                      F.explode(F.array(*rows)).alias("_r"))
-             .select(by, "n_points", F.col("_r.lag").alias("lag"),
+             .select("conv_id", "n_points", F.col("_r.lag").alias("lag"),
                      F.col("_r.acf").alias("acf")))
 
 
 def seasonal_decompose(tier: DataFrame, value_col: str = "turn_count",
-                       period: int = 24, slot_secs: int = 3600,
-                       by: str = "conv_id",
-                       order_col: str = "window_start") -> DataFrame:
+                       period: int = 24,
+                       slot_secs: int = 3600) -> DataFrame:
     """Classical additive decomposition x = trend + seasonal + resid
     over a DENSE (gap-filled) tier with an EVEN period:
 
@@ -216,14 +211,14 @@ def seasonal_decompose(tier: DataFrame, value_col: str = "turn_count",
         raise ValueError("period must be even (2xMA centered trend)")
     half = period // 2
     two_p = 2 * period
-    wk = Window.partitionBy(by).orderBy(order_col)
+    wk = Window.partitionBy("conv_id").orderBy("window_start")
     x = F.col(value_col).cast("decimal(38,0)")
     s1w = wk.rowsBetween(-half, half - 1)
     s2w = wk.rowsBetween(-half + 1, half)
     src = tier.select(
-        by, order_col, F.col(value_col),
+        "conv_id", "window_start", F.col(value_col),
         x.alias("_x"),
-        (F.floor(F.unix_timestamp(F.col(order_col)) / slot_secs)
+        (F.floor(F.unix_timestamp(F.col("window_start")) / slot_secs)
          % period).cast("int").alias("phase"))
     t = (src.withColumn("_s1", F.sum("_x").over(s1w))
             .withColumn("_c1", F.count("_x").over(s1w))
@@ -236,14 +231,14 @@ def seasonal_decompose(tier: DataFrame, value_col: str = "turn_count",
     t = t.withColumn("_d2p",
                      (F.lit(two_p) * F.col("_x") - F.col("_tr2p"))
                      .cast("decimal(38,0)"))
-    pw = Window.partitionBy(by, "phase")
+    pw = Window.partitionBy("conv_id", "phase")
     t = (t.withColumn("_sp", F.sum("_d2p").over(pw))
           .withColumn("_cp", F.count("_d2p").over(pw)
                              .cast("decimal(38,0)")))
     den_t = F.lit(float(two_p))
     den_s = (F.lit(two_p) * F.col("_cp")).cast("double")
     return t.select(
-        by, order_col, value_col, "phase",
+        "conv_id", "window_start", value_col, "phase",
         snap6(F.col("_tr2p").cast("double") / den_t).alias("trend"),
         F.when(F.col("_cp") > 0,
                snap6(F.col("_sp").cast("double") / den_s))
@@ -254,8 +249,8 @@ def seasonal_decompose(tier: DataFrame, value_col: str = "turn_count",
          .alias("resid"))
 
 
-def ccf(tier: DataFrame, x_col: str, y_col: str, max_lag: int = 3,
-        by: str = "conv_id", order_col: str = "window_start") -> DataFrame:
+def ccf(tier: DataFrame, x_col: str, y_col: str,
+        max_lag: int = 3) -> DataFrame:
     """Cross-correlation function between two measures at lags
     -max_lag..+max_lag per series (positive lag = x correlates with y
     ``lag`` slots EARLIER; negative = x leads y). Same exact-moment
@@ -273,8 +268,8 @@ def ccf(tier: DataFrame, x_col: str, y_col: str, max_lag: int = 3,
     One window pass + one groupBy — one shuffle total."""
     if max_lag < 1:
         raise ValueError("max_lag must be >= 1")
-    w = Window.partitionBy(by).orderBy("_t")
-    src = tier.select(by, F.col(order_col).alias("_t"),
+    w = Window.partitionBy("conv_id").orderBy("_t")
+    src = tier.select("conv_id", F.col("window_start").alias("_t"),
                       F.col(x_col).cast("decimal(38,0)").alias("_x"),
                       F.col(y_col).cast("decimal(38,0)").alias("_y"))
     for k in range(1, max_lag + 1):
@@ -299,7 +294,7 @@ def ccf(tier: DataFrame, x_col: str, y_col: str, max_lag: int = 3,
             F.sum(F.when(gx.isNotNull(), F.col("_y"))).alias(f"_tn{k}"),
             F.count(gx).cast("decimal(38,0)").alias(f"_mn{k}"),
         ]
-    m = src.groupBy(by).agg(*aggs)
+    m = src.groupBy("conv_id").agg(*aggs)
     n, sx, sy = F.col("_n"), F.col("_sx"), F.col("_sy")
     vx = (n * n * F.col("_sxx") - n * sx * sx).cast("decimal(38,0)")
     vy = (n * n * F.col("_syy") - n * sy * sy).cast("decimal(38,0)")
@@ -324,11 +319,11 @@ def ccf(tier: DataFrame, x_col: str, y_col: str, max_lag: int = 3,
             F.lit(k).alias("lag"),
             _num(F.col(f"_pp{k}"), F.col(f"_hp{k}"), F.col(f"_tp{k}"),
                  F.col(f"_mp{k}")).alias("_num")))
-    return (m.select(F.col(by), n.cast("long").alias("n_points"),
+    return (m.select(F.col("conv_id"), n.cast("long").alias("n_points"),
                      (vx > 0).alias("_okx"), (vy > 0).alias("_oky"),
                      den.alias("_den"),
                      F.explode(F.array(*rows)).alias("_r"))
-             .select(by, "n_points", F.col("_r.lag").alias("lag"),
+             .select("conv_id", "n_points", F.col("_r.lag").alias("lag"),
                      F.when(F.col("_okx") & F.col("_oky"),
                             snap6(F.col("_r._num").cast("double")
                                   / F.col("_den"))).alias("ccf")))
@@ -346,8 +341,7 @@ SAX_LETTERS = "abcde"
 
 
 def sax_paa(tier: DataFrame, value_col: str = "turn_count", w: int = 16,
-            alphabet: int = 4, by: str = "conv_id",
-            order_col: str = "window_start") -> DataFrame:
+            alphabet: int = 4) -> DataFrame:
     """SAX (Lin et al. 2003): Piecewise Aggregate Approximation of each
     series into ``w`` segments, z-normalized per series, binned to
     letters at the Gaussian breakpoints. Long form: one row per
@@ -364,11 +358,11 @@ def sax_paa(tier: DataFrame, value_col: str = "turn_count", w: int = 16,
     everything hash-partitions on the series key."""
     if alphabet not in SAX_BREAKPOINTS:
         raise ValueError(f"alphabet must be one of {set(SAX_BREAKPOINTS)}")
-    wk = Window.partitionBy(by).orderBy(order_col)
+    wk = Window.partitionBy("conv_id").orderBy("window_start")
     x = F.col(value_col).cast("decimal(38,0)")
-    src = tier.select(by, order_col, x.alias("_x")).withColumn(
+    src = tier.select("conv_id", "window_start", x.alias("_x")).withColumn(
         "_i", F.row_number().over(wk) - 1)
-    mw = Window.partitionBy(by)
+    mw = Window.partitionBy("conv_id")
     src = (src.withColumn("_n", F.count(F.lit(1)).over(mw)
                                   .cast("decimal(38,0)"))
               .withColumn("_sx", F.sum("_x").over(mw))
@@ -377,7 +371,7 @@ def sax_paa(tier: DataFrame, value_col: str = "turn_count", w: int = 16,
               .withColumn("seg", F.floor(F.col("_i") * w
                                          / F.col("_n").cast("long"))
                                   .cast("int")))
-    g = (src.groupBy(by, "seg")
+    g = (src.groupBy("conv_id", "seg")
             .agg(F.count(F.lit(1)).alias("n_in_seg"),
                  F.sum("_x").alias("_sp"),
                  F.first("_n").alias("_n"), F.first("_sx").alias("_sx"),
@@ -400,29 +394,27 @@ def sax_paa(tier: DataFrame, value_col: str = "turn_count", w: int = 16,
                                 F.substring(F.lit(SAX_LETTERS[:alphabet]),
                                             1, alphabet)
                                  .substr(idx + 1, F.lit(1))))
-             .select(by, "seg", "n_in_seg", "paa", "letter"))
+             .select("conv_id", "seg", "n_in_seg", "paa", "letter"))
 
 
 def sax_words(tier: DataFrame, value_col: str = "turn_count", w: int = 16,
-              alphabet: int = 4, by: str = "conv_id",
-              order_col: str = "window_start") -> DataFrame:
+              alphabet: int = 4) -> DataFrame:
     """The SAX word per series: letters of ``sax_paa`` concatenated in
     segment order (struct-sort — no order-sensitive collect). NULL when
     the series has zero variance."""
-    p = sax_paa(tier, value_col, w, alphabet, by, order_col)
+    p = sax_paa(tier, value_col, w, alphabet)
     word = F.concat_ws("", F.transform(
         F.array_sort(F.collect_list(F.struct("seg", "letter"))),
         lambda s: s["letter"]))
-    return (p.groupBy(by)
+    return (p.groupBy("conv_id")
              .agg(F.count(F.lit(1)).alias("n_segments"),
                   F.min(F.col("letter").isNotNull()).alias("_has"),
                   word.alias("_w"))
-             .select(by, "n_segments",
+             .select("conv_id", "n_segments",
                      F.when(F.col("_has"), F.col("_w")).alias("sax_word")))
 
 
 def sax_candidate_pairs(words: DataFrame, max_bucket: int = 64,
-                        by: str = "conv_id",
                         word_col: str = "sax_word") -> DataFrame:
     """Series near-dup candidate pairs from SAX words (a < b), with the
     dedup family's hot-bucket discipline: a word shared by m series
@@ -431,21 +423,20 @@ def sax_candidate_pairs(words: DataFrame, max_bucket: int = 64,
     Words over ``max_bucket`` are removed BEFORE the self-join by a
     broadcast anti-join of the (tiny by construction) hot-word set —
     never by broadcasting the corpus-sized keep set."""
-    w = words.where(F.col(word_col).isNotNull()).select(by, word_col)
+    w = words.where(F.col(word_col).isNotNull()).select("conv_id", word_col)
     hot = (w.groupBy(word_col).agg(F.count(F.lit(1)).alias("_sz"))
              .filter(F.col("_sz") > max_bucket))
     w = w.join(F.broadcast(hot.select(word_col)), word_col, "left_anti")
     a, b = w.alias("a"), w.alias("b")
     return (a.join(b, (F.col(f"a.{word_col}") == F.col(f"b.{word_col}"))
-                   & (F.col(f"a.{by}") < F.col(f"b.{by}")))
-             .select(F.col(f"a.{by}").alias("conv_a"),
-                     F.col(f"b.{by}").alias("conv_b"),
+                   & (F.col("a.conv_id") < F.col("b.conv_id")))
+             .select(F.col("a.conv_id").alias("conv_a"),
+                     F.col("b.conv_id").alias("conv_b"),
                      F.col(f"a.{word_col}").alias(word_col)))
 
 
 def distribution_shift(tier: DataFrame, value_col: str = "turn_count",
-                       cap: int = 64, by: str = "conv_id",
-                       order_col: str = "window_start") -> DataFrame:
+                       cap: int = 64) -> DataFrame:
     """Two-sample chi-square homogeneity test between the FIRST and
     SECOND half of each series' value distribution — the batch
     regime-shift detector complementing the online monitor
@@ -471,16 +462,16 @@ def distribution_shift(tier: DataFrame, value_col: str = "turn_count",
     then two hash aggs that both cluster on the series key — the
     (conv, bucket) agg and the final conv agg reuse the window's
     exchange (subset rule); one shuffle total."""
-    w = Window.partitionBy(by).orderBy(order_col)
-    cw = Window.partitionBy(by)
-    src = (tier.select(by, order_col, F.col(value_col).alias("_v"))
+    cw = Window.partitionBy("conv_id")
+    w = cw.orderBy("window_start")
+    src = (tier.select("conv_id", "window_start", F.col(value_col).alias("_v"))
                .withColumn("_i", F.row_number().over(w) - 1)
                .withColumn("_n", F.count(F.lit(1)).over(cw)))
     src = (src.withColumn("_half",
                           F.when(F.col("_i") < F.floor(F.col("_n") / 2), 0)
                            .otherwise(1))
               .withColumn("_b", F.least(F.col("_v"), F.lit(cap))))
-    g = (src.groupBy(by, "_b")
+    g = (src.groupBy("conv_id", "_b")
             .agg(F.sum(F.when(F.col("_half") == 0, 1).otherwise(0))
                   .cast("decimal(38,0)").alias("_o1"),
                  F.sum(F.when(F.col("_half") == 1, 1).otherwise(0))
@@ -494,13 +485,13 @@ def distribution_shift(tier: DataFrame, value_col: str = "turn_count",
     den = (n1 * n2 * (o1 + o2)).cast("decimal(38,0)")
     term6 = micro6(num.cast("double") / den.cast("double")).cast("decimal(38,0)")
     agg = (g.withColumn("_t6", F.when((n1 > 0) & (n2 > 0), term6))
-            .groupBy(by)
+            .groupBy("conv_id")
             .agg(F.max("_n").alias("n_points"),
                  F.count(F.lit(1)).alias("_nb"),
                  F.sum("_t6").alias("_s6")))
     ok = F.col("n_points") >= 2
     return agg.select(
-        by, F.col("n_points"),
+        "conv_id", F.col("n_points"),
         F.when(ok, F.col("_nb") - 1).cast("long").alias("dof"),
         F.when(ok, F.col("_s6").cast("double") / F.lit(1e6)).alias("chi2"))
 
@@ -522,9 +513,7 @@ def trig_micro_tables(period: int) -> tuple[list[int], list[int]]:
 
 
 def periodogram(tier: DataFrame, periods=(30, 60, 120, 240),
-                value_col: str = "turn_count", by: str = "conv_id",
-                time_col: str = "window_start",
-                slot_seconds: int = 60,
+                value_col: str = "turn_count",
                 min_cycles: int = 2) -> DataFrame:
     """Harmonic power scan — the dominant-period detector that feeds the
     engine's harmonic fits (YATSM fixes the seasonal frequency a priori;
@@ -547,18 +536,19 @@ def periodogram(tier: DataFrame, periods=(30, 60, 120, 240),
     DuckDB oracle. Periods with fewer than ``min_cycles`` full cycles of
     grid coverage, or zero series variance, emit NULL power.
 
-    Input should be the GAP-FILLED tier (zeros present): absent slots
-    are part of the sampled grid, and a periodogram over a grid with
-    holes mis-weights the trig sums. Scale shape: explode x |periods|
-    (constant factor), ONE (series, period) hash agg with map-side
-    partials, then a tiny window over the aggregated rows for the
-    dominant flag. No UDFs, no collect; the lookup arrays are plan
-    literals."""
-    slot = F.floor(F.col(time_col).cast("double") / F.lit(float(slot_seconds))).cast("long")
+    Input is the GAP-FILLED 1m tier (zeros present; periods count 1m
+    slots): absent slots are part of the sampled grid, and a periodogram
+    over a grid with holes mis-weights the trig sums. Scale shape:
+    explode x |periods| (constant factor), ONE (series, period) hash agg
+    with map-side partials, then a tiny window over the aggregated rows
+    for the dominant flag. No UDFs, no collect; the lookup arrays are
+    plan literals."""
+    slot = F.floor(F.col("window_start").cast("double")
+                   / F.lit(float(TIERS["1m"]))).cast("long")
     x = F.col(value_col).cast("long")
 
     exp = tier.select(
-        F.col(by), slot.alias("_slot"), x.alias("_x"),
+        F.col("conv_id"), slot.alias("_slot"), x.alias("_x"),
         F.explode(F.array(*[F.lit(int(p)) for p in periods])).alias("period"))
 
     ccol, scol = None, None
@@ -576,7 +566,7 @@ def periodogram(tier: DataFrame, periods=(30, 60, 120, 240),
             ccol = ccol.when(F.col("period") == p, cc)
             scol = scol.when(F.col("period") == p, ss)
 
-    w = exp.select(F.col(by), "period", "_x",
+    w = exp.select(F.col("conv_id"), "period", "_x",
                    ccol.alias("_c"), scol.alias("_s"))
     d38 = "decimal(38,0)"
     # Exact 128-bit-style moment sums WITHOUT per-row decimal arithmetic:
@@ -601,9 +591,9 @@ def periodogram(tier: DataFrame, periods=(30, 60, 120, 240),
              "_sxs": F.col("_x") * F.col("_s"),
              "_w2": F.col("_c") * F.col("_c") + F.col("_s") * F.col("_s")}
     aggs, rebuild = sum128(terms)
-    agg = (w.groupBy(by, "period")
+    agg = (w.groupBy("conv_id", "period")
             .agg(F.count(F.lit(1)).cast(d38).alias("_n"), *aggs)
-            .select(by, "period", "_n", *rebuild))
+            .select("conv_id", "period", "_n", *rebuild))
 
     n, sx, sxx = F.col("_n"), F.col("_sx"), F.col("_sxx")
     a = (n * F.col("_sxc") - sx * F.col("_sc")).cast("double")
@@ -613,9 +603,9 @@ def periodogram(tier: DataFrame, periods=(30, 60, 120, 240),
     power = F.when(
         (varn > 0) & (n >= F.col("period").cast(d38) * min_cycles),
         F.round(F.lit(2.0) * (a * a + b * b) / denom, 6))
-    scored = agg.select(F.col(by), "period", power.alias("power"))
+    scored = agg.select(F.col("conv_id"), "period", power.alias("power"))
 
-    win = Window.partitionBy(by).orderBy(
+    win = Window.partitionBy("conv_id").orderBy(
         F.col("power").desc_nulls_last(), F.col("period").asc())
     return scored.withColumn(
         "dominant",

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from yatsm_spark.kernel import smooth, vecmath
 from yatsm_spark.operators.grid import snap6
-from yatsm_spark.operators.series import per_series
+from yatsm_spark.operators.series import per_conv
 
 
 def sum128(terms: dict):
@@ -66,14 +66,13 @@ def sum128(terms: dict):
     return aggs, rebuild
 
 
-def locf(filled: DataFrame, value_cols: list[str], by: str = "conv_id",
-         order_col: str = "window_start") -> DataFrame:
+def locf(filled: DataFrame, value_cols: list[str]) -> DataFrame:
     """Last-observation-carried-forward over NULL-on-gap measure columns
     of a gap-filled tier. Types are preserved (long stays long — no
     arithmetic happens). Gap-fill spans start at a real slot, so every
     gap row has a predecessor and the result has no remaining nulls.
     """
-    w = (Window.partitionBy(by).orderBy(order_col)
+    w = (Window.partitionBy("conv_id").orderBy("window_start")
                .rowsBetween(Window.unboundedPreceding, 0))
     out = filled
     for c in value_cols:
@@ -81,9 +80,7 @@ def locf(filled: DataFrame, value_cols: list[str], by: str = "conv_id",
     return out
 
 
-def interp_linear(filled: DataFrame, value_cols: list[str],
-                  by: str = "conv_id",
-                  order_col: str = "window_start") -> DataFrame:
+def interp_linear(filled: DataFrame, value_cols: list[str]) -> DataFrame:
     """Linear interpolation across gap runs: each NULL-on-gap value
     becomes prev + (next - prev) * elapsed-fraction, where prev/next are
     the nearest REAL observations (gap-fill guarantees both exist —
@@ -93,11 +90,10 @@ def interp_linear(filled: DataFrame, value_cols: list[str],
     1e-6-snapped interpolations on gap rows. Two window frames
     (preceding / following) over the same partitioning — one shuffle.
     """
-    secs = F.unix_timestamp(F.col(order_col))
-    wp = (Window.partitionBy(by).orderBy(order_col)
-                .rowsBetween(Window.unboundedPreceding, 0))
-    wn = (Window.partitionBy(by).orderBy(order_col)
-                .rowsBetween(0, Window.unboundedFollowing))
+    secs = F.unix_timestamp(F.col("window_start"))
+    w = Window.partitionBy("conv_id").orderBy("window_start")
+    wp = w.rowsBetween(Window.unboundedPreceding, 0)
+    wn = w.rowsBetween(0, Window.unboundedFollowing)
     out = filled
     for c in value_cols:
         v = F.col(c)
@@ -113,15 +109,13 @@ def interp_linear(filled: DataFrame, value_cols: list[str],
     return out
 
 
-def counter_increase(df: DataFrame, counter_col: str,
-                     by: str = "conv_id",
-                     order_col: str = "window_start") -> DataFrame:
+def counter_increase(df: DataFrame, counter_col: str) -> DataFrame:
     """PromQL-style reset-aware per-row increase of a monotonic counter:
     value - prev when the counter advanced, value itself after a reset
     (the counter restarted from 0 and climbed to `value`), 0 on the
     first observation. Pure integer math.
     """
-    w = Window.partitionBy(by).orderBy(order_col)
+    w = Window.partitionBy("conv_id").orderBy("window_start")
     v = F.col(counter_col)
     prev = F.lag(v).over(w)
     inc = (F.when(prev.isNull(), F.lit(0))
@@ -130,18 +124,16 @@ def counter_increase(df: DataFrame, counter_col: str,
     return df.withColumn("increase", inc.cast("long"))
 
 
-def total_increase(df: DataFrame, counter_col: str, by: str = "conv_id",
-                   order_col: str = "window_start") -> DataFrame:
-    """(by, total_increase, n_points): the PromQL increase() aggregate —
-    sum of reset-aware deltas per series. Integer-exact end to end."""
-    return (counter_increase(df, counter_col, by, order_col)
-            .groupBy(by)
+def total_increase(df: DataFrame, counter_col: str) -> DataFrame:
+    """(conv_id, total_increase, n_points): the PromQL increase() aggregate
+    — sum of reset-aware deltas per series. Integer-exact end to end."""
+    return (counter_increase(df, counter_col)
+            .groupBy("conv_id")
             .agg(F.sum("increase").alias("total_increase"),
                  F.count(F.lit(1)).alias("n_points")))
 
 
-def ewma(df: DataFrame, value_col: str, alpha: float = 0.25,
-         by: str = "conv_id", order_col: str = "window_start") -> DataFrame:
+def ewma(df: DataFrame, value_col: str, alpha: float = 0.25) -> DataFrame:
     """Exponentially-weighted moving average per series:
     s_0 = x_0, s_i = alpha*x_i + (1-alpha)*s_{i-1} (the adjust=False /
     online-monitoring recurrence). One applyInPandas pass per series.
@@ -160,13 +152,13 @@ def ewma(df: DataFrame, value_col: str, alpha: float = 0.25,
             pdf[value_col].to_numpy(dtype=np.float64), alpha)
         return pdf
 
-    return per_series(df.select(by, order_col, value_col), by, order_col, fit,
-                      [by, order_col, value_col, "ewma double"], name="ewma")
+    return per_conv(df, [value_col], fit,
+                    ["conv_id", "window_start", value_col, "ewma double"],
+                    name="ewma")
 
 
-def time_weighted_avg(df: DataFrame, value_col: str, by: str = "conv_id",
-                      order_col: str = "window_start") -> DataFrame:
-    """(by, twa, span_secs): LOCF-weighted time average over an
+def time_weighted_avg(df: DataFrame, value_col: str) -> DataFrame:
+    """(conv_id, twa, span_secs): LOCF-weighted time average over an
     irregular (sparse) tier — each observation holds until the next
     one; the last observation of a series carries no weight (its
     holding interval is unknown), the TimescaleDB ``time_weight
@@ -176,32 +168,31 @@ def time_weighted_avg(df: DataFrame, value_col: str, by: str = "conv_id",
     order-independent — same discipline as the PCA moments); the one
     double division is snapped to the 1e-6 grid.
     """
-    w = Window.partitionBy(by).orderBy(order_col)
-    secs = F.unix_timestamp(F.col(order_col))
+    w = Window.partitionBy("conv_id").orderBy("window_start")
+    secs = F.unix_timestamp(F.col("window_start"))
     dur = (F.lead(secs).over(w) - secs)  # null on the last row
     weighted = (F.col(value_col) * dur).cast("decimal(38,0)")
     return (df.withColumn("_dur", dur)
               .withColumn("_wv", weighted)
-              .groupBy(by)
+              .groupBy("conv_id")
               .agg(snap6(F.sum("_wv").cast("double")
                          / F.sum(F.col("_dur").cast("decimal(38,0)"))
                              .cast("double")).alias("twa"),
                    F.sum("_dur").cast("long").alias("span_secs")))
 
 
-def rate_per_sec(df: DataFrame, counter_col: str, by: str = "conv_id",
-                 order_col: str = "window_start") -> DataFrame:
-    """(by, rate, total_increase, span_secs): PromQL ``rate()`` — the
+def rate_per_sec(df: DataFrame, counter_col: str) -> DataFrame:
+    """(conv_id, rate, total_increase, span_secs): PromQL ``rate()`` — the
     reset-aware total increase divided by the observed span. Integer
     numerator/denominator; the single division is 1e-6-snapped.
     Single-point series have span 0 and yield NULL rate (PromQL returns
     no sample there). One window shuffle + one agg on the same key —
     the agg reuses the window partitioning (exchange-reuse subset rule).
     """
-    secs = F.unix_timestamp(F.col(order_col))
-    inc = counter_increase(df, counter_col, by, order_col)
+    secs = F.unix_timestamp(F.col("window_start"))
+    inc = counter_increase(df, counter_col)
     return (inc.withColumn("_secs", secs)
-               .groupBy(by)
+               .groupBy("conv_id")
                .agg(F.sum("increase").cast("long").alias("total_increase"),
                     (F.max("_secs") - F.min("_secs")).cast("long")
                         .alias("span_secs"))
@@ -210,12 +201,11 @@ def rate_per_sec(df: DataFrame, counter_col: str, by: str = "conv_id",
                    F.when(F.col("span_secs") > 0,
                           snap6(F.col("total_increase").cast("double")
                                 / F.col("span_secs").cast("double"))))
-               .select(by, "rate", "total_increase", "span_secs"))
+               .select("conv_id", "rate", "total_increase", "span_secs"))
 
 
-def deriv(df: DataFrame, value_col: str, by: str = "conv_id",
-          order_col: str = "window_start") -> DataFrame:
-    """(by, n_points, slope): PromQL ``deriv()`` — the per-series
+def deriv(df: DataFrame, value_col: str) -> DataFrame:
+    """(conv_id, n_points, slope): PromQL ``deriv()`` — the per-series
     least-squares slope of value against time (per second).
 
     slope = (n*Sxy - Sx*Sy) / (n*Sxx - Sx*Sx) with x = seconds since
@@ -243,21 +233,21 @@ def deriv(df: DataFrame, value_col: str, by: str = "conv_id",
     # bound): per-row |x*value| < 2^63, i.e. |value| < 9.2e18 /
     # |secs - 1.6e9| — ~1.9e10 for data 15 years from the base; token/count
     # measures sit orders of magnitude below this.
-    secs = F.unix_timestamp(F.col(order_col))
+    secs = F.unix_timestamp(F.col("window_start"))
     x = (secs - F.lit(1_600_000_000)).cast("long")
     y = F.col(value_col).cast("long")
     aggs, rebuild = sum128({"_sx": F.col("_x"), "_sy": F.col("_y"),
                             "_sxy": F.col("_x") * F.col("_y"),
                             "_sxx": F.col("_x") * F.col("_x")})
-    m = (df.select(F.col(by), x.alias("_x"), y.alias("_y"))
-           .groupBy(by)
+    m = (df.select(F.col("conv_id"), x.alias("_x"), y.alias("_y"))
+           .groupBy("conv_id")
            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("_n"), *aggs)
-           .select(F.col(by), "_n", *rebuild))
+           .select(F.col("conv_id"), "_n", *rebuild))
     num = (F.col("_n") * F.col("_sxy") - F.col("_sx") * F.col("_sy"))
     den = (F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx"))
     return (m.withColumn("_num", num.cast("decimal(38,0)"))
              .withColumn("_den", den.cast("decimal(38,0)"))
-             .select(F.col(by),
+             .select(F.col("conv_id"),
                      F.col("_n").cast("long").alias("n_points"),
                      F.when(F.col("_den") > 0,
                             snap6(F.col("_num").cast("double")
@@ -265,9 +255,8 @@ def deriv(df: DataFrame, value_col: str, by: str = "conv_id",
                       .alias("slope")))
 
 
-def pearson_corr(df: DataFrame, x_col: str, y_col: str,
-                 by: str = "conv_id") -> DataFrame:
-    """(by, n_points, corr): per-series Pearson correlation of two
+def pearson_corr(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
+    """(conv_id, n_points, corr): per-series Pearson correlation of two
     integer measure columns, from exact-decimal moments:
 
         r = (n*Sxy - Sx*Sy) / (sqrt(n*Sxx - Sx^2) * sqrt(n*Syy - Sy^2))
@@ -288,10 +277,10 @@ def pearson_corr(df: DataFrame, x_col: str, y_col: str,
                             "_sxy": F.col("_x") * F.col("_y"),
                             "_sxx": F.col("_x") * F.col("_x"),
                             "_syy": F.col("_y") * F.col("_y")})
-    m = (df.select(F.col(by), xl.alias("_x"), yl.alias("_y"))
-           .groupBy(by)
+    m = (df.select(F.col("conv_id"), xl.alias("_x"), yl.alias("_y"))
+           .groupBy("conv_id")
            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("_n"), *aggs)
-           .select(F.col(by), "_n", *rebuild))
+           .select(F.col("conv_id"), "_n", *rebuild))
     num = (F.col("_n") * F.col("_sxy") - F.col("_sx") * F.col("_sy")) \
         .cast("decimal(38,0)")
     vx = (F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx")) \
@@ -300,14 +289,13 @@ def pearson_corr(df: DataFrame, x_col: str, y_col: str,
         .cast("decimal(38,0)")
     r = num.cast("double") / (F.sqrt(vx.cast("double"))
                               * F.sqrt(vy.cast("double")))
-    return (m.select(F.col(by),
+    return (m.select(F.col("conv_id"),
                      F.col("_n").cast("long").alias("n_points"),
                      F.when((vx > 0) & (vy > 0), snap6(r)).alias("corr")))
 
 
 def rolling_anomaly(df: DataFrame, value_col: str, k: int = 30,
-                    sigma: int = 3, min_n: int = 8, by: str = "conv_id",
-                    order_col: str = "window_start") -> DataFrame:
+                    sigma: int = 3, min_n: int = 8) -> DataFrame:
     """Rolling z-test anomaly flags: each point is compared against the
     mean/std of its own k PRECEDING rows (never itself — no
     contamination). Appends:
@@ -325,7 +313,7 @@ def rolling_anomaly(df: DataFrame, value_col: str, k: int = 30,
 
     One window shuffle; everything else is per-row expression work.
     """
-    w = (Window.partitionBy(by).orderBy(order_col)
+    w = (Window.partitionBy("conv_id").orderBy("window_start")
                .rowsBetween(-k, -1))
     d38 = "decimal(38,0)"
     # r6 shape: the frame aggregates are MATERIALIZED once as columns and
@@ -363,8 +351,7 @@ def rolling_anomaly(df: DataFrame, value_col: str, k: int = 30,
 
 
 def topk_slots(tier: DataFrame, value_col: str = "turn_count",
-               k: int = 5, by: str = "conv_id",
-               order_col: str = "window_start") -> DataFrame:
+               k: int = 5) -> DataFrame:
     """Each series' k busiest slots, ranked: rank 1 = largest value,
     ties broken by the EARLIER slot (the unique slot makes the rank
     total). Because the row_number filter matches the window's own
@@ -372,17 +359,16 @@ def topk_slots(tier: DataFrame, value_col: str = "turn_count",
     (the sample_stratified trick): each map task ships at most k rows
     per series it has seen — a hot conv costs k x maps rows in the
     shuffle, not its full series. Audited in BENCH/PLANS.md."""
-    w = Window.partitionBy(by).orderBy(F.col(value_col).desc(),
-                                       F.col(order_col).asc())
-    return (tier.select(by, order_col, value_col)
+    w = Window.partitionBy("conv_id").orderBy(F.col(value_col).desc(),
+                                              F.col("window_start").asc())
+    return (tier.select("conv_id", "window_start", value_col)
                 .withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= k))
 
 
 def alert_episodes(flags: DataFrame, value_col: str = "turn_count",
-                   flag_col: str = "is_anomaly", z_col: str = "zscore",
-                   by: str = "conv_id",
-                   order_col: str = "window_start") -> DataFrame:
+                   flag_col: str = "is_anomaly",
+                   z_col: str = "zscore") -> DataFrame:
     """Collapse per-slot anomaly flags into ALERT EPISODES — maximal
     runs of consecutive flagged rows (the Prometheus `ALERTS` /
     "pending for N" shape, applied after the fact): per episode the
@@ -407,7 +393,7 @@ def alert_episodes(flags: DataFrame, value_col: str = "turn_count",
     ``spark.sql.requireAllClusterKeysForDistribution=false`` (default)
     the agg reuses the window's exchange, so the operator costs ONE
     shuffle total."""
-    w = Window.partitionBy(by).orderBy(order_col)
+    w = Window.partitionBy("conv_id").orderBy("window_start")
     flagged = F.col(flag_col) == True  # noqa: E712 — NULL-safe on purpose
     base = (flags
             .withColumn("_rn", F.row_number().over(w))
@@ -418,10 +404,10 @@ def alert_episodes(flags: DataFrame, value_col: str = "turn_count",
     # by dev != 0): order those FIRST so max_by picks a real peak when
     # one exists, deterministically via the unique slot tie-break.
     zkey = F.struct(F.coalesce(F.col(z_col), F.lit(float("-inf"))).alias("z"),
-                    F.col(order_col).alias("t"))
-    return (base.groupBy(by, "_isl")
-                .agg(F.min(order_col).alias("episode_start"),
-                     F.max(order_col).alias("episode_end"),
+                    F.col("window_start").alias("t"))
+    return (base.groupBy("conv_id", "_isl")
+                .agg(F.min("window_start").alias("episode_start"),
+                     F.max("window_start").alias("episode_end"),
                      F.count(F.lit(1)).alias("n_slots"),
                      F.max(z_col).alias("peak_zscore"),
                      F.max_by(F.col(value_col), zkey).alias("peak_value"))
@@ -431,8 +417,6 @@ def alert_episodes(flags: DataFrame, value_col: str = "turn_count",
 def holt_winters_backtest(df: DataFrame, value_col: str,
                           alpha: float = 0.5, beta: float = 0.25,
                           gamma: float = 0.25, period: int = 24,
-                          by: str = "conv_id",
-                          order_col: str = "window_start",
                           max_n: int = 4096) -> DataFrame:
     """One-step-ahead forecast backtest of ``holt_winters``: run the
     same kernel (kernel/smooth.py), forecast each slot i >= 1 as
@@ -491,20 +475,19 @@ def holt_winters_backtest(df: DataFrame, value_col: str,
                 mase = vecmath.snap6(float(sum_ae6 * n_naive)
                                      / float(ne * sum_naive * 10 ** 6))
         return pd.DataFrame(
-            {by: [key], "n_eval": [ne],
+            {"conv_id": [key], "n_eval": [ne],
              "mae": pd.array([mae], dtype="Float64"),
              "rmse": pd.array([rmse], dtype="Float64"),
              "smape": pd.array([smape], dtype="Float64"),
              "mase": pd.array([mase], dtype="Float64")})
 
-    return per_series(df.select(by, order_col, value_col), by, order_col, fit,
-                      [by, "n_eval long", "mae double", "rmse double",
-                       "smape double", "mase double"],
-                      max_n=max_n, name="holt_winters_backtest")
+    return per_conv(df, [value_col], fit,
+                    ["conv_id", "n_eval long", "mae double", "rmse double",
+                     "smape double", "mase double"],
+                    max_n=max_n, name="holt_winters_backtest")
 
 
 def theil_sen(tier: DataFrame, value_col: str = "turn_count",
-              by: str = "conv_id", order_col: str = "window_start",
               max_n: int = 4096) -> DataFrame:
     """Theil–Sen robust trend per series: slope = median of all
     pairwise slopes (x_j - x_i) / (t_j - t_i), i < j; intercept =
@@ -537,10 +520,10 @@ def theil_sen(tier: DataFrame, value_col: str = "turn_count",
             # nullable Float64 -> Arrow null (a bare np.nan would emit
             # NaN, which Spark treats as a VALUE distinct from NULL)
             return pd.DataFrame(
-                {by: [key], "n_points": [n],
+                {"conv_id": [key], "n_points": [n],
                  "slope": pd.array([None], dtype="Float64"),
                  "intercept": pd.array([None], dtype="Float64")})
-        t_us = pdf[order_col].to_numpy(dtype="datetime64[us]").astype(np.int64)
+        t_us = pdf["window_start"].to_numpy(dtype="datetime64[us]").astype(np.int64)
         t = (t_us - t_us[0]) // 1_000_000          # exact int seconds
         x = pdf[value_col].to_numpy(dtype=np.int64)
         iu = np.triu_indices(n, k=1)
@@ -552,18 +535,17 @@ def theil_sen(tier: DataFrame, value_col: str = "turn_count",
         resid = np.sort(x.astype(np.float64) - sl * t.astype(np.float64))
         ic = float(resid[(len(resid) - 1) // 2])
         ic = vecmath.snap6(ic)
-        return pd.DataFrame({by: [key], "n_points": [n],
+        return pd.DataFrame({"conv_id": [key], "n_points": [n],
                              "slope": [sl], "intercept": [ic]})
 
-    return per_series(tier.select(by, order_col, value_col), by, order_col,
-                      fit, [by, "n_points long", "slope double",
-                            "intercept double"],
-                      max_n=max_n, name="theil_sen")
+    return per_conv(tier, [value_col], fit,
+                    ["conv_id", "n_points long", "slope double",
+                     "intercept double"],
+                    max_n=max_n, name="theil_sen")
 
 
 def holt(df: DataFrame, value_col: str, alpha: float = 0.5,
-         beta: float = 0.25, by: str = "conv_id",
-         order_col: str = "window_start") -> DataFrame:
+         beta: float = 0.25) -> DataFrame:
     """Holt double exponential smoothing (level + trend) per series:
 
         s_0 = x_0, b_0 = 0
@@ -595,15 +577,14 @@ def holt(df: DataFrame, value_col: str, alpha: float = 0.5,
         pdf["trend"] = tr
         return pdf
 
-    return per_series(df.select(by, order_col, value_col), by, order_col, fit,
-                      [by, order_col, value_col, "level double",
-                       "trend double"], name="holt")
+    return per_conv(df, [value_col], fit,
+                    ["conv_id", "window_start", value_col, "level double",
+                     "trend double"], name="holt")
 
 
 def holt_winters(df: DataFrame, value_col: str, alpha: float = 0.5,
                  beta: float = 0.25, gamma: float = 0.25,
-                 period: int = 24, by: str = "conv_id",
-                 order_col: str = "window_start") -> DataFrame:
+                 period: int = 24) -> DataFrame:
     """Holt-Winters additive triple exponential smoothing per series:
 
         l_0 = x_0, b_0 = 0, s_0 = 0
@@ -632,7 +613,7 @@ def holt_winters(df: DataFrame, value_col: str, alpha: float = 0.5,
             pdf[value_col].to_numpy(dtype=np.float64), alpha, beta, gamma, p)
         return pdf
 
-    return per_series(df.select(by, order_col, value_col), by, order_col, fit,
-                      [by, order_col, value_col, "level double",
-                       "trend double", "seasonal double"],
-                      name="holt_winters")
+    return per_conv(df, [value_col], fit,
+                    ["conv_id", "window_start", value_col, "level double",
+                     "trend double", "seasonal double"],
+                    name="holt_winters")

@@ -141,7 +141,7 @@ def run_pipeline(
     if not (resume and store.exists(staging) and ckpt.is_done("staging", -1, stage_fp)):
         measures = with_bucket(with_measures(transcripts), cfg.n_buckets)
         t = time.time()
-        store.write(measures, staging, partition_by=("bucket",))
+        store.write(measures, staging)
         ckpt.commit("staging", -1, stage_fp, n_turns, (time.time() - t) * 1000)
     metrics.staged_turns = n_turns
     staged = store.read(spark, staging)

@@ -1,21 +1,28 @@
-"""Storage layer: one writer interface over parquet-now / Iceberg-later.
+"""Storage layer: the pipeline's bucketed parquet tables.
 
 Parity anchor: S6 result sink (yatsm/cli/line.py np.savez per row → here
 partitioned table appends [M]) and S5 line cache (yatsm/cache.py [H] → the
 materialized 1m tier IS the cache).
 
-The sandbox has no Iceberg jars (SURVEY.md §7.4), so the default backend is
-a partitioned parquet layout with the SAME partition spec the Iceberg DDL
-would use:
+``ParquetStorage`` is the engine's one backend; ``pipeline.run_pipeline``
+constructs it directly. Every table is a partitioned parquet layout with
+the SAME partition spec the Iceberg DDL would use:
 
     {root}/{table}/bucket=<k>/...   with bucket = pmod(xxhash64(conv_id), B)
 
-On a real cluster swap ParquetStorage for IcebergStorage (writeTo(...)
-.append(), MERGE INTO for reconcile) — the engine only talks to the
-Storage protocol. Bucketed layout co-locates every per-conv operation
-(rollup groups, kernel groups, chunk groups) so downstream stages shuffle
-within buckets only; at 10^12 turns the bucket count B is the unit of
-checkpoint/resume (SURVEY.md §4 partitioning row).
+Bucketed layout co-locates every per-conv operation (rollup groups, kernel
+groups, chunk groups) so downstream stages shuffle within buckets only; at
+10^12 turns the bucket count B is the unit of checkpoint/resume (SURVEY.md
+§4 partitioning row). ``write_bucket`` commits a bucket by staging it under
+a dot-prefixed name, which Spark's file listing skips, and renaming it into
+place, so a crash between the two never shows a half-written bucket to a
+reader.
+
+``IcebergStorage`` is the SQL a cluster catalog would run for the same
+tables (writeTo(...).append(), MERGE INTO for reconcile, DELETE for
+eviction), checked by tests/test_iceberg_contract.py. It implements none of
+``write_bucket``, ``buckets``, ``drop_bucket`` or ``bucket_size``, so it is
+not a drop-in replacement for ``ParquetStorage`` in the pipeline.
 
 On-disk format (``TIER_FORMAT_VERSION``): every table is written with
 timestamps as INT64 ``TIMESTAMP_MICROS`` and with Parquet v2 data pages.
@@ -139,18 +146,20 @@ class ParquetStorage:
         with scoped_conf(df.sparkSession.conf, _TS_TYPE_CONF, "TIMESTAMP_MICROS"):
             writer.option("parquet.writer.version", "v2").parquet(path)
 
-    def write(self, df: DataFrame, table: str, mode: str = "overwrite",
-              partition_by: tuple[str, ...] = ("bucket",)) -> None:
-        if "bucket" in partition_by and "bucket" not in df.columns:
-            df = with_bucket(df, self.n_buckets)
-        self._write_parquet(df, df.write.mode(mode).partitionBy(*partition_by),
+    def write(self, df: DataFrame, table: str) -> None:
+        """Overwrite ``table`` with ``df``, partitioned on its ``bucket``
+        column (``with_bucket``)."""
+        self._write_parquet(df, df.write.mode("overwrite").partitionBy("bucket"),
                             self.path(table))
 
     def write_bucket(self, df: DataFrame, table: str, bucket: int) -> None:
-        """Atomic per-bucket write: tmp dir + rename (the graft's analogue
-        of the reference's one-.npz-per-row commit, S6)."""
+        """Atomic per-bucket write: staged dir + rename (the graft's
+        analogue of the reference's one-.npz-per-row commit, S6). The
+        staged dir sits next to the bucket, so the rename stays in one
+        file system, and starts with a dot, so a read of the table skips
+        it while it is uncommitted."""
         final = os.path.join(self.path(table), f"bucket={bucket}")
-        tmp = final + ".inprogress"
+        tmp = os.path.join(self.path(table), f".bucket={bucket}.inprogress")
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         writer = (df.write.mode("overwrite").option("compression", "zstd")
@@ -183,21 +192,14 @@ class ParquetStorage:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.option("basePath", self.path(table)).parquet(self.path(table))
 
-    def read_bucket(self, spark: SparkSession, table: str, bucket: int) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.path(table), f"bucket={bucket}"))
-
     def exists(self, table: str) -> bool:
         return os.path.exists(self.path(table))
 
-    def drop(self, table: str) -> None:
-        if self.exists(table):
-            shutil.rmtree(self.path(table))
-
 
 class IcebergStorage:
-    """Iceberg backend for real clusters (sandbox has no Iceberg jars —
-    SURVEY.md §7.4 — so this path is exercised only when the catalog conf
-    is present; ParquetStorage is the test-time default).
+    """The Iceberg SQL for the pipeline's tables (a SQL contract, not a
+    pipeline backend: see the module docstring). With no Iceberg jars at
+    hand (SURVEY.md §7.4), its test checks the SQL it emits.
 
     Table layout mirrors ParquetStorage: one table per tier/artifact,
     partitioned by bucket(conv) via a hidden-partition spec. Reconcile
@@ -222,7 +224,7 @@ class IcebergStorage:
            .partitionedBy(F.bucket(self.n_buckets, F.col("conv_id")))
            .createOrReplace())
 
-    def write(self, df: DataFrame, table: str, mode: str = "append", **_) -> None:
+    def write(self, df: DataFrame, table: str, mode: str = "append") -> None:
         w = df.writeTo(self._ident(table))
         w.append() if mode == "append" else w.createOrReplace()
 

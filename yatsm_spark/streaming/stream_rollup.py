@@ -455,8 +455,7 @@ def stream_holtwinters(rollup_stream: DataFrame, alpha: float = 0.5,
                      "stream_holtwinters")
 
 
-def stream_sessionize(stream: DataFrame, key_col: str = "user_id",
-                      ts_col: str = "ts", type_col: str = "event_type",
+def stream_sessionize(stream: DataFrame, type_col: str = "event_type",
                       timeout_s: int = 1800,
                       watermark: str = "1 hour") -> DataFrame:
     """Streaming twin of operators/sessionize.py::session_stats via
@@ -475,14 +474,14 @@ def stream_sessionize(stream: DataFrame, key_col: str = "user_id",
     Distinct counts are not supported inside streaming aggregations, so
     n_event_types folds a collect_set (bounded by the event-type
     vocabulary, not the stream length)."""
-    s = stream.withWatermark(ts_col, watermark)
-    w = F.session_window(F.col(ts_col), f"{timeout_s} seconds")
+    s = stream.withWatermark("ts", watermark)
+    w = F.session_window(F.col("ts"), f"{timeout_s} seconds")
     return (
-        s.groupBy(F.col(key_col), w.alias("w"))
+        s.groupBy(F.col("user_id"), w.alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"),
-             F.max(ts_col).alias("last_ts"),
+             F.max("ts").alias("last_ts"),
              F.size(F.collect_set(type_col)).cast("long").alias("n_event_types"))
-        .select(F.col(key_col), F.col("w.start").alias("session_start"),
+        .select(F.col("user_id"), F.col("w.start").alias("session_start"),
                 F.col("last_ts").alias("session_end"), "n_events",
                 "n_event_types",
                 ((F.unix_micros(F.col("last_ts").cast("timestamp"))
@@ -492,7 +491,6 @@ def stream_sessionize(stream: DataFrame, key_col: str = "user_id",
 
 def stream_hll_registers(stream: DataFrame, group_cols: list[str],
                          value_col: str, window: str = "1 minute",
-                         ts_col: str = "ts",
                          watermark: str = "10 minutes") -> DataFrame:
     """Streaming HLL register maintenance: per (window, group, bucket)
     MAX of rho — the sketch's merge IS a supported streaming aggregate,
@@ -508,10 +506,10 @@ def stream_hll_registers(stream: DataFrame, group_cols: list[str],
     """
     bucket, rho = hll_parts(value_col)
     s = (stream.filter(F.col(value_col).isNotNull())
-               .withWatermark(ts_col, watermark))
-    return (s.select(F.col(ts_col), *group_cols, bucket.alias("bucket"),
+               .withWatermark("ts", watermark))
+    return (s.select(F.col("ts"), *group_cols, bucket.alias("bucket"),
                      rho.alias("rho"))
-             .groupBy(F.window(ts_col, window).alias("w"),
+             .groupBy(F.window("ts", window).alias("w"),
                       *group_cols, "bucket")
              .agg(F.max("rho").alias("register"))
              .select(F.col("w.start").alias("window_start"),
@@ -520,7 +518,6 @@ def stream_hll_registers(stream: DataFrame, group_cols: list[str],
 
 def stream_cms_counters(stream: DataFrame, group_cols: list[str],
                         value_col: str, window: str = "1 minute",
-                        ts_col: str = "ts",
                         watermark: str = "10 minutes") -> DataFrame:
     """Streaming count-min sketch maintenance: per (window, group, r, c)
     SUM of hits — like the HLL registers, the CMS merge IS a supported
@@ -534,14 +531,14 @@ def stream_cms_counters(stream: DataFrame, group_cols: list[str],
     test_stream_cms_equals_batch).
     """
     s = (stream.filter(F.col(value_col).isNotNull())
-               .withWatermark(ts_col, watermark))
+               .withWatermark("ts", watermark))
     cells = F.explode(F.array(*[
         F.struct(F.lit(r).alias("r"), cms_col(value_col, r).alias("c"))
         for r in range(CMS_DEPTH)])).alias("_cell")
-    return (s.select(F.col(ts_col), *group_cols, cells)
-             .select(F.col(ts_col), *group_cols,
+    return (s.select(F.col("ts"), *group_cols, cells)
+             .select(F.col("ts"), *group_cols,
                      F.col("_cell.r").alias("r"), F.col("_cell.c").alias("c"))
-             .groupBy(F.window(ts_col, window).alias("w"),
+             .groupBy(F.window("ts", window).alias("w"),
                       *group_cols, "r", "c")
              .agg(F.count("*").alias("cnt"))
              .select(F.col("w.start").alias("window_start"),
