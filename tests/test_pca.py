@@ -41,7 +41,7 @@ def test_spark_moments_equal_kernel_and_are_partition_invariant(spark):
     df = _df_from_matrix(spark, V)
     from yatsm_spark.operators.pca import pca_moments
 
-    got = pca_moments(df, "embedding")
+    got = pca_moments(df)
     want = moments_from_quantized(quantize(
         np.stack([np.asarray(r, dtype=np.float64) for r in
                   [row for row in V]])))
@@ -50,7 +50,7 @@ def test_spark_moments_equal_kernel_and_are_partition_invariant(spark):
                      for r in df.orderBy("vec_id").collect()])
     want = moments_from_quantized(quantize(back))
     assert got == want
-    assert pca_moments(df.repartition(17), "embedding") == want
+    assert pca_moments(df.repartition(17)) == want
 
 
 def test_recovers_planted_direction(spark):
@@ -93,7 +93,7 @@ def test_hostile_edges(spark):
     # single row -> refuse
     one = _df_from_matrix(spark, np.ones((1, 3)))
     with pytest.raises(ValueError, match=">= 2 rows"):
-        pca_moments(one, "embedding")
+        pca_moments(one)
     # k out of range
     df = _df_from_matrix(spark, np.random.RandomState(0).randn(10, 3))
     with pytest.raises(ValueError, match="k must be"):
@@ -107,5 +107,5 @@ def test_hostile_edges(spark):
     mixed = spark.createDataFrame(
         [(0, [1.0, 2.0]), (1, None), (2, [1.0, 2.0, 3.0]), (3, [0.5, 1.5])],
         "vec_id long, embedding array<float>")
-    n, S, tri = pca_moments(mixed, "embedding")
+    n, S, tri = pca_moments(mixed)
     assert n == 2  # only the two 2-d vectors survive

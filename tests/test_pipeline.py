@@ -295,11 +295,33 @@ def test_an_uncommitted_bucket_stays_out_of_reads(spark, tmp_path, monkeypatch):
     for df in (store.read(spark, "tier_1m"), spark.read.parquet(store.path("tier_1m"))):
         assert df.count() == 5
         assert dict(df.dtypes)["bucket"] == "int"
-    assert store.buckets("tier_1m") == [0]
+    assert store.bucket_names("tier_1m") == ["0"]
 
     store.write_bucket(rows(2), "tier_1m", 1)
     assert sorted(os.listdir(store.path("tier_1m"))) == ["bucket=0", "bucket=1"]
     assert store.read(spark, "tier_1m").count() == 7
+
+
+def test_resume_removes_a_leftover_staging_directory(spark, tx, tmp_path):
+    """A bucket=<b>.inprogress directory, left by a crash under the staging
+    name used before the leading dot, is not a committed bucket: the next
+    run removes it, and the table reads back only committed rows with an
+    int bucket column."""
+    w = str(tmp_path)
+    cfg = PipelineConfig(workdir=w, n_buckets=2, compress=False, segments=False)
+    run_pipeline(spark, tx, cfg, resume=False)
+    store = ParquetStorage(w)
+    want = store.read(spark, "tier_1m").count()
+    leftover = os.path.join(store.path("tier_1m"), "bucket=0.inprogress")
+    shutil.copytree(os.path.join(store.path("tier_1m"), "bucket=0"), leftover)
+    assert spark.read.parquet(store.path("tier_1m")).count() > want
+
+    m = run_pipeline(spark, tx, cfg, resume=True)
+    assert len(m.buckets) == 0
+    assert not os.path.exists(leftover)
+    for df in (store.read(spark, "tier_1m"), spark.read.parquet(store.path("tier_1m"))):
+        assert df.count() == want
+        assert dict(df.dtypes)["bucket"] == "int"
 
 
 def test_empty_transcripts_raise_before_staging(spark, tx, tmp_path):
@@ -334,7 +356,7 @@ def test_resume_honours_segments_and_phenology(spark, tx, tmp_path_factory):
 
     m = run_pipeline(spark, tx, PipelineConfig(workdir=w, segments=False, **cfg))
     assert len(m.buckets) == 2
-    assert ParquetStorage(w).buckets("segments") == []
+    assert ParquetStorage(w).bucket_names("segments") == []
 
 
 def test_resume_with_another_bucket_count(spark, tx, tmp_path_factory):

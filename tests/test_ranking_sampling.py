@@ -138,17 +138,16 @@ def test_sample_stratified_quota_and_prefix(spark):
     df = spark.range(0, 300).select(
         F.col("id").alias("doc_id"),
         F.concat(F.lit("s"), (F.col("id") % 3).cast("string")).alias("source"))
-    s5 = sample_stratified(df, 5, stratum_col="source")
+    s5 = sample_stratified(df, 5)
     counts = {r.source: r["count"] for r in s5.groupBy("source").count().collect()}
     assert counts == {"s0": 5, "s1": 5, "s2": 5}
     # extensible: the rank<=3 prefix IS the 3-sample
-    s3 = sample_stratified(df, 3, stratum_col="source")
+    s3 = sample_stratified(df, 3)
     assert sorted((r.doc_id, r.draw_rank) for r in s3.collect()) == \
         sorted((r.doc_id, r.draw_rank)
                for r in s5.filter(F.col("draw_rank") <= 3).collect())
     # quota caps at the stratum size
-    tiny = sample_stratified(df.filter(F.col("doc_id") < 4), 99,
-                             stratum_col="source")
+    tiny = sample_stratified(df.filter(F.col("doc_id") < 4), 99)
     assert tiny.count() == 4
     with pytest.raises(ValueError):
         sample_stratified(df, 0)
@@ -289,8 +288,7 @@ def test_weighted_sample_favors_heavy_weights(spark):
         "doc_id": range(500),
         "w": [1000] * 50 + [1] * 450,
     })
-    out = weighted_sample(spark.createDataFrame(pdf), "w", k=50,
-                          seed=1, id_col="doc_id")
+    out = weighted_sample(spark.createDataFrame(pdf), "w", k=50, seed=1)
     kept = [r["doc_id"] for r in out.filter("kept").collect()]
     assert len(kept) == 50
     heavy = sum(1 for d in kept if d < 50)

@@ -203,24 +203,33 @@ def test_arrow_maps_go_through_per_batch():
     assert hits == {"series.py"}
 
 
-#: The series toolkit's modules: each names its key and time columns
-#: (conv_id/window_start on a tier, ts/turn_idx on turns, user_id/ts/event_id
-#: on events) the way rollup.py does.
-SERIES_MODULES = [f"operators/{m}.py" for m in (
-    "tsfuncs", "tsanalytics", "sessionize", "matrixprofile", "downsample",
-    "dtw", "changepoint", "kalman")] + ["streaming/stream_rollup.py"]
-COLUMN_OPTIONS = {"by", "order_col", "ts_col", "key_col", "time_col"}
+#: Every operator names its table's columns: conv_id/window_start on a tier,
+#: conv_id/ts/turn_idx/role on turns, user_id/ts/event_id/event_type on
+#: events, doc_id/text/source on documents, vec_id/embedding on embeddings,
+#: doc_a/doc_b and conv_a/conv_b on pair tables. Only the helpers whose
+#: callers pass different keys take a key or order column.
+KEY_OPTIONS = {"by", "order_col", "ts_col", "key_col", "time_col"}
+KEYED_HELPERS = {"operators/series.py", "operators/joins.py", "operators/bloomjoin.py"}
 
 
 def test_series_functions_take_no_key_or_time_column_option():
-    """A series' key and time columns are facts of the table schema, not
-    options: no public function of the series toolkit declares one."""
+    """A table's columns are facts of its schema, not options: no public
+    function under operators/ or streaming/ declares a key or time column
+    (outside KEYED_HELPERS), nor a defaulted ``*_col`` other than
+    ``value_col``, which selects the tier measure to read."""
     hits = []
-    for rel in SERIES_MODULES:
-        tree = ast.parse((OPERATORS.parent / rel).read_text())
-        for fn in tree.body:
+    modules = [*OPERATORS.glob("*.py"), *(OPERATORS.parent / "streaming").glob("*.py")]
+    for path in sorted(modules):
+        rel = path.relative_to(OPERATORS.parent).as_posix()
+        for fn in ast.parse(path.read_text()).body:
             if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
                 a = fn.args
-                names = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
-                hits += [f"{rel}::{fn.name}({p})" for p in sorted(names & COLUMN_OPTIONS)]
+                params = a.posonlyargs + a.args
+                defaulted = {p.arg for p in params[len(params) - len(a.defaults):]}
+                defaulted |= {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                              if d is not None}
+                hits += [f"{rel}::{fn.name}({p.arg})" for p in params + a.kwonlyargs
+                         if p.arg in KEY_OPTIONS and rel not in KEYED_HELPERS
+                         or p.arg in defaulted and p.arg.endswith("_col")
+                         and p.arg != "value_col"]
     assert hits == []

@@ -12,10 +12,12 @@ checkout root and the temporary work dir are replaced by fixed tokens, so
 the text depends only on the plan. Plans are captured with every
 materialize seen through, so they show the computation body; at run time a
 materialized query is the `Sort <- Scan ExistingRDD` documented by
-plans/r06/*_runtime.txt. The session mirrors bench.py (engine confs,
-data-sized shuffle width) so the captured plans are the ones the bench
-actually runs. It imports the checkout it sits in: to compare two commits,
-run each checkout's copy into its own OUTDIR, then ``diff -r`` the two.
+plans/r06/*_runtime.txt. The data is the plan contract's:
+tests/test_plans.py::SF_DIR (env SF_DIR, default sf0.01). The session
+mirrors bench.py (engine confs, data-sized shuffle width) at
+SPARK_GRAFT_CPUS cores (default: the CPUs this process may run on). It
+imports the checkout it sits in: to compare two commits, run each
+checkout's copy into its own OUTDIR, then ``diff -r`` the two.
 """
 
 from __future__ import annotations
@@ -29,8 +31,7 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def normalized(text: str, work: str) -> str:
@@ -46,7 +47,7 @@ def normalized(text: str, work: str) -> str:
 def main():
     outdir = sys.argv[1]
     os.makedirs(outdir, exist_ok=True)
-    from tests.test_plans import Plans, plan_of, seen_through
+    from tests.test_plans import SF_DIR, Plans, plan_of, seen_through
     from yatsm_spark.conf import get_spark, shuffle_partitions_for_bytes
 
     spark = get_spark(app_name="yatsm-plans", master=f"local[{CPUS}]")

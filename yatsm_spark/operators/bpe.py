@@ -1,4 +1,5 @@
-"""Real merge-table BPE over the documents table (train + tokenize).
+"""Real merge-table BPE over the documents table (train + tokenize): reads
+``doc_id`` and ``text``.
 
 Replaces the regex count *proxy* (textstats.token_counts.n_bpe_tokens)
 with actual byte-pair encoding for pipelines that pack to a model's
@@ -39,26 +40,26 @@ from yatsm_spark.operators.textstats import BPE_REGEX
 MAX_TRAIN_WORDS = 1 << 17
 
 
-def _pretokens(text_col: str):
+def _pretokens():
     # F.lit, not an f-string into F.expr: BPE_REGEX itself contains a
     # single quote (the contraction branch), which would terminate an
     # embedded SQL string literal.
-    return F.regexp_extract_all(F.col(text_col), F.lit(BPE_REGEX), F.lit(0))
+    return F.regexp_extract_all(F.col("text"), F.lit(BPE_REGEX), F.lit(0))
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(word, cnt) over GPT-2-style pretokens — one hash-agg shuffle."""
     return (
-        docs.select(F.explode(_pretokens(text_col)).alias("word"))
+        docs.select(F.explode(_pretokens()).alias("word"))
         .groupBy("word").agg(F.count("*").alias("cnt"))
     )
 
 
-def bpe_train(docs: DataFrame, text_col: str = "text", n_merges: int = 64,
+def bpe_train(docs: DataFrame, n_merges: int = 64,
               min_count: int = 2, max_words: int = MAX_TRAIN_WORDS) -> list[tuple[str, str]]:
     """Learn the ordered merge table from the corpus (driver-side on the
     bounded distinct-pretoken count table)."""
-    wc = word_counts(docs, text_col)
+    wc = word_counts(docs)
     rows = wc.limit(max_words + 1).collect()
     if len(rows) > max_words:
         raise RuntimeError(
@@ -68,11 +69,10 @@ def bpe_train(docs: DataFrame, text_col: str = "text", n_merges: int = 64,
                      n_merges=n_merges, min_count=min_count)
 
 
-def bpe_merges(docs: DataFrame, text_col: str = "text", n_merges: int = 64,
-               min_count: int = 2) -> DataFrame:
+def bpe_merges(docs: DataFrame, n_merges: int = 64, min_count: int = 2) -> DataFrame:
     """Trained merge table as rows (rank, left, right)."""
     spark = docs.sparkSession
-    merges = bpe_train(docs, text_col, n_merges, min_count)
+    merges = bpe_train(docs, n_merges, min_count)
     return spark.createDataFrame(
         [(i + 1, l, r) for i, (l, r) in enumerate(merges)],
         "rank int, left string, right string")
@@ -93,24 +93,23 @@ def _tokenized_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFra
         tok, "word string, n_tokens long, tokens array<string>")
 
 
-def bpe_tokenize(docs: DataFrame, merges: list[tuple[str, str]],
-                 text_col: str = "text") -> DataFrame:
+def bpe_tokenize(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """(doc_id, word, pos, tokens) — every pretoken of every doc with its
     BPE split; distinct words tokenize once, then broadcast-join back."""
     pre = docs.select(
-        "doc_id", F.posexplode(_pretokens(text_col)).alias("pos", "word"))
+        "doc_id", F.posexplode(_pretokens()).alias("pos", "word"))
     tw = _tokenized_words(pre.select("word").distinct(), merges)
     return pre.join(F.broadcast(tw), "word").select(
         "doc_id", "pos", "word", "tokens")
 
 
-def bpe_token_counts(docs: DataFrame, text_col: str = "text",
-                     n_merges: int = 64, min_count: int = 2) -> DataFrame:
+def bpe_token_counts(docs: DataFrame, n_merges: int = 64,
+                     min_count: int = 2) -> DataFrame:
     """Per-doc REAL BPE token count (train on this corpus, then count):
     (doc_id, n_pretokens, n_bpe_real)."""
-    merges = bpe_train(docs, text_col, n_merges, min_count)
+    merges = bpe_train(docs, n_merges, min_count)
     pre = docs.select(
-        "doc_id", F.explode(_pretokens(text_col)).alias("word"))
+        "doc_id", F.explode(_pretokens()).alias("word"))
     tw = _tokenized_words(pre.select("word").distinct(), merges).drop("tokens")
     return (
         pre.join(F.broadcast(tw), "word")

@@ -1,5 +1,6 @@
 """P4: segment classification operator — train on labeled sample, predict
-distributed.
+distributed. Reads the segments table and a label table (``conv_id``,
+``label``).
 
 Parity anchors (SURVEY.md §2.10, §3.3):
 - `yatsm/cli/train.py::get_training_inputs` [M]: intersect segment records
@@ -54,7 +55,6 @@ def feature_columns(feats: DataFrame) -> list[str]:
 def train_segment_classifier(
     feats: DataFrame,
     labels: DataFrame,
-    label_col: str = "label",
     on: str = "conv_id",
     max_train: int = 100_000,
     **forest_kw,
@@ -64,14 +64,14 @@ def train_segment_classifier(
     (a labeled set that big should be downsampled upstream, not silently
     truncated)."""
     fcols = feature_columns(feats)
-    pdf = _labeled_sample(feats, labels, label_col, on, max_train)
+    pdf = _labeled_sample(feats, labels, on, max_train)
     X = pdf[fcols].to_numpy(dtype=np.float64)
-    y = pdf[label_col].to_numpy()
+    y = pdf["label"].to_numpy()
     return RandomForest(**forest_kw).fit(X, y)
 
 
-def _labeled_sample(feats: DataFrame, labels: DataFrame, label_col: str,
-                    on: str, max_train: int) -> pd.DataFrame:
+def _labeled_sample(feats: DataFrame, labels: DataFrame, on: str,
+                    max_train: int) -> pd.DataFrame:
     """Bounded, deterministic labeled sample shared by train + crossval.
 
     Raises (never silently truncates) when the sample exceeds max_train —
@@ -80,7 +80,7 @@ def _labeled_sample(feats: DataFrame, labels: DataFrame, label_col: str,
     on duplicate labels per join key: a dup would duplicate sample rows
     with ties broken by collect order (round-2 ADVICE)."""
     fcols = feature_columns(feats)
-    sample = feats.join(F.broadcast(labels), on).select(on, "segment_id", *fcols, label_col)
+    sample = feats.join(F.broadcast(labels), on).select(on, "segment_id", *fcols, "label")
     pdf = sample.limit(max_train + 1).toPandas()
     if len(pdf) > max_train:
         raise ValueError(f"labeled sample exceeds max_train={max_train}")
@@ -117,13 +117,12 @@ def classify_segments(segments: DataFrame, model: RandomForest,
     return per_batch(feats, predict, out_schema, name="classify_segments")
 
 
-def crossval_report(feats: DataFrame, labels: DataFrame, label_col: str = "label",
-                    on: str = "conv_id", k: int = 5, max_train: int = 100_000,
-                    **forest_kw) -> pd.DataFrame:
+def crossval_report(feats: DataFrame, labels: DataFrame, on: str = "conv_id",
+                    k: int = 5, max_train: int = 100_000, **forest_kw) -> pd.DataFrame:
     """A4: k-fold crossvalidation accuracies of the segment classifier on
     the labeled sample (graft of yatsm/classifiers/diagnostics.py)."""
     fcols = feature_columns(feats)
-    pdf = _labeled_sample(feats, labels, label_col, on, max_train)
+    pdf = _labeled_sample(feats, labels, on, max_train)
     scores = kfold_scores(pdf[fcols].to_numpy(dtype=np.float64),
-                          pdf[label_col].to_numpy(), k=k, **forest_kw)
+                          pdf["label"].to_numpy(), k=k, **forest_kw)
     return pd.DataFrame({"fold": np.arange(k), "accuracy": scores})

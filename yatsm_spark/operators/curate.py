@@ -1,5 +1,6 @@
 """End-to-end corpus curation: the composed pipeline a training-data
-team actually runs, as one auditable decision table.
+team actually runs, as one auditable decision table. Reads the documents
+table (``doc_id``, ``text``, ``source``).
 
 Stage order follows the standard web-corpus recipe (C4/Gopher-style):
 
@@ -47,8 +48,7 @@ from yatsm_spark.operators.textstats import quality_scores
 
 
 def curate_corpus(docs: DataFrame, bench_rate: float = 0.05,
-                  ngram_n: int = 3, jaccard_threshold: float = 0.2,
-                  text_col: str = "text") -> DataFrame:
+                  ngram_n: int = 3, jaccard_threshold: float = 0.2) -> DataFrame:
     """Per-doc curation decisions:
     (doc_id, in_train, quality_keep, exact_kept, neardup_kept,
     n_contaminated_ngrams, kept). Stage flags are cumulative — a flag is
@@ -67,13 +67,13 @@ def curate_corpus(docs: DataFrame, bench_rate: float = 0.05,
     bench = sample_hash(docs, bench_rate)
     train_ids = sample_hash(docs, bench_rate, complement=True) \
         .select("doc_id").transform(conf.materialize)
-    q = quality_scores(docs, text_col).select("doc_id", "quality_keep") \
+    q = quality_scores(docs).select("doc_id", "quality_keep") \
         .transform(conf.materialize)
 
     s1_ids = train_ids.join(q.filter("quality_keep").select("doc_id"),
                             "doc_id")
-    s1 = docs.select("doc_id", text_col).join(s1_ids, "doc_id")
-    keep2 = (s1.select("doc_id", F.md5(_NORM(F.col(text_col))).alias("fp"))
+    s1 = docs.select("doc_id", "text").join(s1_ids, "doc_id")
+    keep2 = (s1.select("doc_id", F.md5(_NORM(F.col("text"))).alias("fp"))
                .groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
                .select("doc_id").transform(conf.materialize))
     # s2 carries text into the near-dup stage and is consumed by the pair
@@ -81,11 +81,11 @@ def curate_corpus(docs: DataFrame, bench_rate: float = 0.05,
     # the docs-scan+joins run once.
     s2 = conf.materialize(s1.join(keep2, "doc_id"))
     keep3 = (dedup_groups(s2, ngram_jaccard_pairs(
-                 s2, threshold=jaccard_threshold, text_col=text_col))
+                 s2, threshold=jaccard_threshold))
              .filter("is_canonical").select("doc_id")
              .transform(conf.materialize))
     s3 = s2.join(keep3, "doc_id")
-    dec = decontaminate(s3, bench, n=ngram_n, text_col=text_col) \
+    dec = decontaminate(s3, bench, n=ngram_n) \
         .select("doc_id", "n_contaminated_ngrams")
 
     def flag(id_set: DataFrame, name: str) -> DataFrame:
@@ -114,8 +114,7 @@ def curate_corpus(docs: DataFrame, bench_rate: float = 0.05,
 def curate_training_set(docs: DataFrame, bench_rate: float = 0.05,
                         dup_ratio_max: float = 0.5,
                         min_avg_logprob: float = -9.0,
-                        fuzzy_threshold: float = 0.5, span_n: int = 5,
-                        text_col: str = "text") -> DataFrame:
+                        fuzzy_threshold: float = 0.5, span_n: int = 5) -> DataFrame:
     """The round-5 curation signals composed into one per-train-doc
     decision table: unigram-LM quality (lm_unigram_score, trained on the
     TRAIN split only — the eval slice must not shape the LM),
@@ -141,11 +140,11 @@ def curate_training_set(docs: DataFrame, bench_rate: float = 0.05,
 
     bench = sample_hash(docs, bench_rate)
     train = sample_hash(docs, bench_rate, complement=True)
-    lm = lm_unigram_score(train, text_col).select("doc_id", "avg_logprob")
-    spans = dup_ngram_spans(train, n=span_n, min_count=2,
-                            text_col=text_col).select("doc_id", "dup_ratio")
+    lm = lm_unigram_score(train).select("doc_id", "avg_logprob")
+    spans = dup_ngram_spans(train, n=span_n, min_count=2).select(
+        "doc_id", "dup_ratio")
     fz = decontaminate_fuzzy(train, bench, shingle_n=3,
-                             threshold=fuzzy_threshold, text_col=text_col) \
+                             threshold=fuzzy_threshold) \
         .select("doc_id", F.col("contaminated").alias("fuzzy_contaminated"))
     lm_keep = F.col("avg_logprob").isNotNull() \
         & (F.col("avg_logprob") >= min_avg_logprob)

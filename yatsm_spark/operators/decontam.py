@@ -1,5 +1,6 @@
 """Benchmark decontamination: flag training documents that share word
-n-grams with a held-out evaluation set.
+n-grams with a held-out evaluation set. Both sides are documents tables
+(``doc_id``, ``text``).
 
 The standard pre-training hygiene step (GPT-3 appendix C / PaLM-style):
 any training document containing an n-gram that also occurs in an eval
@@ -33,11 +34,11 @@ from pyspark.sql import functions as F
 from yatsm_spark.operators.ranking import TOKEN_SPLIT
 
 
-def _doc_ngrams(docs: DataFrame, n: int, text_col: str) -> DataFrame:
+def _doc_ngrams(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, ngram) with per-doc DISTINCT n-grams; docs shorter than
     n tokens emit none. The distinct runs inside the row (array level),
     before the explode."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
+    toks = F.filter(F.split(F.lower(F.col("text")), TOKEN_SPLIT),
                     lambda t: t != "")
     grams = F.transform(
         F.sequence(F.lit(1), F.size("toks") - F.lit(n - 1)),
@@ -48,8 +49,7 @@ def _doc_ngrams(docs: DataFrame, n: int, text_col: str) -> DataFrame:
                         F.explode(F.array_distinct(grams)).alias("ngram")))
 
 
-def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5,
-                  text_col: str = "text") -> DataFrame:
+def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5) -> DataFrame:
     """Per training document: how many of its distinct word ``n``-grams
     occur anywhere in the ``bench`` eval set, and the contamination flag.
 
@@ -61,9 +61,9 @@ def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5,
     """
     if n < 1:
         raise ValueError("n must be >= 1")
-    bench_grams = _doc_ngrams(bench, n, text_col) \
+    bench_grams = _doc_ngrams(bench, n) \
         .select("ngram").distinct()
-    hits = (_doc_ngrams(docs, n, text_col)
+    hits = (_doc_ngrams(docs, n)
             .join(F.broadcast(bench_grams), "ngram")
             .groupBy("doc_id")
             .agg(F.count("*").alias("n_contaminated_ngrams")))
@@ -78,8 +78,7 @@ def decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5,
 
 
 def decontaminate_fuzzy(docs: DataFrame, bench: DataFrame, shingle_n: int = 3,
-                        threshold: float = 0.5,
-                        text_col: str = "text") -> DataFrame:
+                        threshold: float = 0.5) -> DataFrame:
     """Fuzzy benchmark decontamination: per training document, its exact
     word-shingle Jaccard against every eval document it shares a shingle
     with, flagged at ``threshold`` — catches lightly-edited benchmark
@@ -103,8 +102,8 @@ def decontaminate_fuzzy(docs: DataFrame, bench: DataFrame, shingle_n: int = 3,
     """
     if shingle_n < 1:
         raise ValueError("shingle_n must be >= 1")
-    tsh = _doc_ngrams(docs, shingle_n, text_col)
-    bsh = _doc_ngrams(bench, shingle_n, text_col) \
+    tsh = _doc_ngrams(docs, shingle_n)
+    bsh = _doc_ngrams(bench, shingle_n) \
         .select(F.col("doc_id").alias("bench_id"), "ngram")
     t_sizes = tsh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz_t"))
     b_sizes = bsh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("sz_b"))

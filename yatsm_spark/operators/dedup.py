@@ -1,5 +1,8 @@
 """Deduplication operators: exact, MinHash+LSH, n-gram Jaccard, SimHash.
 
+Each reads the documents table (``doc_id``, ``text``); the pair operators
+emit and read ``(doc_a, doc_b)`` pair tables.
+
 Training-data-pipeline additions (task brief). Spark-first shapes:
 
 - exact: hash-groupBy on a normalized fingerprint — one shuffle, map-side
@@ -30,17 +33,17 @@ from yatsm_spark import conf
 _NORM = lambda c: F.lower(F.regexp_replace(F.trim(c), "[ \\t\\n\\x0B\\f\\r]+", " "))
 
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical (after whitespace/case normalization) docs:
     keeper = min(doc_id), n_copies per group."""
     return (
-        docs.select("doc_id", F.md5(_NORM(F.col(text_col))).alias("fp"))
+        docs.select("doc_id", F.md5(_NORM(F.col("text"))).alias("fp"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
-def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
+def word_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per doc: (doc_id, shingle). Built with
     sequence+transform — JVM-side, no UDF.
 
@@ -50,7 +53,7 @@ def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFr
     shingle — O(words^2) per doc (r6; measured 12x on the dsir gram
     stream, same pathology here)."""
     w = docs.select("doc_id",
-                    F.split(_NORM(F.col(text_col)), " ").alias("_w"))
+                    F.split(_NORM(F.col("text")), " ").alias("_w"))
     wcol = F.col("_w")
     shingles = F.array_distinct(
         F.transform(
@@ -61,14 +64,14 @@ def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFr
     return w.select("doc_id", F.explode(shingles).alias("shingle"))
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = 8, shingle_n: int = 3,
-                       text_col: str = "text") -> DataFrame:
+def minhash_signatures(docs: DataFrame, n_hashes: int = 8,
+                       shingle_n: int = 3) -> DataFrame:
     """(doc_id, sig_0..sig_{k-1}): sig_i = min(md5(i || shingle)).
 
     md5 is a fixed function of the string — identical in any engine — and
     MIN over its hex is a valid minhash (uniform order on shingles).
     """
-    sh = word_shingles(docs, shingle_n, text_col)
+    sh = word_shingles(docs, shingle_n)
     aggs = [
         F.min(F.md5(F.concat(F.lit(str(i)), F.lit("|"), F.col("shingle")))).alias(f"sig_{i}")
         for i in range(n_hashes)
@@ -77,8 +80,7 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 8, shingle_n: int = 3,
 
 
 def minhash_candidates(docs: DataFrame, n_hashes: int = 8, bands: int = 4,
-                       shingle_n: int = 3, text_col: str = "text",
-                       max_band_size: int = 1000) -> DataFrame:
+                       shingle_n: int = 3, max_band_size: int = 1000) -> DataFrame:
     """LSH banding: docs sharing any band of the signature become candidate
     pairs (a < b). rows_per_band = n_hashes / bands.
 
@@ -90,7 +92,7 @@ def minhash_candidates(docs: DataFrame, n_hashes: int = 8, bands: int = 4,
     Members of a dropped bucket can still pair through their other bands.
     """
     rows = n_hashes // bands
-    sig = minhash_signatures(docs, n_hashes, shingle_n, text_col)
+    sig = minhash_signatures(docs, n_hashes, shingle_n)
     band_cols = [
         F.concat_ws("_", F.lit(b), *[F.col(f"sig_{b * rows + r}") for r in range(rows)]).alias("band_key")
         for b in range(bands)
@@ -122,7 +124,7 @@ def minhash_candidates(docs: DataFrame, n_hashes: int = 8, bands: int = 4,
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5, shingle_n: int = 3,
-                        text_col: str = "text", max_shingle_freq: int = 1000) -> DataFrame:
+                        max_shingle_freq: int = 1000) -> DataFrame:
     """Word-shingle Jaccard over shingle-sharing pairs, computed on the
     frequency-capped shingle universe.
 
@@ -139,7 +141,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5, shingle_n: int 
     # it, each recomputing the upstream subtree — measured 11.7s vs 2.7s
     # when the input is itself a join (curate_corpus's survivor slice).
     # The eager checkpoint materializes exactly once.
-    sh = conf.materialize(word_shingles(docs, shingle_n, text_col))
+    sh = conf.materialize(word_shingles(docs, shingle_n))
     # Stop-shingles (df > cap) are the SMALL set — broadcast-anti-join them
     # out rather than broadcasting the corpus-sized keep-set (round-2 ADVICE).
     stop = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).filter(
@@ -167,7 +169,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5, shingle_n: int 
     )
 
 
-def simhash16(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash16(docs: DataFrame) -> DataFrame:
     """16-bit SimHash over word hashes.
 
     word_hash = first 4 hex digits of md5(word) (16 bits); each bit
@@ -175,7 +177,7 @@ def simhash16(docs: DataFrame, text_col: str = "text") -> DataFrame:
     the Spark side has an exact DuckDB twin via a hex-digit lookup, keeping
     the whole operator SQL-checkable.
     """
-    words = F.explode(F.array_distinct(F.split(_NORM(F.col(text_col)), " "))).alias("word")
+    words = F.explode(F.array_distinct(F.split(_NORM(F.col("text")), " "))).alias("word")
     w = docs.select("doc_id", words)
     w = w.withColumn("h", F.conv(F.substring(F.md5("word"), 1, 4), 16, 10).cast("long"))
     bit_sums = [
@@ -190,12 +192,12 @@ def simhash16(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def connected_components(pairs: DataFrame, a_col: str = "doc_a",
-                         b_col: str = "doc_b", max_iters: int = 25,
+def connected_components(pairs: DataFrame, max_iters: int = 25,
                          max_local_edges: int = 1 << 20) -> DataFrame:
-    """Connected components over an undirected pair table -> (node,
-    component_id = min node id in the component). Covers only nodes that
-    appear in >= 1 pair; use dedup_groups for the full-corpus labeling.
+    """Connected components over an undirected ``(doc_a, doc_b)`` pair
+    table -> (node, component_id = min node id in the component). Covers
+    only nodes that appear in >= 1 pair; use dedup_groups for the
+    full-corpus labeling.
 
     Algorithm: alternating large-star / small-star edge contraction
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -209,7 +211,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     otherwise recompute the whole prefix), and convergence is a driver-side
     scalar (count + order-insensitive hash) — no collect of data rows."""
     spark = pairs.sparkSession
-    a, b = F.col(a_col), F.col(b_col)
+    a, b = F.col("doc_a"), F.col("doc_b")
     edges = (pairs.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
              .filter(F.col("u") != F.col("v")).distinct().transform(conf.materialize))
 
@@ -298,8 +300,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
         "node", F.least("mn", "node").alias("component_id"))
 
 
-def dedup_groups(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                 a_col: str = "doc_a", b_col: str = "doc_b") -> DataFrame:
+def dedup_groups(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Corpus-wide dedup decision table: every doc labeled with its
     near-dup component (singletons = own id) and whether it is the
     canonical keeper (the component min — the standard deterministic
@@ -309,8 +310,8 @@ def dedup_groups(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     fraction of the corpus, so AQE converts this to a broadcast join when
     it fits (not forced: at 100 TB a heavy-dup corpus can exceed the
     broadcast budget)."""
-    comp = connected_components(pairs, a_col, b_col)
-    out = docs.select(F.col(id_col).alias("doc_id")).join(
+    comp = connected_components(pairs)
+    out = docs.select("doc_id").join(
         comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
     return out.select(
         "doc_id",
@@ -319,7 +320,7 @@ def dedup_groups(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
 
 
 def dup_ngram_spans(docs: DataFrame, n: int = 5, min_count: int = 2,
-                    text_col: str = "text", use_hash: bool = False) -> DataFrame:
+                    use_hash: bool = False) -> DataFrame:
     """Cross-corpus duplicated-substring signal (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better",
     arXiv:2107.06499 — the ExactSubstr criterion recast relationally):
@@ -346,7 +347,7 @@ def dup_ngram_spans(docs: DataFrame, n: int = 5, min_count: int = 2,
     default stays on strings).
     """
     gram_key = (F.xxhash64("gram") if use_hash else F.col("gram")).alias("gk")
-    words = F.split(_NORM(F.col(text_col)), " ")
+    words = F.split(_NORM(F.col("text")), " ")
     base = docs.select("doc_id", words.alias("w")) \
                .withColumn("n_words", F.size("w")) \
                .withColumn("n_grams",
@@ -394,7 +395,7 @@ def dup_ngram_spans(docs: DataFrame, n: int = 5, min_count: int = 2,
     )
 
 
-def paragraph_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def paragraph_dedup(docs: DataFrame) -> DataFrame:
     """Corpus-wide paragraph-level deduplication (the Dolma / CCNet
     pipeline step): every non-blank paragraph occurrence except its
     canonical first instance is removed, and the document is reassembled.
@@ -417,7 +418,7 @@ def paragraph_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     per-doc re-assembly agg. No windows over the corpus, no broadcast of
     unbounded sides."""
     paras = (docs.select("doc_id",
-                         F.posexplode(F.split(F.col(text_col), "\n\n", -1))
+                         F.posexplode(F.split(F.col("text"), "\n\n", -1))
                          .alias("para_idx", "para")))
     inst = paras.withColumn("_blank", F.trim(F.col("para")) == "") \
                 .withColumn("_key", F.md5(F.trim(F.col("para"))))
@@ -448,8 +449,7 @@ def paragraph_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
             "\n\n").alias("clean_text")))
 
 
-def remove_dup_spans(docs: DataFrame, n: int = 5, min_count: int = 2,
-                     text_col: str = "text") -> DataFrame:
+def remove_dup_spans(docs: DataFrame, n: int = 5, min_count: int = 2) -> DataFrame:
     """The REMOVAL step of ExactSubstr dedup (Lee et al. 2022): rewrite
     every document with the word spans covered by corpus-duplicated
     n-grams cut out. Operates on the same normalized word sequence (and
@@ -466,7 +466,7 @@ def remove_dup_spans(docs: DataFrame, n: int = 5, min_count: int = 2,
     merged intervals come back as a per-doc ARRAY (bounded by
     n_words/n) and the rewrite is one in-row filter/transform pass —
     no extra shuffle beyond the interval merge's."""
-    words = F.split(_NORM(F.col(text_col)), " ")
+    words = F.split(_NORM(F.col("text")), " ")
     base = docs.select("doc_id", words.alias("w")) \
                .withColumn("n_words", F.size("w"))
     grams = base.select(

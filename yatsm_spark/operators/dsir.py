@@ -2,7 +2,8 @@
 arXiv:2302.03169): score every raw document by how much more likely its
 hashed n-gram features are under a TARGET distribution (e.g. the
 high-quality / in-domain slice) than under the raw SOURCE distribution,
-then keep the top-k by weight.
+then keep the top-k by weight. Reads the documents table (``doc_id``,
+``text``).
 
 Features are unigrams + adjacent bigrams of whitespace-normalized
 lowercase words, hashed to ``n_buckets`` via the first 4 hex digits of
@@ -37,7 +38,7 @@ def _bucket(col) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("long")
 
 
-def dsir_weights(docs: DataFrame, target: Column, text_col: str = "text",
+def dsir_weights(docs: DataFrame, target: Column,
                  n_buckets: int = 65536) -> DataFrame:
     """Per-document DSIR importance weight.
 
@@ -70,7 +71,7 @@ def dsir_weights(docs: DataFrame, target: Column, text_col: str = "text",
     # stream at sf0.1).
     flagged = docs.select(
         "doc_id", target.alias("_is_t"),
-        F.filter(F.split(_NORM(F.col(text_col)), " "),
+        F.filter(F.split(_NORM(F.col("text")), " "),
                  lambda w: w != F.lit("")).alias("_w"))
     wcol = F.col("_w")
     bigrams = F.when(

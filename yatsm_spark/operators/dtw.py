@@ -2,7 +2,8 @@
 distributed pairs-join): the exact elastic-distance stage behind cheap
 candidate generators like the SAX-word buckets (tx_sax_neardups) —
 the bucket-then-exact pipeline shape the embedding near-dup path uses
-(LSH buckets -> exact cosine), applied to time series.
+(LSH buckets -> exact cosine), applied to time series. Reads a rollup
+tier (``conv_id``, ``window_start``) and a ``(conv_a, conv_b)`` pair table.
 
 Scale shape: the per-series array table is ONE groupBy over the tier
 (order-safe array_sort(collect_list(struct))), each array bounded by
@@ -33,21 +34,20 @@ def series_arrays(tier: DataFrame, value_col: str = "turn_count") -> DataFrame:
 
 def dtw_rerank(tier: DataFrame, pairs: DataFrame,
                value_col: str = "turn_count", radius: int | None = None,
-               max_n: int = 2048,
-               a_col: str = "conv_a", b_col: str = "conv_b") -> DataFrame:
+               max_n: int = 2048) -> DataFrame:
     """Exact (banded) DTW distance for every candidate pair: returns
     (conv_a, conv_b, len_a, len_b, dtw)."""
     arrs = series_arrays(tier, value_col)
-    j = (pairs.select(a_col, b_col)
-         .join(arrs.select(F.col("conv_id").alias(a_col),
-                           F.col("series").alias("_sa")), a_col)
-         .join(arrs.select(F.col("conv_id").alias(b_col),
-                           F.col("series").alias("_sb")), b_col)
-         .select(a_col, b_col, "_sa", "_sb"))
+    j = (pairs.select("conv_a", "conv_b")
+         .join(arrs.select(F.col("conv_id").alias("conv_a"),
+                           F.col("series").alias("_sa")), "conv_a")
+         .join(arrs.select(F.col("conv_id").alias("conv_b"),
+                           F.col("series").alias("_sb")), "conv_b")
+         .select("conv_a", "conv_b", "_sa", "_sb"))
 
     def compute(pdf):
         rows = []
-        for ca, cb, sa, sb in zip(pdf[a_col], pdf[b_col],
+        for ca, cb, sa, sb in zip(pdf["conv_a"], pdf["conv_b"],
                                   pdf["_sa"], pdf["_sb"]):
             if len(sa) > max_n or len(sb) > max_n:
                 raise ValueError(
@@ -56,8 +56,8 @@ def dtw_rerank(tier: DataFrame, pairs: DataFrame,
                     "(lttb/m4/cascade) first")
             d = dtw_core([int(v) for v in sa], [int(v) for v in sb], radius)
             rows.append((ca, cb, len(sa), len(sb), d))
-        return pd.DataFrame(rows, columns=[a_col, b_col, "len_a", "len_b", "dtw"])
+        return pd.DataFrame(rows, columns=["conv_a", "conv_b", "len_a", "len_b", "dtw"])
 
     return per_batch(j, compute,
-                     [a_col, b_col, "len_a long", "len_b long", "dtw long"],
+                     ["conv_a", "conv_b", "len_a long", "len_b long", "dtw long"],
                      name="dtw_rerank")

@@ -2,7 +2,8 @@
 
 Training-data-pipeline addition (task brief): image/audio/video travel as
 `binary` columns with typed metadata; decode / feature-extract run as
-Arrow-batched pandas UDFs over mapInPandas.
+Arrow-batched pandas UDFs over mapInPandas. The media tables are built from
+the documents table (``doc_id``, ``text``).
 
 Decode support (pure numpy, no third-party image libs in this container):
 uncompressed binary PPM (P6) and 24-bit uncompressed BMP are REAL header
@@ -60,12 +61,12 @@ IMAGE_FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def as_media_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def as_media_table(docs: DataFrame) -> DataFrame:
     """Wrap any table's bytes as an opaque media table (test harness: the
     documents table stands in for a blob store)."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
-        F.col(id_col).cast("long").alias("media_id"),
+        F.col("doc_id").cast("long").alias("media_id"),
         payload.alias("payload"),
         F.lit("application/octet-stream").alias("media_type"),
         F.octet_length(payload).cast("long").alias("n_bytes"),
@@ -296,10 +297,10 @@ def png_payload(media_id: int) -> bytes:
             + _png_chunk(b"IEND", b""))
 
 
-def _synth_media(docs: DataFrame, id_col: str, payload, media_type: str) -> DataFrame:
+def _synth_media(docs: DataFrame, payload, media_type: str) -> DataFrame:
     """(media_id, payload, media_type, n_bytes) with ``payload(media_id)``
     per doc id: the generator behind every ``synth_*_media``."""
-    ids = docs.select(F.col(id_col).cast("long").alias("media_id"))
+    ids = docs.select(F.col("doc_id").cast("long").alias("media_id"))
 
     def gen(pdf):
         payloads = [payload(int(i)) for i in pdf["media_id"]]
@@ -313,10 +314,10 @@ def _synth_media(docs: DataFrame, id_col: str, payload, media_type: str) -> Data
     return per_batch(ids, gen, MEDIA_SCHEMA, name="synth_media")
 
 
-def synth_png_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_png_media(docs: DataFrame) -> DataFrame:
     """Deterministic PNG payload per doc id (blob-store stand-in), same
     pixel closed form as synth_ppm_media — only the container differs."""
-    return _synth_media(docs, id_col, png_payload, "image/png")
+    return _synth_media(docs, png_payload, "image/png")
 
 
 def jpeg_payload(media_id: int) -> bytes:
@@ -346,9 +347,9 @@ def jpeg_payload(media_id: int) -> bytes:
     return encode_jpeg_from_coefs(coefs, nby * 8, nbx * 8, quality=100)
 
 
-def synth_jpeg_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_jpeg_media(docs: DataFrame) -> DataFrame:
     """Deterministic JPEG payload per doc id (blob-store stand-in)."""
-    return _synth_media(docs, id_col, jpeg_payload, "image/jpeg")
+    return _synth_media(docs, jpeg_payload, "image/jpeg")
 
 
 def decode_image(payload: bytes) -> np.ndarray:
@@ -368,12 +369,12 @@ def decode_image(payload: bytes) -> np.ndarray:
     raise NotImplementedError(f"unknown image container (magic {payload[:4]!r})")
 
 
-def synth_ppm_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_ppm_media(docs: DataFrame) -> DataFrame:
     """Deterministic P6 payload per doc id (stands in for a blob-store
     read): w = 16 + id%7, h = 12 + id%5, byte at channel c / pixel k
     (row-major) = (id*31 + c*97 + k*13) % 256 — a closed form any engine
     can recompute, making the decode path oracle-checkable end to end."""
-    return _synth_media(docs, id_col, ppm_payload, "image/x-portable-pixmap")
+    return _synth_media(docs, ppm_payload, "image/x-portable-pixmap")
 
 
 def ppm_payload(media_id: int) -> bytes:
@@ -495,10 +496,10 @@ def video_payload(media_id: int) -> bytes:
     return head + b"".join(frames)
 
 
-def synth_video_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_video_media(docs: DataFrame) -> DataFrame:
     """Deterministic synthetic video payload per doc id (the blob-store
     stand-in for the frame-sampling path)."""
-    return _synth_media(docs, id_col, video_payload, "video/x-raw-frames")
+    return _synth_media(docs, video_payload, "video/x-raw-frames")
 
 
 def sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
@@ -560,10 +561,10 @@ def wav_payload(media_id: int, rate: int = 8000) -> bytes:
     return hdr + data
 
 
-def synth_wav_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_wav_media(docs: DataFrame) -> DataFrame:
     """Deterministic WAV payload per doc id (blob-store stand-in for the
     audio decode path)."""
-    return _synth_media(docs, id_col, wav_payload, "audio/wav")
+    return _synth_media(docs, wav_payload, "audio/wav")
 
 
 def decode_wav(payload: bytes) -> tuple[int, np.ndarray]:

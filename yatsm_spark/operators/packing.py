@@ -1,5 +1,6 @@
 """Sequence assembly for the training-data pipeline: fixed-window
-document chunking and deterministic next-fit sequence packing.
+document chunking and deterministic next-fit sequence packing, over the
+documents table (``doc_id``, ``text``, ``source``).
 
 Training consumes fixed-length token sequences; the corpus has variable-
 length documents. Two standard transforms bridge the gap:
@@ -40,8 +41,8 @@ _PACK_SCHEMA = ["doc_id long", "source string", "shard int", "dl long",
                 "bin_idx long", "bin_offset long"]
 
 
-def chunk_documents(docs: DataFrame, chunk_tokens: int, stride: int | None = None,
-                    text_col: str = "text") -> DataFrame:
+def chunk_documents(docs: DataFrame, chunk_tokens: int,
+                    stride: int | None = None) -> DataFrame:
     """(doc_id, chunk_idx, start_token, n_tokens, chunk_text): token
     windows of ``chunk_tokens``, one row per window, starts every
     ``stride`` tokens (default: no overlap). The final window keeps the
@@ -52,7 +53,7 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int, stride: int | None = Non
     stride = chunk_tokens if stride is None else stride
     if not 1 <= stride <= chunk_tokens:
         raise ValueError("stride must be in [1, chunk_tokens]")
-    toks = F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
+    toks = F.filter(F.split(F.lower(F.col("text")), TOKEN_SPLIT),
                     lambda t: t != "")
     t = (docs.select("doc_id", toks.alias("toks"))
              .select("doc_id", "toks", F.size("toks").alias("dl"))
@@ -75,10 +76,8 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int, stride: int | None = Non
 
 
 def pack_documents(docs: DataFrame, budget_tokens: int, n_shards: int = 1,
-                   stratum_col: str = "source",
-                   text_col: str = "text",
                    lengths: DataFrame | None = None) -> DataFrame:
-    """Next-fit packing: within each (stratum, shard) group, walk docs
+    """Next-fit packing: within each (source, shard) group, walk docs
     in doc_id order keeping a running fill; when fill + dl would exceed
     ``budget_tokens`` and the bin is non-empty, open a new bin. A doc
     longer than the budget therefore occupies a bin alone. Returns
@@ -99,15 +98,15 @@ def pack_documents(docs: DataFrame, budget_tokens: int, n_shards: int = 1,
     shard = (F.pmod(F.col("doc_id") * F.lit(_KNUTH), F.lit(_MOD))
              % F.lit(n_shards)).cast("int").alias("shard")
     if lengths is not None:
-        base = (docs.select("doc_id", F.col(stratum_col).alias("source"), shard)
+        base = (docs.select("doc_id", "source", shard)
                     .join(lengths.select("doc_id", F.col("dl").cast("long").alias("dl")),
                           "doc_id")
                     .filter(F.col("dl") > 0))
     else:
-        toks = F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
+        toks = F.filter(F.split(F.lower(F.col("text")), TOKEN_SPLIT),
                         lambda t: t != "")
         base = (docs.select(
-                    "doc_id", F.col(stratum_col).alias("source"), shard,
+                    "doc_id", "source", shard,
                     F.size(toks).alias("dl"))
                     .filter(F.col("dl") > 0))
 

@@ -1,6 +1,6 @@
-"""Distributed PCA over an embedding column — the dimensionality
-reduction a training-data pipeline runs before clustering / ANN /
-near-dup at corpus scale.
+"""Distributed PCA over the embeddings table (``vec_id``, ``embedding``) —
+the dimensionality reduction a training-data pipeline runs before
+clustering / ANN / near-dup at corpus scale.
 
 Scale shape (audited in BENCH/PLANS.md):
 
@@ -49,28 +49,27 @@ from yatsm_spark.operators.vectors import matrix, valid
 LITERAL_LOADINGS_MAX_DOUBLES = 4096
 
 
-def _vec_dim(df: DataFrame, vec_col: str) -> int:
-    first = df.select(F.size(F.col(vec_col)).alias("d")) \
+def _vec_dim(df: DataFrame) -> int:
+    first = df.select(F.size(F.col("embedding")).alias("d")) \
               .filter(F.col("d") > 0).first()
     if first is None:
-        raise ValueError(f"no non-empty vectors in column {vec_col!r}")
+        raise ValueError("no non-empty vectors in column 'embedding'")
     return int(first.d)
 
 
-def pca_moments(df: DataFrame, vec_col: str = "embedding",
-                dim: int | None = None) -> tuple[int, list[int], list[int]]:
+def pca_moments(df: DataFrame, dim: int | None = None) -> tuple[int, list[int], list[int]]:
     """EXACT integer (n, S[d], G_tri) of the quantized corpus. Rows whose
     vector is null or length-mismatched are dropped (documented contract;
     mixed-dimension corpora must be split upstream)."""
-    d = dim or _vec_dim(df, vec_col)
+    d = dim or _vec_dim(df)
 
     def moments(pdf):
-        n, S, tri = moments_from_quantized(quantize(matrix(pdf[vec_col])))
+        n, S, tri = moments_from_quantized(quantize(matrix(pdf["embedding"])))
         vals = [n] + S + tri
         return pd.DataFrame({"idx": range(len(vals)),
                              "val": [str(v) for v in vals]})
 
-    combined = (per_batch(valid(df, vec_col, d).select(vec_col), moments,
+    combined = (per_batch(valid(df, d).select("embedding"), moments,
                           ["idx int", "val string"], name="pca_moments")
                    .groupBy("idx")
                    .agg(F.sum(F.col("val").cast("decimal(38,0)")).alias("v"))
@@ -84,22 +83,21 @@ def pca_moments(df: DataFrame, vec_col: str = "embedding",
     return n, S, tri
 
 
-def pca_loadings(df: DataFrame, k: int, vec_col: str = "embedding"):
+def pca_loadings(df: DataFrame, k: int):
     """(mean[d], components (d, k), eigenvalues[k]) — one moment pass
     plus O(d^3) driver work."""
-    n, S, tri = pca_moments(df, vec_col)
+    n, S, tri = pca_moments(df)
     return loadings_from_moments(n, S, tri, k)
 
 
-def pca_project(df: DataFrame, k: int = 4, id_col: str = "vec_id",
-                vec_col: str = "embedding", method: str = "auto",
+def pca_project(df: DataFrame, k: int = 4, method: str = "auto",
                 loadings=None) -> DataFrame:
-    """(id, pc_0..pc_{k-1}): mean-centered scores on the top-k principal
+    """(vec_id, pc_0..pc_{k-1}): mean-centered scores on the top-k principal
     axes. ``loadings`` (a ``pca_loadings`` result) can be passed to skip
     the moment pass (train once, project many)."""
-    mean, comps, _eig = loadings or pca_loadings(df, k, vec_col)
+    mean, comps, _eig = loadings or pca_loadings(df, k)
     d = len(mean)
-    src = valid(df, vec_col, d)
+    src = valid(df, d)
     if method == "auto":
         method = ("literal" if d * comps.shape[1]
                   <= LITERAL_LOADINGS_MAX_DOUBLES else "broadcast")
@@ -108,14 +106,14 @@ def pca_project(df: DataFrame, k: int = 4, id_col: str = "vec_id",
         cols = []
         for c in range(comps.shape[1]):
             terms = [
-                (F.element_at(F.col(vec_col), dd + 1).cast("double")
+                (F.element_at(F.col("embedding"), dd + 1).cast("double")
                  - F.lit(float(mean[dd]))) * F.lit(float(comps[dd, c]))
                 for dd in range(d)
             ]
             # left-associated add in dimension order == the seqfold
             cols.append(reduce(lambda a, b: a + b, terms, F.lit(0.0))
                         .alias(f"pc_{c}"))
-        return src.select(F.col(id_col), *cols)
+        return src.select(F.col("vec_id"), *cols)
 
     if method != "broadcast":
         raise ValueError(f"unknown pca method {method!r}")
@@ -124,14 +122,14 @@ def pca_project(df: DataFrame, k: int = 4, id_col: str = "vec_id",
 
     def project(pdf, payload):
         m, Cm = payload
-        Y = seq_dot(matrix(pdf[vec_col]) - m, Cm.T)
-        out = {id_col: pdf[id_col]}
+        Y = seq_dot(matrix(pdf["embedding"]) - m, Cm.T)
+        out = {"vec_id": pdf["vec_id"]}
         for c in range(n_out):
             out[f"pc_{c}"] = Y[:, c]
         return pd.DataFrame(out)
 
-    return per_batch(src.select(id_col, vec_col), project,
-                     [id_col, *(f"pc_{c} double" for c in range(n_out))],
+    return per_batch(src.select("vec_id", "embedding"), project,
+                     ["vec_id", *(f"pc_{c} double" for c in range(n_out))],
                      name="pca_project",
                      payload=(np.asarray(mean, dtype=np.float64),
                               np.asarray(comps, dtype=np.float64)))

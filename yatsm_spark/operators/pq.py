@@ -2,7 +2,8 @@
 (Jégou, Douze & Schmid, TPAMI 2011): compress each vector into m
 one-byte codes so a 100 TB embedding corpus fits executor memory as a
 codes table, then answer queries by asymmetric distance (ADC) — table
-lookups instead of float dot products per candidate.
+lookups instead of float dot products per candidate. Reads the embeddings
+table (``vec_id``, ``embedding``).
 
 Scale shape (audited in BENCH/PLANS.md):
 
@@ -51,53 +52,49 @@ ADC_SCHEMA = ["query_id long", "neighbor_id long", "adist double"]
 
 
 def pq_train(df: DataFrame, m: int = 8, ksub: int = 16, n_iters: int = 5,
-             id_col: str = "vec_id", vec_col: str = "embedding",
              sample_mod: int = 1) -> np.ndarray:
     """(m, ksub, dsub) codebooks from a deterministic bounded sample in
     id order (kernel conventions: first-ksub init, id-ordered member
     means, empty clusters keep their centroid)."""
     if m < 1 or ksub < 2 or n_iters < 1:
         raise ValueError("need m >= 1, ksub >= 2, n_iters >= 1")
-    V = _train_sample(df, id_col, vec_col, sample_mod, "PQ",
+    V = _train_sample(df, sample_mod, "PQ",
                       " — training is sample-bounded by design")
     return pq_train_core(V, m, ksub, n_iters)
 
 
-def _train_sample(df: DataFrame, id_col: str, vec_col: str, sample_mod: int,
-                  what: str, why: str = "") -> np.ndarray:
-    return gather(df, F.col(vec_col).isNotNull()
-                  & (F.col(id_col) % sample_mod == 0), id_col, vec_col,
+def _train_sample(df: DataFrame, sample_mod: int, what: str,
+                  why: str = "") -> np.ndarray:
+    return gather(df, F.col("embedding").isNotNull()
+                  & (F.col("vec_id") % sample_mod == 0),
                   cap=MAX_TRAIN_SAMPLE, empty=f"{what} training sample is empty",
                   over=f"{what} training sample {{n}} exceeds {{cap}}; "
                        f"raise sample_mod{why}")[1]
 
 
-def _queries(df: DataFrame, query_ids: list[int], id_col: str, vec_col: str):
-    return gather(df, F.col(id_col).isin([int(q) for q in query_ids]),
-                  id_col, vec_col, empty="no query vectors found for the given ids")
+def _queries(df: DataFrame, query_ids: list[int]):
+    return gather(df, F.col("vec_id").isin([int(q) for q in query_ids]),
+                  empty="no query vectors found for the given ids")
 
 
-def pq_encode(df: DataFrame, codebooks: np.ndarray,
-              id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
-    """(id, code array<int> of length m): per-subspace argmin against the
+def pq_encode(df: DataFrame, codebooks: np.ndarray) -> DataFrame:
+    """(vec_id, code array<int> of length m): per-subspace argmin against the
     broadcast codebooks — zero shuffle, one Arrow pass per batch. Null /
     length-mismatched vectors are dropped (same contract as PCA)."""
     m, _, dsub = codebooks.shape
 
     def encode(pdf, B):
-        codes = pq_encode_core(matrix(pdf[vec_col]), B)
-        return pd.DataFrame({id_col: pdf[id_col],
+        codes = pq_encode_core(matrix(pdf["embedding"]), B)
+        return pd.DataFrame({"vec_id": pdf["vec_id"],
                              "code": [row.tolist() for row in codes]})
 
-    return per_batch(valid(df, vec_col, m * dsub).select(id_col, vec_col),
-                     encode, [id_col, "code array<int>"], name="pq_encode",
+    return per_batch(valid(df, m * dsub).select("vec_id", "embedding"),
+                     encode, ["vec_id", "code array<int>"], name="pq_encode",
                      payload=np.asarray(codebooks, dtype=np.float64))
 
 
 def pq_adc_topk(df: DataFrame, codebooks: np.ndarray, query_ids: list[int],
-                k: int = 5, id_col: str = "vec_id",
-                vec_col: str = "embedding", codes: DataFrame | None = None,
+                k: int = 5, codes: DataFrame | None = None,
                 round6: bool = True) -> DataFrame:
     """(query_id, neighbor_id, adist, rank): asymmetric-distance top-k.
 
@@ -107,9 +104,9 @@ def pq_adc_topk(df: DataFrame, codebooks: np.ndarray, query_ids: list[int],
     the production shape, where encode happens once at ingest.
     Deterministic ranking: grid-snapped adist ASC, neighbor id ASC
     (floor(x*1e6+0.5) — adist >= 0, identical closed form in the twin)."""
-    qids, Q = _queries(df, query_ids, id_col, vec_col)
+    qids, Q = _queries(df, query_ids)
     if codes is None:
-        codes = pq_encode(df, codebooks, id_col, vec_col)
+        codes = pq_encode(df, codebooks)
 
     def adc(pdf, payload):
         qids_b, L = payload
@@ -119,7 +116,7 @@ def pq_adc_topk(df: DataFrame, codebooks: np.ndarray, query_ids: list[int],
         for qi, qid in enumerate(qids_b):
             acc = pq_adc_core(C, L[qi])
             out_q += [qid] * n
-            out_n += list(pdf[id_col])
+            out_n += list(pdf["vec_id"])
             out_d += list(acc)
         return pd.DataFrame({"query_id": out_q, "neighbor_id": out_n,
                              "adist": out_d})
@@ -138,38 +135,36 @@ def pq_adc_topk(df: DataFrame, codebooks: np.ndarray, query_ids: list[int],
 # --------------------------------------------------------------- IVF-PQ
 
 def ivfpq_index(df: DataFrame, n_centroids: int = 8, m: int = 8,
-                ksub: int = 16, n_iters: int = 5, id_col: str = "vec_id",
-                vec_col: str = "embedding", sample_mod: int = 1):
+                ksub: int = 16, n_iters: int = 5, sample_mod: int = 1):
     """(coarse, books): the two codebooks of an IVF-PQ index, trained on
     one deterministic bounded sample. The coarse quantizer IS Lloyd's on
     full vectors — pq_train_core with a single subspace of ksub =
     n_centroids — so both trainings share the same kernel conventions.
     PQ encodes RAW vectors (not residuals) — documented simplification;
     the routing/compression architecture is the FAISS shape either way."""
-    V = _train_sample(df, id_col, vec_col, sample_mod, "IVF-PQ")
+    V = _train_sample(df, sample_mod, "IVF-PQ")
     coarse = pq_train_core(V, 1, n_centroids, n_iters)[0]
     books = pq_train_core(V, m, ksub, n_iters)
     return coarse, books
 
 
-def ivfpq_encode(df: DataFrame, coarse: np.ndarray, books: np.ndarray,
-                 id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> DataFrame:
-    """(id, cluster, code): coarse assignment + PQ codes in ONE
+def ivfpq_encode(df: DataFrame, coarse: np.ndarray,
+                 books: np.ndarray) -> DataFrame:
+    """(vec_id, cluster, code): coarse assignment + PQ codes in ONE
     zero-shuffle Arrow pass — the ingest-time index build. Ties take the
     lowest cluster id (argmin first occurrence)."""
     m, _, dsub = books.shape
 
     def encode(pdf, payload):
         Cm, B = payload
-        V = matrix(pdf[vec_col])
+        V = matrix(pdf["embedding"])
         cl = np.argmin(seq_sqdist(V, Cm), axis=1).astype(np.int32)
         codes = pq_encode_core(V, B)
-        return pd.DataFrame({id_col: pdf[id_col], "cluster": cl,
+        return pd.DataFrame({"vec_id": pdf["vec_id"], "cluster": cl,
                              "code": [row.tolist() for row in codes]})
 
-    return per_batch(valid(df, vec_col, m * dsub).select(id_col, vec_col),
-                     encode, [id_col, "cluster int", "code array<int>"],
+    return per_batch(valid(df, m * dsub).select("vec_id", "embedding"),
+                     encode, ["vec_id", "cluster int", "code array<int>"],
                      name="ivfpq_encode",
                      payload=tuple(np.asarray(a, dtype=np.float64)
                                    for a in (coarse, books)))
@@ -177,7 +172,6 @@ def ivfpq_encode(df: DataFrame, coarse: np.ndarray, books: np.ndarray,
 
 def ivfpq_topk(df: DataFrame, coarse: np.ndarray, books: np.ndarray,
                query_ids: list[int], nprobe: int = 2, k: int = 5,
-               id_col: str = "vec_id", vec_col: str = "embedding",
                encoded: DataFrame | None = None) -> DataFrame:
     """(query_id, neighbor_id, adist, rank): the full IVF-PQ serve path —
     coarse-route each query to its nprobe nearest inverted lists, then
@@ -189,20 +183,20 @@ def ivfpq_topk(df: DataFrame, coarse: np.ndarray, books: np.ndarray,
     and the only exchange is the final per-query ranking. With nprobe =
     n_centroids the result equals brute-force pq_adc_topk on the same
     codebooks (pytest-pinned)."""
-    qids, Q = _queries(df, query_ids, id_col, vec_col)
+    qids, Q = _queries(df, query_ids)
     nprobe = min(nprobe, coarse.shape[0])
     cdist = seq_sqdist(Q, coarse)
     # probe order: distance, then lowest cluster id (lexsort is stable)
     probes = [np.lexsort((np.arange(coarse.shape[0]), cdist[i]))[:nprobe]
               for i in range(len(qids))]
     if encoded is None:
-        encoded = ivfpq_encode(df, coarse, books, id_col, vec_col)
+        encoded = ivfpq_encode(df, coarse, books)
     spark = df.sparkSession
     probe_pairs = spark.createDataFrame(
         [(qid, int(c)) for qid, pr in zip(qids, probes) for c in pr],
         "query_id long, cluster int")
     cand = encoded.join(F.broadcast(probe_pairs), "cluster") \
-                  .filter(F.col(id_col) != F.col("query_id"))
+                  .filter(F.col("vec_id") != F.col("query_id"))
 
     def adc(pdf, payload):
         qids_b, L = payload
@@ -213,10 +207,10 @@ def ivfpq_topk(df: DataFrame, coarse: np.ndarray, books: np.ndarray,
         for q in np.unique(qcol):
             sel = qcol == q
             adist[sel] = pq_adc_core(C[sel], L[pos[int(q)]])
-        return pd.DataFrame({"query_id": qcol, "neighbor_id": pdf[id_col],
+        return pd.DataFrame({"query_id": qcol, "neighbor_id": pdf["vec_id"],
                              "adist": adist})
 
-    pairs = per_batch(cand.select("query_id", id_col, "code"), adc,
+    pairs = per_batch(cand.select("query_id", "vec_id", "code"), adc,
                       ADC_SCHEMA, name="ivfpq_topk",
                       payload=(qids, pq_lut(Q, books)))
     snapped = snap6(F.col("adist"))

@@ -1,5 +1,6 @@
 """Lexical ranking for the training-data pipeline: TF-IDF keyword
-extraction and BM25 retrieval over the documents table.
+extraction and BM25 retrieval over the documents table (``doc_id``,
+``text``).
 
 This is the sparse/lexical complement of the dense-embedding family
 (operators/similarity.py): corpus curation needs BOTH — embedding ANN for
@@ -58,24 +59,24 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def _tokens(docs: DataFrame, text_col: str) -> DataFrame:
+def _tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, tokens array, dl) — text dropped right here, before any
     shuffle ever sees it."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
+    toks = F.filter(F.split(F.lower(F.col("text")), TOKEN_SPLIT),
                     lambda t: t != "")
     return docs.select("doc_id", toks.alias("toks")) \
                .select("doc_id", "toks", F.size("toks").alias("dl"))
 
 
-def doc_term_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_term_freq(docs: DataFrame) -> DataFrame:
     """Per-document term frequencies: (doc_id, term, tf). One shuffle on
     (doc_id, term) with map-side partial counts."""
-    t = _tokens(docs, text_col)
+    t = _tokens(docs)
     return (t.select("doc_id", F.explode("toks").alias("term"))
              .groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
 
 
-def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text") -> DataFrame:
+def tfidf_topk(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-k salient terms per document by smooth TF-IDF.
 
     Rank is decided ONLY by integers: (tf DESC, df ASC, term ASC) — a
@@ -84,7 +85,7 @@ def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text") -> DataFrame
     the tf-idf rank wherever tf-idf is strict, and a deterministic
     lexicographic tie-break where it ties.
     """
-    tf = doc_term_freq(docs, text_col)
+    tf = doc_term_freq(docs)
     df_t = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = docs.select(F.count("*").alias("n_docs"))
     scored = (tf.join(df_t, "term")
@@ -101,7 +102,6 @@ def tfidf_topk(docs: DataFrame, k: int = 5, text_col: str = "text") -> DataFrame
 
 
 def bm25_scores(docs: DataFrame, query_terms: list[str],
-                text_col: str = "text",
                 k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
     """BM25 score of every document matching >= 1 query term.
 
@@ -111,7 +111,7 @@ def bm25_scores(docs: DataFrame, query_terms: list[str],
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
     q = sorted({t.lower() for t in query_terms})
-    t = _tokens(docs, text_col)
+    t = _tokens(docs)
     stats = t.select(F.count("*").alias("n_docs"),
                      F.avg("dl").alias("avgdl"))
     posting = (t.select("doc_id", "dl", F.explode("toks").alias("term"))
@@ -143,14 +143,13 @@ def bm25_scores(docs: DataFrame, query_terms: list[str],
 
 
 def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
-              text_col: str = "text",
               k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
     """Top-k retrieval over ``bm25_scores``. The cutoff orders by the
     snapped-score INTEGER (score * 1e6 as bigint) with a doc_id
     tie-break, so membership at the k boundary is engine-independent;
     orderBy + limit compiles to TakeOrderedAndProject — a per-partition
     heap plus a driver merge of k rows, never a full sort shuffle."""
-    scored = bm25_scores(docs, query_terms, text_col, k1, b)
+    scored = bm25_scores(docs, query_terms, k1, b)
     # re-snap (not a bare cast): score = u/1e6 may sit 1 ulp under the
     # integer, and cast() truncates — floor(x*1e6 + .5) recovers u exactly
     skey = micro6(F.col("score")).cast("long")

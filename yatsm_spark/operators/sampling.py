@@ -1,4 +1,5 @@
-"""Deterministic sampling for the training-data pipeline.
+"""Deterministic sampling for the training-data pipeline, over the documents
+table (``doc_id``, ``source``).
 
 Corpus builders sample constantly — per-source quotas, held-out eval
 splits, decontamination spot checks — and at 100 TB the sample must be
@@ -38,12 +39,11 @@ _KNUTH = 2654435761
 _MOD = 1 << 32
 
 
-def _hash_col(id_col: str):
-    return F.pmod(F.col(id_col) * F.lit(_KNUTH), F.lit(_MOD))
+def _hash_col():
+    return F.pmod(F.col("doc_id") * F.lit(_KNUTH), F.lit(_MOD))
 
 
-def sample_hash(df: DataFrame, rate: float, id_col: str = "doc_id",
-                complement: bool = False) -> DataFrame:
+def sample_hash(df: DataFrame, rate: float, complement: bool = False) -> DataFrame:
     """Keep rows with h(id) mod 2^32 < rate * 2^32. Deterministic,
     shuffle-free, and composable: sample_hash(r1) ∘ sample_hash(r2) on
     the same id column keeps min(r1, r2) (the smaller threshold wins),
@@ -55,27 +55,24 @@ def sample_hash(df: DataFrame, rate: float, id_col: str = "doc_id",
     if not 0.0 <= rate <= 1.0:
         raise ValueError("rate must be in [0, 1]")
     threshold = int(rate * _MOD)
-    cond = _hash_col(id_col) < F.lit(threshold)
+    cond = _hash_col() < F.lit(threshold)
     return df.filter(~cond if complement else cond)
 
 
-def sample_stratified(df: DataFrame, n_per_stratum: int,
-                      stratum_col: str = "source",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Exactly min(n, |stratum|) rows per stratum, drawn uniformly by
+def sample_stratified(df: DataFrame, n_per_stratum: int) -> DataFrame:
+    """Exactly min(n, |source|) rows per source, drawn uniformly by
     hash order. Output carries the within-stratum draw rank so the
     sample is extensible: the rank<=m prefix IS sample_stratified(m)."""
     if n_per_stratum < 1:
         raise ValueError("n_per_stratum must be >= 1")
-    w = Window.partitionBy(stratum_col).orderBy(
-        _hash_col(id_col).asc(), F.col(id_col).asc())
+    w = Window.partitionBy("source").orderBy(
+        _hash_col().asc(), F.col("doc_id").asc())
     return (df.withColumn("draw_rank", F.row_number().over(w))
               .filter(F.col("draw_rank") <= n_per_stratum))
 
 
-def sample_mixture(df: DataFrame, weights: dict[str, float], total: int,
-                   stratum_col: str = "source",
-                   id_col: str = "doc_id") -> DataFrame:
+def sample_mixture(df: DataFrame, weights: dict[str, float],
+                   total: int) -> DataFrame:
     """Deterministic DOMAIN-MIXTURE sample: draw ~``total`` rows whose
     composition follows ``weights`` (the training-mix recipe — e.g.
     {'web': 0.6, 'code': 0.25, 'books': 0.15}).
@@ -100,9 +97,9 @@ def sample_mixture(df: DataFrame, weights: dict[str, float], total: int,
     bad = {k: w for k, w in weights.items() if w <= 0}
     if bad:
         raise ValueError(f"weights must be positive, got {bad}")
-    counts = {r[stratum_col]: r["n"] for r in
-              df.filter(F.col(stratum_col).isin(list(weights)))
-                .groupBy(stratum_col).agg(F.count("*").alias("n"))
+    counts = {r["source"]: r["n"] for r in
+              df.filter(F.col("source").isin(list(weights)))
+                .groupBy("source").agg(F.count("*").alias("n"))
                 .collect()}
     wsum = sum(weights.values())
     spark = df.sparkSession
@@ -112,13 +109,13 @@ def sample_mixture(df: DataFrame, weights: dict[str, float], total: int,
         return df.filter(F.lit(False)) \
                  .withColumn("mix_rate", F.lit(0.0))
     rate_df = F.broadcast(spark.createDataFrame(
-        rates, f"{stratum_col} string, mix_rate double"))
+        rates, "source string, mix_rate double"))
     thresh = F.floor(F.col("mix_rate") * F.lit(float(_MOD)))
-    return (df.join(rate_df, stratum_col)
-              .filter(_hash_col(id_col) < thresh))
+    return (df.join(rate_df, "source")
+              .filter(_hash_col() < thresh))
 
 
-def global_shuffle(df: DataFrame, seed: int = 0, id_col: str = "doc_id",
+def global_shuffle(df: DataFrame, seed: int = 0,
                    n_parts: int | None = None) -> DataFrame:
     """Deterministic global shuffle order for training-data export:
     assigns every row a contiguous ``shuffle_pos`` in 0..n-1 following
@@ -146,14 +143,14 @@ def global_shuffle(df: DataFrame, seed: int = 0, id_col: str = "doc_id",
     spark = df.sparkSession
     if n_parts is None:
         n_parts = spark.sparkContext.defaultParallelism
-    key = F.pmod((F.col(id_col) + F.lit(int(seed))) * F.lit(_KNUTH),
+    key = F.pmod((F.col("doc_id") + F.lit(int(seed))) * F.lit(_KNUTH),
                  F.lit(_MOD)).alias("_h")
     # materialize pins ONE computation: the counts collected below
     # and the window pass must see identical partition contents (range
     # boundaries come from sampling; recomputing the exchange could place
     # them differently and silently shift every offset).
-    d = (df.select(F.col(id_col), key)
-         .repartitionByRange(n_parts, F.col("_h"), F.col(id_col))
+    d = (df.select(F.col("doc_id"), key)
+         .repartitionByRange(n_parts, F.col("_h"), F.col("doc_id"))
          .withColumn("_part", F.spark_partition_id())
          .transform(conf.materialize))
     counts = (d.groupBy("_part").agg(F.count(F.lit(1)).alias("_c"))
@@ -165,22 +162,22 @@ def global_shuffle(df: DataFrame, seed: int = 0, id_col: str = "doc_id",
     off = spark.createDataFrame(
         [(int(p), int(o)) for p, o in offsets.items()],
         "_part int, _off long")
-    w = Window.partitionBy("_part").orderBy(F.col("_h"), F.col(id_col))
+    w = Window.partitionBy("_part").orderBy(F.col("_h"), F.col("doc_id"))
     return (d.withColumn("_rn", F.row_number().over(w))
             .join(F.broadcast(off), "_part")
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     (F.col("_off") + F.col("_rn") - 1).alias("shuffle_pos")))
 
 
-def global_rank(df: DataFrame, order_cols: list, n_parts: int | None = None,
-                rank_col: str = "rank") -> DataFrame:
+def global_rank(df: DataFrame, order_cols: list,
+                n_parts: int | None = None) -> DataFrame:
     """Contiguous 1-based global rank following ``order_cols`` WITHOUT a
     one-reducer window: repartitionByRange on the order key, per-
     partition local rank, tiny count agg -> broadcast cumulative offsets
     (the global_shuffle shape — the only driver state is n_parts
     integers). ``order_cols`` are column NAMES already present on df
     (negate numerics beforehand for descending order); appends
-    ``rank_col`` and drops nothing else."""
+    ``rank`` and drops nothing else."""
     spark = df.sparkSession
     if n_parts is None:
         n_parts = spark.sparkContext.defaultParallelism
@@ -204,12 +201,11 @@ def global_rank(df: DataFrame, order_cols: list, n_parts: int | None = None,
     w = Window.partitionBy("_part").orderBy(*cols)
     return (d.withColumn("_rn", F.row_number().over(w))
             .join(F.broadcast(off), "_part")
-            .withColumn(rank_col, F.col("_off") + F.col("_rn"))
+            .withColumn("rank", F.col("_off") + F.col("_rn"))
             .drop("_part", "_rn", "_off"))
 
 
 def weighted_sample(df: DataFrame, weight_col: str, k: int, seed: int = 0,
-                    id_col: str = "doc_id",
                     n_parts: int | None = None) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (Efraimidis &
     Spirakis 2006, A-ES): each row gets key = ln(u)/w with u a
@@ -221,20 +217,20 @@ def weighted_sample(df: DataFrame, weight_col: str, k: int, seed: int = 0,
     The key is snapped to integer micro-units (the ln() discipline of
     lm_score/dsir) so ranking is integer-exact cross-engine, with id as
     the tie-break. Rows with weight <= 0 are excluded (they can never be
-    drawn). Emits (id, weight, es_key, rank, kept); the rank <= m prefix
+    drawn). Emits (doc_id, weight, es_key, rank, kept); the rank <= m prefix
     IS weighted_sample(m) — extensible like sample_stratified. Selection
     uses :func:`global_rank` (range partition + offsets, no one-reducer
     window)."""
-    h = F.pmod((F.col(id_col) + F.lit(int(seed))) * F.lit(_KNUTH),
+    h = F.pmod((F.col("doc_id") + F.lit(int(seed))) * F.lit(_KNUTH),
                F.lit(_MOD))
     u = (h.cast("double") + F.lit(0.5)) / F.lit(float(_MOD))
     key_micro = micro6(F.log(u) / F.col(weight_col).cast("double")).cast("long")
     base = (df.filter(F.col(weight_col) > 0)
-            .select(id_col, weight_col, key_micro.alias("key_micro"))
+            .select("doc_id", weight_col, key_micro.alias("key_micro"))
             .withColumn("_neg", -F.col("key_micro")))
-    ranked = global_rank(base, ["_neg", id_col], n_parts)
+    ranked = global_rank(base, ["_neg", "doc_id"], n_parts)
     return ranked.select(
-        id_col, weight_col,
+        "doc_id", weight_col,
         F.round(F.col("key_micro") / 1e6, 6).alias("es_key"),
         F.col("rank").alias("draw_rank"),
         (F.col("rank") <= k).alias("kept"))

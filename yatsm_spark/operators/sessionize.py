@@ -3,7 +3,8 @@
 Training-data-pipeline addition: user/agent event streams get grouped into
 sessions (gap > timeout starts a new one) — the standard preprocessing step
 for behavioral training data and the batch twin of Structured Streaming's
-`session_window`.
+`session_window`. The event operators read the events table (``user_id``,
+``ts``, ``event_id``, ``event_type``); the turn operators read transcripts.
 
 Spark-first shape: ONE shuffle on the session key. The lag/cumsum window
 pass partitions by key; the per-session aggregation clusters on
@@ -33,8 +34,7 @@ def sessionize(events: DataFrame, timeout_s: int = 1800) -> DataFrame:
     return events.withColumn("session_idx", idx.cast("long"))
 
 
-def session_stats(events: DataFrame, type_col: str = "event_type",
-                  timeout_s: int = 1800) -> DataFrame:
+def session_stats(events: DataFrame, timeout_s: int = 1800) -> DataFrame:
     """Per-session rollup: bounds, event count, distinct event types,
     duration. All exact (timestamps/longs) — no order-dependent float
     accumulation, so any engine reproduces it bit-for-bit."""
@@ -45,14 +45,13 @@ def session_stats(events: DataFrame, type_col: str = "event_type",
         .agg(F.min("ts").alias("session_start"),
              F.max("ts").alias("session_end"),
              F.count(F.lit(1)).alias("n_events"),
-             F.countDistinct(type_col).alias("n_event_types"),
+             F.countDistinct("event_type").alias("n_event_types"),
              dur.alias("duration_s"))
     )
 
 
-def funnel(events: DataFrame, steps: list[str], horizon_s: int = 86400,
-           user_col: str = "user_id",
-           type_col: str = "event_type") -> DataFrame:
+def funnel(events: DataFrame, steps: list[str],
+           horizon_s: int = 86400) -> DataFrame:
     """Ordered funnel analysis over the events table: for each step k,
     the number of users whose EARLIEST step-k event falls strictly
     after their step-(k-1) time and within ``horizon_s`` of it, plus
@@ -67,21 +66,21 @@ def funnel(events: DataFrame, steps: list[str], horizon_s: int = 86400,
     windows, no UDFs."""
     if len(steps) < 2:
         raise ValueError("funnel: need at least 2 steps")
-    s = events.select(user_col, "ts", type_col)
-    reached = (s.where(F.col(type_col) == steps[0])
-                .groupBy(user_col)
+    s = events.select("user_id", "ts", "event_type")
+    reached = (s.where(F.col("event_type") == steps[0])
+                .groupBy("user_id")
                 .agg(F.min("ts").alias("_t")))
     per_step = [reached]
     for st_ in steps[1:]:
-        prev = per_step[-1].select(user_col,
+        prev = per_step[-1].select("user_id",
                                    F.col("_t").alias("_tp"))
-        nxt = (s.where(F.col(type_col) == st_)
-                .join(prev, user_col)
+        nxt = (s.where(F.col("event_type") == st_)
+                .join(prev, "user_id")
                 .where((F.col("ts") > F.col("_tp"))
                        & (F.col("ts") <= F.col("_tp")
                           + F.expr(f"INTERVAL {int(horizon_s)} "
                                    "SECONDS")))
-                .groupBy(user_col)
+                .groupBy("user_id")
                 .agg(F.min("ts").alias("_t")))
         per_step.append(nxt)
     counts = None
@@ -100,8 +99,7 @@ def funnel(events: DataFrame, steps: list[str], horizon_s: int = 86400,
                           rate.alias("conv_rate")))
 
 
-def cohort_retention(events: DataFrame, period_s: int = 604800,
-                     user_col: str = "user_id") -> DataFrame:
+def cohort_retention(events: DataFrame, period_s: int = 604800) -> DataFrame:
     """Cohort retention matrix: users bucketed by their FIRST-event
     period (the cohort); for each (cohort, period offset) the count of
     cohort members active in that period and the retention rate vs the
@@ -113,7 +111,7 @@ def cohort_retention(events: DataFrame, period_s: int = 604800,
     no windows, no UDFs."""
     epoch = F.unix_micros(F.col("ts").cast("timestamp"))
     slot = F.floor(epoch / (period_s * 1_000_000)).cast("long")
-    s = events.select(F.col(user_col).alias("_u"), slot.alias("_p"))
+    s = events.select(F.col("user_id").alias("_u"), slot.alias("_p"))
     cohorts = s.groupBy("_u").agg(F.min("_p").alias("_c"))
     sizes = cohorts.groupBy("_c").agg(
         F.count(F.lit(1)).alias("n_cohort"))

@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over the embeddings table (``vec_id``, ``embedding``
+array<float>).
 
 Training-data-pipeline addition (task brief): brute-force cosine top-k as
 the correctness baseline; LSH (random-hyperplane) bucketing as the scale
@@ -37,22 +38,20 @@ def cosine_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Brute-force cosine top-k: queries (small, broadcast) × corpus.
     Deterministic ranking: ORDER BY rounded sim DESC, neighbor id ASC."""
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = embeddings.select(F.col(id_col), vec_d.alias("v"), _norm(vec_d).alias("nrm"))
-    q = base.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
+    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    base = embeddings.select(F.col("vec_id"), vec_d.alias("v"), _norm(vec_d).alias("nrm"))
+    q = base.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
-    joined = base.join(F.broadcast(q), F.col(id_col) != F.col("query_id"))
+    joined = base.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
     sim = F.round(_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn")), 6)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
-        joined.select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
+        joined.select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
@@ -61,20 +60,18 @@ def cosine_topk(
 def hyperplane_buckets(
     embeddings: DataFrame,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Random-hyperplane LSH bucket id per vector.
 
     Plane weights are a fixed deterministic function w(j,d) = cos(j*1009+d)
     — reproducible in ANY engine (no RNG state to ship), adequate spread
     for sign-LSH. bucket = Σ_j sign_j · 2^j."""
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     proj = [
         F.aggregate(
             F.zip_with(
                 vec_d,
-                F.transform(F.sequence(F.lit(0), F.size(F.col(vec_col)) - 1),
+                F.transform(F.sequence(F.lit(0), F.size(F.col("embedding")) - 1),
                             lambda d: F.cos(d + F.lit(float(j * 1009)))),
                 lambda x, wgt: x * wgt,
             ),
@@ -87,7 +84,7 @@ def hyperplane_buckets(
         (F.when(p > 0, F.lit(1 << j)).otherwise(F.lit(0)) for j, p in enumerate(proj)),
         start=F.lit(0),
     )
-    return embeddings.select(F.col(id_col), bucket.cast("long").alias("bucket"))
+    return embeddings.select(F.col("vec_id"), bucket.cast("long").alias("bucket"))
 
 
 #: Above this many codebook doubles (n_centroids × dim) the literal-expression
@@ -117,7 +114,7 @@ def _validate_codebook(centroids, n_expected: int | None = None):
     return sorted(centroids)
 
 
-def _with_csims_broadcast(df: DataFrame, centroids, id_col: str, vec_col: str,
+def _with_csims_broadcast(df: DataFrame, centroids, vec_col: str,
                           round6: bool = True) -> DataFrame:
     """Append ``v`` (double vector), ``nrm``, ``csims`` and ``cluster``
     using a BROADCAST numpy codebook consumed by a vectorized
@@ -178,8 +175,6 @@ def _with_csims_broadcast(df: DataFrame, centroids, id_col: str, vec_col: str,
 def ivf_index(
     embeddings: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     method: str = "auto",
     codebook=None,
 ):
@@ -207,11 +202,11 @@ def ivf_index(
     lowest ids, which keeps the operator oracle-checkable in pure SQL.
     Ties in the argmax break to the lowest centroid id (first max
     position)."""
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     if codebook is None:
         cents = (
-            embeddings.filter(F.col(id_col) < n_centroids)
-            .select(F.col(id_col).cast("int").alias("cid"), vec_d.alias("cv"),
+            embeddings.filter(F.col("vec_id") < n_centroids)
+            .select(F.col("vec_id").cast("int").alias("cid"), vec_d.alias("cv"),
                     _norm(vec_d).alias("cn"))
             .collect()
         )
@@ -225,12 +220,12 @@ def ivf_index(
                   if len(centroids) * dim <= LITERAL_CODEBOOK_MAX_DOUBLES
                   else "broadcast")
     if method == "broadcast":
-        assigned = _with_csims_broadcast(embeddings, centroids, id_col, vec_col)
+        assigned = _with_csims_broadcast(embeddings, centroids, "embedding")
         return assigned, centroids
     if method != "literal":
         raise ValueError(f"unknown ivf method {method!r}")
     base = embeddings.select(
-        F.col(id_col), F.col(vec_col), vec_d.alias("v"), _norm(vec_d).alias("nrm"))
+        F.col("vec_id"), F.col("embedding"), vec_d.alias("v"), _norm(vec_d).alias("nrm"))
     csims = F.array(*[
         F.round(_dot(F.col("v"), F.array(*[F.lit(float(x)) for x in cv]))
                 / (F.col("nrm") * F.lit(cn)), 6)
@@ -247,16 +242,14 @@ def ivf_index(
 def ivf_assign(
     embeddings: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     method: str = "auto",
     codebook=None,
 ) -> DataFrame:
-    """(id, cluster) inverted-file assignment — the table you'd partition /
+    """(vec_id, cluster) inverted-file assignment — the table you'd partition /
     bucket the corpus by so each probe reads only its clusters' files."""
-    assigned, _ = ivf_index(embeddings, n_centroids, id_col, vec_col,
-                            method=method, codebook=codebook)
-    return assigned.select(id_col, "cluster")
+    assigned, _ = ivf_index(embeddings, n_centroids, method=method,
+                            codebook=codebook)
+    return assigned.select("vec_id", "cluster")
 
 
 def ivf_topk(
@@ -265,8 +258,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     method: str = "auto",
     codebook=None,
 ) -> DataFrame:
@@ -280,12 +271,12 @@ def ivf_topk(
     probed and the result is bit-identical to :func:`cosine_topk`
     (pinned by ``tests/test_dedup_similarity.py``).
     """
-    assigned, centroids = ivf_index(embeddings, n_centroids, id_col, vec_col,
-                                    method=method, codebook=codebook)
+    assigned, centroids = ivf_index(embeddings, n_centroids, method=method,
+                                    codebook=codebook)
     cid_arr = F.array(*[F.lit(cid) for cid, _, _ in centroids])
     probes = (
-        assigned.filter(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("query_id"), F.col("v").alias("qv"),
+        assigned.filter(F.col("vec_id").isin(query_ids))
+        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
                 F.col("nrm").alias("qn"), F.posexplode("csims").alias("pos", "csim"))
         .withColumn("cid", F.element_at(cid_arr, (F.col("pos") + 1).cast("int")))
     )
@@ -295,12 +286,12 @@ def ivf_topk(
                    .filter(F.col("prn") <= nprobe)
     cand = assigned.join(
         F.broadcast(probes),
-        (F.col("cluster") == F.col("cid")) & (F.col(id_col) != F.col("query_id")))
+        (F.col("cluster") == F.col("cid")) & (F.col("vec_id") != F.col("query_id")))
     sim = F.round(_dot(F.col("v"), F.col("qv")) / (F.col("nrm") * F.col("qn")), 6)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
-        cand.select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
+        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
@@ -312,8 +303,6 @@ def train_kmeans(
     n_iters: int = 3,
     seed: int = 0,
     sample_mod: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ):
     """Seeded, deterministic distributed Lloyd's k-means for the IVF
     codebook (round-3 VERDICT next #1 — replaces the untrained
@@ -347,18 +336,18 @@ def train_kmeans(
     """
     if n_iters < 1:
         raise ValueError("n_iters must be >= 1")
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     sample = embeddings
     if sample_mod > 1:
         sample = sample.filter(
-            F.pmod(F.col(id_col), F.lit(sample_mod)) == seed % sample_mod)
+            F.pmod(F.col("vec_id"), F.lit(sample_mod)) == seed % sample_mod)
     # Materialize the training sample ONCE (r6): the init probe and every
     # Lloyd iteration re-assigned over this subtree, re-scanning and
     # re-casting the embeddings n_iters+1 times.
-    sample = sample.select(F.col(id_col), vec_d.alias("v")) \
+    sample = sample.select(F.col("vec_id"), vec_d.alias("v")) \
                    .transform(conf.materialize)
 
-    init = sample.orderBy(F.col(id_col).asc()).limit(n_centroids).collect()
+    init = sample.orderBy(F.col("vec_id").asc()).limit(n_centroids).collect()
     if len(init) < n_centroids:
         raise ValueError(
             f"k-means sample has {len(init)} rows < n_centroids="
@@ -372,15 +361,14 @@ def train_kmeans(
         norms = seq_norm(np.asarray(cvecs, dtype=np.float64))
         codebook = [(cid, cvecs[cid], float(norms[cid]))
                     for cid in range(n_centroids)]
-        assigned = _with_csims_broadcast(sample, codebook, id_col, "v",
-                                         round6=False)
+        assigned = _with_csims_broadcast(sample, codebook, "v", round6=False)
         upd = (
             assigned.groupBy("cluster")
             .agg(
                 F.count(F.lit(1)).alias("n_members"),
                 F.aggregate(
                     F.sort_array(F.collect_list(
-                        F.struct(F.col(id_col).alias("i"),
+                        F.struct(F.col("vec_id").alias("i"),
                                  F.col("v").alias("mv")))),
                     zero,
                     lambda acc, s: F.zip_with(acc, s["mv"],
@@ -408,15 +396,12 @@ def kmeans_codebook_table(
     n_iters: int = 3,
     seed: int = 0,
     sample_mod: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The trained codebook as a long-format DataFrame
     ``(cid, pos, val, n_members)`` — one row per centroid component, the
     relational shape the driver's value hash (and a parquet golden twin)
     can pin exactly."""
-    cb = train_kmeans(embeddings, n_centroids, n_iters, seed, sample_mod,
-                      id_col, vec_col)
+    cb = train_kmeans(embeddings, n_centroids, n_iters, seed, sample_mod)
     rows = [(int(cid), int(pos), float(val), int(n))
             for cid, vec, _nrm, n in cb
             for pos, val in enumerate(vec)]
@@ -428,8 +413,6 @@ def embedding_near_dups(
     threshold: float = 0.5,
     n_planes: int = 8,
     max_bucket_size: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (task-brief dedup family):
     LSH candidate generation + EXACT cosine verification + threshold.
@@ -440,13 +423,13 @@ def embedding_near_dups(
     design (the recall/cost trade); every EMITTED pair carries its exact
     cosine, so precision at the threshold is 1.0.
     """
-    pairs = lsh_candidate_pairs(embeddings, n_planes, id_col, vec_col,
+    pairs = lsh_candidate_pairs(embeddings, n_planes,
                                 max_bucket_size).select("id_a", "id_b")
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = embeddings.select(F.col(id_col), vec_d.alias("v"), _norm(vec_d).alias("nrm"))
-    a = base.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"),
+    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    base = embeddings.select(F.col("vec_id"), vec_d.alias("v"), _norm(vec_d).alias("nrm"))
+    a = base.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"),
                     F.col("nrm").alias("na"))
-    b = base.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"),
+    b = base.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"),
                     F.col("nrm").alias("nb"))
     sim = F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
     return (
@@ -457,7 +440,6 @@ def embedding_near_dups(
 
 
 def lsh_candidate_pairs(embeddings: DataFrame, n_planes: int = 8,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
                         max_bucket_size: int = 1000) -> DataFrame:
     """ANN candidate pairs: same hyperplane bucket, a < b. Join is within
     buckets only — the corpus never self-joins at full width.
@@ -467,7 +449,7 @@ def lsh_candidate_pairs(embeddings: DataFrame, n_planes: int = 8,
     degenerate bucket (e.g. the all-zeros region of the embedding space)
     would go quadratic at 10^9 vectors. The standard fix is more planes /
     multi-probe for those regions; the cap bounds the damage meanwhile."""
-    b = hyperplane_buckets(embeddings, n_planes, id_col, vec_col)
+    b = hyperplane_buckets(embeddings, n_planes)
     # Anti-join out the (small) over-cap bucket set instead of broadcasting
     # the keep-set, which grows with n_planes (round-2 ADVICE).
     bucket_hot = b.groupBy("bucket").agg(F.count(F.lit(1)).alias("bsz")).filter(
@@ -477,8 +459,8 @@ def lsh_candidate_pairs(embeddings: DataFrame, n_planes: int = 8,
     l, r = b.alias("l"), b.alias("r")
     return (
         l.join(r, (F.col("l.bucket") == F.col("r.bucket"))
-               & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"),
+               & (F.col("l.vec_id") < F.col("r.vec_id")))
+        .select(F.col("l.vec_id").alias("id_a"), F.col("r.vec_id").alias("id_b"),
                 F.col("l.bucket").alias("bucket"))
     )
 
@@ -491,8 +473,6 @@ def semdedup(
     sample_mod: int = 1,
     threshold: float = 0.3,
     max_cluster_size: int = 100_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook=None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -506,7 +486,7 @@ def semdedup(
     dup-partner j outranks it (lower cent_sim, then lower id) — not
     iterative, so a dropped row can still knock out its own partners.
 
-    Returns ``(id_col, cluster, cent_sim, kept)`` for every input row.
+    Returns ``(vec_id, cluster, cent_sim, kept)`` for every input row.
 
     Scale shape: clustering is what makes semantic dedup feasible at
     10^9+ vectors — the pairwise join runs WITHIN clusters only, so
@@ -530,9 +510,9 @@ def semdedup(
     """
     if codebook is None:
         codebook = train_kmeans(embeddings, n_centroids, n_iters, seed,
-                                sample_mod, id_col, vec_col)
+                                sample_mod)
     cb = [(cid, vec, nrm) for cid, vec, nrm, _n in codebook]
-    assigned = _with_csims_broadcast(embeddings, cb, id_col, vec_col)
+    assigned = _with_csims_broadcast(embeddings, cb, "embedding")
     # codebook is cid-sorted 0..k-1, so csims position cluster+1 is the
     # (already round-6 snapped) similarity to the assigned centroid
     # Materialize the assignment ONCE (r6): base feeds the guard probe,
@@ -540,7 +520,7 @@ def semdedup(
     # join — without the checkpoint the k-cosine-folds-per-row assignment
     # subtree ran four times.
     base = assigned.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("cluster"),
         F.element_at(F.col("csims"), (F.col("cluster") + 1).cast("int"))
          .alias("cent_sim"),
@@ -553,10 +533,10 @@ def semdedup(
             f"semdedup: largest cluster has {worst} members > "
             f"max_cluster_size={max_cluster_size}; raise n_centroids "
             f"(quadratic within-cluster cost) or the cap")
-    l = base.select(F.col(id_col).alias("id_a"), F.col("cluster"),
+    l = base.select(F.col("vec_id").alias("id_a"), F.col("cluster"),
                     F.col("cent_sim").alias("ca"), F.col("v").alias("va"),
                     F.col("nrm").alias("na"))
-    r = base.select(F.col(id_col).alias("id_b"),
+    r = base.select(F.col("vec_id").alias("id_b"),
                     F.col("cluster").alias("_cr"),
                     F.col("cent_sim").alias("cb"), F.col("v").alias("vb"),
                     F.col("nrm").alias("nb"))
@@ -572,11 +552,11 @@ def semdedup(
         | ((F.col("ca") == F.col("cb")) & (F.col("id_a") > F.col("id_b"))),
         F.col("id_a"),
     ).otherwise(F.col("id_b"))
-    dropped = dups.select(loser.alias(id_col)).distinct() \
+    dropped = dups.select(loser.alias("vec_id")).distinct() \
                   .withColumn("_drop", F.lit(True))
     return (
-        base.select(id_col, "cluster", "cent_sim")
-        .join(dropped, id_col, "left")
-        .select(F.col(id_col), F.col("cluster"), F.col("cent_sim"),
+        base.select("vec_id", "cluster", "cent_sim")
+        .join(dropped, "vec_id", "left")
+        .select(F.col("vec_id"), F.col("cluster"), F.col("cent_sim"),
                 F.col("_drop").isNull().alias("kept"))
     )

@@ -1,5 +1,6 @@
 """Text-analysis operators for training-data pipelines (task brief):
 token counting, quality scoring, language-ID heuristic, fingerprinting.
+Each reads the documents table (``doc_id``, ``text``).
 
 All pure Catalyst expressions (JVM-side, WholeStageCodegen) — no Python in
 the hot path. Each has an exact ANSI-SQL twin for the DuckDB oracle, so the
@@ -51,11 +52,11 @@ BPE_REGEX = ("'(?:s|t|re|ve|m|ll|d)| ?[\\p{L}]+| ?[\\p{N}]+"
              f"| ?[^{_WS_CHARS}\\p{{L}}\\p{{N}}]+|{WS_CLASS}+")
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish counts (GPT-2 pre-tokenizer regex
     match count, and the chars/4 rule of thumb) + char count. Pure
     Catalyst — regexp_count runs JVM-side inside codegen."""
-    t = F.col(text_col)
+    t = F.col("text")
     ws_tokens = F.size(F.split(F.trim(t), WS_CLASS + "+"))
     return docs.select(
         "doc_id",
@@ -66,10 +67,10 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features + a composite
     keep/drop flag (Gopher/C4-style threshold rules, simplified)."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     n_words = F.size(F.split(F.trim(t), WS_CLASS + "+")).cast("long")
     n_alpha = F.length(F.regexp_replace(t, r"[^a-zA-Z]", ""))
@@ -90,11 +91,11 @@ def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-marker language ID: argmax over per-language marker hit
     counts; 'und' when all zero. Deterministic tie-break by language code
     order via the score tuple."""
-    t = F.col(text_col)
+    t = F.col("text")
     scores = {
         lang: sum(_count_word(t, w) for w in words).alias(f"score_{lang}")
         for lang, words in LANG_MARKERS.items()
@@ -107,20 +108,20 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return scored.select("doc_id", *[f"score_{l}" for l in LANG_MARKERS], pred.alias("pred_lang"))
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Document fingerprint: md5 of whitespace-normalized lowercase text —
     the exact-dedup key (near-dup keys live in operators/dedup.py)."""
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), WS_CLASS + "+", " "))
+    norm = F.lower(F.regexp_replace(F.trim(F.col("text")), WS_CLASS + "+", " "))
     return docs.select("doc_id", F.md5(norm).alias("fingerprint"))
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Within-document repetition signals (the classic low-quality /
     generated-text tells): duplicated 2-gram and 3-gram fraction plus the
     most-frequent-word share. N-gram ratios are pure array Catalyst (no
     shuffle beyond the final top-word agg: explode -> (doc, word) count ->
     doc max/sum, both hash-aggs on the doc key)."""
-    t = F.col(text_col)
+    t = F.col("text")
     words = F.split(F.trim(F.regexp_replace(t, WS_CLASS + "+", " ")), " ")
     # words is materialized as a column BEFORE the gram lambdas slice it
     # (r6): Catalyst CSE does not reach inside higher-order-function
@@ -167,28 +168,28 @@ PII_PATTERNS = (
 )
 
 
-def pii_scan(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scan(docs: DataFrame) -> DataFrame:
     """Per-doc counts of each PII pattern — Catalyst regexp_count only."""
-    t = F.col(text_col)
+    t = F.col("text")
     return docs.select(
         "doc_id",
         *[F.regexp_count(t, F.lit(pat)).cast("long").alias(f"n_{name}")
           for name, pat in PII_PATTERNS])
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text",
-               out_col: str = "redacted", with_counts: bool = False) -> DataFrame:
-    """Replace every PII match with a typed placeholder, applied in
-    PII_PATTERNS order (email before ipv4/phone so an address inside a
-    URL/userinfo is consumed by the earlier, more specific pattern).
-    Byte-identical output across engines — the driver oracle compares the
-    redacted TEXT itself, not a summary. with_counts=True also emits the
-    pii_scan columns in the SAME single pass (one scan, zero shuffles)."""
-    t = F.col(text_col)
+def redact_pii(docs: DataFrame, with_counts: bool = False) -> DataFrame:
+    """Append ``redacted``: ``text`` with every PII match replaced by a
+    typed placeholder, applied in PII_PATTERNS order (email before
+    ipv4/phone so an address inside a URL/userinfo is consumed by the
+    earlier, more specific pattern). Byte-identical output across engines
+    — the driver oracle compares the redacted TEXT itself, not a summary.
+    with_counts=True also emits the pii_scan columns in the SAME single
+    pass (one scan, zero shuffles)."""
+    t = F.col("text")
     out = t
     for name, pat in PII_PATTERNS:
         out = F.regexp_replace(out, pat, f"<{name.upper()}>")
-    df = docs.withColumn(out_col, out)
+    df = docs.withColumn("redacted", out)
     if with_counts:
         for name, pat in PII_PATTERNS:
             df = df.withColumn(f"n_{name}",
@@ -196,8 +197,7 @@ def redact_pii(docs: DataFrame, text_col: str = "text",
     return df
 
 
-def lm_unigram_score(docs: DataFrame, text_col: str = "text",
-                     with_micro: bool = False) -> DataFrame:
+def lm_unigram_score(docs: DataFrame, with_micro: bool = False) -> DataFrame:
     """Corpus-self unigram language-model score per document — the
     perplexity-style quality signal of CCNet (Wenzek et al. 2020,
     arXiv:1911.00359), proxied with a self-trained unigram LM instead of
@@ -224,7 +224,7 @@ def lm_unigram_score(docs: DataFrame, text_col: str = "text",
     """
     from yatsm_spark.operators.ranking import TOKEN_SPLIT
 
-    toks = F.filter(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT),
+    toks = F.filter(F.split(F.lower(F.col("text")), TOKEN_SPLIT),
                     lambda t: t != "")
     words = (docs.select("doc_id", toks.alias("toks"))
              .select("doc_id", F.explode("toks").alias("word")))
@@ -262,8 +262,7 @@ GOPHER_BULLETS = ("-", "*", "•", "‣", "▪")
 GOPHER_ELLIPSES = ("...", "…")
 
 
-def gopher_rules(docs: DataFrame, text_col: str = "text",
-                 min_words: int = 50, max_words: int = 100_000,
+def gopher_rules(docs: DataFrame, min_words: int = 50, max_words: int = 100_000,
                  min_stops: int = 2) -> DataFrame:
     """The full Gopher quality-rule battery (Rae et al. 2021,
     arXiv:2112.11446 §A1.1.2) as per-document signals plus the composed
@@ -295,7 +294,7 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
     CollapseProject only inlines cheap expressions, so the two-step
     shape survives optimization and each traversal runs once).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     words = F.filter(F.split(F.trim(t), WS_CLASS + "+"), lambda w: w != F.lit(""))
 
     def _zero3():
@@ -391,8 +390,8 @@ C4_TERMINALS = (".", "!", "?", "\"")
 _LINE_WS = "[ \\t\\x0B\\f\\r]+"
 
 
-def c4_clean(docs: DataFrame, text_col: str = "text",
-             min_words_per_line: int = 5, min_lines: int = 3) -> DataFrame:
+def c4_clean(docs: DataFrame, min_words_per_line: int = 5,
+             min_lines: int = 3) -> DataFrame:
     """The C4 line-level cleanup battery (Raffel et al. 2020,
     arXiv:1910.10683 §2.2): keep only lines that end in terminal
     punctuation, carry at least ``min_words_per_line`` words, and do not
@@ -408,7 +407,7 @@ def c4_clean(docs: DataFrame, text_col: str = "text",
     non-cheap expressions out-of-line). The word count per line uses an
     explicit in-line whitespace class (no \\n — lines are already split
     on it; no \\s — the Java-vs-RE2 \\x0B gap, round-3 ADVICE)."""
-    t = F.col(text_col)
+    t = F.col("text")
     lines = F.split(t, "\n", -1)
 
     def _line_kept(l):

@@ -48,12 +48,12 @@ def ohlc(tier: DataFrame, value_col: str = "turn_count",
                      F.count(F.lit(1)).alias("n_slots")))
 
 
-def state_durations(tx: DataFrame, state_col: str = "role") -> DataFrame:
-    """State accounting (TimescaleDB state_agg): total wall seconds a
-    series spent in each state, where each event holds its state until
-    the next event (the last event holds for 0s — the series has no
-    knowledge past its final timestamp). Also counts events and runs
-    (maximal same-state stretches).
+def state_durations(tx: DataFrame) -> DataFrame:
+    """State accounting (TimescaleDB state_agg) over the transcripts: total
+    wall seconds a conversation spent in each ``role``, where each turn
+    holds its state until the next turn (the last turn holds for 0s —
+    the series has no knowledge past its final timestamp). Also counts
+    events and runs (maximal same-state stretches).
 
     Pure window + groupBy: LEAD(ts) and LAG(state) over the series
     order, then one hash aggregation on (series, state). Durations are
@@ -63,10 +63,10 @@ def state_durations(tx: DataFrame, state_col: str = "role") -> DataFrame:
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
     e = F.unix_micros(F.col("ts"))
     stepped = tx.select(
-        "conv_id", F.col(state_col).alias("state"),
+        "conv_id", F.col("role").alias("state"),
         (F.coalesce(F.lead(e).over(w), e) - e).alias("_dur"),
-        F.when(F.lag(state_col).over(w).isNull()
-               | (F.lag(state_col).over(w) != F.col(state_col)), 1)
+        F.when(F.lag("role").over(w).isNull()
+               | (F.lag("role").over(w) != F.col("role")), 1)
          .otherwise(0).alias("_run_start"))
     return (stepped.groupBy("conv_id", "state")
                    .agg(F.sum("_dur").cast("long").alias("total_us"),
@@ -414,8 +414,7 @@ def sax_words(tier: DataFrame, value_col: str = "turn_count", w: int = 16,
                      F.when(F.col("_has"), F.col("_w")).alias("sax_word")))
 
 
-def sax_candidate_pairs(words: DataFrame, max_bucket: int = 64,
-                        word_col: str = "sax_word") -> DataFrame:
+def sax_candidate_pairs(words: DataFrame, max_bucket: int = 64) -> DataFrame:
     """Series near-dup candidate pairs from SAX words (a < b), with the
     dedup family's hot-bucket discipline: a word shared by m series
     emits m(m-1)/2 pairs, so one degenerate shape (e.g. the word every
@@ -423,16 +422,16 @@ def sax_candidate_pairs(words: DataFrame, max_bucket: int = 64,
     Words over ``max_bucket`` are removed BEFORE the self-join by a
     broadcast anti-join of the (tiny by construction) hot-word set —
     never by broadcasting the corpus-sized keep set."""
-    w = words.where(F.col(word_col).isNotNull()).select("conv_id", word_col)
-    hot = (w.groupBy(word_col).agg(F.count(F.lit(1)).alias("_sz"))
+    w = words.where(F.col("sax_word").isNotNull()).select("conv_id", "sax_word")
+    hot = (w.groupBy("sax_word").agg(F.count(F.lit(1)).alias("_sz"))
              .filter(F.col("_sz") > max_bucket))
-    w = w.join(F.broadcast(hot.select(word_col)), word_col, "left_anti")
+    w = w.join(F.broadcast(hot.select("sax_word")), "sax_word", "left_anti")
     a, b = w.alias("a"), w.alias("b")
-    return (a.join(b, (F.col(f"a.{word_col}") == F.col(f"b.{word_col}"))
+    return (a.join(b, (F.col("a.sax_word") == F.col("b.sax_word"))
                    & (F.col("a.conv_id") < F.col("b.conv_id")))
              .select(F.col("a.conv_id").alias("conv_a"),
                      F.col("b.conv_id").alias("conv_b"),
-                     F.col(f"a.{word_col}").alias(word_col)))
+                     F.col("a.sax_word").alias("sax_word")))
 
 
 def distribution_shift(tier: DataFrame, value_col: str = "turn_count",

@@ -366,10 +366,9 @@ def topk_slots(tier: DataFrame, value_col: str = "turn_count",
                 .where(F.col("rank") <= k))
 
 
-def alert_episodes(flags: DataFrame, value_col: str = "turn_count",
-                   flag_col: str = "is_anomaly",
-                   z_col: str = "zscore") -> DataFrame:
-    """Collapse per-slot anomaly flags into ALERT EPISODES — maximal
+def alert_episodes(flags: DataFrame, value_col: str = "turn_count") -> DataFrame:
+    """Collapse per-slot anomaly flags (``is_anomaly``, ``zscore``, as
+    ``rolling_anomaly`` emits them) into ALERT EPISODES — maximal
     runs of consecutive flagged rows (the Prometheus `ALERTS` /
     "pending for N" shape, applied after the fact): per episode the
     first/last slot, its length, the peak deviation and the value at
@@ -382,7 +381,7 @@ def alert_episodes(flags: DataFrame, value_col: str = "turn_count",
     means adjacent surviving ROWS in slot order, which on the dense
     tier is adjacent slots.
 
-    Float discipline: z_col is already 1e-6-snapped by
+    Float discipline: zscore is already 1e-6-snapped by
     ``rolling_anomaly``; max/arg-max over snapped values is exact, so
     no new float risk is introduced. peak_value is picked by max_by on
     (zscore, slot) with the slot as a unique tie-break.
@@ -394,7 +393,7 @@ def alert_episodes(flags: DataFrame, value_col: str = "turn_count",
     the agg reuses the window's exchange, so the operator costs ONE
     shuffle total."""
     w = Window.partitionBy("conv_id").orderBy("window_start")
-    flagged = F.col(flag_col) == True  # noqa: E712 — NULL-safe on purpose
+    flagged = F.col("is_anomaly") == True  # noqa: E712 — NULL-safe on purpose
     base = (flags
             .withColumn("_rn", F.row_number().over(w))
             .where(flagged)
@@ -403,13 +402,13 @@ def alert_episodes(flags: DataFrame, value_col: str = "turn_count",
     # zscore can be NULL inside an episode (zero-variance window flagged
     # by dev != 0): order those FIRST so max_by picks a real peak when
     # one exists, deterministically via the unique slot tie-break.
-    zkey = F.struct(F.coalesce(F.col(z_col), F.lit(float("-inf"))).alias("z"),
+    zkey = F.struct(F.coalesce(F.col("zscore"), F.lit(float("-inf"))).alias("z"),
                     F.col("window_start").alias("t"))
     return (base.groupBy("conv_id", "_isl")
                 .agg(F.min("window_start").alias("episode_start"),
                      F.max("window_start").alias("episode_end"),
                      F.count(F.lit(1)).alias("n_slots"),
-                     F.max(z_col).alias("peak_zscore"),
+                     F.max("zscore").alias("peak_zscore"),
                      F.max_by(F.col(value_col), zkey).alias("peak_value"))
                 .drop("_isl"))
 

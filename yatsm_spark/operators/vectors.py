@@ -1,7 +1,8 @@
 """Embedding vectors on both sides of the Arrow boundary, shared by the pq,
 pca and similarity operators: the valid-row filter, the conversion of
 array columns to one 2-D numpy array, and the bounded gather of vectors
-to the driver in id order.
+to the driver in id order. The filter and the gather read the embeddings
+table (``vec_id``, ``embedding``).
 """
 
 from __future__ import annotations
@@ -13,9 +14,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def valid(df: DataFrame, vec_col: str, d: int) -> DataFrame:
+def valid(df: DataFrame, d: int) -> DataFrame:
     """Rows of ``df`` whose vector is present with exactly ``d`` entries."""
-    return df.filter(F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == d))
+    return df.filter(F.col("embedding").isNotNull()
+                     & (F.size(F.col("embedding")) == d))
 
 
 def matrix(vectors: Iterable, dtype=np.float64) -> np.ndarray:
@@ -24,13 +26,13 @@ def matrix(vectors: Iterable, dtype=np.float64) -> np.ndarray:
     return np.stack([np.asarray(v, dtype=dtype) for v in vectors])
 
 
-def gather(df: DataFrame, where: Column, id_col: str, vec_col: str, *,
-           empty: str, cap: int | None = None,
+def gather(df: DataFrame, where: Column, *, empty: str, cap: int | None = None,
            over: str = "") -> tuple[list[int], np.ndarray]:
     """(ids, float64 vectors) of the rows of ``df`` matching ``where``, in
     id order. Raises ValueError with ``empty`` when no row matches, and
     with ``over`` (formatted with ``n`` and ``cap``) beyond ``cap`` rows."""
-    rows = df.filter(where).select(id_col, vec_col).orderBy(id_col).collect()
+    rows = (df.filter(where).select("vec_id", "embedding")
+            .orderBy("vec_id").collect())
     if cap is not None and len(rows) > cap:
         raise ValueError(over.format(n=len(rows), cap=cap))
     if not rows:

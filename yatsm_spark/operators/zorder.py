@@ -1,6 +1,7 @@
 """Z-order (Morton) clustering — multi-dimensional data layout for
 min/max data skipping, the storage-side lever that makes selective
-multi-column scans cheap at 100 TB.
+multi-column scans cheap at 100 TB. Works on any table (the events table in
+the declared queries) and names its key column ``z``.
 
 Why: parquet/Iceberg readers prune files and row groups by per-column
 min/max statistics. A layout sorted on one column skips well on that
@@ -75,8 +76,8 @@ def _collect_stats(df: DataFrame, cols: list[str]) -> dict:
 
 
 def zorder_key(df: DataFrame, cols: list[str], bits: int = DEFAULT_BITS,
-               out_col: str = "z", stats: dict | None = None) -> DataFrame:
-    """Append the Morton key of ``cols``: bit b of column c lands at
+               stats: dict | None = None) -> DataFrame:
+    """Append ``z``, the Morton key of ``cols``: bit b of column c lands at
     output bit ``b * n_cols + c``. ``stats`` ({col: (lo, hi)}) can be
     passed to pin the grid externally (e.g. table-level bounds so keys
     stay comparable across incremental writes)."""
@@ -96,7 +97,7 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = DEFAULT_BITS,
             z = z + F.shiftleft(
                 F.shiftright(F.col(f"_g{i}"), b) % 2,
                 b * len(cols) + i)
-    return tmp.withColumn(out_col, z) \
+    return tmp.withColumn("z", z) \
               .drop(*[f"_g{i}" for i in range(len(cols))])
 
 

@@ -146,11 +146,13 @@ def run_pipeline(
     metrics.staged_turns = n_turns
     staged = store.read(spark, staging)
 
-    # Buckets past cfg.n_buckets were written by a run with more buckets.
+    # Buckets past cfg.n_buckets were written by a run with more buckets; a
+    # directory with a name that is not an integer (bucket=0.inprogress, the
+    # staging name before it took a leading dot) was never committed.
     for table in BUCKET_TABLES:
-        for b in store.buckets(table):
-            if b >= cfg.n_buckets:
-                store.drop_bucket(table, b)
+        for name in store.bucket_names(table):
+            if not name.isdigit() or int(name) >= cfg.n_buckets:
+                store.drop_bucket(table, name)
     for m in ckpt.manifests("bucket"):
         if m["bucket"] >= cfg.n_buckets:
             ckpt.drop("bucket", m["bucket"])

@@ -20,9 +20,9 @@ reader.
 
 ``IcebergStorage`` is the SQL a cluster catalog would run for the same
 tables (writeTo(...).append(), MERGE INTO for reconcile, DELETE for
-eviction), checked by tests/test_iceberg_contract.py. It implements none of
-``write_bucket``, ``buckets``, ``drop_bucket`` or ``bucket_size``, so it is
-not a drop-in replacement for ``ParquetStorage`` in the pipeline.
+eviction), checked by tests/test_iceberg_contract.py. It implements none
+of ``write_bucket``, ``bucket_names``, ``drop_bucket`` or ``bucket_size``,
+so it is not a drop-in replacement for ``ParquetStorage`` in the pipeline.
 
 On-disk format (``TIER_FORMAT_VERSION``): every table is written with
 timestamps as INT64 ``TIMESTAMP_MICROS`` and with Parquet v2 data pages.
@@ -169,14 +169,15 @@ class ParquetStorage:
             shutil.rmtree(final)
         os.rename(tmp, final)
 
-    def buckets(self, table: str) -> list[int]:
-        """The buckets of ``table`` that have a committed directory."""
+    def bucket_names(self, table: str) -> list[str]:
+        """The ``<name>`` of every ``bucket=<name>`` directory of ``table``;
+        only the integer names are committed buckets."""
         if not self.exists(table):
             return []
-        return [int(d[len("bucket="):]) for d in os.listdir(self.path(table))
-                if d.startswith("bucket=") and d[len("bucket="):].isdigit()]
+        return [d[len("bucket="):] for d in os.listdir(self.path(table))
+                if d.startswith("bucket=")]
 
-    def drop_bucket(self, table: str, bucket: int) -> None:
+    def drop_bucket(self, table: str, bucket: int | str) -> None:
         d = os.path.join(self.path(table), f"bucket={bucket}")
         if os.path.exists(d):
             shutil.rmtree(d)

@@ -26,6 +26,10 @@ unsupported); the graft's streaming path is the v2 addition:
   once emitted), ``stream_sessionize``, ``stream_hll_registers`` /
   ``stream_cms_counters`` (sketch merges ARE streaming aggregates).
 
+The tier twins read a 1m tier stream (``conv_id``, ``window_start``), the
+ingest reads a transcripts stream and ``stream_sessionize`` an events
+stream (``user_id``, ``ts``, ``event_type``).
+
 The EWMA, Holt-Winters, Kalman-filter and swing-door twins hold no
 recurrence of their own: each runs the batch operator's resumable kernel
 (kernel/smooth.py, kernel/kalman.py, kernel/swing.py) once per micro-batch
@@ -455,8 +459,7 @@ def stream_holtwinters(rollup_stream: DataFrame, alpha: float = 0.5,
                      "stream_holtwinters")
 
 
-def stream_sessionize(stream: DataFrame, type_col: str = "event_type",
-                      timeout_s: int = 1800,
+def stream_sessionize(stream: DataFrame, timeout_s: int = 1800,
                       watermark: str = "1 hour") -> DataFrame:
     """Streaming twin of operators/sessionize.py::session_stats via
     F.session_window: state merges events whose gap to the current session
@@ -480,7 +483,7 @@ def stream_sessionize(stream: DataFrame, type_col: str = "event_type",
         s.groupBy(F.col("user_id"), w.alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.max("ts").alias("last_ts"),
-             F.size(F.collect_set(type_col)).cast("long").alias("n_event_types"))
+             F.size(F.collect_set("event_type")).cast("long").alias("n_event_types"))
         .select(F.col("user_id"), F.col("w.start").alias("session_start"),
                 F.col("last_ts").alias("session_end"), "n_events",
                 "n_event_types",
