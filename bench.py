@@ -88,7 +88,7 @@ def gated_probe(label):
 
 
 def main():
-    from yatsm_spark.conf import get_spark
+    from yatsm_spark.conf import get_spark, set_shuffle_width_for
     from yatsm_spark.ingest import with_measures
     from yatsm_spark.operators.cascade import cascade
     from yatsm_spark.operators.changescore import change_scores
@@ -114,14 +114,7 @@ def main():
         # Data-sized shuffle width (see conf.shuffle_partitions_for_bytes):
         # runtime conf, so it can follow the input measured AFTER session
         # startup. 2.6 GB/sf0.1 -> 32 (= cores), 27 GB/sf1.0 -> ~108.
-        from yatsm_spark.conf import shuffle_partitions_for_bytes
-
-        base = os.path.basename(SF_DIR.rstrip("/"))
-        tx_path = os.path.join(REPO, "data", f"transcripts_{base}.parquet")
-        n_bytes = sum(os.path.getsize(os.path.join(tx_path, f))
-                      for f in os.listdir(tx_path)) if os.path.isdir(tx_path) else 0
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(shuffle_partitions_for_bytes(n_bytes, CPUS)))
+        set_shuffle_width_for(tx)
 
     queries: dict[str, float] = {}
 

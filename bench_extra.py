@@ -173,17 +173,12 @@ def main():
     if "--list" in sys.argv or not args:
         print("\n".join(PROBES))
         return
-    from yatsm_spark.conf import get_spark, shuffle_partitions_for_bytes
+    from yatsm_spark.conf import get_spark, set_shuffle_width_for
     from yatsm_spark.synth import transcripts_for_sf
 
     spark = get_spark(app_name="yatsm-probe", master=f"local[{CPUS}]")
-    base = os.path.basename(SF_DIR.rstrip("/"))
-    tx_path = os.path.join(REPO, "data", f"transcripts_{base}.parquet")
-    n_bytes = sum(os.path.getsize(os.path.join(tx_path, f))
-                  for f in os.listdir(tx_path)) if os.path.isdir(tx_path) else 0
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(shuffle_partitions_for_bytes(n_bytes, CPUS)))
     tx = transcripts_for_sf(spark, SF_DIR, data_root=os.path.join(REPO, "data"))
+    set_shuffle_width_for(tx)
     out = {}
     for name in args:
         fn = PROBES[name]

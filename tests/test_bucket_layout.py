@@ -1,22 +1,28 @@
 """Per-bucket physical layout of a pipeline run: the sparse 1m rollup is the
 bucket's one conv exchange, every table write inherits its partitioning and
-order, each table has at most the bucket's shuffle width of files, the
-tables are zstd parquet, and their footers carry only the metadata readers
-use (a resume rewrites buckets of the older formats)."""
+order, each table has at most the bucket's shuffle width of files (one file
+for a bucket under 1 MiB of staged bytes, whose five table writes run at
+once instead), the tables are zstd parquet, and their footers carry only
+the metadata readers use (a resume rewrites buckets of the older
+formats)."""
 
 import json
 import os
 import re
 import shutil
+import threading
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from tests.test_plans import plan_of
-from yatsm_spark.conf import scoped_conf
+from yatsm_spark.conf import (MIN_PARTITION_BYTES, scoped_conf,
+                              shuffle_partitions_for_bytes)
 from yatsm_spark.operators.rollup import MEASURES, MOMENTS
 from yatsm_spark.pipeline import PipelineConfig, run_pipeline
-from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage
+from yatsm_spark.sources.storage import (TIER_FORMAT_VERSION, ParquetStorage,
+                                         shared_column_options)
 from yatsm_spark.synth import generate_transcripts
 
 TABLES = ("tier_1m", "tier_1h", "tier_1d", "segments", "chunks_1m")
@@ -33,14 +39,18 @@ def tx(spark):
 @pytest.fixture(scope="module")
 def traced(spark, tx, tmp_path_factory):
     """One run with every bucket write's executed plan and the session
-    shuffle width at that write, keyed by (table, bucket)."""
+    shuffle width at that write, keyed by (table, bucket). A bucket's
+    writes run on threads of their own, and ``plan_of`` swaps
+    ``conf.materialize`` unlocked, so one capture runs at a time."""
     w = str(tmp_path_factory.mktemp("layout"))
     plans, widths = {}, {}
     orig = ParquetStorage.write_bucket
+    capture = threading.Lock()
 
     def write_bucket(self, df, table, bucket):
-        plans[table, bucket] = plan_of(lambda: df, "simple")
-        widths[table, bucket] = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        with capture:
+            plans[table, bucket] = plan_of(lambda: df, "simple")
+            widths[table, bucket] = int(spark.conf.get("spark.sql.shuffle.partitions"))
         orig(self, df, table, bucket)
 
     with pytest.MonkeyPatch.context() as mp:
@@ -120,6 +130,33 @@ def test_bucket_tables_have_at_most_shuffle_width_files(traced):
         assert 1 <= len(files) <= width, (table, b, len(files), width)
 
 
+@pytest.mark.parametrize("n_bytes, cores, width", [
+    (0, 4, 1),
+    (MIN_PARTITION_BYTES, 4, 1),
+    (MIN_PARTITION_BYTES + 1, 4, 2),
+    (4 * MIN_PARTITION_BYTES, 4, 4),
+    (32 * MIN_PARTITION_BYTES, 32, 32),
+    (25_243_918, 4, 4),          # the sf0.01 transcripts at local[4]
+    (300 << 30, 4, 1_200),       # ~256 MB per partition past the cores
+    (300 << 30, 2_000, 2_000),
+    (1 << 50, 4, 32_768),        # the cap
+])
+def test_shuffle_width_is_one_partition_per_mib_up_to_the_cores(n_bytes, cores, width):
+    assert shuffle_partitions_for_bytes(n_bytes, cores) == width
+
+
+def test_a_bucket_under_one_mib_writes_one_file_per_table(traced):
+    """A bucket whose staged input is under 1 MiB is one shuffle partition,
+    so each of its tables is one file, whatever the core count."""
+    w, _, widths = traced
+    store = ParquetStorage(w)
+    for b in range(2):
+        assert 0 < store.bucket_size("staging_measures", b)[0] < MIN_PARTITION_BYTES
+    for (table, b), width in widths.items():
+        assert width == 1, (table, b)
+        assert store.bucket_size(table, b)[1] == 1, (table, b)
+
+
 def _column_chunks(workdir: str, table: str):
     """Metadata of every column chunk over a table's files and row groups."""
     for d, _, files in os.walk(os.path.join(workdir, table)):
@@ -193,6 +230,32 @@ def test_bucket_footers_keep_only_filtered_statistics(traced):
     _assert_footer_contract(w, TABLES)
     seen = set().union(*(_footers(w, t) for t in TABLES))
     assert FILTERED | UNFILTERED == seen
+
+
+def test_concurrent_writes_keep_each_tables_dictionary_switches(spark, tx, tmp_path):
+    """A bucket's five writes open their parquet writers at once, and those
+    share one values-writer factory that holds the dictionary switches of
+    the writer opened last. Over four buckets no stat moment or timestamp
+    of any table is dictionary-encoded all the same. (Without the shared
+    options the factory's race showed in about half of the buckets.)"""
+    run_pipeline(spark, tx, PipelineConfig(workdir=str(tmp_path), n_buckets=4),
+                 resume=False)
+    _assert_footer_contract(str(tmp_path), TABLES)
+
+
+def test_shared_column_options_refuse_an_option_another_table_would_get():
+    """Concurrent writes share one set of column options, keyed by column
+    path. A column that two tables type alike gets one option; one that
+    keeps statistics in one table (a string) and drops them in another (a
+    long) cannot be shared."""
+    a = StructType([StructField("conv_id", StringType()), StructField("n", LongType())])
+    b = StructType([StructField("conv_id", StringType()), StructField("m", LongType())])
+    assert shared_column_options([a, b]) == {
+        "parquet.column.statistics.enabled#n": "false",
+        "parquet.column.statistics.enabled#m": "false"}
+    c = StructType([StructField("n", StringType())])
+    with pytest.raises(ValueError, match="statistics.enabled#n"):
+        shared_column_options([a, c])
 
 
 def test_v3_tier_buckets_are_rewritten_on_resume(spark, tx, tmp_path_factory):

@@ -4,16 +4,20 @@ run — the graft's hardened version of `yatsm line --resume`."""
 
 import json
 import os
+import re
 import shutil
+import threading
 
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrameWriter, functions as F
+from pyspark.sql.types import TimestampType
 
 from yatsm_spark.checkpoint import CheckpointManager
 from yatsm_spark.operators.changescore import SEGMENT_SCHEMA
 from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION, FULL_MODE, decode_chunks
-from yatsm_spark.pipeline import PipelineConfig, PipelineMetrics, run_pipeline
+from yatsm_spark.pipeline import (BUCKET_TABLES, PipelineConfig, PipelineMetrics,
+                                  run_pipeline)
 from yatsm_spark.sources.storage import TIER_FORMAT_VERSION, ParquetStorage
 from yatsm_spark.synth import generate_transcripts
 
@@ -167,6 +171,106 @@ def test_pipeline_leaves_unset_session_confs_unset(spark, tx, tmp_path):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+
+
+def test_pipeline_leaves_the_callers_session_confs_as_they_were(spark, tx, tmp_path):
+    """Every session conf reads back as it was before a run, after a clean
+    run and after an injected failure, whether the caller had set the keys
+    the pipeline sets (the shuffle width, the timestamp type) or not."""
+    keys = {"spark.sql.shuffle.partitions": "7",
+            "spark.sql.parquet.outputTimestampType": "INT96"}
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    cfg = lambda name: PipelineConfig(workdir=str(tmp_path / name), n_buckets=2,
+                                      compress=False, segments=False)
+    try:
+        for caller_set in (True, False):
+            for k, v in keys.items():
+                if caller_set:
+                    spark.conf.set(k, v)
+                else:
+                    spark.conf.unset(k)
+            before = spark.conf.getAll
+            run_pipeline(spark, tx, cfg(f"clean{caller_set}"))
+            assert spark.conf.getAll == before
+            with pytest.raises(RuntimeError, match="injected failure"):
+                run_pipeline(spark, tx, cfg(f"failed{caller_set}"), fail_after_bucket=0)
+            assert spark.conf.getAll == before
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_every_bucket_timestamp_is_int64_micros(spark, tx, tmp_path, monkeypatch):
+    """A bucket's writes run at once, and each sets the session's timestamp
+    type around itself. Each bucket's segments write is held after it has
+    set the type and before it plans, until the bucket's tier_1m write has
+    ended and restored it; every table must still store its timestamps as
+    INT64 micros, not as Spark's default INT96."""
+    w = str(tmp_path)
+    tier_1m_done = {b: threading.Event() for b in range(2)}
+    orig_write, orig_parquet = ParquetStorage.write_bucket, DataFrameWriter.parquet
+
+    def write_bucket(self, df, table, bucket):
+        orig_write(self, df, table, bucket)
+        if table == "tier_1m":
+            tier_1m_done[bucket].set()
+
+    def parquet(self, path, *a, **k):
+        held = re.search(r"segments/\.bucket=(\d+)", path)
+        if held:
+            assert tier_1m_done[int(held.group(1))].wait(300)
+        return orig_parquet(self, path, *a, **k)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(ParquetStorage, "write_bucket", write_bucket)
+        mp.setattr(DataFrameWriter, "parquet", parquet)
+        run_pipeline(spark, tx, PipelineConfig(workdir=w, n_buckets=2), resume=False)
+    for table in BUCKET_TABLES:
+        root = os.path.join(w, table)
+        want = {f.name for f in spark.read.parquet(root).schema.fields
+                if isinstance(f.dataType, TimestampType)}
+        assert want, table
+        files = [os.path.join(d, f) for d, _, fs in os.walk(root)
+                 for f in fs if f.endswith(".parquet")]
+        assert files, table
+        for path in files:
+            schema = pq.ParquetFile(path).schema
+            leaves = [schema.column(i) for i in range(len(schema))]
+            got = {c.path: (c.physical_type, c.converted_type) for c in leaves
+                   if c.physical_type == "INT96" or c.logical_type.type == "TIMESTAMP"}
+            assert got == dict.fromkeys(want, ("INT64", "TIMESTAMP_MICROS")), path
+
+
+def test_a_failed_write_raises_after_the_others_and_commits_nothing(
+        spark, tx, tmp_path, monkeypatch):
+    """A bucket table write that raises: run_pipeline raises that error once
+    the bucket's other writes have ended, commits no manifest for the
+    bucket, and a resume gives the tables of an uninterrupted run."""
+    w, w_full = str(tmp_path / "failed"), str(tmp_path / "full")
+    run_pipeline(spark, tx, PipelineConfig(workdir=w_full, n_buckets=2), resume=False)
+    cfg = PipelineConfig(workdir=w, n_buckets=2)
+    orig, ended = ParquetStorage.write_bucket, []
+
+    def write_bucket(self, df, table, bucket):
+        if (table, bucket) == ("segments", 1):
+            raise RuntimeError("segments write failed")
+        orig(self, df, table, bucket)
+        ended.append((table, bucket))
+
+    with monkeypatch.context() as mp:
+        mp.setattr(ParquetStorage, "write_bucket", write_bucket)
+        with pytest.raises(RuntimeError, match="segments write failed"):
+            run_pipeline(spark, tx, cfg, resume=False)
+        assert sorted(t for t, b in ended if b == 1) == \
+            sorted(set(BUCKET_TABLES) - {"segments"})
+    assert [m["bucket"] for m in CheckpointManager(w).manifests("bucket")] == [0]
+
+    resumed = run_pipeline(spark, tx, cfg)
+    assert [m["bucket"] for m in resumed.buckets] == [1]
+    _assert_tables_equal(spark, w_full, w, BUCKET_TABLES)
 
 
 def _window_start_encodings(workdir):

@@ -48,18 +48,15 @@ def main():
     outdir = sys.argv[1]
     os.makedirs(outdir, exist_ok=True)
     from tests.test_plans import SF_DIR, Plans, plan_of, seen_through
-    from yatsm_spark.conf import get_spark, shuffle_partitions_for_bytes
+    from yatsm_spark.conf import get_spark, set_shuffle_width_for
 
     spark = get_spark(app_name="yatsm-plans", master=f"local[{CPUS}]")
-    base = os.path.basename(SF_DIR.rstrip("/"))
-    tx_path = os.path.join(REPO, "data", f"transcripts_{base}.parquet")
-    n_bytes = sum(os.path.getsize(os.path.join(tx_path, f))
-                  for f in os.listdir(tx_path)) if os.path.isdir(tx_path) else 0
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   str(shuffle_partitions_for_bytes(n_bytes, CPUS)))
 
     with tempfile.TemporaryDirectory(prefix="plans_") as work:
+        # Plans writes the transcripts if they are missing; its frames are
+        # planned later, under the width set here.
         plans = Plans(spark, SF_DIR, work)
+        set_shuffle_width_for(plans.tx)
         for name in sys.argv[2:] or [*plans.queries, *plans.frames]:
             df = seen_through(plans.build(name))
             txt = normalized(plan_of(lambda: df) + "\n== Schema ==\n"

@@ -1,15 +1,19 @@
 """SparkSession factory with the engine's standard configuration.
 
 Scale posture (SURVEY.md §4): AQE on (runtime re-plan + skew-join splitting),
-Arrow on (every Python crossing is vectorized), shuffle partitions sized to
+Arrow on (every Python crossing is vectorized), shuffle partitions at 4x
 cores for local runs — on a real cluster this is overridden by
 ``spark-submit --conf`` and AQE coalescing makes the initial number soft.
+Where the input's size is known (the pipeline's buckets, the bench tools)
+the width is set from its bytes instead: ``shuffle_partitions_for_bytes``.
 """
 
 from __future__ import annotations
 
 import os
 from contextlib import contextmanager
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -68,9 +72,15 @@ def scoped_conf(conf, key: str, value: str | None = None):
             conf.set(key, prev)
 
 
-def shuffle_partitions_for_bytes(n_bytes: int, cores: int,
-                                 target_bytes: int = 256 << 20) -> int:
-    """Size the shuffle width to the DATA, floored at the core count.
+#: Smallest input worth a shuffle partition of its own: the default of
+#: Spark's ``spark.sql.adaptive.coalescePartitions.minPartitionSize``.
+MIN_PARTITION_BYTES = 1 << 20
+
+
+def shuffle_partitions_for_bytes(n_bytes: int, cores: int) -> int:
+    """Size the shuffle width to the DATA: one partition per
+    ``MIN_PARTITION_BYTES`` up to the core count, and ~256 MB per partition
+    beyond that.
 
     Measured A/B at local[32] (BENCH/BASELINE_8_32.md round-3 addendum):
     78M turns (2.6 GB) runs 28% faster at 32 partitions than 128 (fewer,
@@ -79,11 +89,29 @@ def shuffle_partitions_for_bytes(n_bytes: int, cores: int,
     constant cannot serve both; ~256 MB of input per reduce partition
     lands on the measured winner at each scale and extrapolates to the
     cluster rule of thumb (100 TB -> ~400k partitions across 1000
-    executors). AQE coalescing still shrinks small stages below the
-    floor at runtime. The target is calibrated on snappy parquet bytes
-    (the transcripts and the pipeline's staged measures).
+    executors). The target is calibrated on snappy parquet bytes (the
+    transcripts and the pipeline's staged measures).
+
+    Below ``cores`` MiB the width is not floored at the core count: the
+    pipeline's conv cache is planned with AQE off, so nothing coalesces
+    its partitions at runtime, and each partition becomes one file per
+    bucket table. A bucket of a few hundred KB gets one task per table
+    (the pipeline runs the tables' writes concurrently instead).
     """
-    return max(cores, min(32_768, int(n_bytes // target_bytes)))
+    min_partitions = -(-n_bytes // MIN_PARTITION_BYTES)  # ceil
+    return max(1, min(cores, min_partitions), min(32_768, n_bytes // (256 << 20)))
+
+
+def set_shuffle_width_for(df: DataFrame) -> int:
+    """Set ``df``'s session ``spark.sql.shuffle.partitions`` from the summed
+    size of the local files ``df`` reads, at the session's default
+    parallelism, and return the width."""
+    spark = df.sparkSession
+    n_bytes = sum(os.path.getsize(url2pathname(urlparse(f).path))
+                  for f in df.inputFiles())
+    width = shuffle_partitions_for_bytes(n_bytes, spark.sparkContext.defaultParallelism)
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    return width
 
 
 def host_memory_mb() -> int | None:

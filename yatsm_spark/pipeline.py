@@ -30,6 +30,18 @@ partition on (conv_id, window_start). The gap-fill windows, cascades and
 grouped maps all accept that layout, so nothing after it exchanges and
 each table has at most the bucket's shuffle width of files. Downstream of
 the conv cache, add no repartition.
+
+That width comes from the bucket's staged bytes
+(``conf.shuffle_partitions_for_bytes``): one partition per MiB up to the
+core count, so a bucket under 1 MiB writes one file per table. The
+parallelism a bucket narrower than the cores loses inside a table it gets
+back across tables: the three caches are registered and the sparse one filled, then
+each table's write starts on a thread of its own as soon as its frame is
+built (``ParquetStorage.bucket_writes``; the thread keeps the job group
+current then), and all of them run at once over the shared caches. A
+bucket as wide as the cores writes its tables one after another. The
+manifest commits only after every write has ended, and not at all if one
+raised.
 """
 
 from __future__ import annotations
@@ -66,6 +78,14 @@ def _conv_cache(df: DataFrame) -> DataFrame:
     adaptive, and the first tier_1m write still exchanges.)"""
     with scoped_conf(df.sparkSession.conf, "spark.sql.adaptive.enabled", "false"):
         return df.sortWithinPartitions("conv_id", "window_start").cache()
+
+
+def _fill(cache: DataFrame) -> None:
+    """Compute ``cache``'s blocks now, in one job: a count planned with AQE
+    off, as the cache was (an adaptive plan would run a job for the cache
+    and another for the count)."""
+    with scoped_conf(cache.sparkSession.conf, "spark.sql.adaptive.enabled", "false"):
+        cache.count()
 
 
 @dataclass
@@ -187,11 +207,9 @@ def run_pipeline(
             bm = staged.where(F.col("bucket") == b).drop("bucket")
             # Data-sized shuffle width per bucket (conf.shuffle_partitions_for_bytes):
             # a fixed width spills at 10x data and over-fragments at 0.1x.
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(shuffle_partitions_for_bytes(
-                    store.bucket_size(staging, b)[0],
-                    spark.sparkContext.defaultParallelism)))
+            cores = spark.sparkContext.defaultParallelism
+            width = shuffle_partitions_for_bytes(store.bucket_size(staging, b)[0], cores)
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
             fp = f"{bucket_fps[b]}:{written}"
             if resume and ckpt.is_done("bucket", b, fp):
                 continue
@@ -203,41 +221,49 @@ def run_pipeline(
             # dense (gap-filled) tiers are generated post-shuffle on the write
             # path, and the kernels densify per conv in numpy. At bench skew
             # the dense tier is ~8x the sparse one — none of it is exchanged.
-            # Row counts are observed on the writes themselves: the sparse
-            # count of a tier is its non-gap rows.
+            # All three caches are registered before any write starts, so
+            # their AQE switch and the width above are never changed under
+            # a running write. The sparse cache is filled first: writes
+            # started at once on an empty cache would each submit a job to
+            # fill it.
             sparse = _conv_cache(R.rollup_from_turns(bm, "1m").repartition("conv_id"))
-            cached, observed, stored = [sparse], [], {}
+            _fill(sparse)
+            hourly = _conv_cache(cascade(sparse, "1m", "1h"))
+            daily = _conv_cache(cascade(hourly, "1h", "1d"))
+            observed = []
+            try:
+                with store.bucket_writes(b) as writes:
 
-            def write(df: DataFrame, table: str, **counts) -> None:
-                """Write one bucket table, its row counts observed on the
-                write and its bytes and files listed from disk afterwards."""
-                store.write_bucket(_counted(df, observed, **counts), table, b)
+                    def write(df: DataFrame, table: str, **counts) -> None:
+                        """Write one bucket table, its row counts observed
+                        on the write (the sparse count of a tier is its
+                        non-gap rows). A bucket narrower than the cores
+                        starts it to run with the others; a wider one,
+                        whose tables each fill the cores, writes it now."""
+                        df = _counted(df, observed, **counts)
+                        if width < cores:
+                            writes.start(df, table)
+                        else:
+                            store.write_bucket(df, table, b)
+
+                    write(R.gapfill(sparse, "1m"), "tier_1m",
+                          rollup_1m_sparse=sparse_count, rollup_1m=count)
+                    write(R.gapfill(hourly, "1h"), "tier_1h", rollup_1h=sparse_count)
+                    write(R.gapfill(daily, "1d"), "tier_1d", rollup_1d=sparse_count)
+                    if cfg.segments:
+                        write(change_scores(sparse, "turn_count", CONV_PARAMS,
+                                            phenology=cfg.phenology),
+                              "segments", segments=count)
+                    if cfg.compress:
+                        write(encode_chunks(sparse, "1m"), "chunks_1m", chunks_1m=count,
+                              chunks_1m_underived=count_underived())
+            finally:
+                for df in (sparse, hourly, daily):
+                    df.unpersist()
+            stored = {}
+            for table in tables:
                 stored[f"bytes_{table}"], stored[f"files_{table}"] = \
                     store.bucket_size(table, b)
-
-            write(R.gapfill(sparse, "1m"), "tier_1m",
-                  rollup_1m_sparse=sparse_count, rollup_1m=count)
-
-            prev = sparse
-            for tier_from, tier_to in (("1m", "1h"), ("1h", "1d")):
-                nxt = _conv_cache(cascade(prev, tier_from, tier_to))
-                cached.append(nxt)
-                write(R.gapfill(nxt, tier_to), f"tier_{tier_to}",
-                      **{f"rollup_{tier_to}": sparse_count})
-                prev = nxt
-
-            if cfg.segments:
-                segs = change_scores(sparse, "turn_count", CONV_PARAMS,
-                                     phenology=cfg.phenology)
-                write(segs, "segments", segments=count)
-
-            if cfg.compress:
-                write(encode_chunks(sparse, "1m"),
-                      "chunks_1m", chunks_1m=count,
-                      chunks_1m_underived=count_underived())
-
-            for df in cached:
-                df.unpersist()
             rows = {k: v for o in observed for k, v in o.get.items()}
             m = ckpt.commit("bucket", b, fp, rows.get("rollup_1m", 0),
                             (time.time() - t) * 1000, **rows, **stored)

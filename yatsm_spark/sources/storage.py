@@ -16,13 +16,15 @@ groups, chunk groups) so downstream stages shuffle within buckets only; at
 §4 partitioning row). ``write_bucket`` commits a bucket by staging it under
 a dot-prefixed name, which Spark's file listing skips, and renaming it into
 place, so a crash between the two never shows a half-written bucket to a
-reader.
+reader. ``bucket_writes`` runs a bucket's table writes at once, one thread
+each.
 
 ``IcebergStorage`` is the SQL a cluster catalog would run for the same
 tables (writeTo(...).append(), MERGE INTO for reconcile, DELETE for
 eviction), checked by tests/test_iceberg_contract.py. It implements none
-of ``write_bucket``, ``bucket_names``, ``drop_bucket`` or ``bucket_size``,
-so it is not a drop-in replacement for ``ParquetStorage`` in the pipeline.
+of ``write_bucket``, ``bucket_writes``, ``bucket_names``, ``drop_bucket``
+or ``bucket_size``, so it is not a drop-in replacement for
+``ParquetStorage`` in the pipeline.
 
 On-disk format (``TIER_FORMAT_VERSION``): every table is written with
 timestamps as INT64 ``TIMESTAMP_MICROS`` and with Parquet v2 data pages.
@@ -67,7 +69,11 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+from contextlib import ExitStack, contextmanager
+from typing import Iterator
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -123,6 +129,22 @@ def bucket_column_options(schema: StructType) -> dict[str, str]:
     return opts
 
 
+def shared_column_options(schemas: list[StructType]) -> dict[str, str]:
+    """The union of the ``bucket_column_options`` of ``schemas``, for
+    writes that run at once (``BucketWrites``). Raises ``ValueError`` if
+    an option of one schema would reach a column of another that does not
+    carry it: the options are keyed by column path, not by table."""
+    own = [bucket_column_options(s) for s in schemas]
+    union = {k: v for opts in own for k, v in opts.items()}
+    for schema, opts in zip(schemas, own):
+        paths = {_leaf(f.name, f.dataType)[0] for f in schema.fields}
+        for key, value in union.items():
+            if key.split("#", 1)[1] in paths and opts.get(key) != value:
+                raise ValueError(f"{key}={value} of a concurrent write would "
+                                 f"also apply to a table of schema {schema.simpleString()}")
+    return union
+
+
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Stable conv bucket: pmod(xxhash64(conv_id), B). xxhash64 is a fixed
     Spark function — bucket assignment never depends on parallelism."""
@@ -169,6 +191,43 @@ class ParquetStorage:
             shutil.rmtree(final)
         os.rename(tmp, final)
 
+    @contextmanager
+    def bucket_writes(self, bucket: int) -> Iterator["BucketWrites"]:
+        """A block that starts bucket table writes (``BucketWrites.start``)
+        and, on leaving it, runs them all at once and waits for them. Each
+        still commits on its own (``write_bucket``). On a clean exit the
+        first error a write raised is raised once every write has ended; a
+        block that raises itself ends its unrun writes without running them.
+
+        The threads wait for the block's end because parquet-java writers
+        opened at once in one JVM share one values-writer factory, which
+        keeps the per-column dictionary switches of the writer opened last:
+        a write could get another table's switches. So every write runs
+        under the union of all their column options, set as session confs
+        (``shared_column_options``; the writer reads them under its own
+        options), and under the INT64 timestamp type, which
+        ``_write_parquet``'s own scope would otherwise unset, on its exit,
+        under a write still being planned. Those confs are restored after
+        the last write."""
+        writes = BucketWrites(self, bucket)
+        with ExitStack() as confs:
+            try:
+                yield writes
+                if writes.started:
+                    conf = writes.started[0][0].sparkSession.conf
+                    confs.enter_context(scoped_conf(conf, _TS_TYPE_CONF, "TIMESTAMP_MICROS"))
+                    for key, value in shared_column_options(
+                            [df.schema for df, _, _ in writes.started]).items():
+                        confs.enter_context(scoped_conf(conf, key, value))
+                    writes.released = True
+            finally:
+                writes.go.set()
+                for _, th, _ in writes.started:
+                    th.join()
+        raised = [e for _, _, errors in writes.started for e in errors]
+        if raised:
+            raise raised[0]
+
     def bucket_names(self, table: str) -> list[str]:
         """The ``<name>`` of every ``bucket=<name>`` directory of ``table``;
         only the integer names are committed buckets."""
@@ -195,6 +254,34 @@ class ParquetStorage:
 
     def exists(self, table: str) -> bool:
         return os.path.exists(self.path(table))
+
+
+class BucketWrites:
+    """One bucket's table writes, run at once, one thread each
+    (``ParquetStorage.bucket_writes``)."""
+
+    def __init__(self, store: ParquetStorage, bucket: int):
+        self.store, self.bucket = store, bucket
+        self.started: list[tuple[DataFrame, InheritableThread, list]] = []
+        self.go, self.released = threading.Event(), False
+
+    def start(self, df: DataFrame, table: str) -> None:
+        """Start the write of ``df`` to ``table`` on a thread of its own.
+        The thread keeps the job group current now (``InheritableThread``)
+        and holds the write until the ``bucket_writes`` block ends."""
+        errors: list[BaseException] = []
+
+        def run() -> None:
+            self.go.wait()
+            if self.released:
+                try:
+                    self.store.write_bucket(df, table, self.bucket)
+                except BaseException as e:  # raised by bucket_writes
+                    errors.append(e)
+
+        th = InheritableThread(target=run)
+        th.start()
+        self.started.append((df, th, errors))
 
 
 class IcebergStorage:
